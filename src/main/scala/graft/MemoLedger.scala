@@ -1,6 +1,6 @@
 package graft
 
-/** Build-cost ledger for the per-(session, key) family memos.
+/** Build-cost ledger for the per-(session, key) [[Memo]] builds.
   *
   * The bench times each query as the min over its steady (non-first)
   * passes, and the family memos (shingle sets, winnow fingerprints, BPE

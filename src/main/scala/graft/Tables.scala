@@ -13,60 +13,23 @@ import org.apache.spark.sql.types._
   */
 object Tables {
   /** Tiny relation catalog: the resolved DataFrame per (session, path) is
-    * cached so repeated reads of the same fixture table skip re-listing the
-    * files and re-reading parquet footers for schema inference — per-query
-    * constant cost that adds up across a 48-query suite. This caches only
-    * the *plan* (file index + schema), never row data.
-    *
-    * Lifecycle: a cached plan pins its file LISTING for as long as the
-    * entry lives — a fixture directory rewritten mid-session must be
-    * [[invalidate]]d or reads hit deleted files / miss new ones. Entries
-    * for STOPPED sessions are swept on every access (cheap — the map holds
-    * a handful of table plans), so long-lived library use across many
-    * sessions doesn't accumulate dead plans. (A WeakHashMap wouldn't work
-    * here: the cached DataFrame strongly references its own SparkSession,
-    * which would pin the weak key forever.)
+    * memoized so repeated reads of the same fixture table skip re-listing
+    * the files and re-reading parquet footers for schema inference —
+    * per-query constant cost that adds up across a 48-query suite. This
+    * holds only the *plan* (file index + schema), never row data; the plan
+    * pins its file LISTING, so a fixture directory rewritten mid-session
+    * must be [[invalidate]]d.
     */
-  private val catalog =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def sweepStopped(): Unit = {
-    catalog.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    spreadCatalog.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pinnedEvents.keySet.removeIf(k => k._1.sparkContext.isStopped)
-  }
-
-  /** Drop every cached plan for `spark` — call after rewriting a fixture
-    * directory the session already read, or before discarding a session
-    * that should release its plans early.
-    */
-  def invalidate(spark: SparkSession): Unit = {
-    catalog.keySet.removeIf(k => k._1 eq spark)
-    spreadCatalog.keySet.removeIf(k => k._1 eq spark)
-    // rewritten fixture: the persisted events blocks are stale — release
-    // them (one frame per (session, dir); no shared-plan eviction hazard)
-    pinnedEvents.entrySet.removeIf { e =>
-      val hit = e.getKey._1 eq spark
-      if (hit) e.getValue.unpersist(blocking = false)
-      hit
-    }
-    // the streaming oracles memoize fixture SPLITS of these same dirs —
-    // stale splits would stream the old corpus against a new batch oracle
-    graft.streaming.StreamOracles.invalidateSources()
-    // likewise the shared cluster artifacts pin corpus-derived blocks
-    graft.operators.Dedup.invalidateArtifacts(spark)
-    graft.operators.CorpusClean.invalidate(spark)
-    graft.operators.TrainingData.invalidateShingles(spark)
-    graft.operators.TextOps.invalidate(spark)
-    graft.operators.Graph.invalidateEdges(spark)
-    graft.operators.Similarity.invalidateResiduals(spark)
-  }
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    sweepStopped()
-    catalog.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (s, path) => s.read.parquet(path) })
+    val path = s"$dir/$name.parquet"
+    Memo.untimed(spark, s"tables.read:$path")(spark.read.parquet(path))
   }
+
+  /** Drop and release every memo of `spark` ([[Memo.invalidate]]) — call
+    * after rewriting a fixture directory the session already read, or
+    * before discarding a session that should release its memos early.
+    */
+  def invalidate(spark: SparkSession): Unit = Memo.invalidate(spark)
 
   /** Rebalance a scan that has fewer partitions than the session's
     * parallelism — the small-file / single-row-group case, where every
@@ -85,20 +48,17 @@ object Tables {
     *   deterministic predicates and projections through
     *   RepartitionByExpression, so only surviving rows/columns shuffle.
     */
-  private val spreadCatalog =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
   private def spread(df: DataFrame, key: String): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // .rdd forces physical planning of the scan to learn its split count —
-    // cache the decision per (session, plan, key) so repeated loads don't
-    // re-plan
-    spreadCatalog.computeIfAbsent(
-      (df.sparkSession, df.queryExecution.logical.toString, key),
-      _ =>
-        if (df.rdd.getNumPartitions < target)
-          df.repartition(org.apache.spark.sql.functions.col(key))
-        else df)
+    // memoize the decision per (session, plan, key) so repeated loads
+    // don't re-plan
+    Memo.untimed(df.sparkSession,
+        s"tables.spread:$key:${df.queryExecution.logical}") {
+      if (df.rdd.getNumPartitions < target)
+        df.repartition(org.apache.spark.sql.functions.col(key))
+      else df
+    }
   }
 
   // ------------------------------------------------------------------
@@ -243,23 +203,18 @@ object Tables {
     normalize("events", spread(apply(s, d, "events"), "user_id"))
   }
 
-  /** Per-(session, dir) MEMO of the normalized, user_id-spread events
-    * frame — the event-log families' shared ingest artifact (the same
-    * composition-cache discipline as [[graft.operators.Dedup.clusterArtifactsCached]];
-    * round-10 verdict item 4). ~66 events_* queries plus the event-log
-    * q-parity queries each re-ran the scan + normalize + spread exchange
-    * per call; the memo materializes that shared prefix once per
-    * (session, dir) and every consumer starts from it.
+  /** Per-(session, dir) memo of the normalized, user_id-spread events
+    * frame — the event-log families' shared ingest artifact. ~66 events_*
+    * queries plus the event-log q-parity queries each re-ran the scan +
+    * normalize + spread exchange per call; the memo materializes that
+    * shared prefix once per (session, dir) and every consumer starts
+    * from it.
     *
-    * Materialized through an eager `persist` (the
-    * [[graft.operators.Graph]] `cachedPersist` rationale), NOT a
-    * checkpoint: the InMemoryRelation KEEPS the spread's
-    * hashpartitioning(user_id) in the planner, so every user-keyed
-    * window/aggregation over the memo satisfies its distribution with
-    * ZERO exchange — a checkpointed scan reports unknown partitioning
-    * and would re-shuffle per query. Lineage is retained, which for a
-    * scan-derived frame is the better fault-tolerance story (a lost
-    * block recomputes from the parquet source).
+    * Materialized through [[Memo.persisted]], NOT a checkpoint: the
+    * InMemoryRelation KEEPS the spread's hashpartitioning(user_id) in the
+    * planner, so every user-keyed window/aggregation over the memo
+    * satisfies its distribution with ZERO exchange — a checkpointed scan
+    * reports unknown partitioning and would re-shuffle per query.
     *
     * Scale note (guide §5): residency is one copy of the events table
     * (MEMORY_AND_DISK — spills, never OOMs) amortized across every
@@ -267,9 +222,7 @@ object Tables {
     * spread shuffle PER QUERY. Consumers with highly selective pushed
     * filters should read [[events]] directly — the memo trades scan-side
     * pushdown for shared residency, the right trade for this family's
-    * full-log aggregations. Built on first touch (inside the timed
-    * region — the bench's pass-1 samples and `memo_build` block carry
-    * the cost); swept by [[invalidate]] with an explicit unpersist.
+    * full-log aggregations.
     *
     * ROUTING RULE (measured, round 11): a consumer reads the memo iff
     * its first exchange is ELIMINATED by the memo's
@@ -282,31 +235,11 @@ object Tables {
     * pushdown parquet scan with a cache read that saves nothing
     * downstream — measured 0.05–0.3 s SLOWER per query at sf0.1, and
     * strictly worse at scale where the lost PushedFilters matter more.
+    * The persist's marker filter keeps the direct readers off the cache.
     * ~70 of 101 call sites ride the memo.
     */
-  private val pinnedEvents =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def eventsCached(s: SparkSession, d: String): DataFrame = {
-    sweepStopped()
-    pinnedEvents.computeIfAbsent((s, d), { case (ss, dir) =>
-      graft.MemoLedger.timed(s"tables.events:$dir") {
-        // The filter(lit(true)) MARKER keeps the routing rule real:
-        // CacheManager substitutes a cached plan into ANY query whose
-        // analyzed subtree canonically matches it, so persisting the
-        // bare [[events]] plan would silently re-route every DIRECT
-        // consumer through the cache too — exactly the consumers the
-        // rule sends to the vectorized pushdown scan. The marker makes
-        // the cached plan match only frames built from THIS DataFrame;
-        // it is optimized away after cache substitution, so memo
-        // consumers pay nothing for it.
-        val df = events(ss, dir)
-          .filter(org.apache.spark.sql.functions.lit(true)).persist()
-        df.count()
-        df
-      }
-    })
-  }
+  def eventsCached(s: SparkSession, d: String): DataFrame =
+    Memo.persisted(s, s"tables.events:$d")(events(s, d))
   def documents(s: SparkSession, d: String): DataFrame =
     normalize("documents", spread(apply(s, d, "documents"), "doc_id"))
   def embeddings(s: SparkSession, d: String): DataFrame =

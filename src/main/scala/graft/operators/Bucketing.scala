@@ -2,8 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,18 +33,11 @@ object Bucketing {
   val NBuckets = 8
 
   /** (orders table, lineitem table) names, written once per
-    * (session, dir) — the same memo lifecycle as the graph edge caches.
-    * External-path tables under a run-local scratch dir keep the
-    * repository tree clean; the in-memory catalog scopes the names to
-    * the session.
+    * (session, dir) through [[graft.Memo]]. External-path tables under a
+    * run-local scratch dir keep the repository tree clean.
     */
-  private val ready =
-    new ConcurrentHashMap[(SparkSession, String), (String, String)]()
-
-  def tables(spark: SparkSession, dir: String): (String, String) = {
-    ready.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    ready.computeIfAbsent((spark, dir), _ => graft.MemoLedger.timed(
-        s"bucket.tables:$dir") {
+  def tables(spark: SparkSession, dir: String): (String, String) =
+    graft.Memo(spark, s"bucket.tables:$dir") {
       val tag = Integer.toHexString(dir.hashCode)
       val base = Files.createTempDirectory("graft_bkt").toString
       val oT = s"graft_bkt_orders_$tag"
@@ -70,8 +61,7 @@ object Bucketing {
         .bucketBy(NBuckets, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$base/lineitem").saveAsTable(lT)
       (oT, lT)
-    })
-  }
+    }
 
   /** Per-orderstatus revenue through the bucketed join: the classic
     * fact⋈fact rollup, its join running exchange-free over the

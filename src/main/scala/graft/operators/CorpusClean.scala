@@ -76,18 +76,9 @@ object CorpusClean {
     * independently oracled entry points, but a run that evaluates all
     * three pays the metrics → quality → dedup chain once.
     */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), CleanArtifacts]()
-
-  def cleanArtifactsCached(docs: DataFrame, cacheKey: String): CleanArtifacts = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    cache.computeIfAbsent((docs.sparkSession, cacheKey),
-      _ => graft.MemoLedger.timed(s"corpus.clean:$cacheKey")(
-        cleanArtifacts(docs, Dedup.minhashBandsCached(docs, cacheKey))))
-  }
-
-  def invalidate(spark: org.apache.spark.sql.SparkSession): Unit =
-    cache.keySet.removeIf(_._1 eq spark)
+  def cleanArtifactsCached(docs: DataFrame, cacheKey: String): CleanArtifacts =
+    graft.Memo(docs.sparkSession, s"corpus.clean:$cacheKey")(
+      cleanArtifacts(docs, Dedup.minhashBandsCached(docs, cacheKey)))
 
   private def cleanSelect(a: CleanArtifacts): DataFrame =
     a.cleaned

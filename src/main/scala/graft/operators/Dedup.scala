@@ -872,9 +872,10 @@ object Dedup {
     * (sums of edge counts and squared endpoint counts), so the only
     * floating op is the final division — a Σ of per-community double
     * terms would be partition-order-dependent. (Long-safe to ~10⁹ edges;
-    * past that the numerator moments ride DECIMAL.) Shape: one pair scan
-    * labeled by two broadcast-able community lookups, three tiny
-    * aggregates.
+    * past that the numerator moments ride DECIMAL.) An edgeless pair
+    * graph (m = 0) has no modularity: NULL, as the oracle's 0.0 / 0.0
+    * in DuckDB. Shape: one pair scan labeled by two broadcast-able
+    * community lookups, three tiny aggregates.
     */
   def modularityFrom(pairs: DataFrame, communities: DataFrame): DataFrame = {
     val la = communities.select(col("doc_id").as("doc_a"),
@@ -896,8 +897,8 @@ object Dedup {
     m.crossJoin(broadcast(within)).crossJoin(broadcast(ends))
       .crossJoin(broadcast(nComm))
       .select(col("n_communities"), col("m").as("n_edges"),
-        ((lit(4L) * col("m") * col("se") - col("sa2")).cast("double")
-          / (lit(4L) * col("m") * col("m")).cast("double"))
+        try_divide((lit(4L) * col("m") * col("se") - col("sa2")).cast("double"),
+          (lit(4L) * col("m") * col("m")).cast("double"))
           .as("modularity"))
   }
 
@@ -1250,46 +1251,25 @@ object Dedup {
     * cache: whichever is hit first computes the signatures, and the other
     * reuses the pinned blocks.
     */
-  private val bandCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def minhashBandsCached(docs: DataFrame, cacheKey: String): DataFrame = {
-    bandCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bandCache.computeIfAbsent((docs.sparkSession, cacheKey),
-      _ => graft.MemoLedger.timed(s"dedup.bands:$cacheKey")(
-        Iterate.pin(minhashBands(docs))))
-  }
+  def minhashBandsCached(docs: DataFrame, cacheKey: String): DataFrame =
+    graft.Memo.pinned(docs.sparkSession, s"dedup.bands:$cacheKey")(
+      minhashBands(docs))
 
   /** Per-(session, key) memo of [[clusterArtifacts]] — the composition
     * cache that lets independent query entry points (components, stats,
     * canonical, weights, admission — each independently oracled) share
     * one clustering pass, mirroring how a production pipeline would
-    * materialize the artifacts once. Entries for stopped sessions are
-    * swept on every access; [[invalidateArtifacts]] drops a session's
-    * entries after a fixture rewrite (the pinned blocks would otherwise
-    * serve stale data).
+    * materialize the artifacts once.
     */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), ClusterArtifacts]()
-
   def clusterArtifactsCached(docs: DataFrame, cacheKey: String): ClusterArtifacts = {
-    artifactCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // pairs resolve through the pairs-only memo FIRST (different map —
-    // no recursive computeIfAbsent), so whichever of the artifact
-    // consumers and the pairs-only consumers (dedup_edit) runs first,
-    // the other reuses the pinned pair frame
+    // pairs resolve through the pairs-only memo first, outside this
+    // build, so whichever of the artifact consumers and the pairs-only
+    // consumers (dedup_edit) runs first, the other reuses the pinned
+    // pair frame
     val pairs = minhashPairsCached(docs, cacheKey)
-    artifactCache.computeIfAbsent((docs.sparkSession, cacheKey),
-      _ => graft.MemoLedger.timed(s"dedup.artifacts:$cacheKey")(
-        ClusterArtifacts(minhashBandsCached(docs, cacheKey), pairs,
-          connectedComponents(pairs))))
-  }
-
-  def invalidateArtifacts(spark: SparkSession): Unit = {
-    artifactCache.keySet.removeIf(_._1 eq spark)
-    bandCache.keySet.removeIf(_._1 eq spark)
-    setsCache.keySet.removeIf(_._1 eq spark)
-    pairsCache.keySet.removeIf(_._1 eq spark)
+    graft.Memo(docs.sparkSession, s"dedup.artifacts:$cacheKey")(
+      ClusterArtifacts(minhashBandsCached(docs, cacheKey), pairs,
+        connectedComponents(pairs)))
   }
 
   /** Per-(session, key) memo of the PINNED distinct band-collision pair
@@ -1300,17 +1280,12 @@ object Dedup {
     * memo: [[clusterArtifactsCached]] builds its pairs through here, so
     * either entry point primes the other.
     */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def minhashPairsCached(docs: DataFrame, cacheKey: String): DataFrame = {
-    pairsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // band memo resolved OUTSIDE the lambda: different map, but the same
-    // no-nested-computeIfAbsent discipline as the other composed memos
+    // band memo resolved outside this build: its build time is not the
+    // pairs memo's
     val bands = minhashBandsCached(docs, cacheKey)
-    pairsCache.computeIfAbsent((docs.sparkSession, cacheKey),
-      _ => graft.MemoLedger.timed(s"dedup.pairs:$cacheKey")(
-        Iterate.pin(bandCollisionPairs(bands).distinct())))
+    graft.Memo.pinned(docs.sparkSession, s"dedup.pairs:$cacheKey")(
+      bandCollisionPairs(bands).distinct())
   }
 
   /** Per-(session, key) memo of the PINNED [[shingleSets]] frame — the
@@ -1319,21 +1294,11 @@ object Dedup {
     * it (the capstone's decon stage IS minhashDecon), and the md5
     * word-hash + k-gram chain is the verify's CPU, so an un-memoized
     * pin re-ran the whole corpus-sized chain once per query invocation
-    * (measured ~0.55 s of every decon_minhash call at sf0.1). Same
-    * lifecycle discipline as [[clusterArtifactsCached]]; swept by
-    * [[invalidateArtifacts]].
+    * (measured ~0.55 s of every decon_minhash call at sf0.1).
     */
-  private val setsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def shingleSetsCached(docs: DataFrame, cacheKey: String): DataFrame =
-    if (cacheKey.isEmpty) Iterate.pin(shingleSets(docs))
-    else {
-      setsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      setsCache.computeIfAbsent((docs.sparkSession, cacheKey),
-        _ => graft.MemoLedger.timed(s"dedup.sets:$cacheKey")(
-          Iterate.pin(shingleSets(docs))))
-    }
+    graft.Memo.pinned(docs.sparkSession, s"dedup.sets:$cacheKey")(
+      shingleSets(docs))
 
   /** Duplicate-cluster size profile: for each cluster size, how many
     * near-duplicate clusters of that size the corpus carries — the
@@ -1951,19 +1916,16 @@ object Dedup {
   val ContainThreshold = 0.6
   val ContainMaxPosting = 100
 
-  def containmentPairs(docs: DataFrame, cacheKey: String = ""): DataFrame = {
+  def containmentPairs(docs: DataFrame, cacheKey: String): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
     // sets feeds FIVE subtrees (idx→dfOk, idxc, probe, verify a, verify
     // b) that ReuseExchange cannot dedup — materialize so the md5-heavy
     // shingle pipeline runs once, not five times. The sorted-distinct
-    // set frame IS [[shingleSets]] plus a size column, so with a cache
-    // key the memoized [[shingleSetsCached]] frame (shared with
-    // decon_minhash / corpus_e2e) supplies it and the per-call pin
-    // disappears; the `sz` projection over the pinned rows is a cheap
-    // map-side size().
-    val sets = (if (cacheKey.isEmpty)
-        Iterate.pin(shingleSets(docs))
-      else shingleSetsCached(docs, cacheKey))
+    // set frame IS [[shingleSets]] plus a size column, so the memoized
+    // [[shingleSetsCached]] frame (shared with decon_minhash /
+    // corpus_e2e) supplies it; the `sz` projection over the pinned rows
+    // is a cheap map-side size().
+    val sets = shingleSetsCached(docs, cacheKey)
       .select(col("doc_id"), col("sh"), size(col("sh")).as("sz"))
     // explode_outer, not explode: `sh` is a derived HOF chain and provably
     // non-empty (size(w) >= ShingleK above) — plain explode makes the

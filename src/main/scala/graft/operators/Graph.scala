@@ -57,78 +57,29 @@ object Graph {
     * orders⋈lineitem DISTINCT is the expensive part of every graph query,
     * and the edge list is an interesting product on its own (`graph_edges`
     * is oracled independently), so compute it once and let pagerank pay
-    * only the rounds. Same composition-cache discipline as
-    * [[Dedup.clusterArtifactsCached]].
+    * only the rounds.
     */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-
   def custSuppEdgesCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String): DataFrame = {
-    memoize(orders.sparkSession, cacheKey)(
-      Iterate.pin(custSuppEdges(orders, lineitem)))
-  }
+      cacheKey: String): DataFrame =
+    cachedPin(orders.sparkSession, cacheKey)(custSuppEdges(orders, lineitem))
 
-  /** Generic per-(session, key) pin memo over [[edgeCache]] — derived
-    * graph artifacts (directed edge frames, degree tables) share the
-    * edge set's lifecycle and invalidation.
+  /** Derived graph artifacts (directed edge frames, degree tables,
+    * community assignments) memoized per (session, key) through
+    * [[graft.Memo]] under `graph:key`, materialized by a pin.
     */
-  // get-then-put rather than computeIfAbsent: memo builders compose
-  // (louvainAssignCached resolves the edge memos inside its own build),
-  // and nested computeIfAbsent on one ConcurrentHashMap throws
-  // "Recursive update". A lost putIfAbsent race means the frame was
-  // built twice. Cleanup must be PLAN-AWARE: Spark's CacheManager keys
-  // cached data by logical-plan equivalence (sameResult), so when the
-  // loser's plan matches the winner's — the common case, both builds
-  // resolved the same inner memos — the loser's persist() was a no-op
-  // against ONE shared InMemoryRelation and unpersisting it would evict
-  // the WINNER's cache too. Only a plan that genuinely differs (inner
-  // memos also raced) holds its own entry and is safe to release. A
-  // cachedPin loser's checkpoint files are reclaimed with the
-  // checkpoint dir either way; unpersist on an unpersisted frame is a
-  // no-op.
-  private def memoize(spark: org.apache.spark.sql.SparkSession,
-      key: String)(make: => DataFrame): DataFrame = {
-    edgeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val k = (spark, key)
-    val existing = edgeCache.get(k)
-    if (existing != null) existing
-    else {
-      val df = graft.MemoLedger.timed(s"graph:$key")(make)
-      val prior = edgeCache.putIfAbsent(k, df)
-      if (prior == null) df
-      else {
-        if (!df.queryExecution.analyzed
-            .sameResult(prior.queryExecution.analyzed))
-          df.unpersist(blocking = false)
-        prior
-      }
-    }
-  }
-
   private def cachedPin(spark: org.apache.spark.sql.SparkSession,
       key: String)(build: => DataFrame): DataFrame =
-    memoize(spark, key)(Iterate.pin(build))
+    graft.Memo.pinned(spark, s"graph:$key")(build)
 
-  /** Like [[cachedPin]] but materializes through an eager `persist`
-    * instead of a checkpoint: the cached InMemoryRelation KEEPS its
-    * child's outputPartitioning in the planner (a checkpointed RDD scan
-    * reports unknown partitioning under AQE — measured, see
-    * `Round8Spec`), so a pre-repartitioned memo lets every per-round
-    * probe join skip the memo-side exchange. Lineage is retained, which
-    * for a static derived artifact is the BETTER fault-tolerance story:
-    * a lost block recomputes from source, no checkpoint dir needed.
+  /** Like [[cachedPin]] but materialized by [[graft.Memo.persisted]]: the
+    * cached InMemoryRelation KEEPS its child's outputPartitioning in the
+    * planner (a checkpointed RDD scan reports unknown partitioning under
+    * AQE — measured, see `Round8Spec`), so a pre-repartitioned memo lets
+    * every per-round probe join skip the memo-side exchange.
     */
   private def cachedPersist(spark: org.apache.spark.sql.SparkSession,
       key: String)(build: => DataFrame): DataFrame =
-    memoize(spark, key) {
-      val df = build.persist()
-      df.count()
-      df
-    }
-
-  def invalidateEdges(spark: org.apache.spark.sql.SparkSession): Unit =
-    edgeCache.keySet.removeIf(_._1 eq spark)
+    graft.Memo.persisted(spark, s"graph:$key")(build)
 
   /** Connected components of the cust–supp graph, summarized per
     * component: size, customer count, supplier count, keyed by the
@@ -354,8 +305,8 @@ object Graph {
     * [[custSuppEdgesCached]] is shared by `graph_edges`/`graph_pagerank`.
     */
   def coPartEdgesCached(lineitem: DataFrame, cacheKey: String): DataFrame =
-    memoize(lineitem.sparkSession, s"copart|$cacheKey")(
-      Iterate.pin(coPartEdges(lineitem)))
+    cachedPin(lineitem.sparkSession, s"copart|$cacheKey")(
+      coPartEdges(lineitem))
 
   /** Pinned degree table of the cached co-occurrence edge set — five
     * queries (triangles, degree histogram, assortativity, BFS, peel round
@@ -1961,7 +1912,7 @@ object Graph {
   def louvainWeightsCached(orders: DataFrame, lineitem: DataFrame,
       cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    memoize(spark, s"louvw|$cacheKey|$rounds")(Iterate.pin {
+    cachedPin(spark, s"louvw|$cacheKey|$rounds") {
       val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
       val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
       val edges = directedEdgeMemo(spark, e0, cacheKey)
@@ -1971,13 +1922,13 @@ object Graph {
         .join(comm.select(col("node").as("dst"), col("c").as("cd")),
           Seq("dst"))
         .groupBy(col("cs"), col("cd")).agg(count(lit(1)).as("w"))
-    })
+    }
   }
 
   def louvainCoarseAssignCached(orders: DataFrame, lineitem: DataFrame,
       cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    memoize(spark, s"louvcc|$cacheKey|$rounds")(Iterate.pin {
+    cachedPin(spark, s"louvcc|$cacheKey|$rounds") {
       val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
       val m2 = comm.agg(sum(col("deg")).as("m2"))
       // contraction: weighted coarse edges + weighted super-node degrees
@@ -1999,7 +1950,7 @@ object Graph {
       comm.join(best, Seq("c"), "left")
         .select(col("node"), col("c"),
           coalesce(col("cc"), col("c")).as("cc"), col("deg"))
-    })
+    }
   }
 
   def louvainCoarseCached(orders: DataFrame, lineitem: DataFrame,
@@ -2586,14 +2537,14 @@ object Graph {
   def louvainLevelMapsCached(orders: DataFrame, lineitem: DataFrame,
       cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    memoize(spark, s"louvlv|$cacheKey|$rounds")(Iterate.pin {
+    cachedPin(spark, s"louvlv|$cacheKey|$rounds") {
       val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
       val wgt = louvainWeightsCached(orders, lineitem, cacheKey, rounds)
       val m2 = comm.agg(sum(col("deg")).as("m2"))
       levelMapsFrom(wgt,
         comm.groupBy(col("c")).agg(sum(col("deg")).as("k"))
           .select(col("c").as("lab"), col("k")), m2)
-    })
+    }
   }
 
   /** The guarded level loop over an arbitrary base partition's weighted
@@ -2767,12 +2718,12 @@ object Graph {
   def louvainRefineAssignCached(orders: DataFrame, lineitem: DataFrame,
       cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    memoize(spark, s"louvrf|$cacheKey|$rounds")(Iterate.pin {
+    cachedPin(spark, s"louvrf|$cacheKey|$rounds") {
       val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
       val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
       val edges = directedEdgeMemo(spark, e0, cacheKey)
       refineAssign(comm, edges)
-    })
+    }
   }
 
   /** The refined partition's contracted weighted graph (cs, cd, w) —
@@ -2781,7 +2732,7 @@ object Graph {
   def louvainRefinedWeightsCached(orders: DataFrame, lineitem: DataFrame,
       cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    memoize(spark, s"louvrw|$cacheKey|$rounds")(Iterate.pin {
+    cachedPin(spark, s"louvrw|$cacheKey|$rounds") {
       val refc = louvainRefineAssignCached(orders, lineitem, cacheKey,
         rounds)
       val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
@@ -2792,7 +2743,7 @@ object Graph {
         .join(refc.select(col("node").as("dst"), col("rc").as("cd")),
           Seq("dst"))
         .groupBy(col("cs"), col("cd")).agg(count(lit(1)).as("w"))
-    })
+    }
   }
 
   /** The guarded level loop run from the REFINED base partition —
@@ -2811,7 +2762,7 @@ object Graph {
       lineitem: DataFrame, cacheKey: String,
       rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    memoize(spark, s"louvrlv|$cacheKey|$rounds")(Iterate.pin {
+    cachedPin(spark, s"louvrlv|$cacheKey|$rounds") {
       val refc = louvainRefineAssignCached(orders, lineitem, cacheKey,
         rounds)
       val rwgt = louvainRefinedWeightsCached(orders, lineitem, cacheKey,
@@ -2820,7 +2771,7 @@ object Graph {
       levelMapsFrom(rwgt,
         refc.groupBy(col("rc")).agg(sum(col("deg")).as("k"))
           .select(col("rc").as("lab"), col("k")), m2)
-    })
+    }
   }
 
   /** The refinement audit readout — one row per stage:

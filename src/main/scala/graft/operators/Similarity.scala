@@ -413,27 +413,18 @@ object Similarity {
       .transform(Iterate.pin)
   }
 
-  private val knnCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
   /** [[knnEdges]] memoized per (session, fixture dir) — `sim_knn_graph`
     * and `sim_nsw_walk` read the same physical edge list in a suite run.
     */
-  def knnEdgesCached(emb: DataFrame, cacheKey: String): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    knnCache.computeIfAbsent((emb.sparkSession, cacheKey),
-      _ => graft.MemoLedger.timed(s"sim.knn:$cacheKey")(knnEdges(emb)))
-  }
+  def knnEdgesCached(emb: DataFrame, cacheKey: String): DataFrame =
+    graft.Memo(emb.sparkSession, s"sim.knn:$cacheKey")(knnEdges(emb))
 
   /** The second-hash edge list ([[lshBucket2]]) memoized per (session,
     * fixture dir) — both `sim_nsw_*` registrations read one copy.
     */
-  def knnEdges2Cached(emb: DataFrame, cacheKey: String): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    knnCache.computeIfAbsent((emb.sparkSession, "lsh2:" + cacheKey),
-      _ => graft.MemoLedger.timed(s"sim.lsh2:$cacheKey")(
-        knnEdgesWith(emb, lshBucket2(col("embedding")))))
-  }
+  def knnEdges2Cached(emb: DataFrame, cacheKey: String): DataFrame =
+    graft.Memo(emb.sparkSession, s"sim.lsh2:$cacheKey")(
+      knnEdgesWith(emb, lshBucket2(col("embedding"))))
 
   def knnGraph(emb: DataFrame,
       pre: Option[DataFrame] = None): DataFrame = {
@@ -574,22 +565,15 @@ object Similarity {
     * `sim_nsw_*` registrations descend through one physical pivot graph
     * per tier. */
   def pivotSymCached(emb: DataFrame, cacheKey: String,
-      mod: Int = NswPivotMod): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    knnCache.computeIfAbsent((emb.sparkSession, s"l1sym:$mod:" + cacheKey),
-      _ => graft.MemoLedger.timed(s"sim.l1sym:$mod:$cacheKey")(
-        pivotSymAt(emb, mod)))
-  }
+      mod: Int = NswPivotMod): DataFrame =
+    graft.Memo(emb.sparkSession, s"sim.l1sym:$mod:$cacheKey")(
+      pivotSymAt(emb, mod))
 
   /** Corpus size memo (one parquet row-count per fixture) feeding the
     * data-driven tier ladder. */
-  private val nCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), java.lang.Long]()
-
   def nswModsCached(emb: DataFrame, cacheKey: String): Seq[Int] = {
-    nCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val mods = nswTierMods(nCache.computeIfAbsent((emb.sparkSession, cacheKey),
-      _ => Long.box(emb.count())))
+    val mods = nswTierMods(graft.Memo.untimed[java.lang.Long](emb.sparkSession,
+      s"sim.n:$cacheKey")(Long.box(emb.count())))
     // Only the registry (oracled) route resolves the ladder through this
     // memo, and the sim_nsw_* SQL oracles statically unroll the
     // two-tier (NswPivotMod, NswL2Mod) ladder. A fixture big enough to
@@ -639,27 +623,21 @@ object Similarity {
     * through ONE physical frame instead of re-materializing the union
     * per query. */
   def nswSymCached(emb: DataFrame, cacheKey: String): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // dependencies resolved BEFORE the computeIfAbsent below: a nested
-    // computeIfAbsent on the same map throws "Recursive update"
+    // dependencies resolved outside the build: their build time is not
+    // this memo's
     val e1 = knnEdgesCached(emb, cacheKey)
     val e2 = knnEdges2Cached(emb, cacheKey)
-    knnCache.computeIfAbsent((emb.sparkSession, "nswsym:" + cacheKey),
-      _ => graft.MemoLedger.timed(s"sim.nswsym:$cacheKey")(
-        symmetrized(e1, e2)))
+    graft.Memo(emb.sparkSession, s"sim.nswsym:$cacheKey")(symmetrized(e1, e2))
   }
 
   /** The exact brute-force top-[[AnnTopK]] truth set memoized per
     * (session, fixture) — every `sim_*_recall` query and the sweep
     * compare against ONE pinned ranking instead of re-scoring the
     * corpus per query. */
-  def bruteTruthCached(emb: DataFrame, cacheKey: String): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    knnCache.computeIfAbsent((emb.sparkSession, "brute:" + cacheKey),
-      _ => graft.MemoLedger.timed(s"sim.brute:$cacheKey")(
-        Iterate.pin(bruteTopK(emb).filter(col("rk") <= AnnTopK)
-          .select(col("query_id"), col("cand_id")))))
-  }
+  def bruteTruthCached(emb: DataFrame, cacheKey: String): DataFrame =
+    graft.Memo.pinned(emb.sparkSession, s"sim.brute:$cacheKey")(
+      bruteTopK(emb).filter(col("rk") <= AnnTopK)
+        .select(col("query_id"), col("cand_id")))
 
   /** The walk's shared frames: symmetrized two-hash edge list (pinned),
     * the descent pivot graphs (sparsest first), query vectors, normed
@@ -782,13 +760,11 @@ object Similarity {
     * rides the key so a fixture-size change can never serve a stale
     * tier scan. */
   def nswEntryScoredCached(emb: DataFrame, cacheKey: String): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val topMod = nswModsCached(emb, cacheKey).last
-    knnCache.computeIfAbsent(
-      (emb.sparkSession, s"nswentry:$topMod:" + cacheKey),
-      _ => graft.MemoLedger.timed(s"sim.nswentry:$topMod:$cacheKey") {
-        val (q, corpus) = nswQCorpus(emb)
-        nswEntryScored(q, corpus, topMod) })
+    graft.Memo(emb.sparkSession, s"sim.nswentry:$topMod:$cacheKey") {
+      val (q, corpus) = nswQCorpus(emb)
+      nswEntryScored(q, corpus, topMod)
+    }
   }
 
   /** The beam-[[NswBeam]] visited set (query_id, node) memoized per
@@ -796,19 +772,17 @@ object Similarity {
     * SAME deterministic walk, so the second consumer reuses the pinned
     * set and pays only its own final scoring pass. */
   def nswVisitedCached(emb: DataFrame, cacheKey: String): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // dependencies resolved BEFORE the computeIfAbsent below: a nested
-    // computeIfAbsent on the same map throws "Recursive update"
+    // dependencies resolved outside the build: their build time is not
+    // this memo's
     val es = nswEntryScoredCached(emb, cacheKey)
     val descent = pivotSymsCached(emb, cacheKey)
     val sym = nswSymCached(emb, cacheKey)
-    knnCache.computeIfAbsent((emb.sparkSession, "nswvis:" + cacheKey), _ =>
-      graft.MemoLedger.timed(s"sim.nswvis:$cacheKey") {
-        val (q, corpus) = nswQCorpus(emb)
-        // beam is the constant NswBeam: dropping it keeps the set distinct
-        nswVisited(sym, q, corpus,
-          nswEntry(es, descent, q, corpus, Seq(NswBeam))).drop("beam")
-      })
+    graft.Memo(emb.sparkSession, s"sim.nswvis:$cacheKey") {
+      val (q, corpus) = nswQCorpus(emb)
+      // beam is the constant NswBeam: dropping it keeps the set distinct
+      nswVisited(sym, q, corpus,
+        nswEntry(es, descent, q, corpus, Seq(NswBeam))).drop("beam")
+    }
   }
 
   /** Final answer from a visited set: score, drop self, top-[[AnnTopK]]. */
@@ -1361,14 +1335,10 @@ object Similarity {
     * `sim_maxmin_init` and `sim_maxmin_cells` run it — memoizing the
     * 8-row centers output runs the loop once per session instead of
     * twice per bench pass (measured ~0.9 s of every maxminCells call).
-    * Same knnCache discipline as [[bruteTruthCached]].
     */
-  def maxminInitCached(emb: DataFrame, cacheKey: String): DataFrame = {
-    knnCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    knnCache.computeIfAbsent((emb.sparkSession, "maxmin:" + cacheKey),
-      _ => graft.MemoLedger.timed(s"sim.maxmin:$cacheKey")(
-        Iterate.pin(maxminInit(emb))))
-  }
+  def maxminInitCached(emb: DataFrame, cacheKey: String): DataFrame =
+    graft.Memo.pinned(emb.sparkSession, s"sim.maxmin:$cacheKey")(
+      maxminInit(emb))
 
   def maxminCells(emb: DataFrame, initPre: Option[DataFrame] = None)
       : DataFrame = {
@@ -2943,31 +2913,16 @@ object Similarity {
     (assigned, rsubs)
   }
 
-  /** Pinned per-(session, key) memo of [[residualSubvectors]] — the
-    * untrained top-k, the Lloyd's-trained top-k, and the recall harness
-    * all open with the SAME assignment + residual explode; the same
-    * composition-cache discipline as `Graph.custSuppEdgesCached`.
-    */
-  private val resCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
-
   /** Pinned per-(session, key) memos of TRAINED index artifacts — coarse
     * centroids ([[ivfTrainedCents]]) and per-subspace PQ codebooks
     * ([[trainSubCodebook]] on raw subvectors). A deployment trains once
     * and persists these beside the index; every consumer (assignment,
     * balance audit, distortion audit) reads the persisted frame rather
-    * than re-running Lloyd's — the memo is that artifact store, with the
-    * same composition-cache discipline as [[residualSubvectorsCached]].
+    * than re-running Lloyd's — the memo is that artifact store.
     */
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), DataFrame]()
   private def trained(spark: org.apache.spark.sql.SparkSession,
-      cacheKey: String, kind: String)(build: => DataFrame): DataFrame = {
-    trainCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    trainCache.computeIfAbsent((spark, cacheKey, kind),
-      _ => graft.MemoLedger.timed(s"sim.$kind:$cacheKey")(
-        Iterate.pin(build)))
-  }
+      cacheKey: String, kind: String)(build: => DataFrame): DataFrame =
+    graft.Memo.pinned(spark, s"sim.$kind:$cacheKey")(build)
 
   def ivfCentsCached(emb: DataFrame, cacheKey: String): DataFrame =
     trained(emb.sparkSession, cacheKey, "ivf_cents")(ivfTrainedCents(emb))
@@ -2983,24 +2938,16 @@ object Similarity {
     trained(emb.sparkSession, cacheKey, "res_book")(
       trainSubCodebook(residualSubvectorsCached(emb, cacheKey)._2))
 
-  def residualSubvectorsCached(emb: DataFrame,
-      cacheKey: String): (DataFrame, DataFrame) = {
-    resCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    resCache.computeIfAbsent((emb.sparkSession, cacheKey), _ =>
-      graft.MemoLedger.timed(s"sim.residuals:$cacheKey") {
-        val (assigned, rsubs) = residualSubvectors(emb)
-        (Iterate.pin(assigned), Iterate.pin(rsubs))
-      })
-  }
-
-  /** [[graft.Tables.invalidate]] hook — drop pinned residual and spectral
-    * frames for a session whose fixture dirs were rewritten in-JVM.
+  /** Pinned per-(session, key) memo of [[residualSubvectors]] — the
+    * untrained top-k, the Lloyd's-trained top-k, and the recall harness
+    * all open with the SAME assignment + residual explode.
     */
-  def invalidateResiduals(spark: org.apache.spark.sql.SparkSession): Unit = {
-    resCache.keySet.removeIf(_._1 eq spark)
-    pcaCache.keySet.removeIf(_._1 eq spark)
-    trainCache.keySet.removeIf(_._1 eq spark)
-  }
+  def residualSubvectorsCached(emb: DataFrame,
+      cacheKey: String): (DataFrame, DataFrame) =
+    graft.Memo(emb.sparkSession, s"sim.residuals:$cacheKey") {
+      val (assigned, rsubs) = residualSubvectors(emb)
+      (Iterate.pin(assigned), Iterate.pin(rsubs))
+    }
 
   def ivfPqResidualTopK(emb: DataFrame, trained: Boolean = false,
       pre: Option[(DataFrame, DataFrame)] = None,
@@ -3940,21 +3887,15 @@ object Similarity {
 
   /** Pinned per-(session, key) memo of [[pcaParts]] — the component query
     * and the projection query share one covariance + power-iteration
-    * pass; swept with the other corpus caches.
+    * pass.
     */
-  private val pcaCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), PcaArtifacts]()
-
-  def pcaArtsCached(emb: DataFrame, cacheKey: String): PcaArtifacts = {
-    pcaCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pcaCache.computeIfAbsent((emb.sparkSession, cacheKey), _ =>
-      graft.MemoLedger.timed(s"sim.pca:$cacheKey") {
-        val a = pcaArts(emb, Dim)
-        // cov and v1 are pinned by construction; pin the rest once
-        PcaArtifacts(Iterate.pin(a.mu), a.cov, Iterate.pin(a.comps),
-          a.v1, Iterate.pin(a.lam1))
-      })
-  }
+  def pcaArtsCached(emb: DataFrame, cacheKey: String): PcaArtifacts =
+    graft.Memo(emb.sparkSession, s"sim.pca:$cacheKey") {
+      val a = pcaArts(emb, Dim)
+      // cov and v1 are pinned by construction; pin the rest once
+      PcaArtifacts(Iterate.pin(a.mu), a.cov, Iterate.pin(a.comps),
+        a.v1, Iterate.pin(a.lam1))
+    }
 
   def pcaPartsCached(emb: DataFrame,
       cacheKey: String): (DataFrame, DataFrame) = {

@@ -611,27 +611,10 @@ object TextOps {
     * `text_source_overlap` — measured 0.85/1.73/1.12 s at sf0.1, all
     * dominated by the same corpus-scale explode + window), and the
     * (doc_id, fingerprint) frame is the operator family's durable
-    * artifact exactly like the minhash band frame. Same lifecycle
-    * discipline as [[graft.operators.Dedup.clusterArtifactsCached]];
-    * swept by [[invalidate]] (wired into `Tables.invalidate`).
+    * artifact exactly like the minhash band frame.
     */
-  private val textCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), AnyRef]()
-
-  def invalidate(spark: org.apache.spark.sql.SparkSession): Unit = {
-    textCache.keySet.removeIf(_._1 eq spark)
-    ()
-  }
-
   def winnowCached(docs: DataFrame, cacheKey: String): DataFrame =
-    if (cacheKey.isEmpty) Iterate.pin(winnow(docs))
-    else {
-      textCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      textCache.computeIfAbsent((docs.sparkSession, "winnow:" + cacheKey),
-        _ => graft.MemoLedger.timed(s"text.winnow:$cacheKey")(
-          Iterate.pin(winnow(docs)))).asInstanceOf[DataFrame]
-    }
+    graft.Memo.pinned(docs.sparkSession, s"text.winnow:$cacheKey")(winnow(docs))
 
   def winnowPairs(docs: DataFrame,
       winnowPre: Option[DataFrame] = None): DataFrame = {
@@ -1294,22 +1277,15 @@ object TextOps {
     * rewrite, each round two eager pins), so the trained merge list and
     * the rewritten vocabulary are the family's shared artifact — one
     * training run per (session, key) instead of one per query per bench
-    * pass. An empty key trains un-memoized (the unit-test path).
+    * pass.
     */
   private def bpeIterateCached(docs: DataFrame, rounds: Int,
       cacheKey: String): (Seq[DataFrame], DataFrame) =
-    if (cacheKey.isEmpty) bpeIterate(docs, rounds)
-    else {
-      textCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      textCache.computeIfAbsent(
-        (docs.sparkSession, s"bpe:$rounds:" + cacheKey),
-        _ => graft.MemoLedger.timed(s"text.bpe:$rounds:$cacheKey")(
-          bpeIterate(docs, rounds)))
-        .asInstanceOf[(Seq[DataFrame], DataFrame)]
-    }
+    graft.Memo(docs.sparkSession, s"text.bpe:$rounds:$cacheKey")(
+      bpeIterate(docs, rounds))
 
-  def bpeMerges(docs: DataFrame, rounds: Int = BpeRounds,
-      cacheKey: String = ""): DataFrame = {
+  def bpeMerges(docs: DataFrame, cacheKey: String,
+      rounds: Int = BpeRounds): DataFrame = {
     val (merges, _) = bpeIterateCached(docs, rounds, cacheKey)
     merges.reduce((a, b) => a.unionByName(b)).orderBy(col("merge_rank"))
   }
@@ -1334,8 +1310,8 @@ object TextOps {
     * pair table) — real corpora support thousands of rounds; the constant
     * here is [[BpeRounds]].
     */
-  def bpeEncode(docs: DataFrame, rounds: Int = BpeRounds,
-      cacheKey: String = ""): DataFrame = {
+  def bpeEncode(docs: DataFrame, cacheKey: String,
+      rounds: Int = BpeRounds): DataFrame = {
     val (_, syms) = bpeIterateCached(docs, rounds, cacheKey)
     val enc = syms.select(col("word"), size(col("sym")).as("n_sym"))
     // explode_outer: words() output is derived and the inferred

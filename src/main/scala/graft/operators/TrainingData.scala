@@ -620,31 +620,13 @@ object TrainingData {
     * the same corpus — without the pin each consumer re-evaluates the
     * whole chain per document (higher-order map/transform expressions
     * don't codegen, so no subexpression elimination applies and there is
-    * no exchange below them for ReuseExchange to collapse). Same
-    * composition-cache discipline as [[Dedup.clusterArtifactsCached]]:
-    * stopped sessions are swept on access; a fixture rewrite must call
-    * [[invalidateShingles]] (wired into `Tables.invalidate`). An empty
-    * cacheKey (the unit-test path) pins without memoizing.
+    * no exchange below them for ReuseExchange to collapse).
     */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
   private def shingleSetsCached(docs: DataFrame, cacheKey: String): DataFrame =
-    if (cacheKey.isEmpty) Iterate.pin(shingleSets(docs))
-    else {
-      shingleCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      shingleCache.computeIfAbsent((docs.sparkSession, cacheKey),
-        _ => graft.MemoLedger.timed(s"training.shingles:$cacheKey")(
-          Iterate.pin(shingleSets(docs))))
-    }
+    graft.Memo.pinned(docs.sparkSession, s"training.shingles:$cacheKey")(
+      shingleSets(docs))
 
-  def invalidateShingles(spark: org.apache.spark.sql.SparkSession): Unit = {
-    shingleCache.keySet.removeIf(_._1 eq spark)
-    ()
-  }
-
-  def decontaminate(docs: DataFrame, cacheKey: String = ""): DataFrame = {
+  def decontaminate(docs: DataFrame, cacheKey: String): DataFrame = {
     val sh = shingleSetsCached(docs, cacheKey)
     // explode_outer, NOT explode: for plain explode Catalyst infers a
     // `size(hs) > 0 AND isnotnull(hs)` filter below the Generate, and
@@ -739,7 +721,7 @@ object TrainingData {
   private def sqlBloomPos(h: String, j: Int): String =
     s"(($h * ${bloomA(j)} + ${bloomB(j)}) % ${Dedup.MinhashP} % $BloomBits)"
 
-  def bloomDecon(docs: DataFrame, cacheKey: String = ""): DataFrame = {
+  def bloomDecon(docs: DataFrame, cacheKey: String): DataFrame = {
     val sh = shingleSetsCached(docs, cacheKey)
     val evalGrams = sh.filter(col("doc_id") % EvalMod === 0)
       .select(explode_outer(col("hs")).as("h")).distinct()

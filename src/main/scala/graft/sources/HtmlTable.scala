@@ -109,12 +109,19 @@ object HtmlTable {
   }
 
   /** Footer last-modified text (`soup.find(id="footer-info-lastmod")`,
-    * `ipynb:87-88`) — one value per file.
+    * `ipynb:87-88`) — one value per file, keyed by `src_file`.
+    *
+    * Hinted `broadcast`: the frame has one row per page, and the file
+    * listing already names every page. Without the hint, a
+    * `scanPositional(...).join(footerLastmod(...), "src_file")` sees the
+    * same whole-text size estimate on both sides, builds the hash table
+    * on the cells side, and re-runs the page-wide footer regex for every
+    * probed row.
     */
   def footerLastmod(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", "true").text(path)
+    broadcast(spark.read.option("wholetext", "true").text(path)
       .select(input_file_name().as("src_file"),
         cellText(regexp_extract(col("value"),
           "(?s)<[^>]*id=\"footer-info-lastmod\"[^>]*>(.*?)</", 1))
-          .as("lastmod_text"))
+          .as("lastmod_text")))
 }

@@ -57,32 +57,21 @@ object StreamOracles {
     * the fixture each pass. What's measured stays the STREAM (source
     * discovery, micro-batch execution, state swap); only the one-time
     * fixture prep is amortized. State/output dirs are never cached — every
-    * run streams into a fresh state from scratch.
+    * run streams into a fresh state from scratch. The split directory is
+    * owned by its [[graft.Memo]] entry and deleted when the entry is
+    * invalidated.
     */
-  private val srcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
-  private def cachedSrc(key: String)(build: Path => Unit): Path =
-    srcCache.computeIfAbsent(key, { _ =>
-      graft.MemoLedger.timed(s"stream.src:$key") {
-        val d = scratchDir("graft_stream_src")
-        build(d)
-        d
-      }
-    })
+  private def cachedSrc(spark: SparkSession, key: String)(
+      build: Path => Unit): Path =
+    graft.Memo.owned(spark, s"stream.src:$key") {
+      val d = scratchDir("graft_stream_src")
+      build(d)
+      d
+    }(deleteTree)
 
-  /** Drop (and delete) every cached source split — the streaming twin of
-    * [[graft.Tables.invalidate]]: a fixture dir rewritten in-JVM would
-    * otherwise keep serving the OLD corpus's micro-batches while the
-    * batch oracle reads the new one.
-    */
-  def invalidateSources(): Unit = {
-    val dirs = srcCache.values().iterator()
-    srcCache.clear()
-    dirs.forEachRemaining { d =>
-      Files.walk(d).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-  }
+  private def deleteTree(d: Path): Unit =
+    Files.walk(d).iterator().asScala.toSeq.reverse
+      .foreach(p => Files.deleteIfExists(p))
 
   /** Write `df` as ONE parquet file named for `idx` with a fixed,
     * idx-ordered mtime — the unit of streaming ingestion.
@@ -96,8 +85,7 @@ object StreamOracles {
     val tgt = dst.resolve(f"b$idx%03d.parquet")
     Files.move(part, tgt)
     Files.setLastModifiedTime(tgt, FileTime.fromMillis(BaseMtime + idx * 60000L))
-    Files.walk(staging).iterator().asScala.toSeq.reverse
-      .foreach(p => Files.deleteIfExists(p))
+    deleteTree(staging)
   }
 
   private def streamFiles(spark: SparkSession, src: Path,
@@ -112,8 +100,7 @@ object StreamOracles {
     * near-empty delta files per batch for state that is actually 3 groups
     * / ~1k cells. A cloned session (shared SparkContext, own SQLConf) pins
     * a narrow shuffle width for JUST the stream queries; batch queries
-    * keep the session setting. Memoized per (parent session, width),
-    * swept with the parent.
+    * keep the session setting. Memoized per (parent session, width).
     *
     * WIDTH TRACKS STATE CARDINALITY, NOT CORE COUNT (guide §2: fewer,
     * larger partitions; every store pays a per-batch commit). Oracles
@@ -130,15 +117,12 @@ object StreamOracles {
     */
   val StreamWidth = 4
   val TinyStateWidth = 1
-  private val sessCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), SparkSession]()
   private def streamSession(spark: SparkSession,
-      width: Int = StreamWidth): SparkSession = {
-    sessCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    sessCache.computeIfAbsent((spark, width), { case (p, w) =>
-      val s = p.newSession()
+      width: Int = StreamWidth): SparkSession =
+    graft.Memo.untimed(spark, s"stream.session:$width") {
+      val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", w.toString))
+        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", width.toString))
       // state history is a correctness no-op for AvailableNow-to-final
       // oracles; retaining one batch of deltas halves maintenance I/O
       s.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
@@ -152,8 +136,7 @@ object StreamOracles {
       s.conf.set("spark.sql.streaming.checkpointLocation",
         scratchDir("graft_ckpt").toString)
       s
-    })
-  }
+    }
 
   /** Await an AvailableNow query's natural termination, failing LOUDLY
     * on timeout: a timed-out stream stopped mid-ingest would otherwise
@@ -194,7 +177,7 @@ object StreamOracles {
     val orders = graft.Tables.orders(spark, dir)
       .select(col("o_custkey").as("k"), col("o_totalprice").as("v"),
         year(col("o_orderdate")).as("y"))
-    val src = cachedSrc(s"scd|$dir") { d =>
+    val src = cachedSrc(spark, s"scd|$dir") { d =>
       val years = orders.select(col("y")).distinct().orderBy(col("y"))
         .collect().map(_.getInt(0)) // handful of years — driver control flow
       // contiguous rank-buckets, mirrored in sqlScdState: year at sorted
@@ -281,7 +264,7 @@ object StreamOracles {
   def dedupState(spark: SparkSession, dir: String,
       batches: Int = DedupBatches): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val src = cachedSrc(s"dedup|$dir|$batches") { d =>
+    val src = cachedSrc(spark, s"dedup|$dir|$batches") { d =>
       (0 until batches).foreach { i =>
         writeBatchFile(docs.filter(col("doc_id") % batches === i), d, i)
       }
@@ -427,7 +410,7 @@ object StreamOracles {
     import graft.operators.{Dedup, Iterate}
     val evalMod = graft.operators.TrainingData.EvalMod
     val docs = graft.Tables.documents(spark, dir)
-    val src = cachedSrc(s"decon|$dir|$batches") { d =>
+    val src = cachedSrc(spark, s"decon|$dir|$batches") { d =>
       val train = docs.filter(col("doc_id") % evalMod =!= 0)
       (0 until batches).foreach { i =>
         writeBatchFile(
@@ -517,7 +500,7 @@ object StreamOracles {
     * fixture and shared by [[deconState]] and [[corpusState]] — exactly
     * how a deployment holds its eval suites as durable tables. */
   private def deconIndex(docs: DataFrame, dir: String): Path =
-    cachedSrc(s"deconidx|$dir") { d =>
+    cachedSrc(docs.sparkSession, s"deconidx|$dir") { d =>
       import graft.operators.{Dedup, Iterate}
       val eval = docs.filter(
         col("doc_id") % graft.operators.TrainingData.EvalMod === 0)
@@ -567,7 +550,7 @@ object StreamOracles {
     import graft.operators.{CorpusClean, Dedup, TextOps}
     val evalMod = graft.operators.TrainingData.EvalMod
     val docs = graft.Tables.documents(spark, dir)
-    val src = cachedSrc(s"corpus|$dir|$batches") { d =>
+    val src = cachedSrc(spark, s"corpus|$dir|$batches") { d =>
       val train = docs.filter(col("doc_id") % evalMod =!= 0)
       (0 until batches).foreach { i =>
         writeBatchFile(
@@ -754,7 +737,7 @@ object StreamOracles {
   def kmvState(spark: SparkSession, dir: String): DataFrame = {
     val li = graft.Tables.lineitem(spark, dir)
       .select(col("l_returnflag").as("grp"), col("l_partkey").as("value"))
-    val src = cachedSrc(s"kmv|$dir") { d =>
+    val src = cachedSrc(spark, s"kmv|$dir") { d =>
       (0 until 2).foreach { i =>
         writeBatchFile(li.filter(col("value") % 2 === i), d, i)
       }
@@ -792,7 +775,7 @@ object StreamOracles {
     */
   def cmsState(spark: SparkSession, dir: String): DataFrame = {
     val ev = graft.Tables.events(spark, dir).select(col("user_id"))
-    val src = cachedSrc(s"cms|$dir") { d =>
+    val src = cachedSrc(spark, s"cms|$dir") { d =>
       (0 until 2).foreach { i =>
         writeBatchFile(ev.filter(col("user_id") % 2 === i), d, i)
       }
@@ -837,7 +820,7 @@ object StreamOracles {
     import graft.functions.Exact
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    val src = cachedSrc(s"session|$dir|$batches") { d =>
+    val src = cachedSrc(spark, s"session|$dir|$batches") { d =>
       (0 until batches).foreach { i =>
         writeBatchFile(ev.filter(col("event_id") % batches === i), d, i)
       }
@@ -882,7 +865,7 @@ object StreamOracles {
     import graft.functions.Exact
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val src = cachedSrc(s"window|$dir") { d =>
+    val src = cachedSrc(spark, s"window|$dir") { d =>
       (0 until 2).foreach { i =>
         writeBatchFile(ev.filter(col("event_id") % 2 === i), d, i)
       }
@@ -923,7 +906,7 @@ object StreamOracles {
     val ev = graft.Tables.events(spark, dir)
       .filter(col("ts").isNotNull)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val src = cachedSrc(s"join|$dir") { d =>
+    val src = cachedSrc(spark, s"join|$dir") { d =>
       writeBatchFile(ev.filter(dayofmonth(col("ts")) < 16), d, 0)
       writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 16), d, 1)
     }
@@ -959,7 +942,7 @@ object StreamOracles {
         col("event_type").isin("view", "purchase"))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    val src = cachedSrc(s"asof|$dir") { d =>
+    val src = cachedSrc(spark, s"asof|$dir") { d =>
       writeBatchFile(ev.filter(dayofmonth(col("ts")) < 16), d, 0)
       writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 16), d, 1)
     }
@@ -1027,7 +1010,7 @@ object StreamOracles {
   def mgState(spark: SparkSession, dir: String): DataFrame = {
     val docsDf = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
-    val src = cachedSrc(s"mg|$dir") { d =>
+    val src = cachedSrc(spark, s"mg|$dir") { d =>
       (0 until 2).foreach { i =>
         writeBatchFile(docsDf.filter(col("doc_id") % 2 === i), d, i)
       }
@@ -1074,7 +1057,7 @@ object StreamOracles {
     val ev = graft.Tables.events(spark, dir)
       .filter(col("ts").isNotNull)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val src = cachedSrc(s"drop3|$dir") { d =>
+    val src = cachedSrc(spark, s"drop3|$dir") { d =>
       writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 4 &&
         dayofmonth(col("ts")) < 20), d, 0)
       writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 20 &&

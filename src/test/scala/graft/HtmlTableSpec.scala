@@ -75,6 +75,36 @@ class HtmlTableSpec extends SparkSuite {
     assert(parsed.toString == "2024-08-21")
   }
 
+  test("footer join builds on the footer side and keeps the unhinted rows") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    val dir = Files.createTempDirectory("graft_html_footer")
+    (1 to 3).foreach { i =>
+      Files.write(dir.resolve(s"page_$i.html"),
+        wikiHtml.replace("21 August", s"$i August").getBytes("UTF-8"))
+    }
+    def joined() = HtmlTable.scanPositional(spark, dir.toString, 2)
+      .join(HtmlTable.footerLastmod(spark, dir.toString), "src_file")
+      .select(col("src_file"), col("row_idx"), col("lastmod_text"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq.sorted
+    val hinted = joined()
+    val got = rows(hinted)
+    // the helper's collect descends through AQE's query stages
+    val finalPlan = hinted.queryExecution.executedPlan
+    val joins = new AdaptiveSparkPlanHelper {}.collect(finalPlan) {
+      case j: BroadcastHashJoinExec => j
+    }
+    assert(joins.nonEmpty && joins.forall(_.buildSide == BuildRight),
+      s"expected a broadcast build on the footer side:\n$finalPlan")
+    spark.conf.set("spark.sql.optimizer.disableHints", "true")
+    val plain = try rows(joined())
+      finally spark.conf.unset("spark.sql.optimizer.disableHints")
+    assert(got.length == 9)
+    assert(got == plain)
+  }
+
   test("DataSource V2 form: format(\"graft-html\") scans a page directory in parallel") {
     val dir = Files.createTempDirectory("graft_html_v2")
     Files.write(dir.resolve("page_a.html"), wikiHtml.getBytes("UTF-8"))

@@ -127,11 +127,11 @@ class LayoutGraphSpec extends SparkSuite {
   }
 
   test("bloom decon never misses a true overlap (no false negatives)") {
-    val out = TrainingData.bloomDecon(Tables.documents(spark, dir))
+    val out = TrainingData.bloomDecon(Tables.documents(spark, dir), dir)
     // every kgram counted by the exact path must also be bloom-flagged:
     // n_maybe >= n_exact row-wise, and no doc with n_exact>0 is absent
     assert(out.filter(col("n_maybe") < col("n_exact")).count() == 0)
-    val exactIds = TrainingData.decontaminate(Tables.documents(spark, dir))
+    val exactIds = TrainingData.decontaminate(Tables.documents(spark, dir), dir)
       .select(col("train_id")).distinct()
     val missed = exactIds.join(out.select("train_id"), Seq("train_id"),
       "left_anti")
@@ -453,6 +453,15 @@ class LayoutGraphSpec extends SparkSuite {
     val one = comm.select(col("doc_id"), lit(1L).as("community"))
     assert(Dedup.modularityFrom(pairs, one).collect()
       .head.getAs[Double]("modularity") == 0.0)
+  }
+
+  test("modularity: an edgeless pair graph scores NULL, not DIVIDE_BY_ZERO") {
+    val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val comm = Seq((1L, 1L), (2L, 2L)).toDF("doc_id", "community")
+    val q = Dedup.modularityFrom(pairs, comm).collect().head
+    assert(q.getAs[Long]("n_edges") == 0L)
+    assert(q.getAs[Long]("n_communities") == 2L)
+    assert(q.isNullAt(q.fieldIndex("modularity")))
   }
 
   test("components: two disjoint bicliques summarize exactly") {

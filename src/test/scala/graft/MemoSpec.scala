@@ -1,0 +1,114 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+/** The per-session memo layer ([[Memo]]): one build per (session, key),
+  * nested builds, and invalidation that leaves no memo serving the files
+  * a session read before they were rewritten.
+  */
+class MemoSpec extends SparkSuite {
+  private val fixture = "/root/testdata/sf0.001"
+
+  test("memo: one build per (session, key), nested builds, per-session entries") {
+    val a = spark.newSession()
+    val b = spark.newSession()
+    var builds = 0
+    def outer(s: SparkSession): String = Memo(s, "spec.outer:k") {
+      builds += 1
+      // a nested memo resolved inside a build: one map, no recursive update
+      Memo(s, "spec.inner:k") { builds += 1; "inner" } + "+outer"
+    }
+    MemoLedger.drain()
+    assert(outer(a) == "inner+outer" && outer(a) == "inner+outer")
+    assert(builds == 2)
+    assert(MemoLedger.drain().keySet == Set("spec.outer:k", "spec.inner:k"))
+    outer(b)
+    assert(builds == 4, "another session builds its own entries")
+    assert(Memo.untimed(a, "spec.untimed:k")("x") == "x")
+    assert(MemoLedger.drain().keySet == Set("spec.outer:k", "spec.inner:k"),
+      "an untimed build makes no ledger entry")
+    Memo.invalidate(a)
+    Memo.invalidate(b)
+  }
+
+  test("memo: invalidate releases persisted frames and owned resources") {
+    val a = spark.newSession()
+    val b = spark.newSession()
+    val df = Memo.persisted(a, "spec.persisted:k")(a.range(10).toDF("id"))
+    assert(df.storageLevel != StorageLevel.NONE)
+    val dir = Memo.owned(a, "spec.owned:k")(Files.createTempDirectory("graft_memo"))(
+      d => Files.delete(d))
+    val other = Memo(b, "spec.other:k")(new Object)
+    Memo.invalidate(a)
+    assert(df.storageLevel == StorageLevel.NONE)
+    assert(!Files.exists(dir))
+    assert(Memo(b, "spec.other:k")(new Object) eq other,
+      "invalidate leaves other sessions alone")
+    Memo.invalidate(b)
+  }
+
+  // One consumer per memo artifact family: sim.knn, the NSW chain
+  // (sim.lsh2/l1sym/nswsym/nswentry/nswvis, sim.n), bucket.tables,
+  // dedup.artifacts/bands/pairs, dedup.sets, graph:* (pinned and
+  // persisted), text.winnow, text.bpe, training.shingles, corpus.clean,
+  // sim.residuals + sim.res_book, sim.brute, sim.pca, sim.ivf_cents,
+  // tables.events, stream.src.
+  private val consumers = Seq(
+    "sim_knn_graph", "sim_nsw_walk", "bucket_join",
+    "dedup_components", "decon_minhash", "graph_pagerank",
+    "text_winnow", "text_bpe_merges", "decon_overlap", "corpus_clean",
+    "sim_ivfadc_trained", "sim_ivfadc_recall", "embed_pca_project",
+    "sim_ivf_balance_trained", "events_redact", "stream_scd_state")
+
+  private val tables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) Files.walk(p).iterator().asScala.toSeq.reverse
+      .foreach(Files.delete)
+
+  test("invalidate after a fixture rewrite: every memo serves the new files") {
+    val copy = Files.createTempDirectory("graft_memo_fixture")
+    tables.foreach { t =>
+      Files.copy(Path.of(s"$fixture/$t.parquet"), copy.resolve(s"$t.parquet"))
+    }
+    val dir = copy.toString
+    val a = spark.newSession()
+    try {
+      val before = consumers.map(q => q -> rows(SparkEntry.queries(q)(a, dir))).toMap
+      // deterministic subset: drop keys ≡ 2 (mod 5) past the low ids
+      // (the sim family's query, centroid and codebook seeds)
+      tables.foreach { t =>
+        val raw = spark.read.parquet(s"$fixture/$t.parquet")
+        val key = col(raw.columns.head)
+        deleteTree(copy.resolve(s"$t.parquet"))
+        raw.filter(key < 16 || key % 5 =!= 2).coalesce(1)
+          .write.parquet(copy.resolve(s"$t.parquet").toString)
+      }
+      Tables.invalidate(a)
+      val after = consumers.map(q => q -> rows(SparkEntry.queries(q)(a, dir)))
+      val fresh = spark.newSession()
+      try {
+        val stale = after.filter { case (q, got) =>
+          got != rows(SparkEntry.queries(q)(fresh, dir))
+        }.map(_._1)
+        assert(stale.isEmpty, s"stale after invalidate: ${stale.mkString(", ")}")
+        val unchanged = after.collect { case (q, got) if got == before(q) => q }
+        assert(unchanged.isEmpty,
+          s"the rewrite left these results unchanged: ${unchanged.mkString(", ")}")
+      } finally Tables.invalidate(fresh)
+    } finally {
+      Tables.invalidate(a)
+      deleteTree(copy)
+    }
+  }
+}

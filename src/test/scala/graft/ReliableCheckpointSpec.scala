@@ -36,7 +36,7 @@ class ReliableCheckpointSpec extends SparkSuite {
     "label_propagation" -> (() =>
       Dedup.labelPropagation(Dedup.minhashPairs(docs), docs)),
     "lloyds_kmeans" -> (() => Similarity.ivfKmeans(emb)),
-    "bpe_merges" -> (() => TextOps.bpeMerges(docs)),
+    "bpe_merges" -> (() => TextOps.bpeMerges(docs, "ck-bpe-" + System.nanoTime)),
     "nsw_walk" -> (() => Similarity.nswWalk(emb)),
     // fresh cache keys per call: the prede/prdeg memos would otherwise
     // hand run 2 the run-1 pinned frames (the vacuous-comparison trap)
