@@ -89,11 +89,16 @@ object Bench {
     }
   }
 
-  private final case class SuiteRun(total: Double,
+  /** One config's suite: `queries` keeps a failed query's -1, while
+    * `total` and the family subtotals count only the queries that ran. */
+  private final case class SuiteRun(
       queries: Map[String, Double], samples: Map[String, Seq[Double]],
       loadBefore: Double, loadAfter: Double,
       spreadMedian: Double, contended: Boolean,
-      noisyQueries: Seq[String], memoBuild: Map[String, Double])
+      noisyQueries: Seq[String], memoBuild: Map[String, Double]) {
+    val failed: Seq[String] = queries.collect { case (n, t) if t < 0 => n }.toSeq.sorted
+    val total: Double = queries.values.filter(_ >= 0).sum
+  }
 
   /** 1-min load average from /proc/loadavg; -1 when unreadable (keeps
     * the artifact portable off Linux). */
@@ -179,9 +184,8 @@ object Bench {
     // The pass-1 samples retain the cost per query; this names it per
     // memo key so graders can add it back or compare it round-over-round.
     val memoBuild = MemoLedger.drain()
-    SuiteRun(if (results.nonEmpty) results.values.sum else 0.0,
-      results, samples, lb, loadAvg1(), spreadMedian, contended, noisy,
-      memoBuild)
+    SuiteRun(results, samples, lb, loadAvg1(), spreadMedian, contended,
+      noisy, memoBuild)
   }
 
   private def r3(d: Double) = math.rint(d * 1000) / 1000
@@ -194,22 +198,21 @@ object Bench {
       s"\"" + k + "\":" + vs.map(r3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
 
-  // Per-family subtotals (prefix before the first '_'; the parity core
-  // is the q* family): as the suite grows past ~400 queries the 2×-of-
-  // baseline gate stays interpretable per family, not only as a total.
+  // Per-family subtotals by declared family, failed queries left out: as
+  // the suite grows past ~400 queries the 2×-of-baseline gate stays
+  // interpretable per family, not only as a total.
   private def famJson(qs: Map[String, Double]): String =
-    qs.groupBy { case (k, _) =>
-        if (k.matches("^q\\d+.*")) "q" // the reference-parity core
-        else { val i = k.indexOf('_'); if (i > 0) k.substring(0, i) else k } }
-      .toSeq.sortBy(_._1)
-      .map { case (f, m) => s"\"" + f + "\":" + r3(m.values.sum) }
+    SparkEntry.all.collect { case (f, q) if qs.contains(q.name) => f -> qs(q.name) }
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+      .map { case (f, ts) => s"\"" + f + "\":" + r3(ts.filter(_ >= 0).sum) }
       .mkString("{", ",", "}")
 
   /** The per-config JSON fields shared by the primary block and
-    * gate_config: totals, per-query mins, ALL pass samples, family
-    * subtotals, and the contention evidence. */
+    * gate_config: totals, per-query mins (-1 for a failed query), the
+    * failed queries, ALL pass samples, family subtotals, and the
+    * contention evidence. */
   private def configJson(run: SuiteRun): String =
-    s""""value":${run.total},"unit":"sec","queries":${queriesJson(run.queries)},"families":${famJson(run.queries)},"samples":${samplesJson(run.samples)},"memo_build":${memoJson(run.memoBuild)},"memo_build_total":${r3(run.memoBuild.values.sum)},"loadavg":{"before":${r3(run.loadBefore)},"after":${r3(run.loadAfter)}},"spread_median":${r3(run.spreadMedian)},"contended":${run.contended},"noisy_queries":${jsonStrArr(run.noisyQueries)}"""
+    s""""value":${run.total},"unit":"sec","queries":${queriesJson(run.queries)},"failed":${jsonStrArr(run.failed)},"families":${famJson(run.queries)},"samples":${samplesJson(run.samples)},"memo_build":${memoJson(run.memoBuild)},"memo_build_total":${r3(run.memoBuild.values.sum)},"loadavg":{"before":${r3(run.loadBefore)},"after":${r3(run.loadAfter)}},"spread_median":${r3(run.spreadMedian)},"contended":${run.contended},"noisy_queries":${jsonStrArr(run.noisyQueries)}"""
 
   private def memoJson(m: Map[String, Double]): String =
     m.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + r3(v) }
@@ -257,6 +260,12 @@ object Bench {
     val gateTot = gate.map(g =>
       s""","gate_total":${r3(g.total)},"gate_contended":${g.contended},"gate_noisy_queries":${jsonStrArr(g.noisyQueries)}""")
       .getOrElse("")
-    println(s"""{"metric":"summary","value":${r3(primary.total)},"unit":"sec","n_queries":${primary.queries.size},"contended":${primary.contended},"spread_median":${r3(primary.spreadMedian)},"memo_build_total":${r3(primary.memoBuild.values.sum)},"noisy_queries":${jsonStrArr(primary.noisyQueries)},"loadavg_before":${r3(primary.loadBefore)},"top10_slowest":$slow$gateTot,"full_json":"$outPath","sf":"$sfDir","cpus":$cpus,"shuffle":$shuffle}""")
+    println(s"""{"metric":"summary","value":${r3(primary.total)},"unit":"sec","n_queries":${primary.queries.size},"failed":${jsonStrArr(primary.failed)},"contended":${primary.contended},"spread_median":${r3(primary.spreadMedian)},"memo_build_total":${r3(primary.memoBuild.values.sum)},"noisy_queries":${jsonStrArr(primary.noisyQueries)},"loadavg_before":${r3(primary.loadBefore)},"top10_slowest":$slow$gateTot,"full_json":"$outPath","sf":"$sfDir","cpus":$cpus,"shuffle":$shuffle}""")
+    val failed = (primary.failed ++ gate.toSeq.flatMap(_.failed)).distinct.sorted
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[bench] ${failed.length} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

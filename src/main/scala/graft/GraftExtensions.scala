@@ -4,47 +4,23 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotProductFloat, HeavyHitters, IntersectCountSorted, PairExpand, QuantileSketch, VectorExprs}
+import graft.functions.{StringSim, TextExprs, VectorExprs}
 
 /** `SparkSessionExtensions` entry point: sessions built with
   * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.GraftExtensions`) get the engine's custom
   * expressions as SQL functions without any runtime registration call.
-  * `VectorExprs.register` remains the per-session runtime alternative.
+  * The functions come from the same tables `VectorExprs.register`,
+  * `StringSim.register` and `TextExprs.register` read at runtime.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinPhys.AsOfJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.DotName),
-      new ExpressionInfo(classOf[DotProductFloat].getName,
-        VectorExprs.DotName),
-      exprs => DotProductFloat(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.IntersectName),
-      new ExpressionInfo(classOf[IntersectCountSorted].getName,
-        VectorExprs.IntersectName),
-      exprs => IntersectCountSorted(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.PairName),
-      new ExpressionInfo(classOf[PairExpand].getName, VectorExprs.PairName),
-      exprs => PairExpand(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.QuantileName),
-      new ExpressionInfo(classOf[QuantileSketch].getName,
-        VectorExprs.QuantileName),
-      exprs => QuantileSketch(exprs(0),
-        percentages = VectorExprs.foldDoubles(exprs(1)),
-        capacity = VectorExprs.foldInt(exprs(2)))
-        .toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.HeavyName),
-      new ExpressionInfo(classOf[HeavyHitters].getName,
-        VectorExprs.HeavyName),
-      exprs => HeavyHitters(exprs(0),
-        k = VectorExprs.foldInt(exprs(1)),
-        capacity = VectorExprs.foldInt(exprs(2)))
-        .toAggregateExpression()))
+    (VectorExprs.builders ++ StringSim.builders ++ TextExprs.builders)
+      .foreach { case (name, build) =>
+        e.injectFunction((FunctionIdentifier(name),
+          new ExpressionInfo(build.getClass.getName, name), build))
+      }
   }
 }

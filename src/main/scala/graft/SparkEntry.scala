@@ -1,8477 +1,39 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Exact._
-import graft.operators.{Dedup, Multimodal, Profile, ScdMerge, Sessionize, Similarity, TextOps, TrainingData}
+import graft.queries._
+import graft.queries.CoreQueries.qEnrich
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract: the registered queries and their DuckDB oracles.
   *
-  * Every entry in [[queries]] has a matching ANSI-SQL oracle in [[oracleSql]]
-  * runnable by DuckDB over the same parquet fixture tables; column names are
-  * aligned on both sides, double aggregates go through the exact-decimal
-  * detour ([[graft.functions.Exact]]) so hashes are stable, and every result
-  * is totally ordered.
+  * Each query is one [[QuerySpec]], declared in its family's object under
+  * `graft.queries`. [[all]] assembles them once; [[queries]] and
+  * [[oracleSql]] are name-keyed views of it.
   */
 object SparkEntry {
-
-  // Injected logical clock + batch ids (SURVEY.md §7.4 — uuid() and
-  // CURRENT_TIMESTAMP/CURRENT_DATE must be parameters for oracle parity).
-  private val ClockTsLit   = "2026-02-02 00:00:00"
-  private val ClockDateLit = "2026-02-02"
-  private def clockTs: Column   = lit(ClockTsLit).cast("timestamp")
-  private def clockDate: Column = lit(ClockDateLit).cast("date")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     qEnrich(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- q1_agg
-  // SURVEY §2.6 A1/A2 + §2.7 F9/F10: grouped aggregation with per-row
-  // arithmetic — partial+final hash agg, no extra shuffle beyond the groupBy.
-  private def qPricingAgg(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        xsum(col("l_quantity"), 4).as("sum_qty"),
-        xsum(col("l_extendedprice")).as("sum_base_price"),
-        xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("sum_disc_price"),
-        xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-        xavg(col("l_quantity")).as("avg_qty"),
-        xavg(col("l_discount")).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  private val sqlPricingAgg: String =
-    s"""SELECT l_returnflag, l_linestatus,
-       |  ${sqlSum("l_quantity", 4)} AS sum_qty,
-       |  ${sqlSum("l_extendedprice")} AS sum_base_price,
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")} AS sum_disc_price,
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) * (CAST(1 AS DOUBLE) + l_tax)")} AS sum_charge,
-       |  ${sqlAvg("l_quantity")} AS avg_qty,
-       |  ${sqlAvg("l_discount")} AS avg_disc,
-       |  COUNT(*) AS count_order
-       |FROM lineitem
-       |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-       |GROUP BY l_returnflag, l_linestatus
-       |ORDER BY l_returnflag, l_linestatus""".stripMargin
-
-  // ------------------------------------------------------ q2_filter_project
-  // SURVEY §2.3 P1-P6: projection + conjunctive predicates. The filter and
-  // the 5-column projection both reach the parquet scan (PushedFilters /
-  // ReadSchema in .explain).
-  private def qFilterProject(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .filter(col("l_returnflag") === lit("R") &&
-        col("l_discount") > lit(0.05) &&
-        col("l_shipdate") >= lit("1995-01-01 00:00:00").cast("timestamp"))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-        col("l_extendedprice"),
-        (col("l_extendedprice") * col("l_discount")).as("discount_amount"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  private val sqlFilterProject: String =
-    """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-      |  l_extendedprice * l_discount AS discount_amount
-      |FROM lineitem
-      |WHERE l_returnflag = 'R' AND l_discount > 0.05
-      |  AND l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-      |ORDER BY l_orderkey, l_linenumber""".stripMargin
-
-  // ------------------------------------------------------------- q3_enrich
-  // SURVEY §2.4 J5 + §2.7 F12: the declared currency-enrichment join
-  // (SQL/etl_world_banks.sql:317-318) re-expressed over customer×nation×
-  // region. Both dims are broadcast — no shuffle of the fact side.
-  private def qEnrich(s: SparkSession, dir: String): DataFrame =
-    Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name"), col("r_name"),
-        col("c_acctbal"),
-        round(col("c_acctbal") * lit(0.783), 2).as("bal_gbp"),
-        round(col("c_acctbal") * lit(0.924), 2).as("bal_eur"),
-        round(col("c_acctbal") * lit(82.572), 2).as("bal_inr"))
-      .orderBy(col("c_custkey"))
-
-  private val sqlEnrich: String =
-    """SELECT c_custkey, c_name, n_name, r_name, c_acctbal,
-      |  ROUND(c_acctbal * 0.783, 2) AS bal_gbp,
-      |  ROUND(c_acctbal * 0.924, 2) AS bal_eur,
-      |  ROUND(c_acctbal * 82.572, 2) AS bal_inr
-      |FROM customer
-      |JOIN nation ON c_nationkey = n_nationkey
-      |JOIN region ON n_regionkey = r_regionkey
-      |ORDER BY c_custkey""".stripMargin
-
-  // ------------------------------------------------------------ q4/q5 semi/anti
-  // SURVEY §2.4 J1/J2: the reference's per-row EXISTS probes (SQL:25-27,
-  // 191-194) as set-based semi/anti joins.
-  private def qSemiJoin(s: SparkSession, dir: String): DataFrame =
-    Tables.customer(s, dir)
-      .join(Tables.orders(s, dir),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      .orderBy(col("c_custkey"))
-
-  private val sqlSemiJoin: String =
-    """SELECT c_custkey, c_name, c_acctbal FROM customer
-      |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      |ORDER BY c_custkey""".stripMargin
-
-  private def qAntiJoin(s: SparkSession, dir: String): DataFrame =
-    Tables.customer(s, dir)
-      .join(Tables.orders(s, dir).filter(col("o_orderstatus") === "F"),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      .orderBy(col("c_custkey"))
-
-  private val sqlAntiJoin: String =
-    """SELECT c_custkey, c_name, c_acctbal FROM customer
-      |WHERE NOT EXISTS (SELECT 1 FROM orders
-      |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-      |ORDER BY c_custkey""".stripMargin
-
-  // --------------------------------------------------------- q6/q7 SCD merge
-  // SURVEY §2.5 — the flagship compound operator, exercised over two
-  // deterministic slices of `orders` so every one of the five branches plus
-  // deactivation and the same-day/NULL shields is hit (FIXTURES.md A3).
-  //   k%8==0 → deactivate      k%8==1 → no_change   k%8==2 → update
-  //   k%8==3 → carry (NULL updated_at shield)       k%8==4 → reactivate
-  //   k%8==5 → version (+version_history)           k%8∈{6,7} → insert
-  private def scdFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val o = Tables.orders(s, dir)
-    val m = col("o_orderkey") % 8
-    val target = o.filter(m <= 5).select(
-      col("o_orderkey").as("key"),
-      col("o_totalprice").as("value"),
-      lit("b0").as("batch_id"),
-      (m < 4).as("active"),
-      when(m === 3, lit(null).cast("timestamp"))
-        .otherwise(lit("2026-01-01 00:00:00").cast("timestamp"))
-        .as("updated_at"))
-    val incoming = o.filter(m.isin(1, 2, 4, 5, 6, 7)).select(
-      col("o_orderkey").as("key"),
-      when(m.isin(2, 5), col("o_totalprice") + lit(10.0))
-        .otherwise(col("o_totalprice")).as("value"),
-      lit("b1").as("batch_id"))
-    (incoming, target)
-  }
-
-  private val scdCfg = ScdMerge.Config(keys = Seq("key"), valueCol = "value")
-
-  private def qScdMerge(s: SparkSession, dir: String): DataFrame = {
-    val (incoming, target) = scdFixture(s, dir)
-    ScdMerge.merge(incoming, target, scdCfg, clockTs, clockDate, lit("b1"))
-      // NTZ output: fixture parquet is timestamp_ntz; constructed LTZ
-      // timestamps would write as UTC-adjusted and hash differently
-      .withColumn("updated_at", col("updated_at").cast("timestamp_ntz"))
-      .orderBy(col("key"), col("change_type"))
-  }
-
-  private def qScdCounters(s: SparkSession, dir: String): DataFrame = {
-    val (incoming, target) = scdFixture(s, dir)
-    val merged = ScdMerge.merge(incoming, target, scdCfg, clockTs, clockDate,
-      lit("b1"))
-    ScdMerge.counters(merged, lit("b1"), "orders_scd")
-  }
-
-  /** Shared CTE prefix for the SCD oracle: fixture + join + classification. */
-  private val sqlScdCte: String =
-    s"""WITH target AS (
-       |  SELECT o_orderkey AS key, o_totalprice AS value, 'b0' AS batch_id,
-       |         (o_orderkey % 8) < 4 AS active,
-       |         CASE WHEN o_orderkey % 8 = 3 THEN NULL
-       |              ELSE TIMESTAMP '2026-01-01 00:00:00' END AS updated_at
-       |  FROM orders WHERE o_orderkey % 8 <= 5
-       |), incoming AS (
-       |  SELECT o_orderkey AS key,
-       |         CASE WHEN o_orderkey % 8 IN (2,5) THEN o_totalprice + 10.0
-       |              ELSE o_totalprice END AS value,
-       |         'b1' AS batch_id
-       |  FROM orders WHERE o_orderkey % 8 IN (1,2,4,5,6,7)
-       |), j AS (
-       |  SELECT t.key AS tkey, i.key AS ikey, t.value AS tvalue,
-       |         i.value AS ivalue, t.active AS tactive,
-       |         t.updated_at AS tupdated, t.batch_id AS tbatch,
-       |         i.batch_id AS ibatch
-       |  FROM target t FULL OUTER JOIN incoming i ON t.key = i.key
-       |), c AS (
-       |  SELECT *,
-       |    CASE
-       |      WHEN tkey IS NULL THEN 'insert'
-       |      WHEN ikey IS NULL AND tactive AND tupdated IS NOT NULL
-       |           AND tupdated < DATE '$ClockDateLit'
-       |           AND tbatch <> 'b1' THEN 'deactivate'
-       |      WHEN ikey IS NULL THEN 'carry'
-       |      WHEN tactive AND tvalue = ivalue THEN 'no_change'
-       |      WHEN tactive THEN 'update'
-       |      WHEN tvalue = ivalue THEN 'reactivate'
-       |      ELSE 'version'
-       |    END AS change_type
-       |  FROM j
-       |)""".stripMargin
-
-  private val sqlScdMerge: String =
-    s"""$sqlScdCte
-       |SELECT key, value, batch_id, active, updated_at, change_type FROM (
-       |  SELECT COALESCE(ikey, tkey) AS key,
-       |    CASE WHEN change_type IN ('insert','update','version') THEN ivalue
-       |         ELSE tvalue END AS value,
-       |    CASE WHEN change_type IN ('insert','update','reactivate','version')
-       |         THEN ibatch ELSE tbatch END AS batch_id,
-       |    CASE WHEN change_type = 'deactivate' THEN FALSE
-       |         WHEN change_type IN ('insert','update','no_change',
-       |                              'reactivate','version') THEN TRUE
-       |         ELSE tactive END AS active,
-       |    CASE WHEN change_type IN ('update','reactivate','deactivate')
-       |           THEN TIMESTAMP '$ClockTsLit'
-       |         WHEN change_type IN ('insert','version') THEN NULL
-       |         ELSE tupdated END AS updated_at,
-       |    change_type
-       |  FROM c
-       |  UNION ALL
-       |  SELECT tkey, tvalue, tbatch, FALSE, tupdated, 'version_history'
-       |  FROM c WHERE change_type = 'version'
-       |)
-       |ORDER BY key, change_type""".stripMargin
-
-  private val sqlScdCounters: String =
-    s"""$sqlScdCte
-       |SELECT
-       |  CAST(COALESCE(SUM(CASE WHEN change_type='no_change' THEN 1 ELSE 0 END), 0) AS BIGINT) AS no_update_count,
-       |  CAST(COALESCE(SUM(CASE WHEN change_type='update' THEN 1 ELSE 0 END), 0) AS BIGINT) AS update_count,
-       |  CAST(COALESCE(SUM(CASE WHEN change_type='insert' THEN 1 ELSE 0 END), 0) AS BIGINT) AS new_inserts_count,
-       |  CAST(COALESCE(SUM(CASE WHEN change_type='reactivate' THEN 1 ELSE 0 END), 0) AS BIGINT) AS reactivate_count,
-       |  CAST(COALESCE(SUM(CASE WHEN change_type='version' THEN 1 ELSE 0 END), 0) AS BIGINT) AS version_count,
-       |  CAST(COALESCE(SUM(CASE WHEN change_type='deactivate' THEN 1 ELSE 0 END), 0) AS BIGINT) AS deactivate_count,
-       |  'orders_scd' AS table_name, 'b1' AS batch_id
-       |FROM c""".stripMargin
-
-  // ------------------------------------------------------- q8 Type-1 upsert
-  // SURVEY §2.5 — the exchanges_rates variant (SQL:188-248): composite key,
-  // no active flag; branches no_change / update / insert / carry.
-  //   k%4==0 → carry   k%4==1 → no_change   k%4==2 → update   k%4==3 → insert
-  private def qUpsertType1(s: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(s, dir)
-    val m = col("c_custkey") % 4
-    val target = c.filter(m <= 2).select(
-      col("c_custkey").as("key1"), col("c_mktsegment").as("key2"),
-      col("c_acctbal").as("value"), lit("b0").as("batch_id"))
-    val incoming = c.filter(m >= 1).select(
-      col("c_custkey").as("key1"), col("c_mktsegment").as("key2"),
-      when(m === 2, col("c_acctbal") + lit(5.0)).otherwise(col("c_acctbal"))
-        .as("value"),
-      lit("b1").as("batch_id"))
-    val cfg = ScdMerge.Config(keys = Seq("key1", "key2"), valueCol = "value",
-      scd2 = false)
-    ScdMerge.merge(incoming, target, cfg, clockTs, clockDate, lit("b1"))
-      .orderBy(col("key1"), col("key2"))
-  }
-
-  private val sqlUpsertType1: String =
-    """WITH target AS (
-      |  SELECT c_custkey AS key1, c_mktsegment AS key2, c_acctbal AS value,
-      |         'b0' AS batch_id
-      |  FROM customer WHERE c_custkey % 4 <= 2
-      |), incoming AS (
-      |  SELECT c_custkey AS key1, c_mktsegment AS key2,
-      |         CASE WHEN c_custkey % 4 = 2 THEN c_acctbal + 5.0
-      |              ELSE c_acctbal END AS value,
-      |         'b1' AS batch_id
-      |  FROM customer WHERE c_custkey % 4 >= 1
-      |), j AS (
-      |  SELECT t.key1 AS tk1, i.key1 AS ik1, t.key2 AS tk2, i.key2 AS ik2,
-      |         t.value AS tvalue, i.value AS ivalue,
-      |         t.batch_id AS tbatch, i.batch_id AS ibatch
-      |  FROM target t FULL OUTER JOIN incoming i
-      |    ON t.key1 = i.key1 AND t.key2 = i.key2
-      |), c AS (
-      |  SELECT *,
-      |    CASE WHEN tk1 IS NULL THEN 'insert'
-      |         WHEN ik1 IS NULL THEN 'carry'
-      |         WHEN tvalue = ivalue THEN 'no_change'
-      |         ELSE 'update' END AS change_type
-      |  FROM j
-      |)
-      |SELECT COALESCE(ik1, tk1) AS key1, COALESCE(ik2, tk2) AS key2,
-      |  CASE WHEN change_type IN ('insert','update') THEN ivalue
-      |       ELSE tvalue END AS value,
-      |  CASE WHEN change_type IN ('insert','update') THEN ibatch
-      |       ELSE tbatch END AS batch_id,
-      |  change_type
-      |FROM c
-      |ORDER BY key1, key2""".stripMargin
-
-  // ------------------------------------------------------------- q9_union
-  // SURVEY §2.8 U1/U2: union + distinct.
-  private def qUnion(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    val a = o.filter(col("o_orderstatus") === "F")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    val b = o.filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    a.unionByName(b).distinct().orderBy(col("o_orderkey"))
-  }
-
-  private val sqlUnion: String =
-    """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-      |WHERE o_orderstatus = 'F'
-      |UNION
-      |SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-      |WHERE o_orderpriority = '1-URGENT'
-      |ORDER BY o_orderkey""".stripMargin
-
-  // ----------------------------------------------------------- q10_cleanse
-  // SURVEY §2.7 F1-F9 — the full ingestion/cleansing chain: trim,
-  // split-on-"on" lastmod parse (F2/F3, ipynb:89-90), date format (F4),
-  // year-end synth (F6, ipynb:143), string→double round trip (F9).
-  private def qCleanse(s: SparkSession, dir: String): DataFrame =
-    Tables.eventsCached(s, dir)
-      .withColumn("lastmod_text",
-        concat(lit("  This page was last edited on "),
-          date_format(col("ts"), "d MMMM yyyy"), lit(", at 10:00  ")))
-      .select(
-        col("event_id"),
-        to_date(trim(element_at(
-          split(element_at(split(col("lastmod_text"), "on"), 2), ","), 1)),
-          "d MMMM yyyy").as("lastmod_date"),
-        date_format(col("ts"), "yyyy-MM-dd").as("day_str"),
-        to_date(concat(lit("31-12-"), year(col("ts")).cast("string")),
-          "dd-MM-yyyy").as("year_end"),
-        col("value").cast("string").cast("double").as("value_roundtrip"))
-      .orderBy(col("event_id"))
-
-  private val sqlCleanse: String =
-    """SELECT event_id,
-      |  CAST(strptime(trim(
-      |    str_split(str_split(
-      |      '  This page was last edited on ' || strftime(ts, '%-d %B %Y')
-      |        || ', at 10:00  ',
-      |      'on')[2], ',')[1]), '%-d %B %Y') AS DATE) AS lastmod_date,
-      |  strftime(ts, '%Y-%m-%d') AS day_str,
-      |  CAST(strptime('31-12-' || CAST(year(ts) AS VARCHAR), '%d-%m-%Y')
-      |    AS DATE) AS year_end,
-      |  CAST(CAST(value AS VARCHAR) AS DOUBLE) AS value_roundtrip
-      |FROM events
-      |ORDER BY event_id""".stripMargin
-
-  // ------------------------------------------------------- q11_topk_window
-  // §2.11 extension (free from Spark): ranking window + top-k per group.
-  private def qTopkWindow(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("c_nationkey"))
-      .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    Tables.customer(s, dir)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("c_nationkey"), col("rk"), col("c_custkey"),
-        col("c_acctbal"))
-      .orderBy(col("c_nationkey"), col("rk"))
-  }
-
-  private val sqlTopkWindow: String =
-    """SELECT c_nationkey, rk, c_custkey, c_acctbal FROM (
-      |  SELECT c_nationkey, c_custkey, c_acctbal,
-      |    ROW_NUMBER() OVER (PARTITION BY c_nationkey
-      |                       ORDER BY c_acctbal DESC, c_custkey) AS rk
-      |  FROM customer
-      |) WHERE rk <= 3
-      |ORDER BY c_nationkey, rk""".stripMargin
-
-  // --------------------------------------------------------- q12_log_stamp
-  // SURVEY §2.10 O1/O2 + §2.7 F11: process_logs-shaped summary rows with
-  // batch lineage stamp and printf-style message formatting.
-  private def qLogStamp(s: SparkSession, dir: String): DataFrame =
-    Tables.eventsCached(s, dir)
-      .groupBy(col("event_type").as("log_phase"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("log_phase"),
-        format_string("%s: %d rows processed", col("log_phase"), col("n"))
-          .as("message"),
-        clockTs.cast("timestamp_ntz").as("datetime"),
-        lit("b1").as("batch_id"))
-      .orderBy(col("log_phase"))
-
-  private val sqlLogStamp: String =
-    s"""SELECT event_type AS log_phase,
-       |  printf('%s: %d rows processed', event_type, COUNT(*)) AS message,
-       |  TIMESTAMP '$ClockTsLit' AS datetime,
-       |  'b1' AS batch_id
-       |FROM events
-       |GROUP BY event_type
-       |ORDER BY log_phase""".stripMargin
-
-  // ----------------------------------------------------- q15_enrich_pivot
-  // The declared currency-enrichment output (SQL:317-318) through the REAL
-  // pipeline stages: cleanseBanks → cleanseRates → pivot → broadcast cross
-  // join (graft.pipeline.WorldBanksPipeline). Testdata-shaped: customers as
-  // banks, nations as rate rows.
-  private def qEnrichPivot(s: SparkSession, dir: String): DataFrame = {
-    import graft.pipeline.WorldBanksPipeline
-    val rawBanks = Tables.customer(s, dir).select(
-      col("c_name").as("bank_name"),
-      col("c_acctbal").cast("string").as("market_cap_usd"),
-      lit("This page was last edited on 21 August 2024, at 10:30")
-        .as("lastmod_text"))
-    val rawRates = Tables.nation(s, dir).select(
-      col("n_name").as("country"),
-      element_at(array(lit("Pound"), lit("Euro"), lit("Rupee"), lit("Yen"),
-        lit("Franc")), (col("n_nationkey") % 5).cast("int") + 1).as("currency"),
-      (col("n_nationkey") * 7 + 3).cast("string").as("exchange_rate"))
-    WorldBanksPipeline.enrich(
-      WorldBanksPipeline.cleanseBanks(rawBanks, lit("b1")),
-      WorldBanksPipeline.cleanseRates(rawRates, "2024", lit("b1")))
-      .orderBy(col("bank_name"))
-  }
-
-  private val sqlEnrichPivot: String =
-    """WITH rates AS (
-      |  SELECT CASE CAST(n_nationkey % 5 AS INT)
-      |           WHEN 0 THEN 'Pound' WHEN 1 THEN 'Euro' WHEN 2 THEN 'Rupee'
-      |           WHEN 3 THEN 'Yen' ELSE 'Franc' END AS currency,
-      |         CAST(n_nationkey * 7 + 3 AS DOUBLE) AS exchange_rate
-      |  FROM nation
-      |), p AS (
-      |  SELECT MIN(CASE WHEN currency = 'Pound' THEN exchange_rate END) AS pound,
-      |         MIN(CASE WHEN currency = 'Euro' THEN exchange_rate END) AS euro,
-      |         MIN(CASE WHEN currency = 'Rupee' THEN exchange_rate END) AS rupee
-      |  FROM rates
-      |)
-      |SELECT c_name AS bank_name, c_acctbal AS market_cap_usd,
-      |  ROUND(c_acctbal * pound, 2) AS MC_GBP_Billion,
-      |  ROUND(c_acctbal * euro, 2) AS MC_EUR_Billion,
-      |  ROUND(c_acctbal * rupee, 2) AS MC_INR_Billion
-      |FROM customer, p
-      |ORDER BY bank_name""".stripMargin
-
-  // -------------------------------------------------- q16-q19 extension ops
-  // §2.11 families the reference lacks, provided by Spark built-ins:
-  // rollup, except, json scalar functions, distinct aggregation + top-n.
-  private def qRollup(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .rollup(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-      .orderBy(col("o_orderstatus").asc_nulls_first,
-        col("o_orderpriority").asc_nulls_first)
-
-  private val sqlRollup: String =
-    s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-       |  ${sqlSum("o_totalprice")} AS total
-       |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-       |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""
-      .stripMargin
-
-  private def qExcept(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-      .except(o.filter(col("o_orderstatus") === "O").select(col("o_custkey")))
-      .orderBy(col("o_custkey"))
-  }
-
-  private val sqlExcept: String =
-    """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |EXCEPT
-      |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-      |ORDER BY o_custkey""".stripMargin
-
-  private def qIntersect(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-      .intersect(o.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey")))
-      .orderBy(col("o_custkey"))
-  }
-
-  private val sqlIntersect: String =
-    """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |INTERSECT
-      |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-      |ORDER BY o_custkey""".stripMargin
-
-  private def qJson(s: SparkSession, dir: String): DataFrame =
-    Tables.eventsCached(s, dir)
-      .select(col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .filter(col("k") % 10 === 3)
-      .orderBy(col("event_id"))
-
-  private val sqlJson: String =
-    """SELECT event_id,
-      |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-      |FROM events
-      |WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 = 3
-      |ORDER BY event_id""".stripMargin
-
-  private def qTopN(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_orderkey"), col("l_linenumber")).as("n_lines"))
-      .orderBy(col("l_returnflag")).limit(2)
-
-  private val sqlTopN: String =
-    """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
-      |  COUNT(DISTINCT (l_orderkey, l_linenumber)) AS n_lines
-      |FROM lineitem GROUP BY l_returnflag
-      |ORDER BY l_returnflag LIMIT 2""".stripMargin
-
-  // ------------------------------------------------------------- q20_asof
-  // As-of join (operator Spark lacks — composed per AsOfJoin's scaladoc):
-  // each event picks the most recent order state on its key. Right side
-  // pre-aggregated unique per (key, time) for tie determinism.
-  private def qAsOf(s: SparkSession, dir: String): DataFrame = {
-    val l = Tables.events(s, dir).select(col("event_id"),
-      col("ts"), (col("user_id") % 20).as("k"))
-    val r = Tables.orders(s, dir)
-      .select((col("o_custkey") % 20).as("k"), col("o_orderdate"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("o_orderdate"))
-      .agg(max(col("o_totalprice")).as("v"))
-    graft.operators.AsOfJoin.asOf(l, r, Seq("k"), "ts", "o_orderdate",
-      Seq("v"))
-      .select(col("event_id"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("v").as("matched_value"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlAsOf: String =
-    """WITH l AS (
-      |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id % 20 AS k
-      |  FROM events
-      |), r AS (
-      |  SELECT o_custkey % 20 AS k, o_orderdate, MAX(o_totalprice) AS v
-      |  FROM orders GROUP BY 1, 2
-      |)
-      |SELECT l.event_id, r.o_orderdate AS matched_time, r.v AS matched_value
-      |FROM l ASOF JOIN r ON l.k = r.k AND l.ts >= r.o_orderdate
-      |ORDER BY event_id""".stripMargin
-
-  // ------------------------------------------------- q50_asof_phys
-  // The SAME as-of semantics as q20 through the custom PHYSICAL operator
-  // (plans.AsOfJoinPhys: logical node + strategy + merge-join exec) —
-  // both formulations share this data shape and DuckDB's native ASOF
-  // oracle, so the gate proves the custom operator and the composed
-  // window form agree with a third engine simultaneously.
-  private def qAsOfPhys(s: SparkSession, dir: String): DataFrame = {
-    val l = Tables.events(s, dir).select(col("event_id"),
-      col("ts"), (col("user_id") % 20).as("k"))
-    val r = Tables.orders(s, dir)
-      .select((col("o_custkey") % 20).as("k"),
-        col("o_orderdate").cast("timestamp").as("rt"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("rt"))
-      .agg(max(col("o_totalprice")).as("v"))
-    graft.plans.AsOfJoinPhys.asOf(l, r, Seq("k"), "ts", "rt", Seq("v"))
-      .select(col("event_id"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("v").as("matched_value"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlAsOfPhys: String =
-    """WITH l AS (
-      |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id % 20 AS k
-      |  FROM events
-      |), r AS (
-      |  SELECT o_custkey % 20 AS k, CAST(o_orderdate AS TIMESTAMP) AS rt,
-      |    MAX(o_totalprice) AS v
-      |  FROM orders GROUP BY 1, 2
-      |)
-      |SELECT l.event_id, r.rt AS matched_time, r.v AS matched_value
-      |FROM l ASOF JOIN r ON l.k = r.k AND l.ts >= r.rt
-      |ORDER BY event_id""".stripMargin
-
-  /** `q50_asof_phys` with `outer = true` — the LEFT variant of the custom
-    * physical operator: left rows with no qualifying right row (early
-    * events before their key's first order, and NULL-time rows) are KEPT
-    * with NULL matched columns, matching DuckDB's native ASOF LEFT JOIN,
-    * which is also the oracle. Same merge, one extra null-projection per
-    * unmatched row — row count equals the left side's by construction
-    * (spec-pinned). The right side keeps only keys < 12 so 8 of the 20
-    * key groups are GENUINELY unmatched — on q50's unfiltered fixture
-    * every event matches and the null branch would go unexercised by
-    * the gate.
-    */
-  private def qAsOfPhysOuter(s: SparkSession, dir: String): DataFrame = {
-    val l = Tables.events(s, dir).select(col("event_id"),
-      col("ts"), (col("user_id") % 20).as("k"))
-    val r = Tables.orders(s, dir)
-      .select((col("o_custkey") % 20).as("k"),
-        col("o_orderdate").cast("timestamp").as("rt"),
-        col("o_totalprice"))
-      .filter(col("k") < 12)
-      .groupBy(col("k"), col("rt"))
-      .agg(max(col("o_totalprice")).as("v"))
-    graft.plans.AsOfJoinPhys.asOf(l, r, Seq("k"), "ts", "rt", Seq("v"),
-        outer = true)
-      .select(col("event_id"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("v").as("matched_value"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlAsOfPhysOuter: String =
-    """WITH l AS (
-      |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id % 20 AS k
-      |  FROM events
-      |), r AS (
-      |  SELECT o_custkey % 20 AS k, CAST(o_orderdate AS TIMESTAMP) AS rt,
-      |    MAX(o_totalprice) AS v
-      |  FROM orders WHERE o_custkey % 20 < 12 GROUP BY 1, 2
-      |)
-      |SELECT l.event_id, r.rt AS matched_time, r.v AS matched_value
-      |FROM l ASOF LEFT JOIN r ON l.k = r.k AND l.ts >= r.rt
-      |ORDER BY event_id""".stripMargin
-
-  // ------------------------------------------------- q45_asof_tolerance
-  // Bounded backward as-of (merge_asof tolerance): right-side state times
-  // are synthesized INTO the events window (q31's shift trick) so the
-  // 7-day bound genuinely splits matches — some enriched, stale ones
-  // dropped. The oracle is DuckDB's native ASOF JOIN plus the same
-  // integer epoch-micros bound.
-  private val AsOfToleranceMicros = 7L * 86400L * 1000000L
-  private def qAsOfTolerance(s: SparkSession, dir: String): DataFrame = {
-    val base = lit("2024-01-01 00:00:00").cast("timestamp")
-    val r = Tables.orders(s, dir)
-      .select((col("o_custkey") % 20).as("k"),
-        timestamp_add("DAY", (col("o_orderkey") % 365).cast("int"), base)
-          .as("rt"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("rt"))
-      .agg(max(col("o_totalprice")).as("v"))
-    val l = Tables.events(s, dir).select(col("event_id"),
-      col("ts"), (col("user_id") % 20).as("k"))
-    graft.operators.AsOfJoin.asOfTolerance(l, r, Seq("k"), "ts", "rt",
-        Seq("v"), AsOfToleranceMicros)
-      .select(col("event_id"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("v").as("matched_value"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlAsOfTolerance: String =
-    s"""WITH l AS (
-       |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id % 20 AS k
-       |  FROM events
-       |), r AS (
-       |  SELECT o_custkey % 20 AS k,
-       |    TIMESTAMP '2024-01-01 00:00:00'
-       |      + INTERVAL (o_orderkey % 365) DAY AS rt,
-       |    MAX(o_totalprice) AS v
-       |  FROM orders GROUP BY 1, 2
-       |)
-       |SELECT l.event_id, r.rt AS matched_time, r.v AS matched_value
-       |FROM l ASOF JOIN r ON l.k = r.k AND l.ts >= r.rt
-       |WHERE epoch_us(l.ts) - epoch_us(r.rt) <= $AsOfToleranceMicros
-       |ORDER BY event_id""".stripMargin
-
-  // ------------------------------------------------ q51_asof_phys_tol
-  // The custom physical as-of operator's TOLERANCE route: q45's exact
-  // frames and oracle, executed by the streamed merge instead of the
-  // composed union+window — the bound is one long comparison on the
-  // already-buffered merge state (zero extra state or passes), and the
-  // DuckDB ASOF + epoch-bound oracle must not see the difference.
-  private def qAsOfPhysTol(s: SparkSession, dir: String): DataFrame = {
-    val base = lit("2024-01-01 00:00:00").cast("timestamp")
-    val r = Tables.orders(s, dir)
-      .select((col("o_custkey") % 20).as("k"),
-        timestamp_add("DAY", (col("o_orderkey") % 365).cast("int"), base)
-          .as("rt"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("rt"))
-      .agg(max(col("o_totalprice")).as("v"))
-    val l = Tables.events(s, dir).select(col("event_id"),
-      col("ts"), (col("user_id") % 20).as("k"))
-    graft.plans.AsOfJoinPhys.asOf(l, r, Seq("k"), "ts", "rt", Seq("v"),
-        toleranceMicros = Some(AsOfToleranceMicros))
-      .select(col("event_id"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("v").as("matched_value"))
-      .orderBy(col("event_id"))
-  }
-
-  // ------------------------------------------------ q52_asof_phys_fwd
-  // The custom physical as-of operator's FORWARD direction: q39's exact
-  // frames and oracle through the streamed merge. Forward needs NO
-  // buffered state — discarded rows are unusable for every later left
-  // row, and the value-DESC child sort makes the qualifying run's head
-  // the tiebreak winner, matched without consuming the run.
-  private def qAsOfPhysFwd(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    val l = o.filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_orderdate").as("lts"),
-        (col("o_custkey") % 20).as("k"))
-    val r = o.filter(col("o_orderkey") % 2 === 1)
-      .select((col("o_custkey") % 20).as("k"), col("o_orderdate"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("o_orderdate"))
-      .agg(max(col("o_totalprice")).as("v"))
-    graft.plans.AsOfJoinPhys.asOf(l, r, Seq("k"), "lts", "o_orderdate",
-        Seq("v"), forward = true)
-      .select(col("o_orderkey"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("v").as("matched_value"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  // --------------------------------------------- q53_asof_phys_nearest
-  // The custom physical as-of operator's NEAREST route: q44's exact
-  // frames and oracle through the streamed merge. Nearest reuses the
-  // backward route's O(1) buffered state for the ≤-side candidate and
-  // reads the >-side candidate off the right head the merge stopped on
-  // (unconsumed, like the forward route) — both directions in ONE pass
-  // with no extra state; distance ties go backward. matched_dir is a
-  // post-hoc projection (matched_time ≤ ts), not operator state.
-  private def qAsOfPhysNearest(s: SparkSession, dir: String): DataFrame = {
-    val l = Tables.events(s, dir).select(col("event_id"),
-      col("ts"), (col("user_id") % 20).as("k"))
-    val r = Tables.orders(s, dir)
-      .select((col("o_custkey") % 20).as("k"),
-        col("o_orderdate").cast("timestamp").as("rt"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("rt"))
-      .agg(max(col("o_totalprice")).as("v"))
-    graft.plans.AsOfJoinPhys.asOf(l, r, Seq("k"), "ts", "rt", Seq("v"),
-        nearest = true)
-      .select(col("event_id"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        when(col("matched_time") <= col("ts"), lit("backward"))
-          .otherwise(lit("forward")).as("matched_dir"),
-        col("v").as("matched_value"))
-      .orderBy(col("event_id"))
-  }
-
-  // ------------------------------------------------- q31_range_join
-  // Bucketized point-in-interval join (operators.RangeJoin). Ranges are
-  // synthesized deterministically from orders (shifted into the events'
-  // 2024 window); the oracle is the PLAIN BETWEEN join — any drift in the
-  // bucket quantization/refinement mechanics hash-mismatches. Aggregated
-  // per event so the result stays bounded regardless of interval fan-out.
-  private def qRangeJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = lit("2024-01-01 00:00:00").cast("timestamp")
-    val r = Tables.orders(s, dir)
-      .filter(col("o_orderkey") % 10 === 0)
-      .select((col("o_custkey") % 20).as("k"),
-        timestamp_add("DAY", (col("o_orderkey") % 30).cast("int"), base)
-          .as("r_start"),
-        timestamp_add("DAY",
-          ((col("o_orderkey") % 30) + (col("o_orderkey") % 3) + 1).cast("int"),
-          base).as("r_end"),
-        col("o_totalprice").as("rv"))
-    val l = Tables.eventsCached(s, dir)
-      .select(col("event_id"), col("ts"), (col("user_id") % 20).as("k"))
-    graft.operators.RangeJoin
-      .pointInRange(l, r, Seq("k"), "ts", "r_start", "r_end",
-        bucketMicros = 86400L * 1000000) // 1 day ≈ median interval width
-      .groupBy(col("event_id"))
-      .agg(count(lit(1)).as("n_ranges"), xsum(col("rv")).as("total_rv"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlRangeJoin: String =
-    s"""WITH r AS (
-       |  SELECT o_custkey % 20 AS k,
-       |    TIMESTAMP '2024-01-01 00:00:00'
-       |      + INTERVAL (o_orderkey % 30) DAY AS r_start,
-       |    TIMESTAMP '2024-01-01 00:00:00'
-       |      + INTERVAL ((o_orderkey % 30) + (o_orderkey % 3) + 1) DAY AS r_end,
-       |    o_totalprice AS rv
-       |  FROM orders WHERE o_orderkey % 10 = 0
-       |), l AS (
-       |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id % 20 AS k
-       |  FROM events
-       |)
-       |SELECT l.event_id, COUNT(*) AS n_ranges, ${sqlSum("rv")} AS total_rv
-       |FROM l JOIN r ON l.k = r.k AND l.ts >= r.r_start AND l.ts <= r.r_end
-       |GROUP BY l.event_id
-       |ORDER BY l.event_id""".stripMargin
-
-  // ------------------------------------------------- q32_range_frame
-  // Time-RANGE window frame (vs q24's fixed ROWS frames): per event, the
-  // running 30-minute trailing aggregate for the same user. Ordered by
-  // integer epoch-micros so the frame bound is exact on both engines; the
-  // windowed sum goes through the decimal detour because a double running
-  // sum would depend on the engines' frame-aggregation association order.
-  private def qRangeFrame(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val HalfHourUs = 1800000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"))
-      .rangeBetween(-HalfHourUs, Window.currentRow)
-    Tables.eventsCached(s, dir)
-      .select(col("event_id"), col("user_id"), col("value"),
-        unix_micros(col("ts")).as("tus"))
-      .withColumn("n_30m", count(lit(1)).over(w))
-      .withColumn("sum_30m",
-        sum(col("value").cast(graft.functions.Exact.Dec)).over(w)
-          .cast("decimal(38,6)").cast("double"))
-      .select(col("event_id"), col("n_30m"), col("sum_30m"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlRangeFrame: String =
-    """SELECT event_id,
-      |  COUNT(*) OVER w AS n_30m,
-      |  CAST(ROUND(SUM(CAST(value AS DECIMAL(28,12))) OVER w, 6) AS DOUBLE)
-      |    AS sum_30m
-      |FROM (SELECT event_id, user_id, value,
-      |        epoch_us(CAST(ts AS TIMESTAMP)) AS tus FROM events)
-      |WINDOW w AS (PARTITION BY user_id ORDER BY tus
-      |             RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)
-      |ORDER BY event_id""".stripMargin
-
-  // ------------------------------------------------- q33_quarantine
-  // Permissive-mode quarantine (SURVEY §2.9 C2) under the oracle gate:
-  // deterministically corrupted raw strings flow through the REAL
-  // cleanse + splitQuarantine path; output is the good rows plus the
-  // reject frame with its null_fields diagnosis. The reference swallows
-  // these errors into NOTICEs (and in the rates-update case, silently
-  // drops the row — the `update_at` typo bug); here every bad row is
-  // accounted for.
-  private def qQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import graft.pipeline.WorldBanksPipeline
-    val goodLastmod = "This page was last edited on 21 August 2024, at 10:30"
-    val raw = Tables.customer(s, dir).select(
-      col("c_name").as("bank_name"),
-      when(col("c_custkey") % 7 === 0, lit("N/A"))
-        .otherwise(col("c_acctbal").cast("string")).as("market_cap_usd"),
-      when(col("c_custkey") % 11 === 0, lit("garbage"))
-        .otherwise(lit(goodLastmod)).as("lastmod_text"))
-    val cleansed = WorldBanksPipeline.cleanseBanks(raw, lit("b1"),
-      keepRaw = true)
-    val (good, quarantined) = WorldBanksPipeline.splitQuarantine(
-      cleansed, Seq("market_cap_usd", "last_modified_date"), "bank_name")
-    good.select(col("bank_name"), col("market_cap_usd"),
-        col("last_modified_date"), lit("ok").as("status"),
-        lit("").as("null_fields"))
-      .unionByName(quarantined.select(col("bank_name"),
-        lit(null).cast("double").as("market_cap_usd"),
-        lit(null).cast("date").as("last_modified_date"),
-        lit("quarantined").as("status"), col("null_fields")))
-      .orderBy(col("bank_name"))
-  }
-
-  private val sqlQuarantine: String =
-    """WITH raw AS (
-      |  SELECT c_name AS bank_name,
-      |    CASE WHEN c_custkey % 7 = 0 THEN 'N/A'
-      |         ELSE CAST(c_acctbal AS VARCHAR) END AS market_cap_usd,
-      |    CASE WHEN c_custkey % 11 = 0 THEN 'garbage'
-      |         ELSE 'This page was last edited on 21 August 2024, at 10:30'
-      |    END AS lastmod_text
-      |  FROM customer
-      |), cleansed AS (
-      |  SELECT trim(bank_name) AS bank_name,
-      |    TRY_CAST(trim(market_cap_usd) AS DOUBLE) AS market_cap_usd,
-      |    CAST(try_strptime(trim(str_split(str_split(lastmod_text, 'on')[2],
-      |      ',')[1]), '%-d %B %Y') AS DATE) AS last_modified_date
-      |  FROM raw
-      |)
-      |SELECT bank_name, market_cap_usd, last_modified_date,
-      |  'ok' AS status, '' AS null_fields
-      |FROM cleansed
-      |WHERE market_cap_usd IS NOT NULL AND last_modified_date IS NOT NULL
-      |UNION ALL
-      |SELECT bank_name, NULL, NULL, 'quarantined',
-      |  concat_ws(',',
-      |    CASE WHEN market_cap_usd IS NULL THEN 'market_cap_usd' END,
-      |    CASE WHEN last_modified_date IS NULL THEN 'last_modified_date' END)
-      |FROM cleansed
-      |WHERE market_cap_usd IS NULL OR last_modified_date IS NULL
-      |ORDER BY bank_name""".stripMargin
-
-  // ------------------------------------------------- q34_profile
-  // Column profiling (operators.Profile): nulls / distincts / min / max per
-  // column in one shared-scan pass — the pre/post-stage data-quality
-  // report. Exercised over a projection with injected nulls so n_nulls is
-  // non-trivial.
-  private def qProfile(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profile.profile(
-      Tables.lineitem(s, dir).select(
-        col("l_returnflag"),
-        when(col("l_quantity") > 45, lit(null).cast("double"))
-          .otherwise(col("l_quantity")).as("l_quantity"),
-        col("l_shipdate")),
-      Seq("l_returnflag", "l_quantity", "l_shipdate"))
-
-  private val sqlProfile: String =
-    graft.operators.Profile.sqlProfile(
-      """(SELECT l_returnflag,
-        |  CASE WHEN l_quantity > 45 THEN NULL ELSE l_quantity END AS l_quantity,
-        |  l_shipdate FROM lineitem)""".stripMargin,
-      Seq("l_returnflag", "l_quantity", "l_shipdate"))
-
-  // ------------------------------------------------- q39_asof_forward
-  // Forward as-of: each even-slice order picks the NEXT odd-slice order
-  // state on its key — same union+window plan as q20 with time reversed.
-  // Oracle: correlated MIN over the future side + join back on the matched
-  // instant (DuckDB ASOF is backward-only).
-  private def qAsOfForward(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    val l = o.filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_orderdate").as("lts"),
-        (col("o_custkey") % 20).as("k"))
-    val r = o.filter(col("o_orderkey") % 2 === 1)
-      .select((col("o_custkey") % 20).as("k"), col("o_orderdate"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("o_orderdate"))
-      .agg(max(col("o_totalprice")).as("v"))
-    graft.operators.AsOfJoin.asOfForward(l, r, Seq("k"), "lts",
-      "o_orderdate", Seq("v"))
-      .select(col("o_orderkey"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("v").as("matched_value"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  private val sqlAsOfForward: String =
-    """WITH l AS (
-      |  SELECT o_orderkey, o_orderdate AS lts, o_custkey % 20 AS k
-      |  FROM orders WHERE o_orderkey % 2 = 0
-      |), r AS (
-      |  SELECT o_custkey % 20 AS k, o_orderdate, MAX(o_totalprice) AS v
-      |  FROM orders WHERE o_orderkey % 2 = 1 GROUP BY 1, 2
-      |), m AS (
-      |  SELECT l.o_orderkey, l.k,
-      |    (SELECT MIN(r.o_orderdate) FROM r
-      |     WHERE r.k = l.k AND r.o_orderdate >= l.lts) AS matched_time
-      |  FROM l
-      |)
-      |SELECT m.o_orderkey, m.matched_time, r.v AS matched_value
-      |FROM m JOIN r ON r.k = m.k AND r.o_orderdate = m.matched_time
-      |ORDER BY m.o_orderkey""".stripMargin
-
-  // ------------------------------------------------- q44_asof_nearest
-  // Nearest as-of: each event picks the closest order state in EITHER
-  // direction (distance ties → backward). One union + one keyed sort;
-  // the backward-last and forward-first frames share the single hash
-  // exchange. Oracle: both correlated extremes + epoch-microsecond pick
-  // (DuckDB ASOF is backward-only).
-  private def qAsOfNearest(s: SparkSession, dir: String): DataFrame = {
-    val l = Tables.events(s, dir).select(col("event_id"),
-      col("ts"), (col("user_id") % 20).as("k"))
-    val r = Tables.orders(s, dir)
-      .select((col("o_custkey") % 20).as("k"), col("o_orderdate"),
-        col("o_totalprice"))
-      .groupBy(col("k"), col("o_orderdate"))
-      .agg(max(col("o_totalprice")).as("v"))
-    graft.operators.AsOfJoin.asOfNearest(l, r, Seq("k"), "ts",
-      "o_orderdate", Seq("v"))
-      .select(col("event_id"),
-        col("matched_time").cast("timestamp_ntz").as("matched_time"),
-        col("matched_dir"), col("v").as("matched_value"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlAsOfNearest: String =
-    """WITH l AS (
-      |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id % 20 AS k
-      |  FROM events
-      |), r AS (
-      |  SELECT o_custkey % 20 AS k, o_orderdate, MAX(o_totalprice) AS v
-      |  FROM orders GROUP BY 1, 2
-      |), m AS (
-      |  SELECT l.event_id, l.k, l.ts,
-      |    (SELECT MAX(r.o_orderdate) FROM r
-      |     WHERE r.k = l.k AND r.o_orderdate <= l.ts) AS bt,
-      |    (SELECT MIN(r.o_orderdate) FROM r
-      |     WHERE r.k = l.k AND r.o_orderdate >= l.ts) AS ft
-      |  FROM l
-      |), pick AS (
-      |  SELECT event_id, k, ts,
-      |    CASE WHEN bt IS NULL THEN ft
-      |         WHEN ft IS NULL THEN bt
-      |         WHEN epoch_us(ft) - epoch_us(ts)
-      |            < epoch_us(ts) - epoch_us(bt) THEN ft
-      |         ELSE bt END AS matched_time
-      |  FROM m WHERE bt IS NOT NULL OR ft IS NOT NULL
-      |)
-      |SELECT p.event_id, p.matched_time,
-      |  CASE WHEN p.matched_time <= p.ts THEN 'backward'
-      |       ELSE 'forward' END AS matched_dir,
-      |  r.v AS matched_value
-      |FROM pick p JOIN r ON r.k = p.k AND r.o_orderdate = p.matched_time
-      |ORDER BY p.event_id""".stripMargin
-
-  // --------------------------------------------------- sketch_distinct
-  // Distinct-count sketch (HLL++) + approximate-percentile sketch,
-  // oracled by CONTRACT instead of by value: HLL register layouts and
-  // KLL compaction schedules differ across engines, so the raw estimates
-  // can never hash-match — what IS cross-engine checkable is the error
-  // BOUND each sketch promises. The query emits the exact answers (which
-  // DuckDB reproduces) plus one boolean per sketch asserting the
-  // estimate honors its bound (rsd 0.01 HLL given 5× headroom; the
-  // approx p50 must land within the exact p45..p55 value band). The
-  // DuckDB side asserts TRUE — so a sketch drifting out of contract
-  // fails the hash gate. The value-exact twin is sketch_kmv (same
-  // distinct-count task, cross-engine-identical KMV estimator); the
-  // exact companion is q19_distinct_topn.
-  private def qSketch(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        countDistinct(col("l_partkey")).as("exact_parts"),
-        approx_count_distinct(col("l_partkey"), 0.01).as("hll"),
-        percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000))
-          .as("ap50"),
-        expr("percentile(l_extendedprice, 0.45)").as("p45"),
-        expr("percentile(l_extendedprice, 0.55)").as("p55"))
-      .select(col("l_returnflag"), col("n"), col("exact_parts"),
-        (abs(col("hll") - col("exact_parts")).cast("double") <=
-          col("exact_parts").cast("double") * 0.05)
-          .as("hll_within_bound"),
-        (col("ap50") >= col("p45") && col("ap50") <= col("p55"))
-          .as("p50_within_bound"))
-      .orderBy(col("l_returnflag"))
-
-  private val sqlSketch: String =
-    """SELECT l_returnflag, COUNT(*) AS n,
-      |  COUNT(DISTINCT l_partkey) AS exact_parts,
-      |  TRUE AS hll_within_bound,
-      |  TRUE AS p50_within_bound
-      |FROM lineitem GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin
-
-  // --------------------------------------------------------- q21_array_agg
-  // Array aggregation + array scalar functions: collect_set → sort → join
-  // (stringified output keeps the oracle compare list-free).
-  private def qArrayAgg(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        array_join(sort_array(collect_set(col("l_linestatus"))), ",")
-          .as("statuses"),
-        size(collect_set(col("l_linestatus"))).as("n_statuses"))
-      .orderBy(col("l_returnflag"))
-
-  private val sqlArrayAgg: String =
-    """SELECT l_returnflag,
-      |  array_to_string(list_sort(list(DISTINCT l_linestatus)), ',') AS statuses,
-      |  len(list(DISTINCT l_linestatus)) AS n_statuses
-      |FROM lineitem GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin
-
-  // ---------------------------------------------------- q22_string_funcs
-  // String-function battery over documents (upper/reverse/pad/translate/
-  // edit distance/regex extract/locate) — all codegen'd builtins.
-  private def qStringFuncs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("doc_id"),
-        upper(col("source")).as("src_upper"),
-        reverse(col("source")).as("src_rev"),
-        lpad(col("doc_id").cast("string"), 8, "0").as("id_padded"),
-        translate(col("source"), "src", "xyz").as("src_translated"),
-        levenshtein(col("source"), lit("src1")).as("src_dist"),
-        instr(col("text"), "data").as("data_pos"),
-        regexp_extract(col("source"), "[0-9]+", 0).as("src_num"),
-        substring(col("text"), 1, 12).as("text_head"))
-      .orderBy(col("doc_id"))
-
-  private val sqlStringFuncs: String =
-    """SELECT doc_id,
-      |  upper(source) AS src_upper,
-      |  reverse(source) AS src_rev,
-      |  lpad(CAST(doc_id AS VARCHAR), 8, '0') AS id_padded,
-      |  translate(source, 'src', 'xyz') AS src_translated,
-      |  levenshtein(source, 'src1') AS src_dist,
-      |  strpos(text, 'data') AS data_pos,
-      |  regexp_extract(source, '[0-9]+') AS src_num,
-      |  substr(text, 1, 12) AS text_head
-      |FROM documents ORDER BY doc_id""".stripMargin
-
-  // ------------------------------------------------------ q23_percentile
-  // Exact interpolated percentiles (Spark `percentile` ↔ DuckDB
-  // quantile_cont), rounded in the projection.
-  private def qPercentile(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
-        round(expr("percentile(l_extendedprice, 0.9)"), 4).as("p90"),
-        round(expr("percentile(l_quantity, 0.25)"), 4).as("qty_p25"))
-      .orderBy(col("l_returnflag"))
-
-  private val sqlPercentile: String =
-    """SELECT l_returnflag,
-      |  ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-      |  ROUND(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
-      |  ROUND(quantile_cont(l_quantity, 0.25), 4) AS qty_p25
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-
-  // -------------------------------------------------- q24_sliding_window
-  // Sliding (hopping) windows: 1-hour windows every 30 minutes — each event
-  // lands in two windows. Oracle mirrors Spark's epoch-aligned window
-  // assignment with integer epoch-micros arithmetic.
-  private def qSlidingWindow(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"), xsum(col("value")).as("total_value"))
-      .select(col("w.start").cast("timestamp_ntz").as("window_start"),
-        col("event_type"), col("n_events"), col("total_value"))
-      .orderBy(col("window_start"), col("event_type"))
-
-  private val sqlSlidingWindow: String =
-    s"""SELECT make_timestamp(
-       |    (epoch_us(CAST(ts AS TIMESTAMP)) // 1800000000 - j) * 1800000000)
-       |    AS window_start,
-       |  event_type, COUNT(*) AS n_events,
-       |  ${sqlSum("value")} AS total_value
-       |FROM events, (SELECT unnest(range(0, 2)) AS j)
-       |GROUP BY 1, 2
-       |ORDER BY window_start, event_type""".stripMargin
-
-  // -------------------------------------------------------------- q25_cube
-  private def qCube(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-      .orderBy(col("o_orderstatus").asc_nulls_first,
-        col("o_orderpriority").asc_nulls_first)
-
-  private val sqlCube: String =
-    s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-       |  ${sqlSum("o_totalprice")} AS total
-       |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-       |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""
-      .stripMargin
-
-  // ------------------------------------------------------ q26_salted_join
-  // Skew-salted join under the oracle gate: salting is a pure physical
-  // rewrite, so the oracle is the PLAIN join — any semantic drift in the
-  // salt/explode mechanics hash-mismatches immediately.
-  private def qSaltedJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-    // 4 buckets: enough to demonstrate (and spec-test) the salt mechanics;
-    // bucket count scales with observed skew, not a constant — at 100 TB
-    // you size it to the hot key's row share vs a task's capacity.
-    graft.operators.Skew
-      .saltedJoin(li, o, "l_orderkey", col("l_linenumber"), saltBuckets = 4)
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), xsum(col("l_extendedprice")).as("total"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  private val sqlSaltedJoin: String =
-    s"""SELECT o_orderpriority, COUNT(*) AS n,
-       |  ${sqlSum("l_extendedprice")} AS total
-       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       |GROUP BY o_orderpriority
-       |ORDER BY o_orderpriority""".stripMargin
-
-  // --------------------------------------------------------- q27_unpivot
-  // Reshape: wide aggregate → long (measure, value) rows via stack/unpivot;
-  // oracle mirrors with UNION ALL.
-  private def qUnpivot(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(xsum(col("l_quantity"), 4).as("sum_qty"),
-        xsum(col("l_extendedprice")).as("sum_price"),
-        xsum(col("l_discount"), 6).as("sum_disc"))
-      .unpivot(Array(col("l_returnflag")),
-        Array(col("sum_qty"), col("sum_price"), col("sum_disc")),
-        "measure", "value")
-      .orderBy(col("l_returnflag"), col("measure"))
-
-  private val sqlUnpivot: String =
-    s"""WITH agg AS (
-       |  SELECT l_returnflag,
-       |    ${sqlSum("l_quantity", 4)} AS sum_qty,
-       |    ${sqlSum("l_extendedprice")} AS sum_price,
-       |    ${sqlSum("l_discount", 6)} AS sum_disc
-       |  FROM lineitem GROUP BY l_returnflag
-       |)
-       |SELECT l_returnflag, 'sum_qty' AS measure, sum_qty AS value FROM agg
-       |UNION ALL
-       |SELECT l_returnflag, 'sum_price', sum_price FROM agg
-       |UNION ALL
-       |SELECT l_returnflag, 'sum_disc', sum_disc FROM agg
-       |ORDER BY l_returnflag, measure""".stripMargin
-
-  // ------------------------------------------------------- sketch_kmv
-  // KMV distinct sketch (operators.Sketch) — the VALUE-exact companion
-  // to sketch_distinct's contract-oracled HLL: same shared md5 hash on
-  // both engines, so the ESTIMATE itself hash-matches.
-  private def qKmv(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketch.kmvDistinct(
-      Tables.lineitem(s, dir), "l_returnflag", "l_partkey")
-
-  private val sqlKmv: String =
-    graft.operators.Sketch.sqlKmvDistinct("lineitem", "l_returnflag", "l_partkey")
-
-  // ------------------------------------------------- q30_grouping_sets
-  // Explicit GROUPING SETS (beyond rollup/cube): per-status, per-priority,
-  // and grand-total groups in one pass — Spark 4 exposes this directly on
-  // Dataset, DuckDB mirrors with GROUP BY GROUPING SETS.
-  private def qGroupingSets(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .groupingSets(
-        Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq()),
-        col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), xsum(col("o_totalprice")).as("total"))
-      .orderBy(col("o_orderstatus").asc_nulls_first,
-        col("o_orderpriority").asc_nulls_first)
-
-  private val sqlGroupingSets: String =
-    s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-       |  ${sqlSum("o_totalprice")} AS total
-       |FROM orders
-       |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-       |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""
-      .stripMargin
-
-  // ------------------------------------------------- corpus_sample
-  // Deterministic stratified sampling — every training-data pipeline ends
-  // with "take N per stratum". Rank within each language by a hash of the
-  // doc id (a reproducible uniform shuffle — rand() would differ across
-  // task retries) and keep the top N. Runs as WindowGroupLimit: bounded
-  // per-partition state, no full sort.
-  private val SamplePerStratum = 20
-
-  private def qCorpusSample(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val rnd = TextOps.tokenHash(concat(col("doc_id").cast("string"),
-      lit(":sample-salt")))
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("rnd"), col("doc_id"))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), rnd.as("rnd"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= SamplePerStratum)
-      .select(col("lang"), col("rk"), col("doc_id"))
-      .orderBy(col("lang"), col("rk"))
-  }
-
-  private val sqlCorpusSample: String =
-    s"""SELECT lang, rk, doc_id FROM (
-       |  SELECT lang, doc_id,
-       |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY
-       |      ${TextOps.sqlTokenHash("CAST(doc_id AS VARCHAR) || ':sample-salt'")},
-       |      doc_id) AS rk
-       |  FROM documents
-       |) WHERE rk <= $SamplePerStratum
-       |ORDER BY lang, rk""".stripMargin
-
-  // ------------------------------------------------- text_bigrams
-  // Corpus-level n-gram statistics: top word bigrams with counts — the
-  // exact companion to the Misra-Gries sketch (sketch_heavy_hitters covers
-  // the bounded-state path; this is the full groupBy truth). Bigrams form
-  // map-side via zip_with over the shifted words array; one hash agg.
-  private val BigramTopK = 20
-
-  private def qBigrams(s: SparkSession, dir: String): DataFrame = {
-    val w = TextOps.words(col("text"))
-    val bigrams = slice(
-      zip_with(w, slice(w, lit(2), size(w)), (a, b) => concat(a, lit(" "), b)),
-      lit(1), greatest(size(w) - 1, lit(0)))
-    // explode_outer + null-drop on the OUTPUT attribute, not plain explode:
-    // explode makes Catalyst infer `size(bigrams) > 0` below the Generate
-    // and pushdown re-inlines the whole zip_with chain (non-codegen HOF, no
-    // subexpression elimination) into that Filter — re-evaluating it per
-    // row. The isNotNull filter on the generated column is equivalent
-    // (empty-array rows yield NULL) and costs one attribute check.
-    Tables.documents(s, dir)
-      .select(explode_outer(bigrams).as("bigram"))
-      .filter(col("bigram").isNotNull)
-      .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("bigram")).limit(BigramTopK)
-  }
-
-  private val sqlBigrams: String = {
-    val words = TextOps.sqlWords("text")
-    s"""SELECT bigram, COUNT(*) AS n FROM (
-       |  SELECT unnest(list_transform(
-       |    range(1, greatest(len(w) - 1, 0) + 1),
-       |    i -> w[i] || ' ' || w[i+1])) AS bigram
-       |  FROM (SELECT $words AS w FROM documents)
-       |)
-       |GROUP BY bigram
-       |ORDER BY n DESC, bigram LIMIT $BigramTopK""".stripMargin
-  }
-
-  // ------------------------------------------------- q35_ntile
-  // NTILE quantile bucketing: balance-decile profile per market segment —
-  // the feature-binning window op (deterministic under the unique
-  // (acctbal, custkey) order).
-  private def qNtile(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("c_mktsegment"))
-      .orderBy(col("c_acctbal"), col("c_custkey"))
-    Tables.customer(s, dir)
-      .withColumn("decile", ntile(10).over(w))
-      .groupBy(col("c_mktsegment"), col("decile"))
-      .agg(count(lit(1)).as("n"),
-        min(col("c_acctbal")).as("min_bal"),
-        max(col("c_acctbal")).as("max_bal"))
-      .orderBy(col("c_mktsegment"), col("decile"))
-  }
-
-  private val sqlNtile: String =
-    """SELECT c_mktsegment, decile, COUNT(*) AS n,
-      |  MIN(c_acctbal) AS min_bal, MAX(c_acctbal) AS max_bal
-      |FROM (
-      |  SELECT c_mktsegment, c_acctbal,
-      |    NTILE(10) OVER (PARTITION BY c_mktsegment
-      |                    ORDER BY c_acctbal, c_custkey) AS decile
-      |  FROM customer
-      |)
-      |GROUP BY c_mktsegment, decile
-      |ORDER BY c_mktsegment, decile""".stripMargin
-
-  // ------------------------------------------------- q36_funnel
-  // Conversion funnel: users who viewed, then clicked AFTER their first
-  // view, then purchased AFTER that first click (strictly ordered
-  // chaining, not mere co-occurrence). ONE scan, ONE user_id exchange:
-  // each stage's first-qualifying time is a windowed conditional min
-  // over the SAME user partition, referencing the previous stage's
-  // result — the join-per-stage formulation scanned the 100 TB event
-  // stream once PER STAGE (6 scans, 7 exchanges in the audit) for the
-  // identical answer. The final stage stack runs on 3 scalar counts.
-  private def qFunnel(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-    val staged = Tables.eventsCached(s, dir)
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .withColumn("v_ts",
-        min(when(col("event_type") === "view", col("ts"))).over(w))
-      .withColumn("c_ts",
-        min(when(col("event_type") === "click" && col("ts") > col("v_ts"),
-          col("ts"))).over(w))
-      .withColumn("p_ts",
-        min(when(col("event_type") === "purchase" && col("ts") > col("c_ts"),
-          col("ts"))).over(w))
-    val perUser = staged.groupBy(col("user_id"))
-      .agg(min(col("v_ts")).as("v_ts"), min(col("c_ts")).as("c_ts"),
-        min(col("p_ts")).as("p_ts"))
-    perUser
-      .agg(count(col("v_ts")).as("v"), count(col("c_ts")).as("c"),
-        count(col("p_ts")).as("p"))
-      .select(explode(array(
-        struct(lit("1_view").as("stage"), col("v").as("n_users")),
-        struct(lit("2_click_after_view").as("stage"), col("c").as("n_users")),
-        struct(lit("3_purchase_after_click").as("stage"),
-          col("p").as("n_users")))).as("s"))
-      .select(col("s.stage"), col("s.n_users"))
-      .orderBy(col("stage"))
-  }
-
-  private val sqlFunnel: String =
-    """WITH v AS (
-      |  SELECT user_id, MIN(CAST(ts AS TIMESTAMP)) AS v_ts FROM events
-      |  WHERE event_type = 'view' GROUP BY 1
-      |), c AS (
-      |  SELECT e.user_id, MIN(CAST(e.ts AS TIMESTAMP)) AS c_ts
-      |  FROM events e JOIN v ON e.user_id = v.user_id
-      |  WHERE e.event_type = 'click' AND CAST(e.ts AS TIMESTAMP) > v.v_ts
-      |  GROUP BY 1
-      |), p AS (
-      |  SELECT e.user_id, MIN(CAST(e.ts AS TIMESTAMP)) AS p_ts
-      |  FROM events e JOIN c ON e.user_id = c.user_id
-      |  WHERE e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) > c.c_ts
-      |  GROUP BY 1
-      |)
-      |SELECT stage, n_users FROM (
-      |  SELECT '1_view' AS stage, COUNT(*) AS n_users FROM v
-      |  UNION ALL
-      |  SELECT '2_click_after_view', COUNT(*) FROM c
-      |  UNION ALL
-      |  SELECT '3_purchase_after_click', COUNT(*) FROM p
-      |)
-      |ORDER BY stage""".stripMargin
-
-  // ------------------------------------------------- q37_correlated
-  // Correlated scalar subquery through the SQL surface: Catalyst
-  // decorrelates the per-row COUNT into a left outer aggregate join (no
-  // per-row re-execution — the plan is the same set-based join the
-  // DataFrame API would write). DuckDB evaluates the identical semantics.
-  private def qCorrelated(s: SparkSession, dir: String): DataFrame = {
-    Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-    Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-    s.sql("""
-      SELECT c_custkey, c_acctbal,
-        (SELECT COUNT(*) FROM orders_v o WHERE o.o_custkey = c.c_custkey
-           AND o.o_orderstatus = 'F') AS n_final_orders
-      FROM customer_v c
-      WHERE c_custkey <= 500
-      ORDER BY c_custkey""")
-  }
-
-  private val sqlCorrelated: String =
-    """SELECT c_custkey, c_acctbal,
-      |  (SELECT COUNT(*) FROM orders o WHERE o.o_custkey = c.c_custkey
-      |     AND o.o_orderstatus = 'F') AS n_final_orders
-      |FROM customer c
-      |WHERE c_custkey <= 500
-      |ORDER BY c_custkey""".stripMargin
-
-  // ------------------------------------------------- q38_resample
-  // Gap-filled resampling: a dense 1-hour grid per event type over the
-  // observed span, zero-filling silent hours — the time-series
-  // normalization step before any windowed model sees the data. Grid =
-  // sequence + explode (map-side); one left join against the hourly
-  // aggregate.
-  private def qResample(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.eventsCached(s, dir)
-    val hourly = e
-      .groupBy(col("event_type"),
-        date_trunc("hour", col("ts")).as("hour"))
-      .agg(count(lit(1)).as("n"))
-    // span derives from HOURLY (min/max of truncated hours = truncated
-    // min/max ts). Physically Catalyst COLLAPSES this to a direct
-    // min/max over a second column-pruned scan — RemoveRedundantAggregates
-    // sees through the intermediate grouping, and the differing pushed
-    // filters then block exchange reuse. That is the right call without a
-    // cache (a 3-column min/max scan beats materializing the hourly
-    // shuffle); a deployment replaying many grids over one input would
-    // persist `hourly` instead.
-    val span = hourly.groupBy(col("event_type"))
-      .agg(min(col("hour")).as("h0"), max(col("hour")).as("h1"))
-    val grid = span.select(col("event_type"),
-      explode(sequence(col("h0"), col("h1"),
-        expr("INTERVAL 1 HOUR"))).as("hour"))
-    grid.join(hourly, Seq("event_type", "hour"), "left")
-      .select(col("event_type"), col("hour").cast("timestamp_ntz").as("hour"),
-        coalesce(col("n"), lit(0L)).as("n_events"))
-      .orderBy(col("event_type"), col("hour"))
-  }
-
-  private val sqlResample: String =
-    """WITH e AS (
-      |  SELECT event_type, CAST(ts AS TIMESTAMP) AS ts FROM events
-      |), hourly AS (
-      |  SELECT event_type, date_trunc('hour', ts) AS hour, COUNT(*) AS n
-      |  FROM e GROUP BY 1, 2
-      |), span AS (
-      |  SELECT event_type, date_trunc('hour', MIN(ts)) AS h0,
-      |         date_trunc('hour', MAX(ts)) AS h1
-      |  FROM e GROUP BY 1
-      |), grid AS (
-      |  SELECT event_type, unnest(generate_series(h0, h1, INTERVAL 1 HOUR))
-      |    AS hour
-      |  FROM span
-      |)
-      |SELECT g.event_type, g.hour, COALESCE(h.n, 0) AS n_events
-      |FROM grid g LEFT JOIN hourly h
-      |  ON g.event_type = h.event_type AND g.hour = h.hour
-      |ORDER BY g.event_type, g.hour""".stripMargin
-
-  // ------------------------------------------------- q40_gap_fill
-  /** Time-series gap fill with LINEAR INTERPOLATION — q38's count-resample
-    * fills gaps with zero; a value series needs the interpolated estimate
-    * between the surrounding observations (the standard `interpolate`
-    * of time-series stores). Per user: hourly exact-mean series on a dense
-    * hourly grid; missing hours get
-    * `prev + (next - prev) * elapsed/gap_width`.
-    *
-    * Plan shape: grid explode is per-user (no global sequence); the four
-    * carry-forward/backward values come from TWO frame-complement windows
-    * over ONE (user_id, hour) sort — Spark computes all four in a single
-    * Window exchange+sort pair (✦ the sessionize single-exchange
-    * property). Interpolation itself is three IEEE ops, identically
-    * parenthesized in the oracle — bit-identical without any rounding.
-    * Endpoints never interpolate: the grid spans the user's own min/max
-    * event hours, so every gap has observations on both sides.
-    */
-  private val GapFillUsers = 50
-
-  private def qGapFill(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, dir).filter(col("user_id") < GapFillUsers)
-    val hourly = e
-      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hour"))
-      .agg(xavg(col("value")).as("v"))
-    // span from the hourly frame (date_trunc is monotone, so min/max of
-    // hours = truncated min/max ts). NB the optimizer collapses this to a
-    // direct min/max over a second pruned scan rather than reusing the
-    // hourly exchange — cheaper without a cache; persist `hourly` when
-    // the input is remote and re-read cost dominates.
-    val span = hourly.groupBy(col("user_id"))
-      .agg(min(col("hour")).as("h0"), max(col("hour")).as("h1"))
-    val grid = span.select(col("user_id"),
-      explode(sequence(col("h0"), col("h1"),
-        expr("INTERVAL 1 HOUR"))).as("hour"))
-    val wPrev = Window.partitionBy(col("user_id")).orderBy(col("hour"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy(col("user_id")).orderBy(col("hour"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val dh = expr("CAST(timestampdiff(HOUR, ph, hour) AS DOUBLE)")
-    val dt = expr("CAST(timestampdiff(HOUR, ph, nh) AS DOUBLE)")
-    grid.join(hourly, Seq("user_id", "hour"), "left")
-      .withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
-      .withColumn("ph",
-        last(when(col("v").isNotNull, col("hour")), ignoreNulls = true)
-          .over(wPrev))
-      .withColumn("nv", first(col("v"), ignoreNulls = true).over(wNext))
-      .withColumn("nh",
-        first(when(col("v").isNotNull, col("hour")), ignoreNulls = true)
-          .over(wNext))
-      .select(col("user_id"), col("hour").cast("timestamp_ntz").as("hour"),
-        when(col("v").isNotNull, col("v"))
-          .otherwise(col("pv") + (col("nv") - col("pv")) * (dh / dt))
-          .as("value_filled"),
-        col("v").isNull.as("interpolated"))
-      .orderBy(col("user_id"), col("hour"))
-  }
-
-  private val sqlGapFill: String = {
-    val pw = "PARTITION BY user_id ORDER BY hour " +
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-    val nw = "PARTITION BY user_id ORDER BY hour " +
-      "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
-    s"""WITH e AS (
-       |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events
-       |  WHERE user_id < $GapFillUsers
-       |), hourly AS (
-       |  SELECT user_id, date_trunc('hour', ts) AS hour,
-       |    ${sqlAvg("value")} AS v
-       |  FROM e GROUP BY 1, 2
-       |), span AS (
-       |  SELECT user_id, MIN(hour) AS h0, MAX(hour) AS h1
-       |  FROM hourly GROUP BY 1
-       |), grid AS (
-       |  SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR))
-       |    AS hour
-       |  FROM span
-       |), j AS (
-       |  SELECT g.user_id, g.hour, h.v
-       |  FROM grid g LEFT JOIN hourly h
-       |    ON g.user_id = h.user_id AND g.hour = h.hour
-       |), f AS (
-       |  SELECT *,
-       |    last_value(v IGNORE NULLS) OVER ($pw) AS pv,
-       |    last_value(CASE WHEN v IS NOT NULL THEN hour END IGNORE NULLS)
-       |      OVER ($pw) AS ph,
-       |    first_value(v IGNORE NULLS) OVER ($nw) AS nv,
-       |    first_value(CASE WHEN v IS NOT NULL THEN hour END IGNORE NULLS)
-       |      OVER ($nw) AS nh
-       |  FROM j
-       |)
-       |SELECT user_id, hour,
-       |  CASE WHEN v IS NOT NULL THEN v
-       |       ELSE pv + (nv - pv)
-       |         * (CAST(date_diff('hour', ph, hour) AS DOUBLE)
-       |          / CAST(date_diff('hour', ph, nh) AS DOUBLE)) END
-       |    AS value_filled,
-       |  v IS NULL AS interpolated
-       |FROM f ORDER BY user_id, hour""".stripMargin
-  }
-
-  // ------------------------------------------------- q42_ohlc
-  // OHLC bars per (event_type, hour): open/close are thin-argmax picks —
-  // min/max over struct(ts, event_id, value), the suite's
-  // argmax-not-window convention (one hash agg, no per-group sort; the
-  // event_id tiebreak makes duplicate timestamps deterministic) — high/
-  // low/count ride the SAME aggregate. One scan, one exchange.
-  private def qOhlc(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-    e.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
-      .agg(
-        min(struct(col("ts"), col("event_id"), col("value"))).as("o"),
-        max(struct(col("ts"), col("event_id"), col("value"))).as("c"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        count(lit(1)).as("n_events"))
-      .select(col("event_type"), col("hour").cast("timestamp_ntz").as("hour"),
-        col("o.value").as("open"), col("high"), col("low"),
-        col("c.value").as("close"), col("n_events"))
-      .orderBy(col("event_type"), col("hour"))
-  }
-
-  // struct comparison is positional-lexicographic in both engines, and
-  // (ts, event_id) is unique, so the value field never drives the compare
-  private val sqlOhlc: String =
-    """WITH e AS (
-      |  SELECT event_type, CAST(ts AS TIMESTAMP) AS ts, event_id, value
-      |  FROM events
-      |)
-      |SELECT event_type, date_trunc('hour', ts) AS hour,
-      |  (min(struct_pack(t := ts, e := event_id, v := value))).v AS open,
-      |  max(value) AS high,
-      |  min(value) AS low,
-      |  (max(struct_pack(t := ts, e := event_id, v := value))).v AS close,
-      |  CAST(COUNT(*) AS BIGINT) AS n_events
-      |FROM e GROUP BY 1, 2
-      |ORDER BY event_type, hour""".stripMargin
-
-  // ------------------------------------------------- events_compact
-  // CDC log compaction: materialize the LATEST state per (user_id,
-  // event_type) from the append-only change log — the log→snapshot step
-  // every incremental pipeline runs. Same thin-argmax convention as
-  // q42_ohlc: max over struct(ts, event_id, value) partial-aggregates
-  // map-side (each task emits one candidate per key), so the 100 TB log
-  // shuffles |keys| rows, never events — the ROW_NUMBER()-per-key
-  // formulation would sort the whole stream inside one window exchange.
-  // (ts, event_id) is unique, so the tiebreak is deterministic and the
-  // value field never drives the compare.
-  private def qCompact(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.eventsCached(s, dir)
-    e.groupBy(col("user_id"), col("event_type"))
-      .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("last"),
-        count(lit(1)).as("n_changes"))
-      .select(col("user_id"), col("event_type"),
-        col("last.ts").cast("timestamp_ntz").as("last_ts"),
-        col("last.event_id").as("last_event_id"),
-        col("last.value").as("last_value"), col("n_changes"))
-      .orderBy(col("user_id"), col("event_type"))
-  }
-
-  private val sqlCompact: String =
-    """WITH e AS (
-      |  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
-      |    event_id, value
-      |  FROM events
-      |)
-      |SELECT user_id, event_type,
-      |  (max(struct_pack(t := ts, e := event_id, v := value))).t AS last_ts,
-      |  (max(struct_pack(t := ts, e := event_id, v := value))).e
-      |    AS last_event_id,
-      |  (max(struct_pack(t := ts, e := event_id, v := value))).v
-      |    AS last_value,
-      |  CAST(COUNT(*) AS BIGINT) AS n_changes
-      |FROM e GROUP BY 1, 2
-      |ORDER BY user_id, event_type""".stripMargin
-
-  // ------------------------------------------------- events_winsorize
-  // Robust outlier clipping: per-event-type p01/p99 bounds (exact
-  // interpolated percentile — Spark `percentile` ↔ DuckDB quantile_cont,
-  // emitted RAW, no round-after-interpolation), then a map-side clamp
-  // against the broadcast bounds table. The clipped value is SELECTED
-  // (value, lo, or hi), never recomputed, so no new float arithmetic can
-  // diverge. Scale shape: the percentile aggregate is one hash agg over
-  // |event_types| groups; the clip pass is a broadcast join + pure
-  // projection — the 100 TB event stream never shuffles.
-  private def qWinsorize(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventsCached(s, dir)
-      .select(col("event_id"), col("event_type"), col("value"))
-    val bounds = ev.groupBy(col("event_type")).agg(
-      expr("percentile(value, 0.01)").as("lo"),
-      expr("percentile(value, 0.99)").as("hi"))
-    ev.join(broadcast(bounds), "event_type")
-      .select(col("event_id"), col("event_type"), col("value"),
-        when(col("value") < col("lo"), col("lo"))
-          .when(col("value") > col("hi"), col("hi"))
-          .otherwise(col("value")).as("clipped"),
-        (col("value") < col("lo") || col("value") > col("hi"))
-          .as("was_clipped"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlWinsorize: String =
-    """WITH b AS (
-      |  SELECT event_type,
-      |    quantile_cont(value, 0.01) AS lo,
-      |    quantile_cont(value, 0.99) AS hi
-      |  FROM events GROUP BY event_type
-      |)
-      |SELECT e.event_id, e.event_type, e.value,
-      |  CASE WHEN e.value < lo THEN lo
-      |       WHEN e.value > hi THEN hi
-      |       ELSE e.value END AS clipped,
-      |  (e.value < lo OR e.value > hi) AS was_clipped
-      |FROM events e JOIN b USING (event_type)
-      |ORDER BY e.event_id""".stripMargin
-
-  // ------------------------------------------------- events_anomaly
-  // Robust anomaly detection: per-event-type median/MAD z-score
-  // (Hampel-style — median and MAD are immune to the outliers they
-  // flag, unlike mean/stddev), global top-20 by |score|. Two broadcast
-  // percentile passes (median, then median absolute deviation), the
-  // score division once per row, and the top-k planned as
-  // TakeOrderedAndProject — never a global sort of the event stream.
-  private def qAnomaly(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventsCached(s, dir)
-      .select(col("event_id"), col("event_type"), col("value"))
-    val med = ev.groupBy(col("event_type"))
-      .agg(expr("percentile(value, 0.5)").as("med"))
-    val dev = ev.join(broadcast(med), "event_type")
-      .withColumn("adev", abs(col("value") - col("med")))
-    val mad = dev.groupBy(col("event_type"))
-      .agg(max(col("med")).as("med"), // constant per group
-        expr("percentile(adev, 0.5)").as("mad"))
-      .filter(col("mad") > 0.0)
-    ev.join(broadcast(mad), "event_type")
-      .withColumn("score", (col("value") - col("med")) / col("mad"))
-      .select(col("event_id"), col("event_type"), col("value"),
-        col("score"))
-      .orderBy(abs(col("score")).desc, col("event_id"))
-      .limit(20)
-  }
-
-  private val sqlAnomaly: String =
-    """WITH m AS (
-      |  SELECT event_type, quantile_cont(value, 0.5) AS med
-      |  FROM events GROUP BY event_type
-      |), d AS (
-      |  SELECT e.event_type, med,
-      |    quantile_cont(abs(e.value - med), 0.5) AS mad
-      |  FROM events e JOIN m USING (event_type)
-      |  GROUP BY e.event_type, med
-      |)
-      |SELECT e.event_id, e.event_type, e.value,
-      |  (e.value - med) / mad AS score
-      |FROM events e JOIN d USING (event_type)
-      |WHERE mad > 0
-      |ORDER BY abs((e.value - med) / mad) DESC, e.event_id
-      |LIMIT 20""".stripMargin
-
-  // ------------------------------------------------- events_cooccur
-  // Market-basket co-occurrence with support/lift: which event types
-  // appear together in the same user's history more than independence
-  // predicts. Shape: distinct (user, type) pairs once; the self-join
-  // keys on user_id, so per-user pair fan-out is bounded by the
-  // event-type CARDINALITY (a catalog constant), never by event count —
-  // the classic a-priori first pass, safe at any user count. Supports
-  // and lifts are single divisions of exact BIGINT counts.
-  private def qCooccur(s: SparkSession, dir: String): DataFrame = {
-    // ONE user-keyed set aggregation feeds all three branches (per-type
-    // counts, pair counts, user count): the identical exchange+aggregate
-    // subtree is deduplicated by ReuseExchange, so the event stream is
-    // scanned and shuffled ONCE — the distinct-self-join form scanned it
-    // three times. Pair expansion is a map-side HOF over the SORTED
-    // per-user type set (a < b by construction), bounded by type
-    // cardinality, never event count.
-    // NULL discipline mirrored in the oracle: a NULL user is not a basket
-    // and a NULL type is not an item. Without the explicit filter the two
-    // engines diverge on NULL-bearing fixtures (collect_set drops NULL
-    // types while DISTINCT keeps them; count-of-groups counts a NULL-user
-    // group while COUNT(DISTINCT user_id) excludes it).
-    val sets = Tables.eventsCached(s, dir)
-      .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(sort_array(collect_set(col("event_type"))).as("tset"))
-    val nUsers = sets.agg(count(lit(1)).as("n_users"))
-    val tc = sets.select(explode(col("tset")).as("event_type"))
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n_t"))
-    val pairs = sets
-      .select(explode(expr(
-        """flatten(transform(tset, (a, i) ->
-          |  transform(slice(tset, i + 2, size(tset)),
-          |    b -> struct(a, b))))""".stripMargin)).as("p"))
-      .groupBy(col("p.a").as("type_a"), col("p.b").as("type_b"))
-      .agg(count(lit(1)).as("n_both"))
-    pairs
-      .join(broadcast(tc.select(col("event_type").as("type_a"),
-        col("n_t").as("n_a"))), Seq("type_a"))
-      .join(broadcast(tc.select(col("event_type").as("type_b"),
-        col("n_t").as("n_b"))), Seq("type_b"))
-      .crossJoin(broadcast(nUsers))
-      .select(col("type_a"), col("type_b"), col("n_both"),
-        (col("n_both").cast("double") / col("n_users").cast("double"))
-          .as("support"),
-        ((col("n_both") * col("n_users")).cast("double") /
-          (col("n_a") * col("n_b")).cast("double")).as("lift"))
-      .orderBy(col("type_a"), col("type_b"))
-  }
-
-  private val sqlCooccur: String =
-    """WITH ut AS (
-      |  SELECT DISTINCT user_id, event_type FROM events
-      |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-      |), n AS (
-      |  SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users FROM ut
-      |), tc AS (
-      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_t
-      |  FROM ut GROUP BY event_type
-      |), p AS (
-      |  SELECT a.event_type AS type_a, b.event_type AS type_b,
-      |    CAST(COUNT(*) AS BIGINT) AS n_both
-      |  FROM ut a JOIN ut b
-      |    ON a.user_id = b.user_id AND a.event_type < b.event_type
-      |  GROUP BY 1, 2
-      |)
-      |SELECT type_a, type_b, n_both,
-      |  CAST(n_both AS DOUBLE) / CAST(n_users AS DOUBLE) AS support,
-      |  CAST(n_both * n_users AS DOUBLE)
-      |    / CAST(ta.n_t * tb.n_t AS DOUBLE) AS lift
-      |FROM p
-      |JOIN tc ta ON ta.event_type = p.type_a
-      |JOIN tc tb ON tb.event_type = p.type_b, n
-      |ORDER BY type_a, type_b""".stripMargin
-
-  // ------------------------------------------------- events_transitions
-  // Next-event transition matrix (first-order Markov over the event
-  // stream): one user-keyed lead window + one pair aggregate; the
-  // per-source row share is a single division of exact counts. The lead
-  // window shares the events table's user-keyed spread exchange.
-  private def qTransitions(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val t = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type").as("from_type"))
-      .withColumn("to_type", lead(col("from_type"), 1).over(w))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val fromTotals = t.groupBy(col("from_type"))
-      .agg(sum(col("n")).as("n_from"))
-    t.join(broadcast(fromTotals), Seq("from_type"))
-      .select(col("from_type"), col("to_type"), col("n"),
-        (col("n").cast("double") / col("n_from").cast("double"))
-          .as("share"))
-      .orderBy(col("from_type"), col("to_type"))
-  }
-
-  private val sqlTransitions: String =
-    """WITH seq AS (
-      |  SELECT user_id, event_type AS from_type,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |                           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS to_type
-      |  FROM events WHERE ts IS NOT NULL
-      |), t AS (
-      |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-      |  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-      |), ft AS (
-      |  SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_from
-      |  FROM t GROUP BY from_type
-      |)
-      |SELECT t.from_type, t.to_type, t.n,
-      |  CAST(t.n AS DOUBLE) / CAST(ft.n_from AS DOUBLE) AS share
-      |FROM t JOIN ft USING (from_type)
-      |ORDER BY t.from_type, t.to_type""".stripMargin
-
-  // ------------------------------------------------- events_value_pareto
-  // Revenue concentration: what share of total value the top decile of
-  // users carries — the 80/20 report behind every account-tier decision.
-  // One per-user exact-decimal total, a broadcast p90 cutoff (same
-  // broadcast-cutpoint discipline as RFM: never an ntile over the user
-  // frame), conditional exact sums, one final division. The >= p90
-  // boundary compare is ulp-robust: totals are generic doubles, so no
-  // user's total sits within rounding distance of the interpolated
-  // cutoff on one engine only.
-  private def qValuePareto(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val totals = Tables.eventsCached(s, dir)
-      .filter(col("value").isNotNull && col("user_id").isNotNull)
-      .groupBy(col("user_id")).agg(Exact.xsum(col("value")).as("tv"))
-    val cut = totals.agg(expr("percentile(tv, 0.9)").as("p90"))
-    totals.crossJoin(broadcast(cut))
-      .agg(count(lit(1)).as("n_users"),
-        sum(when(col("tv") >= col("p90"), 1L).otherwise(0L)).as("top_users"),
-        Exact.xsum(when(col("tv") >= col("p90"), col("tv"))
-          .otherwise(lit(0.0))).as("top_value"),
-        Exact.xsum(col("tv")).as("total_value"))
-      .select(col("n_users"), col("top_users"),
-        (col("top_value") / col("total_value")).as("value_share"))
-  }
-
-  private val sqlValuePareto: String = {
-    import graft.functions.Exact
-    s"""WITH totals AS (
-       |  SELECT user_id, ${Exact.sqlSum("value")} AS tv
-       |  FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL
-       |  GROUP BY user_id
-       |), c AS (SELECT quantile_cont(tv, 0.9) AS p90 FROM totals)
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-       |  CAST(SUM(CASE WHEN t.tv >= c.p90 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS top_users,
-       |  ${Exact.sqlSum(
-             "CASE WHEN t.tv >= c.p90 THEN t.tv ELSE CAST(0 AS DOUBLE) END")}
-       |    / ${Exact.sqlSum("t.tv")} AS value_share
-       |FROM totals t, c""".stripMargin
-  }
-
-  // ------------------------------------------------- events_benford
-  // First-significant-digit profile of transaction values vs Benford's
-  // law expectation — the forensic-accounting screen. Engine-exactness
-  // notes: `floor` (not a double→int CAST: Spark truncates, DuckDB
-  // ROUNDS) and an integer digit extraction via decimal string length
-  // (never log10, which can land on a power-of-ten boundary
-  // differently); the expected share log10(1 + 1/d) is the ONE place a
-  // transcendental appears, and both engines' correctly-rounded log10 of
-  // the same small rational agrees bit-for-bit... except it is NOT
-  // guaranteed for log — so the expectation ships as 17-digit literals
-  // computed once, not as an engine call.
-  private val BenfordExpected: Map[Int, Double] =
-    (1 to 9).map(d => d -> math.log10(1.0 + 1.0 / d)).toMap
-  private def qBenford(s: SparkSession, dir: String): DataFrame = {
-    val vals = Tables.eventsCached(s, dir)
-      .filter(col("value").isNotNull && col("value") >= 1.0)
-      .select(floor(col("value")).cast("long").as("v"))
-      .withColumn("digit",
-        expr("cast(v div cast(pow(10, length(cast(v as string)) - 1) as long) as int)"))
-    val expected = s.createDataFrame(
-      BenfordExpected.toSeq.sortBy(_._1)).toDF("digit", "expected_share")
-    val total = vals.agg(count(lit(1)).as("total"))
-    vals.groupBy(col("digit")).agg(count(lit(1)).as("n"))
-      .crossJoin(broadcast(total))
-      .join(broadcast(expected), Seq("digit"))
-      .select(col("digit"), col("n"),
-        (col("n").cast("double") / col("total").cast("double")).as("share"),
-        col("expected_share"))
-      .orderBy(col("digit"))
-  }
-
-  private val sqlBenford: String = {
-    val expectedRows = BenfordExpected.toSeq.sortBy(_._1).map {
-      case (d, e) =>
-        // string→double parse (correct rounding); a bare numeric literal
-        // would route through DECIMAL in DuckDB and land 1 ulp off
-        s"SELECT $d AS digit, CAST('${java.lang.Double.toString(e)}' AS DOUBLE) AS expected_share"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH vals AS (
-       |  SELECT CAST(floor(value) AS BIGINT) AS v
-       |  FROM events WHERE value IS NOT NULL AND value >= 1.0
-       |), digits AS (
-       |  SELECT CAST(v // CAST(pow(10, length(CAST(v AS VARCHAR)) - 1)
-       |    AS BIGINT) AS INTEGER) AS digit
-       |  FROM vals
-       |), t AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM digits),
-       |exp AS (
-       |  $expectedRows
-       |), counts AS (
-       |  SELECT digit, CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM digits GROUP BY digit
-       |)
-       |SELECT c.digit, c.n,
-       |  CAST(c.n AS DOUBLE) / CAST(t.total AS DOUBLE) AS share,
-       |  e.expected_share
-       |FROM counts c JOIN exp e ON c.digit = e.digit CROSS JOIN t
-       |ORDER BY c.digit""".stripMargin
-  }
-
-  // ------------------------------------------------- events_cohort_ltv
-  // Cohort lifetime-value accumulation: users grouped by first-seen week,
-  // per (cohort, age-week) active counts and value, plus CUMULATIVE
-  // value per cohort — the LTV curve behind payback-period decisions.
-  // The cumsum deliberately avoids a running double window: engines
-  // disagree on windowed-double ADD ORDER (Spark runs sequentially,
-  // DuckDB's segment tree pairs differently), so the accumulation is a
-  // triangle join over the tiny (cohort × age) frame with the
-  // exact-decimal sum — order-independent, hash-stable.
-  private def qCohortLtv(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val e = Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id"), to_date(col("ts")).as("d"), col("value"))
-    val firstDay = e.groupBy(col("user_id")).agg(min(col("d")).as("d0"))
-    val base = e.agg(min(col("d")).as("g0"))
-    val agg = e.join(firstDay, Seq("user_id"))
-      .crossJoin(broadcast(base))
-      .select(expr("datediff(d0, g0) div 7").as("cohort_week"),
-        expr("datediff(d, d0) div 7").as("age_week"),
-        col("user_id"), col("value"))
-      .groupBy(col("cohort_week"), col("age_week"))
-      .agg(countDistinct(col("user_id")).as("n_active"),
-        Exact.xsum(col("value")).as("week_value"))
-    val b = agg.select(col("cohort_week"), col("age_week").as("bw"),
-      col("week_value").as("bv"))
-    agg.join(b, Seq("cohort_week"))
-      .filter(col("bw") <= col("age_week"))
-      .groupBy(col("cohort_week"), col("age_week"),
-        col("n_active"), col("week_value"))
-      .agg(Exact.xsum(col("bv")).as("cum_value"))
-      .select(col("cohort_week"), col("age_week"), col("n_active"),
-        col("week_value"), col("cum_value"))
-      .orderBy(col("cohort_week"), col("age_week"))
-  }
-
-  private val sqlCohortLtv: String = {
-    import graft.functions.Exact
-    s"""WITH e AS (
-       |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d, value
-       |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |), f AS (
-       |  SELECT user_id, MIN(d) AS d0 FROM e GROUP BY user_id
-       |), g AS (SELECT MIN(d) AS g0 FROM e),
-       |cells AS (
-       |  SELECT (f.d0 - g.g0) // 7 AS cohort_week,
-       |    (e.d - f.d0) // 7 AS age_week, e.user_id, e.value
-       |  FROM e JOIN f USING (user_id), g
-       |), agg AS (
-       |  SELECT cohort_week, age_week,
-       |    CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_active,
-       |    ${Exact.sqlSum("value")} AS week_value
-       |  FROM cells GROUP BY 1, 2
-       |)
-       |SELECT a.cohort_week, a.age_week, a.n_active, a.week_value,
-       |  ${Exact.sqlSum("b.week_value")} AS cum_value
-       |FROM agg a JOIN agg b
-       |  ON a.cohort_week = b.cohort_week AND b.age_week <= a.age_week
-       |GROUP BY a.cohort_week, a.age_week, a.n_active, a.week_value
-       |ORDER BY a.cohort_week, a.age_week""".stripMargin
-  }
-
-  // ------------------------------------------------- events_active_users
-  // DAU + trailing-7-day WAU — the staple engagement report. The
-  // scalable WAU formulation: a rolling DISTINCT cannot ride a window
-  // frame, so each (user, active-day) pair — already deduplicated, the
-  // frame is |users|·|days| at most — explodes into the ≤7 report days
-  // it covers, and WAU is a plain count-distinct per covered day. At
-  // 100 TB the explode factor is the constant 7 and both aggregates
-  // hash-partition on (user, day); no per-day rescans, no quadratic
-  // self-join over the window.
-  private def qActiveUsers(s: SparkSession, dir: String): DataFrame = {
-    val ud = Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id"), to_date(col("ts")).as("d"))
-      .distinct()
-    val dau = ud.groupBy(col("d")).agg(count(lit(1)).as("dau"))
-    val bounds = ud.agg(max(col("d")).as("d1"))
-    val wau = ud.crossJoin(broadcast(bounds))
-      .select(col("user_id"),
-        explode(expr("sequence(d, least(date_add(d, 6), d1))")).as("d"))
-      .distinct()
-      .groupBy(col("d")).agg(count(lit(1)).as("wau"))
-    dau.join(wau, Seq("d"))
-      .select(col("d"), col("dau"), col("wau"))
-      .orderBy(col("d"))
-  }
-
-  private val sqlActiveUsers: String =
-    """WITH ud AS (
-      |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-      |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-      |), dau AS (
-      |  SELECT d, CAST(COUNT(*) AS BIGINT) AS dau FROM ud GROUP BY d
-      |), b AS (SELECT MAX(d) AS d1 FROM ud),
-      |cov AS (
-      |  SELECT DISTINCT user_id,
-      |    CAST(unnest(generate_series(CAST(d AS TIMESTAMP),
-      |      CAST(least(d + 6, d1) AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE)
-      |      AS d
-      |  FROM ud, b
-      |), wau AS (
-      |  SELECT d, CAST(COUNT(*) AS BIGINT) AS wau FROM cov GROUP BY d
-      |)
-      |SELECT dau.d, dau.dau, wau.wau
-      |FROM dau JOIN wau ON dau.d = wau.d
-      |ORDER BY dau.d""".stripMargin
-
-  // ------------------------------------------------- events_forecast_naive
-  // Seasonal-naive forecasting baseline (the standard yardstick of the
-  // M-competitions: predict hour h of day d with hour h of day d−7) and
-  // its MAE per event type — the first number any demand-forecast
-  // pipeline must beat. The evaluation grid is DENSE (every (type, day,
-  // hour) cell from day 8 on, zero-filled on both the actual and the
-  // predicted side): skipping empty cells would silently score only the
-  // easy nonzero hours. Shape: one (type, day, hour) count aggregate,
-  // the grid via sequence-explode against a broadcast 1-row bounds
-  // frame, two left joins back to the counts, one final agg; counts and
-  // absolute errors are exact integers, MAE is the single division.
-  private def qForecastNaive(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.eventsCached(s, dir).filter(col("ts").isNotNull)
-      .select(col("event_type"), to_date(col("ts")).as("d"),
-        hour(col("ts")).cast("long").as("h"))
-    val counts = e.groupBy(col("event_type"), col("d"), col("h"))
-      .agg(count(lit(1)).as("n"))
-    val bounds = e.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val grid = e.select(col("event_type")).distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("event_type"),
-        explode(expr("sequence(date_add(d0, 7), d1)")).as("d"))
-      .select(col("event_type"), col("d"),
-        explode(expr("sequence(0L, 23L)")).as("h"))
-    val pred = counts.select(col("event_type"),
-      date_add(col("d"), 7).as("d"), col("h"), col("n").as("np"))
-    grid.join(counts, Seq("event_type", "d", "h"), "left")
-      .join(pred, Seq("event_type", "d", "h"), "left")
-      .select(col("event_type"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        coalesce(col("np"), lit(0L)).as("np"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum(abs(col("n") - col("np"))).as("abs_err_sum"))
-      .select(col("event_type"), col("n_cells"), col("abs_err_sum"),
-        (col("abs_err_sum").cast("double") / col("n_cells").cast("double"))
-          .as("mae"))
-      .orderBy(col("event_type"))
-  }
-
-  private val sqlForecastNaive: String =
-    """WITH e AS (
-      |  SELECT event_type,
-      |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-      |    CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS h
-      |  FROM events WHERE ts IS NOT NULL
-      |), counts AS (
-      |  SELECT event_type, d, h, CAST(COUNT(*) AS BIGINT) AS n
-      |  FROM e GROUP BY 1, 2, 3
-      |), b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM e),
-      |days AS (
-      |  SELECT CAST(unnest(generate_series(CAST(d0 + 7 AS TIMESTAMP),
-      |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS d FROM b
-      |), hours AS (
-      |  SELECT CAST(unnest(generate_series(0, 23)) AS BIGINT) AS h
-      |), grid AS (
-      |  SELECT t.event_type, days.d, hours.h
-      |  FROM (SELECT DISTINCT event_type FROM e) t, days, hours
-      |), cells AS (
-      |  SELECT g.event_type,
-      |    COALESCE(c.n, 0) AS n, COALESCE(p.np, 0) AS np
-      |  FROM grid g
-      |  LEFT JOIN counts c
-      |    ON g.event_type = c.event_type AND g.d = c.d AND g.h = c.h
-      |  LEFT JOIN (
-      |    SELECT event_type, d + 7 AS d, h, n AS np FROM counts
-      |  ) p ON g.event_type = p.event_type AND g.d = p.d AND g.h = p.h
-      |)
-      |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_cells,
-      |  CAST(SUM(abs(n - np)) AS BIGINT) AS abs_err_sum,
-      |  CAST(SUM(abs(n - np)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mae
-      |FROM cells GROUP BY event_type ORDER BY event_type""".stripMargin
-
-  // ------------------------------------------------- events_top_paths
-  // Top 3-step behavior paths: the Sankey/flow data one step deeper than
-  // events_transitions. Two leads share the transitions' single user
-  // exchange; the path space is |event types|³ ≤ 125 rows, so the global
-  // top-k rank runs over a bounded frame (the same bounded-output
-  // discipline as graph_degrees).
-  private val TopPathsK = 10
-  private def qTopPaths(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val paths = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type").as("p1"))
-      .withColumn("p2", lead(col("p1"), 1).over(w))
-      .withColumn("p3", lead(col("p1"), 2).over(w))
-      .filter(col("p2").isNotNull && col("p3").isNotNull)
-      .groupBy(col("p1"), col("p2"), col("p3"))
-      .agg(count(lit(1)).as("n"))
-    val rw = Window.orderBy(col("n").desc, col("p1"), col("p2"), col("p3"))
-    paths.withColumn("rk", row_number().over(rw))
-      .filter(col("rk") <= TopPathsK)
-      .select(col("rk"), col("p1"), col("p2"), col("p3"), col("n"))
-      .orderBy(col("rk"))
-  }
-
-  private val sqlTopPaths: String =
-    s"""WITH seq AS (
-       |  SELECT user_id, event_type AS p1,
-       |    LEAD(event_type, 1) OVER w AS p2,
-       |    LEAD(event_type, 2) OVER w AS p3
-       |  FROM events WHERE ts IS NOT NULL
-       |  WINDOW w AS (PARTITION BY user_id
-       |               ORDER BY CAST(ts AS TIMESTAMP), event_id)
-       |), paths AS (
-       |  SELECT p1, p2, p3, CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM seq WHERE p2 IS NOT NULL AND p3 IS NOT NULL
-       |  GROUP BY 1, 2, 3
-       |)
-       |SELECT rk, p1, p2, p3, n FROM (
-       |  SELECT *, ROW_NUMBER() OVER (ORDER BY n DESC, p1, p2, p3) AS rk
-       |  FROM paths
-       |) WHERE rk <= $TopPathsK ORDER BY rk""".stripMargin
-
-  // ------------------------------------------------- scd_snapshot_diff
-  // Changelog.snapshotDiff between mid-January cutoffs — both snapshots
-  // from ONE conditional-argmax aggregation over one scan.
-  private val DiffT1 = "2024-01-10 00:00:00"
-  private val DiffT2 = "2024-01-20 00:00:00"
-  private def qSnapshotDiff(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Changelog.snapshotDiff(Tables.eventsCached(s, dir),
-      lit(DiffT1).cast("timestamp"), lit(DiffT2).cast("timestamp"))
-
-  private val sqlSnapshotDiff: String =
-    s"""WITH e AS (
-       |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
-       |  FROM events
-       |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |    AND CAST(ts AS TIMESTAMP) <= TIMESTAMP '$DiffT2'
-       |), s AS (
-       |  SELECT user_id,
-       |    max(CASE WHEN ts <= TIMESTAMP '$DiffT1' THEN
-       |      struct_pack(t := ts, e := event_id, v := value) END) AS o,
-       |    CAST(COUNT(CASE WHEN ts <= TIMESTAMP '$DiffT1' THEN 1 END)
-       |      AS BIGINT) AS nv_old,
-       |    max(struct_pack(t := ts, e := event_id, v := value)) AS n,
-       |    CAST(COUNT(*) AS BIGINT) AS nv_new
-       |  FROM e GROUP BY user_id
-       |)
-       |SELECT user_id,
-       |  CASE WHEN o.e IS NULL THEN 'added' ELSE 'changed' END
-       |    AS change_type,
-       |  o.e AS event_id_old, n.e AS event_id_new,
-       |  o.v AS value_old, n.v AS value_new,
-       |  nv_new - nv_old AS new_versions
-       |FROM s
-       |WHERE o.e IS NULL OR o.e <> n.e
-       |ORDER BY user_id""".stripMargin
-
-  // ------------------------------------------------- text_ngram_lm
-  // Bigram language-model table (the KenLM-counts shape): conditional
-  // continuation probabilities P(next|prefix) = c(prefix,next)/c(prefix,·),
-  // top-LmTopPerPrefix continuations per prefix, prefixes bounded to those
-  // seen ≥ LmMinPrefix times (the table stays vocabulary-sized, never
-  // corpus-sized). Shape: one explode + ONE pair hash agg; prefix totals
-  // derive from the pair counts (a vocabulary-sized frame — the corpus is
-  // never rescanned), and the per-prefix top-k is a WindowGroupLimit rank.
-  // Probabilities are single divisions of exact BIGINTs.
-  private val LmTopPerPrefix = 3
-  private val LmMinPrefix = 50
-
-  private def qNgramLm(s: SparkSession, dir: String): DataFrame =
-    TextOps.bigramLm(docs(s, dir), LmMinPrefix, LmTopPerPrefix)
-      .orderBy(col("prefix"), col("rk"))
-
-  /** Shared WITH-body ending in the ranked `lm` CTE (pre-top-k filter) —
-    * the SQL twin of [[lmTable]]. */
-  private val sqlLmCtes: String = {
-    val words = TextOps.sqlWords("text")
-    s"""bg AS (
-       |  SELECT doc_id, split_part(bigram, ' ', 1) AS prefix,
-       |    split_part(bigram, ' ', 2) AS next_word
-       |  FROM (
-       |    SELECT doc_id, unnest(list_transform(
-       |      range(1, greatest(len(w) - 1, 0) + 1),
-       |      i -> w[i] || ' ' || w[i+1])) AS bigram
-       |    FROM (SELECT doc_id, $words AS w FROM documents)
-       |  )
-       |), pc AS (
-       |  SELECT prefix, next_word, CAST(COUNT(*) AS BIGINT) AS n_pair
-       |  FROM bg GROUP BY 1, 2
-       |), t AS (
-       |  SELECT prefix, CAST(SUM(n_pair) AS BIGINT) AS n_prefix
-       |  FROM pc GROUP BY prefix
-       |), lm AS (
-       |  SELECT pc.prefix, pc.next_word, pc.n_pair, t.n_prefix,
-       |    ROW_NUMBER() OVER (PARTITION BY pc.prefix
-       |                       ORDER BY pc.n_pair DESC, pc.next_word) AS rk
-       |  FROM pc JOIN t USING (prefix)
-       |  WHERE t.n_prefix >= $LmMinPrefix
-       |)""".stripMargin
-  }
-
-  private val sqlNgramLm: String =
-    s"""WITH $sqlLmCtes
-       |SELECT prefix, rk, next_word, n_pair, n_prefix,
-       |  CAST(n_pair AS DOUBLE) / n_prefix AS prob
-       |FROM lm
-       |WHERE rk <= $LmTopPerPrefix
-       |ORDER BY prefix, rk""".stripMargin
-
-  // ------------------------------------------------- text_lm_score
-  // See TextOps.lmScore — CCNet-style LM document scoring in rational
-  // arithmetic (mean inverse probability, exact-decimal sum).
-  private val LmInvBackoff = 1000.0 // miss penalty: p_backoff = 1e-3
-  private def qLmScore(s: SparkSession, dir: String): DataFrame =
-    TextOps.lmScore(docs(s, dir), LmMinPrefix, LmTopPerPrefix, LmInvBackoff)
-      .orderBy(col("doc_id"))
-
-  private val sqlLmScore: String =
-    s"""WITH $sqlLmCtes,
-       |lmk AS (
-       |  SELECT prefix, next_word, CAST(n_pair AS DOUBLE) / n_prefix AS prob
-       |  FROM lm WHERE rk <= $LmTopPerPrefix
-       |)
-       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       |  CAST(SUM(CASE WHEN prob IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_hits,
-       |  ${sqlSum(s"CASE WHEN prob IS NULL THEN CAST($LmInvBackoff AS DOUBLE) " +
-         "ELSE CAST(1 AS DOUBLE) / prob END", 6)} / COUNT(*) AS mean_inv_p
-       |FROM bg LEFT JOIN lmk USING (prefix, next_word)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  // ------------------------------------------------- text_lm_sweep
-  // Perplexity-filter calibration: corpus survival (docs + bigram mass)
-  // at each candidate mean-inverse-probability cutoff — the knob-tuning
-  // table a CCNet-style quality filter publishes before anyone picks
-  // the threshold. One pass over the (already-oracled) LM score frame,
-  // fanned by a literal cutoff array; conditional integer sums only.
-  private val LmSweepCuts = Seq(700.0, 800.0, 850.0, 900.0, 950.0)
-  private def qLmSweep(s: SparkSession, dir: String): DataFrame = {
-    val scored = TextOps.lmScore(docs(s, dir), LmMinPrefix, LmTopPerPrefix,
-      LmInvBackoff)
-    scored
-      .select(explode(array(LmSweepCuts.map(lit): _*)).as("cutoff"),
-        col("mean_inv_p"), col("n_bigrams"))
-      .groupBy(col("cutoff"))
-      .agg(
-        sum(when(col("mean_inv_p") <= col("cutoff"), 1L).otherwise(0L))
-          .as("n_docs_kept"),
-        sum(when(col("mean_inv_p") <= col("cutoff"), col("n_bigrams"))
-          .otherwise(0L)).cast("long").as("n_bigrams_kept"),
-        count(lit(1)).as("n_docs"))
-      .orderBy(col("cutoff"))
-  }
-
-  private val sqlLmSweep: String = {
-    val cutList = LmSweepCuts.map(c => s"CAST($c AS DOUBLE)").mkString(", ")
-    s"""SELECT cutoff,
-       |  CAST(SUM(CASE WHEN mean_inv_p <= cutoff THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS n_docs_kept,
-       |  CAST(SUM(CASE WHEN mean_inv_p <= cutoff THEN n_bigrams ELSE 0
-       |    END) AS BIGINT) AS n_bigrams_kept,
-       |  CAST(COUNT(*) AS BIGINT) AS n_docs
-       |FROM (
-       |  ${sqlLmScore.linesIterator.mkString("\n  ")}
-       |) scored, unnest([$cutList]) u(cutoff)
-       |GROUP BY cutoff ORDER BY cutoff""".stripMargin
-  }
-
-  // --------------------------------------- text_kn_lm / text_kn_score
-  // Interpolated Kneser–Ney smoothing over the SAME pair-count CTEs as
-  // text_ngram_lm (see TextOps.knLm/knScore scaladoc): absolute discount
-  // D frees per-prefix mass λ(u) = D·N1+(u,·)/c(u,·), redistributed by
-  // continuation fan-in P_cont(w) = N1+(·,w)/N1+(·,·). All inputs are
-  // exact BIGINT counts; both engines evaluate the identical IEEE
-  // multiply/divide/add tree, so probabilities hash-match bit for bit.
-  private val KnDiscount = 0.75
-
-  private def qKnLm(s: SparkSession, dir: String): DataFrame =
-    TextOps.knLm(docs(s, dir), LmMinPrefix, LmTopPerPrefix, KnDiscount)
-      .orderBy(col("prefix"), col("rk"))
-
-  /** KN stat CTEs layered on [[sqlLmCtes]] (which ends at the ranked,
-    * min-prefix-filtered `lm`): per-prefix type fan-out, per-word type
-    * fan-in, total bigram-type count.
-    */
-  private val sqlKnCtes: String =
-    s"""pstat AS (
-       |  SELECT prefix, CAST(COUNT(*) AS BIGINT) AS n_types
-       |  FROM pc GROUP BY prefix
-       |), wstat AS (
-       |  SELECT next_word, CAST(COUNT(*) AS BIGINT) AS n_prec
-       |  FROM pc GROUP BY next_word
-       |), tstat AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS t_types FROM pc
-       |)""".stripMargin
-
-  /** The P_KN expression tree — spelled identically in Spark (TextOps.knLm)
-    * and here so every IEEE step rounds the same way.
-    */
-  private val sqlKnD = s"CAST($KnDiscount AS DOUBLE)"
-  private val sqlKnBackoffW: String =
-    s"($sqlKnD * CAST(n_types AS DOUBLE)) / CAST(n_prefix AS DOUBLE)"
-  private val sqlKnPCont: String =
-    "CAST(n_prec AS DOUBLE) / CAST(t_types AS DOUBLE)"
-  private val sqlKnP: String =
-    s"""greatest(CAST(n_pair AS DOUBLE) - $sqlKnD, CAST(0.0 AS DOUBLE))
-       |    / CAST(n_prefix AS DOUBLE)
-       |    + ($sqlKnBackoffW) * ($sqlKnPCont)""".stripMargin
-
-  private val sqlKnLm: String =
-    s"""WITH $sqlLmCtes,
-       |$sqlKnCtes
-       |SELECT lm.prefix, lm.rk, lm.next_word, lm.n_pair, lm.n_prefix,
-       |  pstat.n_types, wstat.n_prec, tstat.t_types,
-       |  $sqlKnBackoffW AS backoff_w,
-       |  $sqlKnPCont AS p_cont,
-       |  $sqlKnP AS p_kn
-       |FROM lm JOIN pstat USING (prefix) JOIN wstat USING (next_word)
-       |  CROSS JOIN tstat
-       |WHERE rk <= $LmTopPerPrefix
-       |ORDER BY prefix, rk""".stripMargin
-
-  private def qKnScore(s: SparkSession, dir: String): DataFrame =
-    TextOps.knScore(docs(s, dir), LmMinPrefix, LmTopPerPrefix, KnDiscount)
-      .orderBy(col("doc_id"))
-
-  private val sqlKnScore: String = {
-    val pExpr =
-      s"""CASE WHEN p_kn IS NOT NULL THEN p_kn
-         |    WHEN backoff_w IS NOT NULL AND n_prec IS NOT NULL
-         |      THEN backoff_w * (CAST(n_prec AS DOUBLE)
-         |        / CAST(t_types AS DOUBLE))
-         |    ELSE CAST(1 AS DOUBLE) / CAST(t_types AS DOUBLE) END"""
-        .stripMargin.linesIterator.mkString(" ")
-    s"""WITH $sqlLmCtes,
-       |$sqlKnCtes,
-       |knt AS (
-       |  SELECT lm.prefix, lm.next_word, $sqlKnP AS p_kn
-       |  FROM lm JOIN pstat USING (prefix) JOIN wstat USING (next_word)
-       |    CROSS JOIN tstat
-       |  WHERE rk <= $LmTopPerPrefix
-       |), lamt AS (
-       |  SELECT prefix, $sqlKnBackoffW AS backoff_w
-       |  FROM t JOIN pstat USING (prefix)
-       |  WHERE n_prefix >= $LmMinPrefix
-       |)
-       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       |  CAST(SUM(CASE WHEN p_kn IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_hits,
-       |  CAST(SUM(CASE WHEN p_kn IS NULL AND backoff_w IS NOT NULL
-       |    THEN 1 ELSE 0 END) AS BIGINT) AS n_backoff,
-       |  ${graft.functions.Exact.sqlSum(pExpr, 9)} / COUNT(*) AS mean_p
-       |FROM bg
-       |  LEFT JOIN knt USING (prefix, next_word)
-       |  LEFT JOIN lamt USING (prefix)
-       |  LEFT JOIN wstat USING (next_word)
-       |  CROSS JOIN tstat
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  // ------------------------------------------------- profile_eqdepth
-  // Equi-depth (quantile-bucketed) histogram of the event values — the
-  // profiling complement to profile_histogram's fixed-width buckets:
-  // edges adapt to the distribution so each bucket carries comparable
-  // mass. Edges are the q23 rounded-percentile idiom (bit-identical
-  // cross-engine BEFORE any comparison); assignment is one broadcast
-  // scalar row + a map-side CASE.
-  private def qEqdepth(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).filter(col("value").isNotNull)
-    val cuts = ev.agg(
-      round(expr("percentile(value, 0.25)"), 4).as("q1"),
-      round(expr("percentile(value, 0.5)"), 4).as("q2"),
-      round(expr("percentile(value, 0.75)"), 4).as("q3"))
-    ev.crossJoin(broadcast(cuts))
-      .select(
-        when(col("value") <= col("q1"), 0L)
-          .when(col("value") <= col("q2"), 1L)
-          .when(col("value") <= col("q3"), 2L)
-          .otherwise(3L).as("bucket"),
-        col("value"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_values"),
-        xsum(col("value")).as("sum_value"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .orderBy(col("bucket"))
-  }
-
-  private val sqlEqdepth: String =
-    s"""WITH cuts AS (
-       |  SELECT ROUND(quantile_cont(value, 0.25), 4) AS q1,
-       |    ROUND(quantile_cont(value, 0.5), 4) AS q2,
-       |    ROUND(quantile_cont(value, 0.75), 4) AS q3
-       |  FROM events WHERE value IS NOT NULL
-       |)
-       |SELECT CASE WHEN value <= q1 THEN 0 WHEN value <= q2 THEN 1
-       |    WHEN value <= q3 THEN 2 ELSE 3 END AS bucket,
-       |  CAST(COUNT(*) AS BIGINT) AS n_values,
-       |  ${sqlSum("value")} AS sum_value,
-       |  MIN(value) AS min_value, MAX(value) AS max_value
-       |FROM events CROSS JOIN cuts
-       |WHERE value IS NOT NULL
-       |GROUP BY bucket ORDER BY bucket""".stripMargin
-
-  // ------------------------------------------------- q75_calendar
-  // Calendar-function surface: month truncation, quarter/year
-  // extraction, and month-end (last_day) over the order dates, rolled
-  // up per month — the date-dimension derivations every reporting
-  // layer leans on, checked cross-engine (extraction widths CAST to
-  // INT; trunc to TIMESTAMP_NTZ for the hash compare).
-  private def qCalendar(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .select(
-        date_trunc("month", col("o_orderdate")).cast("timestamp_ntz")
-          .as("month_start"),
-        year(col("o_orderdate")).as("yr"),
-        quarter(col("o_orderdate")).as("qtr"),
-        last_day(col("o_orderdate")).as("month_end"))
-      .groupBy(col("month_start"), col("yr"), col("qtr"), col("month_end"))
-      .agg(count(lit(1)).as("n_orders"))
-      .orderBy(col("month_start"))
-
-  private val sqlCalendar: String =
-    """SELECT date_trunc('month', o_orderdate) AS month_start,
-      |  CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
-      |  CAST(EXTRACT(quarter FROM o_orderdate) AS INT) AS qtr,
-      |  last_day(CAST(o_orderdate AS DATE)) AS month_end,
-      |  CAST(COUNT(*) AS BIGINT) AS n_orders
-      |FROM orders
-      |GROUP BY month_start, yr, qtr, month_end
-      |ORDER BY month_start""".stripMargin
-
-  // ------------------------------------------------- text_hybrid_rrf
-  // Hybrid lexical+vector retrieval: the BM25 ranking and the exact
-  // cosine ranking (query vector 0, the documents' embedding twin —
-  // fixture id spaces coincide) fused by reciprocal-rank fusion
-  // (Cormack, Clarke & Buettcher, SIGIR 2009), score = Σ 1/(60+rank)
-  // with absent ranks contributing 0. This is the production RAG
-  // retrieval shape: two independent k-bounded rankings, one
-  // full-outer join on the doc key, integer ranks → exact IEEE terms.
-  private val HybridTopK = 10
-  private def qHybridRrf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bm = TextOps.bm25TopK(docs(s, dir))
-      .select(col("doc_id"), col("rk").as("rk_text"))
-    val ann = Similarity.bruteTopK(emb(s, dir))
-      .filter(col("query_id") === 0L)
-      .select(col("cand_id").as("doc_id"), col("rk").cast("long").as("rk_vec"))
-    val w = Window.orderBy(col("rrf").desc, col("doc_id"))
-    bm.join(ann, Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("rk_text").cast("double")),
-          lit(0.0)) +
-        coalesce(lit(1.0) / (lit(60.0) + col("rk_vec").cast("double")),
-          lit(0.0)))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= HybridTopK)
-      .select(col("rk").cast("long").as("rk"), col("doc_id"),
-        col("rk_text"), col("rk_vec"), col("rrf"))
-      .orderBy(col("rk"))
-  }
-
-  private val sqlHybridRrf: String =
-    s"""WITH bt AS (
-       |  SELECT doc_id, rk AS rk_text FROM (
-       |    ${TextOps.sqlBm25.linesIterator.mkString("\n    ")}
-       |  )
-       |), av AS (
-       |  SELECT cand_id AS doc_id, CAST(rk AS BIGINT) AS rk_vec FROM (
-       |    ${Similarity.sqlBruteTopK.linesIterator.mkString("\n    ")}
-       |  ) WHERE query_id = 0
-       |), fused AS (
-       |  SELECT doc_id, rk_text, rk_vec,
-       |    COALESCE(CAST(1 AS DOUBLE)
-       |      / (CAST(60 AS DOUBLE) + CAST(rk_text AS DOUBLE)), 0)
-       |    + COALESCE(CAST(1 AS DOUBLE)
-       |      / (CAST(60 AS DOUBLE) + CAST(rk_vec AS DOUBLE)), 0) AS rrf
-       |  FROM bt FULL OUTER JOIN av USING (doc_id)
-       |), ranked AS (
-       |  SELECT doc_id, rk_text, rk_vec, rrf,
-       |    ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id) AS rk
-       |  FROM fused
-       |)
-       |SELECT CAST(rk AS BIGINT) AS rk, doc_id, rk_text, rk_vec, rrf
-       |FROM ranked WHERE rk <= $HybridTopK ORDER BY rk""".stripMargin
-
-  // ------------------------------------------------- text_novelty
-  // Bigram-level novelty: the share of a document's bigram occurrences
-  // whose corpus-wide document frequency is 1 (they appear in NO other
-  // document) — a phrase-level originality signal complementing
-  // word-level rarity (text_rarity) and fingerprint overlap. Shape: one
-  // bigram-df aggregate (doc-level distinct first, so a phrase repeated
-  // inside one doc stays df=1), one keyed join back to the bigram
-  // stream, one doc-keyed agg; the division is exact-integer over
-  // exact-integer.
-  private def qNovelty(s: SparkSession, dir: String): DataFrame = {
-    val bg = TextOps.bigrams(docs(s, dir))
-    val dfq = bg.select(col("prefix"), col("next_word"), col("doc_id"))
-      .distinct()
-      .groupBy(col("prefix"), col("next_word"))
-      .agg(count(lit(1)).as("df"))
-    bg.join(dfq, Seq("prefix", "next_word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_novel"))
-      .select(col("doc_id"), col("n_bigrams"), col("n_novel"),
-        (col("n_novel").cast("double") / col("n_bigrams").cast("double"))
-          .as("novelty"))
-      .orderBy(col("doc_id"))
-  }
-
-  private val sqlNovelty: String =
-    s"""WITH $sqlLmCtes,
-       |dfq AS (
-       |  SELECT prefix, next_word,
-       |    CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-       |  FROM bg GROUP BY prefix, next_word
-       |)
-       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       |  CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_novel,
-       |  CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / CAST(COUNT(*) AS DOUBLE) AS novelty
-       |FROM bg JOIN dfq USING (prefix, next_word)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  // ------------------------------------------------- corpus_stratified
-  // Per-source stratified sample: up to StratN docs per source, selected
-  // by the deterministic md5(doc_id # seed) order — reproducible uniform
-  // sampling per stratum, the "per-domain cap" a crawl-mixture pipeline
-  // applies before global mixing. One keyed rank window per source
-  // (WindowGroupLimit-bounded); the hash makes the draw seed-stable on
-  // both engines.
-  private val StratPerSource = 25
-  private def qStratified(s: SparkSession, dir: String): DataFrame = {
-    val bySource = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"),
-        md5(concat(col("doc_id").cast("string"), lit("#s42"))).as("h"))
-      .withColumn("rk", row_number().over(bySource))
-      .filter(col("rk") <= StratPerSource)
-      .select(col("source"), col("rk"), col("doc_id"))
-      .orderBy(col("source"), col("rk"))
-  }
-
-  private val sqlStratified: String =
-    s"""SELECT source, rk, doc_id FROM (
-       |  SELECT source, doc_id,
-       |    ROW_NUMBER() OVER (PARTITION BY source
-       |      ORDER BY md5(CAST(doc_id AS VARCHAR) || '#s42'), doc_id) AS rk
-       |  FROM documents
-       |)
-       |WHERE rk <= $StratPerSource
-       |ORDER BY source, rk""".stripMargin
-
-  // ------------------------------------------------- corpus_curriculum
-  // Curriculum staging: bucket the corpus into quality quartiles for
-  // staged training (ascending-quality curricula train low→high). Scale
-  // shape: the cut points are ONE tiny percentile aggregate broadcast
-  // back (never a global ntile window over the corpus — at 100 TB a
-  // |docs|-sized global sort is the wrong plan); stage assignment is then
-  // map-side, and the report is one 4-group hash agg. The interpolated
-  // percentile doubles are emitted by the identical expression in both
-  // engines (the sketch_percentile discipline), so the <= comparisons
-  // agree bit-for-bit.
-  private def qCurriculum(s: SparkSession, dir: String): DataFrame = {
-    val scored = TextOps.quality(Tables.documents(s, dir))
-      .select(col("doc_id"), col("quality_score"))
-    val cuts = scored.agg(
-      expr("percentile(quality_score, array(0.25, 0.5, 0.75))").as("cuts"))
-    scored
-      .join(Tables.documents(s, dir).select(col("doc_id"), col("n_chars")),
-        Seq("doc_id"))
-      .crossJoin(broadcast(cuts))
-      .withColumn("stage",
-        when(col("quality_score") <= col("cuts")(0), 0)
-          .when(col("quality_score") <= col("cuts")(1), 1)
-          .when(col("quality_score") <= col("cuts")(2), 2)
-          .otherwise(3))
-      .groupBy(col("stage"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("total_chars"),
-        min(col("quality_score")).as("min_score"),
-        max(col("quality_score")).as("max_score"))
-      .orderBy(col("stage"))
-  }
-
-  private val sqlCurriculum: String =
-    s"""WITH ws AS (
-       |  ${TextOps.sqlWordStats().linesIterator.mkString("\n  ")}
-       |), q AS (
-       |  SELECT doc_id, ${TextOps.SqlScoreExpr} AS quality_score FROM ws
-       |), c AS (
-       |  SELECT quantile_cont(quality_score, 0.25) AS q1,
-       |    quantile_cont(quality_score, 0.5) AS q2,
-       |    quantile_cont(quality_score, 0.75) AS q3
-       |  FROM q
-       |), staged AS (
-       |  SELECT d.n_chars, q.quality_score,
-       |    CASE WHEN quality_score <= q1 THEN 0
-       |         WHEN quality_score <= q2 THEN 1
-       |         WHEN quality_score <= q3 THEN 2
-       |         ELSE 3 END AS stage
-       |  FROM q JOIN documents d USING (doc_id), c
-       |)
-       |SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       |  MIN(quality_score) AS min_score, MAX(quality_score) AS max_score
-       |FROM staged GROUP BY stage ORDER BY stage""".stripMargin
-
-  // ------------------------------------------------- events_sequences
-  // Per-user bounded event sequences — the "user history → fixed-length
-  // training example" exporter behind behavioral/session models. Shape:
-  // ONE user-keyed exchange shared by the rank window and the aggregate;
-  // the collect carries AT MOST SeqMaxLen structs per user (rows past the
-  // rank bound enter the aggregate as NULL, which collect_list skips), so
-  // per-group state is bounded no matter how hot a user is — a bare
-  // collect_list-then-slice would buffer the whole history first.
-  private val SeqMaxLen = 8
-  private def qSequences(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull &&
-        col("event_type").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("rn", row_number().over(w))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sort_array(collect_list(when(col("rn") <= SeqMaxLen,
-          struct(col("rn"), col("event_type"))))).as("evs"))
-      .select(col("user_id"), col("n_events"),
-        array_join(transform(col("evs"), e => e.getField("event_type")), ",")
-          .as("seq"))
-      .orderBy(col("user_id"))
-  }
-
-  private val sqlSequences: String =
-    s"""SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-       |  array_to_string(list_slice(
-       |    list(event_type ORDER BY CAST(ts AS TIMESTAMP), event_id),
-       |    1, $SeqMaxLen), ',') AS seq
-       |FROM events
-       |WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |  AND event_type IS NOT NULL
-       |GROUP BY user_id ORDER BY user_id""".stripMargin
-
-  // ------------------------------------------------- events_attribution
-  // Last-touch attribution: each purchase is credited to the user's most
-  // recent PRIOR non-purchase event, attributed only when the touch falls
-  // inside the 24 h window — the marketing-analytics staple. Shape: ONE
-  // user-keyed exchange; the ignore-nulls `last` over the
-  // unbounded-preceding frame is a running O(1)-state scan per partition
-  // (never a per-row backward search), and purchases filter AFTER the
-  // window so every event still feeds the running state.
-  private val AttribWindowUs = 86400000000L // 24 h
-  private def qAttribution(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Changelog
-      .lastTouch(Tables.eventsCached(s, dir), "purchase", AttribWindowUs)
-      .orderBy(col("purchase_id"))
-
-  private val sqlAttribution: String =
-    s"""WITH e AS (
-       |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-       |  FROM events
-       |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |    AND event_type IS NOT NULL
-       |), s AS (
-       |  SELECT *, LAST_VALUE(CASE WHEN event_type <> 'purchase'
-       |      THEN struct_pack(t := ts, e := event_id, ty := event_type)
-       |      END IGNORE NULLS)
-       |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
-       |  FROM e
-       |)
-       |SELECT event_id AS purchase_id, user_id, ts AS purchase_ts,
-       |  touch.e AS touch_id, touch.ty AS touch_type, touch.t AS touch_ts,
-       |  epoch_us(ts) - epoch_us(touch.t) AS gap_us,
-       |  (epoch_us(ts) - epoch_us(touch.t) IS NOT NULL
-       |   AND epoch_us(ts) - epoch_us(touch.t) <= $AttribWindowUs)
-       |    AS attributed
-       |FROM s WHERE event_type = 'purchase'
-       |ORDER BY purchase_id""".stripMargin
-
-  // ------------------------------------------------- scd_intervals
-  // Changelog → SCD2 interval table: the history-table builder that turns
-  // an append-only change stream into (valid_from, valid_to] version rows
-  // — the durable shape behind point-in-time queries, and the interval
-  // twin of the flagship active-flag merge (§2.5). Shape: ONE user-keyed
-  // lead window; valid_to is simply the next change's timestamp (NULL =
-  // open/current). No join, no second scan — at 100 TB the changelog
-  // shuffles exactly once on its key.
-  private def qScdIntervals(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Changelog.intervals(Tables.eventsCached(s, dir))
-      .orderBy(col("user_id"), col("valid_from"), col("event_id"))
-
-  private val sqlScdIntervals: String =
-    """WITH e AS (
-      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
-      |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-      |)
-      |SELECT user_id, ts AS valid_from,
-      |  LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-      |    AS valid_to,
-      |  event_id, value,
-      |  (LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-      |    IS NULL) AS is_current
-      |FROM e
-      |ORDER BY user_id, valid_from, event_id""".stripMargin
-
-  // ------------------------------------------------- scd_gc
-  // Temporal-table VACUUM: Changelog.gcIntervals at the time-travel
-  // horizon — the kept set is the minimal subset preserving every as-of
-  // at t >= horizon (invariance property-tested in Round4ExtSpec).
-  private def qScdGc(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Changelog.gcIntervals(
-      graft.operators.Changelog.intervals(Tables.eventsCached(s, dir)),
-      lit("2024-01-15 00:00:00").cast("timestamp_ntz"))
-      .orderBy(col("user_id"), col("valid_from"), col("event_id"))
-
-  private val sqlScdGc: String =
-    s"""SELECT * FROM (
-       |  ${sqlScdIntervals.linesIterator.mkString("\n  ")}
-       |) WHERE valid_to IS NULL
-       |   OR valid_to > TIMESTAMP '2024-01-15 00:00:00'
-       |ORDER BY user_id, valid_from, event_id""".stripMargin
-
-  // ------------------------------------------------- scd_timetravel
-  // Point-in-time reconstruction: the table state AS OF a cutoff — the
-  // query the SCD2 interval table exists to serve. Implemented as a thin
-  // argmax (filter to ts ≤ cutoff, ONE per-key max over a (ts, event_id,
-  // …) struct), NOT as intervals-then-filter: the argmax needs no window
-  // sort and partial-aggregates map-side, so at 100 TB only |keys| thin
-  // structs reach the exchange. The n_versions audit column counts the
-  // versions the cutoff superseded.
-  private val TimeTravelCutoff = "2024-01-15 00:00:00"
-  private def qTimeTravel(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Changelog.asOf(Tables.eventsCached(s, dir),
-      lit(TimeTravelCutoff).cast("timestamp"))
-      .orderBy(col("user_id"))
-
-  private val sqlTimeTravel: String =
-    s"""WITH e AS (
-       |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-       |    event_type, value
-       |  FROM events
-       |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |    AND CAST(ts AS TIMESTAMP) <= TIMESTAMP '$TimeTravelCutoff'
-       |)
-       |SELECT user_id,
-       |  (max(struct_pack(t := ts, e := event_id, ty := event_type,
-       |                   v := value))).t AS as_of_ts,
-       |  (max(struct_pack(t := ts, e := event_id, ty := event_type,
-       |                   v := value))).e AS event_id,
-       |  (max(struct_pack(t := ts, e := event_id, ty := event_type,
-       |                   v := value))).ty AS event_type,
-       |  (max(struct_pack(t := ts, e := event_id, ty := event_type,
-       |                   v := value))).v AS value,
-       |  CAST(COUNT(*) AS BIGINT) AS n_versions
-       |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin
-
-  // ------------------------------------------------- scd_interval_merge
-  // Incremental interval maintenance (Changelog.mergeIntervals): untouched
-  // keys pass through with NO window; touched keys rebuild from their own
-  // rows + the batch. The oracle is the FULL recompute (sqlScdIntervals) —
-  // the gate proves the incremental path equals the from-scratch build.
-  private def qIntervalMerge(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventsCached(s, dir)
-    // pin the derived state: in production it is a STORED table, and the
-    // merge reads it twice (semi + anti) — unpinned, each consumer would
-    // re-run the interval window over the history
-    val state = graft.operators.Iterate.pin(graft.operators.Changelog
-      .intervals(ev.filter(col("event_id") % 5 =!= 0)))
-    graft.operators.Changelog
-      .mergeIntervals(state, ev.filter(col("event_id") % 5 === 0))
-      .orderBy(col("user_id"), col("valid_from"), col("event_id"))
-  }
-
-  // ------------------------------------------------- events_multitouch
-  // Linear multi-touch attribution (Changelog.multiTouch): RangeJoin
-  // composition — bucket-explode equi join, never a nested-loop BETWEEN —
-  // then one conversion-keyed count window and an exact-decimal 1/n
-  // credit sum.
-  private def qMultiTouch(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Changelog.multiTouch(Tables.eventsCached(s, dir), "purchase",
-      AttribWindowUs, AttribWindowUs)
-      .orderBy(col("touch_type"))
-
-  private val sqlMultiTouch: String =
-    s"""WITH e AS (
-       |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-       |  FROM events
-       |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |    AND event_type IS NOT NULL
-       |), p AS (
-       |  SELECT event_id AS conv_id, user_id, ts AS conv_ts
-       |  FROM e WHERE event_type = 'purchase'
-       |), t AS (
-       |  SELECT event_id AS touch_id, user_id, event_type AS touch_type, ts
-       |  FROM e WHERE event_type <> 'purchase'
-       |), j AS (
-       |  SELECT conv_id, touch_type
-       |  FROM t JOIN p USING (user_id)
-       |  WHERE epoch_us(conv_ts) - epoch_us(t.ts) <= $AttribWindowUs
-       |    AND t.ts < conv_ts
-       |), n AS (
-       |  SELECT conv_id, CAST(COUNT(*) AS BIGINT) AS n_touches
-       |  FROM j GROUP BY conv_id
-       |)
-       |SELECT touch_type, CAST(COUNT(*) AS BIGINT) AS n_assists,
-       |  ${sqlSum("CAST(1 AS DOUBLE) / n_touches", 6)} AS credit
-       |FROM j JOIN n USING (conv_id)
-       |GROUP BY touch_type ORDER BY touch_type""".stripMargin
-
-  // ------------------------------------------------- q49_funnel_windowed
-  // Time-BOUND funnel: view → click within 1 h of the view → purchase
-  // within 1 h of that click (q36 is the unconstrained variant). First-
-  // touch anchoring — each stage matches the EARLIEST qualifying event
-  // after the previous stage's anchor; a user whose first anchor's window
-  // expires does not restart (the standard first-touch funnel contract,
-  // stated so the oracle encodes the same rule). Same single user-keyed
-  // window shape as q36: the bound is one extra predicate per stage, not
-  // a join.
-  private val FunnelWindowUs = 3600000000L // 1 h
-  private def qFunnelWindowed(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-    def within(ts: Column, anchor: Column): Column =
-      ts > anchor &&
-        unix_micros(ts) - unix_micros(anchor) <= FunnelWindowUs
-    val staged = Tables.eventsCached(s, dir)
-      // NULL-ts events can anchor no stage and can satisfy no window
-      // bound — dropped up front, and the oracle's base CTE drops them
-      // identically (a NULL-ts view row must not count a user into
-      // stage 1 on one engine only)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .withColumn("v_ts",
-        min(when(col("event_type") === "view", col("ts"))).over(w))
-      .withColumn("c_ts",
-        min(when(col("event_type") === "click" &&
-          within(col("ts"), col("v_ts")), col("ts"))).over(w))
-      .withColumn("p_ts",
-        min(when(col("event_type") === "purchase" &&
-          within(col("ts"), col("c_ts")), col("ts"))).over(w))
-    staged.groupBy(col("user_id"))
-      .agg(min(col("v_ts")).as("v_ts"), min(col("c_ts")).as("c_ts"),
-        min(col("p_ts")).as("p_ts"))
-      .agg(count(col("v_ts")).as("v"), count(col("c_ts")).as("c"),
-        count(col("p_ts")).as("p"))
-      .select(explode(array(
-        struct(lit("1_view").as("stage"), col("v").as("n_users")),
-        struct(lit("2_click_within_1h").as("stage"), col("c").as("n_users")),
-        struct(lit("3_purchase_within_1h").as("stage"),
-          col("p").as("n_users")))).as("s"))
-      .select(col("s.stage"), col("s.n_users"))
-      .orderBy(col("stage"))
-  }
-
-  private val sqlFunnelWindowed: String =
-    s"""WITH ev AS (
-       |  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-       |  FROM events WHERE ts IS NOT NULL
-       |), v AS (
-       |  SELECT user_id, MIN(ts) AS v_ts FROM ev
-       |  WHERE event_type = 'view' GROUP BY user_id
-       |), c AS (
-       |  SELECT e.user_id, MIN(e.ts) AS c_ts
-       |  FROM ev e JOIN v ON e.user_id = v.user_id
-       |  WHERE e.event_type = 'click' AND e.ts > v.v_ts
-       |    AND epoch_us(e.ts) - epoch_us(v.v_ts) <= $FunnelWindowUs
-       |  GROUP BY e.user_id
-       |), p AS (
-       |  SELECT e.user_id, MIN(e.ts) AS p_ts
-       |  FROM ev e JOIN c ON e.user_id = c.user_id
-       |  WHERE e.event_type = 'purchase' AND e.ts > c.c_ts
-       |    AND epoch_us(e.ts) - epoch_us(c.c_ts) <= $FunnelWindowUs
-       |  GROUP BY e.user_id
-       |)
-       |SELECT stage, n_users FROM (
-       |  SELECT '1_view' AS stage,
-       |    CAST((SELECT COUNT(*) FROM v) AS BIGINT) AS n_users
-       |  UNION ALL
-       |  SELECT '2_click_within_1h',
-       |    CAST((SELECT COUNT(*) FROM c) AS BIGINT)
-       |  UNION ALL
-       |  SELECT '3_purchase_within_1h',
-       |    CAST((SELECT COUNT(*) FROM p) AS BIGINT)
-       |) ORDER BY stage""".stripMargin
-
-  // ------------------------------------------------- events_gap_stats
-  // Inter-event gap distribution — the data that justifies (or retunes)
-  // the sessionizer's 30-minute gap threshold and the debounce window:
-  // exact interpolated percentiles of per-user gaps plus the exact share
-  // of gaps under the current threshold. ONE user-keyed lag window, one
-  // tiny percentile aggregate; gaps are exact integer micros, converted
-  // to seconds by one double division.
-  private def qGapStats(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("gap_us",
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-      .filter(col("gap_us").isNotNull)
-      .agg(count(lit(1)).as("n_gaps"),
-        expr("percentile(gap_us, array(0.5, 0.9, 0.99))").as("p"),
-        sum(when(col("gap_us") <= Sessionize.GapMicros, 1L).otherwise(0L))
-          .as("n_within"))
-      .select(col("n_gaps"),
-        (col("p")(0) / 1e6).as("p50_s"),
-        (col("p")(1) / 1e6).as("p90_s"),
-        (col("p")(2) / 1e6).as("p99_s"),
-        (col("n_within").cast("double") / col("n_gaps").cast("double"))
-          .as("share_within_gap"))
-  }
-
-  private val sqlGapStats: String =
-    s"""WITH g AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP))
-       |    - LAG(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
-       |        PARTITION BY user_id
-       |        ORDER BY CAST(ts AS TIMESTAMP), event_id) AS gap_us
-       |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |)
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_gaps,
-       |  quantile_cont(gap_us, 0.5) / 1e6 AS p50_s,
-       |  quantile_cont(gap_us, 0.9) / 1e6 AS p90_s,
-       |  quantile_cont(gap_us, 0.99) / 1e6 AS p99_s,
-       |  CAST(SUM(CASE WHEN gap_us <= ${Sessionize.GapMicros}
-       |       THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS share_within_gap
-       |FROM g WHERE gap_us IS NOT NULL""".stripMargin
-
-  // ------------------------------------------------- events_rfm
-  // RFM segmentation (recency / frequency / monetary, the classic
-  // customer-scoring frame): per-user purchase aggregates, then quintile
-  // scores per dimension. The scale point is how the quintiles are
-  // assigned: ONE tiny percentile aggregate of cut points broadcast back
-  // and a map-side <=-chain — never ntile() over the user frame, whose
-  // global sort is a single-partition funnel at 10⁹ users (the
-  // corpus_curriculum discipline). Recency is exact integer day
-  // arithmetic; monetary goes through the exact-decimal sum.
-  private val RfmCutoffLit = "2024-02-01 00:00:00"
-  private def qRfm(s: SparkSession, dir: String): DataFrame = {
-    val cutoffUs = java.time.LocalDateTime.parse(
-      RfmCutoffLit.replace(' ', 'T'))
-      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
-    val perUser = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull &&
-        col("event_type") === "purchase")
-      .groupBy(col("user_id"))
-      .agg(
-        ((lit(cutoffUs) - max(unix_micros(col("ts")))) / lit(86400000000L))
-          .cast("long").as("recency_days"),
-        count(lit(1)).as("frequency"),
-        xsum(col("value")).as("monetary"))
-    val cuts = perUser.agg(
-      expr("percentile(recency_days, array(0.2, 0.4, 0.6, 0.8))").as("rc"),
-      expr("percentile(frequency, array(0.2, 0.4, 0.6, 0.8))").as("fc"),
-      expr("percentile(monetary, array(0.2, 0.4, 0.6, 0.8))").as("mc"))
-    def score(v: Column, c: Column): Column =
-      when(v <= c(0), 1).when(v <= c(1), 2).when(v <= c(2), 3)
-        .when(v <= c(3), 4).otherwise(5)
-    perUser.crossJoin(broadcast(cuts))
-      .select(col("user_id"), col("recency_days"), col("frequency"),
-        col("monetary"),
-        score(col("recency_days").cast("double"), col("rc")).as("r_score"),
-        score(col("frequency").cast("double"), col("fc")).as("f_score"),
-        score(col("monetary"), col("mc")).as("m_score"))
-      .orderBy(col("user_id"))
-  }
-
-  private val sqlRfm: String = {
-    def score(v: String, c: String) =
-      s"""CASE WHEN $v <= ${c}1 THEN 1 WHEN $v <= ${c}2 THEN 2
-         |       WHEN $v <= ${c}3 THEN 3 WHEN $v <= ${c}4 THEN 4
-         |       ELSE 5 END""".stripMargin
-    s"""WITH pu AS (
-       |  SELECT user_id,
-       |    CAST((epoch_us(TIMESTAMP '$RfmCutoffLit')
-       |      - epoch_us(MAX(CAST(ts AS TIMESTAMP)))) // 86400000000
-       |      AS BIGINT) AS recency_days,
-       |    CAST(COUNT(*) AS BIGINT) AS frequency,
-       |    ${sqlSum("value")} AS monetary
-       |  FROM events
-       |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |    AND event_type = 'purchase'
-       |  GROUP BY user_id
-       |), c AS (
-       |  SELECT
-       |    quantile_cont(recency_days, 0.2) AS rc1,
-       |    quantile_cont(recency_days, 0.4) AS rc2,
-       |    quantile_cont(recency_days, 0.6) AS rc3,
-       |    quantile_cont(recency_days, 0.8) AS rc4,
-       |    quantile_cont(frequency, 0.2) AS fc1,
-       |    quantile_cont(frequency, 0.4) AS fc2,
-       |    quantile_cont(frequency, 0.6) AS fc3,
-       |    quantile_cont(frequency, 0.8) AS fc4,
-       |    quantile_cont(monetary, 0.2) AS mc1,
-       |    quantile_cont(monetary, 0.4) AS mc2,
-       |    quantile_cont(monetary, 0.6) AS mc3,
-       |    quantile_cont(monetary, 0.8) AS mc4
-       |  FROM pu
-       |)
-       |SELECT user_id, recency_days, frequency, monetary,
-       |  ${score("CAST(recency_days AS DOUBLE)", "rc")} AS r_score,
-       |  ${score("CAST(frequency AS DOUBLE)", "fc")} AS f_score,
-       |  ${score("monetary", "mc")} AS m_score
-       |FROM pu, c
-       |ORDER BY user_id""".stripMargin
-  }
-
-  // ------------------------------------------------- events_agg_merge
-  // Incremental view maintenance for aggregations: a materialized hourly
-  // rollup absorbs a new batch by MERGING partial states, never
-  // rescanning history. The textbook trap is state that stores the
-  // PRESENTATION value (a rounded double): merged-then-rounded ≠
-  // rounded-then-merged, and the incremental table silently drifts from
-  // a recompute. Here the state keeps the EXACT decimal accumulator
-  // (count + DECIMAL(28,12) sum — both mergeable by addition); the one
-  // rounding to double happens at report time, so the gate can oracle
-  // the incremental path against the FULL recompute and hash-match.
-  private def qAggMerge(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val ev = Tables.events(s, dir).filter(col("ts").isNotNull)
-    def hourly(df: DataFrame): DataFrame = df
-      .groupBy(date_trunc("hour", col("ts")).as("hour"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(graft.functions.Exact.Dec)).as("sv"))
-    val state = hourly(ev.filter(col("event_id") % 5 =!= 0))
-    val delta = hourly(ev.filter(col("event_id") % 5 === 0))
-    state.unionByName(delta)
-      .groupBy(col("hour"))
-      .agg(sum(col("n")).as("n_events"),
-        sum(col("sv")).cast(DecimalType(38, 2)).cast("double")
-          .as("total_value"))
-      .select(col("hour").cast("timestamp_ntz").as("hour"),
-        col("n_events"), col("total_value"))
-      .orderBy(col("hour"))
-  }
-
-  private val sqlAggMerge: String =
-    s"""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
-       |  CAST(COUNT(*) AS BIGINT) AS n_events,
-       |  ${sqlSum("value")} AS total_value
-       |FROM events WHERE ts IS NOT NULL
-       |GROUP BY 1 ORDER BY hour""".stripMargin
-
-  // ------------------------------------------------- q48_window_funcs
-  // SQL-surface breadth for the remaining ranking/navigation window
-  // functions in one keyed pass: percent_rank, cume_dist, nth_value, and
-  // first/last over an explicit frame — all sharing ONE (returnflag)
-  // exchange. Both functions are exact rational values (rank-1)/(n-1)
-  // and rank/n of BIGINTs, so the doubles are engine-identical.
-  private def qWindowFuncs(s: SparkSession, dir: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val w0 = W.partitionBy(col("l_returnflag"))
-      .orderBy(col("l_extendedprice"), col("l_orderkey"))
-    val full = w0.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    Tables.lineitem(s, dir)
-      .filter(col("l_linenumber") === 1 && col("l_orderkey") % 100 === 0)
-      .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
-      .withColumn("pct_rank", percent_rank().over(w0))
-      .withColumn("cume", cume_dist().over(w0))
-      .withColumn("third_cheapest",
-        nth_value(col("l_extendedprice"), 3).over(full))
-      .orderBy(col("l_returnflag"), col("l_extendedprice"), col("l_orderkey"))
-  }
-
-  private val sqlWindowFuncs: String =
-    """SELECT l_orderkey, l_returnflag, l_extendedprice,
-      |  percent_rank() OVER w0 AS pct_rank,
-      |  cume_dist() OVER w0 AS cume,
-      |  nth_value(l_extendedprice, 3) OVER (
-      |    PARTITION BY l_returnflag
-      |    ORDER BY l_extendedprice, l_orderkey
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      |    AS third_cheapest
-      |FROM lineitem
-      |WHERE l_linenumber = 1 AND l_orderkey % 100 = 0
-      |WINDOW w0 AS (PARTITION BY l_returnflag
-      |              ORDER BY l_extendedprice, l_orderkey)
-      |ORDER BY l_returnflag, l_extendedprice, l_orderkey""".stripMargin
-
-  // ------------------------------------------------- q47_session_incidents
-  // Interval-OVERLAP join (both sides intervals): which user sessions
-  // overlap an error-incident window? Sessions come from the gap
-  // sessionizer; incidents are debounced error events each opening a
-  // 30-minute window. The pairing is RangeJoin.intervalOverlap — bucket
-  // explode both sides, ONE equi join, canonical-bucket dedup (no
-  // distinct pass) — while the oracle runs the naive BETWEEN join: the
-  // gate proves the bucketized plan computes the identical pair set.
-  private val IncidentWindowUs = 1800000000L // 30 min
-  private def qSessionIncidents(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventsCached(s, dir)
-    val sessions = Sessionize.sessions(ev).select(
-      col("user_id"), col("session_seq"),
-      col("session_start").cast("timestamp").as("s_start"),
-      col("session_end").cast("timestamp").as("s_end"))
-    val incidents = Sessionize
-      .debounce(ev.filter(col("event_type") === "error"), IncidentWindowUs)
-      .select(col("user_id"), col("event_id").as("incident_id"),
-        col("ts").cast("timestamp").as("i_start"),
-        timestamp_micros(unix_micros(col("ts").cast("timestamp"))
-          + IncidentWindowUs).as("i_end"))
-    graft.operators.RangeJoin.intervalOverlap(sessions, incidents,
-        Seq("user_id"), "s_start", "s_end", "i_start", "i_end",
-        IncidentWindowUs)
-      .select(col("user_id"), col("session_seq"), col("incident_id"),
-        (least(unix_micros(col("s_end")), unix_micros(col("i_end")))
-          - greatest(unix_micros(col("s_start")), unix_micros(col("i_start"))))
-          .as("overlap_us"))
-      .orderBy(col("user_id"), col("session_seq"), col("incident_id"))
-  }
-
-  private val sqlSessionIncidents: String =
-    s"""WITH sess AS (
-       |  ${Sessionize.sqlSessions.linesIterator.mkString("\n  ")}
-       |), e AS (
-       |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-       |  FROM events WHERE ts IS NOT NULL AND event_type = 'error'
-       |), deb AS (
-       |  SELECT *, lag(ts) OVER (PARTITION BY user_id
-       |                          ORDER BY ts, event_id) AS prev_ts
-       |  FROM e
-       |), inc AS (
-       |  SELECT user_id, event_id AS incident_id, ts AS i_start,
-       |    ts + INTERVAL 30 MINUTE AS i_end
-       |  FROM deb
-       |  WHERE prev_ts IS NULL
-       |     OR epoch_us(ts) - epoch_us(prev_ts) > $IncidentWindowUs
-       |)
-       |SELECT s.user_id, s.session_seq, i.incident_id,
-       |  least(epoch_us(s.session_end), epoch_us(i.i_end))
-       |    - greatest(epoch_us(s.session_start), epoch_us(i.i_start))
-       |    AS overlap_us
-       |FROM sess s JOIN inc i ON s.user_id = i.user_id
-       |  AND s.session_start <= i.i_end AND i.i_start <= s.session_end
-       |ORDER BY s.user_id, s.session_seq, i.incident_id""".stripMargin
-
-  // ------------------------------------------------- q46_revenue_by_nation
-  // The TPC-H Q5 shape: a five-way join (region → nation → customer →
-  // orders → lineitem ⋈ supplier) with the local-supplier condition
-  // (customer and supplier share a nation) and a revenue rollup. The
-  // judge of join planning: dims broadcast, the two fact tables meet in
-  // ONE shuffle join on orderkey, the nation-equality condition prunes
-  // inside the join, and revenue goes through the exact-decimal sum.
-  private def qRevenueByNation(s: SparkSession, dir: String): DataFrame = {
-    val dims = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-    val supp = Tables.supplier(s, dir)
-      .select(col("s_suppkey"), col("s_nationkey"))
-    dims
-      .join(Tables.orders(s, dir), col("c_custkey") === col("o_custkey"))
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey") &&
-        col("s_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("revenue").desc, col("n_name"))
-  }
-
-  private val sqlRevenueByNation: String =
-    s"""SELECT n_name,
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |    AS revenue,
-       |  CAST(COUNT(*) AS BIGINT) AS n_items
-       |FROM customer
-       |JOIN nation ON c_nationkey = n_nationkey
-       |JOIN region ON n_regionkey = r_regionkey
-       |JOIN orders ON c_custkey = o_custkey
-       |JOIN lineitem ON o_orderkey = l_orderkey
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |  AND s_nationkey = c_nationkey
-       |WHERE r_name = 'ASIA'
-       |GROUP BY n_name
-       |ORDER BY revenue DESC, n_name""".stripMargin
-
-  // ------------------------------------------------- q54_ship_priority
-  // TPC-H Q3 shape (shipping priority): unshipped-revenue top-10 for one
-  // market segment — the canonical dim-filter → fact⋈fact → grouped
-  // revenue → global top-k plan. Shape: the filtered customer keys
-  // broadcast to the orders scan (both date predicates push to the
-  // parquet scans), the ONE shuffle join is orders⋈lineitem on the
-  // order key, revenue goes through the exact-decimal detour, and the
-  // global top-10 collapses to TakeOrderedAndProject (sort pruned to
-  // k per partition — never a global window).
-  private val ShipPrioCutoff = "1998-06-01 00:00:00"
-  private def qShipPriority(s: SparkSession, dir: String): DataFrame = {
-    val cut = lit(ShipPrioCutoff).cast("timestamp")
-    val cust = Tables.customer(s, dir)
-      .filter(col("c_mktsegment") === "BUILDING")
-      .select(col("c_custkey"))
-    Tables.orders(s, dir).filter(col("o_orderdate") < cut)
-      .join(broadcast(cust), col("c_custkey") === col("o_custkey"))
-      .join(Tables.lineitem(s, dir).filter(col("l_shipdate") > cut),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"),
-        col("o_orderpriority"))
-      .agg(xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(10)
-      .select(col("l_orderkey"), col("revenue"),
-        col("o_orderdate").cast("timestamp_ntz").as("o_orderdate"),
-        col("o_orderpriority"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-  }
-
-  private val sqlShipPriority: String =
-    s"""SELECT l_orderkey,
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |    AS revenue,
-       |  o_orderdate, o_orderpriority
-       |FROM customer
-       |JOIN orders ON c_custkey = o_custkey
-       |JOIN lineitem ON o_orderkey = l_orderkey
-       |WHERE c_mktsegment = 'BUILDING'
-       |  AND o_orderdate < TIMESTAMP '$ShipPrioCutoff'
-       |  AND l_shipdate > TIMESTAMP '$ShipPrioCutoff'
-       |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-       |ORDER BY revenue DESC, l_orderkey
-       |LIMIT 10""".stripMargin
-
-  // ------------------------------------------------- q55_order_priority
-  // TPC-H Q4 shape (order-priority checking): orders in a date window
-  // with at least one late lineitem (commit proxy: shipped after the
-  // order date + 30 days), counted per priority — the canonical
-  // EXISTS-subquery → LEFT SEMI JOIN plan. The fixture lacks
-  // l_commitdate/l_receiptdate, so lateness is shipdate vs orderdate+30
-  // — same shape, same semi-join, oracle-identical definition. Date
-  // predicates push to both scans; the semi join shuffles each side
-  // once on the order key and the priority count is a ≤5-group
-  // aggregate.
-  private val OpcWindowStart = "1996-01-01 00:00:00"
-  private val OpcWindowEnd = "1997-01-01 00:00:00"
-  private def qOrderPriority(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit(OpcWindowStart).cast("timestamp") &&
-        col("o_orderdate") < lit(OpcWindowEnd).cast("timestamp"))
-    val late = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_shipdate"))
-    o.join(late, col("o_orderkey") === col("l_orderkey") &&
-        col("l_shipdate") > expr("o_orderdate + INTERVAL 30 DAYS"),
-        "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  private val sqlOrderPriority: String =
-    s"""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-       |FROM orders o
-       |WHERE o_orderdate >= TIMESTAMP '$OpcWindowStart'
-       |  AND o_orderdate < TIMESTAMP '$OpcWindowEnd'
-       |  AND EXISTS (
-       |    SELECT 1 FROM lineitem l
-       |    WHERE l.l_orderkey = o.o_orderkey
-       |      AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY
-       |  )
-       |GROUP BY o_orderpriority
-       |ORDER BY o_orderpriority""".stripMargin
-
-  // ------------------------------------------------- q56_forecast_revenue
-  // TPC-H Q6 shape (forecasting revenue change): the pure
-  // scan-filter-aggregate — what revenue would have been gained had
-  // discounts in a band been eliminated for small orders in one year.
-  // Every predicate pushes to the parquet scan (the plan is ONE scan +
-  // ONE single-row aggregate, no join, no shuffle beyond the final
-  // partial-merge); revenue goes through the exact-decimal detour at
-  // scale 4 (price × discount carries 4 decimals).
-  private def qForecastRevenue(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit("1997-01-01 00:00:00").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01 00:00:00").cast("timestamp") &&
-        col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-        col("l_quantity") < 24)
-      .agg(xsum(col("l_extendedprice") * col("l_discount"), 4)
-        .as("revenue"),
-        count(lit(1)).as("n_items"))
-
-  private val sqlForecastRevenue: String =
-    s"""SELECT ${graft.functions.Exact.sqlSum(
-      "l_extendedprice * l_discount", 4)} AS revenue,
-       |  CAST(COUNT(*) AS BIGINT) AS n_items
-       |FROM lineitem
-       |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-       |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-       |  AND l_discount >= 0.05 AND l_discount <= 0.07
-       |  AND l_quantity < 24""".stripMargin
-
-  // ------------------------------------------------- q57_returned_customers
-  // TPC-H Q10 shape (returned-item reporting): top customers by revenue
-  // lost to returns in a date window — dim join broadcasts, the
-  // fact⋈fact meets in ONE shuffle on the order key, and the global
-  // top-k collapses to TakeOrderedAndProject.
-  private val RetTopK = 20
-  private def qReturnedCustomers(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
-        col("o_orderdate") < lit("1996-07-01 00:00:00").cast("timestamp"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-    val cust = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name"))
-    o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_custkey"))
-      .agg(xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("revenue"),
-        count(lit(1)).as("n_items"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .orderBy(col("revenue").desc, col("o_custkey"))
-      .limit(RetTopK)
-      .select(col("o_custkey").as("c_custkey"), col("c_name"),
-        col("n_name"), col("revenue"), col("n_items"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-  }
-
-  private val sqlReturnedCustomers: String =
-    s"""SELECT c_custkey, c_name, n_name,
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |    AS revenue,
-       |  CAST(COUNT(*) AS BIGINT) AS n_items
-       |FROM orders
-       |JOIN lineitem ON o_orderkey = l_orderkey
-       |JOIN customer ON o_custkey = c_custkey
-       |JOIN nation ON c_nationkey = n_nationkey
-       |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-       |  AND o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-       |  AND l_returnflag = 'R'
-       |GROUP BY c_custkey, c_name, n_name
-       |ORDER BY revenue DESC, c_custkey
-       |LIMIT $RetTopK""".stripMargin
-
-  // ------------------------------------------------- q58_promo_revenue
-  // TPC-H Q14 shape (promotion effect): the fraction of one month's
-  // revenue that came from promo-typed parts — a single fact⋈dim join
-  // with a conditional aggregate. The date band pushes to the lineitem
-  // scan, `part` broadcasts (it is the small side here; at 100 TB the
-  // same plan holds because part is ~1/30 of lineitem and only two
-  // columns survive pruning), and both sums ride ONE hash aggregate.
-  // The percentage is one IEEE multiply+divide over two exact-decimal
-  // sums — deterministic across engines.
-  private val PromoMonthStart = "1997-03-01 00:00:00"
-  private val PromoMonthEnd   = "1997-04-01 00:00:00"
-  private def qPromoRevenue(s: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(s, dir).select(col("p_partkey"), col("p_type"))
-    val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit(PromoMonthStart).cast("timestamp") &&
-        col("l_shipdate") < lit(PromoMonthEnd).cast("timestamp"))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .agg(
-        xsum(when(col("p_type") === "PROMO", rev).otherwise(lit(0.0)))
-          .as("promo_revenue"),
-        xsum(rev).as("total_revenue"))
-      .withColumn("promo_pct",
-        lit(100.0) * col("promo_revenue") / col("total_revenue"))
-  }
-
-  private val sqlPromoRevenue: String =
-    s"""SELECT promo_revenue, total_revenue,
-       |  CAST(100 AS DOUBLE) * promo_revenue / total_revenue AS promo_pct
-       |FROM (
-       |  SELECT
-       |    ${sqlSum("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * " +
-      "(CAST(1 AS DOUBLE) - l_discount) ELSE CAST(0 AS DOUBLE) END")}
-       |      AS promo_revenue,
-       |    ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |      AS total_revenue
-       |  FROM lineitem JOIN part ON l_partkey = p_partkey
-       |  WHERE l_shipdate >= TIMESTAMP '$PromoMonthStart'
-       |    AND l_shipdate < TIMESTAMP '$PromoMonthEnd')""".stripMargin
-
-  // ------------------------------------------------- q59_large_orders
-  // TPC-H Q18 shape (large-volume customers): orders whose total
-  // quantity clears a threshold, joined back to customer — the
-  // aggregate-then-join plan. lineitem aggregates FIRST (one shuffle on
-  // the order key, partial map-side combine), the surviving hundreds of
-  // rows broadcast into orders and then into customer, so neither big
-  // table shuffles; the global top-k is TakeOrderedAndProject.
-  private val LargeOrderQty = 250.0
-  private val LargeOrderTopK = 50
-  private def qLargeOrders(s: SparkSession, dir: String): DataFrame = {
-    val big = Tables.lineitem(s, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(xsum(col("l_quantity"), 6).as("total_qty"))
-      .filter(col("total_qty") > lit(LargeOrderQty))
-    val withOrders = Tables.orders(s, dir)
-      .join(broadcast(big), col("o_orderkey") === col("l_orderkey"))
-    Tables.customer(s, dir)
-      .join(broadcast(withOrders), col("c_custkey") === col("o_custkey"))
-      .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-        col("o_orderdate").cast("timestamp_ntz").as("o_orderdate"),
-        col("o_totalprice"), col("total_qty"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(LargeOrderTopK)
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-  }
-
-  private val sqlLargeOrders: String =
-    s"""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-       |  total_qty
-       |FROM (
-       |  SELECT l_orderkey, ${graft.functions.Exact.sqlSum("l_quantity", 6)}
-       |    AS total_qty
-       |  FROM lineitem GROUP BY l_orderkey) b
-       |JOIN orders ON o_orderkey = l_orderkey
-       |JOIN customer ON c_custkey = o_custkey
-       |WHERE total_qty > CAST($LargeOrderQty AS DOUBLE)
-       |ORDER BY o_totalprice DESC, o_orderkey
-       |LIMIT $LargeOrderTopK""".stripMargin
-
-  // ------------------------------------------------- q60_market_share
-  // TPC-H Q8 shape (national market share): one nation's share of a
-  // region's yearly order revenue. Customer-side dims (nation⋈region)
-  // broadcast into the orders probe; the supplier→nation lookup
-  // broadcasts into lineitem; the two facts meet in ONE shuffle on the
-  // order key. The share is a conditional exact sum over the total
-  // exact sum — one IEEE divide, deterministic.
-  private val MktShareNation = "NATION_1"
-  private val MktShareRegion = "ASIA"
-  private def qMarketShare(s: SparkSession, dir: String): DataFrame = {
-    val custAsia = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)
-          .filter(col("r_name") === MktShareRegion)),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"))
-    val suppNation = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))),
-        col("s_nationkey") === col("sn_key"))
-      .select(col("s_suppkey"), col("supp_nation"))
-    val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
-        col("o_orderdate") < lit("1998-01-01 00:00:00").cast("timestamp"))
-      .join(broadcast(custAsia), col("o_custkey") === col("c_custkey"))
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(year(col("o_orderdate")).as("o_year"))
-      .agg(
-        xsum(when(col("supp_nation") === MktShareNation, rev)
-          .otherwise(lit(0.0))).as("nation_revenue"),
-        xsum(rev).as("total_revenue"))
-      .withColumn("mkt_share",
-        col("nation_revenue") / col("total_revenue"))
-      .orderBy(col("o_year"))
-  }
-
-  private val sqlMarketShare: String =
-    s"""SELECT o_year, nation_revenue, total_revenue,
-       |  nation_revenue / total_revenue AS mkt_share
-       |FROM (
-       |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-       |    ${sqlSum("CASE WHEN supp_nation = '" + MktShareNation +
-      "' THEN l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) " +
-      "ELSE CAST(0 AS DOUBLE) END")} AS nation_revenue,
-       |    ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |      AS total_revenue
-       |  FROM orders
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-       |  JOIN region ON cn.n_regionkey = r_regionkey
-       |  JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  JOIN (SELECT n_nationkey AS sn_key, n_name AS supp_nation
-       |        FROM nation) sn ON s_nationkey = sn_key
-       |  WHERE r_name = '$MktShareRegion'
-       |    AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-       |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-       |  GROUP BY 1)
-       |ORDER BY o_year""".stripMargin
-
-  // ------------------------------------------------- q61_small_qty_revenue
-  // TPC-H Q17 shape (small-quantity-order revenue): lineitems whose
-  // quantity is below a fraction of their part's average quantity. The
-  // correlated scalar subquery decorrelates into aggregate-then-self-
-  // join: ONE shuffle of lineitem on the part key computes the per-part
-  // average, the re-join meets on the same key (co-partitioned — AQE
-  // reuses the exchange), and the compare is one IEEE multiply against
-  // the deterministic exact average.
-  private val SmallQtyFrac = 0.2
-  private def qSmallQtyRevenue(s: SparkSession, dir: String): DataFrame = {
-    val avgq = Tables.lineitem(s, dir)
-      .groupBy(col("l_partkey").as("pk"))
-      .agg(xavg(col("l_quantity")).as("avg_qty"))
-    Tables.lineitem(s, dir)
-      .join(avgq, col("l_partkey") === col("pk"))
-      .filter(col("l_quantity") < lit(SmallQtyFrac) * col("avg_qty"))
-      .agg(xsum(col("l_extendedprice")).as("revenue_small"),
-        count(lit(1)).as("n_items"))
-  }
-
-  private val sqlSmallQtyRevenue: String =
-    s"""SELECT ${sqlSum("l_extendedprice")} AS revenue_small,
-       |  CAST(COUNT(*) AS BIGINT) AS n_items
-       |FROM lineitem l
-       |JOIN (SELECT l_partkey AS pk, ${sqlAvg("l_quantity")} AS avg_qty
-       |      FROM lineitem GROUP BY 1) a ON l.l_partkey = a.pk
-       |WHERE l.l_quantity < CAST($SmallQtyFrac AS DOUBLE) * avg_qty""".stripMargin
-
-  // ------------------------------------------------- q62_order_count_dist
-  // TPC-H Q13 shape (customer order-count distribution): how many
-  // customers placed 0, 1, 2… non-urgent orders — the left-join →
-  // count → histogram double aggregation. The priority filter rides the
-  // join condition (pushes to the orders scan), COUNT(o_custkey) skips
-  // the null-extended rows so no-order customers land in bucket 0, and
-  // the second aggregate is over |distinct counts| rows — trivially
-  // small at any scale.
-  private def qOrderCountDist(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") =!= "1-URGENT")
-      .select(col("o_custkey"))
-    Tables.customer(s, dir)
-      .join(o, col("c_custkey") === col("o_custkey"), "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_custkey")).as("c_count"))
-      .groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
-
-  private val sqlOrderCountDist: String =
-    """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
-      |FROM (
-      |  SELECT c_custkey, CAST(COUNT(o_custkey) AS BIGINT) AS c_count
-      |  FROM customer
-      |  LEFT JOIN orders ON c_custkey = o_custkey
-      |    AND o_orderpriority <> '1-URGENT'
-      |  GROUP BY c_custkey)
-      |GROUP BY c_count
-      |ORDER BY custdist DESC, c_count DESC""".stripMargin
-
-  // ------------------------------------------------- q63_disjunctive_revenue
-  // TPC-H Q19 shape (discounted revenue, disjunctive predicates): three
-  // OR'd brand/size/quantity branches over a fact⋈dim join. Catalyst
-  // extracts the common conjuncts it can push (the join key) and leaves
-  // the disjunction as ONE codegen'd filter above the broadcast join —
-  // no plan blow-up, no cross product, and the part columns prune to
-  // (brand, size).
-  private def qDisjunctiveRevenue(s: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(s, dir)
-      .select(col("p_partkey"), col("p_brand"), col("p_size"))
-    val branch1 = col("p_brand") === "Brand#1" &&
-      col("p_size").between(1, 10) && col("l_quantity").between(1, 15)
-    val branch2 = col("p_brand") === "Brand#5" &&
-      col("p_size").between(11, 25) && col("l_quantity").between(10, 25)
-    val branch3 = col("p_brand") === "Brand#9" &&
-      col("p_size").between(26, 50) && col("l_quantity").between(20, 35)
-    Tables.lineitem(s, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .filter(branch1 || branch2 || branch3)
-      .agg(xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("revenue"),
-        count(lit(1)).as("n_items"))
-  }
-
-  private val sqlDisjunctiveRevenue: String =
-    s"""SELECT
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |    AS revenue,
-       |  CAST(COUNT(*) AS BIGINT) AS n_items
-       |FROM lineitem JOIN part ON l_partkey = p_partkey
-       |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
-       |       AND l_quantity BETWEEN 1 AND 15)
-       |   OR (p_brand = 'Brand#5' AND p_size BETWEEN 11 AND 25
-       |       AND l_quantity BETWEEN 10 AND 25)
-       |   OR (p_brand = 'Brand#9' AND p_size BETWEEN 26 AND 50
-       |       AND l_quantity BETWEEN 20 AND 35)""".stripMargin
-
-  // ------------------------------------------------- q64_dormant_customers
-  // TPC-H Q22 shape (global sales opportunity): well-funded customers
-  // with no recent orders, grouped by segment. The positive-balance
-  // average is a 1-row broadcast scalar (the standard scalar-subquery
-  // decorrelation), the "no recent order" probe is a LEFT ANTI join on
-  // the customer key, and the final aggregate has ≤5 groups. At 100 TB
-  // the anti join shuffles each side once on the customer key; nothing
-  // else moves.
-  private val DormantSince = "1999-01-01 00:00:00"
-  private def qDormantCustomers(s: SparkSession, dir: String): DataFrame = {
-    val avgBal = Tables.customer(s, dir)
-      .filter(col("c_acctbal") > lit(0.0))
-      .agg(xavg(col("c_acctbal")).as("avg_bal"))
-    val recent = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit(DormantSince).cast("timestamp"))
-      .select(col("o_custkey"))
-    Tables.customer(s, dir)
-      .crossJoin(broadcast(avgBal))
-      .filter(col("c_acctbal") > col("avg_bal"))
-      .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_customers"),
-        xsum(col("c_acctbal")).as("total_bal"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  private val sqlDormantCustomers: String =
-    s"""SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_customers,
-       |  ${sqlSum("c_acctbal")} AS total_bal
-       |FROM customer
-       |WHERE c_acctbal > (
-       |    SELECT ${sqlAvg("c_acctbal")} FROM customer
-       |    WHERE c_acctbal > CAST(0 AS DOUBLE))
-       |  AND NOT EXISTS (
-       |    SELECT 1 FROM orders WHERE o_custkey = c_custkey
-       |    AND o_orderdate >= TIMESTAMP '$DormantSince')
-       |GROUP BY c_mktsegment
-       |ORDER BY c_mktsegment""".stripMargin
-
-  // ------------------------------------------------- q65_waiting_suppliers
-  // TPC-H Q21 shape (suppliers who kept orders waiting): in finished
-  // multi-supplier orders, the supplier(s) whose shipment was the
-  // last — the canonical exists/not-exists pair, decorrelated here into
-  // aggregate-then-rejoin: ONE shuffle of lineitem on (orderkey,
-  // suppkey), a per-order rollup of that (same key prefix — no second
-  // wide shuffle), a co-partitioned re-join, and a semi join against
-  // the finished-orders scan. Ties on the order's last ship date count
-  // every tied supplier (the reference EXISTS semantics).
-  private def qWaitingSuppliers(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // ONE scan, ONE wide exchange (round 11): the aggregate-then-rejoin
-    // decorrelation planned the per-(order, supplier) aggregate TWICE —
-    // the semi-join pushdown made the two subtrees non-identical, so
-    // exchange reuse never fired and lineitem was scanned and
-    // aggregated once per join side. Repartitioning by the PARENT key
-    // first satisfies the (orderkey, suppkey) aggregation (subset
-    // clustering) AND the per-order window, so the rollup and the
-    // re-attach run as a window over the same exchange — no self-join,
-    // no second scan (guide §2.4). Partial aggregation before the
-    // exchange bought nothing here: (orderkey, suppkey) is near-unique
-    // in lineitem, so the raw projected rows shuffle the same bytes.
-    val w = Window.partitionBy(col("l_orderkey"))
-    val per = Tables.lineitem(s, dir)
-      .repartition(col("l_orderkey"))
-      .groupBy(col("l_orderkey"), col("l_suppkey"))
-      .agg(max(col("l_shipdate")).as("supp_last"))
-    val finished = Tables.orders(s, dir)
-      .filter(col("o_orderstatus") === "F")
-      .select(col("o_orderkey"))
-    // the semi prunes whole orders (its key IS the window partition
-    // key), so applying it before the window drops the same rows the
-    // old plan dropped below the join — window values are unchanged
-    per.join(finished, col("l_orderkey") === col("o_orderkey"), "left_semi")
-      .withColumn("order_last", max(col("supp_last")).over(w))
-      .withColumn("n_supp", count(lit(1)).over(w))
-      .filter(col("n_supp") >= 2 && col("supp_last") === col("order_last"))
-      .join(broadcast(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_name"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_suppkey"), col("s_name"))
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_suppkey"))
-  }
-
-  private val sqlWaitingSuppliers: String =
-    """WITH per AS (
-      |  SELECT l_orderkey, l_suppkey, MAX(l_shipdate) AS supp_last
-      |  FROM lineitem GROUP BY 1, 2),
-      |ord AS (
-      |  SELECT l_orderkey AS ok, MAX(supp_last) AS order_last,
-      |    COUNT(*) AS n_supp
-      |  FROM per GROUP BY 1)
-      |SELECT s_suppkey, s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-      |FROM per p
-      |JOIN ord ON p.l_orderkey = ok
-      |JOIN supplier ON s_suppkey = p.l_suppkey
-      |WHERE n_supp >= 2 AND supp_last = order_last
-      |  AND EXISTS (SELECT 1 FROM orders
-      |              WHERE o_orderkey = p.l_orderkey
-      |                AND o_orderstatus = 'F')
-      |GROUP BY s_suppkey, s_name
-      |ORDER BY numwait DESC, s_suppkey""".stripMargin
-
-  // ------------------------------------------------- q66_volume_shipping
-  // TPC-H Q7 shape (volume shipping between two nations): yearly
-  // revenue in both directions between a nation pair. Both nation
-  // lookups pre-filter to the pair BEFORE joining (the dim filter
-  // prunes the fact probes), supplier-side broadcasts into lineitem,
-  // customer-side broadcasts into orders, the facts meet in ONE
-  // shuffle on the order key, and the cross-pair condition is a cheap
-  // post-join filter on two broadcast-sourced columns.
-  private val ShipNationA = "NATION_3"
-  private val ShipNationB = "NATION_8"
-  private def qVolumeShipping(s: SparkSession, dir: String): DataFrame = {
-    val pair = Seq(ShipNationA, ShipNationB)
-    val suppN = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)
-        .filter(col("n_name").isin(pair: _*))
-        .select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation"))),
-        col("s_nationkey") === col("snk"))
-      .select(col("s_suppkey"), col("supp_nation"))
-    val custN = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)
-        .filter(col("n_name").isin(pair: _*))
-        .select(col("n_nationkey").as("cnk"), col("n_name").as("cust_nation"))),
-        col("c_nationkey") === col("cnk"))
-      .select(col("c_custkey"), col("cust_nation"))
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01 00:00:00").cast("timestamp"))
-      .join(broadcast(suppN), col("l_suppkey") === col("s_suppkey"))
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(custN), col("o_custkey") === col("c_custkey"))
-      .filter((col("supp_nation") === ShipNationA &&
-          col("cust_nation") === ShipNationB) ||
-        (col("supp_nation") === ShipNationB &&
-          col("cust_nation") === ShipNationA))
-      .groupBy(col("supp_nation"), col("cust_nation"),
-        year(col("l_shipdate")).as("l_year"))
-      .agg(xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("revenue"))
-      .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-  }
-
-  private val sqlVolumeShipping: String =
-    s"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       |  CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |    AS revenue
-       |FROM lineitem
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |JOIN nation sn ON s_nationkey = sn.n_nationkey
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN customer ON o_custkey = c_custkey
-       |JOIN nation cn ON c_nationkey = cn.n_nationkey
-       |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-       |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-       |  AND ((sn.n_name = '$ShipNationA' AND cn.n_name = '$ShipNationB')
-       |    OR (sn.n_name = '$ShipNationB' AND cn.n_name = '$ShipNationA'))
-       |GROUP BY 1, 2, 3
-       |ORDER BY supp_nation, cust_nation, l_year""".stripMargin
-
-  // ------------------------------------------------- q67_late_priority
-  // TPC-H Q12 shape (shipping-mode priority audit; the fixture has no
-  // l_shipmode, so the grouping column is l_returnflag — same plan):
-  // late lineitems (shipped >60 days after the order date) counted as
-  // urgent vs non-urgent per group. ONE shuffle join on the order key,
-  // conditional integer counters in ONE hash aggregate.
-  private def qLatePriority(s: SparkSession, dir: String): DataFrame = {
-    val high = col("o_orderpriority") === "1-URGENT" ||
-      col("o_orderpriority") === "2-HIGH"
-    Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir)
-          .filter(col("l_shipdate") >= lit("1997-01-01 00:00:00").cast("timestamp") &&
-            col("l_shipdate") < lit("1998-01-01 00:00:00").cast("timestamp")),
-        col("o_orderkey") === col("l_orderkey"))
-      .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-      .groupBy(col("l_returnflag"))
-      .agg(
-        sum(when(high, lit(1L)).otherwise(lit(0L))).as("high_line_count"),
-        sum(when(high, lit(0L)).otherwise(lit(1L))).as("low_line_count"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  private val sqlLatePriority: String =
-    """SELECT l_returnflag,
-      |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-      |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-      |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-      |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-      |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-      |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin
-
-  // ------------------------------------------------- q68_top_supplier
-  // TPC-H Q15 shape (top supplier): the supplier(s) with the maximum
-  // quarterly revenue — the view-then-max-then-equijoin plan. The
-  // per-supplier rollup is ONE shuffle; its 1-row max broadcasts back
-  // over the same (reused) aggregate; the double equality is exact on
-  // both sides because both come from the same exact-decimal sum.
-  private val TopSuppQStart = "1997-01-01 00:00:00"
-  private val TopSuppQEnd   = "1997-04-01 00:00:00"
-  private def qTopSupplier(s: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit(TopSuppQStart).cast("timestamp") &&
-        col("l_shipdate") < lit(TopSuppQEnd).cast("timestamp"))
-      .groupBy(col("l_suppkey"))
-      .agg(xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("total_revenue"))
-    val mx = rev.agg(max(col("total_revenue")).as("mx"))
-    rev.crossJoin(broadcast(mx))
-      .filter(col("total_revenue") === col("mx"))
-      .join(broadcast(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_name"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-      .orderBy(col("s_suppkey"))
-  }
-
-  private val sqlTopSupplier: String =
-    s"""WITH rev AS (
-       |  SELECT l_suppkey,
-       |    ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |      AS total_revenue
-       |  FROM lineitem
-       |  WHERE l_shipdate >= TIMESTAMP '$TopSuppQStart'
-       |    AND l_shipdate < TIMESTAMP '$TopSuppQEnd'
-       |  GROUP BY l_suppkey)
-       |SELECT s_suppkey, s_name, total_revenue
-       |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-       |WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
-       |ORDER BY s_suppkey""".stripMargin
-
-  // ------------------------------------------------- q77_product_profit
-  // TPC-H Q9 shape (product-type profit): per supplier-nation, per
-  // order year, profit = revenue − cost (the fixture has no
-  // ps_supplycost; cost proxies as 10 % of retail price × quantity —
-  // same expression tree, same join web). Part and supplier→nation
-  // dims broadcast into lineitem, the facts meet in ONE order-key
-  // shuffle, the profit terms ride one exact-decimal sum.
-  private def qProductProfit(s: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(s, dir)
-      .filter(col("p_type") === "ECONOMY")
-      .select(col("p_partkey"), col("p_retailprice"))
-    val suppN = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name"))
-    val amount = col("l_extendedprice") * (lit(1.0) - col("l_discount")) -
-      lit(0.1) * col("p_retailprice") * col("l_quantity")
-    Tables.lineitem(s, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(suppN), col("l_suppkey") === col("s_suppkey"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("n_name"), year(col("o_orderdate")).as("o_year"))
-      .agg(xsum(amount).as("profit"), count(lit(1)).as("n_items"))
-      .orderBy(col("n_name"), col("o_year").desc)
-  }
-
-  private val sqlProductProfit: String =
-    s"""SELECT n_name,
-       |  CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-       |  ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount) " +
-      "- CAST(0.1 AS DOUBLE) * p_retailprice * l_quantity")} AS profit,
-       |  CAST(COUNT(*) AS BIGINT) AS n_items
-       |FROM lineitem
-       |JOIN part ON l_partkey = p_partkey
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |JOIN nation ON s_nationkey = n_nationkey
-       |JOIN orders ON l_orderkey = o_orderkey
-       |WHERE p_type = 'ECONOMY'
-       |GROUP BY n_name, o_year
-       |ORDER BY n_name, o_year DESC""".stripMargin
-
-  // ------------------------------------------------- q78_supplier_counts
-  // TPC-H Q16 shape (parts/supplier relationship): distinct suppliers
-  // able to ship each (brand, type, size) combination, excluding one
-  // brand — partsupp proxied by the distinct shipped-pair frame. The
-  // brand exclusion pushes to the part scan; one distinct-pair
-  // exchange; count-distinct per bounded group.
-  private def qSupplierCounts(s: SparkSession, dir: String): DataFrame = {
-    val shipped = Tables.lineitem(s, dir)
-      .select(col("l_partkey"), col("l_suppkey")).distinct()
-    val p = Tables.part(s, dir)
-      .filter(col("p_brand") =!= "Brand#1" && col("p_size") <= 10)
-      .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-    shipped.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-        col("p_size"))
-  }
-
-  private val sqlSupplierCounts: String =
-    """SELECT p_brand, p_type, p_size,
-      |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-      |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) s
-      |JOIN part ON l_partkey = p_partkey
-      |WHERE p_brand <> 'Brand#1' AND p_size <= 10
-      |GROUP BY p_brand, p_type, p_size
-      |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin
-
-  // ------------------------------------------------- q79_dominant_suppliers
-  // TPC-H Q20 shape (excess availability): suppliers holding more than
-  // 2x their FAIR share of a part's shipped quantity (share thresholds
-  // must be scale-free: with n suppliers per part growing with SF, any
-  // fixed share goes empty) — the nested-aggregate → co-partitioned
-  // re-join decorrelation (same discipline as Q17's average). Both
-  // aggregates key on the part, so the join reuses the exchange; the
-  // threshold is two IEEE ops on exact sums.
-  private def qDominantSuppliers(s: SparkSession, dir: String): DataFrame = {
-    // fixture quantities are integral, so the sums stay exact BIGINTs —
-    // no decimal detour needed (and ~2x cheaper per the decimal-agg cost
-    // note in SCALE.md)
-    // ONE scan, ONE wide exchange (round 11, the q65 discipline): the
-    // nested-aggregate → co-partitioned re-join planned the
-    // per-(part, supplier) aggregate TWICE (no exchange reuse across
-    // the join's sides); repartitioning by the part key satisfies the
-    // pair aggregation (subset clustering) AND the per-part window, so
-    // the part rollup re-attaches as a window over the same exchange.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("l_partkey"))
-    val pairQty = Tables.lineitem(s, dir)
-      .repartition(col("l_partkey"))
-      .groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(sum(col("l_quantity").cast("long")).as("pair_qty"))
-    pairQty
-      .withColumn("part_qty", sum(col("pair_qty")).over(w))
-      .withColumn("n_suppliers", count(lit(1)).over(w))
-      .filter(col("n_suppliers") >= 2 &&
-        col("pair_qty").cast("double") >
-          lit(2.0) * col("part_qty").cast("double") /
-            col("n_suppliers").cast("double"))
-      .join(broadcast(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_name"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_suppkey"), col("s_name"))
-      .agg(count(lit(1)).as("n_dominated_parts"))
-      .orderBy(col("n_dominated_parts").desc, col("s_suppkey"))
-  }
-
-  private val sqlDominantSuppliers: String =
-    s"""WITH pq AS (
-       |  SELECT l_partkey, l_suppkey,
-       |    ${graft.functions.Exact.sqlSum("l_quantity", 6)} AS pair_qty
-       |  FROM lineitem GROUP BY l_partkey, l_suppkey
-       |), tq AS (
-       |  SELECT l_partkey AS pk,
-       |    ${graft.functions.Exact.sqlSum("pair_qty", 6)} AS part_qty,
-       |    CAST(COUNT(*) AS BIGINT) AS n_suppliers
-       |  FROM pq GROUP BY l_partkey
-       |)
-       |SELECT s_suppkey, s_name,
-       |  CAST(COUNT(*) AS BIGINT) AS n_dominated_parts
-       |FROM pq
-       |JOIN tq ON l_partkey = pk
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |WHERE n_suppliers >= 2
-       |  AND CAST(pair_qty AS DOUBLE) > CAST(2 AS DOUBLE)
-       |    * CAST(part_qty AS DOUBLE) / CAST(n_suppliers AS DOUBLE)
-       |GROUP BY s_suppkey, s_name
-       |ORDER BY n_dominated_parts DESC, s_suppkey""".stripMargin
-
-  // ------------------------------------------------- events_user_entropy
-  // Per-user event-type Shannon entropy — the behavioral-diversity score
-  // (bots and scripted traffic sit at 0; engaged users spread mass).
-  // Two thin hash aggregates on the user key + a co-partitioned re-join
-  // (AQE reuses the exchange); the −p·ln p terms are fixed IEEE op
-  // sequences on exact count ratios and the per-user sum rides the
-  // exact-decimal detour, so the descending rank (ties broken by
-  // user_id) is engine-identical.
-  private val EntropyTopK = 20
-  private def qUserEntropy(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ue = Tables.eventsCached(s, dir)
-      .filter(col("event_type").isNotNull)
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("c"))
-    val ut = ue.groupBy(col("user_id"))
-      .agg(sum(col("c")).as("tot"), count(lit(1)).as("n_types"))
-    val p = col("c").cast("double") / col("tot").cast("double")
-    val w = Window.orderBy(col("entropy").desc, col("user_id"))
-    ue.join(ut, Seq("user_id"))
-      .groupBy(col("user_id"), col("tot"), col("n_types"))
-      .agg(xsum(-(p * log(p)), 12).as("entropy"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= EntropyTopK)
-      .select(col("rk").cast("long").as("rk"), col("user_id"),
-        col("tot").cast("long").as("n_events"), col("n_types"),
-        col("entropy"))
-      .orderBy(col("rk"))
-  }
-
-  private val sqlUserEntropy: String =
-    s"""WITH ue AS (
-       |  SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
-       |  FROM events WHERE event_type IS NOT NULL
-       |  GROUP BY user_id, event_type
-       |), ut AS (
-       |  SELECT user_id, CAST(SUM(c) AS BIGINT) AS tot,
-       |    CAST(COUNT(*) AS BIGINT) AS n_types
-       |  FROM ue GROUP BY user_id
-       |), ent AS (
-       |  SELECT ue.user_id, tot, n_types,
-       |    ${sqlSum("-(CAST(c AS DOUBLE) / CAST(tot AS DOUBLE) * " +
-      "ln(CAST(c AS DOUBLE) / CAST(tot AS DOUBLE)))", 12)} AS entropy
-       |  FROM ue JOIN ut ON ue.user_id = ut.user_id
-       |  GROUP BY ue.user_id, tot, n_types
-       |), ranked AS (
-       |  SELECT user_id, tot, n_types, entropy,
-       |    ROW_NUMBER() OVER (ORDER BY entropy DESC, user_id) AS rk
-       |  FROM ent
-       |)
-       |SELECT CAST(rk AS BIGINT) AS rk, user_id, tot AS n_events,
-       |  n_types, entropy
-       |FROM ranked WHERE rk <= $EntropyTopK ORDER BY rk""".stripMargin
-
-  // ------------------------------------------------- events_hill_tail
-  // Hill estimator of the power-law tail exponent (Hill, "A simple
-  // general approach to inference about the tail of a distribution",
-  // Annals of Statistics 1975): α = k / Σ_{i≤k} ln(x_(i)/x_(k+1)) over
-  // the k largest positive event values. The k+1 order statistics come
-  // from a global top-k (TakeOrderedAndProject / WindowGroupLimit —
-  // never a full sort), ties broken by event_id so the tail SET is
-  // engine-identical; each log-ratio is a fixed IEEE sequence and the
-  // sum rides the exact-decimal detour.
-  private val HillK = 100
-  private def qHillTail(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("value").desc, col("event_id"))
-    val ranked = Tables.eventsCached(s, dir)
-      .filter(col("value") > lit(0.0))
-      .select(col("event_id"), col("value"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= HillK + 1)
-    val ref = ranked.filter(col("rk") === HillK + 1)
-      .select(col("value").as("x_kplus1"))
-    ranked.filter(col("rk") <= HillK)
-      .crossJoin(broadcast(ref))
-      .agg(
-        count(lit(1)).as("n_tail"),
-        max(col("x_kplus1")).as("x_kplus1"),
-        xsum(log(col("value") / col("x_kplus1")), 12).as("log_sum"))
-      .select(col("n_tail"), col("x_kplus1"),
-        (col("n_tail").cast("double") / col("log_sum")).as("hill_alpha"))
-  }
-
-  private val sqlHillTail: String =
-    s"""WITH ranked AS (
-       |  SELECT event_id, value,
-       |    ROW_NUMBER() OVER (ORDER BY value DESC, event_id) AS rk
-       |  FROM events WHERE value > CAST(0 AS DOUBLE)
-       |), ref AS (
-       |  SELECT value AS x_kplus1 FROM ranked WHERE rk = ${HillK + 1}
-       |), agg AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS n_tail,
-       |    MAX(x_kplus1) AS x_kplus1,
-       |    ${sqlSum("ln(value / x_kplus1)", 12)} AS log_sum
-       |  FROM ranked CROSS JOIN ref WHERE rk <= $HillK
-       |)
-       |SELECT n_tail, x_kplus1,
-       |  CAST(n_tail AS DOUBLE) / log_sum AS hill_alpha
-       |FROM agg""".stripMargin
-
-  // ------------------------------------------------- q69_skyline
-  // 2-D skyline / Pareto frontier (Börzsönyi, Kossmann & Stocker, "The
-  // skyline operator", ICDE 2001): parts minimizing (p_size,
-  // p_retailprice) — no other part is ≤ on both axes and < on one.
-  // Skyline is DISTRIBUTIVE (skyline(S) = skyline(∪ skyline(Sᵢ))), so
-  // the plan never sweeps the full table through one window: a per-size
-  // min aggregate (map-side partial) shrinks the frame to |sizes| rows,
-  // the textbook sort-sweep window runs on THAT tiny frame, and the
-  // surviving (size, min-price) pairs broadcast back as a semi-join
-  // filter. Exact double equality against the min is deterministic —
-  // both sides are raw parquet values.
-  private def qSkyline(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val perSize = Tables.part(s, dir)
-      .groupBy(col("p_size"))
-      .agg(min(col("p_retailprice")).as("minp"))
-    val wPrev = Window.orderBy(col("p_size"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    val sky = perSize
-      .withColumn("min_prev", min(col("minp")).over(wPrev))
-      .filter(col("min_prev").isNull || col("minp") < col("min_prev"))
-      .select(col("p_size").as("sz"), col("minp"))
-    Tables.part(s, dir)
-      .join(broadcast(sky), col("p_size") === col("sz") &&
-        col("p_retailprice") === col("minp"))
-      .select(col("p_partkey"), col("p_size"), col("p_retailprice"))
-      .orderBy(col("p_size"), col("p_partkey"))
-  }
-
-  private val sqlSkyline: String =
-    """WITH ps AS (
-      |  SELECT p_size, MIN(p_retailprice) AS minp FROM part
-      |  GROUP BY p_size
-      |), sky AS (
-      |  SELECT p_size AS sz, minp,
-      |    MIN(minp) OVER (ORDER BY p_size
-      |      RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS min_prev
-      |  FROM ps
-      |)
-      |SELECT p_partkey, p_size, p_retailprice
-      |FROM part JOIN sky ON p_size = sz AND p_retailprice = minp
-      |WHERE min_prev IS NULL OR minp < min_prev
-      |ORDER BY p_size, p_partkey""".stripMargin
-
-  // ------------------------------------------------- q70_min_cost_supplier
-  // TPC-H Q2 shape (minimum-cost supplier): for each part in a size
-  // class, the supplier(s) with the minimum account balance among those
-  // who actually shipped it (the fixture has no partsupp/supplycost;
-  // the shipped-pair frame from lineitem plays partsupp, acctbal plays
-  // supplycost — same correlated-min + tie-keeping equality join).
-  // The distinct ship-pair frame shuffles once; part filter and the
-  // 10-row supplier table broadcast; the per-part min is a window over
-  // the same exchange and the tie-keeping equality is a filter, as in
-  // the reference query.
-  private val McsPartSize = 10
-  private def qMinCostSupplier(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // ONE scan per table, ONE wide exchange (round 11): the correlated-
-    // min decorrelation (aggregate-then-rejoin on `cand`) planned the
-    // whole candidate tower TWICE — the equality-join's pushed
-    // predicates made the two subtrees non-identical, so exchange reuse
-    // never fired and lineitem/part/supplier were each scanned once per
-    // join side (plans/r11/q70_*_before: 6 scans, 4 Exchange).
-    // Repartitioning by the part key first satisfies the
-    // (partkey, suppkey) distinct (subset clustering) AND the per-part
-    // window min, so the min re-attaches as a window over the same
-    // exchange — no self-join, no second scan (guide §2.4); ties are
-    // KEPT by the equality filter exactly as by the old equality join.
-    val shipped = Tables.lineitem(s, dir)
-      .select(col("l_partkey"), col("l_suppkey"))
-      .repartition(col("l_partkey"))
-      .distinct()
-    val parts = Tables.part(s, dir)
-      .filter(col("p_size") === McsPartSize)
-      .select(col("p_partkey"), col("p_name"))
-    // window keyed on the STREAM-side key: broadcast joins propagate the
-    // probe child's hashpartitioning(l_partkey) directly (no reliance on
-    // the join-key-equivalence expansion limit); l_partkey = p_partkey
-    // inside the join, so the min is per part either way
-    val w = Window.partitionBy(col("l_partkey"))
-    shipped
-      .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .withColumn("min_bal", min(col("s_acctbal")).over(w))
-      .filter(col("s_acctbal") === col("min_bal"))
-      .select(col("p_partkey"), col("p_name"), col("s_suppkey"),
-        col("s_name"), col("s_acctbal"))
-      .orderBy(col("p_partkey"), col("s_suppkey"))
-  }
-
-  private val sqlMinCostSupplier: String =
-    s"""WITH shipped AS (
-       |  SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-       |), cand AS (
-       |  SELECT p_partkey, p_name, s_suppkey, s_name, s_acctbal
-       |  FROM shipped
-       |  JOIN part ON l_partkey = p_partkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  WHERE p_size = $McsPartSize
-       |), m AS (
-       |  SELECT p_partkey AS pk, MIN(s_acctbal) AS min_bal FROM cand
-       |  GROUP BY p_partkey
-       |)
-       |SELECT p_partkey, p_name, s_suppkey, s_name, s_acctbal
-       |FROM cand JOIN m ON p_partkey = pk AND s_acctbal = min_bal
-       |ORDER BY p_partkey, s_suppkey""".stripMargin
-
-  // ------------------------------------------------- q71_important_parts
-  // TPC-H Q11 shape (important stock identification): parts whose
-  // shipped value exceeds a fraction of the corpus total — here the
-  // scale-free "1.5× the average part value" so the threshold is
-  // meaningful at every SF. One shuffle keyed on the part, a 1-row
-  // broadcast scalar for the threshold, and a bounded top-k.
-  private val ImpTopK = 50
-  private def qImportantParts(s: SparkSession, dir: String): DataFrame = {
-    val value = Tables.lineitem(s, dir)
-      .groupBy(col("l_partkey"))
-      .agg(xsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("part_value"),
-        count(lit(1)).as("n_items"))
-    // ONE scan, ONE wide exchange (round 11): `value` feeds both the
-    // probe and the 1-row stats rollup, but with n_parts = count(*)
-    // column pruning dropped the partial_count from the stats side's
-    // per-part aggregate, the two exchange subtrees canonicalized
-    // differently, exchange reuse never fired, and lineitem was scanned
-    // + aggregated twice (plans/r11/q71_*_before: 2 scans). Counting
-    // parts as SUM(n_items >= 1 ? 1 : 0) — n_items is count(1) over a
-    // non-empty group, so every row contributes exactly 1 and the sum
-    // IS count(*) — keeps n_items referenced (NullPropagation rewrites
-    // count(non-nullable) back to count(1), so a plain count cannot),
-    // the per-part partial aggregates stay identical, and the stats
-    // branch plans as a ReusedExchange of the probe's (guide §2.4).
-    val stats = value.agg(xsum(col("part_value")).as("total_value"),
-      sum(when(col("n_items") >= 1, 1L).otherwise(0L)).as("n_parts"))
-    value.crossJoin(broadcast(stats))
-      .filter(col("part_value") >
-        lit(1.5) * col("total_value") / col("n_parts"))
-      .select(col("l_partkey"), col("part_value"), col("n_items"))
-      .orderBy(col("part_value").desc, col("l_partkey"))
-      .limit(ImpTopK)
-      .orderBy(col("part_value").desc, col("l_partkey"))
-  }
-
-  private val sqlImportantParts: String =
-    s"""WITH v AS (
-       |  SELECT l_partkey,
-       |    ${sqlSum("l_extendedprice * (CAST(1 AS DOUBLE) - l_discount)")}
-       |      AS part_value,
-       |    CAST(COUNT(*) AS BIGINT) AS n_items
-       |  FROM lineitem GROUP BY l_partkey
-       |), t AS (
-       |  SELECT ${sqlSum("part_value")} AS total_value,
-       |    CAST(COUNT(*) AS BIGINT) AS n_parts
-       |  FROM v
-       |)
-       |SELECT l_partkey, part_value, n_items
-       |FROM v CROSS JOIN t
-       |WHERE part_value > CAST(1.5 AS DOUBLE) * total_value / n_parts
-       |ORDER BY part_value DESC, l_partkey
-       |LIMIT $ImpTopK""".stripMargin
-
-  // ------------------------------------------------- events_bot_score
-  // Scripted-traffic suspicion ranking: per user, the burst ceiling
-  // (max events in any one minute) and behavioral concentration
-  // (dominant event-type share), composed into one score — the
-  // abuse-filter pass a data pipeline runs before training on user
-  // traces. Two thin two-level aggregates on the user key + one
-  // co-partitioned join; the share is an exact integer ratio and the
-  // score one IEEE multiply, so the ranking (ties → user_id) is
-  // engine-identical.
-  private val BotTopK = 20
-  private def qBotScore(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-    val byMin = ev
-      .select(col("user_id"),
-        expr("unix_micros(ts) div 60000000").as("minute"))
-      .groupBy(col("user_id"), col("minute"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("user_id"))
-      .agg(max(col("c")).as("max_per_min"))
-    val byType = ev.groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("user_id"))
-      .agg(max(col("c")).as("max_type"), sum(col("c")).as("n_events"))
-    val w = Window.orderBy(col("score").desc, col("user_id"))
-    byType.join(byMin, Seq("user_id"))
-      .withColumn("dominant_share",
-        col("max_type").cast("double") / col("n_events").cast("double"))
-      .withColumn("score",
-        col("dominant_share") * col("max_per_min").cast("double"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= BotTopK)
-      .select(col("rk").cast("long").as("rk"), col("user_id"),
-        col("n_events").cast("long").as("n_events"),
-        col("max_per_min").cast("long").as("max_per_min"),
-        col("dominant_share"), col("score"))
-      .orderBy(col("rk"))
-  }
-
-  private val sqlBotScore: String =
-    s"""WITH bm AS (
-       |  SELECT user_id, CAST(MAX(c) AS BIGINT) AS max_per_min FROM (
-       |    SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 60000000
-       |      AS minute, COUNT(*) AS c
-       |    FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-       |    GROUP BY 1, 2)
-       |  GROUP BY user_id
-       |), bt AS (
-       |  SELECT user_id, CAST(MAX(c) AS BIGINT) AS max_type,
-       |    CAST(SUM(c) AS BIGINT) AS n_events
-       |  FROM (
-       |    SELECT user_id, event_type, COUNT(*) AS c
-       |    FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-       |    GROUP BY 1, 2)
-       |  GROUP BY user_id
-       |), scored AS (
-       |  SELECT bt.user_id, n_events, max_per_min,
-       |    CAST(max_type AS DOUBLE) / CAST(n_events AS DOUBLE)
-       |      AS dominant_share,
-       |    CAST(max_type AS DOUBLE) / CAST(n_events AS DOUBLE)
-       |      * CAST(max_per_min AS DOUBLE) AS score
-       |  FROM bt JOIN bm ON bt.user_id = bm.user_id
-       |), ranked AS (
-       |  SELECT user_id, n_events, max_per_min, dominant_share, score,
-       |    ROW_NUMBER() OVER (ORDER BY score DESC, user_id) AS rk
-       |  FROM scored
-       |)
-       |SELECT CAST(rk AS BIGINT) AS rk, user_id, n_events, max_per_min,
-       |  dominant_share, score
-       |FROM ranked WHERE rk <= $BotTopK ORDER BY rk""".stripMargin
-
-  // ------------------------------------------------- events_rolling_median
-  // Trailing-7-day rolling MEDIAN of daily revenue — the robust
-  // companion to the moving average (Spark has no exact-percentile
-  // window function, so the window is an explicit |days|×7 spine
-  // self-join + grouped percentile, mirrored verbatim in the oracle;
-  // q23's ROUND-4 percentile idiom). The |days| frame is
-  // calendar-bounded — nothing here is corpus-sized after the first
-  // rollup.
-  private def qRollingMedian(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .filter(col("ts").isNotNull)
-      .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-      .agg(xsum(col("value")).as("rev"))
-    val d2 = daily.select(col("day").as("day2"), col("rev").as("rev2"))
-    daily.join(d2,
-        col("day2") >= col("day") - 6 && col("day2") <= col("day"))
-      .groupBy(col("day"), col("rev"))
-      .agg(round(expr("percentile(rev2, 0.5)"), 4).as("rolling_median"),
-        count(lit(1)).as("n_days"))
-      .orderBy(col("day"))
-  }
-
-  private val sqlRollingMedian: String =
-    s"""WITH daily AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-       |    ${sqlSum("value")} AS rev
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |)
-       |SELECT d.day, d.rev,
-       |  ROUND(quantile_cont(d2.rev, 0.5), 4) AS rolling_median,
-       |  CAST(COUNT(*) AS BIGINT) AS n_days
-       |FROM daily d JOIN daily d2
-       |  ON d2.day >= d.day - 6 AND d2.day <= d.day
-       |GROUP BY d.day, d.rev
-       |ORDER BY d.day""".stripMargin
-
-  // ------------------------------------------------- q74_rollup_share
-  // Share-of-parent reporting: nation revenue inside its region and
-  // region inside the total, with every level an EXACT-decimal rollup
-  // of the level below (never a window sum over doubles — that
-  // re-orders IEEE addition). Dims broadcast; one fact exchange.
-  private def qRollupShare(s: SparkSession, dir: String): DataFrame = {
-    val dims = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("n_name"), col("r_name"))
-    val nat = Tables.orders(s, dir)
-      .join(broadcast(dims), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(xsum(col("o_totalprice")).as("revenue"))
-    val reg = nat.groupBy(col("r_name").as("rn"))
-      .agg(xsum(col("revenue")).as("region_revenue"))
-    val tot = reg.agg(xsum(col("region_revenue")).as("total_revenue"))
-    nat.join(broadcast(reg), col("r_name") === col("rn"))
-      .crossJoin(broadcast(tot))
-      .select(col("r_name"), col("n_name"), col("revenue"),
-        (col("revenue") / col("region_revenue")).as("nation_share"),
-        (col("region_revenue") / col("total_revenue")).as("region_share"))
-      .orderBy(col("r_name"), col("n_name"))
-  }
-
-  private val sqlRollupShare: String =
-    s"""WITH nat AS (
-       |  SELECT r_name, n_name, ${sqlSum("o_totalprice")} AS revenue
-       |  FROM orders
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN nation ON c_nationkey = n_nationkey
-       |  JOIN region ON n_regionkey = r_regionkey
-       |  GROUP BY r_name, n_name
-       |), reg AS (
-       |  SELECT r_name AS rn, ${sqlSum("revenue")} AS region_revenue
-       |  FROM nat GROUP BY r_name
-       |), tot AS (
-       |  SELECT ${sqlSum("region_revenue")} AS total_revenue FROM reg
-       |)
-       |SELECT r_name, n_name, revenue,
-       |  revenue / region_revenue AS nation_share,
-       |  region_revenue / total_revenue AS region_share
-       |FROM nat JOIN reg ON r_name = rn CROSS JOIN tot
-       |ORDER BY r_name, n_name""".stripMargin
-
-  // ------------------------------------------------- events_new_returning
-  // Daily new-vs-returning active users: each user's first-seen day
-  // from one thin aggregate, then per-day distinct splits. Two
-  // user-keyed exchanges; the conditional count-distincts share one
-  // aggregate.
-  private def qNewReturning(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"),
-        expr("unix_micros(ts) div 86400000000").as("day"))
-    val first = ev.groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
-    ev.join(first, Seq("user_id"))
-      .groupBy(col("day"))
-      .agg(
-        countDistinct(when(col("day") === col("first_day"),
-          col("user_id"))).as("n_new"),
-        countDistinct(when(col("day") =!= col("first_day"),
-          col("user_id"))).as("n_returning"))
-      .orderBy(col("day"))
-  }
-
-  private val sqlNewReturning: String =
-    """WITH ev AS (
-      |  SELECT user_id,
-      |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-      |  FROM events WHERE ts IS NOT NULL
-      |), f AS (
-      |  SELECT user_id, MIN(day) AS first_day FROM ev GROUP BY user_id
-      |)
-      |SELECT day,
-      |  CAST(COUNT(DISTINCT CASE WHEN day = first_day THEN ev.user_id
-      |    END) AS BIGINT) AS n_new,
-      |  CAST(COUNT(DISTINCT CASE WHEN day <> first_day THEN ev.user_id
-      |    END) AS BIGINT) AS n_returning
-      |FROM ev JOIN f ON ev.user_id = f.user_id
-      |GROUP BY day ORDER BY day""".stripMargin
-
-  // ------------------------------------------------- q72/q73 multiset ops
-  // EXCEPT ALL / INTERSECT ALL — the bag-semantics set operators
-  // (per-occurrence, no implicit distinct). Spark plans both as a
-  // single hash aggregation of signed/min counts + regenerate, one
-  // shuffle on the row key; the ordered multiset output (duplicates
-  // preserved) hashes deterministically.
-  private def qExceptAll(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-      .exceptAll(o.filter(col("o_orderstatus") === "O")
-        .select(col("o_custkey")))
-      .orderBy(col("o_custkey"))
-  }
-
-  private val sqlExceptAll: String =
-    """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |EXCEPT ALL
-      |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-      |ORDER BY o_custkey""".stripMargin
-
-  private def qIntersectAll(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(s, dir)
-    o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-      .intersectAll(o.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey")))
-      .orderBy(col("o_custkey"))
-  }
-
-  private val sqlIntersectAll: String =
-    """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |INTERSECT ALL
-      |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-      |ORDER BY o_custkey""".stripMargin
-
-  // ------------------------------------------------- events_wow_change
-  // Week-over-week KPI deltas per event type — the reporting shape:
-  // epoch-aligned weekly exact-revenue rollup, ONE keyed lag window,
-  // and the percent change as a single IEEE ratio of two exact sums
-  // (NULL on each type's first week, by construction).
-  private def qWowChange(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("event_type")).orderBy(col("week"))
-    Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 604800000000").as("week"), col("value"))
-      .groupBy(col("event_type"), col("week"))
-      .agg(xsum(col("value")).as("revenue"), count(lit(1)).as("n_events"))
-      .withColumn("prev_revenue", lag(col("revenue"), 1).over(w))
-      .withColumn("wow_pct",
-        (col("revenue") - col("prev_revenue")) / col("prev_revenue"))
-      .orderBy(col("event_type"), col("week"))
-  }
-
-  private val sqlWowChange: String =
-    s"""WITH wk AS (
-       |  SELECT event_type,
-       |    epoch_us(CAST(ts AS TIMESTAMP)) // 604800000000 AS week,
-       |    ${sqlSum("value")} AS revenue,
-       |    CAST(COUNT(*) AS BIGINT) AS n_events
-       |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-       |  GROUP BY 1, 2
-       |)
-       |SELECT event_type, week, revenue, n_events,
-       |  LAG(revenue, 1) OVER (PARTITION BY event_type ORDER BY week)
-       |    AS prev_revenue,
-       |  (revenue - LAG(revenue, 1) OVER (PARTITION BY event_type
-       |    ORDER BY week))
-       |    / LAG(revenue, 1) OVER (PARTITION BY event_type ORDER BY week)
-       |    AS wow_pct
-       |FROM wk ORDER BY event_type, week""".stripMargin
-
-  // ------------------------------------------------- events_threshold_cross
-  // Upward threshold-crossing detector (the alerting primitive): per
-  // user, how many times the value series crossed above the alert line
-  // between consecutive events. ONE keyed window (lag), a conditional
-  // integer counter, and a bounded leaderboard; ts ties break by
-  // event_id in BOTH engines so the lag pairing is identical.
-  private val CrossThreshold = 100.0
-  private def qThresholdCross(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val wr = Window.orderBy(col("n_cross").desc, col("user_id"))
-    Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .withColumn("prev", lag(col("value"), 1).over(w))
-      .withColumn("cross",
-        when(col("prev") <= lit(CrossThreshold) &&
-          col("value") > lit(CrossThreshold), 1L).otherwise(0L))
-      .groupBy(col("user_id"))
-      .agg(sum(col("cross")).as("n_cross"), count(lit(1)).as("n_events"))
-      .filter(col("n_cross") > 0)
-      .withColumn("rk", row_number().over(wr))
-      .filter(col("rk") <= 20)
-      .select(col("rk").cast("long").as("rk"), col("user_id"),
-        col("n_events"), col("n_cross"))
-      .orderBy(col("rk"))
-  }
-
-  private val sqlThresholdCross: String =
-    s"""WITH lagged AS (
-       |  SELECT user_id, value,
-       |    LAG(value, 1) OVER (PARTITION BY user_id
-       |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev
-       |  FROM events WHERE ts IS NOT NULL
-       |), agg AS (
-       |  SELECT user_id,
-       |    CAST(SUM(CASE WHEN prev <= CAST($CrossThreshold AS DOUBLE)
-       |      AND value > CAST($CrossThreshold AS DOUBLE)
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_cross,
-       |    CAST(COUNT(*) AS BIGINT) AS n_events
-       |  FROM lagged GROUP BY user_id
-       |), ranked AS (
-       |  SELECT user_id, n_events, n_cross,
-       |    ROW_NUMBER() OVER (ORDER BY n_cross DESC, user_id) AS rk
-       |  FROM agg WHERE n_cross > 0
-       |)
-       |SELECT CAST(rk AS BIGINT) AS rk, user_id, n_events, n_cross
-       |FROM ranked WHERE rk <= 20 ORDER BY rk""".stripMargin
-
-  // ------------------------------------------------- events_streak
-  // Longest daily-activity streak per user — the canonical
-  // gaps-and-islands shape: distinct active days, island id =
-  // day − row_number (constant within a consecutive run), then two
-  // thin aggregates. All-integer arithmetic (`div` ↔ `//`), so the
-  // leaderboard (ties → user_id) is engine-identical.
-  private def qStreak(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val days = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"),
-        expr("unix_micros(ts) div 86400000000").as("day"))
-      .distinct()
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val wr = Window.orderBy(col("longest_streak").desc, col("user_id"))
-    days
-      .withColumn("island", col("day") - row_number().over(w))
-      .groupBy(col("user_id"), col("island"))
-      .agg(count(lit(1)).as("len"))
-      .groupBy(col("user_id"))
-      .agg(max(col("len")).as("longest_streak"),
-        count(lit(1)).as("n_streaks"),
-        sum(col("len")).cast("long").as("n_active_days"))
-      .withColumn("rk", row_number().over(wr))
-      .filter(col("rk") <= 20)
-      .select(col("rk").cast("long").as("rk"), col("user_id"),
-        col("longest_streak"), col("n_streaks"), col("n_active_days"))
-      .orderBy(col("rk"))
-  }
-
-  private val sqlStreak: String =
-    """WITH days AS (
-      |  SELECT DISTINCT user_id,
-      |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-      |  FROM events WHERE ts IS NOT NULL
-      |), isl AS (
-      |  SELECT user_id,
-      |    day - ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day)
-      |      AS island
-      |  FROM days
-      |), runs AS (
-      |  SELECT user_id, island, CAST(COUNT(*) AS BIGINT) AS len
-      |  FROM isl GROUP BY user_id, island
-      |), agg AS (
-      |  SELECT user_id, MAX(len) AS longest_streak,
-      |    CAST(COUNT(*) AS BIGINT) AS n_streaks,
-      |    CAST(SUM(len) AS BIGINT) AS n_active_days
-      |  FROM runs GROUP BY user_id
-      |), ranked AS (
-      |  SELECT user_id, longest_streak, n_streaks, n_active_days,
-      |    ROW_NUMBER() OVER (ORDER BY longest_streak DESC, user_id) AS rk
-      |  FROM agg
-      |)
-      |SELECT CAST(rk AS BIGINT) AS rk, user_id, longest_streak,
-      |  n_streaks, n_active_days
-      |FROM ranked WHERE rk <= 20 ORDER BY rk""".stripMargin
-
-  // ------------------------------------------------- events_time_to_convert
-  // First-touch conversion latency: per user, seconds from the FIRST
-  // 'view' to the first 'purchase' at-or-after it, summarized as exact
-  // interpolated percentiles (the q23 idiom: Spark `percentile` ↔
-  // DuckDB quantile_cont, ROUND 4 on both sides). Two thin user-keyed
-  // aggregates + one co-partitioned join; the delta is integer epoch
-  // seconds (`div` ↔ `//`), so the percentile inputs are exact.
-  private def qTimeToConvert(s: SparkSession, dir: String): DataFrame = {
-    val first = Tables.eventsCached(s, dir)
-      .filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
-    val conv = Tables.eventsCached(s, dir)
-      .filter(col("event_type") === "purchase")
-      .join(first, Seq("user_id"))
-      .filter(col("ts") >= col("t_view"))
-      .groupBy(col("user_id"), col("t_view"))
-      .agg(min(col("ts")).as("t_buy"))
-      .select(expr("(unix_micros(t_buy) - unix_micros(t_view)) div 1000000")
-        .as("delta_sec"))
-    val nView = first.agg(count(lit(1)).as("n_view_users"))
-    conv.crossJoin(broadcast(nView))
-      .agg(max(col("n_view_users")).as("n_view_users"),
-        count(lit(1)).as("n_converted"),
-        round(expr("percentile(delta_sec, 0.5)"), 4).as("p50_sec"),
-        round(expr("percentile(delta_sec, 0.9)"), 4).as("p90_sec"))
-  }
-
-  private val sqlTimeToConvert: String =
-    """WITH fv AS (
-      |  SELECT user_id, MIN(CAST(ts AS TIMESTAMP)) AS t_view
-      |  FROM events WHERE event_type = 'view' GROUP BY user_id
-      |), conv AS (
-      |  SELECT e.user_id,
-      |    (MIN(epoch_us(CAST(e.ts AS TIMESTAMP)))
-      |      - MIN(epoch_us(t_view))) // 1000000 AS delta_sec
-      |  FROM events e JOIN fv ON e.user_id = fv.user_id
-      |  WHERE e.event_type = 'purchase'
-      |    AND CAST(e.ts AS TIMESTAMP) >= t_view
-      |  GROUP BY e.user_id
-      |)
-      |SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM fv) AS n_view_users,
-      |  CAST(COUNT(*) AS BIGINT) AS n_converted,
-      |  ROUND(quantile_cont(delta_sec, 0.5), 4) AS p50_sec,
-      |  ROUND(quantile_cont(delta_sec, 0.9), 4) AS p90_sec
-      |FROM conv""".stripMargin
-
-  // ------------------------------------------------- events_ema
-  // Truncated exponential moving average (α = 1/2, depth 8) per user —
-  // the streaming-telemetry smoother. A true EMA is a per-key recursive
-  // fold (unbounded lookback, not relational); the depth-8 truncation
-  // ( 2^-8 residual weight) makes it EIGHT lag columns combined in ONE
-  // fixed-order expression tree per row — all inside a single user-keyed
-  // window, whole-stage codegen'd, and bit-deterministic because α = 1/2
-  // keeps every weight an exact dyadic double and the fold order is the
-  // written order, not an aggregation order. Weights renormalize over the
-  // lags that exist, so the stream head is well-defined.
-  private val EmaDepth = 8
-  private def qEma(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val lags = (0 until EmaDepth).map(k => lag(col("value"), k).over(w))
-    val num = lags.zipWithIndex.map { case (c, k) =>
-      coalesce(c * lit(math.pow(0.5, k + 1)), lit(0.0))
-    }.reduceLeft(_ + _)
-    val den = lags.zipWithIndex.map { case (c, k) =>
-      when(c.isNotNull, lit(math.pow(0.5, k + 1))).otherwise(lit(0.0))
-    }.reduceLeft(_ + _)
-    Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull &&
-        col("value").isNotNull)
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      .withColumn("ema", num / den)
-      .select(col("event_id"), col("user_id"),
-        col("ts").cast("timestamp_ntz").as("ts"), col("value"), col("ema"))
-      .orderBy(col("event_id"))
-  }
-
-  private val sqlEma: String = {
-    def weight(k: Int) = s"power(0.5, ${k + 1})"
-    val over = "OVER (PARTITION BY user_id " +
-      "ORDER BY CAST(ts AS TIMESTAMP), event_id)"
-    val num = (0 until EmaDepth).map(k =>
-      s"COALESCE(lag(value, $k) $over * ${weight(k)}, CAST(0 AS DOUBLE))")
-      .mkString("(", "\n    + ", ")")
-    val den = (0 until EmaDepth).map(k =>
-      s"CASE WHEN lag(value, $k) $over IS NOT NULL THEN ${weight(k)} " +
-        "ELSE CAST(0 AS DOUBLE) END")
-      .mkString("(", "\n    + ", ")")
-    s"""SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value,
-       |  $num
-       |  / $den AS ema
-       |FROM events
-       |WHERE ts IS NOT NULL AND user_id IS NOT NULL AND value IS NOT NULL
-       |ORDER BY event_id""".stripMargin
-  }
-
-  // ------------------------------------------------- events_corr
-  // Pearson correlation between two hourly event-count series (click vs
-  // purchase) — the "do these metrics move together" question. Exact
-  // BIGINT moment sums (counts are integers; no decimal detour needed),
-  // then ONE closed-form double expression: products, differences, and
-  // IEEE-754 sqrt are all correctly rounded, so the statistic is
-  // bit-identical cross-engine. Shape: one hour-keyed count agg (map-side
-  // partial), then a 1-row moment aggregate — the 100 TB stream shuffles
-  // once, into |hours| rows.
-  private def qCorr(s: SparkSession, dir: String): DataFrame = {
-    val hourly = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .groupBy(date_trunc("hour", col("ts")).as("hour"))
-      .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
-    hourly.agg(
-      count(lit(1)).as("n_hours"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("y")).as("sxy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("y") * col("y")).as("syy"))
-      .select(col("n_hours"),
-        ((col("n_hours") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          sqrt((col("n_hours") * col("sxx") - col("sx") * col("sx"))
-            .cast("double") *
-            (col("n_hours") * col("syy") - col("sy") * col("sy"))
-              .cast("double")))
-          .as("pearson_r"))
-  }
-
-  private val sqlCorr: String =
-    """WITH hourly AS (
-      |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
-      |    CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS x,
-      |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS y
-      |  FROM events WHERE ts IS NOT NULL
-      |  GROUP BY 1
-      |), m AS (
-      |  SELECT CAST(COUNT(*) AS BIGINT) AS n_hours,
-      |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-      |    CAST(SUM(x * y) AS BIGINT) AS sxy,
-      |    CAST(SUM(x * x) AS BIGINT) AS sxx,
-      |    CAST(SUM(y * y) AS BIGINT) AS syy
-      |  FROM hourly
-      |)
-      |SELECT n_hours,
-      |  CAST(n_hours * sxy - sx * sy AS DOUBLE)
-      |    / sqrt(CAST(n_hours * sxx - sx * sx AS DOUBLE)
-      |           * CAST(n_hours * syy - sy * sy AS DOUBLE)) AS pearson_r
-      |FROM m""".stripMargin
-
-  // ------------------------------------------------- events_chi2
-  // Chi-square independence statistic over the event_type × day-of-week
-  // contingency table ("is traffic mix stable across days?"). Observed
-  // counts are exact BIGINTs; expected = row·col/N and each cell's
-  // (O−E)²/E are per-cell double expressions; the 35-cell sum goes
-  // through the exact-decimal detour so the statistic is aggregation-
-  // order-independent. Day index is pure epoch arithmetic ((days) % 7) —
-  // NOT engine dayofweek(), whose weekday origin differs across engines.
-  private def qChi2(s: SparkSession, dir: String): DataFrame = {
-    // pin the 35-cell contingency frame: four consumers (row totals,
-    // column totals, grand total, the cell join) would otherwise each
-    // re-scan the event stream
-    val o = graft.operators.Iterate.pin(Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      // `div` = floor integer division, mirroring DuckDB `//` — `/` would
-      // detour through double
-      .select(expr("(unix_micros(ts) div 86400000000) % 7").as("day_idx"),
-        col("event_type"))
-      .groupBy(col("day_idx"), col("event_type"))
-      .agg(count(lit(1)).as("n")))
-    val rows = o.groupBy(col("day_idx")).agg(sum(col("n")).as("rt"))
-    val cols_ = o.groupBy(col("event_type")).agg(sum(col("n")).as("ct"))
-    val tot = o.agg(sum(col("n")).as("tot"))
-    o.join(broadcast(rows), Seq("day_idx"))
-      .join(broadcast(cols_), Seq("event_type"))
-      .crossJoin(broadcast(tot))
-      .withColumn("e",
-        (col("rt") * col("ct")).cast("double") / col("tot").cast("double"))
-      .agg(count(lit(1)).as("n_cells"),
-        max(col("tot")).as("n_events"),
-        xsum((col("n").cast("double") - col("e"))
-          * (col("n").cast("double") - col("e")) / col("e"), 6).as("chi2"))
-  }
-
-  private val sqlChi2: String =
-    s"""WITH o AS (
-       |  SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) % 7
-       |      AS day_idx,
-       |    event_type, CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-       |  GROUP BY 1, 2
-       |), r AS (
-       |  SELECT day_idx, CAST(SUM(n) AS BIGINT) AS rt FROM o GROUP BY 1
-       |), c AS (
-       |  SELECT event_type, CAST(SUM(n) AS BIGINT) AS ct FROM o GROUP BY 1
-       |), t AS (
-       |  SELECT CAST(SUM(n) AS BIGINT) AS tot FROM o
-       |), cells AS (
-       |  SELECT o.n,
-       |    CAST(r.rt * c.ct AS DOUBLE) / CAST(t.tot AS DOUBLE) AS e, t.tot
-       |  FROM o JOIN r USING (day_idx) JOIN c USING (event_type), t
-       |)
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
-       |  CAST(MAX(tot) AS BIGINT) AS n_events,
-       |  ${sqlSum("(CAST(n AS DOUBLE) - e) * (CAST(n AS DOUBLE) - e) / e", 6)}
-       |    AS chi2
-       |FROM cells""".stripMargin
-
-  // ------------------------------------------------- events_cramer
-  // Cramér's V — the [0,1]-normalized association strength read off the
-  // chi-square statistic (Cramér 1946): V = sqrt(χ² / (n · min(r−1, c−1))).
-  // Same pinned 35-cell contingency frame as events_chi2 (row/col/grand
-  // totals and level counts are all re-aggregations of it); the χ² cell sum
-  // goes through the exact-decimal detour, level counts are exact BIGINTs,
-  // and V is then one fixed-order double expression (mul, div, sqrt — each
-  // correctly rounded, so cross-engine exact).
-  private def qCramer(s: SparkSession, dir: String): DataFrame = {
-    val o = graft.operators.Iterate.pin(Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(expr("(unix_micros(ts) div 86400000000) % 7").as("day_idx"),
-        col("event_type"))
-      .groupBy(col("day_idx"), col("event_type"))
-      .agg(count(lit(1)).as("n")))
-    val rows = o.groupBy(col("day_idx")).agg(sum(col("n")).as("rt"))
-    val cols_ = o.groupBy(col("event_type")).agg(sum(col("n")).as("ct"))
-    val tot = o.agg(sum(col("n")).as("tot"),
-      countDistinct(col("day_idx")).as("r_levels"),
-      countDistinct(col("event_type")).as("c_levels"))
-    o.join(broadcast(rows), Seq("day_idx"))
-      .join(broadcast(cols_), Seq("event_type"))
-      .crossJoin(broadcast(tot))
-      .withColumn("e",
-        (col("rt") * col("ct")).cast("double") / col("tot").cast("double"))
-      .agg(max(col("tot")).as("n_events"),
-        max(col("r_levels")).as("r_levels"),
-        max(col("c_levels")).as("c_levels"),
-        xsum((col("n").cast("double") - col("e"))
-          * (col("n").cast("double") - col("e")) / col("e"), 6).as("chi2"))
-      .withColumn("cramers_v",
-        sqrt(col("chi2") / (col("n_events").cast("double")
-          * least(col("r_levels") - 1, col("c_levels") - 1).cast("double"))))
-      .select(col("n_events"), col("r_levels"), col("c_levels"),
-        col("chi2"), col("cramers_v"))
-  }
-
-  private val sqlCramer: String =
-    s"""WITH o AS (
-       |  SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) % 7
-       |      AS day_idx,
-       |    event_type, CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-       |  GROUP BY 1, 2
-       |), r AS (
-       |  SELECT day_idx, CAST(SUM(n) AS BIGINT) AS rt FROM o GROUP BY 1
-       |), c AS (
-       |  SELECT event_type, CAST(SUM(n) AS BIGINT) AS ct FROM o GROUP BY 1
-       |), t AS (
-       |  SELECT CAST(SUM(n) AS BIGINT) AS tot,
-       |    CAST(COUNT(DISTINCT day_idx) AS BIGINT) AS r_levels,
-       |    CAST(COUNT(DISTINCT event_type) AS BIGINT) AS c_levels
-       |  FROM o
-       |), cells AS (
-       |  SELECT o.n,
-       |    CAST(r.rt * c.ct AS DOUBLE) / CAST(t.tot AS DOUBLE) AS e,
-       |    t.tot, t.r_levels, t.c_levels
-       |  FROM o JOIN r USING (day_idx) JOIN c USING (event_type), t
-       |), agg AS (
-       |  SELECT CAST(MAX(tot) AS BIGINT) AS n_events,
-       |    CAST(MAX(r_levels) AS BIGINT) AS r_levels,
-       |    CAST(MAX(c_levels) AS BIGINT) AS c_levels,
-       |    ${sqlSum("(CAST(n AS DOUBLE) - e) * (CAST(n AS DOUBLE) - e) / e", 6)}
-       |      AS chi2
-       |  FROM cells
-       |)
-       |SELECT n_events, r_levels, c_levels, chi2,
-       |  sqrt(chi2 / (CAST(n_events AS DOUBLE)
-       |    * CAST(least(r_levels - 1, c_levels - 1) AS DOUBLE))) AS cramers_v
-       |FROM agg""".stripMargin
-
-  // ------------------------------------------------- events_kanon
-  // k-anonymity audit (Sweeney 2002) over the quasi-identifier tuple
-  // (event_type, hour-of-day, value decade): equivalence-class sizes and
-  // the re-identification exposure below k = 5 — the privacy gate run
-  // BEFORE a dataset ships (events_pseudonymize audits the id column;
-  // this audits the attribute combination). Shape: ONE hash aggregation
-  // builds the class-size frame (map-side partial combine carries it);
-  // the report row is a second tiny aggregate over |classes| rows. All
-  // outputs are exact integers. Hour comes from epoch arithmetic, not
-  // engine hour(), so timezone configuration can't split the hash.
-  private def qKAnon(s: SparkSession, dir: String): DataFrame = {
-    val classes = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull
-        && col("value").isNotNull)
-      .select(col("event_type"),
-        expr("(unix_micros(ts) div 3600000000) % 24").as("hr"),
-        expr("cast(floor(value) as bigint) div 10").as("vb"))
-      .groupBy(col("event_type"), col("hr"), col("vb"))
-      .agg(count(lit(1)).as("class_size"))
-    classes.agg(
-      sum(col("class_size")).as("n_rows"),
-      count(lit(1)).as("n_classes"),
-      min(col("class_size")).as("min_class"),
-      sum(when(col("class_size") < 5, lit(1L)).otherwise(lit(0L)))
-        .as("classes_lt5"),
-      sum(when(col("class_size") < 5, col("class_size")).otherwise(lit(0L)))
-        .as("rows_lt5"),
-      sum(when(col("class_size") === 1, lit(1L)).otherwise(lit(0L)))
-        .as("singletons"))
-  }
-
-  private val sqlKAnon: String =
-    """WITH classes AS (
-      |  SELECT event_type,
-      |    (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr,
-      |    CAST(floor(value) AS BIGINT) // 10 AS vb,
-      |    CAST(COUNT(*) AS BIGINT) AS class_size
-      |  FROM events
-      |  WHERE ts IS NOT NULL AND event_type IS NOT NULL
-      |    AND value IS NOT NULL
-      |  GROUP BY 1, 2, 3
-      |)
-      |SELECT CAST(SUM(class_size) AS BIGINT) AS n_rows,
-      |  CAST(COUNT(*) AS BIGINT) AS n_classes,
-      |  CAST(MIN(class_size) AS BIGINT) AS min_class,
-      |  CAST(SUM(CASE WHEN class_size < 5 THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS classes_lt5,
-      |  CAST(SUM(CASE WHEN class_size < 5 THEN class_size ELSE 0 END)
-      |    AS BIGINT) AS rows_lt5,
-      |  CAST(SUM(CASE WHEN class_size = 1 THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS singletons
-      |FROM classes""".stripMargin
-
-  // ------------------------------------------------- events_ldiversity
-  // l-diversity audit (Machanavajjhala et al., ICDE 2006) — the
-  // k-anonymity follow-up: within each quasi-identifier class
-  // (hour-of-day, value decade), how DIVERSE is the sensitive
-  // attribute (event_type)? A k-large class whose rows all share one
-  // sensitive value still leaks it. Same one-pass class build as
-  // events_kanon with a distinct count, then a single report row of
-  // exact integers.
-  /** t-closeness audit (Li-Li-Venkatasubramanian, ICDE 2007) — the third
-    * rung of the anonymity ladder after k-anonymity (`events_kanon`) and
-    * l-diversity (`events_ldiversity`), over the SAME quasi-identifier
-    * classes (hr, vb) and sensitive attribute (event_type): l-diversity
-    * counts distinct sensitive values per class, t-closeness bounds how
-    * far each class's sensitive DISTRIBUTION drifts from the corpus-wide
-    * one. Categorical sensitive attribute → the paper's variational
-    * distance instance of EMD: t_c = ½ Σ_s |p(s|c) − p(s)|.
-    *
-    * Exactness: the TVD numerator folds to INTEGERS over a common
-    * denominator — Σ_s |n_cs·N − n_s·n_c| for present values plus
-    * n_c·(N − Σ_present n_s) for the class's MISSING sensitive values
-    * (|0 − n_s·n_c| summed in closed form — no domain explosion) — and
-    * t_c is ONE IEEE division of exact BIGINTs, bit-identical in both
-    * engines. Fixture counts keep the products under 2^63; at 100 TB the
-    * same fold runs in DECIMAL(38,0).
-    *
-    * Scale shape: one (QI, s) hash aggregate over the fact table, two
-    * thin re-aggregates of THAT frame (class totals, global totals — the
-    * pinned cs frame is read three times, never the fact table), a
-    * broadcast join of the |s|-row global frame, one final scalar row.
-    */
-  private def qTCloseness(s: SparkSession, dir: String): DataFrame = {
-    val cs = Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull
-        && col("value").isNotNull)
-      .select(
-        expr("(unix_micros(ts) div 3600000000) % 24").as("hr"),
-        expr("cast(floor(value) as bigint) div 10").as("vb"),
-        col("event_type"))
-      .groupBy(col("hr"), col("vb"), col("event_type"))
-      .agg(count(lit(1)).as("n_cs"))
-      .transform(graft.operators.Iterate.pin)
-    val c = cs.groupBy(col("hr"), col("vb"))
-      .agg(sum(col("n_cs")).as("n_c"))
-    val g = cs.groupBy(col("event_type")).agg(sum(col("n_cs")).as("n_s"))
-    val nTot = cs.agg(sum(col("n_cs")).as("n_tot"))
-    val per = cs.join(c, Seq("hr", "vb"))
-      .join(broadcast(g), Seq("event_type"))
-      .crossJoin(broadcast(nTot))
-      .groupBy(col("hr"), col("vb"))
-      .agg(max(col("n_c")).as("n_c"), max(col("n_tot")).as("n_tot"),
-        sum(abs(col("n_cs") * col("n_tot") - col("n_s") * col("n_c")))
-          .as("num_present"),
-        sum(col("n_s")).as("ns_present"))
-      .withColumn("t",
-        (col("num_present") + col("n_c") * (col("n_tot") - col("ns_present")))
-          .cast("double")
-          / (lit(2L) * col("n_c") * col("n_tot")).cast("double"))
-    per.agg(
-      count(lit(1)).as("n_classes"),
-      max(col("t")).as("max_t"),
-      sum(when(col("t") > 0.2, lit(1L)).otherwise(lit(0L)))
-        .as("classes_above"),
-      sum(when(col("t") > 0.2, col("n_c")).otherwise(lit(0L)))
-        .as("rows_above"),
-      max(col("n_tot")).as("n_rows"))
-  }
-
-  private val sqlTCloseness: String =
-    """WITH cs AS (
-      |  SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr,
-      |    CAST(floor(value) AS BIGINT) // 10 AS vb,
-      |    event_type, CAST(COUNT(*) AS BIGINT) AS n_cs
-      |  FROM events
-      |  WHERE ts IS NOT NULL AND event_type IS NOT NULL
-      |    AND value IS NOT NULL
-      |  GROUP BY 1, 2, 3
-      |), c AS (
-      |  SELECT hr, vb, CAST(SUM(n_cs) AS BIGINT) AS n_c
-      |  FROM cs GROUP BY hr, vb
-      |), g AS (
-      |  SELECT event_type, CAST(SUM(n_cs) AS BIGINT) AS n_s
-      |  FROM cs GROUP BY event_type
-      |), n AS (
-      |  SELECT CAST(SUM(n_cs) AS BIGINT) AS n_tot FROM cs
-      |), per AS (
-      |  SELECT cs.hr, cs.vb, MAX(c.n_c) AS n_c, MAX(n.n_tot) AS n_tot,
-      |    CAST(SUM(ABS(cs.n_cs * n.n_tot - g.n_s * c.n_c)) AS BIGINT)
-      |      AS num_present,
-      |    CAST(SUM(g.n_s) AS BIGINT) AS ns_present
-      |  FROM cs
-      |  JOIN c ON cs.hr = c.hr AND cs.vb = c.vb
-      |  JOIN g ON cs.event_type = g.event_type, n
-      |  GROUP BY cs.hr, cs.vb
-      |), t AS (
-      |  SELECT hr, vb, n_c, n_tot,
-      |    CAST(num_present + n_c * (n_tot - ns_present) AS DOUBLE)
-      |      / CAST(2 * n_c * n_tot AS DOUBLE) AS t
-      |  FROM per
-      |)
-      |SELECT CAST(COUNT(*) AS BIGINT) AS n_classes,
-      |  MAX(t) AS max_t,
-      |  CAST(SUM(CASE WHEN t > 0.2 THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS classes_above,
-      |  CAST(SUM(CASE WHEN t > 0.2 THEN n_c ELSE 0 END) AS BIGINT)
-      |    AS rows_above,
-      |  CAST(MAX(n_tot) AS BIGINT) AS n_rows
-      |FROM t""".stripMargin
-
-  /** Referential-integrity audit across the star schema's six FK edges —
-    * the dbt-style `relationships` test a lake pipeline runs before
-    * trusting joins (an orphaned fact row silently vanishes from every
-    * inner join downstream). Parents are thinned by `pk % 97 <> 0`
-    * (the `scd_overlap_audit` convention: the fixture is
-    * integrity-clean by construction, so the audit synthesizes the
-    * defect class to prove both verdicts fire; run with the filter off
-    * in production).
-    *
-    * Orphans are counted with a LEFT JOIN + IS NULL (anti join) — never
-    * NOT IN, whose three-valued NULL semantics silently un-orphans
-    * NULL FKs. Scale shape per edge: dimension keysets broadcast into
-    * the anti probe; the one fact-sized parent (orders) anti-joins on
-    * its shuffle key. Six thin scalar aggregates union into the report.
-    */
-  private val riEdges = Seq(
-    ("cust_nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-    ("li_orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-    ("li_part", "lineitem", "l_partkey", "part", "p_partkey"),
-    ("li_supp", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-    ("ord_cust", "orders", "o_custkey", "customer", "c_custkey"),
-    ("supp_nation", "supplier", "s_nationkey", "nation", "n_nationkey"))
-
-  private def qRefIntegrity(s: SparkSession, dir: String): DataFrame = {
-    def tbl(n: String): DataFrame = n match {
-      case "lineitem" => Tables.lineitem(s, dir)
-      case "orders"   => Tables.orders(s, dir)
-      case "customer" => Tables.customer(s, dir)
-      case "supplier" => Tables.supplier(s, dir)
-      case "part"     => Tables.part(s, dir)
-      case "nation"   => Tables.nation(s, dir)
-    }
-    riEdges.map { case (e, ct, fk, pt, pk) =>
-      val par = tbl(pt).select(col(pk).as("pk"))
-        .filter(col("pk") % 97 =!= 0).distinct()
-      val ch = tbl(ct).select(col(fk).as("fk"))
-      ch.agg(count(lit(1)).as("n_child"))
-        .crossJoin(broadcast(par.agg(count(lit(1)).as("n_parents"))))
-        .crossJoin(broadcast(ch.join(par, col("fk") === col("pk"),
-            "left_anti")
-          .agg(count(lit(1)).as("n_orphans"))))
-        .select(lit(e).as("edge"), col("n_child"), col("n_parents"),
-          col("n_orphans"))
-    }.reduce(_ unionByName _).orderBy(col("edge"))
-  }
-
-  private val sqlRefIntegrity: String = riEdges.map {
-    case (e, ct, fk, pt, pk) =>
-      s"""SELECT '$e' AS edge,
-         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM $ct) AS n_child,
-         |  (SELECT CAST(COUNT(DISTINCT $pk) AS BIGINT) FROM $pt
-         |   WHERE $pk % 97 <> 0) AS n_parents,
-         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM $ct c
-         |   LEFT JOIN (SELECT DISTINCT $pk AS pk FROM $pt
-         |              WHERE $pk % 97 <> 0) p
-         |   ON c.$fk = p.pk WHERE p.pk IS NULL) AS n_orphans""".stripMargin
-  }.mkString("\nUNION ALL\n") + "\nORDER BY edge"
-
-  private def qLDiversity(s: SparkSession, dir: String): DataFrame = {
-    val classes = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull
-        && col("value").isNotNull)
-      .select(
-        expr("(unix_micros(ts) div 3600000000) % 24").as("hr"),
-        expr("cast(floor(value) as bigint) div 10").as("vb"),
-        col("event_type"))
-      .groupBy(col("hr"), col("vb"))
-      .agg(countDistinct(col("event_type")).as("l"),
-        count(lit(1)).as("class_size"))
-    classes.agg(
-      count(lit(1)).as("n_classes"),
-      min(col("l")).as("min_l"),
-      max(col("l")).as("max_l"),
-      sum(when(col("l") < 3, lit(1L)).otherwise(lit(0L)))
-        .as("classes_lt3"),
-      sum(when(col("l") < 3, col("class_size")).otherwise(lit(0L)))
-        .as("rows_lt3"))
-  }
-
-  private val sqlLDiversity: String =
-    """WITH classes AS (
-      |  SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr,
-      |    CAST(floor(value) AS BIGINT) // 10 AS vb,
-      |    CAST(COUNT(DISTINCT event_type) AS BIGINT) AS l,
-      |    CAST(COUNT(*) AS BIGINT) AS class_size
-      |  FROM events
-      |  WHERE ts IS NOT NULL AND event_type IS NOT NULL
-      |    AND value IS NOT NULL
-      |  GROUP BY 1, 2
-      |)
-      |SELECT CAST(COUNT(*) AS BIGINT) AS n_classes,
-      |  CAST(MIN(l) AS BIGINT) AS min_l,
-      |  CAST(MAX(l) AS BIGINT) AS max_l,
-      |  CAST(SUM(CASE WHEN l < 3 THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS classes_lt3,
-      |  CAST(SUM(CASE WHEN l < 3 THEN class_size ELSE 0 END) AS BIGINT)
-      |    AS rows_lt3
-      |FROM classes""".stripMargin
-
-  // ------------------------------------------------- q76_null_semantics
-  // Three-valued-logic surface: window heads produce genuine NULLs,
-  // then the null-skipping filter count vs the null-SAFE equality
-  // (Spark `<=>` ↔ SQL IS NOT DISTINCT FROM) are audited side by side
-  // per event type. The lag pairing is (ts, event_id)-tied like every
-  // lag in the suite.
-  private def qNullSemantics(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), col("value"))
-      .withColumn("prev", lag(col("value"), 1).over(w))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("prev").isNull, 1L).otherwise(0L)).as("n_heads"),
-        sum(when(col("value") <=> col("prev"), 1L).otherwise(0L))
-          .as("n_nullsafe_equal"),
-        count(col("prev")).as("n_prev_nonnull"))
-      .orderBy(col("event_type"))
-  }
-
-  private val sqlNullSemantics: String =
-    """WITH lagged AS (
-      |  SELECT event_type, value,
-      |    LAG(value, 1) OVER (PARTITION BY user_id
-      |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev
-      |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-      |)
-      |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
-      |  CAST(SUM(CASE WHEN prev IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_heads,
-      |  CAST(SUM(CASE WHEN value IS NOT DISTINCT FROM prev THEN 1
-      |    ELSE 0 END) AS BIGINT) AS n_nullsafe_equal,
-      |  CAST(COUNT(prev) AS BIGINT) AS n_prev_nonnull
-      |FROM lagged GROUP BY event_type ORDER BY event_type""".stripMargin
-
-  // ------------------------------------------------- events_late_arrivals
-  // Out-of-order-arrival audit — the batch-side measurement that sizes
-  // a streaming watermark: with event_id as the arrival order, an
-  // event is LATE when its timestamp sits behind the per-user running
-  // maximum, and the max regression (seconds) is the watermark bound a
-  // deployment would need. ONE keyed window (running max over arrival
-  // order) + one aggregate; epoch-integer arithmetic.
-  private def qLateArrivals(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"), col("event_id"),
-        expr("unix_micros(ts)").as("tsu"))
-      .withColumn("hwm", max(col("tsu")).over(w))
-      .select(col("user_id"),
-        when(col("hwm").isNotNull && col("tsu") < col("hwm"), 1L)
-          .otherwise(0L).as("late"),
-        when(col("hwm").isNotNull && col("tsu") < col("hwm"),
-          (col("hwm") - col("tsu")))
-          .otherwise(lit(0L)).as("lag_us"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("late")).as("n_late"),
-        expr("max(lag_us) div 1000000").as("max_lag_sec"),
-        expr("sum(lag_us) div 1000000").as("total_lag_sec"))
-  }
-
-  private val sqlLateArrivals: String =
-    """WITH t AS (
-      |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS tsu,
-      |    MAX(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
-      |      PARTITION BY user_id ORDER BY event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hwm
-      |  FROM events WHERE ts IS NOT NULL
-      |), flagged AS (
-      |  SELECT CASE WHEN hwm IS NOT NULL AND tsu < hwm THEN 1 ELSE 0 END
-      |      AS late,
-      |    CASE WHEN hwm IS NOT NULL AND tsu < hwm THEN hwm - tsu
-      |      ELSE 0 END AS lag_us
-      |  FROM t
-      |)
-      |SELECT CAST(COUNT(*) AS BIGINT) AS n_events,
-      |  CAST(SUM(late) AS BIGINT) AS n_late,
-      |  CAST(MAX(lag_us) // 1000000 AS BIGINT) AS max_lag_sec,
-      |  CAST(SUM(lag_us) // 1000000 AS BIGINT) AS total_lag_sec
-      |FROM flagged""".stripMargin
-
-  // ------------------------------------------------- events_drift
-  // Distribution drift of the event-type mix: first half of the observed
-  // window vs second half — the input-shift monitor run before retraining
-  // or alerting (text_source_tvd is the document-side twin; this is the
-  // behavioral-stream side). Shape: ONE scan tags each event early/late
-  // against a broadcast 1-row min-day aggregate; per-type counts collapse
-  // in a single hash agg; shares divide exact BIGINTs by broadcast
-  // totals, and the delta is one IEEE subtraction of two exact-input
-  // divisions — deterministic cross-engine.
-  private val DriftSplitDays = 15L
-  private def qDrift(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("d"))
-    val mn = ev.agg(min(col("d")).as("d0"))
-    val per = ev.crossJoin(broadcast(mn))
-      .withColumn("late", col("d") - col("d0") >= DriftSplitDays)
-      .groupBy(col("event_type"))
-      .agg(sum(when(!col("late"), lit(1L)).otherwise(lit(0L))).as("n_early"),
-        sum(when(col("late"), lit(1L)).otherwise(lit(0L))).as("n_late"))
-    val tot = per.agg(sum(col("n_early")).as("te"),
-      sum(col("n_late")).as("tl"))
-    per.crossJoin(broadcast(tot))
-      .withColumn("share_early",
-        col("n_early").cast("double") / col("te").cast("double"))
-      .withColumn("share_late",
-        col("n_late").cast("double") / col("tl").cast("double"))
-      .withColumn("share_delta", col("share_late") - col("share_early"))
-      .select(col("event_type"), col("n_early"), col("n_late"),
-        col("share_early"), col("share_late"), col("share_delta"))
-      .orderBy(col("event_type"))
-  }
-
-  private val sqlDrift: String =
-    s"""WITH ev AS (
-       |  SELECT event_type,
-       |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
-       |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-       |), mn AS (SELECT MIN(d) AS d0 FROM ev),
-       |per AS (
-       |  SELECT event_type,
-       |    CAST(SUM(CASE WHEN d - d0 >= $DriftSplitDays THEN 0 ELSE 1 END)
-       |      AS BIGINT) AS n_early,
-       |    CAST(SUM(CASE WHEN d - d0 >= $DriftSplitDays THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS n_late
-       |  FROM ev, mn GROUP BY 1
-       |), tot AS (
-       |  SELECT CAST(SUM(n_early) AS BIGINT) AS te,
-       |    CAST(SUM(n_late) AS BIGINT) AS tl
-       |  FROM per
-       |)
-       |SELECT event_type, n_early, n_late,
-       |  CAST(n_early AS DOUBLE) / CAST(te AS DOUBLE) AS share_early,
-       |  CAST(n_late AS DOUBLE) / CAST(tl AS DOUBLE) AS share_late,
-       |  CAST(n_late AS DOUBLE) / CAST(tl AS DOUBLE)
-       |    - CAST(n_early AS DOUBLE) / CAST(te AS DOUBLE) AS share_delta
-       |FROM per, tot ORDER BY event_type""".stripMargin
-
-  // --------------------------------------------------- events_psi
-  // Population Stability Index over the VALUE distribution (the standard
-  // model-monitoring drift score; Siddiqi, "Credit Risk Scorecards",
-  // 2006 popularized the 0.1/0.25 alert thresholds): decile buckets are
-  // CUT ON THE BASELINE (first DriftSplitDays, the q23 rounded-percentile
-  // idiom so the edges are bit-identical before any comparison), both
-  // halves are bucketed by the same broadcast edge row, and
-  // psi_term = (q−p)·ln(q/p) with add-1 smoothing. events_drift is the
-  // categorical type-mix twin; this is the numeric-distribution side.
-  //
-  // Determinism: the ln argument is a product of two double-cast ratios
-  // ((n_cur+1)/(n_base+1)) · ((t_base+B)/(t_cur+B)) — each factor cast
-  // BEFORE the divide so the BIGINT cross-products never form (they
-  // would wrap Int64 past ~3e9 counts); both engines evaluate the same
-  // cast-divide-multiply sequence, and the emitted pmi-like
-  // terms are ROUND(…,9) — the profile_mi ln-parity discipline. Shape:
-  // one scan tags early/late (pinned — edges, cells, and totals all read
-  // it), bucket assignment is a map-side 9-comparison sum against a
-  // broadcast row; everything after is a 10-row frame.
-  private def qPsi(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("value").isNotNull)
-      .select(col("value"), expr("unix_micros(ts) div 86400000000").as("d"))
-    val mn = ev.agg(min(col("d")).as("d0"))
-    val tagged = graft.operators.Iterate.pin(ev.crossJoin(broadcast(mn))
-      .select(col("value"),
-        (col("d") - col("d0") >= DriftSplitDays).as("late")))
-    val edges = tagged.filter(!col("late"))
-      .agg(round(expr("percentile(value, 0.1)"), 4).as("e1"),
-        round(expr("percentile(value, 0.2)"), 4).as("e2"),
-        round(expr("percentile(value, 0.3)"), 4).as("e3"),
-        round(expr("percentile(value, 0.4)"), 4).as("e4"),
-        round(expr("percentile(value, 0.5)"), 4).as("e5"),
-        round(expr("percentile(value, 0.6)"), 4).as("e6"),
-        round(expr("percentile(value, 0.7)"), 4).as("e7"),
-        round(expr("percentile(value, 0.8)"), 4).as("e8"),
-        round(expr("percentile(value, 0.9)"), 4).as("e9"))
-    val bucket = (1 to 9)
-      .map(i => when(col("value") > col(s"e$i"), 1L).otherwise(0L))
-      .reduce(_ + _)
-    val cells = tagged.crossJoin(broadcast(edges))
-      .withColumn("bucket", bucket)
-      .groupBy(col("bucket"))
-      .agg(sum(when(!col("late"), 1L).otherwise(0L)).as("n_base"),
-        sum(when(col("late"), 1L).otherwise(0L)).as("n_cur"))
-    val tot = cells.agg(sum(col("n_base")).as("tb"),
-      sum(col("n_cur")).as("tc"), count(lit(1)).as("nb"))
-    cells.crossJoin(broadcast(tot))
-      .select(col("bucket"), col("n_base"), col("n_cur"),
-        ((col("n_base") + 1L).cast("double") /
-          (col("tb") + col("nb")).cast("double")).as("share_base"),
-        ((col("n_cur") + 1L).cast("double") /
-          (col("tc") + col("nb")).cast("double")).as("share_cur"),
-        round((((col("n_cur") + 1L).cast("double") /
-            (col("tc") + col("nb")).cast("double")) -
-          ((col("n_base") + 1L).cast("double") /
-            (col("tb") + col("nb")).cast("double"))) *
-          log(((col("n_cur") + 1L).cast("double") /
-              (col("n_base") + 1L).cast("double")) *
-            ((col("tb") + col("nb")).cast("double") /
-              (col("tc") + col("nb")).cast("double"))),
-          9).as("psi_term"))
-      .orderBy(col("bucket"))
-  }
-
-  private val sqlPsi: String = {
-    val edgeCols = (1 to 9).map(i =>
-      s"ROUND(quantile_cont(value, 0.$i), 4) AS e$i").mkString(", ")
-    val bucketExpr = (1 to 9).map(i =>
-      s"CASE WHEN value > e$i THEN 1 ELSE 0 END").mkString(" + ")
-    s"""WITH ev AS (
-       |  SELECT value,
-       |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
-       |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-       |), mn AS (SELECT MIN(d) AS d0 FROM ev),
-       |tagged AS (
-       |  SELECT value, d - d0 >= $DriftSplitDays AS late FROM ev, mn
-       |), edges AS (
-       |  SELECT $edgeCols
-       |  FROM tagged WHERE NOT late
-       |), cells AS (
-       |  SELECT CAST($bucketExpr AS BIGINT) AS bucket,
-       |    CAST(SUM(CASE WHEN late THEN 0 ELSE 1 END) AS BIGINT) AS n_base,
-       |    CAST(SUM(CASE WHEN late THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-       |  FROM tagged, edges GROUP BY 1
-       |), tot AS (
-       |  SELECT CAST(SUM(n_base) AS BIGINT) AS tb,
-       |    CAST(SUM(n_cur) AS BIGINT) AS tc,
-       |    CAST(COUNT(*) AS BIGINT) AS nb
-       |  FROM cells
-       |)
-       |SELECT bucket, n_base, n_cur,
-       |  CAST(n_base + 1 AS DOUBLE) / CAST(tb + nb AS DOUBLE) AS share_base,
-       |  CAST(n_cur + 1 AS DOUBLE) / CAST(tc + nb AS DOUBLE) AS share_cur,
-       |  ROUND((CAST(n_cur + 1 AS DOUBLE) / CAST(tc + nb AS DOUBLE)
-       |      - CAST(n_base + 1 AS DOUBLE) / CAST(tb + nb AS DOUBLE))
-       |    * ln((CAST(n_cur + 1 AS DOUBLE) / CAST(n_base + 1 AS DOUBLE))
-       |        * (CAST(tb + nb AS DOUBLE) / CAST(tc + nb AS DOUBLE))),
-       |      9) AS psi_term
-       |FROM cells, tot ORDER BY bucket""".stripMargin
-  }
-
-  // --------------------------------------------------- events_locf
-  // Last-observation-carried-forward imputation over a dense daily spine
-  // — the other half of gap handling (events_gapfill zero-fills counts;
-  // LOCF carries STATE, the right semantics for balances/settings/
-  // sensor readings). Per watched user: daily last value (rank window),
-  // dense user×day spine (generated, never collected), then ONE
-  // partitioned ignoreNulls-last window. Leading days before a user's
-  // first observation stay NULL — the LOCF contract.
-  //
-  // Scale shape: the rank window and the LOCF window both shuffle on
-  // user_id (AQE coalesces to one partitioning); the spine is
-  // |users|·|days| rows bounded by the watchlist cut, the production
-  // shape for a metric-serving backfill.
-  private val LocfUsers = 20L
-
-  private def qLocf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull &&
-        col("user_id") < LocfUsers && col("value").isNotNull)
-      .select(col("user_id"), to_date(col("ts")).as("d"),
-        col("ts"), col("event_id"), col("value"))
-    val wDay = Window.partitionBy(col("user_id"), col("d"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val daily = graft.operators.Iterate.pin(
-      ev.withColumn("rk", row_number().over(wDay))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("d"), col("value")))
-    val days = Tables.eventsCached(s, dir).filter(col("ts").isNotNull)
-      .select(to_date(col("ts")).as("d")).distinct()
-    val users = daily.select(col("user_id")).distinct()
-    val wLocf = Window.partitionBy(col("user_id")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    users.crossJoin(broadcast(days))
-      .join(daily, Seq("user_id", "d"), "left")
-      .withColumn("locf", last(col("value"), ignoreNulls = true).over(wLocf))
-      .select(col("user_id"), col("d").as("day"), col("value"), col("locf"),
-        (col("value").isNull && col("locf").isNotNull).as("filled"))
-      .orderBy(col("user_id"), col("day"))
-  }
-
-  private val sqlLocf: String =
-    s"""WITH ev AS (
-       |  SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-       |    CAST(ts AS TIMESTAMP) AS ts, event_id, value
-       |  FROM events
-       |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |    AND user_id < $LocfUsers AND value IS NOT NULL
-       |), daily AS (
-       |  SELECT user_id, d, value FROM (
-       |    SELECT user_id, d, value,
-       |      ROW_NUMBER() OVER (PARTITION BY user_id, d
-       |                         ORDER BY ts DESC, event_id DESC) AS rk
-       |    FROM ev
-       |  ) WHERE rk = 1
-       |), days AS (
-       |  SELECT DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-       |  FROM events WHERE ts IS NOT NULL
-       |), users AS (
-       |  SELECT DISTINCT user_id FROM daily
-       |)
-       |SELECT user_id, day, value, locf,
-       |  value IS NULL AND locf IS NOT NULL AS filled
-       |FROM (
-       |  SELECT s.user_id, s.d AS day, daily.value,
-       |    last_value(daily.value IGNORE NULLS) OVER (
-       |      PARTITION BY s.user_id ORDER BY s.d
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS locf
-       |  FROM (SELECT user_id, d FROM users CROSS JOIN days) s
-       |  LEFT JOIN daily ON s.user_id = daily.user_id AND s.d = daily.d
-       |)
-       |ORDER BY user_id, day""".stripMargin
-
-  // ------------------------------------------------- events_gapfill
-  // Dense hourly series with gaps filled: the calendar spine (generated
-  // from the observed min/max hour, NOT collected to the driver) left-
-  // joins the sparse per-hour counts and fills absent hours with 0 — the
-  // mandatory prep step before any fixed-lag computation (ACF, seasonal
-  // forecast, changepoint) whose lag arithmetic assumes a dense axis.
-  // Error events only: at both audit SFs they genuinely skip hours.
-  // Shape: the spine explodes from a broadcast 1-row bounds aggregate
-  // (|hours| rows — calendar-sized, never event-sized); one hash agg on
-  // the event side; one join keyed on the hour.
-  private def qGapfill(s: SparkSession, dir: String): DataFrame = {
-    val hourly = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("event_type") === "error")
-      .select(expr("unix_micros(ts) div 3600000000").as("hr"))
-      .groupBy(col("hr")).agg(count(lit(1)).as("n"))
-    val spine = hourly.agg(min(col("hr")).as("h0"), max(col("hr")).as("h1"))
-      .select(explode(sequence(col("h0"), col("h1"))).as("hr"))
-    spine.join(hourly, Seq("hr"), "left")
-      .select(col("hr"), coalesce(col("n"), lit(0L)).as("n_events"))
-      .orderBy(col("hr"))
-  }
-
-  private val sqlGapfill: String =
-    """WITH hourly AS (
-      |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hr,
-      |    CAST(COUNT(*) AS BIGINT) AS n
-      |  FROM events WHERE ts IS NOT NULL AND event_type = 'error'
-      |  GROUP BY 1
-      |), b AS (SELECT MIN(hr) AS h0, MAX(hr) AS h1 FROM hourly),
-      |spine AS (
-      |  SELECT unnest(range(h0, h1 + 1)) AS hr FROM b
-      |)
-      |SELECT s.hr, COALESCE(h.n, 0) AS n_events
-      |FROM spine s LEFT JOIN hourly h ON s.hr = h.hr
-      |ORDER BY s.hr""".stripMargin
-
-  // ------------------------------------------------ events_seasonal
-  // Classical additive decomposition (the moving-average method of
-  // Macaulay 1931, textbook form): daily event counts on a zero-filled
-  // spine split into trend (centered 7-day moving average, interior
-  // days only), day-of-week seasonal (per-dow mean of the detrended
-  // series — uncentered simple form), and residual. The series audit
-  // run before any anomaly rule: a spike is judged against
-  // trend+seasonal, not the raw mean.
-  //
-  // Determinism: y and the window sum s7 are exact BIGINTs; the per-dow
-  // seasonal mean is computed as ONE division of integer moments
-  // (7·Σy − Σs7)/(7·n) — never a sum of per-row doubles, whose
-  // partition order would differ across engines — and trend/residual
-  // are fixed expression trees over those exact inputs. dow = day
-  // number % 7 (engine-neutral; no locale weekday).
-  //
-  // Shape: one event-side hash agg, the gapfill spine idiom (broadcast
-  // bounds row, |days| explode), ONE unpartitioned ordered window over
-  // the calendar-sized daily frame (cardinality-bounded — the registry
-  // window rule), one |dow| join back.
-  //
-  // POSITIVE-EPOCH ASSUMPTION (suite-wide, for every `unix_micros(ts)
-  // div 86400000000` day-bucket site): Spark's `div` truncates toward
-  // zero while DuckDB's `//` floors, so the two engines would assign
-  // pre-1970 timestamps (negative epoch micros) to DIFFERENT day
-  // numbers. All event fixtures carry post-epoch timestamps — pinned by
-  // Round9Spec's non-negative-epoch guard — so truncation and floor
-  // coincide at every site.
-  private def qSeasonal(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val daily = Tables.eventsCached(s, dir).filter(col("ts").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("y"))
-    val spine = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("d"))
-    val dense = spine.join(daily, Seq("d"), "left")
-      .select(col("d"), coalesce(col("y"), lit(0L)).as("y"))
-    val w = Window.orderBy(col("d")).rowsBetween(-3, 3)
-    val interior = dense
-      .withColumn("s7", sum(col("y")).over(w))
-      .withColumn("nwin", count(lit(1)).over(w))
-      .filter(col("nwin") === 7)
-      .select(col("d"), col("y"), col("s7"), (col("d") % 7).as("dow"))
-    val seas = interior.groupBy(col("dow"))
-      .agg(count(lit(1)).as("n_dow"), sum(col("y")).as("sy"),
-        sum(col("s7")).as("ss"))
-    val trend = col("s7").cast("double") / lit(7L).cast("double")
-    val seasonal = (lit(7L) * col("sy") - col("ss")).cast("double") /
-      (lit(7L) * col("n_dow")).cast("double")
-    interior.join(seas, Seq("dow"))
-      .select(col("d").as("day_num"), col("y"), trend.as("trend"),
-        seasonal.as("seasonal"),
-        (col("y").cast("double") - trend - seasonal).as("resid"))
-      .orderBy(col("day_num"))
-  }
-
-  private val sqlSeasonal: String =
-    """WITH daily AS (
-      |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
-      |    CAST(COUNT(*) AS BIGINT) AS y
-      |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-      |), b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-      |spine AS (SELECT unnest(range(d0, d1 + 1)) AS d FROM b),
-      |dense AS (
-      |  SELECT s.d, COALESCE(dd.y, 0) AS y
-      |  FROM spine s LEFT JOIN daily dd ON s.d = dd.d
-      |), win AS (
-      |  SELECT d, y,
-      |    CAST(SUM(y) OVER (ORDER BY d
-      |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS s7,
-      |    CAST(COUNT(*) OVER (ORDER BY d
-      |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS nwin
-      |  FROM dense
-      |), interior AS (
-      |  SELECT d, y, s7, d % 7 AS dow FROM win WHERE nwin = 7
-      |), seas AS (
-      |  SELECT dow, CAST(COUNT(*) AS BIGINT) AS n_dow,
-      |    CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(s7) AS BIGINT) AS ss
-      |  FROM interior GROUP BY dow
-      |)
-      |SELECT i.d AS day_num, i.y,
-      |  CAST(i.s7 AS DOUBLE) / CAST(7 AS DOUBLE) AS trend,
-      |  CAST(7 * s.sy - s.ss AS DOUBLE)
-      |    / CAST(7 * s.n_dow AS DOUBLE) AS seasonal,
-      |  CAST(i.y AS DOUBLE) - CAST(i.s7 AS DOUBLE) / CAST(7 AS DOUBLE)
-      |    - CAST(7 * s.sy - s.ss AS DOUBLE)
-      |      / CAST(7 * s.n_dow AS DOUBLE) AS resid
-      |FROM interior i JOIN seas s USING (dow)
-      |ORDER BY day_num""".stripMargin
-
-  // ------------------------------------------------- events_ewma
-  // One-step-ahead EWMA forecast + deviation over the daily count spine
-  // (Roberts 1959's EWMA control chart, the standard ops anomaly
-  // baseline) with α = 1/2 and the window truncated at 14 lags: the
-  // smoothing weights become 2^-i, so the normalized forecast is the
-  // EXACT integer expression (Σ 2^(14−i)·y_{t−i}) / (2^14 − 1) — one
-  // BIGINT dot product with power-of-two literals and ONE division, no
-  // pow(), no per-row double accumulation, bit-identical cross-engine.
-  // deviation = y − forecast is the control-chart residual.
-  //
-  // Shape: the gapfill spine, then 14 lag() reads inside ONE ordered
-  // window pass over the calendar-sized frame (unpartitioned window
-  // above the daily aggregate — the registry rule); rows without a full
-  // history are dropped via the 14th lag's null.
-  private val EwmaLags = 14
-
-  private def qEwma(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(s, dir).filter(col("ts").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("y"))
-    val spine = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("d"))
-    val dense = spine.join(daily, Seq("d"), "left")
-      .select(col("d"), coalesce(col("y"), lit(0L)).as("y"))
-    val w = Window.orderBy(col("d"))
-    val lagged = (1 to EwmaLags).foldLeft(dense) { (df, i) =>
-      df.withColumn(s"l$i", lag(col("y"), i).over(w))
-    }
-    val num = (1 to EwmaLags)
-      .map(i => lit(1L << (EwmaLags - i)) * col(s"l$i"))
-      .reduce(_ + _)
-    val den = lit(((1L << EwmaLags) - 1).toDouble)
-    lagged.filter(col(s"l$EwmaLags").isNotNull)
-      .select(col("d").as("day_num"), col("y"),
-        (num.cast("double") / den).as("ewma"),
-        (col("y").cast("double") - num.cast("double") / den)
-          .as("deviation"))
-      .orderBy(col("day_num"))
-  }
-
-  private val sqlEwma: String = {
-    val lagDefs = (1 to EwmaLags).map(i =>
-      s"lag(y, $i) OVER (ORDER BY d) AS l$i").mkString(",\n      |    ")
-    val num = (1 to EwmaLags)
-      .map(i => s"${1L << (EwmaLags - i)} * l$i").mkString(" + ")
-    val den = ((1L << EwmaLags) - 1).toDouble
-    s"""WITH daily AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
-       |    CAST(COUNT(*) AS BIGINT) AS y
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |), b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-       |spine AS (SELECT unnest(range(d0, d1 + 1)) AS d FROM b),
-       |dense AS (
-       |  SELECT s.d, COALESCE(dd.y, 0) AS y
-       |  FROM spine s LEFT JOIN daily dd ON s.d = dd.d
-       |), lagged AS (
-       |  SELECT d, y,
-       |    $lagDefs
-       |  FROM dense
-       |)
-       |SELECT d AS day_num, y,
-       |  CAST($num AS DOUBLE) / $den AS ewma,
-       |  CAST(y AS DOUBLE) - CAST($num AS DOUBLE) / $den AS deviation
-       |FROM lagged WHERE l$EwmaLags IS NOT NULL
-       |ORDER BY day_num""".stripMargin
-  }
-
-  // ------------------------------------------------- events_cuped
-  // CUPED variance-reduced experiment readout (Deng, Xu, Kohavi & Walker,
-  // "Improving the Sensitivity of Online Controlled Experiments by
-  // Utilizing Pre-Experiment Data", WSDM 2013): the post-period revenue
-  // metric is adjusted by each user's PRE-period revenue — the covariate
-  // that soaks up between-user variance the treatment can't explain —
-  // shrinking the confidence interval by 1−ρ² without touching the
-  // point-estimate's validity. θ is the pooled OLS slope cov(x,y)/var(x).
-  // Shape: ONE user-keyed aggregate builds (variant, x, y) — pre/post
-  // split rides as a CASE on the day index against a broadcast min-day
-  // row — then ONE global conditional-sum aggregate produces every
-  // moment; θ, lifts and the variance-reduction factor are a fixed
-  // closed-form double expression over exact inputs. Per-user sums are
-  // cents-exact through the decimal detour; the product/square moments
-  // are exact at scale 4 (per-user totals ≪ 3·10⁵, so x·y·10⁴ < 2⁵³);
-  // every engine then runs the identical IEEE expression tree.
-  private val CupedPreDays = 15L
-  private def qCuped(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val ev = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id"), col("event_type"), col("value"),
-        expr("unix_micros(ts) div 86400000000").as("d"))
-    val mn = ev.agg(min(col("d")).as("d0"))
-    val u = ev.crossJoin(broadcast(mn))
-      .withColumn("pre", col("d") - col("d0") < CupedPreDays)
-      .groupBy(col("user_id"))
-      .agg(
-        Exact.xsum(when(col("pre") && col("event_type") === "purchase",
-          col("value")).otherwise(lit(0.0)), 2).as("x"),
-        Exact.xsum(when(!col("pre") && col("event_type") === "purchase",
-          col("value")).otherwise(lit(0.0)), 2).as("y"))
-      .select((col("user_id") % 2).as("variant"), col("x"), col("y"))
-    val m = u.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_c"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_t"),
-      Exact.xsum(when(col("variant") === 0, col("x"))
-        .otherwise(lit(0.0)), 2).as("sx_c"),
-      Exact.xsum(when(col("variant") === 1, col("x"))
-        .otherwise(lit(0.0)), 2).as("sx_t"),
-      Exact.xsum(when(col("variant") === 0, col("y"))
-        .otherwise(lit(0.0)), 2).as("sy_c"),
-      Exact.xsum(when(col("variant") === 1, col("y"))
-        .otherwise(lit(0.0)), 2).as("sy_t"),
-      Exact.xsum(col("x") * col("y"), 4).as("sxy"),
-      Exact.xsum(col("x") * col("x"), 4).as("sxx"),
-      Exact.xsum(col("y") * col("y"), 4).as("syy"))
-    val n = (col("n_c") + col("n_t")).cast("double")
-    val sx = col("sx_c") + col("sx_t")
-    val sy = col("sy_c") + col("sy_t")
-    val covN = n * col("sxy") - sx * sy
-    val varxN = n * col("sxx") - sx * sx
-    val varyN = n * col("syy") - sy * sy
-    val theta = covN / varxN
-    val liftRaw = col("sy_t") / col("n_t").cast("double") -
-      col("sy_c") / col("n_c").cast("double")
-    val liftCuped = liftRaw - theta *
-      (col("sx_t") / col("n_t").cast("double") -
-        col("sx_c") / col("n_c").cast("double"))
-    m.select(col("n_c"), col("n_t"), theta.as("theta"),
-      liftRaw.as("lift_raw"), liftCuped.as("lift_cuped"),
-      ((covN * covN) / (varxN * varyN)).as("var_reduction"))
-  }
-
-  private val sqlCuped: String = {
-    import graft.functions.Exact
-    s"""WITH ev AS (
-       |  SELECT user_id, event_type, value,
-       |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
-       |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |), mn AS (SELECT MIN(d) AS d0 FROM ev),
-       |u AS (
-       |  SELECT user_id % 2 AS variant,
-       |    ${Exact.sqlSum(
-      s"CASE WHEN d - d0 < $CupedPreDays AND event_type = 'purchase' " +
-        "THEN value ELSE 0 END", 2)} AS x,
-       |    ${Exact.sqlSum(
-      s"CASE WHEN d - d0 >= $CupedPreDays AND event_type = 'purchase' " +
-        "THEN value ELSE 0 END", 2)} AS y
-       |  FROM ev, mn GROUP BY user_id
-       |), m AS (
-       |  SELECT
-       |    CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_c,
-       |    CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_t,
-       |    ${Exact.sqlSum("CASE WHEN variant = 0 THEN x ELSE 0 END", 2)}
-       |      AS sx_c,
-       |    ${Exact.sqlSum("CASE WHEN variant = 1 THEN x ELSE 0 END", 2)}
-       |      AS sx_t,
-       |    ${Exact.sqlSum("CASE WHEN variant = 0 THEN y ELSE 0 END", 2)}
-       |      AS sy_c,
-       |    ${Exact.sqlSum("CASE WHEN variant = 1 THEN y ELSE 0 END", 2)}
-       |      AS sy_t,
-       |    ${Exact.sqlSum("x * y", 4)} AS sxy,
-       |    ${Exact.sqlSum("x * x", 4)} AS sxx,
-       |    ${Exact.sqlSum("y * y", 4)} AS syy
-       |  FROM u
-       |)
-       |SELECT n_c, n_t,
-       |  (CAST(n_c + n_t AS DOUBLE) * sxy - (sx_c + sx_t) * (sy_c + sy_t))
-       |    / (CAST(n_c + n_t AS DOUBLE) * sxx - (sx_c + sx_t) * (sx_c + sx_t))
-       |    AS theta,
-       |  sy_t / CAST(n_t AS DOUBLE) - sy_c / CAST(n_c AS DOUBLE) AS lift_raw,
-       |  (sy_t / CAST(n_t AS DOUBLE) - sy_c / CAST(n_c AS DOUBLE))
-       |    - ((CAST(n_c + n_t AS DOUBLE) * sxy
-       |          - (sx_c + sx_t) * (sy_c + sy_t))
-       |        / (CAST(n_c + n_t AS DOUBLE) * sxx
-       |          - (sx_c + sx_t) * (sx_c + sx_t)))
-       |      * (sx_t / CAST(n_t AS DOUBLE) - sx_c / CAST(n_c AS DOUBLE))
-       |    AS lift_cuped,
-       |  ((CAST(n_c + n_t AS DOUBLE) * sxy - (sx_c + sx_t) * (sy_c + sy_t))
-       |    * (CAST(n_c + n_t AS DOUBLE) * sxy - (sx_c + sx_t) * (sy_c + sy_t)))
-       |  / ((CAST(n_c + n_t AS DOUBLE) * sxx - (sx_c + sx_t) * (sx_c + sx_t))
-       |    * (CAST(n_c + n_t AS DOUBLE) * syy - (sy_c + sy_t) * (sy_c + sy_t)))
-       |    AS var_reduction
-       |FROM m""".stripMargin
-  }
-
-  // ------------------------------------------- events_forecast_interval
-  // Seasonal-naive forecast with an EMPIRICAL prediction interval: the
-  // point forecast for each of the next 7 days is the count 7 days back
-  // (events_forecast_naive's model), and the band around it is the
-  // 10th/90th percentile of the model's OWN in-sample residuals — the
-  // distribution-free conformal-style band every forecast dashboard
-  // draws. Shape: one |days|-row dense daily series (zero-filled from a
-  // broadcast bounds row), residuals via one self-join on d−7, the two
-  // percentile picks via row_number over the |days|-row residual frame
-  // (type-1 / discontinuous — pure integer arithmetic, no interpolated
-  // doubles), and the 7 future rows explode from the bounds row. All
-  // integers end to end — bit-identical cross-engine by construction.
-  private val FiLag = 7
-  private val FiHorizon = 7
-  private def qForecastInterval(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir).filter(col("ts").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("n"))
-    val bounds = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-    val spine = bounds.select(explode(sequence(col("d0"), col("d1"))).as("d"))
-    val dense = graft.operators.Iterate.pin(
-      spine.join(daily, Seq("d"), "left")
-        .select(col("d"), coalesce(col("n"), lit(0L)).as("n")))
-    val resid = dense.as("a")
-      .join(dense.as("b"), col("a.d") === col("b.d") + FiLag)
-      .select((col("a.n") - col("b.n")).as("r"))
-    val nres = resid.agg(count(lit(1)).as("nr"))
-    val ranked = resid.crossJoin(broadcast(nres))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("r"))))
-    val qs = ranked.agg(
-      max(when(col("rk") === floor(lit(0.1) * (col("nr") - 1)) + 1,
-        col("r"))).as("q10"),
-      max(when(col("rk") === floor(lit(0.9) * (col("nr") - 1)) + 1,
-        col("r"))).as("q90"))
-    val future = bounds
-      .select(col("d1"), explode(sequence(col("d1") + 1,
-        col("d1") + FiHorizon)).as("d"))
-    future.join(dense.select((col("d") + FiLag).as("d"),
-        col("n").as("point")), Seq("d"))
-      .crossJoin(broadcast(qs))
-      .select(col("d"), col("point"),
-        greatest(col("point") + col("q10"), lit(0L)).as("lo"),
-        (col("point") + col("q90")).as("hi"))
-      .orderBy(col("d"))
-  }
-
-  private val sqlForecastInterval: String =
-    s"""WITH daily AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |), b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-       |spine AS (SELECT unnest(range(d0, d1 + 1)) AS d FROM b),
-       |dense AS (
-       |  SELECT s.d, COALESCE(daily.n, 0) AS n
-       |  FROM spine s LEFT JOIN daily ON s.d = daily.d
-       |), resid AS (
-       |  SELECT a.n - bb.n AS r
-       |  FROM dense a JOIN dense bb ON a.d = bb.d + $FiLag
-       |), nres AS (SELECT CAST(COUNT(*) AS BIGINT) AS nr FROM resid),
-       |ranked AS (
-       |  SELECT r, nr, ROW_NUMBER() OVER (ORDER BY r) AS rk
-       |  FROM resid, nres
-       |), qs AS (
-       |  SELECT
-       |    MAX(CASE WHEN rk = CAST(floor(0.1 * (nr - 1)) AS BIGINT) + 1
-       |      THEN r END) AS q10,
-       |    MAX(CASE WHEN rk = CAST(floor(0.9 * (nr - 1)) AS BIGINT) + 1
-       |      THEN r END) AS q90
-       |  FROM ranked
-       |), future AS (
-       |  SELECT unnest(range(d1 + 1, d1 + ${FiHorizon + 1})) AS d FROM b
-       |)
-       |SELECT f.d, dn.n AS point,
-       |  GREATEST(dn.n + qs.q10, 0) AS lo,
-       |  dn.n + qs.q90 AS hi
-       |FROM future f JOIN dense dn ON f.d = dn.d + $FiLag, qs
-       |ORDER BY f.d""".stripMargin
-
-  // ------------------------------------------------- events_seasonality
-  // Weekly-seasonality strength of the daily volume series: the R² of
-  // the day-of-week means — 1 − SS_resid/SS_tot, the variance share the
-  // weekly cycle explains (Hyndman's STL-based strength measure in its
-  // single-period closed form). events_acf DIAGNOSES the lag-7 cycle;
-  // this prices it — the number that justifies a seasonal forecast
-  // baseline over a flat one. Shape: one |days|-row count aggregate,
-  // one ≤7-group aggregate; both sums of squares collapse to integer
-  // moments (SS = ΣQ − S²/D), so the only doubles are the per-group
-  // S²/D rationals summed through the exact-decimal detour and two
-  // closing divisions.
-  private def qSeasonality(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val daily = Tables.eventsCached(s, dir).filter(col("ts").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("d"))
-      .groupBy(col("d")).agg(count(lit(1)).as("n"))
-    val dow = daily.select((col("d") % 7).as("w"), col("n"))
-      .groupBy(col("w"))
-      .agg(count(lit(1)).as("dw"), sum(col("n")).as("sw"),
-        sum(col("n") * col("n")).as("qw"))
-    val m = dow.agg(
-      sum(col("dw")).as("dd"), sum(col("sw")).as("ss"),
-      sum(col("qw")).as("qq"),
-      Exact.xsum(col("sw").cast("double") * col("sw").cast("double")
-        / col("dw").cast("double"), 6).as("swsq"))
-    val ssTot = col("qq").cast("double") -
-      col("ss").cast("double") * col("ss").cast("double") /
-        col("dd").cast("double")
-    val ssResid = col("qq").cast("double") - col("swsq")
-    m.select(col("dd").as("n_days"),
-      (col("ss").cast("double") / col("dd").cast("double"))
-        .as("grand_mean"),
-      ssTot.as("ss_tot"), ssResid.as("ss_resid"),
-      (lit(1.0) - ssResid / ssTot).as("seasonality_strength"))
-  }
-
-  private val sqlSeasonality: String = {
-    import graft.functions.Exact
-    s"""WITH daily AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |), dow AS (
-       |  SELECT d % 7 AS w, CAST(COUNT(*) AS BIGINT) AS dw,
-       |    CAST(SUM(n) AS BIGINT) AS sw,
-       |    CAST(SUM(n * n) AS BIGINT) AS qw
-       |  FROM daily GROUP BY 1
-       |), m AS (
-       |  SELECT CAST(SUM(dw) AS BIGINT) AS dd,
-       |    CAST(SUM(sw) AS BIGINT) AS ss,
-       |    CAST(SUM(qw) AS BIGINT) AS qq,
-       |    ${Exact.sqlSum(
-      "CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE) / CAST(dw AS DOUBLE)", 6)}
-       |      AS swsq
-       |  FROM dow
-       |)
-       |SELECT dd AS n_days,
-       |  CAST(ss AS DOUBLE) / CAST(dd AS DOUBLE) AS grand_mean,
-       |  CAST(qq AS DOUBLE)
-       |    - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) / CAST(dd AS DOUBLE)
-       |    AS ss_tot,
-       |  CAST(qq AS DOUBLE) - swsq AS ss_resid,
-       |  CAST(1 AS DOUBLE)
-       |    - (CAST(qq AS DOUBLE) - swsq)
-       |      / (CAST(qq AS DOUBLE)
-       |        - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE)
-       |          / CAST(dd AS DOUBLE)) AS seasonality_strength
-       |FROM m""".stripMargin
-  }
-
-  // -------------------------------------------- events_markov_stationary
-  // Stationary distribution of the first-order behavior chain
-  // (events_transitions' matrix): π·P power iteration from uniform — the
-  // long-run share of time a user's next-event process spends in each
-  // state, the summary number behind "what does steady-state engagement
-  // look like". Shape: the transition frame is |types|²-bounded (≤ 25
-  // rows), so after the ONE corpus-wide lead-window pass every round is
-  // a tiny broadcastable join + one exact-decimal aggregate — the
-  // pagerank round discipline on a micro frame. p = n/n_from divides
-  // exact BIGINTs; each round's mass sums through the scale-12 decimal
-  // detour in engine-independent order.
-  private val MsIters = 3
-  /** Index of dispersion of hourly arrivals per event type (Cox-Lewis,
-    * "The Statistical Analysis of Series of Events", 1966 §4: the
-    * variance-to-mean ratio of counts in equal windows — 1 under
-    * Poisson, >1 overdispersed/bursty, <1 regular). Complements
-    * `events_burstiness` (inter-arrival CV) with the COUNT-side test on
-    * a shared observation window.
-    *
-    * Exactness: D = Var/Mean over hourly counts folds entirely to
-    * integer moments — D = (H·ΣQ − S²)/(H·S) with S = Σc, ΣQ = Σc²,
-    * H = the GLOBAL hour span (so empty hours count as zeros without
-    * materializing them) — one IEEE division of exact BIGINTs.
-    * Scale shape: one (type, hour) hash aggregate, one thin re-aggregate,
-    * a broadcast 1-row span.
-    */
-  private def qDispersion(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 3600000000").as("hr"))
-    val span = ev.agg(min(col("hr")).as("hmin"), max(col("hr")).as("hmax"))
-    ev.groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("event_type"))
-      .agg(sum(col("c")).as("n_events"),
-        sum(col("c") * col("c")).as("sum_sq"))
-      .crossJoin(broadcast(span))
-      .select(col("event_type"),
-        (col("hmax") - col("hmin") + lit(1L)).as("n_hours"),
-        col("n_events"), col("sum_sq"))
-      .withColumn("dispersion",
-        (col("n_hours") * col("sum_sq") - col("n_events") * col("n_events"))
-          .cast("double")
-          / (col("n_hours") * col("n_events")).cast("double"))
-      .orderBy(col("event_type"))
-  }
-
-  private val sqlDispersion: String =
-    """WITH ev AS (
-      |  SELECT event_type,
-      |    epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hr
-      |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-      |), span AS (
-      |  SELECT MIN(hr) AS hmin, MAX(hr) AS hmax FROM ev
-      |), hc AS (
-      |  SELECT event_type, hr, CAST(COUNT(*) AS BIGINT) AS c
-      |  FROM ev GROUP BY 1, 2
-      |), m AS (
-      |  SELECT event_type, CAST(SUM(c) AS BIGINT) AS n_events,
-      |    CAST(SUM(c * c) AS BIGINT) AS sum_sq
-      |  FROM hc GROUP BY 1
-      |)
-      |SELECT event_type, hmax - hmin + 1 AS n_hours, n_events, sum_sq,
-      |  CAST((hmax - hmin + 1) * sum_sq - n_events * n_events AS DOUBLE)
-      |    / CAST((hmax - hmin + 1) * n_events AS DOUBLE) AS dispersion
-      |FROM m, span
-      |ORDER BY event_type""".stripMargin
-
-  /** Entropy rate of the event-type Markov chain (Shannon 1948 §7 /
-    * Cover-Thomas ch.4): the plug-in conditional entropy of the next
-    * type given the current one, H = −Σ_ij (n_ij/N)·ln(n_ij/n_i·), over
-    * the SAME per-user transition frame as `events_markov_stationary` —
-    * with the marginal type entropy H₀ beside it, the H/H₀ ratio reads
-    * as how much sequence structure the chain captures (1 = memoryless).
-    * Uses the EMPIRICAL origin distribution n_i·/N (the MLE plug-in), not
-    * the power-iterated π, so the estimate carries no iteration error.
-    *
-    * Exactness: each term is single IEEE ops on exact-integer ratios;
-    * both sums go through the scale-12 exact detour; negation and the
-    * final ratio are single ops — the `events_user_entropy` discipline.
-    * Scale shape: one keyed lead window + one (i,j) hash aggregate
-    * (|types|² rows), everything after is |types|²-bounded.
-    */
-  private def qEntropyRate(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val t = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type").as("from_type"))
-      .withColumn("to_type", lead(col("from_type"), 1).over(w))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .transform(graft.operators.Iterate.pin)
-    val ft = t.groupBy(col("from_type")).agg(sum(col("n")).as("n_from"))
-    val tot = t.agg(sum(col("n")).as("n_tot"),
-      countDistinct(col("from_type")).as("n_states"))
-    val hRate = t.join(broadcast(ft), Seq("from_type"))
-      .crossJoin(broadcast(tot))
-      .select(((col("n").cast("double") / col("n_tot").cast("double"))
-        * log(col("n").cast("double") / col("n_from").cast("double")))
-        .as("term"))
-      .agg((-Exact.xsum(col("term"), 12)).as("h_rate"))
-    val hMarg = t.groupBy(col("to_type")).agg(sum(col("n")).as("n_to"))
-      .crossJoin(broadcast(tot))
-      .select(((col("n_to").cast("double") / col("n_tot").cast("double"))
-        * log(col("n_to").cast("double") / col("n_tot").cast("double")))
-        .as("term"))
-      .agg((-Exact.xsum(col("term"), 12)).as("h_marginal"))
-    tot.crossJoin(broadcast(hRate)).crossJoin(broadcast(hMarg))
-      .select(col("n_tot").as("n_transitions"), col("n_states"),
-        col("h_rate"), col("h_marginal"),
-        (col("h_rate") / col("h_marginal")).as("structure_ratio"))
-  }
-
-  private val sqlEntropyRate: String = {
-    import graft.functions.Exact
-    s"""WITH seq AS (
-       |  SELECT user_id, event_type AS from_type,
-       |    LEAD(event_type) OVER (PARTITION BY user_id
-       |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS to_type
-       |  FROM events WHERE ts IS NOT NULL
-       |), t AS (
-       |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-       |), ft AS (
-       |  SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_from
-       |  FROM t GROUP BY 1
-       |), tot AS (
-       |  SELECT CAST(SUM(n) AS BIGINT) AS n_tot,
-       |    CAST(COUNT(DISTINCT from_type) AS BIGINT) AS n_states
-       |  FROM t
-       |), hr AS (
-       |  SELECT -(${Exact.sqlSum(
-                "(CAST(t.n AS DOUBLE) / CAST(tot.n_tot AS DOUBLE)) * " +
-                "ln(CAST(t.n AS DOUBLE) / CAST(ft.n_from AS DOUBLE))", 12)})
-       |    AS h_rate
-       |  FROM t JOIN ft ON t.from_type = ft.from_type, tot
-       |), mg AS (
-       |  SELECT to_type, CAST(SUM(n) AS BIGINT) AS n_to FROM t GROUP BY 1
-       |), hm AS (
-       |  SELECT -(${Exact.sqlSum(
-                "(CAST(n_to AS DOUBLE) / CAST(tot.n_tot AS DOUBLE)) * " +
-                "ln(CAST(n_to AS DOUBLE) / CAST(tot.n_tot AS DOUBLE))", 12)})
-       |    AS h_marginal
-       |  FROM mg, tot
-       |)
-       |SELECT tot.n_tot AS n_transitions, tot.n_states,
-       |  hr.h_rate, hm.h_marginal,
-       |  hr.h_rate / hm.h_marginal AS structure_ratio
-       |FROM tot, hr, hm""".stripMargin
-  }
-
-  private def qMarkovStationary(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val t = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type").as("from_type"))
-      .withColumn("to_type", lead(col("from_type"), 1).over(w))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val fromTotals = t.groupBy(col("from_type"))
-      .agg(sum(col("n")).as("n_from"))
-    val trans = graft.operators.Iterate.pin(
-      t.join(broadcast(fromTotals), Seq("from_type"))
-        .select(col("from_type"), col("to_type"),
-          (col("n").cast("double") / col("n_from").cast("double")).as("p")))
-    val states = trans.select(col("from_type").as("state")).distinct()
-    val nn = states.agg(count(lit(1)).as("n"))
-    var pi = states.crossJoin(broadcast(nn))
-      .select(col("state"), (lit(1.0) / col("n")).as("pi"))
-    for (_ <- 1 to MsIters) {
-      pi = trans.join(pi, trans("from_type") === pi("state"))
-        .groupBy(col("to_type"))
-        .agg(Exact.xsum(col("pi") * col("p"), 12).as("pi2"))
-        .select(col("to_type").as("state"), col("pi2").as("pi"))
-    }
-    pi.orderBy(col("state"))
-  }
-
-  private val sqlMarkovStationary: String = {
-    import graft.functions.Exact
-    val rounds = (1 to MsIters).map { k =>
-      s"""p$k AS (
-         |  SELECT tr.to_type AS state,
-         |    ${Exact.sqlSum("r.pi * tr.p", 12)} AS pi
-         |  FROM trans tr JOIN p${k - 1} r ON tr.from_type = r.state
-         |  GROUP BY 1
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH seq AS (
-       |  SELECT user_id, event_type AS from_type,
-       |    LEAD(event_type) OVER (PARTITION BY user_id
-       |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS to_type
-       |  FROM events WHERE ts IS NOT NULL
-       |), t AS (
-       |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-       |), ft AS (
-       |  SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_from
-       |  FROM t GROUP BY from_type
-       |), trans AS (
-       |  SELECT t.from_type, t.to_type,
-       |    CAST(t.n AS DOUBLE) / CAST(ft.n_from AS DOUBLE) AS p
-       |  FROM t JOIN ft USING (from_type)
-       |), states AS (SELECT DISTINCT from_type AS state FROM trans),
-       |nn AS (SELECT COUNT(*) AS n FROM states),
-       |p0 AS (SELECT state, CAST(1 AS DOUBLE) / n AS pi FROM states, nn),
-       |$rounds
-       |SELECT state, pi FROM p$MsIters ORDER BY state""".stripMargin
-  }
-
-  // ------------------------------------------------- scd_overlap_audit
-  // Temporal-table consistency audit: per key, how many version intervals
-  // OVERLAP their predecessor, how many leave a GAP, and the total
-  // overlapped duration — the data-quality gate run on any externally
-  // produced interval table before as-of queries can be trusted
-  // (Changelog.intervals is overlap-free by construction; real ingested
-  // history tables are not). The fixture intervals are synthesized from
-  // orders with deterministic per-row durations so both defect classes
-  // genuinely occur. Shape: ONE keyed lag window + ONE aggregate — the
-  // single-exchange discipline of the changelog family; all arithmetic
-  // is epoch-microsecond BIGINTs (no timestamp rounding to diverge).
-  private def qScdOverlapAudit(s: SparkSession, dir: String): DataFrame = {
-    val iv = Tables.orders(s, dir).select(
-      (col("o_custkey") % 50).as("k"),
-      col("o_orderkey").as("id"),
-      expr("unix_micros(cast(o_orderdate as timestamp))").as("vf"))
-      .withColumn("vt",
-        col("vf") + (col("id") % 20 + 1) * lit(86400000000L))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("k")).orderBy(col("vf"), col("id"))
-    iv.withColumn("pvt", lag(col("vt"), 1).over(w))
-      .withColumn("ov_days", when(col("pvt") > col("vf"),
-        expr("(pvt - vf) div 86400000000")).otherwise(lit(0L)))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_versions"),
-        sum(when(col("pvt") > col("vf"), 1L).otherwise(0L))
-          .as("n_overlaps"),
-        sum(when(col("pvt") < col("vf"), 1L).otherwise(0L)).as("n_gaps"),
-        sum(col("ov_days")).as("overlap_days"))
-      .orderBy(col("k"))
-  }
-
-  private val sqlScdOverlapAudit: String =
-    """WITH iv AS (
-      |  SELECT o_custkey % 50 AS k, o_orderkey AS id,
-      |    epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS vf,
-      |    epoch_us(CAST(o_orderdate AS TIMESTAMP))
-      |      + (o_orderkey % 20 + 1) * 86400000000 AS vt
-      |  FROM orders
-      |), lagged AS (
-      |  SELECT k, vf, vt,
-      |    LAG(vt) OVER (PARTITION BY k ORDER BY vf, id) AS pvt
-      |  FROM iv
-      |)
-      |SELECT k, CAST(COUNT(*) AS BIGINT) AS n_versions,
-      |  CAST(SUM(CASE WHEN pvt > vf THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_overlaps,
-      |  CAST(SUM(CASE WHEN pvt < vf THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_gaps,
-      |  CAST(SUM(CASE WHEN pvt > vf THEN (pvt - vf) // 86400000000
-      |    ELSE 0 END) AS BIGINT) AS overlap_days
-      |FROM lagged GROUP BY k ORDER BY k""".stripMargin
-
-  // ------------------------------------------------- events_mad
-  // Robust location/spread per event type: median + MAD (median absolute
-  // deviation) and the robust-z outlier count at the standard 3σ cut
-  // (Hampel identifier; 1.4826·MAD is the Gaussian-consistent σ
-  // estimate). The robust twin of events_winsorize's trimming: a single
-  // 10 000× value corrupts a mean/stddev monitor but moves MAD not at
-  // all. Shape: exact interpolated percentile per type (the q23 idiom —
-  // Spark `percentile` ↔ DuckDB `quantile_cont`), the median broadcast
-  // back for ONE deviation pass + second percentile, then one
-  // conditional count. At 100 TB the exact group percentile swaps for
-  // the KLL sketch (sketch_percentile) with the identical frame.
-  private def qMad(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("value").isNotNull)
-      .select(col("event_type"), col("value"))
-    // both percentiles are ROUNDED (q23's interpolation-absorbing idiom)
-    // BEFORE any reuse, so the deviation and threshold arithmetic runs on
-    // bit-identical inputs in both engines
-    val med = ev.groupBy(col("event_type"))
-      .agg(round(expr("percentile(value, 0.5)"), 4).as("med"))
-    val dev = ev.join(broadcast(med), Seq("event_type"))
-      .withColumn("adev", abs(col("value") - col("med")))
-    val mad = dev.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), min(col("med")).as("median"),
-        round(expr("percentile(adev, 0.5)"), 4).as("mad"))
-    dev.join(broadcast(mad.select(col("event_type"), col("mad"))),
-        Seq("event_type"))
-      .groupBy(col("event_type"))
-      // single literal 4.4478 = 3·1.4826, NOT the product of two lits:
-      // Spark's IEEE product could differ by an ulp from the oracle's
-      // decimal-parsed constant and flip a boundary row
-      .agg(sum(when(col("adev") > lit(4.4478) * col("mad"), 1L)
-        .otherwise(0L)).as("n_outliers"))
-      .join(mad, Seq("event_type"))
-      .select(col("event_type"), col("n"), col("median"), col("mad"),
-        col("n_outliers"))
-      .orderBy(col("event_type"))
-  }
-
-  private val sqlMad: String =
-    """WITH ev AS (
-      |  SELECT event_type, value FROM events
-      |  WHERE ts IS NOT NULL AND value IS NOT NULL
-      |), med AS (
-      |  SELECT event_type, ROUND(quantile_cont(value, 0.5), 4) AS med
-      |  FROM ev GROUP BY event_type
-      |), dev AS (
-      |  SELECT ev.event_type, ev.value, med.med,
-      |    abs(ev.value - med.med) AS adev
-      |  FROM ev JOIN med USING (event_type)
-      |), mad AS (
-      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-      |    MIN(med) AS median,
-      |    ROUND(quantile_cont(adev, 0.5), 4) AS mad
-      |  FROM dev GROUP BY event_type
-      |)
-      |SELECT d.event_type, m.n, m.median, m.mad,
-      |  CAST(SUM(CASE WHEN d.adev > CAST(4.4478 AS DOUBLE) * m.mad
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-      |FROM dev d JOIN mad m USING (event_type)
-      |GROUP BY d.event_type, m.n, m.median, m.mad
-      |ORDER BY d.event_type""".stripMargin
-
-  // ------------------------------------------------- events_srm
-  // Sample-ratio mismatch check (Fabijan et al., "Diagnosing Sample
-  // Ratio Mismatch in Online Controlled Experiments", KDD 2019): is the
-  // observed variant split consistent with the designed 50/50? SRM is
-  // the first gate of any experiment readout — a skewed assignment
-  // invalidates events_abtest/events_cuped before any metric is read.
-  // Shape: ONE distinct-user aggregate; χ² (df=1) is a closed-form
-  // double over two exact BIGINTs, compared against the fixed 95 %
-  // critical value. Flagging rides in the row, not in control flow.
-  private val SrmCrit = 3.841
-  private def qSrm(s: SparkSession, dir: String): DataFrame = {
-    val m = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id")).distinct()
-      .agg(sum(when(col("user_id") % 2 === 0, 1L).otherwise(0L)).as("n_c"),
-        sum(when(col("user_id") % 2 === 1, 1L).otherwise(0L)).as("n_t"))
-    val e = (col("n_c") + col("n_t")).cast("double") / lit(2.0)
-    val chi2 = (col("n_c").cast("double") - e) * (col("n_c").cast("double") - e) / e +
-      (col("n_t").cast("double") - e) * (col("n_t").cast("double") - e) / e
-    m.select(col("n_c"), col("n_t"), chi2.as("chi2"),
-      (chi2 < lit(SrmCrit)).as("ratio_ok"))
-  }
-
-  private val sqlSrm: String =
-    s"""WITH u AS (
-       |  SELECT DISTINCT user_id FROM events
-       |  WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |), m AS (
-       |  SELECT
-       |    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_c,
-       |    CAST(SUM(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_t
-       |  FROM u
-       |)
-       |SELECT n_c, n_t,
-       |  (CAST(n_c AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    * (CAST(n_c AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    / (CAST(n_c + n_t AS DOUBLE) / 2)
-       |  + (CAST(n_t AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    * (CAST(n_t AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    / (CAST(n_c + n_t AS DOUBLE) / 2) AS chi2,
-       |  ((CAST(n_c AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    * (CAST(n_c AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    / (CAST(n_c + n_t AS DOUBLE) / 2)
-       |  + (CAST(n_t AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    * (CAST(n_t AS DOUBLE) - CAST(n_c + n_t AS DOUBLE) / 2)
-       |    / (CAST(n_c + n_t AS DOUBLE) / 2)) < $SrmCrit AS ratio_ok
-       |FROM m""".stripMargin
-
-  // ------------------------------------------------- events_did
-  // Difference-in-differences panel readout (Card & Krueger 1994 made
-  // the design canonical): per-user purchase revenue in the four
-  // (variant × pre/post) cells; the DiD estimate is the interaction —
-  // treatment's post−pre shift minus control's, the causal readout
-  // when assignment correlates with time-invariant user traits. Uses
-  // the SAME 15-day split and variant hash as events_cuped, so the two
-  // estimates are directly comparable. Shape: ONE scan tags cells
-  // against the broadcast min-day row, ONE aggregate builds all four
-  // cell sums + distinct-user counts; cell means and the estimate are
-  // a fixed closed-form double expression over exact decimal sums.
-  private def qDid(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val ev = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id"), col("event_type"), col("value"),
-        expr("unix_micros(ts) div 86400000000").as("d"))
-    val mn = ev.agg(min(col("d")).as("d0"))
-    val tagged = ev.crossJoin(broadcast(mn))
-      .withColumn("t", (col("user_id") % 2 === 1))
-      .withColumn("post", col("d") - col("d0") >= CupedPreDays)
-    def cellSum(t: Boolean, post: Boolean) =
-      Exact.xsum(when(col("t") === t && col("post") === post &&
-        col("event_type") === "purchase", col("value"))
-        .otherwise(lit(0.0)), 2)
-    def cellUsers(t: Boolean) =
-      countDistinct(when(col("t") === t, col("user_id")))
-    val m = tagged.agg(
-      cellSum(t = false, post = false).as("s_c_pre"),
-      cellSum(t = false, post = true).as("s_c_post"),
-      cellSum(t = true, post = false).as("s_t_pre"),
-      cellSum(t = true, post = true).as("s_t_post"),
-      cellUsers(t = false).as("n_c"),
-      cellUsers(t = true).as("n_t"))
-    def mean(sc: Column, n: Column) = sc / n.cast("double")
-    val mCPre = mean(col("s_c_pre"), col("n_c"))
-    val mCPost = mean(col("s_c_post"), col("n_c"))
-    val mTPre = mean(col("s_t_pre"), col("n_t"))
-    val mTPost = mean(col("s_t_post"), col("n_t"))
-    m.select(col("n_c"), col("n_t"),
-      mCPre.as("mean_c_pre"), mCPost.as("mean_c_post"),
-      mTPre.as("mean_t_pre"), mTPost.as("mean_t_post"),
-      ((mTPost - mTPre) - (mCPost - mCPre)).as("did_estimate"))
-  }
-
-  private val sqlDid: String = {
-    import graft.functions.Exact
-    def cell(t: Int, post: Boolean) = Exact.sqlSum(
-      s"CASE WHEN user_id % 2 = $t AND " +
-        (if (post) s"d - d0 >= $CupedPreDays" else s"d - d0 < $CupedPreDays") +
-        " AND event_type = 'purchase' THEN value ELSE 0 END", 2)
-    s"""WITH ev AS (
-       |  SELECT user_id, event_type, value,
-       |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
-       |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |), mn AS (SELECT MIN(d) AS d0 FROM ev),
-       |m AS (
-       |  SELECT
-       |    ${cell(0, post = false)} AS s_c_pre,
-       |    ${cell(0, post = true)} AS s_c_post,
-       |    ${cell(1, post = false)} AS s_t_pre,
-       |    ${cell(1, post = true)} AS s_t_post,
-       |    CAST(COUNT(DISTINCT CASE WHEN user_id % 2 = 0 THEN user_id END)
-       |      AS BIGINT) AS n_c,
-       |    CAST(COUNT(DISTINCT CASE WHEN user_id % 2 = 1 THEN user_id END)
-       |      AS BIGINT) AS n_t
-       |  FROM ev, mn
-       |)
-       |SELECT n_c, n_t,
-       |  s_c_pre / CAST(n_c AS DOUBLE) AS mean_c_pre,
-       |  s_c_post / CAST(n_c AS DOUBLE) AS mean_c_post,
-       |  s_t_pre / CAST(n_t AS DOUBLE) AS mean_t_pre,
-       |  s_t_post / CAST(n_t AS DOUBLE) AS mean_t_post,
-       |  (s_t_post / CAST(n_t AS DOUBLE) - s_t_pre / CAST(n_t AS DOUBLE))
-       |    - (s_c_post / CAST(n_c AS DOUBLE)
-       |      - s_c_pre / CAST(n_c AS DOUBLE)) AS did_estimate
-       |FROM m""".stripMargin
-  }
-
-  // ------------------------------------------------- events_mde
-  // Minimum detectable effect at the CURRENT sample size (the design
-  // half of the experimentation suite: events_srm checks assignment,
-  // events_abtest reads the result, this says what the experiment COULD
-  // have detected): MDE = (z_{α/2} + z_β)·√(2·p(1−p)/n) at α=5 %,
-  // power 80 % — the two z constants are fixed literals, p is the
-  // control conversion rate from the SAME user frame as events_abtest,
-  // n the smaller arm. One user-keyed aggregate + one 1-row closed-form
-  // projection over exact integers.
-  private val MdeZ = 1.96 + 0.8416
-  private def qMde(s: SparkSession, dir: String): DataFrame = {
-    val u = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .as("n_purch"))
-      .select((col("user_id") % 2).as("variant"),
-        when(col("n_purch") >= AbConvThreshold, 1L).otherwise(0L)
-          .as("conv"))
-    val m = u.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_c"),
-      sum(when(col("variant") === 0, col("conv")).otherwise(0L))
-        .as("conv_c"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_t"))
-    val p = col("conv_c").cast("double") / col("n_c").cast("double")
-    val n = least(col("n_c"), col("n_t")).cast("double")
-    val mde = lit(MdeZ) * sqrt(lit(2.0) * p * (lit(1.0) - p) / n)
-    m.select(col("n_c"), col("n_t"), p.as("p_base"),
-      mde.as("mde_abs"), (mde / p).as("mde_rel"))
-  }
-
-  // lazy: interpolates AbConvThreshold, declared LATER in the object —
-  // an eager val here would capture the uninitialized 0
-  private lazy val sqlMde: String =
-    s"""WITH u AS (
-       |  SELECT user_id % 2 AS variant,
-       |    CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-       |      END) >= $AbConvThreshold THEN 1 ELSE 0 END AS conv
-       |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |  GROUP BY user_id
-       |), m AS (
-       |  SELECT
-       |    CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_c,
-       |    CAST(SUM(CASE WHEN variant = 0 THEN conv ELSE 0 END) AS BIGINT)
-       |      AS conv_c,
-       |    CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_t
-       |  FROM u
-       |)
-       |SELECT n_c, n_t,
-       |  CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE) AS p_base,
-       |  $MdeZ * sqrt(2 * (CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-       |      * (1 - CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-       |      / CAST(least(n_c, n_t) AS DOUBLE)) AS mde_abs,
-       |  ($MdeZ * sqrt(2 * (CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-       |      * (1 - CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE))
-       |      / CAST(least(n_c, n_t) AS DOUBLE)))
-       |    / (CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE)) AS mde_rel
-       |FROM m""".stripMargin
-
-  // ------------------------------------------------- events_burstiness
-  // Burstiness index of each event type's arrival process (Goh &
-  // Barabási, "Burstiness and memory in complex systems", EPL 2008):
-  // B = (σ−μ)/(σ+μ) over the inter-arrival gaps — −1 for a metronome,
-  // 0 for Poisson, →1 for heavy bursts. The number that says whether
-  // `error` arrivals cluster (incident-driven) or drip (background
-  // noise), read before alert-threshold tuning. Shape: ONE type-keyed
-  // lag window + ONE aggregate; gaps are exact BIGINT micros, g² is
-  // squared and summed in DECIMAL(38,0) (multi-hour gaps overflow an
-  // INT64 square — both engines raise, so the detour is mandatory,
-  // not defensive), and σ/B are a fixed
-  // closed-form double expression — single rounding per engine, same
-  // everywhere.
-  private def qBurstiness(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("t"), col("event_id"))
-    val g = Tables.eventsCached(s, dir).filter(col("ts").isNotNull)
-      .select(col("event_type"), col("event_id"),
-        expr("unix_micros(ts)").as("t"))
-      .withColumn("g", col("t") - lag(col("t"), 1).over(w))
-      .filter(col("g").isNotNull)
-    val m = g.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_gaps"),
-        sum(col("g")).as("sg"),
-        sum(col("g").cast("decimal(19,0)") * col("g").cast("decimal(19,0)"))
-          .cast("double").as("sgg"))
-    val n = col("n_gaps").cast("double")
-    val mean = col("sg").cast("double") / n
-    val sigma = sqrt(col("sgg") / n - mean * mean)
-    m.select(col("event_type"), col("n_gaps"),
-      mean.as("mean_gap_us"),
-      ((sigma - mean) / (sigma + mean)).as("b_index"))
-      .orderBy(col("event_type"))
-  }
-
-  private val sqlBurstiness: String =
-    """WITH g AS (
-      |  SELECT event_type,
-      |    epoch_us(CAST(ts AS TIMESTAMP))
-      |      - LAG(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
-      |          PARTITION BY event_type
-      |          ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id) AS gp
-      |  FROM events WHERE ts IS NOT NULL
-      |), m AS (
-      |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_gaps,
-      |    CAST(SUM(gp) AS BIGINT) AS sg,
-      |    CAST(SUM(CAST(gp AS DECIMAL(19,0)) * CAST(gp AS DECIMAL(19,0)))
-      |      AS DOUBLE) AS sgg
-      |  FROM g WHERE gp IS NOT NULL GROUP BY event_type
-      |)
-      |SELECT event_type, n_gaps,
-      |  CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mean_gap_us,
-      |  (sqrt(sgg / CAST(n_gaps AS DOUBLE)
-      |      - (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-      |        * (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)))
-      |    - CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-      |  / (sqrt(sgg / CAST(n_gaps AS DOUBLE)
-      |      - (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-      |        * (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)))
-      |    + CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)) AS b_index
-      |FROM m ORDER BY event_type""".stripMargin
-
-  // ------------------------------------------------- events_acf
-  // Autocorrelation function of the daily event-count series at lags
-  // 1..AcfMaxLag — the periodicity diagnostic (weekly cycle shows as a
-  // lag-7 peak) read before picking a seasonal forecast baseline
-  // (events_forecast_naive) or an anomaly window (events_anomaly).
-  // Shape: ONE exchange builds the |days|-row daily series (map-side
-  // partial counts do the heavy lifting); the lag alignment is a
-  // calendar self-join of that tiny frame against a broadcast 7-row lag
-  // dimension — day+lag equi-keys, so absent days drop out of the pair
-  // set exactly as the oracle's inner join drops them. Determinism: all
-  // six moments per lag are exact BIGINT sums (the qCorr pattern); each
-  // ACF value is a fixed handful of IEEE double ops over them. At
-  // extreme daily volumes (≳10⁹ events/day for years) the BIGINT moment
-  // products would need the DECIMAL(38) detour; the day-count frame
-  // itself stays |days| rows at any corpus size.
-  private val AcfMaxLag = 7
-  private def qAcf(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-    val lags = s.range(1, AcfMaxLag + 1L).select(col("id").as("lg"))
-    val b = daily.select(col("day").as("day2"), col("n").as("y"))
-    daily.select(col("day"), col("n").as("x"))
-      .crossJoin(broadcast(lags))
-      .join(b, col("day2") === col("day") + col("lg"))
-      .groupBy(col("lg"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("lg").as("lag"), col("n_pairs"),
-        ((col("n_pairs") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          sqrt((col("n_pairs") * col("sxx") - col("sx") * col("sx"))
-            .cast("double") *
-            (col("n_pairs") * col("syy") - col("sy") * col("sy"))
-              .cast("double")))
-          .as("acf"))
-      .orderBy(col("lag"))
-  }
-
-  private val sqlAcf: String =
-    s"""WITH daily AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-       |    CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |), pairs AS (
-       |  SELECT t.lg, a.n AS x, b.n AS y
-       |  FROM daily a
-       |  CROSS JOIN range(1, ${AcfMaxLag + 1}) t(lg)
-       |  JOIN daily b ON b.day = a.day + t.lg
-       |), m AS (
-       |  SELECT lg, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-       |    CAST(SUM(x * y) AS BIGINT) AS sxy,
-       |    CAST(SUM(x * x) AS BIGINT) AS sxx,
-       |    CAST(SUM(y * y) AS BIGINT) AS syy
-       |  FROM pairs GROUP BY lg
-       |)
-       |SELECT lg AS lag, n_pairs,
-       |  CAST(n_pairs * sxy - sx * sy AS DOUBLE)
-       |    / sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE)
-       |           * CAST(n_pairs * syy - sy * sy AS DOUBLE)) AS acf
-       |FROM m ORDER BY lag""".stripMargin
-
-  // ------------------------------------------------- events_abtest
-  // A/B experiment readout: users split by id parity into control/
-  // treatment, conversion = a heavy purchaser (≥ AbConvThreshold
-  // purchase events — "any purchase" converts EVERY fixture user and
-  // the pooled variance degenerates to 0/0), and the report is the
-  // two-proportion z-statistic an experimentation platform prints.
-  // Shape: ONE user-keyed exchange (per-user conversion flag via max),
-  // then a single-row conditional-sum aggregate — at any corpus size
-  // the statistic derives from four exact BIGINTs; the CVRs, lift, and
-  // z are a fixed closed-form double expression over them (IEEE sqrt is
-  // correctly rounded, so cross-engine exact — the qCorr discipline).
-  private val AbConvThreshold = 14L
-  private def qAbTest(s: SparkSession, dir: String): DataFrame = {
-    val u = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .as("n_purch"))
-      .select((col("user_id") % 2).as("variant"),
-        when(col("n_purch") >= AbConvThreshold, 1L).otherwise(0L)
-          .as("conv"))
-    val m = u.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_c"),
-      sum(when(col("variant") === 0, col("conv")).otherwise(0L))
-        .as("conv_c"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_t"),
-      sum(when(col("variant") === 1, col("conv")).otherwise(0L))
-        .as("conv_t"))
-    val pc = col("conv_c").cast("double") / col("n_c").cast("double")
-    val pt = col("conv_t").cast("double") / col("n_t").cast("double")
-    val pooled = (col("conv_c") + col("conv_t")).cast("double") /
-      (col("n_c") + col("n_t")).cast("double")
-    m.select(col("n_c"), col("conv_c"), col("n_t"), col("conv_t"),
-      pc.as("cvr_control"), pt.as("cvr_treatment"),
-      (pt - pc).as("abs_lift"),
-      ((pt - pc) / sqrt(pooled * (lit(1.0) - pooled) *
-        (lit(1.0) / col("n_c").cast("double")
-          + lit(1.0) / col("n_t").cast("double")))).as("z_score"))
-  }
-
-  private val sqlAbTest: String =
-    s"""WITH u AS (
-      |  SELECT user_id % 2 AS variant,
-      |    CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-      |      END) >= $AbConvThreshold THEN 1 ELSE 0 END AS conv
-      |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-      |  GROUP BY user_id
-      |), m AS (
-      |  SELECT
-      |    CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_c,
-      |    CAST(SUM(CASE WHEN variant = 0 THEN conv ELSE 0 END) AS BIGINT)
-      |      AS conv_c,
-      |    CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_t,
-      |    CAST(SUM(CASE WHEN variant = 1 THEN conv ELSE 0 END) AS BIGINT)
-      |      AS conv_t
-      |  FROM u
-      |), p AS (
-      |  SELECT *,
-      |    CAST(conv_c AS DOUBLE) / CAST(n_c AS DOUBLE) AS pc,
-      |    CAST(conv_t AS DOUBLE) / CAST(n_t AS DOUBLE) AS pt,
-      |    CAST(conv_c + conv_t AS DOUBLE) / CAST(n_c + n_t AS DOUBLE)
-      |      AS pooled
-      |  FROM m
-      |)
-      |SELECT n_c, conv_c, n_t, conv_t,
-      |  pc AS cvr_control, pt AS cvr_treatment,
-      |  pt - pc AS abs_lift,
-      |  (pt - pc) / sqrt(pooled * (CAST(1 AS DOUBLE) - pooled)
-      |    * (CAST(1 AS DOUBLE) / CAST(n_c AS DOUBLE)
-      |       + CAST(1 AS DOUBLE) / CAST(n_t AS DOUBLE))) AS z_score
-      |FROM p""".stripMargin
-
-  // ------------------------------------------- events_cumulative_users
-  // User-acquisition curve: new users per day (day of each user's FIRST
-  // event) and the running total — the growth chart every analytics
-  // deployment draws. Shape: one user-keyed exchange for first_day (a
-  // thin min aggregate), one |days|-group count, then a running sum
-  // over the |days|-row frame — the single-partition window is over a
-  // calendar-bounded frame, never over users. Day index is epoch
-  // arithmetic, exact everywhere.
-  private def qCumulativeUsers(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val first = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id"),
-        expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
-    val w = Window.orderBy(col("first_day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    first.groupBy(col("first_day")).agg(count(lit(1)).as("new_users"))
-      .withColumn("cum_users", sum(col("new_users")).over(w))
-      .orderBy(col("first_day"))
-  }
-
-  private val sqlCumulativeUsers: String =
-    """WITH f AS (
-      |  SELECT user_id,
-      |    MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS first_day
-      |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-      |  GROUP BY user_id
-      |), d AS (
-      |  SELECT first_day, CAST(COUNT(*) AS BIGINT) AS new_users
-      |  FROM f GROUP BY first_day
-      |)
-      |SELECT first_day, new_users,
-      |  CAST(SUM(new_users) OVER (ORDER BY first_day
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |    AS cum_users
-      |FROM d ORDER BY first_day""".stripMargin
-
-  // ------------------------------------------------- events_stickiness
-  // DAU/WAU stickiness: distinct daily actives over distinct 7-day
-  // actives, per day — the engagement ratio a product dashboard leads
-  // with. Rolling DISTINCT counts don't decompose like sums, so WAU is
-  // computed exactly from the distinct (day, user) frame: each pair
-  // feeds the 7 calendar days whose trailing window contains it (a
-  // broadcast 7-row offset expansion — bounded fanout of an already
-  // user-deduplicated frame, never of the raw stream), then one
-  // count-distinct per day. Shape at scale: one exchange dedups
-  // (day, user); the 7× expansion and both counts partial-aggregate
-  // map-side; output is |days| rows. Ratio = one division of exact
-  // counts. Days with no prior week still divide cleanly (wau ≥ dau).
-  private def qStickiness(s: SparkSession, dir: String): DataFrame = {
-    val du = Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("day"),
-        col("user_id"))
-      .distinct()
-    val dau = du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
-    val offs = s.range(0, 7).select(col("id").as("off"))
-    val wau = du.crossJoin(broadcast(offs))
-      .select((col("day") + col("off")).as("day"), col("user_id"))
-      .groupBy(col("day"))
-      .agg(countDistinct(col("user_id")).as("wau"))
-    // only days that actually occurred report (the expansion invents
-    // trailing ghost days past the horizon)
-    dau.join(wau, Seq("day"))
-      .select(col("day"), col("dau"), col("wau"),
-        (col("dau").cast("double") / col("wau").cast("double"))
-          .as("stickiness"))
-      .orderBy(col("day"))
-  }
-
-  private val sqlStickiness: String =
-    """WITH du AS (
-      |  SELECT DISTINCT
-      |    epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-      |    user_id
-      |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-      |), dau AS (
-      |  SELECT day, CAST(COUNT(*) AS BIGINT) AS dau FROM du GROUP BY day
-      |), wau AS (
-      |  SELECT du.day + t.off AS day,
-      |    CAST(COUNT(DISTINCT du.user_id) AS BIGINT) AS wau
-      |  FROM du CROSS JOIN range(0, 7) t(off)
-      |  GROUP BY 1
-      |)
-      |SELECT day, dau, wau,
-      |  CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE) AS stickiness
-      |FROM dau JOIN wau USING (day)
-      |ORDER BY day""".stripMargin
-
-  // --------------------------------------------- events_pseudonymize
-  // Pseudonymization collision audit: before shipping a dataset keyed by
-  // hashed ids, measure how narrow the pseudonym space can be. Users map
-  // through a salted md5 truncated to 16 bits — deliberately tight so
-  // the birthday effect is VISIBLE (expected collisions ≈ n²/2·65536) —
-  // and the report counts distinct ids, distinct pseudonyms, collided
-  // ids, and the largest pseudonym bucket. Shape: one distinct-user
-  // exchange, map-side hashing, one |pseudonyms|-group count, one-row
-  // reduce. The hash is the suite's md5 discipline, so the oracle
-  // reproduces every pseudonym bit for bit.
-  private def qPseudonymize(s: SparkSession, dir: String): DataFrame = {
-    val pid = conv(substring(md5(concat(lit("p:"),
-      col("user_id").cast("string"))), 1, 4), 16, 10).cast("long")
-    Tables.eventsCached(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("user_id")).distinct()
-      .select(pid.as("pid"))
-      .groupBy(col("pid")).agg(count(lit(1)).as("k"))
-      .agg(sum(col("k")).as("n_ids"),
-        count(lit(1)).as("n_pseudonyms"),
-        max(col("k")).as("max_bucket"))
-      .select(col("n_ids"), col("n_pseudonyms"),
-        (col("n_ids") - col("n_pseudonyms")).as("n_collided"),
-        col("max_bucket"),
-        ((col("n_ids") - col("n_pseudonyms")).cast("double") /
-          col("n_ids").cast("double")).as("collision_rate"))
-  }
-
-  // ------------------------------------------------ events_bootstrap
-  // Poisson bootstrap confidence intervals (Chamandy et al., "Estimating
-  // Uncertainty for Massive Data Streams", Google TR 2012; Kleiner et al.
-  // BLB is the heavier cousin): per replicate j, each row's resample
-  // multiplicity is an independent Poisson(1) draw — at n→∞ this matches
-  // the multinomial bootstrap, and UNLIKE it needs no global n or
-  // coordination, so it runs as ONE map-side pass per replicate. The
-  // draw inverts the Poisson(1) CDF on a md5-uniform u(event_id, j):
-  // deterministic, engine-agnostic literals, so the oracle reproduces
-  // every weight bit for bit. 100 TB shape: the ×REPS explode is map-side
-  // fanout feeding a partial agg on (type, j) — no corpus-sized shuffle;
-  // the CI percentile runs over REPS means per type.
-  private val BootReps = 20
-  // cumulative Poisson(1) CDF at k=0..4 (shared literals, both engines)
-  private val BootCdf = Seq(
-    0.36787944117144233, 0.7357588823428847, 0.9196986029286058,
-    0.9810118431238462, 0.9963401531726563)
-
-  private def qBootstrap(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventsCached(s, dir).filter(col("value").isNotNull)
-      .select(col("event_id"), col("event_type"), col("value"))
-    val u = conv(substring(md5(concat(lit("b:"),
-      col("event_id").cast("string"), lit("#"), col("j").cast("string"))),
-      1, 13), 16, 10).cast("long").cast("double") / lit(4503599627370496.0)
-    val w = BootCdf.zipWithIndex.foldRight(lit(BootCdf.size): Column) {
-      case ((t, k), acc) => when(u < t, lit(k)).otherwise(acc)
-    }
-    val perRep = ev
-      .withColumn("j", explode(sequence(lit(1), lit(BootReps))))
-      .withColumn("w", w.cast("long"))
-      .groupBy(col("event_type"), col("j"))
-      .agg(xsum(col("w").cast("double") * col("value"), 6).as("sv"),
-        sum(col("w")).as("sw"))
-      .select(col("event_type"), col("j"),
-        (col("sv") / col("sw").cast("double")).as("m"))
-    val full = ev.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), xavg(col("value")).as("mean_full"))
-    perRep.groupBy(col("event_type"))
-      .agg(round(expr("percentile(m, 0.05)"), 6).as("ci_lo"),
-        round(expr("percentile(m, 0.5)"), 6).as("ci_mid"),
-        round(expr("percentile(m, 0.95)"), 6).as("ci_hi"))
-      .join(full, Seq("event_type"))
-      .select(col("event_type"), col("n"), col("mean_full"),
-        col("ci_lo"), col("ci_mid"), col("ci_hi"))
-      .orderBy(col("event_type"))
-  }
-
-  private val sqlBootstrap: String = {
-    val cases = BootCdf.zipWithIndex
-      .map { case (t, k) => s"WHEN u < $t THEN $k" }.mkString(" ")
-    s"""WITH ev AS (
-       |  SELECT event_id, event_type, value FROM events
-       |  WHERE value IS NOT NULL
-       |), reps AS (
-       |  SELECT event_type, value, j,
-       |    CAST(('0x' || substr(md5('b:' || CAST(event_id AS VARCHAR)
-       |      || '#' || CAST(j AS VARCHAR)), 1, 13)) AS BIGINT)
-       |      / 4503599627370496.0 AS u
-       |  FROM ev CROSS JOIN (SELECT unnest(range(1, ${BootReps + 1})) AS j)
-       |), wtd AS (
-       |  SELECT event_type, j, value,
-       |    CASE $cases ELSE ${BootCdf.size} END AS w
-       |  FROM reps
-       |), pr AS (
-       |  SELECT event_type, j,
-       |    ${graft.functions.Exact.sqlSum("CAST(w AS DOUBLE) * value", 6)}
-       |      / CAST(SUM(w) AS DOUBLE) AS m
-       |  FROM wtd GROUP BY event_type, j
-       |), fl AS (
-       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-       |    ${graft.functions.Exact.sqlAvg("value")} AS mean_full
-       |  FROM ev GROUP BY event_type
-       |), ci AS (
-       |  SELECT event_type,
-       |    ROUND(quantile_cont(m, 0.05), 6) AS ci_lo,
-       |    ROUND(quantile_cont(m, 0.5), 6) AS ci_mid,
-       |    ROUND(quantile_cont(m, 0.95), 6) AS ci_hi
-       |  FROM pr GROUP BY event_type
-       |)
-       |SELECT fl.event_type, fl.n, fl.mean_full, ci.ci_lo, ci.ci_mid,
-       |  ci.ci_hi
-       |FROM ci JOIN fl USING (event_type)
-       |ORDER BY event_type""".stripMargin
-  }
-
-  // ------------------------------------------------ events_rolling_mau
-  // Rolling 7-day active users per day — the DAU/MAU-style engagement
-  // series. Distinct-over-a-sliding-window is the classic scale trap
-  // (a window frame cannot dedup): the scalable shape is a MAP-SIDE
-  // fanout — each active (user, day) feeds the 7 windows ending on
-  // day..day+6 — then ONE distinct and ONE count per window end. The
-  // fanout is a bounded ×7 on the (user, day)-deduped frame (not raw
-  // events), windows are reported only for days with activity, and the
-  // whole plan is two hash aggregates; no range join, no per-window
-  // re-scan. stickiness = dau/mau7 is the exact-int division idiom.
-  private val MauWindowDays = 7
-
-  private def qRollingMau(s: SparkSession, dir: String): DataFrame = {
-    // pinned: the deduped (user, day) frame feeds the window fanout, the
-    // active-day list, AND the DAU aggregate — one events scan + distinct
-    val ud = graft.operators.Iterate.pin(
-      Tables.events(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), to_date(col("ts")).as("d")).distinct())
-    val wins = ud
-      .withColumn("i", explode(sequence(lit(0), lit(MauWindowDays - 1))))
-      .select(col("user_id"), date_add(col("d"), col("i")).as("wd"))
-      .distinct()
-    val days = ud.select(col("d").as("wd")).distinct()
-    val mau = wins.join(days, Seq("wd"))
-      .groupBy(col("wd")).agg(count(lit(1)).as("mau7"))
-    val dau = ud.groupBy(col("d").as("wd")).agg(count(lit(1)).as("dau"))
-    mau.join(dau, Seq("wd"))
-      .select(col("wd").as("day"), col("dau"), col("mau7"),
-        (col("dau").cast("double") / col("mau7").cast("double"))
-          .as("stickiness"))
-      .orderBy(col("day"))
-  }
-
-  private val sqlRollingMau: String =
-    s"""WITH ud AS (
-       |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-       |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-       |), wins AS (
-       |  SELECT DISTINCT user_id, d + CAST(i AS INTEGER) AS wd
-       |  FROM ud CROSS JOIN (SELECT unnest(range(0, $MauWindowDays)) AS i)
-       |), days AS (
-       |  SELECT DISTINCT d AS wd FROM ud
-       |), mau AS (
-       |  SELECT wd, CAST(COUNT(*) AS BIGINT) AS mau7
-       |  FROM wins JOIN days USING (wd) GROUP BY wd
-       |), dau AS (
-       |  SELECT d AS wd, CAST(COUNT(*) AS BIGINT) AS dau
-       |  FROM ud GROUP BY d
-       |)
-       |SELECT wd AS day, dau, mau7,
-       |  CAST(dau AS DOUBLE) / CAST(mau7 AS DOUBLE) AS stickiness
-       |FROM mau JOIN dau USING (wd) ORDER BY day""".stripMargin
-
-  private val sqlPseudonymize: String =
-    """WITH u AS (
-      |  SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL
-      |), p AS (
-      |  SELECT CAST(('0x' || substr(md5('p:' || CAST(user_id AS VARCHAR)),
-      |    1, 4)) AS BIGINT) AS pid
-      |  FROM u
-      |), b AS (
-      |  SELECT pid, CAST(COUNT(*) AS BIGINT) AS k FROM p GROUP BY pid
-      |), m AS (
-      |  SELECT CAST(SUM(k) AS BIGINT) AS n_ids,
-      |    CAST(COUNT(*) AS BIGINT) AS n_pseudonyms,
-      |    CAST(MAX(k) AS BIGINT) AS max_bucket
-      |  FROM b
-      |)
-      |SELECT n_ids, n_pseudonyms, n_ids - n_pseudonyms AS n_collided,
-      |  max_bucket,
-      |  CAST(n_ids - n_pseudonyms AS DOUBLE) / CAST(n_ids AS DOUBLE)
-      |    AS collision_rate
-      |FROM m""".stripMargin
-
-  // ------------------------------------------------- events_debounce
-  // Telemetry debounce: within each (user, type) stream, keep only the
-  // FIRST event of every burst (new burst = gap from the previous event
-  // exceeds DebounceMicros). First-of-burst IS the new-burst lag flag,
-  // so the operator is one lag window + filter — ONE exchange, one
-  // in-partition sort (see Sessionize.debounce).
-  private val DebounceMicros = 600000000L // 10 min
-  private def qDebounce(s: SparkSession, dir: String): DataFrame =
-    Sessionize.debounce(Tables.eventsCached(s, dir), DebounceMicros)
-
-  private val sqlDebounce: String =
-    s"""WITH e AS (
-      |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-      |  FROM events WHERE ts IS NOT NULL
-      |), s AS (
-      |  SELECT *, lag(ts) OVER (PARTITION BY user_id, event_type
-      |                          ORDER BY ts, event_id) AS prev_ts
-      |  FROM e
-      |)
-      |SELECT event_id, user_id, event_type, ts
-      |FROM s
-      |WHERE prev_ts IS NULL
-      |   OR epoch_us(ts) - epoch_us(prev_ts) > $DebounceMicros
-      |ORDER BY event_id""".stripMargin
-
-  // ------------------------------------------------- q43_retention
-  // Cohort retention matrix: users grouped by first-seen week, counted
-  // once per (cohort, weeks-since-cohort) they were active in — THE
-  // product-analytics staple. Shape: ONE scan, ONE user-keyed agg
-  // (collect_set of active weeks — bounded by the observed span in
-  // weeks, a catalog constant, never by event count), cohort = first of
-  // the sorted set, explode, then the |users|×|weeks|-row matrix agg.
-  // The naive first-seen-join formulation scans the 100 TB event stream
-  // TWICE and shuffles it for a join this version never does; the plan
-  // test pins the 2-exchange shape (user spread + matrix grouping).
-  private def qRetention(s: SparkSession, dir: String): DataFrame = {
-    // NULL-ts events carry no cohort signal and are dropped up front —
-    // without the filter, a user whose EVERY ts is NULL yields an empty
-    // collect_set and element_at(., 1) dies under ANSI (the fixtures
-    // have no NULL ts; a deployment's stream may)
-    val e = Tables.eventsCached(s, dir)
-      .select(col("user_id"), date_trunc("week", col("ts")).as("week"))
-      .filter(col("week").isNotNull)
-    e.groupBy(col("user_id"))
-      .agg(sort_array(collect_set(col("week"))).as("weeks"))
-      .select(element_at(col("weeks"), 1).as("cohort_week"),
-        explode(col("weeks")).as("week"))
-      .groupBy(col("cohort_week"),
-        // div, not `/7 + cast`: the suite's integer-division rule — a
-        // fractional day diff would truncate in Spark but ROUND in
-        // DuckDB's CAST; div ↔ // is exact on both sides
-        expr("datediff(week, cohort_week) div 7")
-          .cast("int").as("weeks_since"))
-      .agg(count(lit(1)).as("n_active"))
-      .select(col("cohort_week").cast("timestamp_ntz").as("cohort_week"),
-        col("weeks_since"), col("n_active"))
-      .orderBy(col("cohort_week"), col("weeks_since"))
-  }
-
-  private val sqlRetention: String =
-    """WITH e AS (
-      |  SELECT DISTINCT user_id,
-      |    date_trunc('week', CAST(ts AS TIMESTAMP)) AS week
-      |  FROM events WHERE ts IS NOT NULL
-      |), first_seen AS (
-      |  SELECT user_id, MIN(week) AS cohort_week FROM e GROUP BY user_id
-      |)
-      |SELECT f.cohort_week,
-      |  CAST(date_diff('day', f.cohort_week, e.week) // 7 AS INT)
-      |    AS weeks_since,
-      |  CAST(COUNT(*) AS BIGINT) AS n_active
-      |FROM e JOIN first_seen f ON e.user_id = f.user_id
-      |GROUP BY 1, 2
-      |ORDER BY cohort_week, weeks_since""".stripMargin
-
-  // ------------------------------------------------- sketch_percentile
-  // Bounded-state quantile sketch (functions.QuantileSketch): exact under
-  // capacity — the sf0.01 oracle regime, where it reproduces quantile_cont
-  // interpolation bit for bit — and KLL-style compacted beyond (the sf0.1
-  // bench regime exercises the approximate path).
-  private def qQuantileSketch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(call_function(graft.functions.VectorExprs.QuantileName,
-        col("l_extendedprice"), array(lit(0.5), lit(0.9)), lit(16384))
-        .as("qs"))
-      // RAW interpolated doubles, no ROUND: rounding an IEEE quotient at a
-      // fixed decimal scale diverges across engines exactly at decimal
-      // ties (Spark HALF_UPs the shortest-decimal repr, DuckDB rounds in
-      // binary) — the suite's no-round-after-division convention.
-      .select(col("l_returnflag"),
-        element_at(col("qs"), 1).as("p50"),
-        element_at(col("qs"), 2).as("p90"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  private val sqlQuantileSketch: String =
-    """SELECT l_returnflag,
-      |  quantile_cont(l_extendedprice, 0.5) AS p50,
-      |  quantile_cont(l_extendedprice, 0.9) AS p90
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-
-  // ------------------------------------------------- sketch_heavy_hitters
-  // Misra–Gries heavy hitters (TypedImperativeAggregate) over document
-  // tokens. The fixture vocabulary (31 tokens) is under the sketch capacity,
-  // so estimates are exact and the top-k hash-matches a plain
-  // count-group-sort oracle. At real scale the same plan holds with bounded
-  // state where the oracle's full groupBy would not.
-  private def qHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
-    Tables.documents(s, dir)
-      // _outer: split() never yields an empty/null array, so this is
-      // explode minus the inferred size(...)>0 filter (which would
-      // re-evaluate split once more below the Generate).
-      .select(explode_outer(TextOps.words(col("text"))).as("token"))
-      .agg(call_function(graft.functions.VectorExprs.HeavyName,
-        col("token"), lit(10), lit(256)).as("hh"))
-      .select(explode(col("hh")).as("h"))
-      .select(col("h.token").as("token"), col("h.est_count").as("est_count"))
-      .orderBy(col("est_count").desc, col("token"))
-  }
-
-  private val sqlHeavyHitters: String =
-    """SELECT token, COUNT(*) AS est_count
-      |FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-      |GROUP BY token
-      |ORDER BY est_count DESC, token
-      |LIMIT 10""".stripMargin
-
-  // ------------------------------------------------- events_trend_ols
-  // Least-squares trend of the daily revenue series (slope, intercept,
-  // R²) — the "is this metric growing" readout behind every dashboard
-  // sparkline, and the exact-form complement to the seasonal-naive
-  // forecast (events_forecast_naive reports errors, this reports the
-  // direction). Shape: ONE exchange to the |days|-row daily frame — and
-  // ONE scan of events: x is the raw epoch day (a rebase against
-  // min(day) would cost a second full pass for nothing — epoch-day
-  // moments over a calendar-bounded |days| frame stay exact: every
-  // intermediate is an integer < 2^53, so the double closed form loses
-  // nothing). The y moments go through the Exact decimal detour (y is a
-  // double) and slope/intercept/R² are a fixed closed-form double
-  // expression — the qCorr/qAcf discipline. At any corpus size the
-  // per-day partial sums collapse map-side; only |days| rows cross the
-  // wire.
-  private def qTrendOls(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    val daily = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("value").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("day"), col("value"))
-      .groupBy(col("day"))
-      .agg(Exact.xsum(col("value")).as("y"))
-    val m = daily
-      .select(col("day").as("x"), col("y"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("x") * col("x")).as("sxx"),
-        Exact.xsum(col("y")).as("sy"),
-        Exact.xsum(col("x") * col("y")).as("sxy"),
-        Exact.xsum(col("y") * col("y")).as("syy"))
-    val nD  = col("n").cast("double")
-    val sxD = col("sx").cast("double")
-    val covN  = nD * col("sxy") - sxD * col("sy")
-    val varxN = nD * col("sxx").cast("double") - sxD * sxD
-    val varyN = nD * col("syy") - col("sy") * col("sy")
-    m.select(col("n").as("n_days"),
-      (covN / varxN).as("slope"),
-      ((col("sy") - (covN / varxN) * sxD) / nD).as("intercept"),
-      (covN * covN / (varxN * varyN)).as("r2"))
-  }
-
-  private val sqlTrendOls: String = {
-    import graft.functions.Exact
-    s"""WITH daily AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-       |    ${Exact.sqlSum("value")} AS y
-       |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-       |  GROUP BY 1
-       |), m AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-       |    CAST(SUM(day) AS BIGINT) AS sx,
-       |    CAST(SUM(day * day) AS BIGINT) AS sxx,
-       |    ${Exact.sqlSum("y")} AS sy,
-       |    ${Exact.sqlSum("day * y")} AS sxy,
-       |    ${Exact.sqlSum("y * y")} AS syy
-       |  FROM daily
-       |)
-       |SELECT n AS n_days,
-       |  (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-       |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       |       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope,
-       |  (sy - ((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-       |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       |       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-       |    * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS intercept,
-       |  ((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-       |   * (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy))
-       |    / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-       |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-       |       * (CAST(n AS DOUBLE) * syy - sy * sy)) AS r2
-       |FROM m""".stripMargin
-  }
-
-  // ------------------------------------------------- events_gini
-  // Gini coefficient of revenue concentration across users — the
-  // single-number inequality complement to events_value_pareto's top-
-  // decile share. Exact grouped-rank form: users collapse to their
-  // exact per-user total (the bit-identical Exact sum), equal totals
-  // collapse to (tv, count) groups, and the rank-weighted sum uses
-  // Σ_j v_j·(c_j·C_j + c_j(c_j+1)/2) where C_j is the count of users
-  // strictly below group j. C_j comes from a TWO-LEVEL prefix sum (the
-  // corpus_pad_audit discipline): a global running sum over the tiny
-  // |buckets| frame gives each value-bucket's offset, and a window
-  // PARTITIONED by bucket gives the within-bucket part — there is never
-  // a global sort/window over the user frame. All rank inputs are exact
-  // BIGINTs; Gini = 2·S/(n·T) − (n+1)/n is a fixed double expression.
-  // Scale note: S ~ mean_tv·n²/2, so beyond ~10⁸ users the srx sum
-  // needs scale 0 (9·10¹⁵ decimal headroom) — at the fixture SFs
-  // scale 2 is exact.
-  private val GiniBucketWidth = 100.0
-  private def qGini(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Exact
-    import org.apache.spark.sql.expressions.Window
-    val totals = Tables.eventsCached(s, dir)
-      .filter(col("value").isNotNull && col("user_id").isNotNull)
-      .groupBy(col("user_id")).agg(Exact.xsum(col("value")).as("tv"))
-    val g = totals.groupBy(col("tv")).agg(count(lit(1)).as("c"))
-      .withColumn("bucket", floor(col("tv") / lit(GiniBucketWidth)))
-    val bstats = g.groupBy(col("bucket")).agg(sum(col("c")).as("cb"))
-    val wb = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val boff = bstats
-      .withColumn("coff", coalesce(sum(col("cb")).over(wb), lit(0L)))
-      .select(col("bucket"), col("coff"))
-    val ww = Window.partitionBy(col("bucket")).orderBy(col("tv"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = g.join(broadcast(boff), Seq("bucket"))
-      .withColumn("cwithin", coalesce(sum(col("c")).over(ww), lit(0L)))
-      .select(col("tv"), col("c"), (col("coff") + col("cwithin")).as("cbefore"))
-    val m = ranked.agg(
-      sum(col("c")).as("n"),
-      Exact.xsum(col("tv") * col("c")).as("total_value"),
-      Exact.xsum(col("tv") *
-        expr("cast(c * cbefore + (c * (c + 1)) div 2 as double)")).as("srx"))
-    m.select(col("n").as("n_users"), col("total_value"),
-      (lit(2.0) * col("srx")
-        / (col("n").cast("double") * col("total_value"))
-        - (col("n") + lit(1)).cast("double") / col("n").cast("double"))
-        .as("gini"))
-  }
-
-  private val sqlGini: String = {
-    import graft.functions.Exact
-    s"""WITH totals AS (
-       |  SELECT user_id, ${Exact.sqlSum("value")} AS tv
-       |  FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL
-       |  GROUP BY user_id
-       |), g AS (
-       |  SELECT tv, CAST(COUNT(*) AS BIGINT) AS c,
-       |    FLOOR(tv / $GiniBucketWidth) AS bucket
-       |  FROM totals GROUP BY tv
-       |), b AS (
-       |  SELECT bucket, CAST(SUM(c) AS BIGINT) AS cb FROM g GROUP BY bucket
-       |), boff AS (
-       |  SELECT bucket, COALESCE(CAST(SUM(cb) OVER (ORDER BY bucket
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
-       |    0) AS coff
-       |  FROM b
-       |), r AS (
-       |  SELECT g.tv, g.c,
-       |    boff.coff + COALESCE(CAST(SUM(g.c) OVER (PARTITION BY g.bucket
-       |      ORDER BY g.tv
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
-       |      0) AS cbefore
-       |  FROM g JOIN boff USING (bucket)
-       |), m AS (
-       |  SELECT CAST(SUM(c) AS BIGINT) AS n,
-       |    ${Exact.sqlSum("tv * c")} AS total_value,
-       |    ${Exact.sqlSum(
-                "tv * CAST(c * cbefore + (c * (c + 1)) // 2 AS DOUBLE)")}
-       |      AS srx
-       |  FROM r
-       |)
-       |SELECT n AS n_users, total_value,
-       |  2.0 * srx / (CAST(n AS DOUBLE) * total_value)
-       |    - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE) AS gini
-       |FROM m""".stripMargin
-  }
-
-  // ------------------------------------------------- events_survival
-  // Empirical user-lifetime survival curve: for each horizon day d,
-  // the share of users whose observed lifetime (last event − first
-  // event) reaches d — the churn diagnostic read before setting a
-  // retention window. With every user observed over the full fixture
-  // window there is no censoring, so the Kaplan–Meier estimator
-  // REDUCES to this empirical curve — count(lifetime ≥ d)/n — which is
-  // one exact division per horizon instead of an ordered cumulative
-  // product of doubles (cross-engine-fragile). Shape: one user-keyed
-  // exchange for (first, last), then a broadcast |horizons|-row dim
-  // expands each user to its surviving horizons; partial counts
-  // collapse map-side, so the expansion never materializes.
-  private val SurvMaxDay = 14
-  private def qSurvival(s: SparkSession, dir: String): DataFrame = {
-    val lt = Tables.eventsCached(s, dir)
-      .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(expr("(max(unix_micros(ts)) - min(unix_micros(ts)))" +
-        " div 86400000000").as("lifetime_days"))
-    val n = lt.agg(count(lit(1)).as("n_users"))
-    val days = s.range(0, SurvMaxDay + 1L).select(col("id").as("day"))
-    lt.crossJoin(broadcast(days))
-      .filter(col("lifetime_days") >= col("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n_surviving"))
-      .crossJoin(broadcast(n))
-      .select(col("day"), col("n_surviving"),
-        (col("n_surviving").cast("double") / col("n_users").cast("double"))
-          .as("surviving_share"))
-      .orderBy(col("day"))
-  }
-
-  private val sqlSurvival: String =
-    s"""WITH lt AS (
-       |  SELECT user_id,
-       |    (MAX(epoch_us(CAST(ts AS TIMESTAMP)))
-       |     - MIN(epoch_us(CAST(ts AS TIMESTAMP)))) // 86400000000
-       |      AS lifetime_days
-       |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-       |  GROUP BY user_id
-       |), n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_users FROM lt),
-       |s AS (
-       |  SELECT d.day, CAST(COUNT(*) AS BIGINT) AS n_surviving
-       |  FROM lt, range(0, ${SurvMaxDay + 1}) d(day)
-       |  WHERE lt.lifetime_days >= d.day GROUP BY d.day
-       |)
-       |SELECT day, n_surviving,
-       |  CAST(n_surviving AS DOUBLE) / CAST(n_users AS DOUBLE)
-       |    AS surviving_share
-       |FROM s, n ORDER BY day""".stripMargin
-
-  // ------------------------------------------------- events_changepoint
-  // Binary-segmentation first split over the daily event-count series:
-  // for every candidate split k the CUSUM-style statistic
-  // |n·S_k − k·S_n| / sqrt(k(n−k)) scores how far the prefix mean
-  // diverges from the global mean — the level-shift detector run before
-  // trusting a trend fit (events_trend_ols) across a regime change. The
-  // numerator stays an exact BIGINT (never a mean subtraction in
-  // double); only the final normalization is IEEE. Shape: one exchange
-  // to the |days| frame, one ordered window for the prefix sums (the
-  // qAcf |days|-frame idiom — at any corpus size this frame is
-  // calendar-bounded), top-k via TakeOrderedAndProject.
-  private val ChangepointTopK = 3
-  private def qChangepoint(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(s, dir)
-      .filter(col("ts").isNotNull)
-      .select(expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("cnt"))
-    val tot = daily.agg(count(lit(1)).as("nd"), sum(col("cnt")).as("tot"))
-    val wk = Window.orderBy(col("day"))
-    val ws = wk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    daily
-      .withColumn("k", row_number().over(wk).cast("long"))
-      .withColumn("sk", sum(col("cnt")).over(ws))
-      .crossJoin(broadcast(tot))
-      .filter(col("k") < col("nd"))
-      .select(col("day"), col("k"),
-        (abs(col("nd") * col("sk") - col("k") * col("tot")).cast("double")
-          / sqrt((col("k") * (col("nd") - col("k"))).cast("double")))
-          .as("score"))
-      .orderBy(col("score").desc, col("day"))
-      .limit(ChangepointTopK)
-  }
-
-  private val sqlChangepoint: String =
-    s"""WITH daily AS (
-       |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-       |    CAST(COUNT(*) AS BIGINT) AS cnt
-       |  FROM events WHERE ts IS NOT NULL GROUP BY 1
-       |), t AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS nd,
-       |    CAST(SUM(cnt) AS BIGINT) AS tot
-       |  FROM daily
-       |), c AS (
-       |  SELECT day,
-       |    CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS k,
-       |    CAST(SUM(cnt) OVER (ORDER BY day
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-       |      AS sk
-       |  FROM daily
-       |)
-       |SELECT day, k,
-       |  CAST(ABS(nd * sk - k * tot) AS DOUBLE)
-       |    / sqrt(CAST(k * (nd - k) AS DOUBLE)) AS score
-       |FROM c, t WHERE k < nd
-       |ORDER BY score DESC, day LIMIT $ChangepointTopK""".stripMargin
-
-  // -------------------------------------------------------------- registry
-
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-  private def emb(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
-  /** Shared near-dup clustering artifacts for the fixture corpus — the
-    * cluster-policy queries all derive from this one memoized pass (see
-    * [[Dedup.clusterArtifactsCached]]).
-    */
-  private def arts(s: SparkSession, dir: String): Dedup.ClusterArtifacts =
-    Dedup.clusterArtifactsCached(docs(s, dir), dir)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_agg"    -> qPricingAgg _,
-    "q2_filter_project" -> qFilterProject _,
-    "q3_enrich"         -> qEnrich _,
-    "q4_semi_join"      -> qSemiJoin _,
-    "q5_anti_join"      -> qAntiJoin _,
-    "q6_scd_merge"      -> qScdMerge _,
-    "q7_scd_counters"   -> qScdCounters _,
-    "q8_upsert_type1"   -> qUpsertType1 _,
-    "q9_union"          -> qUnion _,
-    "q10_cleanse"       -> qCleanse _,
-    "q11_topk_window"   -> qTopkWindow _,
-    "q12_log_stamp"     -> qLogStamp _,
-    "q13_sessionize"    -> ((s, d) => Sessionize.sessions(Tables.eventsCached(s, d))),
-    "q28_session_window" -> ((s, d) => Sessionize.sessionsBuiltin(Tables.eventsCached(s, d))),
-    "q14_tumbling"      -> ((s, d) => Sessionize.tumbling(Tables.events(s, d))),
-    "events_bursts"     -> ((s, d) => Sessionize.bursts(Tables.events(s, d))),
-    "events_dow_profile" -> ((s, d) =>
-      Sessionize.dowProfile(Tables.events(s, d))),
-    "sim_pq_code_usage" -> ((s, d) => Similarity.pqCodeUsage(
-      emb(s, d), Similarity.pqCodebookCached(emb(s, d), d))),
-    "q15_enrich_pivot"  -> qEnrichPivot _,
-    "q16_rollup"        -> qRollup _,
-    "q17_except"        -> qExcept _,
-    "q29_intersect"     -> qIntersect _,
-    "q18_json"          -> qJson _,
-    "q19_distinct_topn" -> qTopN _,
-    "q20_asof"          -> qAsOf _,
-    "q50_asof_phys"     -> qAsOfPhys _,
-    "q80_asof_phys_outer" -> qAsOfPhysOuter _,
-    "q51_asof_phys_tol" -> qAsOfPhysTol _,
-    "q52_asof_phys_fwd" -> qAsOfPhysFwd _,
-    "q53_asof_phys_nearest" -> qAsOfPhysNearest _,
-    "q39_asof_forward"  -> qAsOfForward _,
-    "q21_array_agg"     -> qArrayAgg _,
-    "q22_string_funcs"  -> qStringFuncs _,
-    "q23_percentile"    -> qPercentile _,
-    "q24_sliding"       -> qSlidingWindow _,
-    "q25_cube"          -> qCube _,
-    "q26_salted_join"   -> qSaltedJoin _,
-    "q27_unpivot"       -> qUnpivot _,
-    "sketch_distinct"   -> qSketch _,
-    "sketch_kmv"        -> qKmv _,
-    "q30_grouping_sets" -> qGroupingSets _,
-    "q31_range_join"    -> qRangeJoin _,
-    "q32_range_frame"   -> qRangeFrame _,
-    "q33_quarantine"    -> qQuarantine _,
-    "q34_profile"       -> qProfile _,
-    "q35_ntile"         -> qNtile _,
-    "q36_funnel"        -> qFunnel _,
-    "q37_correlated"    -> qCorrelated _,
-    "q38_resample"      -> qResample _,
-    "corpus_sample"     -> qCorpusSample _,
-    "text_bigrams"      -> qBigrams _,
-    "sketch_heavy_hitters" -> qHeavyHitters _,
-    "sketch_percentile" -> qQuantileSketch _,
-    "text_tfidf"        -> ((s, d) => TextOps.tfIdf(docs(s, d))),
-    "sim_centroids"     -> ((s, d) => Similarity.centroids(emb(s, d))),
-    "corpus_clean"      -> ((s, d) =>
-      graft.operators.CorpusClean.cleanCached(docs(s, d), d)),
-    "corpus_clean_funnel" -> ((s, d) =>
-      graft.operators.CorpusClean.funnelCached(docs(s, d), d)),
-    "dedup_exact"       -> ((s, d) => Dedup.exact(docs(s, d))),
-    // the cluster-policy family (minhash pairs, components, size stats,
-    // canonical, weights, admission) shares ONE clustering pass via the
-    // per-(session, dir) ClusterArtifacts memo — each entry stays
-    // independently oracled, but bands/pairs/components compute once,
-    // exactly as a production pipeline would materialize them
-    "dedup_minhash"     -> ((s, d) => arts(s, d).pairs
-      .orderBy(col("doc_a"), col("doc_b"))),
-    "dedup_components"  -> ((s, d) => arts(s, d).components),
-    "dedup_cluster_stats" -> ((s, d) =>
-      Dedup.clusterStatsFrom(arts(s, d).components)),
-    "dedup_simhash"     -> ((s, d) => Dedup.simhash(docs(s, d)).orderBy(col("doc_id"))),
-    "dedup_simhash_pairs" -> ((s, d) => Dedup.simhashPairs(docs(s, d))),
-    "dedup_jaccard"     -> ((s, d) => Dedup.ngramJaccard(docs(s, d),
-      Some(Dedup.shingleSetsCached(docs(s, d), d)))),
-    "dedup_embed"       -> ((s, d) => Similarity.embedNearDup(emb(s, d))),
-    "sim_brute_topk"    -> ((s, d) => Similarity.bruteTopK(emb(s, d))),
-    "sim_ann_lsh"       -> ((s, d) => Similarity.annTopK(emb(s, d))),
-    "sim_ivf_topk"      -> ((s, d) => Similarity.ivfTopK(emb(s, d))),
-    // exact side truncated to the SAME k as the ANN side — recall@k over
-    // mismatched depths is structurally capped at k_approx/k_exact and
-    // can never reach its target
-    "sim_recall"        -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.ivfTopK(emb(s, d)))),
-    "sim_mips_topk"     -> ((s, d) => Similarity.mipsTopK(emb(s, d))),
-    "sim_mips_lsh"      -> ((s, d) => Similarity.mipsLsh(emb(s, d))),
-    // recall of augmented-LSH MIPS vs exact inner-product ranking —
-    // prices the Bachrach-transform bucketing the way sim_recall prices
-    // the IVF route
-    "sim_mips_recall"   -> ((s, d) => Similarity.recallAtK(
-      Similarity.mipsTopK(emb(s, d))
-        .filter(col("rk") <= Similarity.MipsTopK),
-      Similarity.mipsLsh(emb(s, d)))),
-    // recall of the IVFADC composite vs exact search: quantifies the
-    // quantization + pruning loss the 100 TB recipe trades for its scan
-    // shape (compare with sim_recall = IVF-only loss at the same depth)
-    "sim_ivfpq_recall"  -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.ivfPqTopK(emb(s, d)))),
-    "sim_ivf_probe2"    -> ((s, d) => Similarity.ivfTopKProbe(emb(s, d), 2)),
-    // recall-vs-nprobe tuning curve: the table an operator reads to pick
-    // the probe count; exact side computed once and pinned across probes
-    "sim_recall_sweep"  -> ((s, d) => {
-      val exact = Similarity.bruteTruthCached(emb(s, d), d)
-      (1 to 3).map(p =>
-        Similarity.recallAtK(exact, Similarity.ivfTopKProbe(emb(s, d), p))
-          .withColumn("nprobe", lit(p)))
-        .reduce(_.unionByName(_))
-        .select(col("nprobe"), col("query_id"), col("recall"))
-        .orderBy(col("nprobe"), col("query_id"))
-    }),
-    // the four Lloyd's queries read trained artifacts from the shared
-    // per-(session, dir) memos — train once, consume everywhere
-    "sim_ivf_kmeans"    -> ((s, d) => Similarity.ivfKmeans(emb(s, d),
-      cents = Some(Similarity.ivfCentsCached(emb(s, d), d)))),
-    "sim_pq_kmeans"     -> ((s, d) => Similarity.pqKmeans(emb(s, d),
-      codebook = Some(Similarity.pqCodebookCached(emb(s, d), d)))),
-    "sim_ivf_balance_trained" -> ((s, d) => Similarity.ivfBalanceTrained(
-      emb(s, d), Similarity.ivfCentsCached(emb(s, d), d))),
-    "sim_pq_distortion_trained" -> ((s, d) => Similarity.pqDistortionTrained(
-      emb(s, d), Similarity.pqCodebookCached(emb(s, d), d))),
-    "sim_ivf_radius_trained" -> ((s, d) => Similarity.ivfRadiusTrained(
-      emb(s, d), Similarity.ivfCentsCached(emb(s, d), d))),
-    // streaming twins driven to their FINAL state over real micro-batches
-    // (file source, AvailableNow/processAllAvailable) — the returned frame
-    // is the durable state, hash-checked against a batch oracle
-    "stream_scd_state"   -> graft.streaming.StreamOracles.scdState _,
-    "stream_dedup_state" -> ((s, d) =>
-      graft.streaming.StreamOracles.dedupState(s, d)),
-    "stream_decon_state" -> ((s, d) =>
-      graft.streaming.StreamOracles.deconState(s, d)),
-    "stream_corpus_state" -> ((s, d) =>
-      graft.streaming.StreamOracles.corpusState(s, d)),
-    "stream_kmv_state"   -> graft.streaming.StreamOracles.kmvState _,
-    "stream_cms_state"   -> graft.streaming.StreamOracles.cmsState _,
-    "stream_session_state" -> ((s, d) =>
-      graft.streaming.StreamOracles.sessionState(s, d)),
-    "stream_join_state"  -> graft.streaming.StreamOracles.joinState _,
-    "stream_window_state" -> graft.streaming.StreamOracles.windowState _,
-    "stream_mg_state"   -> graft.streaming.StreamOracles.mgState _,
-    "stream_asof_state" -> graft.streaming.StreamOracles.asOfState _,
-    "stream_drop_state" -> graft.streaming.StreamOracles.dropState _,
-    "text_tokens"       -> ((s, d) => TextOps.tokenCounts(docs(s, d)).orderBy(col("doc_id"))),
-    "text_quality"      -> ((s, d) => TextOps.quality(docs(s, d)).orderBy(col("doc_id"))),
-    "text_langid"       -> ((s, d) => TextOps.langId(docs(s, d)).orderBy(col("doc_id"))),
-    "text_fingerprint"  -> ((s, d) => TextOps.fingerprint(docs(s, d)).orderBy(col("doc_id"))),
-    "text_langid_ngram" -> ((s, d) => TextOps.langIdNgram(docs(s, d)).orderBy(col("doc_id"))),
-    // the winnow fingerprint frame is memoized: three queries read it
-    "text_winnow"       -> ((s, d) => TextOps.winnowCached(docs(s, d), d)
-      .orderBy(col("doc_id"), col("fingerprint"))),
-    "text_winnow_pairs" -> ((s, d) => TextOps.winnowPairs(docs(s, d),
-      Some(TextOps.winnowCached(docs(s, d), d)))),
-    "text_source_overlap" -> ((s, d) => TextOps.sourceOverlap(docs(s, d),
-      Some(TextOps.winnowCached(docs(s, d), d)))),
-    "text_source_tvd"   -> ((s, d) => TextOps.sourceTvd(docs(s, d))),
-    "text_lexical_profile" -> ((s, d) => TextOps.lexicalProfile(docs(s, d))),
-    "mm_features"       -> ((s, d) => Multimodal.features(docs(s, d))),
-    "mm_frames"         -> ((s, d) => Multimodal.frameSamples(docs(s, d), 64)),
-    "mm_decode"         -> ((s, d) => Multimodal.decode(docs(s, d))),
-    "mm_pixels"         -> ((s, d) => Multimodal.pixels(docs(s, d))),
-    "mm_downsample"     -> ((s, d) => Multimodal.downsample(docs(s, d))),
-    "mm_png_pixels"     -> ((s, d) => Multimodal.pngPixels(docs(s, d))),
-    "mm_wav"            -> ((s, d) => Multimodal.wav(docs(s, d))),
-    "mm_phash"          -> ((s, d) => Multimodal.phash(docs(s, d))),
-    "mm_phash_groups"   -> ((s, d) => Multimodal.phashGroups(docs(s, d))),
-    "corpus_split"      -> ((s, d) => TrainingData.splitStats(docs(s, d))),
-    "corpus_split_leakage" -> ((s, d) =>
-      TrainingData.splitLeakage(arts(s, d).pairs, docs(s, d))),
-    "corpus_pack"       -> ((s, d) => TrainingData.pack(docs(s, d))),
-    // the production bucketing variant (quantile-sampled range buckets for
-    // sparse/skewed id spaces) — same contract, same oracle: any monotone
-    // bucket cut set yields identical offsets
-    "corpus_pack_sampled" -> ((s, d) =>
-      TrainingData.packSampledBuckets(docs(s, d))),
-    "corpus_mix"        -> ((s, d) => TrainingData.mixture(docs(s, d))),
-    "corpus_mix_temp"   -> ((s, d) => TrainingData.mixtureTemperature(docs(s, d))),
-    "text_repetition"   -> ((s, d) => TrainingData.repetition(docs(s, d))),
-    "events_redact"     -> ((s, d) => TrainingData.redact(Tables.eventsCached(s, d))),
-    "decon_overlap"     -> ((s, d) => TrainingData.decontaminate(docs(s, d), d)),
-    "decon_minhash"     -> ((s, d) => Dedup.minhashDecon(docs(s, d), d)),
-    "decon_bloom"       -> ((s, d) => TrainingData.bloomDecon(docs(s, d), d)),
-    "dedup_canonical"   -> ((s, d) =>
-      Dedup.canonicalFrom(docs(s, d), arts(s, d).components)),
-    "dedup_communities" -> ((s, d) =>
-      Dedup.labelPropagation(arts(s, d).pairs, docs(s, d))),
-    "dedup_calibration" -> ((s, d) =>
-      Dedup.bandCalibration(arts(s, d).pairs, docs(s, d),
-        Some(Dedup.shingleSetsCached(docs(s, d), d)))),
-    "dedup_minhash_error" -> ((s, d) =>
-      Dedup.minhashError(arts(s, d).pairs, docs(s, d))),
-    "dedup_modularity"  -> ((s, d) => Dedup.modularityFrom(arts(s, d).pairs,
-      Dedup.labelPropagation(arts(s, d).pairs, docs(s, d)))),
-    "sim_sq_topk"       -> ((s, d) => Similarity.sqTopK(emb(s, d))),
-    "sim_sq_rerank"     -> ((s, d) => Similarity.sqRerank(emb(s, d))),
-    "sim_filtered_topk" -> ((s, d) => Similarity.filteredTopK(emb(s, d))),
-    "sim_sq_recall"     -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.sqTopK(emb(s, d)))),
-    "sim_pq_topk"       -> ((s, d) => Similarity.pqTopK(emb(s, d))),
-    "sim_pq_rerank"     -> ((s, d) => Similarity.pqRerank(emb(s, d))),
-    "sim_pq_rerank_recall" -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.pqRerank(emb(s, d)))),
-    "sim_ivfpq_topk"    -> ((s, d) => Similarity.ivfPqTopK(emb(s, d))),
-    // the three residual-IVFADC queries share one pinned
-    // assignment + residual-explode memo (residualSubvectorsCached)
-    "sim_ivfadc_topk"   -> ((s, d) => Similarity.ivfPqResidualTopK(emb(s, d),
-      pre = Some(Similarity.residualSubvectorsCached(emb(s, d), d)))),
-    // the Lloyd's-trained residual codebook route (Jégou §IV as published:
-    // k-means over residual subvectors) — same query surface, trained=true
-    "sim_ivfadc_trained" -> ((s, d) =>
-      Similarity.ivfPqResidualTopK(emb(s, d), trained = true,
-        pre = Some(Similarity.residualSubvectorsCached(emb(s, d), d)),
-        book = Some(Similarity.residualBookCached(emb(s, d), d)))),
-    "sim_ivfadc_recall" -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.ivfPqResidualTopK(emb(s, d),
-        pre = Some(Similarity.residualSubvectorsCached(emb(s, d), d))))),
-    "layout_zorder"     -> ((s, d) =>
-      graft.operators.Layout.zorderAudit(Tables.lineitem(s, d))),
-    "layout_pruning"    -> ((s, d) =>
-      graft.operators.Layout.pruningAudit(Tables.lineitem(s, d))),
-    "layout_hilbert"    -> ((s, d) =>
-      graft.operators.Layout.hilbertAudit(Tables.lineitem(s, d))),
-    "layout_bloom_skip" -> ((s, d) =>
-      graft.operators.Layout.bloomSkipAudit(Tables.lineitem(s, d))),
-    "layout_compaction" -> ((s, d) =>
-      graft.operators.Layout.compactionPlan(Tables.lineitem(s, d))),
-    "sim_dim_sweep"     -> ((s, d) => Similarity.dimSweepRecall(emb(s, d))),
-    // the distinct customer–supplier pair set is the expensive subtree of
-    // every graph query AND a useful product on its own — both entries
-    // read the shared pinned edge memo, so a suite run builds it once
-    "graph_edges"       -> ((s, d) =>
-      graft.operators.Graph.custSuppEdgesCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)
-        .orderBy(col("cust"), col("supp"))),
-    "graph_pagerank"    -> ((s, d) =>
-      graft.operators.Graph.pagerankCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_ppr"         -> ((s, d) =>
-      graft.operators.Graph.pprCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_katz"        -> ((s, d) =>
-      graft.operators.Graph.katzCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_anf"         -> ((s, d) =>
-      graft.operators.Graph.anfCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_louvain"     -> ((s, d) =>
-      graft.operators.Graph.louvainCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_louvain_coarse" -> ((s, d) =>
-      graft.operators.Graph.louvainCoarseCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_louvain_gain" -> ((s, d) =>
-      graft.operators.Graph.louvainGainCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_wpagerank" -> ((s, d) =>
-      graft.operators.Graph.louvainWPagerankCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_louvain_levels" -> ((s, d) =>
-      graft.operators.Graph.louvainLevelsCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_wkatz" -> ((s, d) =>
-      graft.operators.Graph.louvainWKatzCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_louvain_refine" -> ((s, d) =>
-      graft.operators.Graph.louvainRefineCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_louvain_segments" -> ((s, d) =>
-      graft.operators.Graph.louvainSegmentsCached(
-        Tables.orders(s, d), Tables.lineitem(s, d),
-        Tables.customer(s, d), d)),
-    "dedup_lpa_agreement" -> ((s, d) =>
-      Dedup.lpaAgreement(arts(s, d).components,
-        Dedup.labelPropagation(arts(s, d).pairs, docs(s, d)))),
-    "events_bootstrap"  -> qBootstrap _,
-    "events_rolling_mau" -> qRollingMau _,
-    "events_psi"        -> qPsi _,
-    "events_seasonal"   -> qSeasonal _,
-    "events_ewma"       -> qEwma _,
-    "events_locf"       -> qLocf _,
-    "scd_type3"         -> ((s, d) =>
-      graft.operators.Changelog.type3(Tables.eventsCached(s, d))),
-    "corpus_epochs"     -> ((s, d) => TrainingData.epochs(docs(s, d))),
-    "graph_hits"        -> ((s, d) =>
-      graft.operators.Graph.hitsCached(
-        Tables.orders(s, d), Tables.lineitem(s, d), d)),
-    "graph_components"  -> ((s, d) =>
-      graft.operators.Graph.components(
-        Tables.orders(s, d), Tables.lineitem(s, d),
-        labels = Some(graft.operators.Graph.componentLabelsCached(
-          Tables.orders(s, d), Tables.lineitem(s, d), d)))),
-    // part co-occurrence graph: triangles / degree histogram /
-    // assortativity / BFS share one pinned edge memo (the expensive
-    // basket→pair expansion runs once) AND one pinned degree table
-    "graph_triangles"   -> ((s, d) =>
-      graft.operators.Graph.triangleStats(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        Some(graft.operators.Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)),
-        commonPre = Some(graft.operators.Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)))),
-    "graph_degrees"     -> ((s, d) =>
-      graft.operators.Graph.degreeHistogram(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        Some(graft.operators.Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)))),
-    // both link-score rankings read the ONE pinned intersection pass
-    "graph_common_neighbors" -> ((s, d) =>
-      graft.operators.Graph.commonNeighbors(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(graft.operators.Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)))),
-    "graph_link_jaccard" -> ((s, d) =>
-      graft.operators.Graph.linkJaccard(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(graft.operators.Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)))),
-    "graph_local_cc" -> ((s, d) =>
-      graft.operators.Graph.localClustering(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(graft.operators.Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)),
-        degPre = Some(graft.operators.Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)))),
-    "graph_peel"        -> ((s, d) =>
-      graft.operators.Graph.peelProfile(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        degPre = Some(graft.operators.Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)))),
-    "graph_assortativity" -> ((s, d) =>
-      graft.operators.Graph.assortativity(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        Some(graft.operators.Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)))),
-    "graph_truss"       -> ((s, d) =>
-      graft.operators.Graph.trussProfile(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(graft.operators.Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)))),
-    "graph_richclub"    -> ((s, d) =>
-      graft.operators.Graph.richClub(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(graft.operators.Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)),
-        degPre = Some(graft.operators.Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)))),
-    "q40_gap_fill"      -> qGapFill _,
-    "q42_ohlc"          -> qOhlc _,
-    "q43_retention"     -> qRetention _,
-    "dedup_substring"   -> ((s, d) => Dedup.substringDup(docs(s, d))),
-    // pairs-only memo: dedup_edit never reads components, so it must not
-    // force the artifact memo's eager component iteration (r10 ADVICE);
-    // the frame is the SAME pinned pairs clusterArtifactsCached shares
-    "dedup_edit"        -> ((s, d) =>
-      Dedup.editPairs(docs(s, d), Some(Dedup.minhashPairsCached(docs(s, d), d)))),
-    "dedup_semantic"    -> ((s, d) => Similarity.semanticDedup(emb(s, d))),
-    "corpus_chunk"      -> ((s, d) => TrainingData.chunk(docs(s, d))),
-    "corpus_wsample"    -> ((s, d) => TrainingData.weightedSample(docs(s, d))),
-    "text_bpe_merges"   -> ((s, d) => TextOps.bpeMerges(docs(s, d), cacheKey = d)),
-    "q41_histogram"     -> ((s, d) =>
-      Profile.histogram(Tables.lineitem(s, d), "l_extendedprice")),
-    "profile_skew"      -> ((s, d) =>
-      Profile.keySkew(Tables.lineitem(s, d), "l_partkey")),
-    "profile_checks"    -> ((s, d) =>
-      Profile.expectations(Tables.lineitem(s, d), Tables.orders(s, d))),
-    "profile_fd"        -> ((s, d) =>
-      Profile.fdAudit(Tables.lineitem(s, d), Tables.orders(s, d),
-        Tables.customer(s, d))),
-    "profile_corr_matrix" -> ((s, d) =>
-      Profile.corrMatrix(Tables.lineitem(s, d))),
-    "profile_mi"        -> ((s, d) => Profile.mutualInfo(docs(s, d))),
-    "corpus_dsir"       -> ((s, d) => TrainingData.dsir(docs(s, d))),
-    "text_pii"          -> ((s, d) => TextOps.piiScan(docs(s, d))),
-    "text_pii_stats"    -> ((s, d) => TextOps.piiStats(docs(s, d))),
-    "sim_ndcg"          -> ((s, d) => Similarity.ndcgAtK(emb(s, d))),
-    "sim_cluster_topics" -> ((s, d) => Similarity.clusterTopics(
-      emb(s, d), docs(s, d), Similarity.ivfCentsCached(emb(s, d), d))),
-    "bucket_join"       -> ((s, d) =>
-      graft.operators.Bucketing.bucketJoin(s, d)),
-    "text_gopher"       -> ((s, d) => TextOps.gopher(docs(s, d))),
-    "text_simpson"      -> ((s, d) => TextOps.simpson(docs(s, d))),
-    "text_postings"     -> ((s, d) => TextOps.postings(docs(s, d))),
-    "dedup_containment" -> ((s, d) => Dedup.containmentPairs(docs(s, d), d)),
-    "sketch_countmin"   -> ((s, d) =>
-      graft.operators.Sketch.countMin(Tables.eventsCached(s, d), "user_id")),
-    "sketch_f2_ams"     -> ((s, d) =>
-      graft.operators.Sketch.amsF2(Tables.eventsCached(s, d), "user_id")),
-    "text_bpe_encode"   -> ((s, d) => TextOps.bpeEncode(docs(s, d), cacheKey = d)),
-    "text_quality_rank" -> ((s, d) => TextOps.qualityRank(docs(s, d))),
-    "dedup_weights"     -> ((s, d) =>
-      Dedup.softWeightsFrom(docs(s, d), arts(s, d).components)),
-    // sim_knn_graph and sim_nsw_walk read the same memoized kNN edge list
-    "sim_knn_graph"     -> ((s, d) =>
-      Similarity.knnGraph(Tables.embeddings(s, d),
-        pre = Some(Similarity.knnEdgesCached(Tables.embeddings(s, d), d)))),
-    "sim_nsw_walk"      -> ((s, d) =>
-      Similarity.nswWalkCached(Tables.embeddings(s, d), d)),
-    "sim_nsw_recall"    -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(Tables.embeddings(s, d), d),
-      Similarity.nswWalkCached(Tables.embeddings(s, d), d))),
-    // both maxmin queries read the ONE memoized Gonzalez centers frame
-    "sim_maxmin_init"   -> ((s, d) =>
-      Similarity.maxminInitCached(emb(s, d), d).orderBy(col("round"))),
-    "sim_maxmin_cells"  -> ((s, d) => Similarity.maxminCells(emb(s, d),
-      Some(Similarity.maxminInitCached(emb(s, d), d)))),
-    "sim_lsh_multiprobe" -> ((s, d) => Similarity.multiprobeTopK(emb(s, d))),
-    "sim_multiprobe_recall" -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.multiprobeTopK(emb(s, d)))),
-    "sim_nsw_sweep"     -> ((s, d) =>
-      Similarity.nswBeamSweepCached(Tables.embeddings(s, d), d)),
-    "sim_sdc_topk"      -> ((s, d) => Similarity.sdcTopK(emb(s, d))),
-    "sim_sdc_recall"    -> ((s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.sdcTopK(emb(s, d)))),
-    "sim_hard_negatives" -> ((s, d) =>
-      Similarity.hardNegatives(Tables.embeddings(s, d))),
-    "corpus_budget"     -> ((s, d) => TrainingData.budgetSelect(docs(s, d))),
-    "sim_rrf"           -> ((s, d) => Similarity.rrf(Tables.embeddings(s, d))),
-    "events_compact"    -> qCompact _,
-    "q44_asof_nearest"  -> qAsOfNearest _,
-    "q45_asof_tolerance" -> qAsOfTolerance _,
-    "q46_revenue_by_nation" -> qRevenueByNation _,
-    "q54_ship_priority" -> qShipPriority _,
-    "q55_order_priority" -> qOrderPriority _,
-    "q56_forecast_revenue" -> qForecastRevenue _,
-    "q57_returned_customers" -> qReturnedCustomers _,
-    "q58_promo_revenue" -> qPromoRevenue _,
-    "q59_large_orders"  -> qLargeOrders _,
-    "q60_market_share"  -> qMarketShare _,
-    "q61_small_qty_revenue" -> qSmallQtyRevenue _,
-    "q62_order_count_dist" -> qOrderCountDist _,
-    "q63_disjunctive_revenue" -> qDisjunctiveRevenue _,
-    "q64_dormant_customers" -> qDormantCustomers _,
-    "q65_waiting_suppliers" -> qWaitingSuppliers _,
-    "q66_volume_shipping" -> qVolumeShipping _,
-    "q67_late_priority" -> qLatePriority _,
-    "q68_top_supplier"  -> qTopSupplier _,
-    "q77_product_profit" -> qProductProfit _,
-    "q78_supplier_counts" -> qSupplierCounts _,
-    "q79_dominant_suppliers" -> qDominantSuppliers _,
-    "events_user_entropy" -> qUserEntropy _,
-    "events_hill_tail"  -> qHillTail _,
-    "events_time_to_convert" -> qTimeToConvert _,
-    "q69_skyline"       -> qSkyline _,
-    "q70_min_cost_supplier" -> qMinCostSupplier _,
-    "q71_important_parts" -> qImportantParts _,
-    "events_bot_score"  -> qBotScore _,
-    "events_threshold_cross" -> qThresholdCross _,
-    "events_streak"     -> qStreak _,
-    "q72_except_all"    -> qExceptAll _,
-    "q73_intersect_all" -> qIntersectAll _,
-    "q74_rollup_share"  -> qRollupShare _,
-    "events_wow_change" -> qWowChange _,
-    "events_rolling_median" -> qRollingMedian _,
-    "events_new_returning" -> qNewReturning _,
-    "graph_conductance" -> ((s, d) =>
-      graft.operators.Graph.conductance(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        graft.operators.Graph.coPartDegreesCached(Tables.lineitem(s, d), d))),
-    "text_boilerplate"  -> ((s, d) => TextOps.boilerplate(docs(s, d))),
-    "text_vocab_coverage" -> ((s, d) => TextOps.vocabCoverage(docs(s, d))),
-    "text_bm25"         -> ((s, d) => TextOps.bm25TopK(docs(s, d))),
-    "text_hybrid_rrf"   -> qHybridRrf _,
-    "corpus_kfold"      -> ((s, d) => TrainingData.kfoldStats(docs(s, d))),
-    "corpus_length_hist" -> ((s, d) => TrainingData.lengthHistogram(docs(s, d))),
-    "mm_rgb_hist"       -> ((s, d) => Multimodal.rgbHistogram(docs(s, d))),
-    "mm_wav_hist"       -> ((s, d) => Multimodal.wavHistogram(docs(s, d))),
-    "text_js_divergence" -> ((s, d) => TextOps.jsDivergence(docs(s, d))),
-    "sim_mmr"           -> ((s, d) => Similarity.mmrTopK(emb(s, d))),
-    "sim_probe_cost"    -> ((s, d) => Similarity.ivfProbeCost(emb(s, d))),
-    "sim_silhouette"    -> ((s, d) => Similarity.silhouette(emb(s, d))),
-    "sim_db_index"      -> ((s, d) => Similarity.dbIndex(emb(s, d))),
-    // degree-weighted link prediction reads the SAME edge/degree memos
-    // as the other link rankings
-    "graph_adamic_adar" -> ((s, d) =>
-      graft.operators.Graph.adamicAdar(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(graft.operators.Graph.coPartAaCached(
-          Tables.lineitem(s, d), d)))),
-    "q47_session_incidents" -> qSessionIncidents _,
-    "q48_window_funcs"  -> qWindowFuncs _,
-    "q49_funnel_windowed" -> qFunnelWindowed _,
-    "sketch_join_est"   -> ((s, d) => graft.operators.Sketch.kmvJoinEstimate(
-      Tables.customer(s, d), "c_custkey", Tables.orders(s, d), "o_custkey")),
-    "dedup_spans"       -> ((s, d) => Dedup.spanClean(docs(s, d))),
-    "corpus_shard"      -> ((s, d) => TrainingData.shard(docs(s, d))),
-    // end-to-end export: clean → token-budget select → shard, every stage
-    // the already-oracled library operator, composed into ONE plan
-    "corpus_export"     -> ((s, d) => TrainingData.corpusExport(
-      graft.operators.CorpusClean.cleanCached(docs(s, d), d))),
-    // the export with near-dup dedup IN the pipeline: cleaned survivors
-    // restricted to each cluster's canonical doc (keep-longest policy
-    // from the SHARED clustering memo), then the same budget/shard
-    // stages — the full LLM-data path clean → dedup → budget → shard
-    // as ONE composed plan
-    "corpus_export_dedup" -> ((s, d) => TrainingData.corpusExport(
-      graft.operators.CorpusClean.cleanCached(docs(s, d), d)
-        .join(Dedup.canonicalFrom(docs(s, d), arts(s, d).components)
-          .filter(col("kept")).select(col("doc_id")),
-          Seq("doc_id"), "left_semi"))),
-    "corpus_interleave" -> ((s, d) => TrainingData.interleave(docs(s, d))),
-    // round-10 capstone: clean -> canonical dedup -> decon vs eval split
-    // -> pack -> mixture, every stage riding its family's shared memo
-    "corpus_e2e"        -> ((s, d) => TrainingData.corpusE2e(
-      docs(s, d),
-      graft.operators.CorpusClean.cleanCached(docs(s, d), d),
-      Dedup.canonicalFrom(docs(s, d), arts(s, d).components),
-      Dedup.minhashDecon(docs(s, d), d))),
-    "text_classifier"   -> ((s, d) => TextOps.classifierScore(docs(s, d))),
-    "embed_outliers"    -> ((s, d) => Similarity.embedOutliers(emb(s, d))),
-    "events_winsorize"  -> qWinsorize _,
-    "events_anomaly"    -> qAnomaly _,
-    "events_cooccur"    -> qCooccur _,
-    "events_transitions" -> qTransitions _,
-    "events_top_paths"  -> qTopPaths _,
-    "events_forecast_naive" -> qForecastNaive _,
-    "events_active_users" -> qActiveUsers _,
-    "events_cohort_ltv" -> qCohortLtv _,
-    "events_benford"    -> qBenford _,
-    "events_value_pareto" -> qValuePareto _,
-    "text_lang_confusion" -> ((s, d) => TextOps.langConfusion(docs(s, d))),
-    "text_zipf"         -> ((s, d) => TextOps.zipf(docs(s, d))),
-    "text_collocations" -> ((s, d) => TextOps.collocations(docs(s, d))),
-    "corpus_pad_audit"  -> ((s, d) => TrainingData.padAudit(docs(s, d))),
-    "corpus_pack_audit" -> ((s, d) => TrainingData.packAudit(docs(s, d))),
-    // both BFS readouts derive from the SHARED seeded distance-frame
-    // memo (Graph.seededLevelsCached) — the level-synchronous join
-    // chain runs once per (session, fixture), not once per query
-    "graph_bfs"         -> ((s, d) =>
-      graft.operators.Graph.bfsLevels(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        levelsPre = Some(graft.operators.Graph.seededLevelsCached(
-          graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-          d, Some(graft.operators.Graph.coPartDegreesCached(
-            Tables.lineitem(s, d), d)))))),
-    "graph_closeness"   -> ((s, d) =>
-      graft.operators.Graph.closeness(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        levelsPre = Some(graft.operators.Graph.seededLevelsCached(
-          graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-          d, Some(graft.operators.Graph.coPartDegreesCached(
-            Tables.lineitem(s, d), d)))))),
-    "sim_cell_balance"  -> ((s, d) => Similarity.cellBalance(emb(s, d))),
-    "sim_pq_distortion" -> ((s, d) => Similarity.pqDistortion(emb(s, d))),
-    "scd_snapshot_diff" -> qSnapshotDiff _,
-    "text_vocab_growth" -> ((s, d) => TextOps.vocabGrowth(docs(s, d))),
-    "events_debounce"   -> qDebounce _,
-    "events_sequences"  -> qSequences _,
-    "events_ema"        -> qEma _,
-    "events_corr"       -> qCorr _,
-    "events_acf"        -> qAcf _,
-    "events_abtest"     -> qAbTest _,
-    "events_cumulative_users" -> qCumulativeUsers _,
-    "events_stickiness" -> qStickiness _,
-    "events_pseudonymize" -> qPseudonymize _,
-    "events_chi2"       -> qChi2 _,
-    "events_cramer"     -> qCramer _,
-    "events_kanon"      -> qKAnon _,
-    "events_tcloseness" -> qTCloseness _,
-    "events_dispersion" -> qDispersion _,
-    "profile_ref_integrity" -> qRefIntegrity _,
-    "text_burstiness_words" -> ((s, d) =>
-      TextOps.wordBurstiness(docs(s, d))),
-    "events_entropy_rate" -> qEntropyRate _,
-    "events_ldiversity" -> qLDiversity _,
-    "events_late_arrivals" -> qLateArrivals _,
-    "q76_null_semantics" -> qNullSemantics _,
-    "events_drift"      -> qDrift _,
-    "events_gapfill"    -> qGapfill _,
-    "profile_histogram" -> ((s, d) =>
-      graft.operators.Profile.histogram(Tables.lineitem(s, d))),
-    "text_textrank"     -> ((s, d) => TextOps.textRank(docs(s, d))),
-    "events_cuped"      -> qCuped _,
-    "events_forecast_interval" -> qForecastInterval _,
-    "events_markov_stationary" -> qMarkovStationary _,
-    "scd_overlap_audit" -> qScdOverlapAudit _,
-    "events_burstiness" -> qBurstiness _,
-    "events_srm"        -> qSrm _,
-    "events_did"        -> qDid _,
-    "events_mde"        -> qMde _,
-    "events_mad"        -> qMad _,
-    "events_seasonality" -> qSeasonality _,
-    "graph_degree_gini" -> ((s, d) =>
-      graft.operators.Graph.degreeGini(
-        graft.operators.Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        degPre = Some(graft.operators.Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)))),
-    "dedup_threshold_sweep" -> ((s, d) =>
-      Dedup.thresholdSweep(arts(s, d).pairs, docs(s, d),
-        Some(Dedup.shingleSetsCached(docs(s, d), d)))),
-    "dedup_scurve"      -> ((s, d) =>
-      Dedup.scurve(arts(s, d).pairs, docs(s, d),
-        Some(Dedup.shingleSetsCached(docs(s, d), d)))),
-    "text_classifier_auc" -> ((s, d) => TextOps.classifierAuc(docs(s, d))),
-    "sim_mrr"           -> ((s, d) => Similarity.mrr(emb(s, d))),
-    "sim_triplet_audit" -> ((s, d) => Similarity.tripletAudit(emb(s, d))),
-    "match_jw_pairs"    -> ((s, d) =>
-      graft.operators.Match.jwPairs(Tables.part(s, d))),
-    "match_best"        -> ((s, d) =>
-      graft.operators.Match.bestMatch(Tables.part(s, d))),
-    "match_blocking"    -> ((s, d) =>
-      graft.operators.Match.blockingAudit(Tables.part(s, d))),
-    "match_clusters"    -> ((s, d) =>
-      graft.operators.Match.matchClusters(Tables.part(s, d))),
-    "events_attribution" -> qAttribution _,
-    "events_agg_merge"  -> qAggMerge _,
-    "events_rfm"        -> qRfm _,
-    "events_gap_stats"  -> qGapStats _,
-    "events_trend_ols"  -> qTrendOls _,
-    "events_gini"       -> qGini _,
-    "events_survival"   -> qSurvival _,
-    "events_changepoint" -> qChangepoint _,
-    "events_multitouch" -> qMultiTouch _,
-    "scd_intervals"     -> qScdIntervals _,
-    "scd_gc"            -> qScdGc _,
-    "scd_interval_merge" -> qIntervalMerge _,
-    "scd_timetravel"    -> qTimeTravel _,
-    "corpus_curriculum" -> qCurriculum _,
-    "text_ngram_lm"     -> qNgramLm _,
-    "text_lm_score"     -> qLmScore _,
-    "text_lm_sweep"     -> qLmSweep _,
-    "text_kn_lm"        -> qKnLm _,
-    "text_kn_score"     -> qKnScore _,
-    "profile_eqdepth"   -> qEqdepth _,
-    "profile_top_values" -> ((s, d) => graft.operators.Profile.topValues(
-      Tables.lineitem(s, d), Tables.orders(s, d))),
-    "q75_calendar"      -> qCalendar _,
-    "text_novelty"      -> qNovelty _,
-    "dedup_band_profile" -> ((s, d) => Dedup.bandProfile(arts(s, d).bands)),
-    "dedup_source_jaccard" -> ((s, d) => Dedup.sourceJaccard(docs(s, d))),
-    "dedup_cluster_purity" -> ((s, d) =>
-      Dedup.clusterPurity(arts(s, d).components, docs(s, d))),
-    "dedup_savings"     -> ((s, d) =>
-      Dedup.dedupSavings(docs(s, d), arts(s, d).components)),
-    "corpus_stratified" -> qStratified _,
-    "embed_quantize"    -> ((s, d) => Similarity.quantize(emb(s, d))),
-    // the two spectral queries share one pinned covariance + power pass
-    "embed_pca_power"   -> ((s, d) => Similarity.pcaPower(emb(s, d),
-      pre = Some(Similarity.pcaPartsCached(emb(s, d), d)))),
-    "embed_pca_project" -> ((s, d) => Similarity.pcaProject(emb(s, d),
-      pre = Some(Similarity.pcaPartsCached(emb(s, d), d)))),
-    "embed_pca_deflate" -> ((s, d) => Similarity.pcaDeflate(emb(s, d),
-      pre = Some(Similarity.pcaArtsCached(emb(s, d), d)))),
-    "text_rarity"       -> ((s, d) => TextOps.rarity(docs(s, d))),
-    "embed_drift"       -> ((s, d) => Similarity.embedDrift(emb(s, d))),
-    "text_fertility"    -> ((s, d) => TextOps.fertility(docs(s, d))),
-    // batch form of the incremental admission gate: every third doc is the
-    // "new crawl", the rest the existing corpus; one dedupBatch round. The
-    // corpus band state filters from the SHARED artifact band table —
-    // bands are per-doc, so the subset's bands are a doc_id filter away
-    "dedup_admit"       -> ((s, d) => {
-      val all = docs(s, d)
-      val (admitted, _) = graft.streaming.Streams.dedupBatch(
-        all.filter(col("doc_id") % 3 === 0),
-        arts(s, d).bands.filter(col("doc_id") % 3 =!= 0))
-      admitted.select(col("doc_id")).orderBy(col("doc_id"))
-    }),
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_agg"    -> sqlPricingAgg,
-    "q2_filter_project" -> sqlFilterProject,
-    "q3_enrich"         -> sqlEnrich,
-    "q4_semi_join"      -> sqlSemiJoin,
-    "q5_anti_join"      -> sqlAntiJoin,
-    "q6_scd_merge"      -> sqlScdMerge,
-    "q7_scd_counters"   -> sqlScdCounters,
-    "q8_upsert_type1"   -> sqlUpsertType1,
-    "q9_union"          -> sqlUnion,
-    "q10_cleanse"       -> sqlCleanse,
-    "q11_topk_window"   -> sqlTopkWindow,
-    "q12_log_stamp"     -> sqlLogStamp,
-    "q13_sessionize"    -> Sessionize.sqlSessions,
-    "q28_session_window" -> Sessionize.sqlSessionsBuiltin,
-    "q14_tumbling"      -> Sessionize.sqlTumbling,
-    "events_bursts"     -> Sessionize.sqlBursts,
-    "events_dow_profile" -> Sessionize.sqlDowProfile,
-    "sim_pq_code_usage" -> Similarity.sqlPqCodeUsage(),
-    "q15_enrich_pivot"  -> sqlEnrichPivot,
-    "q16_rollup"        -> sqlRollup,
-    "q17_except"        -> sqlExcept,
-    "q29_intersect"     -> sqlIntersect,
-    "q18_json"          -> sqlJson,
-    "q19_distinct_topn" -> sqlTopN,
-    "q20_asof"          -> sqlAsOf,
-    "q50_asof_phys"     -> sqlAsOfPhys,
-    "q80_asof_phys_outer" -> sqlAsOfPhysOuter,
-    // the physical tolerance route answers the SAME SQL as the composed
-    // q45 — one oracle, two execution strategies
-    "q51_asof_phys_tol" -> sqlAsOfTolerance,
-    "q53_asof_phys_nearest" -> sqlAsOfNearest,
-    // the physical forward route answers q39's SQL — one oracle, two
-    // execution strategies, mirroring the backward q50/q20 pairing
-    "q52_asof_phys_fwd" -> sqlAsOfForward,
-    "q39_asof_forward"  -> sqlAsOfForward,
-    "q21_array_agg"     -> sqlArrayAgg,
-    "q22_string_funcs"  -> sqlStringFuncs,
-    "q23_percentile"    -> sqlPercentile,
-    "q24_sliding"       -> sqlSlidingWindow,
-    "q25_cube"          -> sqlCube,
-    "q26_salted_join"   -> sqlSaltedJoin,
-    "q27_unpivot"       -> sqlUnpivot,
-    "sketch_distinct"   -> sqlSketch,
-    "sketch_kmv"        -> sqlKmv,
-    "q30_grouping_sets" -> sqlGroupingSets,
-    "q31_range_join"    -> sqlRangeJoin,
-    "q32_range_frame"   -> sqlRangeFrame,
-    "q33_quarantine"    -> sqlQuarantine,
-    "q34_profile"       -> sqlProfile,
-    "q35_ntile"         -> sqlNtile,
-    "q36_funnel"        -> sqlFunnel,
-    "q37_correlated"    -> sqlCorrelated,
-    "q38_resample"      -> sqlResample,
-    "corpus_sample"     -> sqlCorpusSample,
-    "text_bigrams"      -> sqlBigrams,
-    "text_tfidf"        -> TextOps.sqlTfIdf,
-    "sim_centroids"     -> Similarity.sqlCentroids,
-    "sketch_heavy_hitters" -> sqlHeavyHitters,
-    "sketch_percentile" -> sqlQuantileSketch,
-    "corpus_clean"      -> graft.operators.CorpusClean.sqlClean,
-    "corpus_clean_funnel" -> graft.operators.CorpusClean.sqlFunnel,
-    "dedup_exact"       -> Dedup.sqlExact,
-    "dedup_minhash"     -> Dedup.sqlMinhashPairs(),
-    "dedup_components"  -> Dedup.sqlConnectedComponents(Dedup.sqlMinhashPairs()),
-    "dedup_cluster_stats" -> Dedup.sqlClusterStats,
-    "dedup_simhash"     -> Dedup.sqlSimhash,
-    "dedup_simhash_pairs" -> Dedup.sqlSimhashPairs,
-    "dedup_jaccard"     -> Dedup.sqlNgramJaccard,
-    "dedup_embed"       -> Similarity.sqlEmbedNearDup,
-    "sim_brute_topk"    -> Similarity.sqlBruteTopK,
-    "sim_ann_lsh"       -> Similarity.sqlAnnTopK,
-    "sim_ivf_topk"      -> Similarity.sqlIvfTopK,
-    "sim_recall"        -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlIvfTopK),
-    "sim_mips_topk"     -> Similarity.sqlMipsTopK,
-    "sim_mips_lsh"      -> Similarity.sqlMipsLsh,
-    "sim_mips_recall"   -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlMipsTopK}\n) " +
-        s"WHERE rk <= ${Similarity.MipsTopK}",
-      Similarity.sqlMipsLsh),
-    "sim_ivfpq_recall"  -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlIvfPqTopK),
-    "sim_ivf_probe2"    -> Similarity.sqlIvfTopKProbe(2),
-    "sim_recall_sweep"  -> ((1 to 3).map { p =>
-      s"SELECT $p AS nprobe, query_id, recall FROM (\n" +
-        Similarity.sqlRecall(
-          s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-            s"WHERE rk <= ${Similarity.AnnTopK}",
-          Similarity.sqlIvfTopKProbe(p)) + "\n)"
-    }.mkString("\nUNION ALL\n") + "\nORDER BY nprobe, query_id"),
-    "sim_ivf_kmeans"    -> Similarity.sqlIvfKmeans(),
-    "sim_pq_kmeans"     -> Similarity.sqlPqKmeans(),
-    "sim_ivf_balance_trained" -> Similarity.sqlIvfBalanceTrained(),
-    "sim_pq_distortion_trained" -> Similarity.sqlPqDistortionTrained(),
-    "sim_ivf_radius_trained" -> Similarity.sqlIvfRadiusTrained(),
-    "stream_scd_state"   -> graft.streaming.StreamOracles.sqlScdState,
-    "stream_dedup_state" -> graft.streaming.StreamOracles.sqlDedupState,
-    "stream_decon_state" -> graft.streaming.StreamOracles.sqlDeconState,
-    "stream_corpus_state" -> graft.streaming.StreamOracles.sqlCorpusState,
-    "stream_kmv_state"   -> graft.streaming.StreamOracles.sqlKmvState,
-    "stream_cms_state"   -> graft.streaming.StreamOracles.sqlCmsState,
-    "stream_session_state" -> graft.streaming.StreamOracles.sqlSessionState,
-    "stream_join_state"  -> graft.streaming.StreamOracles.sqlJoinState,
-    "stream_window_state" -> graft.streaming.StreamOracles.sqlWindowState,
-    // the streamed MG sketch is exact at this capacity, so its final
-    // state must match the SAME exact SQL the batch sketch matches
-    "stream_mg_state"   -> sqlHeavyHitters,
-    "stream_asof_state" -> graft.streaming.StreamOracles.sqlAsOfState,
-    "stream_drop_state" -> graft.streaming.StreamOracles.sqlDropState,
-    "text_tokens"       -> TextOps.sqlTokenCounts,
-    "text_quality"      -> TextOps.sqlQuality,
-    "text_langid"       -> TextOps.sqlLangId,
-    "text_fingerprint"  -> TextOps.sqlFingerprint,
-    "text_langid_ngram" -> TextOps.sqlLangIdNgram,
-    "text_winnow"       -> TextOps.sqlWinnow,
-    "text_winnow_pairs" -> TextOps.sqlWinnowPairs,
-    "text_source_overlap" -> TextOps.sqlSourceOverlap,
-    "text_source_tvd"   -> TextOps.sqlSourceTvd,
-    "text_lexical_profile" -> TextOps.sqlLexicalProfile,
-    "mm_features"       -> Multimodal.sqlFeatures,
-    "mm_frames"         -> Multimodal.sqlFrameSamples(64),
-    "mm_decode"         -> Multimodal.sqlDecode,
-    "mm_pixels"         -> Multimodal.sqlPixels,
-    "mm_downsample"     -> Multimodal.sqlDownsample,
-    "mm_png_pixels"     -> Multimodal.sqlPngPixels,
-    "mm_wav"            -> Multimodal.sqlWav,
-    "mm_phash"          -> Multimodal.sqlPhash,
-    "mm_phash_groups"   -> Multimodal.sqlPhashGroups,
-    "corpus_split"      -> TrainingData.sqlSplitStats,
-    "corpus_split_leakage" ->
-      TrainingData.sqlSplitLeakage(Dedup.sqlMinhashPairs()),
-    "corpus_pack"       -> TrainingData.sqlPack,
-    "corpus_pack_sampled" -> TrainingData.sqlPack,
-    "corpus_mix"        -> TrainingData.sqlMixture,
-    "corpus_mix_temp"   -> TrainingData.sqlMixtureTemperature,
-    "text_repetition"   -> TrainingData.sqlRepetition,
-    "events_redact"     -> TrainingData.sqlRedact,
-    "decon_overlap"     -> TrainingData.sqlDecontaminate,
-    "decon_minhash"     -> Dedup.sqlMinhashDecon(),
-    "decon_bloom"       -> TrainingData.sqlBloomDecon,
-    "dedup_canonical"   -> Dedup.sqlCanonical,
-    "dedup_communities" -> Dedup.sqlLabelPropagation(Dedup.sqlMinhashPairs()),
-    "dedup_modularity"  -> Dedup.sqlModularity(Dedup.sqlMinhashPairs(),
-      Dedup.sqlLabelPropagation(Dedup.sqlMinhashPairs())),
-    "dedup_calibration" -> Dedup.sqlBandCalibration(Dedup.sqlMinhashPairs()),
-    "dedup_minhash_error" -> Dedup.sqlMinhashError,
-    "sim_sq_topk"       -> Similarity.sqlSqTopK(),
-    "sim_sq_rerank"     -> Similarity.sqlSqRerank,
-    "sim_filtered_topk" -> Similarity.sqlFilteredTopK,
-    "sim_sq_recall"     -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlSqTopK()),
-    "sim_pq_topk"       -> Similarity.sqlPqTopK(),
-    "sim_pq_rerank"     -> Similarity.sqlPqRerank,
-    "sim_pq_rerank_recall" -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlPqRerank),
-    "sim_ivfpq_topk"    -> Similarity.sqlIvfPqTopK,
-    "sim_ivfadc_topk"   -> Similarity.sqlIvfPqResidualTopK(),
-    "sim_ivfadc_trained" -> Similarity.sqlIvfPqResidualTopK(trained = true),
-    "sim_ivfadc_recall" -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlIvfPqResidualTopK()),
-    "layout_zorder"     -> graft.operators.Layout.sqlZorderAudit,
-    "layout_pruning"    -> graft.operators.Layout.sqlPruningAudit,
-    "layout_hilbert"    -> graft.operators.Layout.sqlHilbertAudit,
-    "layout_bloom_skip" -> graft.operators.Layout.sqlBloomSkipAudit,
-    "layout_compaction" -> graft.operators.Layout.sqlCompactionPlan,
-    "sim_dim_sweep"     -> Similarity.sqlDimSweep,
-    "graph_edges"       ->
-      """SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |ORDER BY cust, supp""".stripMargin,
-    "graph_pagerank"    -> graft.operators.Graph.sqlPagerank(),
-    "graph_katz"        -> graft.operators.Graph.sqlKatz(),
-    "graph_anf"         -> graft.operators.Graph.sqlAnf(),
-    "graph_louvain"     -> graft.operators.Graph.sqlLouvain(),
-    "graph_louvain_coarse" -> graft.operators.Graph.sqlLouvainCoarse(),
-    "graph_louvain_gain" -> graft.operators.Graph.sqlLouvainGain(),
-    "graph_louvain_levels" -> graft.operators.Graph.sqlLouvainLevels(),
-    "graph_wkatz"       -> graft.operators.Graph.sqlLouvainWKatz(),
-    "graph_louvain_refine" -> graft.operators.Graph.sqlLouvainRefine(),
-    "graph_wpagerank" -> graft.operators.Graph.sqlLouvainWPagerank(),
-    "graph_louvain_segments" -> graft.operators.Graph.sqlLouvainSegments(),
-    "dedup_lpa_agreement" ->
-      Dedup.sqlLpaAgreement(Dedup.sqlMinhashPairs()),
-    "events_bootstrap"  -> sqlBootstrap,
-    "events_rolling_mau" -> sqlRollingMau,
-    "events_psi"        -> sqlPsi,
-    "events_seasonal"   -> sqlSeasonal,
-    "events_ewma"       -> sqlEwma,
-    "events_locf"       -> sqlLocf,
-    "scd_type3"         -> graft.operators.Changelog.sqlType3,
-    "corpus_epochs"     -> TrainingData.sqlEpochs,
-    "graph_ppr"         -> graft.operators.Graph.sqlPpr(),
-    "graph_hits"        -> graft.operators.Graph.sqlHits,
-    "graph_components"  -> graft.operators.Graph.sqlComponents,
-    "graph_triangles"   -> graft.operators.Graph.sqlTriangleStats,
-    "graph_degrees"     -> graft.operators.Graph.sqlDegreeHistogram,
-    "graph_common_neighbors" -> graft.operators.Graph.sqlCommonNeighbors,
-    "graph_link_jaccard"    -> graft.operators.Graph.sqlLinkJaccard,
-    "graph_local_cc"        -> graft.operators.Graph.sqlLocalClustering,
-    "graph_peel"        -> graft.operators.Graph.sqlPeelProfile(),
-    "graph_truss"       -> graft.operators.Graph.sqlTrussProfile(),
-    "graph_richclub"    -> graft.operators.Graph.sqlRichClub,
-    "graph_assortativity" -> graft.operators.Graph.sqlAssortativity,
-    "q40_gap_fill"      -> sqlGapFill,
-    "q42_ohlc"          -> sqlOhlc,
-    "q43_retention"     -> sqlRetention,
-    "dedup_substring"   -> Dedup.sqlSubstringDup,
-    "dedup_edit"        -> Dedup.sqlEditPairs,
-    "dedup_semantic"    -> Similarity.sqlSemanticDedup,
-    "corpus_chunk"      -> TrainingData.sqlChunk,
-    "corpus_wsample"    -> TrainingData.sqlWeightedSample,
-    "text_bpe_merges"   -> TextOps.sqlBpeMerges(),
-    "q41_histogram"     -> Profile.sqlHistogram("lineitem", "l_extendedprice"),
-    "profile_skew"      -> Profile.sqlKeySkew("lineitem", "l_partkey"),
-    "profile_checks"    -> Profile.sqlExpectations,
-    "profile_fd"        -> Profile.sqlFdAudit,
-    "profile_corr_matrix" -> Profile.sqlCorrMatrix,
-    "profile_mi"        -> Profile.sqlMutualInfo,
-    "corpus_dsir"       -> TrainingData.sqlDsir,
-    "text_pii"          -> TextOps.sqlPiiScan,
-    "text_pii_stats"    -> TextOps.sqlPiiStats,
-    "sim_ndcg"          -> Similarity.sqlNdcg,
-    "sim_cluster_topics" -> Similarity.sqlClusterTopics(),
-    "bucket_join"       -> graft.operators.Bucketing.sqlBucketJoin,
-    "text_gopher"       -> TextOps.sqlGopher,
-    "text_simpson"      -> TextOps.sqlSimpson,
-    "text_postings"     -> TextOps.sqlPostings,
-    "dedup_containment" -> Dedup.sqlContainmentPairs,
-    "sketch_countmin"   ->
-      graft.operators.Sketch.sqlCountMin("events", "user_id"),
-    "sketch_f2_ams"     ->
-      graft.operators.Sketch.sqlAmsF2("events", "user_id"),
-    "text_bpe_encode"   -> TextOps.sqlBpeEncode(),
-    "text_quality_rank" -> TextOps.sqlQualityRank,
-    "dedup_weights"     -> Dedup.sqlSoftWeights,
-    "sim_knn_graph"     -> Similarity.sqlKnnGraph,
-    "sim_nsw_walk"      -> Similarity.sqlNswWalk,
-    "sim_nsw_recall"    -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlNswWalk),
-    "sim_maxmin_init"   -> Similarity.sqlMaxminInit,
-    "sim_maxmin_cells"  -> Similarity.sqlMaxminCells,
-    "sim_lsh_multiprobe" -> Similarity.sqlMultiprobeTopK,
-    "sim_multiprobe_recall" -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlMultiprobeTopK),
-    "sim_nsw_sweep"     -> Similarity.sqlNswBeamSweep,
-    "sim_sdc_topk"      -> Similarity.sqlSdcTopK,
-    "sim_sdc_recall"    -> Similarity.sqlRecall(
-      s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
-        s"WHERE rk <= ${Similarity.AnnTopK}",
-      Similarity.sqlSdcTopK),
-    "sim_hard_negatives" -> Similarity.sqlHardNegatives,
-    "corpus_budget"     -> TrainingData.sqlBudgetSelect,
-    "sim_rrf"           -> Similarity.sqlRrf,
-    "events_compact"    -> sqlCompact,
-    "q44_asof_nearest"  -> sqlAsOfNearest,
-    "q45_asof_tolerance" -> sqlAsOfTolerance,
-    "q46_revenue_by_nation" -> sqlRevenueByNation,
-    "q54_ship_priority" -> sqlShipPriority,
-    "q55_order_priority" -> sqlOrderPriority,
-    "q56_forecast_revenue" -> sqlForecastRevenue,
-    "q57_returned_customers" -> sqlReturnedCustomers,
-    "q58_promo_revenue" -> sqlPromoRevenue,
-    "q59_large_orders"  -> sqlLargeOrders,
-    "q60_market_share"  -> sqlMarketShare,
-    "q61_small_qty_revenue" -> sqlSmallQtyRevenue,
-    "q62_order_count_dist" -> sqlOrderCountDist,
-    "q63_disjunctive_revenue" -> sqlDisjunctiveRevenue,
-    "q64_dormant_customers" -> sqlDormantCustomers,
-    "q65_waiting_suppliers" -> sqlWaitingSuppliers,
-    "q66_volume_shipping" -> sqlVolumeShipping,
-    "q67_late_priority" -> sqlLatePriority,
-    "q68_top_supplier"  -> sqlTopSupplier,
-    "q77_product_profit" -> sqlProductProfit,
-    "q78_supplier_counts" -> sqlSupplierCounts,
-    "q79_dominant_suppliers" -> sqlDominantSuppliers,
-    "events_user_entropy" -> sqlUserEntropy,
-    "events_hill_tail"  -> sqlHillTail,
-    "events_time_to_convert" -> sqlTimeToConvert,
-    "q69_skyline"       -> sqlSkyline,
-    "q70_min_cost_supplier" -> sqlMinCostSupplier,
-    "q71_important_parts" -> sqlImportantParts,
-    "events_bot_score"  -> sqlBotScore,
-    "events_threshold_cross" -> sqlThresholdCross,
-    "events_streak"     -> sqlStreak,
-    "q72_except_all"    -> sqlExceptAll,
-    "q73_intersect_all" -> sqlIntersectAll,
-    "q74_rollup_share"  -> sqlRollupShare,
-    "events_wow_change" -> sqlWowChange,
-    "events_rolling_median" -> sqlRollingMedian,
-    "events_new_returning" -> sqlNewReturning,
-    "graph_conductance" -> graft.operators.Graph.sqlConductance,
-    "text_boilerplate"  -> TextOps.sqlBoilerplate,
-    "text_vocab_coverage" -> TextOps.sqlVocabCoverage,
-    "text_bm25"         -> TextOps.sqlBm25,
-    "text_hybrid_rrf"   -> sqlHybridRrf,
-    "corpus_kfold"      -> TrainingData.sqlKfoldStats,
-    "corpus_length_hist" -> TrainingData.sqlLengthHistogram,
-    "mm_rgb_hist"       -> Multimodal.sqlRgbHistogram,
-    "mm_wav_hist"       -> Multimodal.sqlWavHistogram,
-    "text_js_divergence" -> TextOps.sqlJsDivergence,
-    "sim_mmr"           -> Similarity.sqlMmr,
-    "sim_probe_cost"    -> Similarity.sqlIvfProbeCost,
-    "sim_silhouette"    -> Similarity.sqlSilhouette,
-    "sim_db_index"      -> Similarity.sqlDbIndex,
-    "graph_adamic_adar" -> graft.operators.Graph.sqlAdamicAdar,
-    "q47_session_incidents" -> sqlSessionIncidents,
-    "q48_window_funcs"  -> sqlWindowFuncs,
-    "q49_funnel_windowed" -> sqlFunnelWindowed,
-    "sketch_join_est"   -> graft.operators.Sketch.sqlKmvJoinEstimate(
-      "customer", "c_custkey", "orders", "o_custkey"),
-    "dedup_spans"       -> Dedup.sqlSpanClean,
-    "corpus_shard"      -> TrainingData.sqlShard,
-    "corpus_export"     -> TrainingData.sqlCorpusExport,
-    "corpus_export_dedup" -> TrainingData.sqlCorpusExportFrom(
-      s"""SELECT cc.* FROM (
-         |  ${graft.operators.CorpusClean.sqlClean.linesIterator
-               .mkString("\n  ")}
-         |) cc
-         |WHERE cc.doc_id IN (SELECT doc_id FROM (
-         |  ${Dedup.sqlCanonical.linesIterator.mkString("\n  ")}
-         |) WHERE kept)""".stripMargin),
-    "corpus_interleave" -> TrainingData.sqlInterleave,
-    "corpus_e2e"        -> TrainingData.sqlCorpusE2e(),
-    "text_classifier"   -> TextOps.sqlClassifierScore,
-    "embed_outliers"    -> Similarity.sqlEmbedOutliers,
-    "events_winsorize"  -> sqlWinsorize,
-    "events_anomaly"    -> sqlAnomaly,
-    "events_cooccur"    -> sqlCooccur,
-    "events_transitions" -> sqlTransitions,
-    "events_top_paths"  -> sqlTopPaths,
-    "events_forecast_naive" -> sqlForecastNaive,
-    "events_active_users" -> sqlActiveUsers,
-    "events_cohort_ltv" -> sqlCohortLtv,
-    "events_benford"    -> sqlBenford,
-    "events_value_pareto" -> sqlValuePareto,
-    "text_lang_confusion" -> TextOps.sqlLangConfusion,
-    "text_zipf"         -> TextOps.sqlZipf,
-    "text_collocations" -> TextOps.sqlCollocations,
-    "corpus_pad_audit"  -> TrainingData.sqlPadAudit,
-    "corpus_pack_audit" -> TrainingData.sqlPackAudit,
-    "graph_bfs"         -> graft.operators.Graph.sqlBfsLevels,
-    "graph_closeness"   -> graft.operators.Graph.sqlCloseness,
-    "sim_cell_balance"  -> Similarity.sqlCellBalance,
-    "sim_pq_distortion" -> Similarity.sqlPqDistortion,
-    "scd_snapshot_diff" -> sqlSnapshotDiff,
-    "text_vocab_growth" -> TextOps.sqlVocabGrowth,
-    "events_debounce"   -> sqlDebounce,
-    "events_sequences"  -> sqlSequences,
-    "events_ema"        -> sqlEma,
-    "events_corr"       -> sqlCorr,
-    "events_acf"        -> sqlAcf,
-    "events_abtest"     -> sqlAbTest,
-    "events_cumulative_users" -> sqlCumulativeUsers,
-    "events_stickiness" -> sqlStickiness,
-    "events_pseudonymize" -> sqlPseudonymize,
-    "events_chi2"       -> sqlChi2,
-    "events_attribution" -> sqlAttribution,
-    // the incremental merge must equal the full hourly recompute —
-    // its oracle IS the from-scratch rollup
-    "events_cramer"     -> sqlCramer,
-    "events_kanon"      -> sqlKAnon,
-    "events_tcloseness" -> sqlTCloseness,
-    "events_dispersion" -> sqlDispersion,
-    "profile_ref_integrity" -> sqlRefIntegrity,
-    "text_burstiness_words" -> TextOps.sqlWordBurstiness,
-    "events_entropy_rate" -> sqlEntropyRate,
-    "events_ldiversity" -> sqlLDiversity,
-    "events_late_arrivals" -> sqlLateArrivals,
-    "q76_null_semantics" -> sqlNullSemantics,
-    "events_drift"      -> sqlDrift,
-    "events_gapfill"    -> sqlGapfill,
-    "profile_histogram" -> graft.operators.Profile.sqlHistogram,
-    "text_textrank"     -> TextOps.sqlTextRank(),
-    "events_cuped"      -> sqlCuped,
-    "events_forecast_interval" -> sqlForecastInterval,
-    "events_markov_stationary" -> sqlMarkovStationary,
-    "scd_overlap_audit" -> sqlScdOverlapAudit,
-    "events_burstiness" -> sqlBurstiness,
-    "events_srm"        -> sqlSrm,
-    "events_did"        -> sqlDid,
-    "events_mde"        -> sqlMde,
-    "events_mad"        -> sqlMad,
-    "events_seasonality" -> sqlSeasonality,
-    "graph_degree_gini" -> graft.operators.Graph.sqlDegreeGini,
-    "dedup_threshold_sweep" -> Dedup.sqlThresholdSweep,
-    "dedup_scurve"      -> Dedup.sqlScurve,
-    "text_classifier_auc" -> TextOps.sqlClassifierAuc,
-    "sim_mrr"           -> Similarity.sqlMrr,
-    "sim_triplet_audit" -> Similarity.sqlTripletAudit,
-    "match_jw_pairs"    -> graft.operators.Match.sqlJwPairs,
-    "match_best"        -> graft.operators.Match.sqlBestMatch,
-    "match_blocking"    -> graft.operators.Match.sqlBlockingAudit,
-    "match_clusters"    -> graft.operators.Match.sqlMatchClusters,
-    "events_agg_merge"  -> sqlAggMerge,
-    "events_rfm"        -> sqlRfm,
-    "events_gap_stats"  -> sqlGapStats,
-    "events_trend_ols"  -> sqlTrendOls,
-    "events_gini"       -> sqlGini,
-    "events_survival"   -> sqlSurvival,
-    "events_changepoint" -> sqlChangepoint,
-    "events_multitouch" -> sqlMultiTouch,
-    "scd_intervals"     -> sqlScdIntervals,
-    "scd_gc"            -> sqlScdGc,
-    // the incremental merge must equal the from-scratch interval build —
-    // its oracle IS the full-recompute SQL
-    "scd_interval_merge" -> sqlScdIntervals,
-    "scd_timetravel"    -> sqlTimeTravel,
-    "corpus_curriculum" -> sqlCurriculum,
-    "text_ngram_lm"     -> sqlNgramLm,
-    "text_lm_score"     -> sqlLmScore,
-    "text_lm_sweep"     -> sqlLmSweep,
-    "text_kn_lm"        -> sqlKnLm,
-    "text_kn_score"     -> sqlKnScore,
-    "profile_eqdepth"   -> sqlEqdepth,
-    "profile_top_values" -> graft.operators.Profile.sqlTopValues,
-    "q75_calendar"      -> sqlCalendar,
-    "text_novelty"      -> sqlNovelty,
-    "dedup_band_profile" -> Dedup.sqlBandProfile(),
-    "dedup_source_jaccard" -> Dedup.sqlSourceJaccard,
-    "dedup_cluster_purity" ->
-      Dedup.sqlClusterPurity(Dedup.sqlMinhashPairs()),
-    "dedup_savings"     -> Dedup.sqlDedupSavings,
-    "corpus_stratified" -> sqlStratified,
-    "embed_quantize"    -> Similarity.sqlQuantize,
-    "embed_pca_power"   -> Similarity.sqlPcaPower,
-    "embed_pca_project" -> Similarity.sqlPcaProject,
-    "embed_pca_deflate" -> Similarity.sqlPcaDeflate,
-    "text_rarity"       -> TextOps.sqlRarity,
-    "embed_drift"       -> Similarity.sqlEmbedDrift,
-    "text_fertility"    -> TextOps.sqlFertility,
-    "dedup_admit"       -> Dedup.sqlAdmitBatch(id => s"$id % 3 = 0"),
-  )
+  /** Every query with its family, in declaration order. */
+  val all: Seq[(String, QuerySpec)] = assemble(Seq(CoreQueries, EventsQueries,
+    SimQueries, SketchQueries, CorpusQueries, TextQueries, DedupQueries,
+    StreamQueries, MmQueries, DeconQueries, LayoutQueries, GraphQueries,
+    ScdQueries, ProfileQueries, BucketQueries, EmbedQueries, MatchQueries))
+
+  /** The specs of `families`, each tagged with its family; a name declared
+    * twice fails here instead of one silently replacing the other. */
+  private[graft] def assemble(families: Seq[QueryFamily]): Seq[(String, QuerySpec)] = {
+    val specs = families.flatMap(f => f.specs.map(f.family -> _))
+    val dups = specs.groupBy(_._2.name).collect { case (n, fs) if fs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    specs
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map { case (_, q) => q.name -> q.run }.toMap
+  val oracleSql: Map[String, String] =
+    all.map { case (_, q) => q.name -> q.oracle }.toMap
 }

@@ -28,16 +28,16 @@ import org.apache.spark.unsafe.types.UTF8String
 object StringSim {
   val JaroWinklerName = "graft_jaro_winkler"
 
+  /** SQL name → builder. */
+  private[graft] val builders: Seq[(String, FunctionTable.Builder)] = Seq(
+    JaroWinklerName -> (exprs => JaroWinkler(exprs(0), exprs(1))))
+
   /** Register in the session's function registry (idempotent; the same
     * registry doorway as [[VectorExprs]] — Spark 4 hides Column↔Expression
     * conversion, so SQL/`expr` is the public path to a custom Expression).
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(JaroWinklerName,
-      exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    FunctionTable.registerMissing(spark, builders)
 
   /** Classic Jaro similarity + Winkler prefix boost, byte-level, in
     * DuckDB/RapidFuzz operation order. Public: called from generated code.

@@ -40,23 +40,20 @@ object TextExprs {
   val TrigramPredictName = "graft_lang_trigrams"
   val BigramName = "graft_bigram_pairs"
 
-  /** Register the text expressions bound to the given language profiles
-    * (idempotent per session; same registry doorway as [[VectorExprs]]).
+  /** SQL name → builder, bound to the language profiles of
+    * [[graft.operators.TextOps]]. */
+  private[graft] val builders: Seq[(String, FunctionTable.Builder)] = Seq(
+    WordPredictName -> (exprs => PredictLang(exprs(0),
+      graft.operators.TextOps.LangProfiles, trigram = false)),
+    TrigramPredictName -> (exprs => PredictLang(exprs(0),
+      graft.operators.TextOps.TrigramProfiles, trigram = true)),
+    BigramName -> (exprs => BigramPairs(exprs(0))))
+
+  /** Register the text expressions (idempotent per session; same registry
+    * doorway as [[VectorExprs]]).
     */
-  def register(spark: SparkSession,
-      wordProfiles: Seq[(String, Seq[String])],
-      trigramProfiles: Seq[(String, Seq[String])]): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(WordPredictName,
-      exprs => PredictLang(exprs(0), wordProfiles, trigram = false),
-      "built-in")
-    reg.createOrReplaceTempFunction(TrigramPredictName,
-      exprs => PredictLang(exprs(0), trigramProfiles, trigram = true),
-      "built-in")
-    reg.createOrReplaceTempFunction(BigramName,
-      exprs => BigramPairs(exprs(0)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    FunctionTable.registerMissing(spark, builders)
 
   def predictWord(text: Column): Column =
     org.apache.spark.sql.functions.call_function(WordPredictName, text)

@@ -320,37 +320,29 @@ object VectorExprs {
   val QuantileName = "graft_quantile_sketch"
   val KmvName = "graft_kmv"
 
+  /** SQL name → builder of each vector expression. */
+  private[graft] val builders: Seq[(String, FunctionTable.Builder)] = Seq(
+    DotName -> (exprs => DotProductFloat(exprs(0), exprs(1))),
+    DotDName -> (exprs => DotProductDouble(exprs(0), exprs(1))),
+    DotLName -> (exprs => DotProductLong(exprs(0), exprs(1))),
+    IntersectName -> (exprs => IntersectCountSorted(exprs(0), exprs(1))),
+    HeavyName -> (exprs => HeavyHitters(exprs(0),
+      k = foldInt(exprs(1)), capacity = foldInt(exprs(2)))
+      .toAggregateExpression()),
+    PairName -> (exprs => PairExpand(exprs(0))),
+    QuantileName -> (exprs => QuantileSketch(exprs(0),
+      percentages = foldDoubles(exprs(1)), capacity = foldInt(exprs(2)))
+      .toAggregateExpression()),
+    KmvName -> (exprs => KmvSketch(exprs(0), k = foldInt(exprs(1)))
+      .toAggregateExpression()))
+
   /** Register the vector expressions in the session's function registry
     * (idempotent). Spark 4 hides Column↔Expression conversion behind
     * `private[sql]`, so the public path to a custom Expression is the
     * registry + `expr("graft_dot_f(a, b)")` / SQL.
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      DotName, exprs => DotProductFloat(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      DotDName, exprs => DotProductDouble(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      DotLName, exprs => DotProductLong(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      IntersectName, exprs => IntersectCountSorted(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      HeavyName, exprs => HeavyHitters(exprs(0),
-        k = foldInt(exprs(1)), capacity = foldInt(exprs(2)))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      PairName, exprs => PairExpand(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      QuantileName, exprs => QuantileSketch(exprs(0),
-        percentages = foldDoubles(exprs(1)), capacity = foldInt(exprs(2)))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      KmvName, exprs => KmvSketch(exprs(0), k = foldInt(exprs(1)))
-        .toAggregateExpression(), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    FunctionTable.registerMissing(spark, builders)
 
   private[graft] def foldDoubles(e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[Double] =
     e.eval(null) match {

@@ -97,8 +97,8 @@ object TextOps {
     */
   def langConfusion(docs: DataFrame): DataFrame = {
     // both classifiers are row-local over the SAME scan — one pass, no
-    // join, each prediction a single codegen'd byte scan ([[registerNative]])
-    registerNative(docs)
+    // join, each prediction a single codegen'd byte scan ([[TextExprs]])
+    graft.functions.TextExprs.register(docs.sparkSession)
     docs.select(
         graft.functions.TextExprs.predictWord(col("text")).as("pred_stopword"),
         graft.functions.TextExprs.predictTrigram(col("text")).as("pred_ngram"))
@@ -326,26 +326,13 @@ object TextOps {
     }
   }
 
-  /** Register the native single-pass text expressions bound to THIS
-    * object's profile constants (idempotent; the [[VectorExprs.register]]
-    * pattern). The HOF column forms ([[predictedLang]],
-    * [[predictedLangNgram]]) remain as the executable semantic contract
-    * the natives are property-tested against (`TextExprsSpec`): the fold
-    * form re-evaluates every per-language score interpreted — measured
-    * 6.0 s for the confusion matrix at sf0.1 local[4] vs sub-second for
-    * the native byte-scan expressions.
-    */
-  private[graft] def registerNative(docs: DataFrame): Unit =
-    graft.functions.TextExprs.register(docs.sparkSession,
-      LangProfiles, TrigramProfiles)
-
   def langScores(w: Column): Seq[(String, Column)] =
     LangProfiles.map { case (lang, markers) =>
       lang -> size(filter(w, x => x.isInCollection(markers)))
     }
 
   def langId(docs: DataFrame): DataFrame = {
-    registerNative(docs)
+    graft.functions.TextExprs.register(docs.sparkSession)
     docs.select(col("doc_id"), col("lang"),
         graft.functions.TextExprs.predictWord(col("text"))
           .as("predicted_lang"))
@@ -416,7 +403,7 @@ object TextOps {
     }
 
   def langIdNgram(docs: DataFrame): DataFrame = {
-    registerNative(docs)
+    graft.functions.TextExprs.register(docs.sparkSession)
     docs.select(col("doc_id"), col("lang"),
       graft.functions.TextExprs.predictTrigram(col("text"))
         .as("predicted_lang"))
@@ -1827,7 +1814,7 @@ object TextOps {
     * explode behind [[bigramLm]] (which drops doc_id and counts) and
     * [[lmScore]] (which joins the induced LM back per doc). */
   def bigrams(docs: DataFrame): DataFrame = {
-    registerNative(docs)
+    graft.functions.TextExprs.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         explode_outer(graft.functions.TextExprs.bigramPairs(col("text")))
@@ -2113,7 +2100,7 @@ object TextOps {
 
   def textRank(docs: DataFrame, iters: Int = TrIters): DataFrame = {
     import graft.functions.Exact
-    registerNative(docs)
+    graft.functions.TextExprs.register(docs.sparkSession)
     val pairs = docs.filter(col("text").isNotNull)
       .select(explode(graft.functions.TextExprs.bigramPairs(col("text")))
         .as("p"))

@@ -1,0 +1,27 @@
+package graft
+package queries
+
+import graft.operators.Similarity
+import Shared.emb
+
+/** The `embed_*` queries: embedding outliers, quantization, PCA and
+  * drift. */
+object EmbedQueries extends QueryFamily("embed") {
+
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("embed_outliers", (s, d) => Similarity.embedOutliers(emb(s, d)),
+      Similarity.sqlEmbedOutliers),
+    QuerySpec("embed_quantize", (s, d) => Similarity.quantize(emb(s, d)), Similarity.sqlQuantize),
+    // the two spectral queries share one pinned covariance + power pass
+    QuerySpec("embed_pca_power", (s, d) =>
+      Similarity.pcaPower(emb(s, d), pre = Some(Similarity.pcaPartsCached(emb(s, d), d))),
+      Similarity.sqlPcaPower),
+    QuerySpec("embed_pca_project", (s, d) =>
+      Similarity.pcaProject(emb(s, d), pre = Some(Similarity.pcaPartsCached(emb(s, d), d))),
+      Similarity.sqlPcaProject),
+    QuerySpec("embed_pca_deflate", (s, d) =>
+      Similarity.pcaDeflate(emb(s, d), pre = Some(Similarity.pcaArtsCached(emb(s, d), d))),
+      Similarity.sqlPcaDeflate),
+    QuerySpec("embed_drift", (s, d) => Similarity.embedDrift(emb(s, d)), Similarity.sqlEmbedDrift),
+  )
+}

@@ -1,0 +1,171 @@
+package graft
+package queries
+
+import org.apache.spark.sql.functions._
+
+import graft.operators.Graph
+
+/** The `graph_*` queries: graph analytics over the customer–supplier and
+  * part co-occurrence graphs. */
+object GraphQueries extends QueryFamily("graph") {
+
+  val specs: Seq[QuerySpec] = Seq(
+    // the distinct customer–supplier pair set is the expensive subtree of
+    // every graph query AND a useful product on its own — both entries
+    // read the shared pinned edge memo, so a suite run builds it once
+    QuerySpec("graph_edges", (s, d) =>
+      Graph.custSuppEdgesCached(
+        Tables.orders(s, d), Tables.lineitem(s, d), d)
+        .orderBy(col("cust"), col("supp")),
+      """SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |ORDER BY cust, supp""".stripMargin),
+    QuerySpec("graph_pagerank", (s, d) =>
+      Graph.pagerankCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlPagerank()),
+    QuerySpec("graph_ppr", (s, d) => Graph.pprCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlPpr()),
+    QuerySpec("graph_katz", (s, d) =>
+      Graph.katzCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlKatz()),
+    QuerySpec("graph_anf", (s, d) => Graph.anfCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlAnf()),
+    QuerySpec("graph_louvain", (s, d) =>
+      Graph.louvainCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlLouvain()),
+    QuerySpec("graph_louvain_coarse", (s, d) =>
+      Graph.louvainCoarseCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlLouvainCoarse()),
+    QuerySpec("graph_louvain_gain", (s, d) =>
+      Graph.louvainGainCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlLouvainGain()),
+    QuerySpec("graph_wpagerank", (s, d) =>
+      Graph.louvainWPagerankCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlLouvainWPagerank()),
+    QuerySpec("graph_louvain_levels", (s, d) =>
+      Graph.louvainLevelsCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlLouvainLevels()),
+    QuerySpec("graph_wkatz", (s, d) =>
+      Graph.louvainWKatzCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlLouvainWKatz()),
+    QuerySpec("graph_louvain_refine", (s, d) =>
+      Graph.louvainRefineCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlLouvainRefine()),
+    QuerySpec("graph_louvain_segments", (s, d) =>
+      Graph.louvainSegmentsCached(
+        Tables.orders(s, d), Tables.lineitem(s, d),
+        Tables.customer(s, d), d),
+      Graph.sqlLouvainSegments()),
+    QuerySpec("graph_hits", (s, d) =>
+      Graph.hitsCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
+      Graph.sqlHits),
+    QuerySpec("graph_components", (s, d) =>
+      Graph.components(
+        Tables.orders(s, d), Tables.lineitem(s, d),
+        labels = Some(Graph.componentLabelsCached(
+          Tables.orders(s, d), Tables.lineitem(s, d), d))),
+      Graph.sqlComponents),
+    // part co-occurrence graph: triangles / degree histogram /
+    // assortativity / BFS share one pinned edge memo (the expensive
+    // basket→pair expansion runs once) AND one pinned degree table
+    QuerySpec("graph_triangles", (s, d) =>
+      Graph.triangleStats(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        Some(Graph.coPartDegreesCached(
+          Tables.lineitem(s, d), d)),
+        commonPre = Some(Graph.coPartCommonCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlTriangleStats),
+    QuerySpec("graph_degrees", (s, d) =>
+      Graph.degreeHistogram(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        Some(Graph.coPartDegreesCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlDegreeHistogram),
+    // both link-score rankings read the ONE pinned intersection pass
+    QuerySpec("graph_common_neighbors", (s, d) =>
+      Graph.commonNeighbors(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        scoredPre = Some(Graph.coPartCommonCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlCommonNeighbors),
+    QuerySpec("graph_link_jaccard", (s, d) =>
+      Graph.linkJaccard(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        scoredPre = Some(Graph.coPartCommonCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlLinkJaccard),
+    QuerySpec("graph_local_cc", (s, d) =>
+      Graph.localClustering(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        scoredPre = Some(Graph.coPartCommonCached(
+          Tables.lineitem(s, d), d)),
+        degPre = Some(Graph.coPartDegreesCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlLocalClustering),
+    QuerySpec("graph_peel", (s, d) =>
+      Graph.peelProfile(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        degPre = Some(Graph.coPartDegreesCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlPeelProfile()),
+    QuerySpec("graph_assortativity", (s, d) =>
+      Graph.assortativity(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        Some(Graph.coPartDegreesCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlAssortativity),
+    QuerySpec("graph_truss", (s, d) =>
+      Graph.trussProfile(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        scoredPre = Some(Graph.coPartCommonCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlTrussProfile()),
+    QuerySpec("graph_richclub", (s, d) =>
+      Graph.richClub(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        scoredPre = Some(Graph.coPartCommonCached(
+          Tables.lineitem(s, d), d)),
+        degPre = Some(Graph.coPartDegreesCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlRichClub),
+    QuerySpec("graph_conductance", (s, d) =>
+      Graph.conductance(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d)),
+      Graph.sqlConductance),
+    // degree-weighted link prediction reads the SAME edge/degree memos
+    // as the other link rankings
+    QuerySpec("graph_adamic_adar", (s, d) =>
+      Graph.adamicAdar(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        scoredPre = Some(Graph.coPartAaCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlAdamicAdar),
+    // both BFS readouts derive from the SHARED seeded distance-frame
+    // memo (Graph.seededLevelsCached) — the level-synchronous join
+    // chain runs once per (session, fixture), not once per query
+    QuerySpec("graph_bfs", (s, d) =>
+      Graph.bfsLevels(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        levelsPre = Some(Graph.seededLevelsCached(
+          Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+          d, Some(Graph.coPartDegreesCached(
+            Tables.lineitem(s, d), d))))),
+      Graph.sqlBfsLevels),
+    QuerySpec("graph_closeness", (s, d) =>
+      Graph.closeness(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        levelsPre = Some(Graph.seededLevelsCached(
+          Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+          d, Some(Graph.coPartDegreesCached(
+            Tables.lineitem(s, d), d))))),
+      Graph.sqlCloseness),
+    QuerySpec("graph_degree_gini", (s, d) =>
+      Graph.degreeGini(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
+        degPre = Some(Graph.coPartDegreesCached(
+          Tables.lineitem(s, d), d))),
+      Graph.sqlDegreeGini),
+  )
+}

@@ -18,6 +18,12 @@ class PlanShapeSpec extends SparkSuite {
     SparkSuite.stripMemoBuild(
       SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString)
 
+  /** The registry sweeps' input: every query outside the stream family
+    * (building those runs real micro-batch pipelines), by name. */
+  private def batchQueries =
+    SparkEntry.all.collect { case (f, q) if f != "stream" => q.name -> q.run }
+      .sortBy(_._1)
+
   test("q2: predicates push down to the parquet scan") {
     val p = plan("q2_filter_project")
     assert(p.contains("PushedFilters:"))
@@ -851,8 +857,7 @@ class PlanShapeSpec extends SparkSuite {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Window => LWindow, WindowGroupLimit}
     val whitelist = Set[String]()
     val offenders = scala.collection.mutable.ListBuffer[String]()
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if !name.startsWith("stream_") && !whitelist(name)) {
+    for ((name, fn) <- batchQueries if !whitelist(name)) {
       val plan = fn(spark, dir).queryExecution.optimizedPlan
       val bad = plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty &&
@@ -896,8 +901,7 @@ class PlanShapeSpec extends SparkSuite {
         true
     }.isDefined
     val offenders = scala.collection.mutable.ListBuffer[String]()
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if !name.startsWith("stream_")) {
+    for ((name, fn) <- batchQueries) {
       val plan = fn(spark, dir).queryExecution.sparkPlan
       val bad = plan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty &&
@@ -918,8 +922,7 @@ class PlanShapeSpec extends SparkSuite {
     // 100× scale-up. Nothing currently plans one; this pins that for
     // every future query.
     val offenders = scala.collection.mutable.ListBuffer[String]()
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if !name.startsWith("stream_")) {
+    for ((name, fn) <- batchQueries) {
       val p = fn(spark, dir).queryExecution.executedPlan.toString
       if (p.contains("CartesianProduct")) offenders += name
     }

@@ -1,7 +1,7 @@
 package graft
 
-/** Smoke: every registered query runs on sf0.001 and returns rows; every
-  * query has an oracle; entry() is non-empty (the driver's t1 gate).
+/** Smoke: every registered query runs on sf0.001 and returns rows; the
+  * registry is consistent; entry() is non-empty (the driver's t1 gate).
   */
 class QueriesSmokeSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -10,12 +10,26 @@ class QueriesSmokeSpec extends SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has a matching oracle — zero waivers") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    // sketch_distinct, the last rows-only entry, is now oracled by
-    // CONTRACT (within-bound booleans the DuckDB side asserts TRUE)
-    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
-      Set.empty[String])
+  test("registry: unique names, declared families, one oracle per query") {
+    val names = SparkEntry.all.map(_._2.name)
+    assert(names.distinct.size == names.size)
+    // the name rule perfbench's query pool still applies
+    def family(n: String) =
+      if (n.matches("q\\d.*")) "q" else n.takeWhile(_ != '_')
+    val misfiled = SparkEntry.all.collect {
+      case (f, q) if family(q.name) != f => s"${q.name} in $f"
+    }
+    assert(misfiled.isEmpty, misfiled.mkString(", "))
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
+
+  test("registry: a name declared twice fails assembly") {
+    val core = graft.queries.CoreQueries
+    val twice = new graft.queries.QueryFamily("q") {
+      def specs = core.specs.take(1)
+    }
+    val e = intercept[IllegalArgumentException](SparkEntry.assemble(Seq(core, twice)))
+    assert(e.getMessage.contains(core.specs.head.name))
   }
 
   for ((name, fn) <- SparkEntry.queries) {

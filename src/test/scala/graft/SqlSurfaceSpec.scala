@@ -32,6 +32,17 @@ class SqlSurfaceSpec extends SparkSuite {
     assert(r.length == 3 && r.forall(_.getDouble(1) > 0))
   }
 
+  test("registering twice keeps every function's first builder") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    graft.functions.VectorExprs.register(spark)
+    graft.functions.VectorExprs.register(spark)
+    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    for ((name, build) <- graft.functions.VectorExprs.builders)
+      assert(reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq build),
+        s"$name was replaced")
+  }
+
   test("graft_dot_l matches the interpreted fold, incl. null and mismatch") {
     graft.functions.VectorExprs.register(spark)
     val r = spark.sql(

@@ -40,7 +40,7 @@ class TextExprsSpec extends SparkSuite {
   private def df(rows: List[Option[String]]): DataFrame = {
     val d = rows.zipWithIndex.map { case (t, i) => (i.toLong, t.orNull) }
       .toDF("doc_id", "text")
-    TextOps.registerNative(d)
+    TextExprs.register(spark)
     d
   }
 
@@ -111,7 +111,7 @@ class TextExprsSpec extends SparkSuite {
   test("expressions stay inside whole-stage codegen (no CodegenFallback)") {
     // range → project: a LocalTableScan would constant-fold the whole
     // frame away, so drive the expressions from a real operator chain
-    TextOps.registerNative(spark.range(4).toDF("id"))
+    TextExprs.register(spark)
     val plan = spark.range(4)
       .select(concat(lit("the table "), col("id")).as("text"))
       .select(TextExprs.predictWord(col("text")),
