@@ -19,6 +19,35 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** Runs each named registry query on the fixture in `sfDir` and writes
+    * its result as one parquet file under `outDir/<name>`. Returns the
+    * names of the queries that threw; each failure is printed to stderr.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Seq[String] =
+    // sorted, not Map order: adding a query to the immutable Map reshuffles
+    // its iteration order, which changes the ORDER session state is
+    // exercised in between rounds — sorted execution keeps the gate's
+    // run order stable as the suite grows
+    names.sorted.flatMap { name =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
+
+  /** Every query's oracle SQL as `outDir/oracle_sql.json`, the input of
+    * `tools/check.py`. */
+  def writeOracleSql(outDir: String): Unit = {
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing query names: dump only that subset (local iteration;
@@ -33,25 +62,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // sorted, not Map order: adding a query to the immutable Map reshuffles
-    // its iteration order, which changes the ORDER session state is
-    // exercised in between rounds — sorted execution keeps the gate's
-    // run order stable as the suite grows
-    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .flatMap { case (name, fn) =>
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          None
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
-        }
-      }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.queries.keys.filter(n => only.isEmpty || only(n)).toSeq)
+    writeOracleSql(outDir)
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(

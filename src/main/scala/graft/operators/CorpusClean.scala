@@ -86,10 +86,8 @@ object CorpusClean {
         col("n_tokens"), col("quality_score"))
       .orderBy(col("doc_id"))
 
-  def clean(docs: DataFrame): DataFrame =
-    cleanSelect(cleanArtifacts(docs, Dedup.minhashBands(docs)))
-
-  /** [[clean]] through the per-(session, key) artifact memo. */
+  /** The cleaned corpus (doc_id, lang, predicted_lang, n_tokens,
+    * quality_score), read from the per-(session, key) artifact memo. */
   def cleanCached(docs: DataFrame, cacheKey: String): DataFrame =
     cleanSelect(cleanArtifactsCached(docs, cacheKey))
 
@@ -148,7 +146,7 @@ object CorpusClean {
   /** Stage-attrition funnel of the cleaning pipeline: documents counted
     * at each gate (raw → quality pass → exact-dup survivor → near-dup
     * survivor) — the "where did my corpus go" report every cleaning run
-    * publishes. Counts the SAME pinned stage frames [[clean]] consumes,
+    * publishes. Counts the SAME pinned stage frames [[cleanCached]] reads,
     * so the report can never disagree with the pipeline it describes.
     */
   def funnelFrom(docs: DataFrame, a: CleanArtifacts): DataFrame =
@@ -161,10 +159,7 @@ object CorpusClean {
       .reduce(_.unionByName(_))
       .orderBy(col("stage"))
 
-  def funnel(docs: DataFrame): DataFrame =
-    funnelFrom(docs, cleanArtifacts(docs, Dedup.minhashBands(docs)))
-
-  /** [[funnel]] through the per-(session, key) artifact memo. */
+  /** [[funnelFrom]] through the per-(session, key) artifact memo. */
   def funnelCached(docs: DataFrame, cacheKey: String): DataFrame =
     funnelFrom(docs, cleanArtifactsCached(docs, cacheKey))
 

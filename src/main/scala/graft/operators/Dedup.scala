@@ -457,16 +457,13 @@ object Dedup {
     * production reads this before retuning bands/rows on the real corpus.
     *
     * Scale shape: the pair frame is already LSH-bounded; each side joins
-    * the per-doc sorted shingle sets once (doc-keyed hash joins), the
-    * intersection is the codegen'd linear merge walk, and the histogram
-    * is one ≤10-group aggregate. Nothing is all-pairs.
+    * the per-doc sorted shingle sets (`sets`, the [[shingleSets]] frame)
+    * once (doc-keyed hash joins), the intersection is the codegen'd
+    * linear merge walk, and the histogram is one ≤10-group aggregate.
+    * Nothing is all-pairs.
     */
-  def bandCalibration(pairs: DataFrame, docs: DataFrame,
-      setsPre: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VectorExprs.register(docs.sparkSession)
-    // the sorted-distinct set chain is [[shingleSets]] — callers with a
-    // memoized frame pass it (shared with decon_minhash/containment)
-    val sets = setsPre.getOrElse(shingleSets(docs))
+  def bandCalibration(pairs: DataFrame, sets: DataFrame): DataFrame = {
+    graft.functions.VectorExprs.register(pairs.sparkSession)
     pairs
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
         Seq("doc_a"))
@@ -526,12 +523,8 @@ object Dedup {
     */
   val SweepThresholds: Seq[Int] = Seq(50, 60, 70, 80, 90) // percent
 
-  def thresholdSweep(pairs: DataFrame, docs: DataFrame,
-      setsPre: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VectorExprs.register(docs.sparkSession)
-    // the sorted-distinct set chain is [[shingleSets]] — callers with a
-    // memoized frame pass it (shared with decon_minhash/containment)
-    val sets = setsPre.getOrElse(shingleSets(docs))
+  def thresholdSweep(pairs: DataFrame, sets: DataFrame): DataFrame = {
+    graft.functions.VectorExprs.register(pairs.sparkSession)
     val jr = pairs
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
         Seq("doc_a"))
@@ -543,7 +536,7 @@ object Dedup {
           .as("i"),
         (size(col("sha")) + size(col("shb"))).cast("double").as("ab"))
       .select((col("i") / (col("ab") - col("i"))).as("j"))
-    val ts = docs.sparkSession.range(1)
+    val ts = pairs.sparkSession.range(1)
       .select(explode(array(SweepThresholds.map(t => lit(t.toLong)): _*))
         .as("t_pct"))
     val total = jr.agg(count(lit(1)).as("n_candidates"))
@@ -616,13 +609,9 @@ object Dedup {
   private def sqlPowExplicit(x: String, n: Int): String =
     Seq.fill(n)(s"($x)").mkString(" * ")
 
-  def scurve(pairs: DataFrame, docs: DataFrame,
-      setsPre: Option[DataFrame] = None): DataFrame = {
+  def scurve(pairs: DataFrame, sets: DataFrame): DataFrame = {
     import graft.functions.Exact
-    graft.functions.VectorExprs.register(docs.sparkSession)
-    // the sorted-distinct set chain is [[shingleSets]] — callers with a
-    // memoized frame pass it (shared with decon_minhash/containment)
-    val sets = setsPre.getOrElse(shingleSets(docs))
+    graft.functions.VectorExprs.register(pairs.sparkSession)
     val jr = pairs
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
         Seq("doc_a"))
@@ -794,7 +783,7 @@ object Dedup {
     * can oscillate on bipartite-ish structures, and a fixed unroll is
     * exactly mirrorable in the oracle's CTE chain. Per round: ONE
     * edges⋈labels hash join + ONE (dst, label) count aggregate + ONE
-    * per-dst argmax — the [[Graph.pagerank]] round shape with an argmax
+    * per-dst argmax — the [[Graph.pagerankCached]] round shape with an argmax
     * in place of the mass sum; the same `Iterate.pin` every-third-round
     * lineage discipline applies for deep k.
     */
@@ -1304,20 +1293,15 @@ object Dedup {
     * near-duplicate clusters of that size the corpus carries — the
     * one-page answer to "is duplication a few giant boilerplate clusters
     * or a long tail of pairs?", which decides whether canonical selection
-    * ([[canonical]]) or plain victim-dropping is the right keep policy.
-    * Composes [[connectedComponents]] over [[minhashPairs]]; only docs
-    * that appear in some pair are clustered (singletons are not
+    * ([[canonicalFrom]]) or plain victim-dropping is the right keep policy.
+    * `comp` is the (doc_id, component) frame of [[connectedComponents]]
+    * over [[minhashPairs]] (the [[ClusterArtifacts]] composition point);
+    * only docs that appear in some pair are clustered (singletons are not
     * "clusters of 1" here, matching the components contract).
     *
     * Scale shape: the component frame is |clustered docs| rows — tiny
     * versus the corpus — and both follow-up aggregations are integer-only
     * hash aggs over it (no float, no window, no new corpus pass).
-    */
-  def clusterStats(docs: DataFrame): DataFrame =
-    clusterStatsFrom(connectedComponents(minhashPairs(docs)))
-
-  /** [[clusterStats]] over an already-computed (doc_id, component) frame —
-    * the [[ClusterArtifacts]] composition point.
     */
   def clusterStatsFrom(comp: DataFrame): DataFrame =
     comp
@@ -1352,13 +1336,8 @@ object Dedup {
     * co-partitioning is not assumed; the window repartitions only the
     * clustered slice... the full frame windows on `component`, which
     * after the coalesce is corpus-wide — one exchange, same as any
-    * groupBy(component)).
-    */
-  def canonical(docs: DataFrame): DataFrame =
-    canonicalFrom(docs, connectedComponents(minhashPairs(docs)))
-
-  /** [[canonical]] over an already-computed (doc_id, component) frame —
-    * the [[ClusterArtifacts]] composition point.
+    * groupBy(component)). `comp` is the (doc_id, component) frame of
+    * [[connectedComponents]] — the [[ClusterArtifacts]] composition point.
     */
   def canonicalFrom(docs: DataFrame, comp: DataFrame): DataFrame = {
     val withComp = docs.select(col("doc_id"), col("n_chars"))
@@ -1445,22 +1424,18 @@ object Dedup {
     * every document in a duplicate cluster of size n gets sampling weight
     * 1/n, so the cluster contributes one document's worth of training
     * mass while keeping its (possibly differently-noised) variants
-    * available. This is the keep-policy alternative to [[canonical]] for
+    * available. This is the keep-policy alternative to [[canonicalFrom]] for
     * corpora where duplicates carry complementary signal; the weight
     * column feeds [[graft.operators.TrainingData.weightedSample]]
     * directly. Docs in no pair form their own cluster (weight 1.0).
     *
-    * Scale shape: identical to [[canonical]] — the component frame is
+    * Scale shape: identical to [[canonicalFrom]] — the component frame is
     * |clustered docs| rows, the corpus joins it hash-partitioned on
     * doc_id, and the cluster-size count is one window exchange keyed by
     * component. Weight is 1/n in exact double arithmetic (integer
-    * operands — both engines emit the identical quotient).
-    */
-  def softWeights(docs: DataFrame): DataFrame =
-    softWeightsFrom(docs, connectedComponents(minhashPairs(docs)))
-
-  /** [[softWeights]] over an already-computed (doc_id, component) frame —
-    * the [[ClusterArtifacts]] composition point.
+    * operands — both engines emit the identical quotient). `comp` is the
+    * (doc_id, component) frame of [[connectedComponents]] — the
+    * [[ClusterArtifacts]] composition point.
     */
   def softWeightsFrom(docs: DataFrame, comp: DataFrame): DataFrame = {
     docs.select(col("doc_id"))
@@ -1665,43 +1640,24 @@ object Dedup {
     */
   val JaccardMaxBlock = 100
 
-  /** @param setsPre the (doc_id, sh) sorted-distinct shingle sets, if the
-    *                 caller already holds them ([[shingleSetsCached]] — its
-    *                 `sh` IS this operator's `sh` column, filter included);
-    *                 the blocking keys (lang, n_chars) re-attach via one
-    *                 doc_id-keyed inner join against the raw scan, which is
-    *                 exactly the memo's exclusion of sub-ShingleK docs.
-    *                 CONTRACT: doc_id is a non-null key (the fixture
-    *                 schema's primary key). The inner join would silently
-    *                 drop a NULL-doc_id row that the standalone route
-    *                 would block and pair — if a corpus with NULL doc_ids
-    *                 ever ships, add isnotnull(doc_id) to BOTH routes
-    *                 before composing over the memo.
+  /** @param sets the (doc_id, sh) sorted-distinct shingle sets of
+    *             [[shingleSets]]; the blocking keys (lang, n_chars)
+    *             re-attach via one doc_id-keyed inner join against the
+    *             raw scan, which also drops the sub-ShingleK docs the sets
+    *             exclude. doc_id must be non-null (the fixture schema's
+    *             primary key): the inner join drops a NULL-doc_id row.
     */
-  def ngramJaccard(docs: DataFrame,
-      setsPre: Option[DataFrame] = None): DataFrame = {
+  def ngramJaccard(docs: DataFrame, sets: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
     // `div` (integer division) — Spark's double `/`+cast truncates while
     // DuckDB's CAST(double AS BIGINT) rounds; `div` ↔ `//` agree exactly.
     // Shingle-hash sets are sorted ONCE per row so the per-pair intersection
     // is a codegen'd linear merge walk (IntersectCountSorted) — no hash set
     // or result-array allocation inside the pair loop.
-    val withSets = setsPre match {
-      case Some(sets) => docs
-        .select(col("doc_id"), col("lang"),
-          expr(s"n_chars div $JaccardBlockChars").as("bucket"))
-        .join(sets, Seq("doc_id"))
-      case None => docs
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          words(col("text")).as("w"))
-        .filter(size(col("w")) >= ShingleK) // see minhashBands: no NULL shingles
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          wordHashes(col("w")).as("wh"))
-        .select(col("doc_id"), col("lang"),
-          expr(s"n_chars div $JaccardBlockChars").as("bucket"),
-          array_sort(array_distinct(shingleHashes(col("wh"), ShingleK)))
-            .as("sh"))
-    }
+    val withSets = docs
+      .select(col("doc_id"), col("lang"),
+        expr(s"n_chars div $JaccardBlockChars").as("bucket"))
+      .join(sets, Seq("doc_id"))
     // Oversized-block sub-split (see JaccardMaxBlock): block sizes come
     // from ONE window count over the same (lang, bucket) key the groupBy
     // shuffles on; rows in oversized blocks swap in a minhash band as the
@@ -2105,17 +2061,13 @@ object Dedup {
   val EditPrefix = 64
   val EditMaxDist = 24
 
-  /** @param pairsPre the LSH candidate pairs, if the caller already holds
-    *                  them (the [[ClusterArtifacts]] memo — `arts.pairs` is
-    *                  row-identical to [[minhashPairs]] minus its ordering,
-    *                  which the joins below discard anyway); `None` re-runs
-    *                  the band pipeline for standalone corpora.
+  /** @param pairs the LSH candidate pairs of [[minhashPairs]] (its
+    *              ordering is discarded by the joins below).
     */
-  def editPairs(docs: DataFrame,
-      pairsPre: Option[DataFrame] = None): DataFrame = {
+  def editPairs(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val prefixes = docs.select(col("doc_id"),
       substring(col("text"), 1, EditPrefix).as("prefix"))
-    pairsPre.getOrElse(minhashPairs(docs))
+    pairs
       .join(prefixes.select(col("doc_id").as("doc_a"),
         col("prefix").as("pa")), Seq("doc_a"))
       .join(prefixes.select(col("doc_id").as("doc_b"),

@@ -96,16 +96,11 @@ object Graph {
     * |components|-group aggregate over the |V|-row label frame. Output is
     * |components| rows — at 100 TB this is the audit that tells you
     * whether the transaction graph is one giant component (it usually
-    * is) BEFORE you pay for per-component processing.
+    * is) BEFORE you pay for per-component processing. `labels` is the
+    * (doc_id, component) frame of [[componentLabelsCached]].
     */
-  def components(orders: DataFrame, lineitem: DataFrame,
-      pre: Option[DataFrame] = None,
-      labels: Option[DataFrame] = None): DataFrame =
-    labels.getOrElse {
-      val edges = pre.getOrElse(custSuppEdges(orders, lineitem))
-      Dedup.connectedComponents(edges.select(col("cust").as("doc_a"),
-        (col("supp") + SuppBase).as("doc_b")))
-    }
+  def components(labels: DataFrame): DataFrame =
+    labels
       .groupBy(col("component"))
       .agg(
         count(lit(1)).as("n_nodes"),
@@ -143,17 +138,6 @@ object Graph {
        |FROM comp GROUP BY component
        |ORDER BY n_nodes DESC, component""".stripMargin
 
-  /** PageRank over the undirected bipartite graph (every node has deg ≥ 1,
-    * so there is no dangling mass). Returns the top-`PrTopK` nodes by final
-    * rank: (rk, node_id, rank).
-    */
-  def pagerank(orders: DataFrame, lineitem: DataFrame,
-               iters: Int = PrIters): DataFrame =
-    // pin the DISTINCT pair set (the orders⋈lineitem heavy subtree) and
-    // derive both directions from the pinned blocks — pinning after the
-    // union would run the join+distinct once per union branch first
-    pagerankFrom(Iterate.pin(custSuppEdges(orders, lineitem)), iters)
-
   /** Both directions of the bipartite edge set in the offset id space. */
   private def directedEdges(e0: DataFrame): DataFrame = e0
     .select(col("cust").as("src"), (col("supp") + SuppBase).as("dst"))
@@ -163,12 +147,8 @@ object Graph {
   /** Directed-edge-row cap per shuffle partition of the iterative edge
     * memo. 2M rows ≈ 32 MB of (long, long) pairs plus join-side
     * amplification — comfortably in-memory per task, far from the
-    * 2 GB shuffle-block wall. SPARK_GRAFT_EDGE_ROWS_PER_PART overrides
-    * for the scaling audit's A/B (a huge value forces the pre-round-10
-    * fixed session width). */
-  val EdgeRowsPerPartition: Long = sys.env
-    .get("SPARK_GRAFT_EDGE_ROWS_PER_PART").map(_.toLong)
-    .getOrElse(2000000L)
+    * 2 GB shuffle-block wall. */
+  val EdgeRowsPerPartition = 2000000L
 
   /** Shuffle width for the |E|-row edge memo, derived from the measured
     * edge count the way `nswTierMods` derives the tier ladder from |V|:
@@ -214,14 +194,10 @@ object Graph {
     deg.crossJoin(broadcast(deg.agg(count(lit(1)).as("n"))))
   }
 
-  /** [[pagerank]] from an already-pinned distinct (cust, supp) edge frame
-    * — the [[custSuppEdgesCached]] composition point.
-    */
-  def pagerankFrom(e0: DataFrame, iters: Int = PrIters): DataFrame =
-    pagerankRounds(directedEdges(e0), degWithN(directedEdges(e0)), iters)
-
-  /** [[pagerankFrom]] with the directed edge frame AND the degree/|V|
-    * table pinned in the per-(session, dir) memo: the rank rounds re-read
+  /** PageRank over the undirected bipartite graph (every node has deg ≥ 1,
+    * so there is no dangling mass). Returns the top-`PrTopK` nodes by final
+    * rank: (rk, node_id, rank). The directed edge frame AND the degree/|V|
+    * table are pinned in the per-(session, dir) memo: the rank rounds re-read
     * both frames (edges once per round, deg at round 0 and for the final
     * top-k), and without the pin each reference re-runs the union +
     * degree shuffle — measured ~4.2 s → the pin drops the per-query cost
@@ -319,100 +295,32 @@ object Graph {
       degrees(coPartEdgesCached(lineitem, cacheKey)))
 
   /** Node degrees of the undirected (pa < pb) edge frame. */
-  private def degrees(edges: DataFrame): DataFrame =
+  private[graft] def degrees(edges: DataFrame): DataFrame =
     edges.select(col("pa").as("id"))
       .unionByName(edges.select(col("pb").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
 
-  /** Global triangle census by degree-ordered orientation (Schank &
-    * Wagner, "Finding, counting and listing all triangles in large
-    * graphs", WEA 2005; the compact-forward scheme of Latapy 2008): orient
-    * every edge from its lower to its higher endpoint in (deg, id) order,
-    * emit each node's out-neighbor pairs as wedges, and count wedges
-    * closed by an oriented edge. Every triangle is counted exactly once —
-    * at its minimum-(deg, id) corner.
-    *
-    * Why this survives 100 TB while the naive 3-way edge self-join does
-    * not: oriented out-degree is bounded by O(√m) on any graph (each
-    * out-neighbor has degree ≥ the node's own), so the wedge set is
-    * O(m^1.5) worst-case and near-linear on power-law graphs — hub nodes
-    * of degree d contribute NO wedges at their own apex beyond pairs of
-    * even-higher-degree neighbors. The count itself runs as the per-edge
-    * sorted-adjacency intersection (see the inline note), so the wedge
-    * set is never materialized or shuffled. The oracle mirrors the
-    * orientation with tuple-comparison joins.
-    *
-    * Output (1 row): node/edge counts, undirected wedge count
+  /** Global triangle census: node/edge counts, undirected wedge count
     * Σ deg·(deg−1)/2, triangle count, and the global clustering
     * coefficient 3·T / W — integer arithmetic end-to-end except the single
     * final IEEE division (bit-stable cross-engine).
+    *
+    * The census is a 1-row aggregate over the per-edge common-neighbor
+    * pass (`common`, [[coPartCommonCached]] — common_neighbors /
+    * link_jaccard / local_cc / truss / richclub read the same frame):
+    * each undirected edge's n_common counts the triangles through that
+    * edge, so Σ n_common = 3T exactly. That pass never materializes
+    * wedges (see [[edgeCommonCounts]]), so the census adds no heavy
+    * subtree of its own. The oracle counts the same triangles by
+    * degree-ordered orientation (Schank & Wagner, WEA 2005): every
+    * triangle once, at its minimum-(deg, id) corner.
     */
-  def triangleStats(edges: DataFrame,
-      degPre: Option[DataFrame] = None,
-      commonPre: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VectorExprs.register(edges.sparkSession)
-    val deg = degPre.getOrElse(degrees(edges))
-    // SCALE.md trade-off, now a runtime switch: the sorted-adjacency table
-    // is |V| rows and broadcasts by default; past the broadcast threshold
-    // set spark.graft.triangles.broadcastAdj=false and the SAME plan runs
-    // with hash-partitioned joins on src then dst (two |E|-row exchanges
-    // instead of two broadcasts). Both modes are PlanShapeSpec-pinned.
-    val adjBcast = edges.sparkSession.conf
-      .getOption("spark.graft.triangles.broadcastAdj").forall(_.toBoolean)
-    def adjSide(df: DataFrame): DataFrame =
-      if (adjBcast) broadcast(df) else df
-    val da = deg.select(col("id").as("pa"), col("deg").as("da"))
-    val db = deg.select(col("id").as("pb"), col("deg").as("db"))
-    val oriented = edges.join(da, Seq("pa")).join(db, Seq("pb"))
-      .select(
-        when(struct(col("da"), col("pa")) < struct(col("db"), col("pb")),
-          struct(col("pa").as("src"), col("pb").as("dst"),
-            col("db").as("dd")))
-          .otherwise(struct(col("pb").as("src"), col("pa").as("dst"),
-            col("da").as("dd"))).as("e"))
-      .select(col("e.src"), col("e.dst"), col("e.dd"))
-    // edge-iterator with sorted out-adjacency (the per-edge intersection
-    // scheme of Chiba & Nishizeki 1985 under the degree orientation): for
-    // each oriented edge (u, v), triangles at that edge = |N⁺(u) ∩ N⁺(v)|.
-    // Co-occurrence graphs are DENSE (avg degree ~100 on the fixtures), so
-    // the wedge set is tens of millions of rows — an explicit wedge
-    // self-join would shuffle all of them into the closing probe. The
-    // intersection form never materializes wedges: the adjacency table is
-    // |V| rows (one bounded array each, out-degree ≤ O(√m)) and rides as a
-    // broadcast to both endpoint lookups, so the |E|-row edge frame is
-    // probed map-side and only per-edge COUNTS aggregate. (At graphs where
-    // |V| outgrows a broadcast, swap the two broadcast hints for
-    // hash-partitioned joins on u then v — same plan shape, two |E|-row
-    // exchanges; SCALE.md "Known trade-offs".)
-    // When the per-edge common-neighbor pass is already memoized
-    // ([[coPartCommonCached]] — common_neighbors / link_jaccard /
-    // local_cc / truss / richclub all read it), the triangle census is a
-    // 1-row aggregate over it: each undirected edge's n_common counts the
-    // triangles through that edge, so Σ n_common = 3T exactly (integer
-    // division is exact; empty sum coalesces to 0). This replaces the
-    // per-call pinned orientation + sorted-adjacency rebuild — zero new
-    // heavy subtrees on the shared-memo route; the oriented edge-iterator
-    // below stays for standalone edge frames.
-    val tri = commonPre match {
-      case Some(c) =>
-        // integer `div`, not IEEE `/`: 3T stays a BIGINT end-to-end
-        c.agg(coalesce(sum(col("n_common")), lit(0L)).as("s3"))
-          .select(expr("s3 div 3").cast("long").as("n_triangles"))
-      case None =>
-        val o = Iterate.pin(oriented)
-        val adj = o.groupBy(col("src"))
-          .agg(sort_array(collect_list(col("dst"))).as("ns"))
-        o.select(col("src"), col("dst"))
-          .join(adjSide(adj.select(col("src"), col("ns").as("nu"))),
-            Seq("src"))
-          .join(adjSide(adj.select(col("src").as("dst"), col("ns").as("nv"))),
-            Seq("dst"))
-          .select(size(array_intersect(col("nu"), col("nv"))).as("k"))
-          // triangle-free graphs can drop EVERY edge row at the inner
-          // joins (a sink node has no adjacency entry) — sum over zero
-          // rows is NULL, the census says 0
-          .agg(coalesce(sum(col("k")), lit(0L)).as("n_triangles"))
-    }
+  def triangleStats(edges: DataFrame, deg: DataFrame,
+      common: DataFrame): DataFrame = {
+    // integer `div`, not IEEE `/`: 3T stays a BIGINT end-to-end (an
+    // empty sum coalesces to 0)
+    val tri = common.agg(coalesce(sum(col("n_common")), lit(0L)).as("s3"))
+      .select(expr("s3 div 3").cast("long").as("n_triangles"))
     // deg·(deg−1) is even, so the halving is the exact integer shift —
     // never a double division whose sum could round past 2^53
     val nodeStats = deg.agg(count(lit(1)).as("n_nodes"),
@@ -431,9 +339,8 @@ object Graph {
     * Output cardinality is O(log |V|) regardless of corpus size — the
     * bounded-output discipline every 100 TB profiling query follows.
     */
-  def degreeHistogram(edges: DataFrame,
-      degPre: Option[DataFrame] = None): DataFrame =
-    degPre.getOrElse(degrees(edges))
+  def degreeHistogram(deg: DataFrame): DataFrame =
+    deg
       .select((length(conv(col("deg").cast("string"), 10, 2)) - 1)
         .cast("long").as("bin"))
       .groupBy(col("bin"))
@@ -454,7 +361,7 @@ object Graph {
   /** Frontier BFS level profile (the level-synchronous BFS of Beamer's
     * direction-optimizing formulation, top-down half): per level, the
     * newly-reached node count — reachability with distance, the third
-    * iterative-dataflow shape beside [[pagerankFrom]] (value propagation)
+    * iterative-dataflow shape beside [[pagerankCached]] (value propagation)
     * and [[Dedup.connectedComponents]] (label convergence).
     *
     * Scale shape per level: frontier ⋈ edges on the frontier key (the
@@ -476,10 +383,10 @@ object Graph {
     * graph_closeness per pass — runs once per (session, fixture).
     */
   def seededLevels(edges: DataFrame,
-      degPre: Option[DataFrame] = None): DataFrame = {
+      deg: DataFrame): DataFrame = {
     val und = edges.select(col("pa").as("u"), col("pb").as("v"))
       .unionByName(edges.select(col("pb").as("u"), col("pa").as("v")))
-    val seeds = degPre.getOrElse(degrees(edges))
+    val seeds = deg
       .select(col("id")).filter(col("id") < BfsSeeds)
       .select(col("id").as("seed"))
     var frontier = seeds.select(col("seed"), col("seed").as("id"))
@@ -509,23 +416,20 @@ object Graph {
   /** [[seededLevels]] memoized per (session, key) — the composition
     * point graph_bfs and graph_closeness share. */
   def seededLevelsCached(edges: DataFrame, cacheKey: String,
-      degPre: Option[DataFrame] = None): DataFrame =
+      deg: DataFrame): DataFrame =
     cachedPin(edges.sparkSession, s"seededlevels:$cacheKey")(
-      seededLevels(edges, degPre))
+      seededLevels(edges, deg))
 
-  def bfsLevels(edges: DataFrame,
-      degPre: Option[DataFrame] = None,
-      levelsPre: Option[DataFrame] = None): DataFrame = {
-    val lv = levelsPre.getOrElse(seededLevels(edges, degPre))
+  def bfsLevels(levels: DataFrame): DataFrame = {
     // multi-source BFS distance = min over seeds of the labeled
     // distance (the seed-set frontier reaches a node when its CLOSEST
     // seed does); the level census is the count per that minimum, with
     // unreached levels zero-filled exactly like the loop form's empty
     // frontier count
-    val minl = lv.groupBy(col("id")).agg(min(col("level")).as("ml"))
+    val minl = levels.groupBy(col("id")).agg(min(col("level")).as("ml"))
     val counts = minl.groupBy(col("ml"))
       .agg(count(lit(1)).as("cnt"))
-    edges.sparkSession.range(0, BfsLevels + 1L)
+    levels.sparkSession.range(0, BfsLevels + 1L)
       .select(col("id").as("level"))
       .join(broadcast(counts), col("level") === col("ml"), "left")
       .select(col("level"), coalesce(col("cnt"), lit(0L)).as("n_reached"))
@@ -577,14 +481,11 @@ object Graph {
     * to tighten the Eppstein-Wang bound widens ONLY the frontier frame —
     * the level count, not the seed count, sets the job chain length.
     */
-  def closeness(edges: DataFrame,
-      degPre: Option[DataFrame] = None,
-      levelsPre: Option[DataFrame] = None): DataFrame = {
-    val lv = levelsPre.getOrElse(seededLevels(edges, degPre))
-    var out = lv.filter(col("level") === 0).select(col("seed"))
+  def closeness(levels: DataFrame): DataFrame = {
+    var out = levels.filter(col("level") === 0).select(col("seed"))
     for (l <- 1 to BfsLevels) {
       out = out.join(
-        broadcast(lv.filter(col("level") === l)
+        broadcast(levels.filter(col("level") === l)
           .groupBy(col("seed")).agg(count(lit(1)).as(s"n$l"))),
         Seq("seed"), "left")
     }
@@ -652,9 +553,7 @@ object Graph {
     * the edge frame + one broadcast-degree join: no shuffle beyond the
     * degree aggregation.
     */
-  def assortativity(edges: DataFrame,
-      degPre: Option[DataFrame] = None): DataFrame = {
-    val deg = degPre.getOrElse(degrees(edges))
+  def assortativity(edges: DataFrame, deg: DataFrame): DataFrame = {
     val da = deg.select(col("id").as("pa"), col("deg").as("da"))
     val db = deg.select(col("id").as("pb"), col("deg").as("db"))
     val both = edges.join(broadcast(da), Seq("pa"))
@@ -727,14 +626,14 @@ object Graph {
     * iterative lineage never deepens. The per-round stats are 1-row
     * aggregates unioned at the end; nothing collects to the driver.
     */
-  def peelProfile(edges: DataFrame, k: Int = PeelK,
-      rounds: Int = PeelRounds,
-      degPre: Option[DataFrame] = None): DataFrame = {
+  def peelProfile(edges: DataFrame, deg: DataFrame, k: Int = PeelK,
+      rounds: Int = PeelRounds): DataFrame = {
     // round 0's stats and round 1's keep-set both read the INTACT graph's
-    // degree table — the one the shared co-part memo already pinned;
-    // later rounds recompute on the shrunken frames (inherent to peeling)
+    // degree table `deg` — the one the shared co-part memo already
+    // pinned; later rounds recompute on the shrunken frames (inherent to
+    // peeling)
     def degOf(e: DataFrame, r: Int): DataFrame =
-      if (r == 0) degPre.getOrElse(degrees(e)) else degrees(e)
+      if (r == 0) deg else degrees(e)
     def stats(e: DataFrame, r: Int): DataFrame =
       degOf(e, r).agg(count(lit(1)).as("n_nodes"))
         .crossJoin(broadcast(e.agg(count(lit(1)).as("n_edges"))))
@@ -844,7 +743,7 @@ object Graph {
   /** Sorted FULL adjacency (u, ns) of the undirected co-occurrence graph
     * — |V| rows of bounded arrays, the reusable neighborhood artifact.
     */
-  private def fullAdjacency(edges: DataFrame): DataFrame =
+  private[graft] def fullAdjacency(edges: DataFrame): DataFrame =
     edges.select(col("pa").as("u"), col("pb").as("v"))
       .unionByName(edges.select(col("pb").as("u"), col("pa").as("v")))
       .groupBy(col("u"))
@@ -886,13 +785,10 @@ object Graph {
     * the trajectory oracle-able (production iterates the same plan to
     * convergence).
     */
-  def trussProfile(edges: DataFrame,
-      scoredPre: Option[DataFrame] = None,
-      k: Int = TrussK, rounds: Int = TrussRounds): DataFrame = {
-    def support(e: DataFrame, r: Int): DataFrame =
-      (if (r == 0 && scoredPre.isDefined) scoredPre.get
-       else edgeCommonCounts(e, fullAdjacency(e)))
-        .select(col("pa"), col("pb"), col("n_common").as("sup"))
+  def trussProfile(scored: DataFrame, k: Int = TrussK,
+      rounds: Int = TrussRounds): DataFrame = {
+    def support(counts: DataFrame): DataFrame =
+      counts.select(col("pa"), col("pb"), col("n_common").as("sup"))
     def stats(sup: DataFrame, r: Int): DataFrame =
       sup.agg(count(lit(1)).as("n_edges"),
         coalesce(sum(when(col("sup") < k - 2, 1L).otherwise(0L)), lit(0L))
@@ -901,12 +797,12 @@ object Graph {
         coalesce(max(col("sup")), lit(0L)).as("support_max"))
         .select(lit(r.toLong).as("round"), col("n_edges"), col("n_below"),
           col("support_sum"), col("support_max"))
-    var sup = support(edges, 0)
+    var sup = support(scored)
     var out = stats(sup, 0)
     for (r <- 1 to rounds) {
       val e = Iterate.pin(sup.filter(col("sup") >= k - 2)
         .select(col("pa"), col("pb")))
-      sup = support(e, r)
+      sup = support(edgeCommonCounts(e, fullAdjacency(e)))
       out = out.unionByName(stats(sup, r))
     }
     out.orderBy(col("round"))
@@ -964,10 +860,8 @@ object Graph {
     * (the events_gini double-bucket machinery is unnecessary here), and
     * the two closing divisions are the only doubles.
     */
-  def degreeGini(edges: DataFrame,
-      degPre: Option[DataFrame] = None): DataFrame = {
+  def degreeGini(deg: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val deg = degPre.getOrElse(degrees(edges))
     val g = deg.groupBy(col("deg")).agg(count(lit(1)).as("c"))
     val w = Window.orderBy(col("deg"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1025,13 +919,8 @@ object Graph {
     * memo. Both group on the 4-row cutoff dimension; φ is one division
     * of exact integers.
     */
-  def richClub(edges: DataFrame,
-      scoredPre: Option[DataFrame] = None,
-      degPre: Option[DataFrame] = None): DataFrame = {
-    val scored = scoredPre.getOrElse(
-      edgeCommonCounts(edges, fullAdjacency(edges)))
-    val deg = degPre.getOrElse(degrees(edges))
-    val kdf = edges.sparkSession.range(1)
+  def richClub(scored: DataFrame, deg: DataFrame): DataFrame = {
+    val kdf = deg.sparkSession.range(1)
       .select(explode(array(RcThresholds.map(lit(_)): _*)).as("kd"))
     val nRich = deg.crossJoin(broadcast(kdf))
       .filter(col("deg") > col("kd"))
@@ -1074,31 +963,29 @@ object Graph {
        |ORDER BY deg_threshold""".stripMargin
   }
 
-  /** Top edges by common-neighbor count |N(u) ∩ N(v)| — the classic
-    * link-prediction / edge-strength score (per-edge triangle support
-    * over FULL neighborhoods, vs [[triangleStats]]' oriented census).
-    * "Parts that co-occur with many of the same parts" is the
-    * recommendation primitive a basket analysis ships.
-    *
-    * Scale shape: same regime as the triangle census — the sorted FULL
-    * adjacency table is |V| rows of bounded arrays and rides to both
-    * endpoint lookups under the SAME broadcast↔hash runtime switch
-    * (`spark.graft.triangles.broadcastAdj`); the |E|-row edge frame is
-    * probed map-side, the intersection is the codegen'd sorted merge
-    * inside `array_intersect`, and the global top-k is
-    * WindowGroupLimit-pruned per partition before the single-partition
-    * final ranking. Nothing materializes wedges.
+  /** The adjacency side of a per-edge probe join. An adjacency table is
+    * |V| rows of bounded arrays, so it broadcasts by default and the
+    * |E|-row edge frame is probed map-side. Past the broadcast threshold
+    * set `spark.graft.triangles.broadcastAdj=false`: the SAME plan then
+    * runs hash-partitioned joins on each endpoint — two |E|-row
+    * exchanges instead of two broadcasts (SCALE.md "Known trade-offs").
+    * Both modes are PlanShapeSpec-pinned.
     */
+  private def adjSide(adj: DataFrame): DataFrame =
+    if (adj.sparkSession.conf.getOption("spark.graft.triangles.broadcastAdj")
+        .forall(_.toBoolean)) broadcast(adj)
+    else adj
+
   /** Per-edge common-neighbor counts + endpoint degrees — the expensive
-    * adjacency-probe + `array_intersect` pass both link-score rankings
-    * derive from. Runs under the broadcast↔hash runtime switch.
+    * adjacency-probe + `array_intersect` pass the triangle census, both
+    * link-score rankings, local clustering, the truss peel and the rich
+    * club derive from. The sorted FULL adjacency rides to both endpoint
+    * lookups through [[adjSide]]; the intersection is the codegen'd
+    * sorted merge inside `array_intersect`, so nothing materializes
+    * wedges.
     */
-  private def edgeCommonCounts(edges: DataFrame,
-      adj: DataFrame): DataFrame = {
-    val adjBcast = edges.sparkSession.conf
-      .getOption("spark.graft.triangles.broadcastAdj").forall(_.toBoolean)
-    def adjSide(df: DataFrame): DataFrame =
-      if (adjBcast) broadcast(df) else df
+  private[graft] def edgeCommonCounts(edges: DataFrame,
+      adj: DataFrame): DataFrame =
     edges
       .join(adjSide(adj.select(col("u").as("pa"), col("ns").as("na"))),
         Seq("pa"))
@@ -1109,7 +996,6 @@ object Graph {
           .as("n_common"),
         size(col("na")).cast("long").as("da"),
         size(col("nb")).cast("long").as("db"))
-  }
 
   /** Pinned per-(session, key) edge score frame over the co-part memos —
     * `graph_common_neighbors` and `graph_link_jaccard` both rank from
@@ -1126,11 +1012,15 @@ object Graph {
       edgeCommonCounts(edges, adj))
   }
 
-  def commonNeighbors(edges: DataFrame,
-      adjPre: Option[DataFrame] = None,
-      scoredPre: Option[DataFrame] = None): DataFrame = {
-    val scored = scoredPre.getOrElse(
-      edgeCommonCounts(edges, adjPre.getOrElse(fullAdjacency(edges))))
+  /** Top edges by common-neighbor count |N(u) ∩ N(v)| — the classic
+    * link-prediction / edge-strength score (per-edge triangle support
+    * over FULL neighborhoods). "Parts that co-occur with many of the same
+    * parts" is the recommendation primitive a basket analysis ships.
+    * Ranks the [[edgeCommonCounts]] frame; the global top-k is
+    * WindowGroupLimit-pruned per partition before the single-partition
+    * final ranking.
+    */
+  def commonNeighbors(scored: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("n_common").desc, col("pa"), col("pb"))
     scored
@@ -1170,19 +1060,14 @@ object Graph {
     * neighborhoods are; preferential attachment is the null model the
     * other scores are judged against.
     *
-    * Scale shape: identical to [[commonNeighbors]] — the |V|-row sorted
-    * adjacency rides to both endpoint lookups under the broadcast↔hash
-    * runtime switch, and the degree is FREE (it is `size(ns)` of the
-    * adjacency array already in hand, so no extra degree join). Numeric
+    * Scale shape: identical to [[commonNeighbors]] — it ranks the same
+    * [[edgeCommonCounts]] frame, whose degrees are FREE (`size(ns)` of
+    * the adjacency arrays, so no extra degree join). Numeric
     * determinism: numerator and denominator are exact small integers;
     * the single IEEE division is bit-identical cross-engine, so the
     * rank order (including ties) matches the oracle exactly.
     */
-  def linkJaccard(edges: DataFrame,
-      adjPre: Option[DataFrame] = None,
-      scoredPre: Option[DataFrame] = None): DataFrame = {
-    val scored = scoredPre.getOrElse(
-      edgeCommonCounts(edges, adjPre.getOrElse(fullAdjacency(edges))))
+  def linkJaccard(scored: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("jaccard").desc, col("pa"), col("pb"))
     scored
@@ -1223,14 +1108,10 @@ object Graph {
   val PackBase = 2147483648L
 
   /** The Adamic-Adar / Resource-Allocation scoring pass alone: (pa, pb,
-    * n_common, aa_score, ra_score) per edge. Adjacency sides ride the
-    * same broadcast↔hash runtime switch as [[edgeCommonCounts]].
+    * n_common, aa_score, ra_score) per edge. Adjacency sides go through
+    * [[adjSide]], as in [[edgeCommonCounts]].
     */
-  private def aaScores(edges: DataFrame, deg: DataFrame): DataFrame = {
-    val adjBcast = edges.sparkSession.conf
-      .getOption("spark.graft.triangles.broadcastAdj").forall(_.toBoolean)
-    def adjSide(df: DataFrame): DataFrame =
-      if (adjBcast) broadcast(df) else df
+  private[graft] def aaScores(edges: DataFrame, deg: DataFrame): DataFrame = {
     // degree-carrying sorted adjacency (u, ns: array<long>) with each
     // neighbor packed as v·2³¹ + deg(v) — deg is a FUNCTION of v, so
     // intersecting packed keys ≡ intersecting neighbor ids, and the
@@ -1276,11 +1157,8 @@ object Graph {
       aaScores(edges, deg))
   }
 
-  def adamicAdar(edges: DataFrame, degPre: Option[DataFrame] = None,
-      scoredPre: Option[DataFrame] = None): DataFrame = {
+  def adamicAdar(scored: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = scoredPre.getOrElse(
-      aaScores(edges, degPre.getOrElse(degrees(edges))))
     val w = Window.orderBy(col("aa_score").desc, col("pa"), col("pb"))
     scored
       .withColumn("rk", row_number().over(w))
@@ -1412,13 +1290,8 @@ object Graph {
     * a degree join + global top-k (TakeOrderedAndProject). All score
     * inputs are exact integers; one IEEE division per node.
     */
-  def localClustering(edges: DataFrame,
-      scoredPre: Option[DataFrame] = None,
-      degPre: Option[DataFrame] = None): DataFrame = {
+  def localClustering(scored: DataFrame, deg: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = scoredPre.getOrElse(
-      edgeCommonCounts(edges, fullAdjacency(edges)))
-    val deg = degPre.getOrElse(degrees(edges))
     val perNode = scored.select(col("pa").as("id"), col("n_common"))
       .unionByName(scored.select(col("pb").as("id"), col("n_common")))
       .groupBy(col("id")).agg(sum(col("n_common")).as("cn2"))
@@ -3104,7 +2977,7 @@ object Graph {
     * mass teleports only to the [[PprSeeds]] lowest-id customers, so the
     * stationary scores measure proximity to those accounts — "which
     * suppliers matter to THESE customers", the recommendation/expansion
-    * twin of the global [[pagerank]] importance score.
+    * twin of the global [[pagerankCached]] importance score.
     *
     * Scale shape: identical to [[pagerankCached]] — it composes over the
     * SAME pinned directed-edge and degree memos (`prede`/`prdeg` keys,
@@ -3114,7 +2987,7 @@ object Graph {
     * only delta from the global rounds is the teleport term's
     * seed-indicator CASE. Dangling mass: every node of this graph has
     * out-edges, so no correction term is needed (same argument as
-    * [[pagerank]]).
+    * [[pagerankCached]]).
     */
   def pprCached(orders: DataFrame, lineitem: DataFrame,
       cacheKey: String, iters: Int = PrIters): DataFrame = {

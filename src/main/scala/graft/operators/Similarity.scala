@@ -239,7 +239,7 @@ object Similarity {
   def lshBucket(v: Column): Column = lshBucketAt(v, 0)
 
   /** Second, independent hyperplane bucketing (plane ids
-    * [[NPlanes]]..2·[[NPlanes]]−1) — the hash behind [[nswWalk]]'s
+    * [[NPlanes]]..2·[[NPlanes]]−1) — the hash behind [[nswWalkCached]]'s
     * cross-partition edge set.
     */
   def lshBucket2(v: Column): Column = lshBucketAt(v, NPlanes)
@@ -385,14 +385,15 @@ object Similarity {
   val KnnGraphK = 3
 
   /** The LSH-bucketed kNN edge list (src, rk, dst, cos) — the shared
-    * subtree of [[knnGraph]] and [[nswWalk]]. Pinned: both consumers
+    * subtree of [[knnGraph]] and [[nswWalkCached]]. Pinned: both consumers
     * read it at least twice within their own plans, and the suite memo
     * ([[knnEdgesCached]]) builds it once per (session, fixture).
     */
-  private def knnEdges(emb: DataFrame): DataFrame =
+  private[graft] def knnEdges(emb: DataFrame): DataFrame =
     knnEdgesWith(emb, lshBucket(col("embedding")))
 
-  private def knnEdgesWith(emb: DataFrame, bucketExpr: Column): DataFrame = {
+  private[graft] def knnEdgesWith(emb: DataFrame,
+      bucketExpr: Column): DataFrame = {
     val bucketed = withNorm(emb, "embedding").select(col("vec_id"),
       col("embedding"), col("norm"), bucketExpr.as("bucket"))
     val a = bucketed.select(col("vec_id").as("src"), col("embedding").as("av"),
@@ -406,7 +407,7 @@ object Similarity {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= KnnGraphK)
       .select(col("src"), col("rk"), col("dst"), col("cos"))
-      // both sides of knnGraph's mutual self-join (and every nswWalk
+      // both sides of knnGraph's mutual self-join (and every NSW walk
       // round) read this k·N edge list; without materialization the
       // bucket join + scoring + rank window execute once per consumer
       // (ReuseExchange dedups at most the shuffle)
@@ -426,9 +427,7 @@ object Similarity {
     graft.Memo(emb.sparkSession, s"sim.lsh2:$cacheKey")(
       knnEdgesWith(emb, lshBucket2(col("embedding"))))
 
-  def knnGraph(emb: DataFrame,
-      pre: Option[DataFrame] = None): DataFrame = {
-    val edges = pre.getOrElse(knnEdges(emb))
+  def knnGraph(edges: DataFrame): DataFrame = {
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"),
       lit(true).as("rev"))
     edges.join(rev, Seq("src", "dst"), "left")
@@ -549,7 +548,7 @@ object Similarity {
     * symmetrized. N/mod nodes, so the one-time build is 1/mod² of the
     * base edge-list cost.
     */
-  private def pivotSymAt(emb: DataFrame, mod: Int): DataFrame = {
+  private[graft] def pivotSymAt(emb: DataFrame, mod: Int): DataFrame = {
     val piv = emb.filter(col("vec_id") % mod === 0)
     val e = knnEdgesWith(piv, lshBucket(col("embedding")))
       .select(col("src"), col("dst"))
@@ -579,8 +578,8 @@ object Similarity {
     // two-tier (NswPivotMod, NswL2Mod) ladder. A fixture big enough to
     // plan a third tier (≥ NswTierScanMax·NswL2Mod = 2560 vectors) would
     // silently diverge from its oracle — fail loudly instead, naming the
-    // fix. Spec-path corpora call nswTierMods/nswWalk directly and are
-    // not gated.
+    // fix. A larger corpus composes the walk from the uncached builders
+    // (nswTierMods, pivotSymAt, nswEntry, nswVisited) and is not gated.
     require(mods == Seq(NswPivotMod, NswL2Mod),
       s"NSW tier ladder for fixture '$cacheKey' is $mods, but the " +
         s"sim_nsw_* SQL oracles unroll the static (${NswPivotMod}, " +
@@ -597,7 +596,7 @@ object Similarity {
 
   /** Query vectors and normed corpus — the map-side frames every NSW
     * stage scores against. */
-  private def nswQCorpus(emb: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def nswQCorpus(emb: DataFrame): (DataFrame, DataFrame) = {
     val n = withNorm(emb, "embedding")
     val q = n.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -609,7 +608,7 @@ object Similarity {
 
   /** Symmetrize the union of two directed edge lists (NSW search walks
     * edges in both directions), pinned. */
-  private def symmetrized(e1: DataFrame, e2: DataFrame): DataFrame = {
+  private[graft] def symmetrized(e1: DataFrame, e2: DataFrame): DataFrame = {
     val e = e1.select(col("src"), col("dst"))
       .unionByName(e2.select(col("src"), col("dst")))
     e.select(col("src").as("node"), col("dst"))
@@ -639,21 +638,6 @@ object Similarity {
       bruteTopK(emb).filter(col("rk") <= AnnTopK)
         .select(col("query_id"), col("cand_id")))
 
-  /** The walk's shared frames: symmetrized two-hash edge list (pinned),
-    * the descent pivot graphs (sparsest first), query vectors, normed
-    * corpus, and the top-tier mod — ladder derived from |V|. */
-  private def nswParts(emb: DataFrame, pre: Option[DataFrame],
-      pre2: Option[DataFrame], preL1: Option[DataFrame])
-      : (DataFrame, Seq[DataFrame], DataFrame, DataFrame, Int) = {
-    val mods = nswTierMods(emb.count())
-    val sym = symmetrized(pre.getOrElse(knnEdges(emb)),
-      pre2.getOrElse(knnEdgesWith(emb, lshBucket2(col("embedding")))))
-    val (q, corpus) = nswQCorpus(emb)
-    val descent = preL1.map(Seq(_))
-      .getOrElse(mods.init.reverse.map(m => pivotSymAt(emb, m)))
-    (sym, descent, q, corpus, mods.last)
-  }
-
   private def nswScore(q: DataFrame, corpus: DataFrame)(
       frontier: DataFrame): DataFrame =
     frontier.join(corpus, Seq("node")).join(broadcast(q), Seq("query_id"))
@@ -677,12 +661,12 @@ object Similarity {
       .orderBy(col("cos").desc, col("node"))
 
   /** The hierarchical entry's SHARED stage: every layer-2 pivot scored
-    * against every query, ranked — beam-INDEPENDENT, so [[nswBeamSweep]]
+    * against every query, ranked — beam-INDEPENDENT, so [[nswBeamSweepCached]]
     * computes it once and every sweep point rank-filters the one pinned
     * frame. |Q| · N/[[NswL2Mod]] rows, the only exhaustive scan in the
     * walk.
     */
-  private def nswEntryScored(q: DataFrame, corpus: DataFrame,
+  private[graft] def nswEntryScored(q: DataFrame, corpus: DataFrame,
       topMod: Int): DataFrame =
     nswScore(q, corpus)(q.select(col("query_id"))
         .crossJoin(corpus.filter(col("node") % topMod === 0)
@@ -700,7 +684,7 @@ object Similarity {
     * current best when no neighbor improves). Output is beam-tagged:
     * (beam, query_id, node).
     */
-  private def nswEntry(entryScored: DataFrame, descent: Seq[DataFrame],
+  private[graft] def nswEntry(entryScored: DataFrame, descent: Seq[DataFrame],
       q: DataFrame, corpus: DataFrame, beams: Seq[Int]): DataFrame = {
     var cur = beams.map(b => entryScored.filter(col("rk") <= b)
         .select(lit(b).as("beam"), col("query_id"), col("node")))
@@ -732,7 +716,7 @@ object Similarity {
     * final set are pinned: `expanded` derives from cand by one tiny
     * in-memory join, cheaper recomputed than materialized.
     */
-  private def nswVisited(sym: DataFrame, q: DataFrame, corpus: DataFrame,
+  private[graft] def nswVisited(sym: DataFrame, q: DataFrame, corpus: DataFrame,
       entry: DataFrame): DataFrame = {
     val score = nswScoreB(q, corpus) _
     var cand = entry
@@ -786,7 +770,7 @@ object Similarity {
   }
 
   /** Final answer from a visited set: score, drop self, top-[[AnnTopK]]. */
-  private def nswFinal(q: DataFrame, corpus: DataFrame,
+  private[graft] def nswFinal(q: DataFrame, corpus: DataFrame,
       visited: DataFrame): DataFrame = {
     val wFin = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("node"))
@@ -799,18 +783,9 @@ object Similarity {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  def nswWalk(emb: DataFrame, pre: Option[DataFrame] = None,
-      pre2: Option[DataFrame] = None,
-      preL1: Option[DataFrame] = None): DataFrame = {
-    val (sym, descent, q, corpus, topMod) = nswParts(emb, pre, pre2, preL1)
-    val entry = nswEntry(nswEntryScored(q, corpus, topMod), descent, q,
-      corpus, Seq(NswBeam))
-    nswFinal(q, corpus, nswVisited(sym, q, corpus, entry).drop("beam"))
-  }
-
-  /** The registry route: every shared artifact (edge lists, pivot graph,
-    * entry scan, visited set) memoized per (session, fixture), so the
-    * walk itself is one scoring pass over the pinned visited set. */
+  /** Graph-walk ANN answer: every shared artifact (edge lists, pivot
+    * graph, entry scan, visited set) memoized per (session, fixture), so
+    * the walk itself is one scoring pass over the pinned visited set. */
   def nswWalkCached(emb: DataFrame, cacheKey: String): DataFrame = {
     val (q, corpus) = nswQCorpus(emb)
     nswFinal(q, corpus, nswVisitedCached(emb, cacheKey))
@@ -827,18 +802,8 @@ object Similarity {
     */
   val NswSweepBeams: Seq[Int] = Seq(2, 4, 8)
 
-  def nswBeamSweep(emb: DataFrame, pre: Option[DataFrame] = None,
-      pre2: Option[DataFrame] = None,
-      preL1: Option[DataFrame] = None): DataFrame = {
-    val (sym, descent, q, corpus, topMod) = nswParts(emb, pre, pre2, preL1)
-    // the top-tier scan is beam-independent: scored and ranked ONCE, each
-    // sweep point rank-filters this one pinned frame
-    nswSweepFrom(sym, descent, q, corpus, nswEntryScored(q, corpus, topMod),
-      Iterate.pin(bruteTopK(emb).filter(col("rk") <= AnnTopK)
-        .select(col("query_id"), col("cand_id"))))
-  }
-
-  /** The registry route for the sweep: all shared artifacts memoized. */
+  /** The beam-width sweep over the memoized walk artifacts (edge lists,
+    * pivot graphs, entry scan) and the memoized brute truth. */
   def nswBeamSweepCached(emb: DataFrame, cacheKey: String): DataFrame = {
     val (q, corpus) = nswQCorpus(emb)
     nswSweepFrom(nswSymCached(emb, cacheKey), pivotSymsCached(emb, cacheKey),
@@ -1340,9 +1305,8 @@ object Similarity {
     graft.Memo.pinned(emb.sparkSession, s"sim.maxmin:$cacheKey")(
       maxminInit(emb))
 
-  def maxminCells(emb: DataFrame, initPre: Option[DataFrame] = None)
-      : DataFrame = {
-    val ids = initPre.getOrElse(maxminInit(emb)).select(col("center_id"))
+  def maxminCells(emb: DataFrame, init: DataFrame): DataFrame = {
+    val ids = init.select(col("center_id"))
     val n = withNorm(emb, "embedding")
     val cents = n.join(broadcast(ids), n("vec_id") === col("center_id"))
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"),
@@ -1956,9 +1920,8 @@ object Similarity {
     cents
   }
 
-  def ivfKmeans(emb: DataFrame, iters: Int = KmeansIters,
-      cents: Option[DataFrame] = None): DataFrame =
-    assignCells(kmeansVecs(emb), cents.getOrElse(ivfTrainedCents(emb, iters)))
+  def ivfKmeans(emb: DataFrame, cents: DataFrame): DataFrame =
+    assignCells(kmeansVecs(emb), cents)
       .select(col("vec_id"), col("bucket"))
       .orderBy(col("vec_id"))
 
@@ -2041,7 +2004,7 @@ object Similarity {
   def clusterTopics(emb: DataFrame, docs: DataFrame,
       cents: DataFrame): DataFrame = {
     import graft.operators.TextOps
-    val assign = ivfKmeans(emb, cents = Some(cents))
+    val assign = ivfKmeans(emb, cents)
       .select(col("vec_id"), col("bucket"))
     val terms = docs.select(col("doc_id"),
       explode_outer(TextOps.words(col("text"))).as("term"))
@@ -2176,7 +2139,7 @@ object Similarity {
   val PqK = NCentroids          // 8 codes per subspace
 
   /** (id, m, sv): double subvectors, one row per subspace. */
-  private def subvectors(emb: DataFrame, idCol: String): DataFrame =
+  private[graft] def subvectors(emb: DataFrame, idCol: String): DataFrame =
     emb.select(col("vec_id").as(idCol),
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .select(col(idCol), explode(array((0 until PqM).map(m =>
@@ -2217,10 +2180,8 @@ object Similarity {
     * here. Scale shape per round: one broadcast join + one thin argmax
     * agg + one (m·K·subdim)-cell exact-mean agg; per-round lineage pinned.
     */
-  def pqKmeans(emb: DataFrame, iters: Int = KmeansIters,
-      codebook: Option[DataFrame] = None): DataFrame = {
-    val subs = subvectors(emb, "id")
-    encode(subs, codebook.getOrElse(trainSubCodebook(subs, iters)))
+  def pqKmeans(emb: DataFrame, codebook: DataFrame): DataFrame = {
+    encode(subvectors(emb, "id"), codebook)
       .select(col("id").as("vec_id"), col("m"), col("code"))
       .orderBy(col("vec_id"), col("m"))
   }
@@ -2278,13 +2239,22 @@ object Similarity {
        |  CAST(MAX(n) AS BIGINT) AS max_code_count
        |FROM cu GROUP BY m ORDER BY m""".stripMargin
 
+  /** The training-free seed codebook of an (id, m, sv) subvector frame:
+    * in every subspace the first [[PqK]] ids' subvectors are the codes.
+    * The untrained PQ/IVFADC queries encode against it, and Lloyd's
+    * rounds ([[trainSubCodebook]]) start from it.
+    */
+  def seedCodebook(subs: DataFrame): DataFrame =
+    subs.filter(col("id") < PqK)
+      .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
+
   /** The Lloyd's loop of [[pqKmeans]] over ANY (id, m, sv) subvector
-    * frame — raw subvectors or residuals ([[ivfPqResidualTopK]]'s
-    * trained variant) train through the identical rounds.
+    * frame — raw subvectors or residuals ([[residualBookCached]], the
+    * trained [[ivfPqResidualTopK]] book) train through the identical
+    * rounds.
     */
   def trainSubCodebook(subs: DataFrame, iters: Int = KmeansIters): DataFrame = {
-    var codebook = subs.filter(col("id") < PqK)
-      .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
+    var codebook = seedCodebook(subs)
     for (_ <- 1 to iters) {
       val assigned = subs.join(broadcast(codebook), Seq("m"))
         .withColumn("d2", dotD(col("cv"), col("cv"))
@@ -2389,9 +2359,7 @@ object Similarity {
   def pqTopK(emb: DataFrame, k: Int = AnnTopK): DataFrame = {
     import graft.functions.Exact
     val subs = subvectors(emb, "id")
-    val codebook = subs.filter(col("id") < PqK)
-      .select(col("m"), col("id").cast("int").as("code"),
-        col("sv").as("cv"))
+    val codebook = seedCodebook(subs)
     val codes = encode(subs, codebook)
     // LUT: exact query subvector · every codebook entry (|Q|·M·K rows)
     val lut = subs.filter(col("id") < NQueries)
@@ -2479,8 +2447,7 @@ object Similarity {
   def sdcTopK(emb: DataFrame): DataFrame = {
     import graft.functions.Exact
     val subs = subvectors(emb, "id")
-    val codebook = subs.filter(col("id") < PqK)
-      .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
+    val codebook = seedCodebook(subs)
     val codes = encode(subs, codebook).transform(Iterate.pin)
     // centroid-pair squared-L2 LUT: data-independent, M·K² rows. The
     // (|a|² − 2a·b) + |b|² association mirrors the oracle token-for-token
@@ -2746,8 +2713,7 @@ object Similarity {
         col("cent_id"))
     // corpus side: one cell id + M codes per vector
     val subs = subvectors(emb, "id")
-    val codebook = subs.filter(col("id") < PqK)
-      .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
+    val codebook = seedCodebook(subs)
     val cands = encode(subs, codebook)
       .select(col("id").as("cand_id"), col("m"), col("code"))
       .join(nearestCell(scored)
@@ -2863,13 +2829,15 @@ object Similarity {
     * ordering. The `sim_ivfadc_recall` / `sim_ivfpq_recall` pair is the
     * harness that shows exactly this.
     *
-    * `trained = true` routes the residual subvectors through the SAME
-    * Lloyd's rounds as [[pqKmeans]] ([[trainSubCodebook]]) — also
+    * `codebook` is either the seed book ([[seedCodebook]] of the
+    * residuals) or the trained one ([[residualBookCached]]), which runs
+    * the residual subvectors through the SAME Lloyd's rounds as
+    * [[pqKmeans]] ([[trainSubCodebook]]) — also
     * measured: on the fixture's near-ISOTROPIC synthetic embeddings two
     * training rounds change the codebook but not one top-5 set
     * (byte-identical rankings, checked in DuckDB as well as Spark) —
     * codebook training cannot manufacture cluster structure the data
-    * does not have. The knob exists and is spec-exercised; real
+    * does not have. The trained book is spec-exercised; real
     * embedding corpora, which do cluster, are where it pays.
     *
     * Plan shape: the residual computation is ONE broadcast-centroid join
@@ -2949,20 +2917,14 @@ object Similarity {
       (Iterate.pin(assigned), Iterate.pin(rsubs))
     }
 
-  def ivfPqResidualTopK(emb: DataFrame, trained: Boolean = false,
-      pre: Option[(DataFrame, DataFrame)] = None,
-      book: Option[DataFrame] = None): DataFrame = {
+  def ivfPqResidualTopK(emb: DataFrame, residuals: (DataFrame, DataFrame),
+      codebook: DataFrame): DataFrame = {
     import graft.functions.Exact
     val n = withNorm(emb, "embedding")
     val cents = n.filter(col("vec_id") < NCentroids)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"),
         col("norm").as("cnrm"))
-    val (assigned, rsubsThin) = pre.getOrElse(residualSubvectors(emb))
-    val codebook =
-      if (trained) book.getOrElse(trainSubCodebook(rsubsThin))
-      else rsubsThin.filter(col("id") < PqK)
-        .select(col("m"), col("id").cast("int").as("code"),
-          col("sv").as("cv"))
+    val (assigned, rsubsThin) = residuals
     val cands = encode(rsubsThin, codebook)
       .select(col("id").as("cand_id"), col("m"), col("code"))
       .join(assigned.select(col("vec_id").as("cand_id"), col("bucket")),
@@ -3130,8 +3092,7 @@ object Similarity {
   def pqDistortion(emb: DataFrame): DataFrame = {
     import graft.functions.Exact
     val subs = subvectors(emb, "id")
-    val codebook = subs.filter(col("id") < PqK)
-      .select(col("m"), col("id").cast("int").as("code"), col("sv").as("cv"))
+    val codebook = seedCodebook(subs)
     val codes = encode(subs, codebook)
     subs.join(codes, Seq("id", "m"))
       .join(broadcast(codebook), Seq("m", "code"))
@@ -3718,62 +3679,25 @@ object Similarity {
     */
   val PowerIters = 3
 
-  /** Leading principal component of the embedding covariance by power
-    * iteration (Mises & Pollaczek-Geiringer 1929; the PCA framing of
-    * Pearson 1901), computed RELATIONALLY end-to-end — no driver-side
-    * linear algebra, no collect:
-    *
-    *  - covariance C = E[xxᵀ] − μμᵀ via the TRANSPOSE: one exchange
-    *    turns the (vec_id, dim, x) stream into D ordered column arrays,
-    *    and the D² covariance entries are then codegen'd fixed-order
-    *    dots ([[graft.functions.DotProductDouble]]) over a broadcast
-    *    64-row frame — pinned ONCE and reused by every round. (A first
-    *    formulation aggregated the N·D² product rows through the
-    *    exact-decimal detour: correct, but decimal-summing 20 M rows
-    *    cost 13.6 s where the transposed dots cost ~1 s.) At 10⁹
-    *    vectors a column no longer fits one array row — shard vec_id
-    *    ranges into column CHUNKS, dot per (i, j, chunk), and combine
-    *    the ~|chunks| per-pair partials with the exact-decimal sum;
-    *    compute stays the inherent O(N·D²), the exchange stays O(D²).
-    *  - [[PowerIters]] rounds of v ← normalize(C·v) as D²-row matvec
-    *    joins against a broadcast D-row vector — per-round cost is
-    *    independent of N.
-    *
-    * Cross-engine determinism: the column dots and the fold means run in
-    * the SAME left-to-right element order on both engines (the
-    * `sqlDotD`/`list_reduce` convention every ANN oracle already relies
-    * on); matvec sums, norms, λ and trace go through the exact-decimal
-    * detour ([[graft.functions.Exact]]); the remaining ops (one division
-    * by n, μᵢ·μⱼ, the normalize divide, sqrt) are single IEEE operations
-    * in a fixed order, bit-identical in DuckDB. v₀ = 1/√D — exactly
-    * representable for the fixture's D = 64 (0.125). The eigenvector's
-    * sign is canonicalized (largest-|loading| dimension non-negative,
-    * lowest dim on ties) since −v is the same eigenvector.
-    *
-    * Output: one row per dimension — (dim0, loading) — plus the Rayleigh
-    * eigenvalue λ = vᵀCv and its share of total variance λ/tr(C) riding
-    * as constant columns. On the near-isotropic fixture the share is
-    * small (no dominant direction — consistent with the IVFADC training
-    * measurement); the spec pins convergence on a planted-direction
-    * corpus instead.
+  /** The reusable spectral state: column means, the PINNED covariance,
+    * the sign-canonicalized leading component, the raw (unsigned)
+    * converged vector + eigenvalue that deflation consumes, and the
+    * embedding width the power rounds start from.
     */
+  final case class PcaArtifacts(mu: DataFrame, cov: DataFrame,
+    comps: DataFrame, v1: DataFrame, lam1: DataFrame, dim: Int)
+
   /** (per-dim mean, principal component frame) — the reusable parts of
     * [[pcaPower]]; `comps` is (dim0, loading, eigval, var_share) with
     * the canonical sign already applied.
     */
-  /** The reusable spectral state: column means, the PINNED covariance,
-    * the sign-canonicalized leading component, and the raw (unsigned)
-    * converged vector + eigenvalue that deflation consumes.
-    */
-  final case class PcaArtifacts(mu: DataFrame, cov: DataFrame,
-    comps: DataFrame, v1: DataFrame, lam1: DataFrame)
-
-  private def pcaParts(emb: DataFrame, dim: Int): (DataFrame, DataFrame) = {
+  private[graft] def pcaParts(emb: DataFrame,
+      dim: Int): (DataFrame, DataFrame) = {
     val a = pcaArts(emb, dim)
     (a.mu, a.comps)
   }
 
-  private def pcaArts(emb: DataFrame, dim: Int): PcaArtifacts = {
+  private[graft] def pcaArts(emb: DataFrame, dim: Int): PcaArtifacts = {
     import graft.functions.Exact
     import graft.functions.VectorExprs
     VectorExprs.register(emb.sparkSession)
@@ -3803,7 +3727,7 @@ object Similarity {
         (VectorExprs.dotD(col("xc"), col("yc")) / col("n")
           - col("mi") * col("mj")).as("c")))
     val (vp, lam) = powerPair(cov, dim)
-    PcaArtifacts(mu, cov, compsFrom(cov, vp, lam), vp, lam)
+    PcaArtifacts(mu, cov, compsFrom(cov, vp, lam), vp, lam, dim)
   }
 
   /** Second principal component by Hotelling deflation: power-iterate the
@@ -3821,9 +3745,7 @@ object Similarity {
     * 100 TB rank-k PCA costs ONE corpus pass (the covariance) plus k
     * dim²-sized iterations.
     */
-  def pcaDeflate(emb: DataFrame, dim: Int = Dim,
-      pre: Option[PcaArtifacts] = None): DataFrame = {
-    val a = pre.getOrElse(pcaArts(emb, dim))
+  def pcaDeflate(a: PcaArtifacts): DataFrame = {
     val cov2 = Iterate.pin(a.cov
       .join(broadcast(a.v1.select(col("i"), col("v").as("vi"))), Seq("i"))
       .join(broadcast(a.v1.select(col("i").as("j"), col("v").as("vj"))),
@@ -3831,7 +3753,7 @@ object Similarity {
       .crossJoin(broadcast(a.lam1))
       .select(col("i"), col("j"),
         (col("c") - col("lam") * col("vi") * col("vj")).as("c")))
-    val (v2, lam2) = powerPair(cov2, dim)
+    val (v2, lam2) = powerPair(cov2, a.dim)
     compsFrom(a.cov, v2, lam2).orderBy(col("dim0"))
   }
 
@@ -3881,9 +3803,47 @@ object Similarity {
         col("lam").as("eigval"), (col("lam") / col("tr")).as("var_share"))
   }
 
-  def pcaPower(emb: DataFrame, dim: Int = Dim,
-      pre: Option[(DataFrame, DataFrame)] = None): DataFrame =
-    pre.getOrElse(pcaParts(emb, dim))._2.orderBy(col("dim0"))
+  /** Leading principal component of the embedding covariance by power
+    * iteration (Mises & Pollaczek-Geiringer 1929; the PCA framing of
+    * Pearson 1901), computed RELATIONALLY end-to-end — no driver-side
+    * linear algebra, no collect:
+    *
+    *  - covariance C = E[xxᵀ] − μμᵀ via the TRANSPOSE: one exchange
+    *    turns the (vec_id, dim, x) stream into D ordered column arrays,
+    *    and the D² covariance entries are then codegen'd fixed-order
+    *    dots ([[graft.functions.DotProductDouble]]) over a broadcast
+    *    64-row frame — pinned ONCE and reused by every round. (A first
+    *    formulation aggregated the N·D² product rows through the
+    *    exact-decimal detour: correct, but decimal-summing 20 M rows
+    *    cost 13.6 s where the transposed dots cost ~1 s.) At 10⁹
+    *    vectors a column no longer fits one array row — shard vec_id
+    *    ranges into column CHUNKS, dot per (i, j, chunk), and combine
+    *    the ~|chunks| per-pair partials with the exact-decimal sum;
+    *    compute stays the inherent O(N·D²), the exchange stays O(D²).
+    *  - [[PowerIters]] rounds of v ← normalize(C·v) as D²-row matvec
+    *    joins against a broadcast D-row vector — per-round cost is
+    *    independent of N.
+    *
+    * Cross-engine determinism: the column dots and the fold means run in
+    * the SAME left-to-right element order on both engines (the
+    * `sqlDotD`/`list_reduce` convention every ANN oracle already relies
+    * on); matvec sums, norms, λ and trace go through the exact-decimal
+    * detour ([[graft.functions.Exact]]); the remaining ops (one division
+    * by n, μᵢ·μⱼ, the normalize divide, sqrt) are single IEEE operations
+    * in a fixed order, bit-identical in DuckDB. v₀ = 1/√D — exactly
+    * representable for the fixture's D = 64 (0.125). The eigenvector's
+    * sign is canonicalized (largest-|loading| dimension non-negative,
+    * lowest dim on ties) since −v is the same eigenvector.
+    *
+    * Output: one row per dimension — (dim0, loading) — plus the Rayleigh
+    * eigenvalue λ = vᵀCv and its share of total variance λ/tr(C) riding
+    * as constant columns. On the near-isotropic fixture the share is
+    * small (no dominant direction — consistent with the IVFADC training
+    * measurement); the spec pins convergence on a planted-direction
+    * corpus instead.
+    */
+  def pcaPower(parts: (DataFrame, DataFrame)): DataFrame =
+    parts._2.orderBy(col("dim0"))
 
   /** Pinned per-(session, key) memo of [[pcaParts]] — the component query
     * and the projection query share one covariance + power-iteration
@@ -3894,7 +3854,7 @@ object Similarity {
       val a = pcaArts(emb, Dim)
       // cov and v1 are pinned by construction; pin the rest once
       PcaArtifacts(Iterate.pin(a.mu), a.cov, Iterate.pin(a.comps),
-        a.v1, Iterate.pin(a.lam1))
+        a.v1, Iterate.pin(a.lam1), a.dim)
     }
 
   def pcaPartsCached(emb: DataFrame,
@@ -3913,11 +3873,10 @@ object Similarity {
     * output ordering; the mirror SQL evaluates the identical expression
     * tree left-to-right.
     */
-  def pcaProject(emb: DataFrame, dim: Int = Dim,
-      pre: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+  def pcaProject(emb: DataFrame, parts: (DataFrame, DataFrame)): DataFrame = {
     import graft.functions.VectorExprs
     VectorExprs.register(emb.sparkSession)
-    val (mu, comps) = pre.getOrElse(pcaParts(emb, dim))
+    val (mu, comps) = parts
     val muArr = mu.agg(transform(
       sort_array(collect_list(struct(col("i"), col("mu")))),
       s => s.getField("mu")).as("muarr"))

@@ -587,7 +587,8 @@ object TextOps {
     * buckets via the lazy pair generator; fingerprints shared by more
     * than [[WinnowMaxBucket]] docs are boilerplate, not evidence, and are
     * skipped (same non-discriminative-bucket rule as SimHash chunks);
-    * pairs must share ≥ [[WinnowSharedMin]] fingerprints.
+    * pairs must share ≥ [[WinnowSharedMin]] fingerprints. `fps` is the
+    * (doc_id, fingerprint) frame of [[winnow]].
     */
   val WinnowMaxBucket = 50
   val WinnowSharedMin = 2
@@ -603,10 +604,9 @@ object TextOps {
   def winnowCached(docs: DataFrame, cacheKey: String): DataFrame =
     graft.Memo.pinned(docs.sparkSession, s"text.winnow:$cacheKey")(winnow(docs))
 
-  def winnowPairs(docs: DataFrame,
-      winnowPre: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VectorExprs.register(docs.sparkSession)
-    winnowPre.getOrElse(winnow(docs))
+  def winnowPairs(fps: DataFrame): DataFrame = {
+    graft.functions.VectorExprs.register(fps.sparkSession)
+    fps
       .groupBy(col("fingerprint"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) >= 2 && size(col("ids")) <= WinnowMaxBucket)
@@ -631,12 +631,11 @@ object TextOps {
     * with at most C(|sources|, 2) pairs per fingerprint. |sources| is
     * domains/crawls (hundreds), never documents, so no bucket cap is
     * needed: the blow-up factor is a constant of the catalog, not of
-    * corpus size.
+    * corpus size. `fps` is the (doc_id, fingerprint) frame of [[winnow]].
     */
-  def sourceOverlap(docs: DataFrame,
-      winnowPre: Option[DataFrame] = None): DataFrame = {
+  def sourceOverlap(docs: DataFrame, fps: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
-    winnowPre.getOrElse(winnow(docs.select(col("doc_id"), col("text"))))
+    fps
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       // collect_set, not distinct-then-collect_list: the set dedups
       // (source, fingerprint) INSIDE the partial aggregate, so one hash

@@ -1301,7 +1301,7 @@ object TrainingData {
 
   // ------------------------------------------- end-to-end corpus export
   /** The whole training-data export as ONE composed plan: cleaned
-    * survivors ([[CorpusClean.clean]]: quality gate + exact dedup +
+    * survivors ([[CorpusClean.cleanCached]]: quality gate + exact dedup +
     * near-dup victim removal) → token-budget selection (best-quality
     * prefix under [[PipelineBudget]], the [[budgetSelect]] distributed
     * prefix-sum discipline) → deterministic shard/position assignment

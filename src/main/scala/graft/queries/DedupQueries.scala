@@ -29,7 +29,7 @@ object DedupQueries extends QueryFamily("dedup") {
     QuerySpec("dedup_simhash_pairs", (s, d) => Dedup.simhashPairs(docs(s, d)),
       Dedup.sqlSimhashPairs),
     QuerySpec("dedup_jaccard", (s, d) =>
-      Dedup.ngramJaccard(docs(s, d), Some(Dedup.shingleSetsCached(docs(s, d), d))),
+      Dedup.ngramJaccard(docs(s, d), Dedup.shingleSetsCached(docs(s, d), d)),
       Dedup.sqlNgramJaccard),
     QuerySpec("dedup_embed", (s, d) => Similarity.embedNearDup(emb(s, d)),
       Similarity.sqlEmbedNearDup),
@@ -38,8 +38,7 @@ object DedupQueries extends QueryFamily("dedup") {
     QuerySpec("dedup_communities", (s, d) => Dedup.labelPropagation(arts(s, d).pairs, docs(s, d)),
       Dedup.sqlLabelPropagation(Dedup.sqlMinhashPairs())),
     QuerySpec("dedup_calibration", (s, d) =>
-      Dedup.bandCalibration(arts(s, d).pairs, docs(s, d),
-        Some(Dedup.shingleSetsCached(docs(s, d), d))),
+      Dedup.bandCalibration(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d), d)),
       Dedup.sqlBandCalibration(Dedup.sqlMinhashPairs())),
     QuerySpec("dedup_minhash_error", (s, d) => Dedup.minhashError(arts(s, d).pairs, docs(s, d)),
       Dedup.sqlMinhashError),
@@ -56,7 +55,7 @@ object DedupQueries extends QueryFamily("dedup") {
     // force the artifact memo's eager component iteration (r10 ADVICE);
     // the frame is the SAME pinned pairs clusterArtifactsCached shares
     QuerySpec("dedup_edit", (s, d) =>
-      Dedup.editPairs(docs(s, d), Some(Dedup.minhashPairsCached(docs(s, d), d))),
+      Dedup.editPairs(docs(s, d), Dedup.minhashPairsCached(docs(s, d), d)),
       Dedup.sqlEditPairs),
     QuerySpec("dedup_semantic", (s, d) => Similarity.semanticDedup(emb(s, d)),
       Similarity.sqlSemanticDedup),
@@ -66,11 +65,10 @@ object DedupQueries extends QueryFamily("dedup") {
       Dedup.sqlSoftWeights),
     QuerySpec("dedup_spans", (s, d) => Dedup.spanClean(docs(s, d)), Dedup.sqlSpanClean),
     QuerySpec("dedup_threshold_sweep", (s, d) =>
-      Dedup.thresholdSweep(arts(s, d).pairs, docs(s, d),
-        Some(Dedup.shingleSetsCached(docs(s, d), d))),
+      Dedup.thresholdSweep(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d), d)),
       Dedup.sqlThresholdSweep),
     QuerySpec("dedup_scurve", (s, d) =>
-      Dedup.scurve(arts(s, d).pairs, docs(s, d), Some(Dedup.shingleSetsCached(docs(s, d), d))),
+      Dedup.scurve(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d), d)),
       Dedup.sqlScurve),
     QuerySpec("dedup_band_profile", (s, d) => Dedup.bandProfile(arts(s, d).bands),
       Dedup.sqlBandProfile()),

@@ -60,10 +60,8 @@ object GraphQueries extends QueryFamily("graph") {
       Graph.hitsCached(Tables.orders(s, d), Tables.lineitem(s, d), d),
       Graph.sqlHits),
     QuerySpec("graph_components", (s, d) =>
-      Graph.components(
-        Tables.orders(s, d), Tables.lineitem(s, d),
-        labels = Some(Graph.componentLabelsCached(
-          Tables.orders(s, d), Tables.lineitem(s, d), d))),
+      Graph.components(Graph.componentLabelsCached(
+        Tables.orders(s, d), Tables.lineitem(s, d), d)),
       Graph.sqlComponents),
     // part co-occurrence graph: triangles / degree histogram /
     // assortativity / BFS share one pinned edge memo (the expensive
@@ -71,63 +69,41 @@ object GraphQueries extends QueryFamily("graph") {
     QuerySpec("graph_triangles", (s, d) =>
       Graph.triangleStats(
         Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        Some(Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d)),
-        commonPre = Some(Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d))),
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d),
+        Graph.coPartCommonCached(Tables.lineitem(s, d), d)),
       Graph.sqlTriangleStats),
     QuerySpec("graph_degrees", (s, d) =>
-      Graph.degreeHistogram(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        Some(Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d))),
+      Graph.degreeHistogram(Graph.coPartDegreesCached(Tables.lineitem(s, d), d)),
       Graph.sqlDegreeHistogram),
     // both link-score rankings read the ONE pinned intersection pass
     QuerySpec("graph_common_neighbors", (s, d) =>
-      Graph.commonNeighbors(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d))),
+      Graph.commonNeighbors(Graph.coPartCommonCached(Tables.lineitem(s, d), d)),
       Graph.sqlCommonNeighbors),
     QuerySpec("graph_link_jaccard", (s, d) =>
-      Graph.linkJaccard(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d))),
+      Graph.linkJaccard(Graph.coPartCommonCached(Tables.lineitem(s, d), d)),
       Graph.sqlLinkJaccard),
     QuerySpec("graph_local_cc", (s, d) =>
       Graph.localClustering(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)),
-        degPre = Some(Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d))),
+        Graph.coPartCommonCached(Tables.lineitem(s, d), d),
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d)),
       Graph.sqlLocalClustering),
     QuerySpec("graph_peel", (s, d) =>
       Graph.peelProfile(
         Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        degPre = Some(Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d))),
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d)),
       Graph.sqlPeelProfile()),
     QuerySpec("graph_assortativity", (s, d) =>
       Graph.assortativity(
         Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        Some(Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d))),
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d)),
       Graph.sqlAssortativity),
     QuerySpec("graph_truss", (s, d) =>
-      Graph.trussProfile(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d))),
+      Graph.trussProfile(Graph.coPartCommonCached(Tables.lineitem(s, d), d)),
       Graph.sqlTrussProfile()),
     QuerySpec("graph_richclub", (s, d) =>
       Graph.richClub(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(Graph.coPartCommonCached(
-          Tables.lineitem(s, d), d)),
-        degPre = Some(Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d))),
+        Graph.coPartCommonCached(Tables.lineitem(s, d), d),
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d)),
       Graph.sqlRichClub),
     QuerySpec("graph_conductance", (s, d) =>
       Graph.conductance(
@@ -137,35 +113,23 @@ object GraphQueries extends QueryFamily("graph") {
     // degree-weighted link prediction reads the SAME edge/degree memos
     // as the other link rankings
     QuerySpec("graph_adamic_adar", (s, d) =>
-      Graph.adamicAdar(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        scoredPre = Some(Graph.coPartAaCached(
-          Tables.lineitem(s, d), d))),
+      Graph.adamicAdar(Graph.coPartAaCached(Tables.lineitem(s, d), d)),
       Graph.sqlAdamicAdar),
     // both BFS readouts derive from the SHARED seeded distance-frame
     // memo (Graph.seededLevelsCached) — the level-synchronous join
     // chain runs once per (session, fixture), not once per query
     QuerySpec("graph_bfs", (s, d) =>
-      Graph.bfsLevels(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        levelsPre = Some(Graph.seededLevelsCached(
-          Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-          d, Some(Graph.coPartDegreesCached(
-            Tables.lineitem(s, d), d))))),
+      Graph.bfsLevels(Graph.seededLevelsCached(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d), d,
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d))),
       Graph.sqlBfsLevels),
     QuerySpec("graph_closeness", (s, d) =>
-      Graph.closeness(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        levelsPre = Some(Graph.seededLevelsCached(
-          Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-          d, Some(Graph.coPartDegreesCached(
-            Tables.lineitem(s, d), d))))),
+      Graph.closeness(Graph.seededLevelsCached(
+        Graph.coPartEdgesCached(Tables.lineitem(s, d), d), d,
+        Graph.coPartDegreesCached(Tables.lineitem(s, d), d))),
       Graph.sqlCloseness),
     QuerySpec("graph_degree_gini", (s, d) =>
-      Graph.degreeGini(
-        Graph.coPartEdgesCached(Tables.lineitem(s, d), d),
-        degPre = Some(Graph.coPartDegreesCached(
-          Tables.lineitem(s, d), d))),
+      Graph.degreeGini(Graph.coPartDegreesCached(Tables.lineitem(s, d), d)),
       Graph.sqlDegreeGini),
   )
 }

@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -8,6 +9,13 @@ import Shared.{docs, emb}
 
 /** The `sim_*` queries: vector search and its recall over `embeddings`. */
 object SimQueries extends QueryFamily("sim") {
+
+  /** Residual IVFADC top-k under the training-free seed codebook. */
+  private def ivfadcSeeded(s: SparkSession, dir: String): DataFrame = {
+    val residuals = Similarity.residualSubvectorsCached(emb(s, dir), dir)
+    Similarity.ivfPqResidualTopK(emb(s, dir), residuals,
+      Similarity.seedCodebook(residuals._2))
+  }
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("sim_pq_code_usage", (s, d) =>
@@ -73,10 +81,10 @@ object SimQueries extends QueryFamily("sim") {
     // the four Lloyd's queries read trained artifacts from the shared
     // per-(session, dir) memos — train once, consume everywhere
     QuerySpec("sim_ivf_kmeans", (s, d) =>
-      Similarity.ivfKmeans(emb(s, d), cents = Some(Similarity.ivfCentsCached(emb(s, d), d))),
+      Similarity.ivfKmeans(emb(s, d), Similarity.ivfCentsCached(emb(s, d), d)),
       Similarity.sqlIvfKmeans()),
     QuerySpec("sim_pq_kmeans", (s, d) =>
-      Similarity.pqKmeans(emb(s, d), codebook = Some(Similarity.pqCodebookCached(emb(s, d), d))),
+      Similarity.pqKmeans(emb(s, d), Similarity.pqCodebookCached(emb(s, d), d)),
       Similarity.sqlPqKmeans()),
     QuerySpec("sim_ivf_balance_trained", (s, d) =>
       Similarity.ivfBalanceTrained(emb(s, d), Similarity.ivfCentsCached(emb(s, d), d)),
@@ -110,20 +118,17 @@ object SimQueries extends QueryFamily("sim") {
     QuerySpec("sim_ivfpq_topk", (s, d) => Similarity.ivfPqTopK(emb(s, d)), Similarity.sqlIvfPqTopK),
     // the three residual-IVFADC queries share one pinned
     // assignment + residual-explode memo (residualSubvectorsCached)
-    QuerySpec("sim_ivfadc_topk", (s, d) => Similarity.ivfPqResidualTopK(emb(s, d),
-      pre = Some(Similarity.residualSubvectorsCached(emb(s, d), d))),
+    QuerySpec("sim_ivfadc_topk", (s, d) => ivfadcSeeded(s, d),
       Similarity.sqlIvfPqResidualTopK()),
     // the Lloyd's-trained residual codebook route (Jégou §IV as published:
-    // k-means over residual subvectors) — same query surface, trained=true
+    // k-means over residual subvectors) — same query surface, trained book
     QuerySpec("sim_ivfadc_trained", (s, d) =>
-      Similarity.ivfPqResidualTopK(emb(s, d), trained = true,
-        pre = Some(Similarity.residualSubvectorsCached(emb(s, d), d)),
-        book = Some(Similarity.residualBookCached(emb(s, d), d))),
+      Similarity.ivfPqResidualTopK(emb(s, d),
+        Similarity.residualSubvectorsCached(emb(s, d), d),
+        Similarity.residualBookCached(emb(s, d), d)),
       Similarity.sqlIvfPqResidualTopK(trained = true)),
     QuerySpec("sim_ivfadc_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
-      Similarity.ivfPqResidualTopK(emb(s, d),
-        pre = Some(Similarity.residualSubvectorsCached(emb(s, d), d)))),
+      Similarity.bruteTruthCached(emb(s, d), d), ivfadcSeeded(s, d)),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
           s"WHERE rk <= ${Similarity.AnnTopK}",
@@ -136,8 +141,7 @@ object SimQueries extends QueryFamily("sim") {
       Similarity.sqlClusterTopics()),
     // sim_knn_graph and sim_nsw_walk read the same memoized kNN edge list
     QuerySpec("sim_knn_graph", (s, d) =>
-      Similarity.knnGraph(Tables.embeddings(s, d),
-        pre = Some(Similarity.knnEdgesCached(Tables.embeddings(s, d), d))),
+      Similarity.knnGraph(Similarity.knnEdgesCached(Tables.embeddings(s, d), d)),
       Similarity.sqlKnnGraph),
     QuerySpec("sim_nsw_walk", (s, d) => Similarity.nswWalkCached(Tables.embeddings(s, d), d),
       Similarity.sqlNswWalk),
@@ -153,7 +157,7 @@ object SimQueries extends QueryFamily("sim") {
       Similarity.maxminInitCached(emb(s, d), d).orderBy(col("round")),
       Similarity.sqlMaxminInit),
     QuerySpec("sim_maxmin_cells", (s, d) =>
-      Similarity.maxminCells(emb(s, d), Some(Similarity.maxminInitCached(emb(s, d), d))),
+      Similarity.maxminCells(emb(s, d), Similarity.maxminInitCached(emb(s, d), d)),
       Similarity.sqlMaxminCells),
     QuerySpec("sim_lsh_multiprobe", (s, d) => Similarity.multiprobeTopK(emb(s, d)),
       Similarity.sqlMultiprobeTopK),

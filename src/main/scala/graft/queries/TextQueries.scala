@@ -364,10 +364,10 @@ object TextQueries extends QueryFamily("text") {
       TextOps.winnowCached(docs(s, d), d).orderBy(col("doc_id"), col("fingerprint")),
       TextOps.sqlWinnow),
     QuerySpec("text_winnow_pairs", (s, d) =>
-      TextOps.winnowPairs(docs(s, d), Some(TextOps.winnowCached(docs(s, d), d))),
+      TextOps.winnowPairs(TextOps.winnowCached(docs(s, d), d)),
       TextOps.sqlWinnowPairs),
     QuerySpec("text_source_overlap", (s, d) =>
-      TextOps.sourceOverlap(docs(s, d), Some(TextOps.winnowCached(docs(s, d), d))),
+      TextOps.sourceOverlap(docs(s, d), TextOps.winnowCached(docs(s, d), d)),
       TextOps.sqlSourceOverlap),
     QuerySpec("text_source_tvd", (s, d) => TextOps.sourceTvd(docs(s, d)), TextOps.sqlSourceTvd),
     QuerySpec("text_lexical_profile", (s, d) => TextOps.lexicalProfile(docs(s, d)),

@@ -112,8 +112,6 @@ object StreamOracles {
     * KEY population (session/asof: per-user rows, join: buffered
     * events) keep [[StreamWidth]] — the session oracle's 95k-row
     * gap-merge measurably regresses when serialized onto one state task.
-    * Both are env-overridable (SPARK_GRAFT_STREAM_SHUFFLE pins every
-    * stream session to one width for comparability runs).
     */
   val StreamWidth = 4
   val TinyStateWidth = 1
@@ -121,8 +119,7 @@ object StreamOracles {
       width: Int = StreamWidth): SparkSession =
     graft.Memo.untimed(spark, s"stream.session:$width") {
       val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", width.toString))
+      s.conf.set("spark.sql.shuffle.partitions", width.toString)
       // state history is a correctness no-op for AvailableNow-to-final
       // oracles; retaining one batch of deltas halves maintenance I/O
       s.conf.set("spark.sql.streaming.minBatchesToRetain", "1")

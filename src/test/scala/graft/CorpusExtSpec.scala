@@ -51,7 +51,7 @@ class CorpusExtSpec extends SparkSuite {
     val cand = Dedup.minhashPairs(docs)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val refined = Dedup.editPairs(docs).collect()
+    val refined = Dedup.editPairs(docs, Dedup.minhashPairs(docs)).collect()
     assert(refined.nonEmpty)
     refined.foreach { r =>
       assert(cand((r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))))
@@ -61,7 +61,7 @@ class CorpusExtSpec extends SparkSuite {
     val clones = docFrame(Seq(
       (1L, (1 to 20).map(i => s"w$i").mkString(" ")),
       (2L, (1 to 20).map(i => s"w$i").mkString(" "))))
-    val out = Dedup.editPairs(clones).collect()
+    val out = Dedup.editPairs(clones, Dedup.minhashPairs(clones)).collect()
     assert(out.length == 1 && out.head.getAs[Int]("edit_dist") == 0)
   }
 
@@ -219,7 +219,8 @@ class CorpusExtSpec extends SparkSuite {
     val docs = docFrame(Seq(
       (1L, body), (2L, body), (3L, body), // one cluster of 3
       (4L, (1 to 30).map(i => s"solo$i").mkString(" "))))
-    val out = Dedup.softWeights(docs).collect()
+    val out = Dedup.softWeightsFrom(docs,
+        Dedup.connectedComponents(Dedup.minhashPairs(docs))).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_dups"), r.getAs[Double]("weight"))).toMap
     assert(out(1L) == (3L, 1.0 / 3.0))
@@ -250,7 +251,7 @@ class CorpusExtSpec extends SparkSuite {
     val docs = docFrame(Seq((1L, passage), (2L, long)))
     // lengths differ ~4x: different (lang, n_chars div 25) blocks, so the
     // Jaccard path structurally cannot pair them...
-    assert(Dedup.ngramJaccard(docs).count() == 0)
+    assert(Dedup.ngramJaccard(docs, Dedup.shingleSets(docs)).count() == 0)
     // ...but the containment join does, at full score
     val c = Dedup.containmentPairs(docs, "spec:contain-cross-length").collect()
     assert(c.length == 1 && c.head.getAs[Double]("containment") == 1.0)

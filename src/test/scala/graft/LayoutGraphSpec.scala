@@ -43,8 +43,8 @@ class LayoutGraphSpec extends SparkSuite {
   }
 
   test("pagerank mass is conserved and ranks are positive") {
-    val pr = Graph.pagerank(Tables.orders(spark, dir),
-      Tables.lineitem(spark, dir))
+    val pr = Graph.pagerankCached(Tables.orders(spark, dir),
+      Tables.lineitem(spark, dir), "pr-fixture-" + System.nanoTime)
     val rows = pr.collect()
     assert(rows.length == Graph.PrTopK)
     assert(rows.forall(_.getAs[Double]("rank") > 0))
@@ -59,7 +59,8 @@ class LayoutGraphSpec extends SparkSuite {
     // customer, and the two customers tie exactly.
     val orders = Seq((10L, 1L), (20L, 2L)).toDF("o_orderkey", "o_custkey")
     val lineitem = Seq((10L, 7L), (20L, 7L)).toDF("l_orderkey", "l_suppkey")
-    val pr = Graph.pagerank(orders, lineitem).collect()
+    val pr = Graph.pagerankCached(orders, lineitem,
+      "pr-2x1-" + System.nanoTime).collect()
     val bySupplier = pr.find(_.getAs[Long]("node_id") == Graph.SuppBase + 7L).get
     assert(bySupplier.getAs[Int]("rk") == 1)
     val custRanks = pr.filter(_.getAs[Long]("node_id") < Graph.SuppBase)
@@ -100,7 +101,8 @@ class LayoutGraphSpec extends SparkSuite {
     // symmetric 2x1 graph's invariants must hold exactly as at iters=2
     val orders = Seq((10L, 1L), (20L, 2L)).toDF("o_orderkey", "o_custkey")
     val lineitem = Seq((10L, 7L), (20L, 7L)).toDF("l_orderkey", "l_suppkey")
-    val pr = Graph.pagerank(orders, lineitem, iters = 7).collect()
+    val pr = Graph.pagerankCached(orders, lineitem,
+      "pr-deep-" + System.nanoTime, iters = 7).collect()
     assert(pr.find(_.getAs[Long]("node_id") == Graph.SuppBase + 7L)
       .get.getAs[Int]("rk") == 1)
     val custRanks = pr.filter(_.getAs[Long]("node_id") < Graph.SuppBase)
@@ -110,7 +112,8 @@ class LayoutGraphSpec extends SparkSuite {
 
   test("canonical keeps the longest doc per cluster and all docs appear") {
     val docs = Tables.documents(spark, dir)
-    val can = Dedup.canonical(docs)
+    val can = Dedup.canonicalFrom(docs,
+      Dedup.connectedComponents(Dedup.minhashPairs(docs)))
     assert(can.count() == docs.count())
     // keep_id belongs to the same component and has the component's max
     // n_chars (ties by doc_id): verify via self-join
@@ -243,8 +246,9 @@ class LayoutGraphSpec extends SparkSuite {
 
   test("trained residual IVFADC runs Lloyd's and keeps a valid ranking") {
     val emb = Tables.embeddings(spark, dir)
-    val trained = Similarity.ivfPqResidualTopK(emb, trained = true)
-      .collect()
+    val residuals = Similarity.residualSubvectors(emb)
+    val trained = Similarity.ivfPqResidualTopK(emb, residuals,
+      Similarity.trainSubCodebook(residuals._2)).collect()
     assert(trained.nonEmpty)
     trained.groupBy(_.getAs[Long]("query_id")).foreach { case (_, rows) =>
       val rks = rows.map(_.getAs[Int]("rk")).sorted.toSeq
@@ -253,7 +257,8 @@ class LayoutGraphSpec extends SparkSuite {
     // measured isotropy fact (see scaladoc): on these synthetic
     // embeddings training moves the codebook but not the top-k SETS —
     // pin it so a fixture change that breaks the assumption surfaces
-    val untrained = Similarity.ivfPqResidualTopK(emb).collect()
+    val untrained = Similarity.ivfPqResidualTopK(emb, residuals,
+      Similarity.seedCodebook(residuals._2)).collect()
     def sets(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id")))
         .toSet
@@ -328,8 +333,12 @@ class LayoutGraphSpec extends SparkSuite {
   }
 
   test("triangle census on known graphs: K4, path, star") {
-    def stats(edges: Seq[(Long, Long)]) =
-      Graph.triangleStats(edges.toDF("pa", "pb")).collect().head
+    def stats(pairs: Seq[(Long, Long)]) = {
+      val edges = pairs.toDF("pa", "pb")
+      Graph.triangleStats(edges, Graph.degrees(edges),
+        Graph.edgeCommonCounts(edges, Graph.fullAdjacency(edges)))
+        .collect().head
+    }
     // K4: 6 edges, 4 triangles, 12 wedges, clustering 1.0
     val k4 = stats(for { i <- 0L to 3L; j <- (i + 1) to 3L } yield (i, j))
     assert(k4.getAs[Long]("n_nodes") == 4 && k4.getAs[Long]("n_edges") == 6)
@@ -350,7 +359,8 @@ class LayoutGraphSpec extends SparkSuite {
     // K4 on 1..4 plus a pendant path 4-5-6
     val k4 = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
     val edges = (k4 ++ Seq((4L, 5L), (5L, 6L))).toDF("pa", "pb")
-    val out = Graph.commonNeighbors(edges).collect()
+    val out = Graph.commonNeighbors(
+      Graph.edgeCommonCounts(edges, Graph.fullAdjacency(edges))).collect()
     assert(out.length == 8)
     val byPair = out.map(r => (r.getAs[Long]("pa"), r.getAs[Long]("pb")) ->
       r.getAs[Long]("n_common")).toMap
@@ -366,7 +376,8 @@ class LayoutGraphSpec extends SparkSuite {
     // K4 on 1..4 plus a pendant path 4-5-6: N(1)={2,3,4}, N(4)={1,2,3,5}
     val k4 = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
     val edges = (k4 ++ Seq((4L, 5L), (5L, 6L))).toDF("pa", "pb")
-    val out = Graph.linkJaccard(edges).collect()
+    val out = Graph.linkJaccard(
+      Graph.edgeCommonCounts(edges, Graph.fullAdjacency(edges))).collect()
     assert(out.length == 8)
     val byPair = out.map(r => (r.getAs[Long]("pa"), r.getAs[Long]("pb")) ->
       (r.getAs[Double]("jaccard"), r.getAs[Long]("pref_attach"))).toMap
@@ -406,7 +417,9 @@ class LayoutGraphSpec extends SparkSuite {
     // K6 on 1..6 plus a pendant path 6-7-8; LccMinDeg=5 keeps 1..6 only
     val k6 = for (a <- 1L to 6L; b <- (a + 1) to 6L) yield (a, b)
     val edges = (k6 ++ Seq((6L, 7L), (7L, 8L))).toDF("pa", "pb")
-    val out = Graph.localClustering(edges).collect()
+    val out = Graph.localClustering(
+      Graph.edgeCommonCounts(edges, Graph.fullAdjacency(edges)),
+      Graph.degrees(edges)).collect()
     assert(out.map(_.getAs[Long]("node_id")).toSet == (1L to 6L).toSet)
     val by = out.map(r => r.getAs[Long]("node_id") -> r).toMap
     (1L to 5L).foreach { v =>
@@ -426,15 +439,16 @@ class LayoutGraphSpec extends SparkSuite {
     // K5 on 1..5 (internal degree 4) + four leaves on node 1
     val edges = (for { i <- 1L to 5L; j <- (i + 1) to 5L } yield (i, j)) ++
       (10L to 13L).map(l => (1L, l))
-    val prof = Graph.peelProfile(edges.toDF("pa", "pb"), k = 3, rounds = 2)
+    val e = edges.toDF("pa", "pb")
+    val prof = Graph.peelProfile(e, Graph.degrees(e), k = 3, rounds = 2)
       .collect().map(r => (r.getAs[Long]("round"),
         r.getAs[Long]("n_nodes"), r.getAs[Long]("n_edges"))).toSeq
     // round 0 intact; round 1 drops the degree-1 leaves (node 1 keeps
     // degree 8 >= 3, then 4); round 2 is the fixpoint — the 3-core is K5
     assert(prof == Seq((0L, 9L, 14L), (1L, 5L, 10L), (2L, 5L, 10L)))
     // monotone shrink on the fixture graph too
-    val fx = Graph.peelProfile(Graph.coPartEdges(
-      Tables.lineitem(spark, dir))).collect()
+    val fxEdges = Graph.coPartEdges(Tables.lineitem(spark, dir))
+    val fx = Graph.peelProfile(fxEdges, Graph.degrees(fxEdges)).collect()
       .sortBy(_.getAs[Long]("round")).map(_.getAs[Long]("n_edges")).toSeq
     assert(fx == fx.sorted.reverse, s"edge counts not monotone: $fx")
   }
@@ -469,7 +483,8 @@ class LayoutGraphSpec extends SparkSuite {
       .toDF("o_orderkey", "o_custkey")
     val li = Seq((100L, 10L), (101L, 10L), (102L, 11L), (102L, 12L))
       .toDF("l_orderkey", "l_suppkey")
-    val out = Graph.components(orders, li).collect()
+    val out = Graph.components(Graph.componentLabelsCached(orders, li,
+      "cc-biclique-" + System.nanoTime)).collect()
     assert(out.length == 2)
     // ties on size order by component min-id: cust 1's component first
     assert(out(0).getAs[Long]("component") == 1L)
@@ -484,15 +499,19 @@ class LayoutGraphSpec extends SparkSuite {
     // path 0-1-…-9: seeds {0..4} (ids < BfsSeeds), frontier then walks
     // 5, 6, 7 — one new node per level
     val path = (0L to 8L).map(i => (i, i + 1))
-    val prof = Graph.bfsLevels(path.toDF("pa", "pb")).collect()
+    val edges = path.toDF("pa", "pb")
+    val prof = Graph.bfsLevels(
+      Graph.seededLevels(edges, Graph.degrees(edges))).collect()
       .map(r => (r.getAs[Long]("level"), r.getAs[Long]("n_reached"))).toSeq
     assert(prof == Seq((0L, 5L), (1L, 1L), (2L, 1L), (3L, 1L)))
   }
 
   test("assortativity: star graph is exactly -1; K4 is degree-regular") {
-    def r(edges: Seq[(Long, Long)]): Double =
-      Graph.assortativity(edges.toDF("pa", "pb")).collect()
+    def r(pairs: Seq[(Long, Long)]): Double = {
+      val edges = pairs.toDF("pa", "pb")
+      Graph.assortativity(edges, Graph.degrees(edges)).collect()
         .head.getAs[Double]("assortativity")
+    }
     // hub-to-leaf only: maximal disassortativity, integer-exact -1
     assert(r((1L to 5L).map(l => (0L, l))) == -1.0)
     // a regular graph has zero degree variance: r is NaN (0/0), never a
@@ -512,7 +531,7 @@ class LayoutGraphSpec extends SparkSuite {
     assert(edges.agg(max("pb")).head.getLong(0) == n)
     // degree histogram of the capped clique: every node deg = n-1 = 7 →
     // one bin (2, lo 4) holding all CoPartCap nodes
-    val hist = Graph.degreeHistogram(edges).collect()
+    val hist = Graph.degreeHistogram(Graph.degrees(edges)).collect()
     assert(hist.length == 1 && hist.head.getAs[Long]("bin") == 2 &&
       hist.head.getAs[Long]("lo") == 4 &&
       hist.head.getAs[Long]("n_nodes") == n)
@@ -527,7 +546,7 @@ class LayoutGraphSpec extends SparkSuite {
       (k.toLong, Array(0.01f, sgn * k / 10.0f, 0.02f, 0.0f))
     }
     val df = rows.toDF("vec_id", "embedding")
-    val out = Similarity.pcaPower(df, dim = 4).collect()
+    val out = Similarity.pcaPower(Similarity.pcaParts(df, 4)).collect()
     assert(out.length == 4)
     val loadings = out.map(r =>
       r.getAs[Long]("dim0") -> r.getAs[Double]("loading")).toMap
@@ -556,7 +575,7 @@ class LayoutGraphSpec extends SparkSuite {
       (k.toLong, Array(0.01f, a, 0.02f, b))
     }
     val df = rows.toDF("vec_id", "embedding")
-    val out = Similarity.pcaDeflate(df, dim = 4).collect()
+    val out = Similarity.pcaDeflate(Similarity.pcaArts(df, 4)).collect()
       .map(r => r.getAs[Long]("dim0") -> r).toMap
     val loadings = (1L to 4L).map(i => out(i).getAs[Double]("loading"))
     // unit norm, canonical sign, dominated by dim 4
@@ -581,7 +600,7 @@ class LayoutGraphSpec extends SparkSuite {
     }
     val df = rows.toDF("vec_id", "embedding")
     val mean2 = rows.map(_._2(1).toDouble).sum / rows.length
-    val out = Similarity.pcaProject(df, dim = 4).collect()
+    val out = Similarity.pcaProject(df, Similarity.pcaParts(df, 4)).collect()
     assert(out.length == rows.length)
     out.foreach { r =>
       val k = r.getAs[Long]("vec_id")

@@ -144,7 +144,7 @@ class OpsSpec extends SparkSuite {
     val d = docsOf(
       (1, "a b c d e f g h i j"),
       (2, "a b c d e f g h i j"))
-    val out = Dedup.ngramJaccard(d).collect()
+    val out = Dedup.ngramJaccard(d, Dedup.shingleSets(d)).collect()
     assert(out.length == 1 && out.head.getDouble(2) == 1.0)
   }
 
@@ -181,7 +181,7 @@ class OpsSpec extends SparkSuite {
 
   test("knn graph: k edges per vector, mutual flags are symmetric") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val g = Similarity.knnGraph(e).collect()
+    val g = Similarity.knnGraph(Similarity.knnEdges(e)).collect()
     val bySrc = g.groupBy(_.getAs[Long]("src"))
     bySrc.values.foreach { edges =>
       assert(edges.length <= Similarity.KnnGraphK)
@@ -252,7 +252,8 @@ class OpsSpec extends SparkSuite {
     val txtB = "one two three four five six seven eight nine ten eleven"
     val d = docsOf((1, txtA), (2, txtA), (3, txtA),
       (7, txtB), (8, txtB), (9, "totally unrelated content lives here now"))
-    val stats = Dedup.clusterStats(d).collect()
+    val stats = Dedup.clusterStatsFrom(
+        Dedup.connectedComponents(Dedup.minhashPairs(d))).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(stats == Map(2L -> 1L, 3L -> 1L))
   }
@@ -285,7 +286,7 @@ class OpsSpec extends SparkSuite {
       (2L, shared + " and different trailing content here too", "sB"),
       (3L, "nothing in common with the others at all whatsoever really", "sC"))
       .toDF("doc_id", "text", "source")
-    val out = TextOps.sourceOverlap(d).collect()
+    val out = TextOps.sourceOverlap(d, TextOps.winnow(d)).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[String]("src_a") == "sA" && r.getAs[String]("src_b") == "sB")

@@ -329,28 +329,31 @@ class PlanShapeSpec extends SparkSuite {
   }
 
   test("graph_triangles adjacency: broadcast by default, hash joins on conf") {
-    // the SCALE.md broadcast→hash trade-off as a runtime switch: with
-    // autoBroadcast off so the HINTS are the only broadcast source, the
-    // default mode must broadcast the two adjacency sides, and
+    // the SCALE.md broadcast→hash trade-off as a runtime switch, on the
+    // per-edge common-count pass the census reads: with autoBroadcast
+    // off so the HINTS are the only broadcast source, the default mode
+    // must broadcast the two adjacency sides, and
     // spark.graft.triangles.broadcastAdj=false must run the SAME plan
     // with shuffled equi joins — identical census either way
     import spark.implicits._
+    import graft.operators.Graph
     val edges = (for { i <- 0L to 3L; j <- (i + 1) to 3L } yield (i, j))
       .toDF("pa", "pb")
+    def common = Graph.edgeCommonCounts(edges, Graph.fullAdjacency(edges))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val pB = graft.operators.Graph.triangleStats(edges)
-        .queryExecution.executedPlan.toString
+      val pB = common.queryExecution.executedPlan.toString
       assert("BroadcastHashJoin".r.findAllIn(pB).size == 2,
         "adjacency sides must broadcast by default:\n" + pB)
       spark.conf.set("spark.graft.triangles.broadcastAdj", "false")
-      val dfH = graft.operators.Graph.triangleStats(edges)
-      val pH = dfH.queryExecution.executedPlan.toString
+      val commonH = common
+      val pH = commonH.queryExecution.executedPlan.toString
       assert(!pH.contains("BroadcastHashJoin"),
         "hash mode must not broadcast the adjacency:\n" + pH)
       assert("SortMergeJoin|ShuffledHashJoin".r.findAllIn(pH).size >= 2,
         "adjacency joins lost their shuffled equi form:\n" + pH)
-      val r = dfH.collect().head
+      val r = Graph.triangleStats(edges, Graph.degrees(edges), commonH)
+        .collect().head
       assert(r.getAs[Long]("n_triangles") == 4 &&
         r.getAs[Double]("global_clustering") == 1.0,
         "hash mode changed the census")
@@ -598,14 +601,14 @@ class PlanShapeSpec extends SparkSuite {
       "unexpected probe join on the memoized route:\n" + p)
   }
 
-  test("triangleStats standalone: adjacency broadcasts; wedges never " +
+  test("triangle common-count pass: adjacency broadcasts; wedges never " +
       "materialize") {
-    // the generic-edge-frame route (no memoized common pass) keeps the
-    // degree-oriented edge-iterator: both endpoint lookups probe the
-    // broadcast sorted-adjacency table
-    val edges = graft.operators.Graph.coPartEdgesCached(
-      graft.Tables.lineitem(spark, dir), dir)
-    val p = graft.operators.Graph.triangleStats(edges)
+    // plan the UNCACHED per-edge intersection pass the census reads (the
+    // coPartCommonCached pin hides its shape): both endpoint lookups
+    // probe the broadcast sorted-adjacency table
+    import graft.operators.Graph
+    val edges = Graph.coPartEdgesCached(graft.Tables.lineitem(spark, dir), dir)
+    val p = Graph.edgeCommonCounts(edges, Graph.fullAdjacency(edges))
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, p)
     assert(!p.contains("SortMergeJoin"), "wedge join regressed:\n" + p)
@@ -788,7 +791,8 @@ class PlanShapeSpec extends SparkSuite {
     // exploded to rows, so no Generate may appear above the edge memo
     val edges = graft.operators.Graph.coPartEdgesCached(
       Tables.lineitem(spark, dir), dir)
-    val p = graft.operators.Graph.adamicAdar(edges)
+    val p = graft.operators.Graph.adamicAdar(graft.operators.Graph.aaScores(
+      edges, graft.operators.Graph.degrees(edges)))
       .queryExecution.executedPlan.toString
     assert(!p.contains("Generate"), "wedge rows materialized:\n" + p)
     assert(!p.contains("CartesianProduct"), p)

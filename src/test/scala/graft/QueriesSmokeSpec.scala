@@ -1,7 +1,7 @@
 package graft
 
-/** Smoke: every registered query runs on sf0.001 and returns rows; the
-  * registry is consistent; entry() is non-empty (the driver's t1 gate).
+/** Every registered query runs on sf0.001, returns rows, and matches its
+  * DuckDB oracle; the registry is consistent; entry() is non-empty.
   */
 class QueriesSmokeSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -32,9 +32,27 @@ class QueriesSmokeSpec extends SparkSuite {
     assert(e.getMessage.contains(core.specs.head.name))
   }
 
-  for ((name, fn) <- SparkEntry.queries) {
+  // every result is written through Verify's dump into one fresh
+  // directory; the last test compares them all with their DuckDB oracles
+  private lazy val outDir =
+    java.nio.file.Files.createTempDirectory("graft_verify").toString
+
+  for (name <- SparkEntry.queries.keys) {
     test(s"$name runs and returns rows on sf0.001") {
-      assert(fn(spark, dir).count() > 0)
+      assert(Verify.dump(spark, dir, outDir, Seq(name)).isEmpty,
+        s"$name threw")
+      assert(spark.read.parquet(s"$outDir/$name").count() > 0)
     }
+  }
+
+  // fails, never skips, when python3 or its duckdb module is missing:
+  // the start() throws, or check.py exits non-zero on the import
+  test("every result matches its DuckDB oracle (tools/check.py)") {
+    Verify.writeOracleSql(outDir)
+    val proc = new ProcessBuilder("python3", "tools/check.py", dir, outDir)
+      .redirectErrorStream(true).start()
+    val log = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() == 0,
+      log.linesIterator.filterNot(_.startsWith("PASS ")).mkString("\n"))
   }
 }

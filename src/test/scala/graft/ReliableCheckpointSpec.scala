@@ -27,19 +27,20 @@ class ReliableCheckpointSpec extends SparkSuite {
   private def docs: DataFrame = Tables.documents(spark, dir)
   private def emb: DataFrame = Tables.embeddings(spark, dir)
 
-  // uncached builders: the per-(session, dir) memos would hand the
-  // second run the FIRST run's pinned frames and the comparison would
-  // be vacuous — every operator here rebuilds from raw tables
+  // the registry's memo routes with a fresh cache key per call: the
+  // per-(session, key) memos would otherwise hand the second run the
+  // FIRST run's pinned frames and the comparison would be vacuous
   private val family: Seq[(String, () => DataFrame)] = Seq(
     "pagerank" -> (() =>
-      Graph.pagerank(Tables.orders(spark, dir), Tables.lineitem(spark, dir))),
+      Graph.pagerankCached(Tables.orders(spark, dir),
+        Tables.lineitem(spark, dir), "ck-pr-" + System.nanoTime)),
     "label_propagation" -> (() =>
       Dedup.labelPropagation(Dedup.minhashPairs(docs), docs)),
-    "lloyds_kmeans" -> (() => Similarity.ivfKmeans(emb)),
+    "lloyds_kmeans" -> (() => Similarity.ivfKmeans(emb,
+      Similarity.ivfCentsCached(emb, "ck-kmeans-" + System.nanoTime))),
     "bpe_merges" -> (() => TextOps.bpeMerges(docs, "ck-bpe-" + System.nanoTime)),
-    "nsw_walk" -> (() => Similarity.nswWalk(emb)),
-    // fresh cache keys per call: the prede/prdeg memos would otherwise
-    // hand run 2 the run-1 pinned frames (the vacuous-comparison trap)
+    "nsw_walk" -> (() =>
+      Similarity.nswWalkCached(emb, "ck-nsw-" + System.nanoTime)),
     "katz_4rounds" -> (() =>
       Graph.katzCached(Tables.orders(spark, dir),
         Tables.lineitem(spark, dir), "ck-katz-" + System.nanoTime,

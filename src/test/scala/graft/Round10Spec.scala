@@ -308,30 +308,4 @@ class Round10Spec extends SparkSuite {
         s"graph $g: refine changed within-weight")
     }
   }
-
-  // ------------------------- memo composition points (opt round 1)
-  // The registry now feeds editPairs the ClusterArtifacts pair memo and
-  // ngramJaccard the shingle-set memo; the pre-supplied route must be
-  // row-identical to the standalone route on the fixture corpus.
-  test("editPairs: pairsPre route equals the standalone route") {
-    import graft.operators.Dedup
-    val d = Tables.documents(spark, dir)
-    val standalone = Dedup.editPairs(d).collect().toSeq
-    val viaMemo = Dedup.editPairs(d,
-      Some(Dedup.clusterArtifactsCached(d, dir).pairs)).collect().toSeq
-    assert(standalone.nonEmpty, "no edit pairs on the fixture — " +
-      "the equivalence is vacuous")
-    assert(viaMemo == standalone)
-  }
-
-  test("ngramJaccard: setsPre route equals the standalone route") {
-    import graft.operators.Dedup
-    val d = Tables.documents(spark, dir)
-    val standalone = Dedup.ngramJaccard(d).collect().toSeq
-    val viaMemo = Dedup.ngramJaccard(d,
-      Some(Dedup.shingleSetsCached(d, dir))).collect().toSeq
-    assert(standalone.nonEmpty, "no jaccard pairs on the fixture — " +
-      "the equivalence is vacuous")
-    assert(viaMemo == standalone)
-  }
 }

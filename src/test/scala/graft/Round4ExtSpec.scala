@@ -210,7 +210,7 @@ class Round4ExtSpec extends SparkSuite {
   test("bandCalibration: totals match the pair set; clones land in bucket 9") {
     val d = Tables.documents(spark, dir)
     val pairs = Dedup.minhashPairs(d)
-    val hist = Dedup.bandCalibration(pairs, d).collect()
+    val hist = Dedup.bandCalibration(pairs, Dedup.shingleSets(d)).collect()
     assert(hist.map(_.getAs[Long]("n_pairs")).sum == pairs.count())
     hist.foreach { r =>
       val (lo, hi) = (r.getAs[Double]("j_min"), r.getAs[Double]("j_max"))
@@ -222,8 +222,8 @@ class Round4ExtSpec extends SparkSuite {
     val text = (1 to 12).map(i => s"cal$i").mkString(" ")
     val clones = Seq((1L, text, "en", "s", 5L), (2L, text, "en", "s", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val ch = Dedup.bandCalibration(Dedup.minhashPairs(clones), clones)
-      .collect()
+    val ch = Dedup.bandCalibration(Dedup.minhashPairs(clones),
+      Dedup.shingleSets(clones)).collect()
     assert(ch.length == 1 && ch.head.getAs[Long]("bucket") == 9L &&
       ch.head.getAs[Double]("j_min") == 1.0)
   }
@@ -269,7 +269,9 @@ class Round4ExtSpec extends SparkSuite {
       val v = Array.fill(64)(if (i % 2 == 0) 1.0f else -1.0f)
       (i.toLong, v.toSeq, i % 2)
     }.toDF("vec_id", "embedding", "label")
-    val codes = Similarity.pqKmeans(emb).collect()
+    val codes = Similarity.pqKmeans(emb,
+        Similarity.trainSubCodebook(Similarity.subvectors(emb, "id")))
+      .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
     assert(codes.length == 16 * 4) // every (vector, subspace) coded once
     // within each subspace: all evens share one code, all odds another,
@@ -402,13 +404,14 @@ class Round4ExtSpec extends SparkSuite {
   test("clean funnel: monotone attrition, final stage equals clean()") {
     import graft.operators.CorpusClean
     val d = Tables.documents(spark, dir)
-    val f = CorpusClean.funnel(d).collect()
+    val key = "spec:funnel-" + System.nanoTime
+    val f = CorpusClean.funnelCached(d, key).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(f("1_raw") == d.count())
     assert(f("1_raw") >= f("2_quality") &&
       f("2_quality") >= f("3_exact_dedup") &&
       f("3_exact_dedup") >= f("4_near_dedup"))
-    assert(f("4_near_dedup") == CorpusClean.clean(d).count())
+    assert(f("4_near_dedup") == CorpusClean.cleanCached(d, key).count())
   }
 
   // --------------------------------------------------------- interleave
@@ -432,7 +435,8 @@ class Round4ExtSpec extends SparkSuite {
   // ------------------------------------------------------ corpus export
   test("corpusExport: greedy best-quality prefix, budget-tight, gapless shards") {
     import graft.operators.{CorpusClean, TrainingData}
-    val cleaned = CorpusClean.clean(Tables.documents(spark, dir))
+    val cleaned = CorpusClean.cleanCached(Tables.documents(spark, dir),
+      "spec:export-" + System.nanoTime)
     val export = TrainingData.corpusExport(cleaned)
     val rows = export.collect()
     assert(rows.nonEmpty)

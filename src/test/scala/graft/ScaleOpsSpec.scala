@@ -98,19 +98,20 @@ class ScaleOpsSpec extends SparkSuite {
     // band sub-block of 120 > JaccardMaxBlock — dropped, zero pairs (the
     // quadratic expansion never happens)
     val uniform = block((1L to 120L).map(i => (i, textA)): _*)
-    assert(Dedup.ngramJaccard(uniform).count() == 0)
+    assert(Dedup.ngramJaccard(uniform, Dedup.shingleSets(uniform)).count() == 0)
 
     // (b) signal preserved: 60 A + 60 B in the same oversized block split
     // into two band sub-blocks of 60 ≤ cap; all within-group pairs survive
     val mixed = block((1L to 120L).map(i =>
       (i, if (i % 2 == 0) textA else textB)): _*)
-    val pairs = Dedup.ngramJaccard(mixed).collect()
+    val pairs = Dedup.ngramJaccard(mixed, Dedup.shingleSets(mixed)).collect()
     assert(pairs.length == 2 * (60 * 59 / 2), s"got ${pairs.length}")
     assert(pairs.forall(r => r.getDouble(2) == 1.0)) // no cross-text pair
 
     // (c) small blocks keep the plain (lang, bucket) key — all pairs
     val small = block((1L to 20L).map(i => (i, textA)): _*)
-    assert(Dedup.ngramJaccard(small).count() == 20 * 19 / 2)
+    assert(Dedup.ngramJaccard(small, Dedup.shingleSets(small)).count() ==
+      20 * 19 / 2)
   }
 
   test("connected components fall back to star rounds past the maxIter bound") {
