@@ -182,7 +182,9 @@ object Bench {
     // never pays them — without this block the suite total silently
     // excluded ~3–5 s of genuine one-time work (round-10 verdict #1).
     // The pass-1 samples retain the cost per query; this names it per
-    // memo key so graders can add it back or compare it round-over-round.
+    // ledger key (`name@<input semanticHash hex>`, see MemoLedger). Each
+    // build is credited its self time, so memo_build_total counts every
+    // build second once even though builds nest.
     val memoBuild = MemoLedger.drain()
     SuiteRun(results, samples, lb, loadAvg1(), spreadMedian, contended,
       noisy, memoBuild)
@@ -209,7 +211,8 @@ object Bench {
 
   /** The per-config JSON fields shared by the primary block and
     * gate_config: totals, per-query mins (-1 for a failed query), the
-    * failed queries, ALL pass samples, family subtotals, and the
+    * failed queries, ALL pass samples, family subtotals, memo build self
+    * seconds per ledger key (`memo_build`) and their sum, and the
     * contention evidence. */
   private def configJson(run: SuiteRun): String =
     s""""value":${run.total},"unit":"sec","queries":${queriesJson(run.queries)},"failed":${jsonStrArr(run.failed)},"families":${famJson(run.queries)},"samples":${samplesJson(run.samples)},"memo_build":${memoJson(run.memoBuild)},"memo_build_total":${r3(run.memoBuild.values.sum)},"loadavg":{"before":${r3(run.loadBefore)},"after":${r3(run.loadAfter)}},"spread_median":${r3(run.spreadMedian)},"contended":${run.contended},"noisy_queries":${jsonStrArr(run.noisyQueries)}"""

@@ -96,10 +96,10 @@ object LouvainOracleDump {
     val (orders, lineitem) = toy(spark)
     writeOne(orders, s"$out/tables/orders.parquet")
     writeOne(lineitem, s"$out/tables/lineitem.parquet")
-    operators.Graph.louvainLevelsCached(orders, lineitem, "oracle-dump")
+    operators.Graph.louvainLevelsCached(orders, lineitem)
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$out/out/graph_louvain_levels")
-    operators.Graph.louvainRefineCached(orders, lineitem, "oracle-dump")
+    operators.Graph.louvainRefineCached(orders, lineitem)
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$out/out/graph_louvain_refine")
     val json = Map(

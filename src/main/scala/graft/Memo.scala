@@ -1,20 +1,27 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.lit
 
 import graft.operators.Iterate
 
 /** The library's one per-session memo: every artifact built once per
-  * (session, key) and reused by later queries of that session — fixture
-  * scan plans, pinned or persisted frames, trained index artifacts,
-  * written bucketed tables, stream source splits.
+  * (session, name, input frames) and reused by later queries of that
+  * session — fixture scan plans, pinned or persisted frames, trained index
+  * artifacts, written bucketed tables, stream source splits.
   *
-  * Keys name the artifact and its input as `family.memo:cacheKey` (e.g.
-  * `dedup.sets:/data/sf0.1`). A cacheKey is the caller's promise
-  * that equal keys mean equal inputs; the registry passes the fixture dir.
-  * Timed builds report their inclusive wall seconds to [[MemoLedger]]
-  * under the same key.
+  * An entry is keyed by what its build reads. `name` names the artifact
+  * and any non-frame value the build reads (`graph.louvc:3`,
+  * `sim.l1sym:16`); `inputs` are the frames it reads, compared by their
+  * canonicalized analyzed plans — Spark's `sameResult`, which ignores
+  * expression ids — and their column names. Two separately built
+  * `Tables.documents(s, d)` frames share one entry; a filtered corpus, a
+  * toy `createDataFrame` or a memo frame re-pinned over a new RDD gets
+  * its own. An entry whose input really is a path (`tables.read`,
+  * `tables.events`, `bucket.tables`, `stream.src`) names the path and
+  * passes no frames. Timed builds report their self seconds to
+  * [[MemoLedger]].
   *
   * Builds run outside any map lock and then race a put-if-absent. Builds
   * nest (louvcc → louvc → prdeg → edges, corpus.clean → dedup.bands), and
@@ -24,41 +31,57 @@ import graft.operators.Iterate
   *
   * Lifecycle: [[invalidate]] drops and releases every entry of a session,
   * the one call needed after rewriting a fixture dir the session already
-  * read. Entries of stopped sessions are dropped on every access, without
+  * read — a file scan's plan compares its root paths, not the files under
+  * them. Entries of stopped sessions are dropped on every access, without
   * a release: their blocks died with the context. (A WeakHashMap would
   * not work: a cached DataFrame strongly references its own session.)
   */
 object Memo {
   private final class Entry(val value: AnyRef, val release: () => Unit)
 
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
+  /** Per input: its canonicalized plan and its column names (which
+    * canonicalization erases, but a build reads). */
+  private final case class Key(session: SparkSession, name: String,
+      inputs: Seq[(LogicalPlan, Seq[String])]) {
+    /** `name@<hex semanticHash of each input>` */
+    def ledger: String = if (inputs.isEmpty) name
+      else inputs.map(i => f"${i._1.hashCode}%x").mkString(s"$name@", "+", "")
+  }
 
-  /** The value of `key` in `spark`, built and timed on first touch. */
-  def apply[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
-    owned(spark, key)(build)(_ => ())
+  private val entries = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
+
+  /** The value of `name` over `inputs` in `spark`, built and timed on
+    * first touch.
+    */
+  def apply[T <: AnyRef](spark: SparkSession, name: String, inputs: Dataset[_]*)(
+      build: => T): T =
+    owned(spark, name, inputs: _*)(build)(_ => ())
 
   /** [[apply]] for a value that holds a resource outside Spark (a scratch
     * directory); `release` frees it when the entry is dropped.
     */
-  def owned[T <: AnyRef](spark: SparkSession, key: String)(build: => T)(
-      release: T => Unit): T =
-    resolve(spark, key) {
-      val v = MemoLedger.timed(key)(build)
+  def owned[T <: AnyRef](spark: SparkSession, name: String, inputs: Dataset[_]*)(
+      build: => T)(release: T => Unit): T = {
+    val k = key(spark, name, inputs)
+    resolve(k) {
+      val v = MemoLedger.timed(k.ledger)(build)
       (v, () => release(v))
     }
+  }
 
   /** [[apply]] without a ledger entry, for plan-level values (scan plans,
     * partitioning decisions, row counts, sessions) that cost no job.
     */
-  def untimed[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
-    resolve(spark, key)((build, () => ()))
+  def untimed[T <: AnyRef](spark: SparkSession, name: String, inputs: Dataset[_]*)(
+      build: => T): T =
+    resolve(key(spark, name, inputs))((build, () => ()))
 
   /** A frame materialized through [[Iterate.pin]]: lineage cut, blocks
     * reclaimed by the context cleaner once the entry is dropped.
     */
-  def pinned(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    apply(spark, key)(Iterate.pin(build))
+  def pinned(spark: SparkSession, name: String, inputs: Dataset[_]*)(
+      build: => DataFrame): DataFrame =
+    apply(spark, name, inputs: _*)(Iterate.pin(build))
 
   /** A frame materialized through an eager `persist`. Unlike a checkpoint,
     * the cached InMemoryRelation keeps its child's outputPartitioning in
@@ -72,8 +95,9 @@ object Memo {
     * cache too. The marker makes the plan match only frames built from
     * the returned DataFrame, and is optimized away after substitution.
     */
-  def persisted(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    owned(spark, key) {
+  def persisted(spark: SparkSession, name: String, inputs: Dataset[_]*)(
+      build: => DataFrame): DataFrame =
+    owned(spark, name, inputs: _*) {
       val df = build.filter(lit(true)).persist()
       df.count()
       df
@@ -85,13 +109,15 @@ object Memo {
     */
   def invalidate(spark: SparkSession): Unit =
     entries.forEach { (k, e) =>
-      if ((k._1 eq spark) && entries.remove(k, e)) e.release()
+      if ((k.session eq spark) && entries.remove(k, e)) e.release()
     }
 
-  private def resolve[T <: AnyRef](spark: SparkSession, key: String)(
-      build: => (T, () => Unit)): T = {
-    entries.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, key)
+  private def key(spark: SparkSession, name: String, inputs: Seq[Dataset[_]]): Key =
+    Key(spark, name, inputs.map(_.queryExecution.analyzed)
+      .map(p => (p.canonicalized, p.output.map(_.name))))
+
+  private def resolve[T <: AnyRef](k: Key)(build: => (T, () => Unit)): T = {
+    entries.keySet.removeIf(_.session.sparkContext.isStopped)
     val hit = entries.get(k)
     if (hit != null) hit.value.asInstanceOf[T]
     else {

@@ -51,10 +51,9 @@ object Tables {
   private def spread(df: DataFrame, key: String): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // .rdd forces physical planning of the scan to learn its split count —
-    // memoize the decision per (session, plan, key) so repeated loads
+    // memoize the decision per (session, scan, key column) so repeated loads
     // don't re-plan
-    Memo.untimed(df.sparkSession,
-        s"tables.spread:$key:${df.queryExecution.logical}") {
+    Memo.untimed(df.sparkSession, s"tables.spread:$key", df) {
       if (df.rdd.getNumPartitions < target)
         df.repartition(org.apache.spark.sql.functions.col(key))
       else df

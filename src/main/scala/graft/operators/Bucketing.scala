@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,15 +35,17 @@ object Bucketing {
   val NBuckets = 8
 
   /** (orders table, lineitem table) names, written once per
-    * (session, dir) through [[graft.Memo]]. External-path tables under a
-    * run-local scratch dir keep the repository tree clean.
+    * (session, dir) through [[graft.Memo.owned]]. External-path tables
+    * under a run-local scratch dir keep the repository tree clean; the
+    * names carry that dir's own name, so no two entries (sessions share
+    * one catalog) ever write the same table. Dropping the entry drops
+    * both tables and deletes the dir.
     */
-  def tables(spark: SparkSession, dir: String): (String, String) =
-    graft.Memo(spark, s"bucket.tables:$dir") {
-      val tag = Integer.toHexString(dir.hashCode)
-      val base = Files.createTempDirectory("graft_bkt").toString
-      val oT = s"graft_bkt_orders_$tag"
-      val lT = s"graft_bkt_lineitem_$tag"
+  def tables(spark: SparkSession, dir: String): (String, String) = {
+    val (oT, lT, _) = graft.Memo.owned(spark, s"bucket.tables:$dir") {
+      val base = Files.createTempDirectory("graft_bkt")
+      val Seq(oT, lT) =
+        Seq("orders", "lineitem").map(t => s"${base.getFileName}_$t")
       // repartition on the bucket key FIRST: task hash partitioning and
       // bucket assignment use the same murmur3 hash, so each bucket lands
       // in exactly one file — the one-file-per-bucket layout Spark
@@ -60,8 +64,13 @@ object Bucketing {
         .write.mode("overwrite")
         .bucketBy(NBuckets, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$base/lineitem").saveAsTable(lT)
-      (oT, lT)
+      (oT, lT, base)
+    } { case (oT, lT, base) =>
+      Seq(oT, lT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      FileUtils.deleteDirectory(base.toFile)
     }
+    (oT, lT)
+  }
 
   /** Per-orderstatus revenue through the bucketed join: the classic
     * fact⋈fact rollup, its join running exchange-free over the

@@ -70,15 +70,15 @@ object CorpusClean {
     CleanArtifacts(kept, survivors, cleaned)
   }
 
-  /** Per-(session, key) memo of [[cleanArtifacts]] — same composition
+  /** Per-(session, `docs`) memo of [[cleanArtifacts]] — same composition
     * cache as [[Dedup.clusterArtifactsCached]], and sharing its band memo:
     * `corpus_clean`, `corpus_clean_funnel`, and `corpus_export` are
     * independently oracled entry points, but a run that evaluates all
     * three pays the metrics → quality → dedup chain once.
     */
-  def cleanArtifactsCached(docs: DataFrame, cacheKey: String): CleanArtifacts =
-    graft.Memo(docs.sparkSession, s"corpus.clean:$cacheKey")(
-      cleanArtifacts(docs, Dedup.minhashBandsCached(docs, cacheKey)))
+  def cleanArtifactsCached(docs: DataFrame): CleanArtifacts =
+    graft.Memo(docs.sparkSession, "corpus.clean", docs)(
+      cleanArtifacts(docs, Dedup.minhashBandsCached(docs)))
 
   private def cleanSelect(a: CleanArtifacts): DataFrame =
     a.cleaned
@@ -87,9 +87,9 @@ object CorpusClean {
       .orderBy(col("doc_id"))
 
   /** The cleaned corpus (doc_id, lang, predicted_lang, n_tokens,
-    * quality_score), read from the per-(session, key) artifact memo. */
-  def cleanCached(docs: DataFrame, cacheKey: String): DataFrame =
-    cleanSelect(cleanArtifactsCached(docs, cacheKey))
+    * quality_score), read from the per-(session, `docs`) artifact memo. */
+  def cleanCached(docs: DataFrame): DataFrame =
+    cleanSelect(cleanArtifactsCached(docs))
 
   /** The WITH-body through the `kept`/`survivors`/`victims` CTEs — shared
     * by [[sqlClean]] and [[sqlFunnel]] so the stage report can never
@@ -159,9 +159,9 @@ object CorpusClean {
       .reduce(_.unionByName(_))
       .orderBy(col("stage"))
 
-  /** [[funnelFrom]] through the per-(session, key) artifact memo. */
-  def funnelCached(docs: DataFrame, cacheKey: String): DataFrame =
-    funnelFrom(docs, cleanArtifactsCached(docs, cacheKey))
+  /** [[funnelFrom]] through the per-(session, `docs`) artifact memo. */
+  def funnelCached(docs: DataFrame): DataFrame =
+    funnelFrom(docs, cleanArtifactsCached(docs))
 
   def sqlFunnel: String =
     s"""WITH $sqlCleanCtes

@@ -1232,7 +1232,7 @@ object Dedup {
     ClusterArtifacts(bands, pairs, connectedComponents(pairs))
   }
 
-  /** Per-(session, key) memo of the pinned LSH band frame alone — the
+  /** Per-(session, `docs`) memo of the pinned LSH band frame alone — the
     * durable signature state of a corpus. Cheaper than
     * [[clusterArtifactsCached]] for consumers that never need pairs or
     * components eagerly (the cleaning pipeline derives its own victim set
@@ -1240,28 +1240,28 @@ object Dedup {
     * cache: whichever is hit first computes the signatures, and the other
     * reuses the pinned blocks.
     */
-  def minhashBandsCached(docs: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo.pinned(docs.sparkSession, s"dedup.bands:$cacheKey")(
+  def minhashBandsCached(docs: DataFrame): DataFrame =
+    graft.Memo.pinned(docs.sparkSession, "dedup.bands", docs)(
       minhashBands(docs))
 
-  /** Per-(session, key) memo of [[clusterArtifacts]] — the composition
+  /** Per-(session, `docs`) memo of [[clusterArtifacts]] — the composition
     * cache that lets independent query entry points (components, stats,
     * canonical, weights, admission — each independently oracled) share
     * one clustering pass, mirroring how a production pipeline would
     * materialize the artifacts once.
     */
-  def clusterArtifactsCached(docs: DataFrame, cacheKey: String): ClusterArtifacts = {
+  def clusterArtifactsCached(docs: DataFrame): ClusterArtifacts = {
     // pairs resolve through the pairs-only memo first, outside this
     // build, so whichever of the artifact consumers and the pairs-only
     // consumers (dedup_edit) runs first, the other reuses the pinned
     // pair frame
-    val pairs = minhashPairsCached(docs, cacheKey)
-    graft.Memo(docs.sparkSession, s"dedup.artifacts:$cacheKey")(
-      ClusterArtifacts(minhashBandsCached(docs, cacheKey), pairs,
+    val pairs = minhashPairsCached(docs)
+    graft.Memo(docs.sparkSession, "dedup.artifacts", docs)(
+      ClusterArtifacts(minhashBandsCached(docs), pairs,
         connectedComponents(pairs)))
   }
 
-  /** Per-(session, key) memo of the PINNED distinct band-collision pair
+  /** Per-(session, `docs`) memo of the PINNED distinct band-collision pair
     * frame alone — [[ClusterArtifacts.pairs]] without the component
     * iteration. `dedup_edit` consumes only pairs; resolving them through
     * [[clusterArtifactsCached]] forced an eager connected-components run
@@ -1269,15 +1269,15 @@ object Dedup {
     * memo: [[clusterArtifactsCached]] builds its pairs through here, so
     * either entry point primes the other.
     */
-  def minhashPairsCached(docs: DataFrame, cacheKey: String): DataFrame = {
+  def minhashPairsCached(docs: DataFrame): DataFrame = {
     // band memo resolved outside this build: its build time is not the
     // pairs memo's
-    val bands = minhashBandsCached(docs, cacheKey)
-    graft.Memo.pinned(docs.sparkSession, s"dedup.pairs:$cacheKey")(
+    val bands = minhashBandsCached(docs)
+    graft.Memo.pinned(docs.sparkSession, "dedup.pairs", docs)(
       bandCollisionPairs(bands).distinct())
   }
 
-  /** Per-(session, key) memo of the PINNED [[shingleSets]] frame — the
+  /** Per-(session, `docs`) memo of the PINNED [[shingleSets]] frame — the
     * sorted-distinct ShingleK-gram sets every exact near-dup verify
     * reads. `decon_minhash` and the `corpus_e2e` capstone both resolve
     * it (the capstone's decon stage IS minhashDecon), and the md5
@@ -1285,8 +1285,8 @@ object Dedup {
     * pin re-ran the whole corpus-sized chain once per query invocation
     * (measured ~0.55 s of every decon_minhash call at sf0.1).
     */
-  def shingleSetsCached(docs: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo.pinned(docs.sparkSession, s"dedup.sets:$cacheKey")(
+  def shingleSetsCached(docs: DataFrame): DataFrame =
+    graft.Memo.pinned(docs.sparkSession, "dedup.sets", docs)(
       shingleSets(docs))
 
   /** Duplicate-cluster size profile: for each cluster size, how many
@@ -1762,14 +1762,14 @@ object Dedup {
   def shingleSets(docs: DataFrame): DataFrame =
     setsFromHashes(shingleHashFrame(docs))
 
-  def minhashDecon(docs: DataFrame, cacheKey: String,
+  def minhashDecon(docs: DataFrame,
       evalMod: Int = TrainingData.EvalMod): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
     // pairs-only memo: decon never reads components, so it must not force
     // the artifact memo's eager component iteration (the dedup_edit
     // discipline); the frame is the SAME pinned pairs the artifact
     // consumers share
-    val pairs = minhashPairsCached(docs, cacheKey)
+    val pairs = minhashPairsCached(docs)
     val cands = pairs
       .filter((col("doc_a") % evalMod === 0) =!=
         (col("doc_b") % evalMod === 0))
@@ -1780,7 +1780,7 @@ object Dedup {
           .otherwise(col("doc_b")).as("eval_id"))
     // memoized pin: the sorted shingle sets feed BOTH sides of the
     // verify join, and the frame is shared with the corpus_e2e capstone
-    val sets = shingleSetsCached(docs, cacheKey)
+    val sets = shingleSetsCached(docs)
     cands
       .join(sets.select(col("doc_id").as("train_id"),
         col("sh").as("sh_t")), Seq("train_id"))
@@ -1872,7 +1872,7 @@ object Dedup {
   val ContainThreshold = 0.6
   val ContainMaxPosting = 100
 
-  def containmentPairs(docs: DataFrame, cacheKey: String): DataFrame = {
+  def containmentPairs(docs: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
     // sets feeds FIVE subtrees (idx→dfOk, idxc, probe, verify a, verify
     // b) that ReuseExchange cannot dedup — materialize so the md5-heavy
@@ -1881,7 +1881,7 @@ object Dedup {
     // [[shingleSetsCached]] frame (shared with decon_minhash /
     // corpus_e2e) supplies it; the `sz` projection over the pinned rows
     // is a cheap map-side size().
-    val sets = shingleSetsCached(docs, cacheKey)
+    val sets = shingleSetsCached(docs)
       .select(col("doc_id"), col("sh"), size(col("sh")).as("sz"))
     // explode_outer, not explode: `sh` is a derived HOF chain and provably
     // non-empty (size(w) >= ShingleK above) — plain explode makes the

@@ -53,33 +53,15 @@ object Graph {
       .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
       .distinct()
 
-  /** Per-(session, key) memo of the PINNED distinct edge set — the
-    * orders⋈lineitem DISTINCT is the expensive part of every graph query,
-    * and the edge list is an interesting product on its own (`graph_edges`
-    * is oracled independently), so compute it once and let pagerank pay
-    * only the rounds.
+  /** Per-(session, `orders`, `lineitem`) memo of the PINNED distinct edge
+    * set — the orders⋈lineitem DISTINCT is the expensive part of every
+    * graph query, and the edge list is an interesting product on its own
+    * (`graph_edges` is oracled independently), so compute it once and let
+    * pagerank pay only the rounds.
     */
-  def custSuppEdgesCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String): DataFrame =
-    cachedPin(orders.sparkSession, cacheKey)(custSuppEdges(orders, lineitem))
-
-  /** Derived graph artifacts (directed edge frames, degree tables,
-    * community assignments) memoized per (session, key) through
-    * [[graft.Memo]] under `graph:key`, materialized by a pin.
-    */
-  private def cachedPin(spark: org.apache.spark.sql.SparkSession,
-      key: String)(build: => DataFrame): DataFrame =
-    graft.Memo.pinned(spark, s"graph:$key")(build)
-
-  /** Like [[cachedPin]] but materialized by [[graft.Memo.persisted]]: the
-    * cached InMemoryRelation KEEPS its child's outputPartitioning in the
-    * planner (a checkpointed RDD scan reports unknown partitioning under
-    * AQE — measured, see `Round8Spec`), so a pre-repartitioned memo lets
-    * every per-round probe join skip the memo-side exchange.
-    */
-  private def cachedPersist(spark: org.apache.spark.sql.SparkSession,
-      key: String)(build: => DataFrame): DataFrame =
-    graft.Memo.persisted(spark, s"graph:$key")(build)
+  def custSuppEdgesCached(orders: DataFrame, lineitem: DataFrame): DataFrame =
+    graft.Memo.pinned(orders.sparkSession, "graph.edges", orders, lineitem)(
+      custSuppEdges(orders, lineitem))
 
   /** Connected components of the cust–supp graph, summarized per
     * component: size, customer count, supplier count, keyed by the
@@ -110,15 +92,14 @@ object Graph {
           .as("n_supp"))
       .orderBy(col("n_nodes").desc, col("component"))
 
-  /** Pinned per-(session, key) memo of the converged per-node label frame
-    * — the reusable artifact of reachability (the cust-supp twin of
-    * [[Dedup.ClusterArtifacts]]' `components`): any per-component
-    * consumer reads labels, it never re-runs the iteration.
+  /** Pinned per-(session, `orders`, `lineitem`) memo of the converged
+    * per-node label frame — the reusable artifact of reachability (the
+    * cust-supp twin of [[Dedup.ClusterArtifacts]]' `components`): any
+    * per-component consumer reads labels, it never re-runs the iteration.
     */
-  def componentLabelsCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String): DataFrame = {
-    val edges = custSuppEdgesCached(orders, lineitem, cacheKey)
-    cachedPin(orders.sparkSession, s"cclab|$cacheKey")(
+  def componentLabelsCached(orders: DataFrame, lineitem: DataFrame): DataFrame = {
+    val edges = custSuppEdgesCached(orders, lineitem)
+    graft.Memo.pinned(orders.sparkSession, "graph.cclab", orders, lineitem)(
       Dedup.connectedComponents(edges.select(col("cust").as("doc_a"),
         (col("supp") + SuppBase).as("doc_b"))))
   }
@@ -176,13 +157,16 @@ object Graph {
     * checkpointed scan would not — Round8Spec), so the per-round
     * memo-side exchange disappears: one |E| shuffle per session instead
     * of rounds×consumers. The e0 count that feeds the width is a count
-    * of the PINNED pair memo — one cheap job per (session, key),
+    * of the PINNED pair memo — one cheap job per (session, e0),
     * amortized inside this memo's own build. */
-  private def directedEdgeMemo(spark: org.apache.spark.sql.SparkSession,
-      e0: DataFrame, cacheKey: String): DataFrame =
-    cachedPersist(spark, s"prede|$cacheKey")(
+  private def directedEdgeMemo(orders: DataFrame,
+      lineitem: DataFrame): DataFrame = {
+    val e0 = custSuppEdgesCached(orders, lineitem)
+    val spark = e0.sparkSession
+    graft.Memo.persisted(spark, "graph.prede", e0)(
       directedEdges(e0).repartition(
         edgePartitions(spark, 2L * e0.count()), col("src")))
+  }
 
   /** (id, deg, n) — per-node degree with |V| riding along as a column
     * (broadcast 1-row aggregate): the plan stays fully declarative, no
@@ -194,21 +178,20 @@ object Graph {
     deg.crossJoin(broadcast(deg.agg(count(lit(1)).as("n"))))
   }
 
-  /** PageRank over the undirected bipartite graph (every node has deg ≥ 1,
-    * so there is no dangling mass). Returns the top-`PrTopK` nodes by final
+  /** PageRank over the undirected bipartite graph (every node has deg ≥ 1, so
+    * there is no dangling mass). Returns the top-`PrTopK` nodes by final
     * rank: (rk, node_id, rank). The directed edge frame AND the degree/|V|
-    * table are pinned in the per-(session, dir) memo: the rank rounds re-read
-    * both frames (edges once per round, deg at round 0 and for the final
-    * top-k), and without the pin each reference re-runs the union +
-    * degree shuffle — measured ~4.2 s → the pin drops the per-query cost
-    * to the rounds themselves. Same memo lifecycle as the edge set.
+    * table are pinned in memos keyed on the edge memo they read: the rank
+    * rounds re-read both frames (edges once per round, deg at round 0 and for
+    * the final top-k), and without the pin each reference re-runs the union +
+    * degree shuffle — measured ~4.2 s → the pin drops the per-query cost to
+    * the rounds themselves. Same memo lifecycle as the edge set.
     */
   def pagerankCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, iters: Int = PrIters): DataFrame = {
-    val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
+      iters: Int = PrIters): DataFrame = {
     val spark = orders.sparkSession
-    val edges = directedEdgeMemo(spark, e0, cacheKey)
-    val degN = cachedPin(spark, s"prdeg|$cacheKey")(degWithN(edges))
+    val edges = directedEdgeMemo(orders, lineitem)
+    val degN = graft.Memo.pinned(spark, "graph.prdeg", edges)(degWithN(edges))
     pagerankRounds(edges, degN, iters)
   }
 
@@ -276,23 +259,23 @@ object Graph {
       .distinct()
   }
 
-  /** Pinned per-(session, dir) memo of the co-occurrence edge set — shared
-    * by `graph_triangles` and `graph_degrees` exactly as
+  /** Pinned per-(session, `lineitem`) memo of the co-occurrence edge set —
+    * shared by `graph_triangles` and `graph_degrees` exactly as
     * [[custSuppEdgesCached]] is shared by `graph_edges`/`graph_pagerank`.
     */
-  def coPartEdgesCached(lineitem: DataFrame, cacheKey: String): DataFrame =
-    cachedPin(lineitem.sparkSession, s"copart|$cacheKey")(
+  def coPartEdgesCached(lineitem: DataFrame): DataFrame =
+    graft.Memo.pinned(lineitem.sparkSession, "graph.copart", lineitem)(
       coPartEdges(lineitem))
 
   /** Pinned degree table of the cached co-occurrence edge set — five
     * queries (triangles, degree histogram, assortativity, BFS, peel round
     * 0) each open with the SAME |V|-row degree aggregate over the memoized
     * edges; pinning it beside the edge memo pays the shuffle once per
-    * (session, dir) instead of once per query.
+    * (session, `lineitem`) instead of once per query.
     */
-  def coPartDegreesCached(lineitem: DataFrame, cacheKey: String): DataFrame =
-    cachedPin(lineitem.sparkSession, s"copartdeg|$cacheKey")(
-      degrees(coPartEdgesCached(lineitem, cacheKey)))
+  def coPartDegreesCached(lineitem: DataFrame): DataFrame =
+    graft.Memo.pinned(lineitem.sparkSession, "graph.copartdeg", lineitem)(
+      degrees(coPartEdgesCached(lineitem)))
 
   /** Node degrees of the undirected (pa < pb) edge frame. */
   private[graft] def degrees(edges: DataFrame): DataFrame =
@@ -380,7 +363,7 @@ object Graph {
     * SET reaches each node at its minimum single-seed distance).
     * Memoized via [[seededLevelsCached]] so the level-synchronous join
     * chain — previously run once by graph_bfs AND once by
-    * graph_closeness per pass — runs once per (session, fixture).
+    * graph_closeness per pass — runs once per (session, `edges`, `deg`).
     */
   def seededLevels(edges: DataFrame,
       deg: DataFrame): DataFrame = {
@@ -413,11 +396,10 @@ object Graph {
     out
   }
 
-  /** [[seededLevels]] memoized per (session, key) — the composition
-    * point graph_bfs and graph_closeness share. */
-  def seededLevelsCached(edges: DataFrame, cacheKey: String,
-      deg: DataFrame): DataFrame =
-    cachedPin(edges.sparkSession, s"seededlevels:$cacheKey")(
+  /** [[seededLevels]] memoized per (session, `edges`, `deg`) — the
+    * composition point graph_bfs and graph_closeness share. */
+  def seededLevelsCached(edges: DataFrame, deg: DataFrame): DataFrame =
+    graft.Memo.pinned(edges.sparkSession, "graph.seededlevels", edges, deg)(
       seededLevels(edges, deg))
 
   def bfsLevels(levels: DataFrame): DataFrame = {
@@ -749,12 +731,12 @@ object Graph {
       .groupBy(col("u"))
       .agg(sort_array(collect_list(col("v"))).as("ns"))
 
-  /** Per-(session, key) pin of [[fullAdjacency]] over the co-part edge
+  /** Per-(session, `lineitem`) pin of [[fullAdjacency]] over the co-part edge
     * memo — shares the edge cache's lifecycle and invalidation.
     */
-  def coPartAdjCached(lineitem: DataFrame, cacheKey: String): DataFrame =
-    cachedPin(lineitem.sparkSession, s"cpadj|$cacheKey")(
-      fullAdjacency(coPartEdgesCached(lineitem, cacheKey)))
+  def coPartAdjCached(lineitem: DataFrame): DataFrame =
+    graft.Memo.pinned(lineitem.sparkSession, "graph.cpadj", lineitem)(
+      fullAdjacency(coPartEdgesCached(lineitem)))
 
   /** k for the truss peel: an edge survives a round iff its triangle
     * support |N(u)∩N(v)| ≥ k−2 (it sits in ≥ k−2 triangles).
@@ -997,18 +979,18 @@ object Graph {
         size(col("na")).cast("long").as("da"),
         size(col("nb")).cast("long").as("db"))
 
-  /** Pinned per-(session, key) edge score frame over the co-part memos —
-    * `graph_common_neighbors` and `graph_link_jaccard` both rank from
+  /** Pinned per-(session, `lineitem`) edge score frame over the co-part
+    * memos — `graph_common_neighbors` and `graph_link_jaccard` both rank from
     * this ONE intersection pass (|E| rows × 5 longs; the intersections,
     * not the rankings, are the cost).
     */
-  def coPartCommonCached(lineitem: DataFrame, cacheKey: String): DataFrame = {
+  def coPartCommonCached(lineitem: DataFrame): DataFrame = {
     // resolve the edge/adjacency memos BEFORE the pin lambda — a nested
     // computeIfAbsent on the shared cache map is a recursive update
     // (the pagerankCached discipline)
-    val edges = coPartEdgesCached(lineitem, cacheKey)
-    val adj = coPartAdjCached(lineitem, cacheKey)
-    cachedPin(lineitem.sparkSession, s"cpcommon|$cacheKey")(
+    val edges = coPartEdgesCached(lineitem)
+    val adj = coPartAdjCached(lineitem)
+    graft.Memo.pinned(lineitem.sparkSession, "graph.cpcommon", lineitem)(
       edgeCommonCounts(edges, adj))
   }
 
@@ -1146,14 +1128,14 @@ object Graph {
           .as("ra_score"))
   }
 
-  /** Pinned per-(session, key) Adamic-Adar score frame over the co-part
+  /** Pinned per-(session, `lineitem`) Adamic-Adar score frame over the co-part
     * memos — the same share-the-pass discipline as
     * [[coPartCommonCached]].
     */
-  def coPartAaCached(lineitem: DataFrame, cacheKey: String): DataFrame = {
-    val edges = coPartEdgesCached(lineitem, cacheKey)
-    val deg = coPartDegreesCached(lineitem, cacheKey)
-    cachedPin(lineitem.sparkSession, s"cpaa|$cacheKey")(
+  def coPartAaCached(lineitem: DataFrame): DataFrame = {
+    val edges = coPartEdgesCached(lineitem)
+    val deg = coPartDegreesCached(lineitem)
+    graft.Memo.pinned(lineitem.sparkSession, "graph.cpaa", lineitem)(
       aaScores(edges, deg))
   }
 
@@ -1438,11 +1420,10 @@ object Graph {
     * oracle unrolls the identical rounds as CTEs.
     */
   def katzCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, iters: Int = PrIters): DataFrame = {
-    val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
+      iters: Int = PrIters): DataFrame = {
     val spark = orders.sparkSession
-    val edges = directedEdgeMemo(spark, e0, cacheKey)
-    val degN = cachedPin(spark, s"prdeg|$cacheKey")(degWithN(edges))
+    val edges = directedEdgeMemo(orders, lineitem)
+    val degN = graft.Memo.pinned(spark, "graph.prdeg", edges)(degWithN(edges))
     katzRounds(edges, degN, iters)
   }
 
@@ -1534,14 +1515,13 @@ object Graph {
     * per-round reduce is an exact-decimal sum.
     */
   def anfCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = AnfRounds): DataFrame = {
+      rounds: Int = AnfRounds): DataFrame = {
     import graft.functions.Exact
     import graft.functions.VectorExprs
     VectorExprs.register(orders.sparkSession)
-    val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
     val spark = orders.sparkSession
-    val edges = directedEdgeMemo(spark, e0, cacheKey)
-    val degN = cachedPin(spark, s"prdeg|$cacheKey")(degWithN(edges))
+    val edges = directedEdgeMemo(orders, lineitem)
+    val degN = graft.Memo.pinned(spark, "graph.prdeg", edges)(degWithN(edges))
     val h0 = conv(substring(md5(concat(lit("anf:"),
       col("id").cast("string"))), 1, 13), 16, 10).cast("long")
     var s = degN.select(col("id").as("node"), h0.as("h"))
@@ -1660,25 +1640,24 @@ object Graph {
     * cast-then-multiply sequence — so the argmax rank (ΔQ desc,
     * community asc) orders bit-identical cross-engine.
     */
-  /** The local-moving assignment (node, c, deg) after `rounds`
-    * synchronized rounds, pinned per (session, key, rounds): both the
+  /** The local-moving assignment (node, c, deg) after `rounds` synchronized
+    * rounds, pinned per (session, `orders`, `lineitem`, rounds): both the
     * flat summary ([[louvainCached]]) and the phase-2 contraction
-    * ([[louvainCoarseCached]]) read this ONE memo, so the iterative cost
-    * is paid once per session no matter how many readouts consume it.
+    * ([[louvainCoarseCached]]) read this ONE memo, so the iterative cost is
+    * paid once per session no matter how many readouts consume it.
     */
   def louvainAssignCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
+      rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    cachedPin(spark, s"louvc|$cacheKey|$rounds")(
-      louvainAssign(orders, lineitem, cacheKey, rounds))
+    graft.Memo.pinned(spark, s"graph.louvc:$rounds", orders, lineitem)(
+      louvainAssign(orders, lineitem, rounds))
   }
 
   private def louvainAssign(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int): DataFrame = {
-    val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
+      rounds: Int): DataFrame = {
     val spark = orders.sparkSession
-    val edges = directedEdgeMemo(spark, e0, cacheKey)
-    val degN = cachedPin(spark, s"prdeg|$cacheKey")(degWithN(edges))
+    val edges = directedEdgeMemo(orders, lineitem)
+    val degN = graft.Memo.pinned(spark, "graph.prdeg", edges)(degWithN(edges))
     val deg = degN.select(col("id"), col("deg"))
     val m2 = degN.agg(sum(col("deg")).as("m2")) // = 2m (directed count)
     // deg rides the assignment frame: Σtot becomes one aggregate and the
@@ -1736,8 +1715,8 @@ object Graph {
   }
 
   def louvainCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
-    val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
+      rounds: Int = LouvainRounds): DataFrame = {
+    val comm = louvainAssignCached(orders, lineitem, rounds)
     // canonical community labels: min member id (stable across engines)
     val label = comm.groupBy(col("c")).agg(min(col("node")).as("label"))
     comm.join(label, Seq("c"))
@@ -1773,22 +1752,21 @@ object Graph {
     * `graph_louvain`, so the iterative prefix is shared, not re-run.
     */
   /** The coarse assignment (node, c, cc, deg) after contraction + one
-    * synchronized weighted round, pinned per (session, key, rounds) —
-    * the summary ([[louvainCoarseCached]]) and the modularity-gain audit
-    * ([[louvainGainCached]]) both read this one memo.
+    * synchronized weighted round, pinned per (session, `orders`, `lineitem`,
+    * rounds) — the summary ([[louvainCoarseCached]]) and the modularity-gain
+    * audit ([[louvainGainCached]]) both read this one memo.
     */
   /** The contraction's weighted super-graph edge list (cs, cd, w) —
     * w(C, D) = number of directed fine edges between members — pinned
-    * per (session, key, rounds): the coarse round, the modularity gain,
-    * and the weighted PageRank all read this ONE frame.
+    * per (session, `orders`, `lineitem`, rounds): the coarse round, the
+    * modularity gain, and the weighted PageRank all read this ONE frame.
     */
   def louvainWeightsCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
+      rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    cachedPin(spark, s"louvw|$cacheKey|$rounds") {
-      val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
-      val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
-      val edges = directedEdgeMemo(spark, e0, cacheKey)
+    graft.Memo.pinned(spark, s"graph.louvw:$rounds", orders, lineitem) {
+      val comm = louvainAssignCached(orders, lineitem, rounds)
+      val edges = directedEdgeMemo(orders, lineitem)
       edges
         .join(comm.select(col("node").as("src"), col("c").as("cs")),
           Seq("src"))
@@ -1799,13 +1777,13 @@ object Graph {
   }
 
   def louvainCoarseAssignCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
+      rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    cachedPin(spark, s"louvcc|$cacheKey|$rounds") {
-      val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
+    graft.Memo.pinned(spark, s"graph.louvcc:$rounds", orders, lineitem) {
+      val comm = louvainAssignCached(orders, lineitem, rounds)
       val m2 = comm.agg(sum(col("deg")).as("m2"))
       // contraction: weighted coarse edges + weighted super-node degrees
-      val w = louvainWeightsCached(orders, lineitem, cacheKey, rounds)
+      val w = louvainWeightsCached(orders, lineitem, rounds)
       val kc = comm.groupBy(col("c")).agg(sum(col("deg")).as("k"))
       val cand = w.filter(col("cs") =!= col("cd"))
         .join(kc.select(col("c").as("cs"), col("k").as("ks")), Seq("cs"))
@@ -1827,9 +1805,8 @@ object Graph {
   }
 
   def louvainCoarseCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
-    val coarse = louvainCoarseAssignCached(orders, lineitem, cacheKey,
-      rounds)
+      rounds: Int = LouvainRounds): DataFrame = {
+    val coarse = louvainCoarseAssignCached(orders, lineitem, rounds)
     val label = coarse.groupBy(col("cc")).agg(min(col("node")).as("label"))
     coarse.join(label, Seq("cc"))
       .groupBy(col("label"))
@@ -1864,12 +1841,9 @@ object Graph {
     * decision rule is the point of the query.
     */
   def louvainGainCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
-    val coarse = louvainCoarseAssignCached(orders, lineitem, cacheKey,
-      rounds)
-    val spark = orders.sparkSession
-    val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
-    val edges = directedEdgeMemo(spark, e0, cacheKey)
+      rounds: Int = LouvainRounds): DataFrame = {
+    val coarse = louvainCoarseAssignCached(orders, lineitem, rounds)
+    val edges = directedEdgeMemo(orders, lineitem)
     val m2 = coarse.agg(sum(col("deg")).as("m2"))
     val x = edges
       .join(coarse.select(col("node").as("src"), col("c").as("c_s"),
@@ -1918,9 +1892,9 @@ object Graph {
   val LouvTopSegs = 3
 
   def louvainSegmentsCached(orders: DataFrame, lineitem: DataFrame,
-      customer: DataFrame, cacheKey: String,
+      customer: DataFrame,
       rounds: Int = LouvainRounds): DataFrame = {
-    val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
+    val comm = louvainAssignCached(orders, lineitem, rounds)
     val lab = comm.groupBy(col("c"))
       .agg(min(col("node")).as("label"), count(lit(1)).as("n_nodes"))
     val wC = org.apache.spark.sql.expressions.Window
@@ -2057,11 +2031,11 @@ object Graph {
     * convergence affordable at 100 TB.
     */
   def louvainWPagerankCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds,
+      rounds: Int = LouvainRounds,
       iters: Int = PrIters): DataFrame = {
     import graft.functions.Exact
-    val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
-    val wgt = louvainWeightsCached(orders, lineitem, cacheKey, rounds)
+    val comm = louvainAssignCached(orders, lineitem, rounds)
+    val wgt = louvainWeightsCached(orders, lineitem, rounds)
     val kc = comm.groupBy(col("c")).agg(sum(col("deg")).as("k"))
     var ranks = kc
       .crossJoin(broadcast(kc.agg(count(lit(1)).as("n"))))
@@ -2155,11 +2129,11 @@ object Graph {
     * the scale down (or α) rather than lose the order-independence.
     */
   def louvainWKatzCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds,
+      rounds: Int = LouvainRounds,
       iters: Int = PrIters): DataFrame = {
     import graft.functions.Exact
-    val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
-    val wgt = louvainWeightsCached(orders, lineitem, cacheKey, rounds)
+    val comm = louvainAssignCached(orders, lineitem, rounds)
+    val wgt = louvainWeightsCached(orders, lineitem, rounds)
     val kc = comm.groupBy(col("c")).agg(sum(col("deg")).as("k"))
     var x = kc.select(col("c").as("id"), lit(1.0).as("x"), col("k"))
     for (_ <- 1 to iters) {
@@ -2403,16 +2377,16 @@ object Graph {
     */
   val LouvainLevelCount = 3
 
-  /** The level map (c, l1, …, l[[LouvainLevelCount]]) — fine community
-    * → accepted per-level labels — pinned per (session, key, rounds).
-    * A |C₀|-row frame: node-level readouts join it against the shared
-    * assignment memo; the levels audit never needs to. */
+  /** The level map (c, l1, …, l[[LouvainLevelCount]]) — fine community →
+    * accepted per-level labels — pinned per (session, `orders`, `lineitem`,
+    * rounds). A |C₀|-row frame: node-level readouts join it against the
+    * shared assignment memo; the levels audit never needs to. */
   def louvainLevelMapsCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
+      rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    cachedPin(spark, s"louvlv|$cacheKey|$rounds") {
-      val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
-      val wgt = louvainWeightsCached(orders, lineitem, cacheKey, rounds)
+    graft.Memo.pinned(spark, s"graph.louvlv:$rounds", orders, lineitem) {
+      val comm = louvainAssignCached(orders, lineitem, rounds)
+      val wgt = louvainWeightsCached(orders, lineitem, rounds)
       val m2 = comm.agg(sum(col("deg")).as("m2"))
       levelMapsFrom(wgt,
         comm.groupBy(col("c")).agg(sum(col("deg")).as("k"))
@@ -2481,11 +2455,11 @@ object Graph {
     * readout. NOTHING here touches fine edges or nodes.
     */
   def louvainLevelsCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame =
+      rounds: Int = LouvainRounds): DataFrame =
     levelsReadoutFrom(
-      louvainAssignCached(orders, lineitem, cacheKey, rounds),
-      louvainWeightsCached(orders, lineitem, cacheKey, rounds),
-      louvainLevelMapsCached(orders, lineitem, cacheKey, rounds))
+      louvainAssignCached(orders, lineitem, rounds),
+      louvainWeightsCached(orders, lineitem, rounds),
+      louvainLevelMapsCached(orders, lineitem, rounds))
 
   /** The per-level Q readout over an arbitrary base partition `comm`
     * (node, c, deg), its contracted weighted graph `wgt` (cs, cd, w),
@@ -2585,31 +2559,28 @@ object Graph {
   }
 
   /** The connectivity-refined assignment (node, c, rc, deg), pinned per
-    * (session, key, rounds) — the refined weights, the refined level
-    * maps, and the [[louvainRefineCached]] readout all read this one
-    * memo (the component iteration runs once per session). */
+    * (session, `orders`, `lineitem`, rounds) — the refined weights, the
+    * refined level maps, and the [[louvainRefineCached]] readout all read
+    * this one memo (the component iteration runs once per session). */
   def louvainRefineAssignCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
+      rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    cachedPin(spark, s"louvrf|$cacheKey|$rounds") {
-      val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
-      val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
-      val edges = directedEdgeMemo(spark, e0, cacheKey)
+    graft.Memo.pinned(spark, s"graph.louvrf:$rounds", orders, lineitem) {
+      val comm = louvainAssignCached(orders, lineitem, rounds)
+      val edges = directedEdgeMemo(orders, lineitem)
       refineAssign(comm, edges)
     }
   }
 
   /** The refined partition's contracted weighted graph (cs, cd, w) —
     * the `rc`-keyed twin of [[louvainWeightsCached]], pinned per
-    * (session, key, rounds). */
+    * (session, `orders`, `lineitem`, rounds). */
   def louvainRefinedWeightsCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
+      rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    cachedPin(spark, s"louvrw|$cacheKey|$rounds") {
-      val refc = louvainRefineAssignCached(orders, lineitem, cacheKey,
-        rounds)
-      val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
-      val edges = directedEdgeMemo(spark, e0, cacheKey)
+    graft.Memo.pinned(spark, s"graph.louvrw:$rounds", orders, lineitem) {
+      val refc = louvainRefineAssignCached(orders, lineitem, rounds)
+      val edges = directedEdgeMemo(orders, lineitem)
       edges
         .join(refc.select(col("node").as("src"), col("rc").as("cs")),
           Seq("src"))
@@ -2620,26 +2591,24 @@ object Graph {
   }
 
   /** The guarded level loop run from the REFINED base partition —
-    * [[levelMapsFrom]] over the refined weights/degrees, pinned per
-    * (session, key, rounds). Connectivity is preserved through every
-    * subsequent level BY CONSTRUCTION: each accepted level-step merge
-    * group is a star around its center `cd` in which every merged `cs`
-    * has an actual weighted edge to the center (candidates come from
-    * the `w` frame, so w(cs, cd) ≥ 1), and a union of connected
-    * communities pairwise linked by real fine edges is connected — so
-    * the one refinement pass per accepted level that Leiden prescribes
-    * is IDENTITY at every level above the base here, and the loop runs
-    * it implicitly for free. The defect lives entirely in the
-    * local-moving base partition, which [[refineAssign]] repairs. */
+    * [[levelMapsFrom]] over the refined weights/degrees, pinned per (session,
+    * `orders`, `lineitem`, rounds). Connectivity is preserved through every
+    * subsequent level BY CONSTRUCTION: each accepted level-step merge group
+    * is a star around its center `cd` in which every merged `cs` has an
+    * actual weighted edge to the center (candidates come from the `w` frame,
+    * so w(cs, cd) ≥ 1), and a union of connected communities pairwise linked
+    * by real fine edges is connected — so the one refinement pass per
+    * accepted level that Leiden prescribes is IDENTITY at every level above
+    * the base here, and the loop runs it implicitly for free. The defect
+    * lives entirely in the local-moving base partition, which
+    * [[refineAssign]] repairs. */
   def louvainRefineLevelMapsCached(orders: DataFrame,
-      lineitem: DataFrame, cacheKey: String,
+      lineitem: DataFrame,
       rounds: Int = LouvainRounds): DataFrame = {
     val spark = orders.sparkSession
-    cachedPin(spark, s"louvrlv|$cacheKey|$rounds") {
-      val refc = louvainRefineAssignCached(orders, lineitem, cacheKey,
-        rounds)
-      val rwgt = louvainRefinedWeightsCached(orders, lineitem, cacheKey,
-        rounds)
+    graft.Memo.pinned(spark, s"graph.louvrlv:$rounds", orders, lineitem) {
+      val refc = louvainRefineAssignCached(orders, lineitem, rounds)
+      val rwgt = louvainRefinedWeightsCached(orders, lineitem, rounds)
       val m2 = refc.agg(sum(col("deg")).as("m2"))
       levelMapsFrom(rwgt,
         refc.groupBy(col("rc")).agg(sum(col("deg")).as("k"))
@@ -2670,15 +2639,12 @@ object Graph {
     * per-level cost is |C_i|-bounded (same as the level step).
     */
   def louvainRefineCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, rounds: Int = LouvainRounds): DataFrame = {
-    val comm = louvainAssignCached(orders, lineitem, cacheKey, rounds)
-    val wgt = louvainWeightsCached(orders, lineitem, cacheKey, rounds)
-    val refc = louvainRefineAssignCached(orders, lineitem, cacheKey,
-      rounds)
-    val rwgt = louvainRefinedWeightsCached(orders, lineitem, cacheKey,
-      rounds)
-    val rmaps = louvainRefineLevelMapsCached(orders, lineitem, cacheKey,
-      rounds)
+      rounds: Int = LouvainRounds): DataFrame = {
+    val comm = louvainAssignCached(orders, lineitem, rounds)
+    val wgt = louvainWeightsCached(orders, lineitem, rounds)
+    val refc = louvainRefineAssignCached(orders, lineitem, rounds)
+    val rwgt = louvainRefinedWeightsCached(orders, lineitem, rounds)
+    val rmaps = louvainRefineLevelMapsCached(orders, lineitem, rounds)
     val m2d = col("m2").cast("double")
     // moved-partition scalars (all 1-row aggregates off shared memos)
     val m2 = comm.agg(sum(col("deg")).as("m2"))
@@ -2990,11 +2956,10 @@ object Graph {
     * [[pagerankCached]]).
     */
   def pprCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String, iters: Int = PrIters): DataFrame = {
-    val e0 = custSuppEdgesCached(orders, lineitem, cacheKey)
+      iters: Int = PrIters): DataFrame = {
     val spark = orders.sparkSession
-    val edges = directedEdgeMemo(spark, e0, cacheKey)
-    val degN = cachedPin(spark, s"prdeg|$cacheKey")(degWithN(edges))
+    val edges = directedEdgeMemo(orders, lineitem)
+    val degN = graft.Memo.pinned(spark, "graph.prdeg", edges)(degWithN(edges))
     pprRounds(edges, degN, iters)
   }
 
@@ -3058,9 +3023,8 @@ object Graph {
     */
   val HitsTopK = PrTopK
 
-  def hitsCached(orders: DataFrame, lineitem: DataFrame,
-      cacheKey: String): DataFrame =
-    hitsFrom(custSuppEdgesCached(orders, lineitem, cacheKey))
+  def hitsCached(orders: DataFrame, lineitem: DataFrame): DataFrame =
+    hitsFrom(custSuppEdgesCached(orders, lineitem))
 
   def hitsFrom(e0: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -387,7 +387,7 @@ object Similarity {
   /** The LSH-bucketed kNN edge list (src, rk, dst, cos) — the shared
     * subtree of [[knnGraph]] and [[nswWalkCached]]. Pinned: both consumers
     * read it at least twice within their own plans, and the suite memo
-    * ([[knnEdgesCached]]) builds it once per (session, fixture).
+    * ([[knnEdgesCached]]) builds it once per (session, `emb`).
     */
   private[graft] def knnEdges(emb: DataFrame): DataFrame =
     knnEdgesWith(emb, lshBucket(col("embedding")))
@@ -414,17 +414,17 @@ object Similarity {
       .transform(Iterate.pin)
   }
 
-  /** [[knnEdges]] memoized per (session, fixture dir) — `sim_knn_graph`
+  /** [[knnEdges]] memoized per (session, `emb`) — `sim_knn_graph`
     * and `sim_nsw_walk` read the same physical edge list in a suite run.
     */
-  def knnEdgesCached(emb: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo(emb.sparkSession, s"sim.knn:$cacheKey")(knnEdges(emb))
+  def knnEdgesCached(emb: DataFrame): DataFrame =
+    graft.Memo(emb.sparkSession, "sim.knn", emb)(knnEdges(emb))
 
   /** The second-hash edge list ([[lshBucket2]]) memoized per (session,
-    * fixture dir) — both `sim_nsw_*` registrations read one copy.
+    * `emb`) — both `sim_nsw_*` registrations read one copy.
     */
-  def knnEdges2Cached(emb: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo(emb.sparkSession, s"sim.lsh2:$cacheKey")(
+  def knnEdges2Cached(emb: DataFrame): DataFrame =
+    graft.Memo(emb.sparkSession, "sim.lsh2", emb)(
       knnEdgesWith(emb, lshBucket2(col("embedding"))))
 
   def knnGraph(edges: DataFrame): DataFrame = {
@@ -560,19 +560,19 @@ object Similarity {
       .transform(Iterate.pin)
   }
 
-  /** [[pivotSymAt]] memoized per (session, fixture dir, tier mod) — all
+  /** [[pivotSymAt]] memoized per (session, `emb`, tier mod) — all
     * `sim_nsw_*` registrations descend through one physical pivot graph
     * per tier. */
-  def pivotSymCached(emb: DataFrame, cacheKey: String,
-      mod: Int = NswPivotMod): DataFrame =
-    graft.Memo(emb.sparkSession, s"sim.l1sym:$mod:$cacheKey")(
+  def pivotSymCached(emb: DataFrame, mod: Int = NswPivotMod): DataFrame =
+    graft.Memo(emb.sparkSession, s"sim.l1sym:$mod", emb)(
       pivotSymAt(emb, mod))
 
   /** Corpus size memo (one parquet row-count per fixture) feeding the
     * data-driven tier ladder. */
-  def nswModsCached(emb: DataFrame, cacheKey: String): Seq[Int] = {
-    val mods = nswTierMods(graft.Memo.untimed[java.lang.Long](emb.sparkSession,
-      s"sim.n:$cacheKey")(Long.box(emb.count())))
+  def nswModsCached(emb: DataFrame): Seq[Int] = {
+    val n = graft.Memo.untimed[java.lang.Long](emb.sparkSession, "sim.n", emb)(
+      Long.box(emb.count()))
+    val mods = nswTierMods(n)
     // Only the registry (oracled) route resolves the ladder through this
     // memo, and the sim_nsw_* SQL oracles statically unroll the
     // two-tier (NswPivotMod, NswL2Mod) ladder. A fixture big enough to
@@ -581,7 +581,7 @@ object Similarity {
     // fix. A larger corpus composes the walk from the uncached builders
     // (nswTierMods, pivotSymAt, nswEntry, nswVisited) and is not gated.
     require(mods == Seq(NswPivotMod, NswL2Mod),
-      s"NSW tier ladder for fixture '$cacheKey' is $mods, but the " +
+      s"NSW tier ladder for a $n-vector corpus is $mods, but the " +
         s"sim_nsw_* SQL oracles unroll the static (${NswPivotMod}, " +
         s"${NswL2Mod}) ladder — regenerate the oracles from the computed " +
         "ladder (sqlNswWalk/sqlNswBeamSweep) before enlarging the fixture")
@@ -589,10 +589,9 @@ object Similarity {
   }
 
   /** The DESCENT graphs (all tiers below the top, sparsest first), each
-    * memoized per (session, fixture, mod). */
-  def pivotSymsCached(emb: DataFrame, cacheKey: String): Seq[DataFrame] =
-    nswModsCached(emb, cacheKey).init.reverse
-      .map(m => pivotSymCached(emb, cacheKey, m))
+    * memoized per (session, `emb`, mod). */
+  def pivotSymsCached(emb: DataFrame): Seq[DataFrame] =
+    nswModsCached(emb).init.reverse.map(m => pivotSymCached(emb, m))
 
   /** Query vectors and normed corpus — the map-side frames every NSW
     * stage scores against. */
@@ -617,24 +616,24 @@ object Similarity {
       .transform(Iterate.pin)
   }
 
-  /** The symmetrized base walk graph memoized per (session, fixture) —
+  /** The symmetrized base walk graph memoized per (session, `emb`) —
     * `sim_nsw_walk`, `sim_nsw_recall` and `sim_nsw_sweep` all expand
     * through ONE physical frame instead of re-materializing the union
     * per query. */
-  def nswSymCached(emb: DataFrame, cacheKey: String): DataFrame = {
+  def nswSymCached(emb: DataFrame): DataFrame = {
     // dependencies resolved outside the build: their build time is not
     // this memo's
-    val e1 = knnEdgesCached(emb, cacheKey)
-    val e2 = knnEdges2Cached(emb, cacheKey)
-    graft.Memo(emb.sparkSession, s"sim.nswsym:$cacheKey")(symmetrized(e1, e2))
+    val e1 = knnEdgesCached(emb)
+    val e2 = knnEdges2Cached(emb)
+    graft.Memo(emb.sparkSession, "sim.nswsym", emb)(symmetrized(e1, e2))
   }
 
   /** The exact brute-force top-[[AnnTopK]] truth set memoized per
-    * (session, fixture) — every `sim_*_recall` query and the sweep
+    * (session, `emb`) — every `sim_*_recall` query and the sweep
     * compare against ONE pinned ranking instead of re-scoring the
     * corpus per query. */
-  def bruteTruthCached(emb: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo.pinned(emb.sparkSession, s"sim.brute:$cacheKey")(
+  def bruteTruthCached(emb: DataFrame): DataFrame =
+    graft.Memo.pinned(emb.sparkSession, "sim.brute", emb)(
       bruteTopK(emb).filter(col("rk") <= AnnTopK)
         .select(col("query_id"), col("cand_id")))
 
@@ -740,28 +739,28 @@ object Similarity {
     Iterate.pin(visited.distinct())
   }
 
-  /** [[nswEntryScored]] memoized per (session, fixture); the top mod
+  /** [[nswEntryScored]] memoized per (session, `emb`); the top mod
     * rides the key so a fixture-size change can never serve a stale
     * tier scan. */
-  def nswEntryScoredCached(emb: DataFrame, cacheKey: String): DataFrame = {
-    val topMod = nswModsCached(emb, cacheKey).last
-    graft.Memo(emb.sparkSession, s"sim.nswentry:$topMod:$cacheKey") {
+  def nswEntryScoredCached(emb: DataFrame): DataFrame = {
+    val topMod = nswModsCached(emb).last
+    graft.Memo(emb.sparkSession, s"sim.nswentry:$topMod", emb) {
       val (q, corpus) = nswQCorpus(emb)
       nswEntryScored(q, corpus, topMod)
     }
   }
 
   /** The beam-[[NswBeam]] visited set (query_id, node) memoized per
-    * (session, fixture) — `sim_nsw_walk` and `sim_nsw_recall` run the
+    * (session, `emb`) — `sim_nsw_walk` and `sim_nsw_recall` run the
     * SAME deterministic walk, so the second consumer reuses the pinned
     * set and pays only its own final scoring pass. */
-  def nswVisitedCached(emb: DataFrame, cacheKey: String): DataFrame = {
+  def nswVisitedCached(emb: DataFrame): DataFrame = {
     // dependencies resolved outside the build: their build time is not
     // this memo's
-    val es = nswEntryScoredCached(emb, cacheKey)
-    val descent = pivotSymsCached(emb, cacheKey)
-    val sym = nswSymCached(emb, cacheKey)
-    graft.Memo(emb.sparkSession, s"sim.nswvis:$cacheKey") {
+    val es = nswEntryScoredCached(emb)
+    val descent = pivotSymsCached(emb)
+    val sym = nswSymCached(emb)
+    graft.Memo(emb.sparkSession, "sim.nswvis", emb) {
       val (q, corpus) = nswQCorpus(emb)
       // beam is the constant NswBeam: dropping it keeps the set distinct
       nswVisited(sym, q, corpus,
@@ -784,11 +783,11 @@ object Similarity {
   }
 
   /** Graph-walk ANN answer: every shared artifact (edge lists, pivot
-    * graph, entry scan, visited set) memoized per (session, fixture), so
+    * graph, entry scan, visited set) memoized per (session, `emb`), so
     * the walk itself is one scoring pass over the pinned visited set. */
-  def nswWalkCached(emb: DataFrame, cacheKey: String): DataFrame = {
+  def nswWalkCached(emb: DataFrame): DataFrame = {
     val (q, corpus) = nswQCorpus(emb)
-    nswFinal(q, corpus, nswVisitedCached(emb, cacheKey))
+    nswFinal(q, corpus, nswVisitedCached(emb))
   }
 
   /** Beam-width sweep for the graph walk — recall@k AND vertices touched
@@ -804,11 +803,10 @@ object Similarity {
 
   /** The beam-width sweep over the memoized walk artifacts (edge lists,
     * pivot graphs, entry scan) and the memoized brute truth. */
-  def nswBeamSweepCached(emb: DataFrame, cacheKey: String): DataFrame = {
+  def nswBeamSweepCached(emb: DataFrame): DataFrame = {
     val (q, corpus) = nswQCorpus(emb)
-    nswSweepFrom(nswSymCached(emb, cacheKey), pivotSymsCached(emb, cacheKey),
-      q, corpus, nswEntryScoredCached(emb, cacheKey),
-      bruteTruthCached(emb, cacheKey))
+    nswSweepFrom(nswSymCached(emb), pivotSymsCached(emb), q, corpus,
+      nswEntryScoredCached(emb), bruteTruthCached(emb))
   }
 
   private def nswSweepFrom(sym: DataFrame, descent: Seq[DataFrame],
@@ -1294,15 +1292,15 @@ object Similarity {
     * convention's). Plan adds ONE broadcast semi-join (8 ids) on top of
     * cellBalance's shape.
     */
-  /** Per-(session, key) memo of the PINNED [[maxminInit]] centers frame:
+  /** Per-(session, `emb`) memo of the PINNED [[maxminInit]] centers frame:
     * the Gonzalez loop is NCentroids−1 sequential argmax+update rounds
     * (each an eager pin — ~15 driver-blocking jobs per call), and BOTH
     * `sim_maxmin_init` and `sim_maxmin_cells` run it — memoizing the
     * 8-row centers output runs the loop once per session instead of
     * twice per bench pass (measured ~0.9 s of every maxminCells call).
     */
-  def maxminInitCached(emb: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo.pinned(emb.sparkSession, s"sim.maxmin:$cacheKey")(
+  def maxminInitCached(emb: DataFrame): DataFrame =
+    graft.Memo.pinned(emb.sparkSession, "sim.maxmin", emb)(
       maxminInit(emb))
 
   def maxminCells(emb: DataFrame, init: DataFrame): DataFrame = {
@@ -2881,38 +2879,34 @@ object Similarity {
     (assigned, rsubs)
   }
 
-  /** Pinned per-(session, key) memos of TRAINED index artifacts — coarse
+  /** Pinned per-(session, `emb`) memos of TRAINED index artifacts — coarse
     * centroids ([[ivfTrainedCents]]) and per-subspace PQ codebooks
     * ([[trainSubCodebook]] on raw subvectors). A deployment trains once
     * and persists these beside the index; every consumer (assignment,
     * balance audit, distortion audit) reads the persisted frame rather
     * than re-running Lloyd's — the memo is that artifact store.
     */
-  private def trained(spark: org.apache.spark.sql.SparkSession,
-      cacheKey: String, kind: String)(build: => DataFrame): DataFrame =
-    graft.Memo.pinned(spark, s"sim.$kind:$cacheKey")(build)
+  def ivfCentsCached(emb: DataFrame): DataFrame =
+    graft.Memo.pinned(emb.sparkSession, "sim.ivf_cents", emb)(
+      ivfTrainedCents(emb))
 
-  def ivfCentsCached(emb: DataFrame, cacheKey: String): DataFrame =
-    trained(emb.sparkSession, cacheKey, "ivf_cents")(ivfTrainedCents(emb))
-
-  def pqCodebookCached(emb: DataFrame, cacheKey: String): DataFrame =
-    trained(emb.sparkSession, cacheKey, "pq_book")(
+  def pqCodebookCached(emb: DataFrame): DataFrame =
+    graft.Memo.pinned(emb.sparkSession, "sim.pq_book", emb)(
       trainSubCodebook(subvectors(emb, "id")))
 
   /** Trained RESIDUAL codebooks (Jégou §IV) over the shared residual
     * memo — the IVFADC twin of [[pqCodebookCached]].
     */
-  def residualBookCached(emb: DataFrame, cacheKey: String): DataFrame =
-    trained(emb.sparkSession, cacheKey, "res_book")(
-      trainSubCodebook(residualSubvectorsCached(emb, cacheKey)._2))
+  def residualBookCached(emb: DataFrame): DataFrame =
+    graft.Memo.pinned(emb.sparkSession, "sim.res_book", emb)(
+      trainSubCodebook(residualSubvectorsCached(emb)._2))
 
-  /** Pinned per-(session, key) memo of [[residualSubvectors]] — the
+  /** Pinned per-(session, `emb`) memo of [[residualSubvectors]] — the
     * untrained top-k, the Lloyd's-trained top-k, and the recall harness
     * all open with the SAME assignment + residual explode.
     */
-  def residualSubvectorsCached(emb: DataFrame,
-      cacheKey: String): (DataFrame, DataFrame) =
-    graft.Memo(emb.sparkSession, s"sim.residuals:$cacheKey") {
+  def residualSubvectorsCached(emb: DataFrame): (DataFrame, DataFrame) =
+    graft.Memo(emb.sparkSession, "sim.residuals", emb) {
       val (assigned, rsubs) = residualSubvectors(emb)
       (Iterate.pin(assigned), Iterate.pin(rsubs))
     }
@@ -3845,21 +3839,20 @@ object Similarity {
   def pcaPower(parts: (DataFrame, DataFrame)): DataFrame =
     parts._2.orderBy(col("dim0"))
 
-  /** Pinned per-(session, key) memo of [[pcaParts]] — the component query
+  /** Pinned per-(session, `emb`) memo of [[pcaParts]] — the component query
     * and the projection query share one covariance + power-iteration
     * pass.
     */
-  def pcaArtsCached(emb: DataFrame, cacheKey: String): PcaArtifacts =
-    graft.Memo(emb.sparkSession, s"sim.pca:$cacheKey") {
+  def pcaArtsCached(emb: DataFrame): PcaArtifacts =
+    graft.Memo(emb.sparkSession, "sim.pca", emb) {
       val a = pcaArts(emb, Dim)
       // cov and v1 are pinned by construction; pin the rest once
       PcaArtifacts(Iterate.pin(a.mu), a.cov, Iterate.pin(a.comps),
         a.v1, Iterate.pin(a.lam1), a.dim)
     }
 
-  def pcaPartsCached(emb: DataFrame,
-      cacheKey: String): (DataFrame, DataFrame) = {
-    val a = pcaArtsCached(emb, cacheKey)
+  def pcaPartsCached(emb: DataFrame): (DataFrame, DataFrame) = {
+    val a = pcaArtsCached(emb)
     (a.mu, a.comps)
   }
 

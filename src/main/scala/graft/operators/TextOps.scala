@@ -593,7 +593,7 @@ object TextOps {
   val WinnowMaxBucket = 50
   val WinnowSharedMin = 2
 
-  /** Per-(session, key) memo of the PINNED [[winnow]] fingerprint frame.
+  /** Per-(session, `docs`) memo of the PINNED [[winnow]] fingerprint frame.
     * THREE registry queries run the full per-token winnow window per
     * call otherwise (`text_winnow`, `text_winnow_pairs`,
     * `text_source_overlap` — measured 0.85/1.73/1.12 s at sf0.1, all
@@ -601,8 +601,8 @@ object TextOps {
     * (doc_id, fingerprint) frame is the operator family's durable
     * artifact exactly like the minhash band frame.
     */
-  def winnowCached(docs: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo.pinned(docs.sparkSession, s"text.winnow:$cacheKey")(winnow(docs))
+  def winnowCached(docs: DataFrame): DataFrame =
+    graft.Memo.pinned(docs.sparkSession, "text.winnow", docs)(winnow(docs))
 
   def winnowPairs(fps: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(fps.sparkSession)
@@ -1262,17 +1262,16 @@ object TextOps {
     * both learn the SAME tokenizer (4 rounds of winner-pick + vocabulary
     * rewrite, each round two eager pins), so the trained merge list and
     * the rewritten vocabulary are the family's shared artifact — one
-    * training run per (session, key) instead of one per query per bench
-    * pass.
+    * training run per (session, `docs`, rounds) instead of one per query
+    * per bench pass.
     */
-  private def bpeIterateCached(docs: DataFrame, rounds: Int,
-      cacheKey: String): (Seq[DataFrame], DataFrame) =
-    graft.Memo(docs.sparkSession, s"text.bpe:$rounds:$cacheKey")(
+  private def bpeIterateCached(docs: DataFrame,
+      rounds: Int): (Seq[DataFrame], DataFrame) =
+    graft.Memo(docs.sparkSession, s"text.bpe:$rounds", docs)(
       bpeIterate(docs, rounds))
 
-  def bpeMerges(docs: DataFrame, cacheKey: String,
-      rounds: Int = BpeRounds): DataFrame = {
-    val (merges, _) = bpeIterateCached(docs, rounds, cacheKey)
+  def bpeMerges(docs: DataFrame, rounds: Int = BpeRounds): DataFrame = {
+    val (merges, _) = bpeIterateCached(docs, rounds)
     merges.reduce((a, b) => a.unionByName(b)).orderBy(col("merge_rank"))
   }
 
@@ -1296,9 +1295,8 @@ object TextOps {
     * pair table) — real corpora support thousands of rounds; the constant
     * here is [[BpeRounds]].
     */
-  def bpeEncode(docs: DataFrame, cacheKey: String,
-      rounds: Int = BpeRounds): DataFrame = {
-    val (_, syms) = bpeIterateCached(docs, rounds, cacheKey)
+  def bpeEncode(docs: DataFrame, rounds: Int = BpeRounds): DataFrame = {
+    val (_, syms) = bpeIterateCached(docs, rounds)
     val enc = syms.select(col("word"), size(col("sym")).as("n_sym"))
     // explode_outer: words() output is derived and the inferred
     // size(...) > 0 filter is pure overhead (see line ~482)

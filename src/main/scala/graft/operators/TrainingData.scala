@@ -613,7 +613,7 @@ object TrainingData {
       .select(col("doc_id"),
         array_distinct(Dedup.shingleHashes(col("wh"), DeconK)).as("hs"))
 
-  /** Per-(session, key) memo of the PINNED [[shingleSets]] frame. The
+  /** Per-(session, `docs`) memo of the PINNED [[shingleSets]] frame. The
     * md5 word-hash + k-gram chains are the decon family's CPU; the frame
     * is read THREE times by [[bloomDecon]] (eval grams, train probes,
     * exact verify) and twice by [[decontaminate]], and both queries share
@@ -622,12 +622,12 @@ object TrainingData {
     * don't codegen, so no subexpression elimination applies and there is
     * no exchange below them for ReuseExchange to collapse).
     */
-  private def shingleSetsCached(docs: DataFrame, cacheKey: String): DataFrame =
-    graft.Memo.pinned(docs.sparkSession, s"training.shingles:$cacheKey")(
+  private def shingleSetsCached(docs: DataFrame): DataFrame =
+    graft.Memo.pinned(docs.sparkSession, "training.shingles", docs)(
       shingleSets(docs))
 
-  def decontaminate(docs: DataFrame, cacheKey: String): DataFrame = {
-    val sh = shingleSetsCached(docs, cacheKey)
+  def decontaminate(docs: DataFrame): DataFrame = {
+    val sh = shingleSetsCached(docs)
     // explode_outer, NOT explode: for plain explode Catalyst infers a
     // `size(hs) > 0 AND isnotnull(hs)` filter below the Generate, and
     // predicate pushdown re-inlines the whole shingle chain into that
@@ -721,8 +721,8 @@ object TrainingData {
   private def sqlBloomPos(h: String, j: Int): String =
     s"(($h * ${bloomA(j)} + ${bloomB(j)}) % ${Dedup.MinhashP} % $BloomBits)"
 
-  def bloomDecon(docs: DataFrame, cacheKey: String): DataFrame = {
-    val sh = shingleSetsCached(docs, cacheKey)
+  def bloomDecon(docs: DataFrame): DataFrame = {
+    val sh = shingleSetsCached(docs)
     val evalGrams = sh.filter(col("doc_id") % EvalMod === 0)
       .select(explode_outer(col("hs")).as("h")).distinct()
     // filter build: distinct positions → distinct single-bit masks per

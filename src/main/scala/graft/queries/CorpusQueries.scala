@@ -129,9 +129,9 @@ object CorpusQueries extends QueryFamily("corpus") {
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("corpus_sample", qCorpusSample _, sqlCorpusSample),
-    QuerySpec("corpus_clean", (s, d) => CorpusClean.cleanCached(docs(s, d), d),
+    QuerySpec("corpus_clean", (s, d) => CorpusClean.cleanCached(docs(s, d)),
       CorpusClean.sqlClean),
-    QuerySpec("corpus_clean_funnel", (s, d) => CorpusClean.funnelCached(docs(s, d), d),
+    QuerySpec("corpus_clean_funnel", (s, d) => CorpusClean.funnelCached(docs(s, d)),
       CorpusClean.sqlFunnel),
     QuerySpec("corpus_split", (s, d) => TrainingData.splitStats(docs(s, d)),
       TrainingData.sqlSplitStats),
@@ -162,7 +162,7 @@ object CorpusQueries extends QueryFamily("corpus") {
     // end-to-end export: clean → token-budget select → shard, every stage
     // the already-oracled library operator, composed into ONE plan
     QuerySpec("corpus_export", (s, d) =>
-      TrainingData.corpusExport(CorpusClean.cleanCached(docs(s, d), d)),
+      TrainingData.corpusExport(CorpusClean.cleanCached(docs(s, d))),
       TrainingData.sqlCorpusExport),
     // the export with near-dup dedup IN the pipeline: cleaned survivors
     // restricted to each cluster's canonical doc (keep-longest policy
@@ -170,7 +170,7 @@ object CorpusQueries extends QueryFamily("corpus") {
     // stages — the full LLM-data path clean → dedup → budget → shard
     // as ONE composed plan
     QuerySpec("corpus_export_dedup", (s, d) => TrainingData.corpusExport(
-      CorpusClean.cleanCached(docs(s, d), d)
+      CorpusClean.cleanCached(docs(s, d))
         .join(Dedup.canonicalFrom(docs(s, d), arts(s, d).components)
           .filter(col("kept")).select(col("doc_id")),
           Seq("doc_id"), "left_semi")),
@@ -188,9 +188,9 @@ object CorpusQueries extends QueryFamily("corpus") {
     // -> pack -> mixture, every stage riding its family's shared memo
     QuerySpec("corpus_e2e", (s, d) => TrainingData.corpusE2e(
       docs(s, d),
-      CorpusClean.cleanCached(docs(s, d), d),
+      CorpusClean.cleanCached(docs(s, d)),
       Dedup.canonicalFrom(docs(s, d), arts(s, d).components),
-      Dedup.minhashDecon(docs(s, d), d)),
+      Dedup.minhashDecon(docs(s, d))),
       TrainingData.sqlCorpusE2e()),
     QuerySpec("corpus_pad_audit", (s, d) => TrainingData.padAudit(docs(s, d)),
       TrainingData.sqlPadAudit),

@@ -8,11 +8,11 @@ import Shared.docs
 object DeconQueries extends QueryFamily("decon") {
 
   val specs: Seq[QuerySpec] = Seq(
-    QuerySpec("decon_overlap", (s, d) => TrainingData.decontaminate(docs(s, d), d),
+    QuerySpec("decon_overlap", (s, d) => TrainingData.decontaminate(docs(s, d)),
       TrainingData.sqlDecontaminate),
-    QuerySpec("decon_minhash", (s, d) => Dedup.minhashDecon(docs(s, d), d),
+    QuerySpec("decon_minhash", (s, d) => Dedup.minhashDecon(docs(s, d)),
       Dedup.sqlMinhashDecon()),
-    QuerySpec("decon_bloom", (s, d) => TrainingData.bloomDecon(docs(s, d), d),
+    QuerySpec("decon_bloom", (s, d) => TrainingData.bloomDecon(docs(s, d)),
       TrainingData.sqlBloomDecon),
   )
 }

@@ -15,7 +15,7 @@ object DedupQueries extends QueryFamily("dedup") {
     QuerySpec("dedup_exact", (s, d) => Dedup.exact(docs(s, d)), Dedup.sqlExact),
     // the cluster-policy family (minhash pairs, components, size stats,
     // canonical, weights, admission) shares ONE clustering pass via the
-    // per-(session, dir) ClusterArtifacts memo — each entry stays
+    // per-(session, corpus) ClusterArtifacts memo — each entry stays
     // independently oracled, but bands/pairs/components compute once,
     // exactly as a production pipeline would materialize them
     QuerySpec("dedup_minhash", (s, d) => arts(s, d).pairs.orderBy(col("doc_a"), col("doc_b")),
@@ -29,7 +29,7 @@ object DedupQueries extends QueryFamily("dedup") {
     QuerySpec("dedup_simhash_pairs", (s, d) => Dedup.simhashPairs(docs(s, d)),
       Dedup.sqlSimhashPairs),
     QuerySpec("dedup_jaccard", (s, d) =>
-      Dedup.ngramJaccard(docs(s, d), Dedup.shingleSetsCached(docs(s, d), d)),
+      Dedup.ngramJaccard(docs(s, d), Dedup.shingleSetsCached(docs(s, d))),
       Dedup.sqlNgramJaccard),
     QuerySpec("dedup_embed", (s, d) => Similarity.embedNearDup(emb(s, d)),
       Similarity.sqlEmbedNearDup),
@@ -38,7 +38,7 @@ object DedupQueries extends QueryFamily("dedup") {
     QuerySpec("dedup_communities", (s, d) => Dedup.labelPropagation(arts(s, d).pairs, docs(s, d)),
       Dedup.sqlLabelPropagation(Dedup.sqlMinhashPairs())),
     QuerySpec("dedup_calibration", (s, d) =>
-      Dedup.bandCalibration(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d), d)),
+      Dedup.bandCalibration(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d))),
       Dedup.sqlBandCalibration(Dedup.sqlMinhashPairs())),
     QuerySpec("dedup_minhash_error", (s, d) => Dedup.minhashError(arts(s, d).pairs, docs(s, d)),
       Dedup.sqlMinhashError),
@@ -55,20 +55,20 @@ object DedupQueries extends QueryFamily("dedup") {
     // force the artifact memo's eager component iteration (r10 ADVICE);
     // the frame is the SAME pinned pairs clusterArtifactsCached shares
     QuerySpec("dedup_edit", (s, d) =>
-      Dedup.editPairs(docs(s, d), Dedup.minhashPairsCached(docs(s, d), d)),
+      Dedup.editPairs(docs(s, d), Dedup.minhashPairsCached(docs(s, d))),
       Dedup.sqlEditPairs),
     QuerySpec("dedup_semantic", (s, d) => Similarity.semanticDedup(emb(s, d)),
       Similarity.sqlSemanticDedup),
-    QuerySpec("dedup_containment", (s, d) => Dedup.containmentPairs(docs(s, d), d),
+    QuerySpec("dedup_containment", (s, d) => Dedup.containmentPairs(docs(s, d)),
       Dedup.sqlContainmentPairs),
     QuerySpec("dedup_weights", (s, d) => Dedup.softWeightsFrom(docs(s, d), arts(s, d).components),
       Dedup.sqlSoftWeights),
     QuerySpec("dedup_spans", (s, d) => Dedup.spanClean(docs(s, d)), Dedup.sqlSpanClean),
     QuerySpec("dedup_threshold_sweep", (s, d) =>
-      Dedup.thresholdSweep(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d), d)),
+      Dedup.thresholdSweep(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d))),
       Dedup.sqlThresholdSweep),
     QuerySpec("dedup_scurve", (s, d) =>
-      Dedup.scurve(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d), d)),
+      Dedup.scurve(arts(s, d).pairs, Dedup.shingleSetsCached(docs(s, d))),
       Dedup.sqlScurve),
     QuerySpec("dedup_band_profile", (s, d) => Dedup.bandProfile(arts(s, d).bands),
       Dedup.sqlBandProfile()),

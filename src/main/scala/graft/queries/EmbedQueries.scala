@@ -14,13 +14,13 @@ object EmbedQueries extends QueryFamily("embed") {
     QuerySpec("embed_quantize", (s, d) => Similarity.quantize(emb(s, d)), Similarity.sqlQuantize),
     // the two spectral queries share one pinned covariance + power pass
     QuerySpec("embed_pca_power", (s, d) =>
-      Similarity.pcaPower(Similarity.pcaPartsCached(emb(s, d), d)),
+      Similarity.pcaPower(Similarity.pcaPartsCached(emb(s, d))),
       Similarity.sqlPcaPower),
     QuerySpec("embed_pca_project", (s, d) =>
-      Similarity.pcaProject(emb(s, d), Similarity.pcaPartsCached(emb(s, d), d)),
+      Similarity.pcaProject(emb(s, d), Similarity.pcaPartsCached(emb(s, d))),
       Similarity.sqlPcaProject),
     QuerySpec("embed_pca_deflate", (s, d) =>
-      Similarity.pcaDeflate(Similarity.pcaArtsCached(emb(s, d), d)),
+      Similarity.pcaDeflate(Similarity.pcaArtsCached(emb(s, d))),
       Similarity.sqlPcaDeflate),
     QuerySpec("embed_drift", (s, d) => Similarity.embedDrift(emb(s, d)), Similarity.sqlEmbedDrift),
   )

@@ -15,5 +15,5 @@ object Shared {
     * [[Dedup.clusterArtifactsCached]]).
     */
   private[queries] def arts(s: SparkSession, dir: String): Dedup.ClusterArtifacts =
-    Dedup.clusterArtifactsCached(docs(s, dir), dir)
+    Dedup.clusterArtifactsCached(docs(s, dir))
 }

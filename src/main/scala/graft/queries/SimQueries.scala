@@ -12,14 +12,14 @@ object SimQueries extends QueryFamily("sim") {
 
   /** Residual IVFADC top-k under the training-free seed codebook. */
   private def ivfadcSeeded(s: SparkSession, dir: String): DataFrame = {
-    val residuals = Similarity.residualSubvectorsCached(emb(s, dir), dir)
+    val residuals = Similarity.residualSubvectorsCached(emb(s, dir))
     Similarity.ivfPqResidualTopK(emb(s, dir), residuals,
       Similarity.seedCodebook(residuals._2))
   }
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("sim_pq_code_usage", (s, d) =>
-      Similarity.pqCodeUsage(emb(s, d), Similarity.pqCodebookCached(emb(s, d), d)),
+      Similarity.pqCodeUsage(emb(s, d), Similarity.pqCodebookCached(emb(s, d))),
       Similarity.sqlPqCodeUsage()),
     QuerySpec("sim_centroids", (s, d) => Similarity.centroids(emb(s, d)), Similarity.sqlCentroids),
     QuerySpec("sim_brute_topk", (s, d) => Similarity.bruteTopK(emb(s, d)), Similarity.sqlBruteTopK),
@@ -29,7 +29,7 @@ object SimQueries extends QueryFamily("sim") {
     // mismatched depths is structurally capped at k_approx/k_exact and
     // can never reach its target
     QuerySpec("sim_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
+      Similarity.bruteTruthCached(emb(s, d)),
       Similarity.ivfTopK(emb(s, d))),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
@@ -52,7 +52,7 @@ object SimQueries extends QueryFamily("sim") {
     // quantization + pruning loss the 100 TB recipe trades for its scan
     // shape (compare with sim_recall = IVF-only loss at the same depth)
     QuerySpec("sim_ivfpq_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
+      Similarity.bruteTruthCached(emb(s, d)),
       Similarity.ivfPqTopK(emb(s, d))),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
@@ -63,7 +63,7 @@ object SimQueries extends QueryFamily("sim") {
     // recall-vs-nprobe tuning curve: the table an operator reads to pick
     // the probe count; exact side computed once and pinned across probes
     QuerySpec("sim_recall_sweep", (s, d) => {
-      val exact = Similarity.bruteTruthCached(emb(s, d), d)
+      val exact = Similarity.bruteTruthCached(emb(s, d))
       (1 to 3).map(p =>
         Similarity.recallAtK(exact, Similarity.ivfTopKProbe(emb(s, d), p))
           .withColumn("nprobe", lit(p)))
@@ -79,28 +79,28 @@ object SimQueries extends QueryFamily("sim") {
             Similarity.sqlIvfTopKProbe(p)) + "\n)"
       }.mkString("\nUNION ALL\n") + "\nORDER BY nprobe, query_id")),
     // the four Lloyd's queries read trained artifacts from the shared
-    // per-(session, dir) memos — train once, consume everywhere
+    // per-(session, embeddings) memos — train once, consume everywhere
     QuerySpec("sim_ivf_kmeans", (s, d) =>
-      Similarity.ivfKmeans(emb(s, d), Similarity.ivfCentsCached(emb(s, d), d)),
+      Similarity.ivfKmeans(emb(s, d), Similarity.ivfCentsCached(emb(s, d))),
       Similarity.sqlIvfKmeans()),
     QuerySpec("sim_pq_kmeans", (s, d) =>
-      Similarity.pqKmeans(emb(s, d), Similarity.pqCodebookCached(emb(s, d), d)),
+      Similarity.pqKmeans(emb(s, d), Similarity.pqCodebookCached(emb(s, d))),
       Similarity.sqlPqKmeans()),
     QuerySpec("sim_ivf_balance_trained", (s, d) =>
-      Similarity.ivfBalanceTrained(emb(s, d), Similarity.ivfCentsCached(emb(s, d), d)),
+      Similarity.ivfBalanceTrained(emb(s, d), Similarity.ivfCentsCached(emb(s, d))),
       Similarity.sqlIvfBalanceTrained()),
     QuerySpec("sim_pq_distortion_trained", (s, d) =>
-      Similarity.pqDistortionTrained(emb(s, d), Similarity.pqCodebookCached(emb(s, d), d)),
+      Similarity.pqDistortionTrained(emb(s, d), Similarity.pqCodebookCached(emb(s, d))),
       Similarity.sqlPqDistortionTrained()),
     QuerySpec("sim_ivf_radius_trained", (s, d) =>
-      Similarity.ivfRadiusTrained(emb(s, d), Similarity.ivfCentsCached(emb(s, d), d)),
+      Similarity.ivfRadiusTrained(emb(s, d), Similarity.ivfCentsCached(emb(s, d))),
       Similarity.sqlIvfRadiusTrained()),
     QuerySpec("sim_sq_topk", (s, d) => Similarity.sqTopK(emb(s, d)), Similarity.sqlSqTopK()),
     QuerySpec("sim_sq_rerank", (s, d) => Similarity.sqRerank(emb(s, d)), Similarity.sqlSqRerank),
     QuerySpec("sim_filtered_topk", (s, d) => Similarity.filteredTopK(emb(s, d)),
       Similarity.sqlFilteredTopK),
     QuerySpec("sim_sq_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
+      Similarity.bruteTruthCached(emb(s, d)),
       Similarity.sqTopK(emb(s, d))),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
@@ -109,7 +109,7 @@ object SimQueries extends QueryFamily("sim") {
     QuerySpec("sim_pq_topk", (s, d) => Similarity.pqTopK(emb(s, d)), Similarity.sqlPqTopK()),
     QuerySpec("sim_pq_rerank", (s, d) => Similarity.pqRerank(emb(s, d)), Similarity.sqlPqRerank),
     QuerySpec("sim_pq_rerank_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
+      Similarity.bruteTruthCached(emb(s, d)),
       Similarity.pqRerank(emb(s, d))),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
@@ -124,11 +124,11 @@ object SimQueries extends QueryFamily("sim") {
     // k-means over residual subvectors) — same query surface, trained book
     QuerySpec("sim_ivfadc_trained", (s, d) =>
       Similarity.ivfPqResidualTopK(emb(s, d),
-        Similarity.residualSubvectorsCached(emb(s, d), d),
-        Similarity.residualBookCached(emb(s, d), d)),
+        Similarity.residualSubvectorsCached(emb(s, d)),
+        Similarity.residualBookCached(emb(s, d))),
       Similarity.sqlIvfPqResidualTopK(trained = true)),
     QuerySpec("sim_ivfadc_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d), ivfadcSeeded(s, d)),
+      Similarity.bruteTruthCached(emb(s, d)), ivfadcSeeded(s, d)),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
           s"WHERE rk <= ${Similarity.AnnTopK}",
@@ -137,42 +137,42 @@ object SimQueries extends QueryFamily("sim") {
       Similarity.sqlDimSweep),
     QuerySpec("sim_ndcg", (s, d) => Similarity.ndcgAtK(emb(s, d)), Similarity.sqlNdcg),
     QuerySpec("sim_cluster_topics", (s, d) =>
-      Similarity.clusterTopics(emb(s, d), docs(s, d), Similarity.ivfCentsCached(emb(s, d), d)),
+      Similarity.clusterTopics(emb(s, d), docs(s, d), Similarity.ivfCentsCached(emb(s, d))),
       Similarity.sqlClusterTopics()),
     // sim_knn_graph and sim_nsw_walk read the same memoized kNN edge list
     QuerySpec("sim_knn_graph", (s, d) =>
-      Similarity.knnGraph(Similarity.knnEdgesCached(Tables.embeddings(s, d), d)),
+      Similarity.knnGraph(Similarity.knnEdgesCached(Tables.embeddings(s, d))),
       Similarity.sqlKnnGraph),
-    QuerySpec("sim_nsw_walk", (s, d) => Similarity.nswWalkCached(Tables.embeddings(s, d), d),
+    QuerySpec("sim_nsw_walk", (s, d) => Similarity.nswWalkCached(Tables.embeddings(s, d)),
       Similarity.sqlNswWalk),
     QuerySpec("sim_nsw_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(Tables.embeddings(s, d), d),
-      Similarity.nswWalkCached(Tables.embeddings(s, d), d)),
+      Similarity.bruteTruthCached(Tables.embeddings(s, d)),
+      Similarity.nswWalkCached(Tables.embeddings(s, d))),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
           s"WHERE rk <= ${Similarity.AnnTopK}",
         Similarity.sqlNswWalk)),
     // both maxmin queries read the ONE memoized Gonzalez centers frame
     QuerySpec("sim_maxmin_init", (s, d) =>
-      Similarity.maxminInitCached(emb(s, d), d).orderBy(col("round")),
+      Similarity.maxminInitCached(emb(s, d)).orderBy(col("round")),
       Similarity.sqlMaxminInit),
     QuerySpec("sim_maxmin_cells", (s, d) =>
-      Similarity.maxminCells(emb(s, d), Similarity.maxminInitCached(emb(s, d), d)),
+      Similarity.maxminCells(emb(s, d), Similarity.maxminInitCached(emb(s, d))),
       Similarity.sqlMaxminCells),
     QuerySpec("sim_lsh_multiprobe", (s, d) => Similarity.multiprobeTopK(emb(s, d)),
       Similarity.sqlMultiprobeTopK),
     QuerySpec("sim_multiprobe_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
+      Similarity.bruteTruthCached(emb(s, d)),
       Similarity.multiprobeTopK(emb(s, d))),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +
           s"WHERE rk <= ${Similarity.AnnTopK}",
         Similarity.sqlMultiprobeTopK)),
-    QuerySpec("sim_nsw_sweep", (s, d) => Similarity.nswBeamSweepCached(Tables.embeddings(s, d), d),
+    QuerySpec("sim_nsw_sweep", (s, d) => Similarity.nswBeamSweepCached(Tables.embeddings(s, d)),
       Similarity.sqlNswBeamSweep),
     QuerySpec("sim_sdc_topk", (s, d) => Similarity.sdcTopK(emb(s, d)), Similarity.sqlSdcTopK),
     QuerySpec("sim_sdc_recall", (s, d) => Similarity.recallAtK(
-      Similarity.bruteTruthCached(emb(s, d), d),
+      Similarity.bruteTruthCached(emb(s, d)),
       Similarity.sdcTopK(emb(s, d))),
       Similarity.sqlRecall(
         s"SELECT * FROM (\n${Similarity.sqlBruteTopK}\n) " +

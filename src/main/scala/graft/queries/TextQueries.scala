@@ -361,27 +361,27 @@ object TextQueries extends QueryFamily("text") {
       TextOps.sqlLangIdNgram),
     // the winnow fingerprint frame is memoized: three queries read it
     QuerySpec("text_winnow", (s, d) =>
-      TextOps.winnowCached(docs(s, d), d).orderBy(col("doc_id"), col("fingerprint")),
+      TextOps.winnowCached(docs(s, d)).orderBy(col("doc_id"), col("fingerprint")),
       TextOps.sqlWinnow),
     QuerySpec("text_winnow_pairs", (s, d) =>
-      TextOps.winnowPairs(TextOps.winnowCached(docs(s, d), d)),
+      TextOps.winnowPairs(TextOps.winnowCached(docs(s, d))),
       TextOps.sqlWinnowPairs),
     QuerySpec("text_source_overlap", (s, d) =>
-      TextOps.sourceOverlap(docs(s, d), TextOps.winnowCached(docs(s, d), d)),
+      TextOps.sourceOverlap(docs(s, d), TextOps.winnowCached(docs(s, d))),
       TextOps.sqlSourceOverlap),
     QuerySpec("text_source_tvd", (s, d) => TextOps.sourceTvd(docs(s, d)), TextOps.sqlSourceTvd),
     QuerySpec("text_lexical_profile", (s, d) => TextOps.lexicalProfile(docs(s, d)),
       TextOps.sqlLexicalProfile),
     QuerySpec("text_repetition", (s, d) => TrainingData.repetition(docs(s, d)),
       TrainingData.sqlRepetition),
-    QuerySpec("text_bpe_merges", (s, d) => TextOps.bpeMerges(docs(s, d), cacheKey = d),
+    QuerySpec("text_bpe_merges", (s, d) => TextOps.bpeMerges(docs(s, d)),
       TextOps.sqlBpeMerges()),
     QuerySpec("text_pii", (s, d) => TextOps.piiScan(docs(s, d)), TextOps.sqlPiiScan),
     QuerySpec("text_pii_stats", (s, d) => TextOps.piiStats(docs(s, d)), TextOps.sqlPiiStats),
     QuerySpec("text_gopher", (s, d) => TextOps.gopher(docs(s, d)), TextOps.sqlGopher),
     QuerySpec("text_simpson", (s, d) => TextOps.simpson(docs(s, d)), TextOps.sqlSimpson),
     QuerySpec("text_postings", (s, d) => TextOps.postings(docs(s, d)), TextOps.sqlPostings),
-    QuerySpec("text_bpe_encode", (s, d) => TextOps.bpeEncode(docs(s, d), cacheKey = d),
+    QuerySpec("text_bpe_encode", (s, d) => TextOps.bpeEncode(docs(s, d)),
       TextOps.sqlBpeEncode()),
     QuerySpec("text_quality_rank", (s, d) => TextOps.qualityRank(docs(s, d)),
       TextOps.sqlQualityRank),

@@ -123,7 +123,7 @@ class CorpusExtSpec extends SparkSuite {
     // round 1: tie (l,o)/(o,w) → sym_a tiebreak picks (l,o)
     // round 2: (lo,w):3; round 3: tie (e,r)/(low,e) → (e,r); round 4: (low,er)
     val docs = docFrame(Seq((1L, "low low lower")))
-    val out = TextOps.bpeMerges(docs, "spec:bpe-low-lower").collect().map(r =>
+    val out = TextOps.bpeMerges(docs).collect().map(r =>
       (r.getAs[Int]("merge_rank"), r.getAs[String]("sym_a"),
         r.getAs[String]("sym_b"), r.getAs[Long]("pair_count")))
     assert(out.toSeq == Seq(
@@ -135,7 +135,7 @@ class CorpusExtSpec extends SparkSuite {
     // a 100-char token contributes no pairs (capped); the short word does
     val long = "x" * 100
     val docs = docFrame(Seq((1L, s"$long ab ab")))
-    val out = TextOps.bpeMerges(docs, "spec:bpe-overlong", rounds = 1).collect()
+    val out = TextOps.bpeMerges(docs, rounds = 1).collect()
     assert(out.length == 1)
     assert((out.head.getAs[String]("sym_a"), out.head.getAs[String]("sym_b"))
       == ("a", "b"))
@@ -146,7 +146,7 @@ class CorpusExtSpec extends SparkSuite {
     // positions 1 and 3 start, position 2 is consumed); round 2 merges
     // (aa,aa) once
     val docs = docFrame(Seq((1L, "aaaa")))
-    val out = TextOps.bpeMerges(docs, "spec:bpe-aaaa", rounds = 2).collect().map(r =>
+    val out = TextOps.bpeMerges(docs, rounds = 2).collect().map(r =>
       (r.getAs[String]("sym_a"), r.getAs[String]("sym_b"),
         r.getAs[Long]("pair_count")))
     assert(out.toSeq == Seq(("a", "a", 3L), ("aa", "aa", 1L)))
@@ -238,7 +238,7 @@ class CorpusExtSpec extends SparkSuite {
       (1L, passage), // every shingle of 1 appears in 2
       (2L, s"intro words here $passage closing words after"),
       (3L, (1 to 20).map(i => s"other$i").mkString(" "))))
-    val out = Dedup.containmentPairs(docs, "spec:contain-embedded").collect()
+    val out = Dedup.containmentPairs(docs).collect()
     assert(out.length == 1)
     assert(out.head.getAs[Long]("doc_small") == 1L)
     assert(out.head.getAs[Long]("doc_large") == 2L)
@@ -253,7 +253,7 @@ class CorpusExtSpec extends SparkSuite {
     // Jaccard path structurally cannot pair them...
     assert(Dedup.ngramJaccard(docs, Dedup.shingleSets(docs)).count() == 0)
     // ...but the containment join does, at full score
-    val c = Dedup.containmentPairs(docs, "spec:contain-cross-length").collect()
+    val c = Dedup.containmentPairs(docs).collect()
     assert(c.length == 1 && c.head.getAs[Double]("containment") == 1.0)
   }
 
@@ -264,7 +264,7 @@ class CorpusExtSpec extends SparkSuite {
         .mkString(" ")),
       (2L, ((1 to 5).map(i => s"sh$i") ++ (1 to 30).map(i => s"y$i"))
         .mkString(" "))))
-    assert(Dedup.containmentPairs(docs, "spec:contain-sub-threshold").isEmpty)
+    assert(Dedup.containmentPairs(docs).isEmpty)
   }
 
   test("spanClean: repeated span removed everywhere but first occurrence") {

@@ -44,7 +44,7 @@ class LayoutGraphSpec extends SparkSuite {
 
   test("pagerank mass is conserved and ranks are positive") {
     val pr = Graph.pagerankCached(Tables.orders(spark, dir),
-      Tables.lineitem(spark, dir), "pr-fixture-" + System.nanoTime)
+      Tables.lineitem(spark, dir))
     val rows = pr.collect()
     assert(rows.length == Graph.PrTopK)
     assert(rows.forall(_.getAs[Double]("rank") > 0))
@@ -59,8 +59,7 @@ class LayoutGraphSpec extends SparkSuite {
     // customer, and the two customers tie exactly.
     val orders = Seq((10L, 1L), (20L, 2L)).toDF("o_orderkey", "o_custkey")
     val lineitem = Seq((10L, 7L), (20L, 7L)).toDF("l_orderkey", "l_suppkey")
-    val pr = Graph.pagerankCached(orders, lineitem,
-      "pr-2x1-" + System.nanoTime).collect()
+    val pr = Graph.pagerankCached(orders, lineitem).collect()
     val bySupplier = pr.find(_.getAs[Long]("node_id") == Graph.SuppBase + 7L).get
     assert(bySupplier.getAs[Int]("rk") == 1)
     val custRanks = pr.filter(_.getAs[Long]("node_id") < Graph.SuppBase)
@@ -101,8 +100,7 @@ class LayoutGraphSpec extends SparkSuite {
     // symmetric 2x1 graph's invariants must hold exactly as at iters=2
     val orders = Seq((10L, 1L), (20L, 2L)).toDF("o_orderkey", "o_custkey")
     val lineitem = Seq((10L, 7L), (20L, 7L)).toDF("l_orderkey", "l_suppkey")
-    val pr = Graph.pagerankCached(orders, lineitem,
-      "pr-deep-" + System.nanoTime, iters = 7).collect()
+    val pr = Graph.pagerankCached(orders, lineitem, iters = 7).collect()
     assert(pr.find(_.getAs[Long]("node_id") == Graph.SuppBase + 7L)
       .get.getAs[Int]("rk") == 1)
     val custRanks = pr.filter(_.getAs[Long]("node_id") < Graph.SuppBase)
@@ -130,11 +128,11 @@ class LayoutGraphSpec extends SparkSuite {
   }
 
   test("bloom decon never misses a true overlap (no false negatives)") {
-    val out = TrainingData.bloomDecon(Tables.documents(spark, dir), dir)
+    val out = TrainingData.bloomDecon(Tables.documents(spark, dir))
     // every kgram counted by the exact path must also be bloom-flagged:
     // n_maybe >= n_exact row-wise, and no doc with n_exact>0 is absent
     assert(out.filter(col("n_maybe") < col("n_exact")).count() == 0)
-    val exactIds = TrainingData.decontaminate(Tables.documents(spark, dir), dir)
+    val exactIds = TrainingData.decontaminate(Tables.documents(spark, dir))
       .select(col("train_id")).distinct()
     val missed = exactIds.join(out.select("train_id"), Seq("train_id"),
       "left_anti")
@@ -273,7 +271,7 @@ class LayoutGraphSpec extends SparkSuite {
       .map(r => r.getAs[Int]("m") -> r.getAs[Double]("mean_distortion"))
       .toMap
     val trainedD = Similarity.pqDistortionTrained(emb,
-      Similarity.pqCodebookCached(emb, dir)).collect()
+      Similarity.pqCodebookCached(emb)).collect()
     assert(trainedD.length == Similarity.PqM)
     // alternating minimization: SSE under the trained books can only be
     // <= the seed books it started from, per subspace
@@ -283,14 +281,14 @@ class LayoutGraphSpec extends SparkSuite {
         s"subspace $m: trained distortion above seed")
     }
     val bal = Similarity.ivfBalanceTrained(emb,
-      Similarity.ivfCentsCached(emb, dir)).collect()
+      Similarity.ivfCentsCached(emb)).collect()
     assert(bal.map(_.getAs[Long]("n_vectors")).sum == nVecs)
     val shareSum = bal.map(_.getAs[Double]("share")).sum
     assert(math.abs(shareSum - 1.0) < 1e-9)
     // radius audit partitions the same corpus; cosines are bounded and
     // the per-cell worst case never beats the mean
     val usage = Similarity.pqCodeUsage(emb,
-      Similarity.pqCodebookCached(emb, dir)).collect()
+      Similarity.pqCodebookCached(emb)).collect()
     assert(usage.length == Similarity.PqM)
     usage.foreach { r =>
       assert(r.getAs[Long]("n_vectors") == nVecs)
@@ -298,7 +296,7 @@ class LayoutGraphSpec extends SparkSuite {
       assert(r.getAs[Long]("max_code_count") <= nVecs)
     }
     val rad = Similarity.ivfRadiusTrained(emb,
-      Similarity.ivfCentsCached(emb, dir)).collect()
+      Similarity.ivfCentsCached(emb)).collect()
     assert(rad.map(_.getAs[Long]("n_vectors")).sum == nVecs)
     rad.foreach { r =>
       val n = r.getAs[Long]("n_vectors")
@@ -398,7 +396,7 @@ class LayoutGraphSpec extends SparkSuite {
   test("personalized pagerank: seed flag matches id space, mass is a distribution") {
     val d = "/root/testdata/sf0.001"
     val out = Graph.pprCached(Tables.orders(spark, d),
-      Tables.lineitem(spark, d), d).collect()
+      Tables.lineitem(spark, d)).collect()
     assert(out.length == Graph.PrTopK)
     // is_seed is exactly the id predicate the teleport uses
     out.foreach { r =>
@@ -483,8 +481,7 @@ class LayoutGraphSpec extends SparkSuite {
       .toDF("o_orderkey", "o_custkey")
     val li = Seq((100L, 10L), (101L, 10L), (102L, 11L), (102L, 12L))
       .toDF("l_orderkey", "l_suppkey")
-    val out = Graph.components(Graph.componentLabelsCached(orders, li,
-      "cc-biclique-" + System.nanoTime)).collect()
+    val out = Graph.components(Graph.componentLabelsCached(orders, li)).collect()
     assert(out.length == 2)
     // ties on size order by component min-id: cust 1's component first
     assert(out(0).getAs[Long]("component") == 1L)

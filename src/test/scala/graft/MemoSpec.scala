@@ -8,9 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** The per-session memo layer ([[Memo]]): one build per (session, key),
-  * nested builds, and invalidation that leaves no memo serving the files
-  * a session read before they were rewritten.
+import graft.operators.Bucketing
+
+/** The per-session memo layer ([[Memo]]): one build per (session, name,
+  * input frames), nested builds, self-time accounting, and invalidation
+  * that leaves no memo serving the files a session read before they were
+  * rewritten.
   */
 class MemoSpec extends SparkSuite {
   private val fixture = "/root/testdata/sf0.001"
@@ -37,6 +40,45 @@ class MemoSpec extends SparkSuite {
     Memo.invalidate(b)
   }
 
+  test("memo: ledger credits each build its self time") {
+    val s = spark.newSession()
+    MemoLedger.drain()
+    val t0 = System.nanoTime()
+    Memo(s, "spec.self.outer") {
+      Thread.sleep(25)
+      Memo(s, "spec.self.inner") { Thread.sleep(200); "inner" }
+      Thread.sleep(25)
+      "outer"
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val led = MemoLedger.drain()
+    val (inner, outer) = (led("spec.self.inner"), led("spec.self.outer"))
+    assert(inner >= 0.2, s"inner $inner")
+    assert(outer >= 0.05 && outer < 0.2, s"outer $outer")
+    assert(inner + outer <= wall, s"$inner + $outer > wall $wall")
+    Memo.invalidate(s)
+  }
+
+  test("memo: equal plans share an entry, different inputs do not") {
+    val s = spark.newSession()
+    var builds = 0
+    def ids(docs: DataFrame): DataFrame =
+      Memo.pinned(s, "spec.derived", docs) { builds += 1; docs.select("doc_id") }
+    val docs = Tables.documents(s, fixture)
+    // (a) one name over the corpus and a filtered corpus: two artifacts
+    val all = ids(docs)
+    val even = ids(docs.filter(col("doc_id") % 2 === 0))
+    assert(builds == 2)
+    assert(all.count() > even.count() && even.count() > 0)
+    // a frame whose columns are renamed reads as a different input
+    ids(docs.select(col("doc_id"), col("text").as("body")))
+    assert(builds == 3)
+    // (b) two separately built frames over the same fixture: one build
+    val again = ids(Tables.documents(s, fixture))
+    assert(builds == 3 && (again eq all))
+    Memo.invalidate(s)
+  }
+
   test("memo: invalidate releases persisted frames and owned resources") {
     val a = spark.newSession()
     val b = spark.newSession()
@@ -45,9 +87,18 @@ class MemoSpec extends SparkSuite {
     val dir = Memo.owned(a, "spec.owned:k")(Files.createTempDirectory("graft_memo"))(
       d => Files.delete(d))
     val other = Memo(b, "spec.other:k")(new Object)
+    // bucket_join's tables: named per entry, so two sessions of one
+    // catalog never share a table
+    val (oT, lT) = Bucketing.tables(a, fixture)
+    assert(Bucketing.tables(b, fixture) != ((oT, lT)))
+    val scratch = Path.of(java.net.URI.create(a.table(oT).inputFiles.head))
+      .getParent.getParent
+    assert(Files.isDirectory(scratch))
     Memo.invalidate(a)
     assert(df.storageLevel == StorageLevel.NONE)
     assert(!Files.exists(dir))
+    assert(!Files.exists(scratch), s"bucket_join scratch $scratch left behind")
+    assert(!a.catalog.tableExists(oT) && !a.catalog.tableExists(lT))
     assert(Memo(b, "spec.other:k")(new Object) eq other,
       "invalidate leaves other sessions alone")
     Memo.invalidate(b)

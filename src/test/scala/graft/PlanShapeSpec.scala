@@ -607,7 +607,7 @@ class PlanShapeSpec extends SparkSuite {
     // coPartCommonCached pin hides its shape): both endpoint lookups
     // probe the broadcast sorted-adjacency table
     import graft.operators.Graph
-    val edges = Graph.coPartEdgesCached(graft.Tables.lineitem(spark, dir), dir)
+    val edges = Graph.coPartEdgesCached(graft.Tables.lineitem(spark, dir))
     val p = Graph.edgeCommonCounts(edges, Graph.fullAdjacency(edges))
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, p)
@@ -790,7 +790,7 @@ class PlanShapeSpec extends SparkSuite {
     // the dense-graph discipline says the intersection members are never
     // exploded to rows, so no Generate may appear above the edge memo
     val edges = graft.operators.Graph.coPartEdgesCached(
-      Tables.lineitem(spark, dir), dir)
+      Tables.lineitem(spark, dir))
     val p = graft.operators.Graph.adamicAdar(graft.operators.Graph.aaScores(
       edges, graft.operators.Graph.degrees(edges)))
       .queryExecution.executedPlan.toString

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph, Similarity, TextOps}
@@ -24,36 +24,33 @@ import graft.operators.{Dedup, Graph, Similarity, TextOps}
 class ReliableCheckpointSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
-  private def docs: DataFrame = Tables.documents(spark, dir)
-  private def emb: DataFrame = Tables.embeddings(spark, dir)
-
-  // the registry's memo routes with a fresh cache key per call: the
-  // per-(session, key) memos would otherwise hand the second run the
-  // FIRST run's pinned frames and the comparison would be vacuous
-  private val family: Seq[(String, () => DataFrame)] = Seq(
-    "pagerank" -> (() =>
-      Graph.pagerankCached(Tables.orders(spark, dir),
-        Tables.lineitem(spark, dir), "ck-pr-" + System.nanoTime)),
-    "label_propagation" -> (() =>
-      Dedup.labelPropagation(Dedup.minhashPairs(docs), docs)),
-    "lloyds_kmeans" -> (() => Similarity.ivfKmeans(emb,
-      Similarity.ivfCentsCached(emb, "ck-kmeans-" + System.nanoTime))),
-    "bpe_merges" -> (() => TextOps.bpeMerges(docs, "ck-bpe-" + System.nanoTime)),
-    "nsw_walk" -> (() =>
-      Similarity.nswWalkCached(emb, "ck-nsw-" + System.nanoTime)),
-    "katz_4rounds" -> (() =>
-      Graph.katzCached(Tables.orders(spark, dir),
-        Tables.lineitem(spark, dir), "ck-katz-" + System.nanoTime,
+  // the registry's memo routes; each pass runs in a new session, so the
+  // checkpointed pass rebuilds every memo under the checkpoint dir
+  // instead of reading the baseline pass's pinned frames
+  private val family: Seq[(String, SparkSession => DataFrame)] = Seq(
+    "pagerank" -> (s =>
+      Graph.pagerankCached(Tables.orders(s, dir), Tables.lineitem(s, dir))),
+    "label_propagation" -> { s =>
+      val docs = Tables.documents(s, dir)
+      Dedup.labelPropagation(Dedup.minhashPairs(docs), docs)
+    },
+    "lloyds_kmeans" -> { s =>
+      val emb = Tables.embeddings(s, dir)
+      Similarity.ivfKmeans(emb, Similarity.ivfCentsCached(emb))
+    },
+    "bpe_merges" -> (s => TextOps.bpeMerges(Tables.documents(s, dir))),
+    "nsw_walk" -> (s => Similarity.nswWalkCached(Tables.embeddings(s, dir))),
+    "katz_4rounds" -> (s =>
+      Graph.katzCached(Tables.orders(s, dir), Tables.lineitem(s, dir),
         iters = 4)), // 4 rounds so the every-3rd-round pin actually fires
-    "anf_kmv" -> (() =>
-      Graph.anfCached(Tables.orders(spark, dir),
-        Tables.lineitem(spark, dir), "ck-anf-" + System.nanoTime)),
+    "anf_kmv" -> (s =>
+      Graph.anfCached(Tables.orders(s, dir), Tables.lineitem(s, dir))),
     // the round-8 fused local-moving rounds + weighted contraction: the
     // per-round assignment pins and the coarse memo must flip to the
     // durable path like every other iteration
-    "louvain_coarse" -> (() =>
-      Graph.louvainCoarseCached(Tables.orders(spark, dir),
-        Tables.lineitem(spark, dir), "ck-louv-" + System.nanoTime)))
+    "louvain_coarse" -> (s =>
+      Graph.louvainCoarseCached(Tables.orders(s, dir),
+        Tables.lineitem(s, dir))))
 
   private def snapshot(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted.map(col)
@@ -64,14 +61,16 @@ class ReliableCheckpointSpec extends SparkSuite {
   test("iterative family: reliable checkpoints, identical results") {
     assert(spark.sparkContext.getCheckpointDir.isEmpty,
       "precondition: suite session has no checkpoint dir")
-    val baseline = family.map { case (name, build) =>
-      name -> snapshot(build())
-    }
+    val local = spark.newSession()
+    val baseline = try family.map { case (name, build) =>
+      name -> snapshot(build(local))
+    } finally Tables.invalidate(local)
     val ckDir = Files.createTempDirectory("graft_ck_family").toString
     spark.sparkContext.setCheckpointDir(ckDir)
+    val durableSession = spark.newSession()
     try {
       for ((name, build) <- family) {
-        val durable = snapshot(build())
+        val durable = snapshot(build(durableSession))
         val base = baseline.toMap.apply(name)
         assert(durable == base,
           s"$name diverged under the reliable checkpoint path")
@@ -79,6 +78,9 @@ class ReliableCheckpointSpec extends SparkSuite {
       val files = Files.walk(java.nio.file.Paths.get(ckDir))
         .filter(p => p.toFile.isFile).count()
       assert(files > 0, s"no reliable checkpoint files landed under $ckDir")
-    } finally spark.sparkContext.setCheckpointDir(null)
+    } finally {
+      Tables.invalidate(durableSession)
+      spark.sparkContext.setCheckpointDir(null)
+    }
   }
 }

@@ -107,16 +107,13 @@ class Round10Spec extends SparkSuite {
       "keeps Q monotone") {
     import graft.operators.Graph
     val (orders, lineitem) = unevenToy()
-    val key = "toy-uneven-" + System.nanoTime
-    val engine = levelRows(
-      Graph.louvainLevelsCached(orders, lineitem, key))
+    val engine = levelRows(Graph.louvainLevelsCached(orders, lineitem))
     val qs = engine.map(_._4)
     assert(qs.sliding(2).forall { case Seq(a, b) => b >= a }, s"$qs")
     // potency guard for the DuckDB cross-check: the chain must actually
     // accept merges with uneven group sizes on this toy, else the
     // committed check_louvain evidence exercises nothing
-    val maps = Graph.louvainLevelMapsCached(orders, lineitem, key)
-      .collect()
+    val maps = Graph.louvainLevelMapsCached(orders, lineitem).collect()
     val l1Sizes = maps.groupBy(_.getAs[Long]("l1")).map(_._2.length)
     assert(l1Sizes.exists(_ > 1), "no accepted merge at level 1")
     assert(l1Sizes.toSet.size > 1, "merge groups are uniform — the " +
@@ -129,11 +126,11 @@ class Round10Spec extends SparkSuite {
     import graft.operators.{CorpusClean, Dedup, TrainingData}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val d = Tables.documents(spark, dir)
-    val arts = Dedup.clusterArtifactsCached(d, dir)
+    val arts = Dedup.clusterArtifactsCached(d)
     val keep = TrainingData.corpusE2eKeep(
-      CorpusClean.cleanCached(d, dir),
+      CorpusClean.cleanCached(d),
       Dedup.canonicalFrom(d, arts.components),
-      Dedup.minhashDecon(d, dir))
+      Dedup.minhashDecon(d))
     val plan = keep.queryExecution.optimizedPlan
     // the family artifacts are Iterate.pin products — LogicalRDD scans.
     // Identify each by a schema marker and count scans BY RDD IDENTITY:
@@ -267,9 +264,7 @@ class Round10Spec extends SparkSuite {
   test("louvain refine: monotone stage chain on the uneven toy") {
     import graft.operators.Graph
     val (orders, lineitem) = unevenToy()
-    val key = "toy-uneven-refine-" + System.nanoTime
-    val rows = refineRows(
-      Graph.louvainRefineCached(orders, lineitem, key))
+    val rows = refineRows(Graph.louvainRefineCached(orders, lineitem))
     val qs = rows.map(_._6)
     assert(qs.sliding(2).forall { case Seq(a, b) => b >= a }, s"$qs")
     assert(rows(1)._4.contains(0L))
@@ -298,8 +293,7 @@ class Round10Spec extends SparkSuite {
         (math.min(i, nCust) * 100L, math.min(i, nSupp).toLong))
       val lineitem = (pairs ++ spine).distinct
         .toDF("l_orderkey", "l_suppkey")
-      val rows = refineRows(Graph.louvainRefineCached(
-        orders, lineitem, s"prop-refine-$g-" + System.nanoTime))
+      val rows = refineRows(Graph.louvainRefineCached(orders, lineitem))
       val qs = rows.map(_._6)
       assert(qs.sliding(2).forall { case Seq(a, b) => b >= a },
         s"graph $g: Q not monotone: $qs")

@@ -404,14 +404,13 @@ class Round4ExtSpec extends SparkSuite {
   test("clean funnel: monotone attrition, final stage equals clean()") {
     import graft.operators.CorpusClean
     val d = Tables.documents(spark, dir)
-    val key = "spec:funnel-" + System.nanoTime
-    val f = CorpusClean.funnelCached(d, key).collect()
+    val f = CorpusClean.funnelCached(d).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(f("1_raw") == d.count())
     assert(f("1_raw") >= f("2_quality") &&
       f("2_quality") >= f("3_exact_dedup") &&
       f("3_exact_dedup") >= f("4_near_dedup"))
-    assert(f("4_near_dedup") == CorpusClean.cleanCached(d, key).count())
+    assert(f("4_near_dedup") == CorpusClean.cleanCached(d).count())
   }
 
   // --------------------------------------------------------- interleave
@@ -435,8 +434,7 @@ class Round4ExtSpec extends SparkSuite {
   // ------------------------------------------------------ corpus export
   test("corpusExport: greedy best-quality prefix, budget-tight, gapless shards") {
     import graft.operators.{CorpusClean, TrainingData}
-    val cleaned = CorpusClean.cleanCached(Tables.documents(spark, dir),
-      "spec:export-" + System.nanoTime)
+    val cleaned = CorpusClean.cleanCached(Tables.documents(spark, dir))
     val export = TrainingData.corpusExport(cleaned)
     val rows = export.collect()
     assert(rows.nonEmpty)

@@ -63,7 +63,7 @@ class Round6Session6Spec extends SparkSuite {
     val emb = Tables.embeddings(spark, dir)
     val buckets = emb.select(col("vec_id"),
       Similarity.lshBucket(col("embedding")).as("b1"))
-    val e2 = Similarity.knnEdges2Cached(emb, dir)
+    val e2 = Similarity.knnEdges2Cached(emb)
     val cross = e2.join(buckets.withColumnRenamed("vec_id", "src")
         .withColumnRenamed("b1", "sb"), Seq("src"))
       .join(buckets.withColumnRenamed("vec_id", "dst")
@@ -92,7 +92,7 @@ class Round6Session6Spec extends SparkSuite {
     val rows = q("graph_closeness").collect()
     assert(rows.nonEmpty)
     val deg = graft.operators.Graph.coPartDegreesCached(
-        Tables.lineitem(spark, dir), dir)
+        Tables.lineitem(spark, dir))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("deg")).toMap
     rows.foreach { r =>
       val seed = r.getAs[Long]("seed")

@@ -119,7 +119,7 @@ class Round7Session3Spec extends SparkSuite {
     val deg = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("deg")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val katz = Graph.katzCached(orders, lineitem, dir, iters = 1).collect()
+    val katz = Graph.katzCached(orders, lineitem, iters = 1).collect()
     assert(katz.length == Graph.PrTopK)
     var prev = Double.MaxValue
     katz.foreach { r =>
@@ -145,7 +145,7 @@ class Round7Session3Spec extends SparkSuite {
       .toDF("o_orderkey", "o_custkey")
     val lineitem = Seq((10L, 1L), (20L, 1L), (20L, 2L))
       .toDF("l_orderkey", "l_suppkey")
-    val got = Graph.anfCached(orders, lineitem, "toy-anf-" + System.nanoTime)
+    val got = Graph.anfCached(orders, lineitem)
       .collect().map(r => r.getAs[Long]("h") ->
         ((r.getAs[Long]("n_nodes"), r.getAs[Double]("sum_est")))).toMap
     assert(got(1L) == ((4L, 10.0)))
@@ -155,7 +155,7 @@ class Round7Session3Spec extends SparkSuite {
   test("anf on the fixture: n_nodes constant, sum_est monotone in h") {
     import graft.operators.Graph
     val rows = Graph.anfCached(Tables.orders(spark, dir),
-      Tables.lineitem(spark, dir), dir).orderBy(col("h")).collect()
+      Tables.lineitem(spark, dir)).orderBy(col("h")).collect()
     assert(rows.length == Graph.AnfRounds)
     assert(rows.map(_.getAs[Long]("n_nodes")).distinct.length == 1)
     val sums = rows.map(_.getAs[Double]("sum_est"))
@@ -199,8 +199,7 @@ class Round7Session3Spec extends SparkSuite {
       (10L, 1L), (10L, 2L), (20L, 1L), (20L, 2L), (20L, 3L),
       (30L, 3L), (30L, 4L), (40L, 3L), (40L, 4L)
     ).toDF("l_orderkey", "l_suppkey")
-    val got = Graph.louvainCached(orders, lineitem,
-      "toy-louvain-" + System.nanoTime)
+    val got = Graph.louvainCached(orders, lineitem)
       .collect()
       .map(r => (r.getAs[Long]("label"), r.getAs[Long]("size"),
         r.getAs[Long]("min_node"), r.getAs[Long]("max_node")))
@@ -214,7 +213,7 @@ class Round7Session3Spec extends SparkSuite {
     import graft.operators.Similarity
     val emb = Tables.embeddings(spark, dir)
     val rows = Similarity.clusterTopics(emb, Tables.documents(spark, dir),
-      Similarity.ivfCentsCached(emb, dir)).collect()
+      Similarity.ivfCentsCached(emb)).collect()
     assert(rows.nonEmpty)
     val nDocs = Tables.documents(spark, dir).count()
     rows.groupBy(_.getAs[Long]("bucket")).foreach { case (_, g) =>

@@ -28,8 +28,7 @@ class Round8Spec extends SparkSuite {
       (10L, 1L), (10L, 2L), (20L, 1L), (20L, 2L), (20L, 3L),
       (30L, 3L), (30L, 4L), (40L, 3L), (40L, 4L)
     ).toDF("l_orderkey", "l_suppkey")
-    val got = Graph.louvainCoarseCached(orders, lineitem,
-      "toy-louvain-coarse-" + System.nanoTime)
+    val got = Graph.louvainCoarseCached(orders, lineitem)
       .collect()
       .map(r => (r.getAs[Long]("label"), r.getAs[Long]("n_comms"),
         r.getAs[Long]("n_nodes"), r.getAs[Long]("min_node"),
@@ -48,8 +47,8 @@ class Round8Spec extends SparkSuite {
     import graft.operators.Graph
     val orders = Tables.orders(spark, dir)
     val lineitem = Tables.lineitem(spark, dir)
-    val fine = Graph.louvainCached(orders, lineitem, dir).collect()
-    val coarse = Graph.louvainCoarseCached(orders, lineitem, dir).collect()
+    val fine = Graph.louvainCached(orders, lineitem).collect()
+    val coarse = Graph.louvainCoarseCached(orders, lineitem).collect()
     assert(coarse.nonEmpty && coarse.length <= fine.length)
     val fineNodes = fine.map(_.getAs[Long]("size")).sum
     val coarseNodes = coarse.map(_.getAs[Long]("n_nodes")).sum

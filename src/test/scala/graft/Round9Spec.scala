@@ -50,8 +50,7 @@ class Round9Spec extends SparkSuite {
       (10L, 1L), (10L, 2L), (20L, 1L), (20L, 2L), (20L, 3L),
       (30L, 3L), (30L, 4L), (40L, 3L), (40L, 4L)
     ).toDF("l_orderkey", "l_suppkey")
-    val got = Graph.louvainLevelsCached(orders, lineitem,
-      "toy-louvain-levels-" + System.nanoTime)
+    val got = Graph.louvainLevelsCached(orders, lineitem)
       .collect()
       .map(r => (r.getAs[Int]("level"), r.getAs[Long]("n_comms"),
         r.getAs[Long]("within"), r.getAs[Double]("q"),
@@ -102,11 +101,11 @@ class Round9Spec extends SparkSuite {
     import graft.operators.Graph
     val orders = Tables.orders(spark, dir)
     val lineitem = Tables.lineitem(spark, dir)
-    val got = Graph.louvainWKatzCached(orders, lineitem, dir, iters = 1)
+    val got = Graph.louvainWKatzCached(orders, lineitem, iters = 1)
       .collect()
       .map(r => r.getAs[Long]("community") -> r.getAs[Double]("wkatz"))
       .toMap
-    val inW = Graph.louvainWeightsCached(orders, lineitem, dir)
+    val inW = Graph.louvainWeightsCached(orders, lineitem)
       .groupBy(col("cd")).agg(sum(col("w")).as("iw"))
       .collect()
       .map(r => r.getAs[Long]("cd") -> r.getAs[Long]("iw")).toMap
@@ -213,9 +212,9 @@ class Round9Spec extends SparkSuite {
     import graft.operators.Graph
     val orders = Tables.orders(spark, dir)
     val lineitem = Tables.lineitem(spark, dir)
-    val maps = Graph.louvainLevelMapsCached(orders, lineitem, dir)
+    val maps = Graph.louvainLevelMapsCached(orders, lineitem)
       .collect()
-    val fine = Graph.louvainAssignCached(orders, lineitem, dir)
+    val fine = Graph.louvainAssignCached(orders, lineitem)
       .select(col("c")).distinct().count()
     assert(maps.length == fine)
     // l2 is a function of l1 (levels contract, never split)

@@ -175,9 +175,9 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("cluster artifacts memo returns the same computed frames per (session, key)") {
-    val docs = Tables.documents(spark, dir)
-    val a = Dedup.clusterArtifactsCached(docs, s"$dir#memoTest")
-    val b = Dedup.clusterArtifactsCached(docs, s"$dir#memoTest")
+    // two separately built frames over the same fixture: one entry
+    val a = Dedup.clusterArtifactsCached(Tables.documents(spark, dir))
+    val b = Dedup.clusterArtifactsCached(Tables.documents(spark, dir))
     assert(a.pairs eq b.pairs)
     assert(a.components eq b.components)
     assert(a.bands eq b.bands)

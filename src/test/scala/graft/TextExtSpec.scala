@@ -80,7 +80,7 @@ class TextExtSpec extends SparkSuite {
       (1L, Seq.fill(20)("abab").mkString(" ")),
       (2L, "abab xyzw abab"),
       (3L, "qq rr ss tt uu vv ww")))
-    val out = TextOps.bpeEncode(docs, "spec:bpe-encode-abab").collect()
+    val out = TextOps.bpeEncode(docs).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("ws_tokens"), r.getAs[Long]("bpe_tokens"))).toMap
     assert(out(1L)._1 == 20L)
@@ -93,7 +93,7 @@ class TextExtSpec extends SparkSuite {
   test("bpe encode: doc token cost is the sum of its words' encoded sizes") {
     val docs = docFrame(Seq(
       (1L, "aa bb"), (2L, "aa"), (3L, "bb bb aa")))
-    val out = TextOps.bpeEncode(docs, "spec:bpe-encode-sum").collect()
+    val out = TextOps.bpeEncode(docs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("bpe_tokens")).toMap
     // whatever the learned merges are, per-word costs must be consistent:
     // cost(1) = cost(aa) + cost(bb), cost(3) = 2*cost(bb) + cost(aa)
@@ -107,7 +107,7 @@ class TextExtSpec extends SparkSuite {
     // EMPTY pair table — learned merges must survive (a cross join with the
     // empty winner frame would wipe the vocabulary and bill characters)
     val docs = docFrame(Seq((1L, "aa bb"), (2L, "aa")))
-    val out = TextOps.bpeEncode(docs, "spec:bpe-encode-saturation").collect()
+    val out = TextOps.bpeEncode(docs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("bpe_tokens")).toMap
     assert(out(2L) == 1L, s"aa should encode to 1 merged symbol: $out")
     assert(out(1L) == 2L, s"aa bb should encode to 2 merged symbols: $out")

@@ -167,7 +167,7 @@ class TrainingDataSpec extends SparkSuite {
       case (7L, _) => (7L, text)   // train duplicate
       case other   => other
     }
-    val out = TrainingData.decontaminate(planted.toDF("doc_id", "text"), "spec:planted")
+    val out = TrainingData.decontaminate(planted.toDF("doc_id", "text"))
       .collect()
     assert(out.length == 1)
     val r = out.head
