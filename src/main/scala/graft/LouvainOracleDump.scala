@@ -60,7 +60,7 @@ object LouvainOracleDump {
     * one DuckDB view per file, the fixture layout). */
   private def writeOne(df: DataFrame, dst: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val staging = Files.createTempDirectory("graft_dump")
+    val staging = Scratch.dir("graft_dump")
     df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val listing = Files.list(staging)
     val src =

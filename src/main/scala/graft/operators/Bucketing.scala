@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
-import org.apache.commons.io.FileUtils
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +39,7 @@ object Bucketing {
     */
   def tables(spark: SparkSession, dir: String): (String, String) = {
     val (oT, lT, _) = graft.Memo.owned(spark, s"bucket.tables:$dir") {
-      val base = Files.createTempDirectory("graft_bkt")
+      val base = graft.Scratch.dir("graft_bkt")
       val Seq(oT, lT) =
         Seq("orders", "lineitem").map(t => s"${base.getFileName}_$t")
       // repartition on the bucket key FIRST: task hash partitioning and
@@ -67,7 +63,7 @@ object Bucketing {
       (oT, lT, base)
     } { case (oT, lT, base) =>
       Seq(oT, lT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      FileUtils.deleteDirectory(base.toFile)
+      graft.Scratch.deleteTree(base)
     }
     (oT, lT)
   }

@@ -37,9 +37,9 @@ object CorpusClean {
   /** Build [[CleanArtifacts]], deriving the near-dup victim set from a
     * precomputed (doc_id, band_idx, band_key) LSH band frame. Band rows
     * are per-doc independent, so restricting a FULL-corpus band frame to
-    * survivor ids is exactly the band frame of the survivor subset — the
-    * seam that lets clean share [[Dedup.clusterArtifactsCached]]'s
-    * signature pass instead of re-hashing the corpus.
+    * survivor ids is exactly the band frame of the survivor subset, so
+    * clean shares the dedup family's signature pass
+    * ([[Dedup.minhashBandsCached]]) instead of re-hashing the corpus.
     */
   def cleanArtifacts(docs: DataFrame, bands: DataFrame): CleanArtifacts = {
     val metrics = docs
@@ -70,11 +70,11 @@ object CorpusClean {
     CleanArtifacts(kept, survivors, cleaned)
   }
 
-  /** Per-(session, `docs`) memo of [[cleanArtifacts]] — same composition
-    * cache as [[Dedup.clusterArtifactsCached]], and sharing its band memo:
-    * `corpus_clean`, `corpus_clean_funnel`, and `corpus_export` are
-    * independently oracled entry points, but a run that evaluates all
-    * three pays the metrics → quality → dedup chain once.
+  /** Per-(session, `docs`) memo of [[cleanArtifacts]], over the dedup
+    * family's band memo: `corpus_clean`, `corpus_clean_funnel`, and
+    * `corpus_export` are independently oracled entry points, but a run
+    * that evaluates all three pays the metrics → quality → dedup chain
+    * once.
     */
   def cleanArtifactsCached(docs: DataFrame): CleanArtifacts =
     graft.Memo(docs.sparkSession, "corpus.clean", docs)(

@@ -1198,76 +1198,23 @@ object Dedup {
        |ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------------- shared cluster artifacts
-  /** The reusable products of near-dup clustering, computed ONCE per
-    * corpus: the LSH band table (the durable signature state), the
-    * candidate pairs, and the connected components. Every cluster-policy
-    * operator (representative selection, soft weights, size profile,
-    * incremental admission) derives from these three frames — a real
-    * pipeline computes them once and fans out, instead of re-running
-    * minhash + the component iteration per policy (which, as library
-    * composition, each single-shot entry point otherwise does).
-    *
-    * All three frames are [[Iterate.pin]]ned: consumers re-read
-    * materialized blocks (or the reliable checkpoint at cluster scale) —
-    * the signature subtree and the component iteration never re-execute.
-    */
-  final case class ClusterArtifacts(bands: DataFrame, pairs: DataFrame,
-      components: DataFrame)
+  // The reusable products of near-dup clustering, each its own memo and
+  // built on first read: bands → pairs → components. Every cluster-policy
+  // operator (representative selection, soft weights, size profile,
+  // incremental admission) derives from one of them, so a run computes
+  // each once and fans out; a query that reads only pairs never runs the
+  // component iteration.
 
-  /** Compute [[ClusterArtifacts]] for a corpus. `pairs` is unordered
-    * (stable input to clustering); order at the consumption edge.
-    */
-  def clusterArtifacts(docs: DataFrame): ClusterArtifacts =
-    clusterArtifactsFrom(Iterate.pin(minhashBands(docs)))
-
-  /** [[clusterArtifacts]] from an already-pinned band frame — the seam
-    * that lets the band memo ([[minhashBandsCached]]) be shared with
-    * consumers that need ONLY bands (e.g. [[CorpusClean]]) without
-    * forcing the pair expansion + component iteration on them.
-    */
-  private def clusterArtifactsFrom(bands: DataFrame): ClusterArtifacts = {
-    val pairs = Iterate.pin(bandCollisionPairs(bands).distinct())
-    // connectedComponents pins its own per-round state; the returned
-    // frame already reads from pinned blocks
-    ClusterArtifacts(bands, pairs, connectedComponents(pairs))
-  }
-
-  /** Per-(session, `docs`) memo of the pinned LSH band frame alone — the
-    * durable signature state of a corpus. Cheaper than
-    * [[clusterArtifactsCached]] for consumers that never need pairs or
-    * components eagerly (the cleaning pipeline derives its own victim set
-    * from a survivor-restricted copy of this frame), yet shared WITH that
-    * cache: whichever is hit first computes the signatures, and the other
-    * reuses the pinned blocks.
+  /** Per-(session, `docs`) memo of the pinned LSH band frame — the
+    * durable signature state of a corpus.
     */
   def minhashBandsCached(docs: DataFrame): DataFrame =
     graft.Memo.pinned(docs.sparkSession, "dedup.bands", docs)(
       minhashBands(docs))
 
-  /** Per-(session, `docs`) memo of [[clusterArtifacts]] — the composition
-    * cache that lets independent query entry points (components, stats,
-    * canonical, weights, admission — each independently oracled) share
-    * one clustering pass, mirroring how a production pipeline would
-    * materialize the artifacts once.
-    */
-  def clusterArtifactsCached(docs: DataFrame): ClusterArtifacts = {
-    // pairs resolve through the pairs-only memo first, outside this
-    // build, so whichever of the artifact consumers and the pairs-only
-    // consumers (dedup_edit) runs first, the other reuses the pinned
-    // pair frame
-    val pairs = minhashPairsCached(docs)
-    graft.Memo(docs.sparkSession, "dedup.artifacts", docs)(
-      ClusterArtifacts(minhashBandsCached(docs), pairs,
-        connectedComponents(pairs)))
-  }
-
-  /** Per-(session, `docs`) memo of the PINNED distinct band-collision pair
-    * frame alone — [[ClusterArtifacts.pairs]] without the component
-    * iteration. `dedup_edit` consumes only pairs; resolving them through
-    * [[clusterArtifactsCached]] forced an eager connected-components run
-    * the query never reads (round-10 ADVICE). Shared WITH the artifact
-    * memo: [[clusterArtifactsCached]] builds its pairs through here, so
-    * either entry point primes the other.
+  /** Per-(session, `docs`) memo of the pinned distinct band-collision pair
+    * frame. Unordered (stable input to clustering); order at the
+    * consumption edge.
     */
   def minhashPairsCached(docs: DataFrame): DataFrame = {
     // band memo resolved outside this build: its build time is not the
@@ -1275,6 +1222,16 @@ object Dedup {
     val bands = minhashBandsCached(docs)
     graft.Memo.pinned(docs.sparkSession, "dedup.pairs", docs)(
       bandCollisionPairs(bands).distinct())
+  }
+
+  /** Per-(session, `docs`) memo of the (doc_id, component) frame of
+    * [[connectedComponents]] over the pair memo. The iteration pins its
+    * own per-round state; the returned frame reads from pinned blocks.
+    */
+  def componentsCached(docs: DataFrame): DataFrame = {
+    val pairs = minhashPairsCached(docs)
+    graft.Memo(docs.sparkSession, "dedup.components", docs)(
+      connectedComponents(pairs))
   }
 
   /** Per-(session, `docs`) memo of the PINNED [[shingleSets]] frame — the
@@ -1295,7 +1252,7 @@ object Dedup {
     * or a long tail of pairs?", which decides whether canonical selection
     * ([[canonicalFrom]]) or plain victim-dropping is the right keep policy.
     * `comp` is the (doc_id, component) frame of [[connectedComponents]]
-    * over [[minhashPairs]] (the [[ClusterArtifacts]] composition point);
+    * over [[minhashPairs]] ([[componentsCached]]);
     * only docs that appear in some pair are clustered (singletons are not
     * "clusters of 1" here, matching the components contract).
     *
@@ -1337,7 +1294,7 @@ object Dedup {
     * clustered slice... the full frame windows on `component`, which
     * after the coalesce is corpus-wide — one exchange, same as any
     * groupBy(component)). `comp` is the (doc_id, component) frame of
-    * [[connectedComponents]] — the [[ClusterArtifacts]] composition point.
+    * [[connectedComponents]] ([[componentsCached]]).
     */
   def canonicalFrom(docs: DataFrame, comp: DataFrame): DataFrame = {
     val withComp = docs.select(col("doc_id"), col("n_chars"))
@@ -1434,8 +1391,8 @@ object Dedup {
     * doc_id, and the cluster-size count is one window exchange keyed by
     * component. Weight is 1/n in exact double arithmetic (integer
     * operands — both engines emit the identical quotient). `comp` is the
-    * (doc_id, component) frame of [[connectedComponents]] — the
-    * [[ClusterArtifacts]] composition point.
+    * (doc_id, component) frame of [[connectedComponents]]
+    * ([[componentsCached]]).
     */
   def softWeightsFrom(docs: DataFrame, comp: DataFrame): DataFrame = {
     docs.select(col("doc_id"))
@@ -1737,13 +1694,14 @@ object Dedup {
     * the minhash route to what `decon_overlap` does with an exact k-gram
     * index (GPT-3's appendix-C contamination analysis is this shape):
     * candidate (train, eval) pairs are the band-colliding pairs of the
-    * SHARED artifact memo restricted to cross-split pairs, and the exact
-    * sorted-merge Jaccard verify runs ONLY over those candidates — the
-    * `decon_bloom` confinement discipline with LSH instead of Bloom as
-    * the screen, which is the cheaper candidate generator once the EVAL
-    * side is too big to broadcast as an index. Reports, per contaminated
-    * train doc, how many verified eval near-dups it collides with and
-    * its worst (highest-Jaccard) eval neighbor.
+    * pair memo ([[minhashPairsCached]]) restricted to cross-split pairs,
+    * and the exact sorted-merge Jaccard verify runs ONLY over those
+    * candidates — the `decon_bloom` confinement discipline with LSH
+    * instead of Bloom as the screen, which is the cheaper candidate
+    * generator once the EVAL side is too big to broadcast as an index.
+    * Reports, per contaminated train doc, how many verified eval
+    * near-dups it collides with and its worst (highest-Jaccard) eval
+    * neighbor.
     *
     * Determinism: the verify is exact-int intersections over sorted
     * distinct shingle-hash sets; Jaccard is one exact-int division; the
@@ -1765,10 +1723,6 @@ object Dedup {
   def minhashDecon(docs: DataFrame,
       evalMod: Int = TrainingData.EvalMod): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
-    // pairs-only memo: decon never reads components, so it must not force
-    // the artifact memo's eager component iteration (the dedup_edit
-    // discipline); the frame is the SAME pinned pairs the artifact
-    // consumers share
     val pairs = minhashPairsCached(docs)
     val cands = pairs
       .filter((col("doc_a") % evalMod === 0) =!=

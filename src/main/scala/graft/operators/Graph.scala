@@ -94,7 +94,7 @@ object Graph {
 
   /** Pinned per-(session, `orders`, `lineitem`) memo of the converged
     * per-node label frame — the reusable artifact of reachability (the
-    * cust-supp twin of [[Dedup.ClusterArtifacts]]' `components`): any
+    * cust-supp twin of [[Dedup.componentsCached]]): any
     * per-component consumer reads labels, it never re-runs the iteration.
     */
   def componentLabelsCached(orders: DataFrame, lineitem: DataFrame): DataFrame = {

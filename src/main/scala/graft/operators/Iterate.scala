@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** Lineage-cutting for iterative / multi-consumer dataframes, with a
   * pluggable durability level.
@@ -34,7 +34,4 @@ object Iterate {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
-
-  /** pin, typed for the common DataFrame call sites. */
-  def pinDF(df: DataFrame): DataFrame = pin(df)
 }

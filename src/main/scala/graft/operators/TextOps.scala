@@ -397,11 +397,6 @@ object TextOps {
     transform(sequence(lit(1), greatest(length(text) - 2,
       lit(1))), i => text.substr(i, lit(3)))
 
-  def ngramScores(tg: Column): Seq[(String, Column)] =
-    TrigramProfiles.map { case (lang, profile) =>
-      lang -> size(filter(tg, t => t.isInCollection(profile)))
-    }
-
   def langIdNgram(docs: DataFrame): DataFrame = {
     graft.functions.TextExprs.register(docs.sparkSession)
     docs.select(col("doc_id"), col("lang"),

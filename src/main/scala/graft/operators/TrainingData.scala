@@ -143,8 +143,8 @@ object TrainingData {
     * pairs straddle a split boundary. A near-dup of a training document
     * sitting in val/test silently inflates eval scores, so this is the
     * check a pipeline runs BEFORE training — on the SAME candidate pairs
-    * the dedup pass already produced (the shared
-    * [[Dedup.ClusterArtifacts]] `pairs` frame; no new pair expansion).
+    * the dedup pass already produced (the pair memo
+    * [[Dedup.minhashPairsCached]]; no new pair expansion).
     * Output: unordered split-pair → candidate-pair count; the within-split
     * rows (train,train)… come along for free as the denominator context.
     *

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusClean, Dedup, TextOps, TrainingData}
-import Shared.{docs, arts}
+import Shared.docs
 
 /** The `corpus_*` queries: training-corpus curation over `documents`. */
 object CorpusQueries extends QueryFamily("corpus") {
@@ -136,7 +136,7 @@ object CorpusQueries extends QueryFamily("corpus") {
     QuerySpec("corpus_split", (s, d) => TrainingData.splitStats(docs(s, d)),
       TrainingData.sqlSplitStats),
     QuerySpec("corpus_split_leakage", (s, d) =>
-      TrainingData.splitLeakage(arts(s, d).pairs, docs(s, d)),
+      TrainingData.splitLeakage(Dedup.minhashPairsCached(docs(s, d)), docs(s, d)),
       TrainingData.sqlSplitLeakage(Dedup.sqlMinhashPairs())),
     QuerySpec("corpus_pack", (s, d) => TrainingData.pack(docs(s, d)), TrainingData.sqlPack),
     // the production bucketing variant (quantile-sampled range buckets for
@@ -171,7 +171,7 @@ object CorpusQueries extends QueryFamily("corpus") {
     // as ONE composed plan
     QuerySpec("corpus_export_dedup", (s, d) => TrainingData.corpusExport(
       CorpusClean.cleanCached(docs(s, d))
-        .join(Dedup.canonicalFrom(docs(s, d), arts(s, d).components)
+        .join(Dedup.canonicalFrom(docs(s, d), Dedup.componentsCached(docs(s, d)))
           .filter(col("kept")).select(col("doc_id")),
           Seq("doc_id"), "left_semi")),
       TrainingData.sqlCorpusExportFrom(
@@ -189,7 +189,7 @@ object CorpusQueries extends QueryFamily("corpus") {
     QuerySpec("corpus_e2e", (s, d) => TrainingData.corpusE2e(
       docs(s, d),
       CorpusClean.cleanCached(docs(s, d)),
-      Dedup.canonicalFrom(docs(s, d), arts(s, d).components),
+      Dedup.canonicalFrom(docs(s, d), Dedup.componentsCached(docs(s, d))),
       Dedup.minhashDecon(docs(s, d))),
       TrainingData.sqlCorpusE2e()),
     QuerySpec("corpus_pad_audit", (s, d) => TrainingData.padAudit(docs(s, d)),

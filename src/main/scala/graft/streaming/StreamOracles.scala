@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
+import graft.Scratch
 import graft.operators.{Dedup, ScdMerge, Sketch}
 
 /** Oracle-checkable STREAMING queries: each drives a real Structured
@@ -34,23 +35,6 @@ object StreamOracles {
   private val seq = new java.util.concurrent.atomic.AtomicInteger()
   private val BaseMtime = 1700000000000L
 
-  /** RAM-backed scratch when the host has one (/dev/shm), java.io.tmpdir
-    * otherwise. Everything the oracles put here is run-local scratch —
-    * micro-batch source splits, offset/commit checkpoints, versioned
-    * state-swap dirs — and /tmp on this host is ext4, so leaving it there
-    * made every micro-batch pay real-disk fsyncs for the WAL and every
-    * state swap a disk round-trip. At cluster scale these locations are
-    * the deployment's fast local volume (checkpoints: the durable store);
-    * locally tmpfs is that volume.
-    */
-  private val scratchBase: Path = {
-    val shm = Path.of("/dev/shm")
-    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-    else Path.of(System.getProperty("java.io.tmpdir"))
-  }
-  private def scratchDir(prefix: String): Path =
-    Files.createTempDirectory(scratchBase, prefix)
-
   /** Micro-batch SOURCE directories are a deterministic function of the
     * fixture dir (fixed split function, fixed mtimes), so repeated runs in
     * one JVM — the bench's 3 passes — reuse them instead of re-splitting
@@ -64,20 +48,16 @@ object StreamOracles {
   private def cachedSrc(spark: SparkSession, key: String)(
       build: Path => Unit): Path =
     graft.Memo.owned(spark, s"stream.src:$key") {
-      val d = scratchDir("graft_stream_src")
+      val d = Scratch.dir("graft_stream_src")
       build(d)
       d
-    }(deleteTree)
-
-  private def deleteTree(d: Path): Unit =
-    Files.walk(d).iterator().asScala.toSeq.reverse
-      .foreach(p => Files.deleteIfExists(p))
+    }(Scratch.deleteTree)
 
   /** Write `df` as ONE parquet file named for `idx` with a fixed,
     * idx-ordered mtime — the unit of streaming ingestion.
     */
   private def writeBatchFile(df: DataFrame, dst: Path, idx: Int): Unit = {
-    val staging = scratchDir("graft_stage")
+    val staging = Scratch.dir("graft_stage")
     df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val part = Files.list(staging).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet"))
@@ -85,7 +65,7 @@ object StreamOracles {
     val tgt = dst.resolve(f"b$idx%03d.parquet")
     Files.move(part, tgt)
     Files.setLastModifiedTime(tgt, FileTime.fromMillis(BaseMtime + idx * 60000L))
-    deleteTree(staging)
+    Scratch.deleteTree(staging)
   }
 
   private def streamFiles(spark: SparkSession, src: Path,
@@ -131,7 +111,7 @@ object StreamOracles {
       // offset/commit WALs + state store under RAM-backed scratch (every
       // query gets its own subdir — query names here are seq-unique)
       s.conf.set("spark.sql.streaming.checkpointLocation",
-        scratchDir("graft_ckpt").toString)
+        Scratch.dir("graft_ckpt").toString)
       s
     }
 
@@ -187,7 +167,7 @@ object StreamOracles {
       }
     }
     val ss = streamSession(spark)
-    val stateBase = scratchDir("graft_scd_state").toString
+    val stateBase = Scratch.dir("graft_scd_state").toString
     val cfg = ScdMerge.Config(keys = Seq("k"), valueCol = "v", scd2 = false)
     val clockTs = lit("2026-01-01 00:00:00").cast("timestamp")
     val clockDate = lit("2026-01-01").cast("date")
@@ -267,7 +247,7 @@ object StreamOracles {
       }
     }
     val ss = streamSession(spark)
-    val stateBase = scratchDir("graft_dedup_state").toString
+    val stateBase = Scratch.dir("graft_dedup_state").toString
     // band state accumulates as per-batch DELTA dirs (append-only, like a
     // real durable band table): each batch writes only ITS admitted bands
     // and reads the union — no rewrite of the whole state per batch. The
@@ -418,7 +398,7 @@ object StreamOracles {
     val ss = streamSession(spark)
     val evalBands = ss.read.parquet(idx.resolve("bands").toString)
     val evalSets = ss.read.parquet(idx.resolve("sets").toString)
-    val hitsBase = scratchDir("graft_decon_hits").toString
+    val hitsBase = Scratch.dir("graft_decon_hits").toString
     // keyed by batch id, NOT appended per invocation: a retried
     // micro-batch re-enters foreachBatch with the same id — the
     // overwrite write is idempotent, but a second append of the same
@@ -558,7 +538,7 @@ object StreamOracles {
     val ss = streamSession(spark)
     val evalBands = ss.read.parquet(idx.resolve("bands").toString)
     val evalSets = ss.read.parquet(idx.resolve("sets").toString)
-    val stateBase = scratchDir("graft_corpus_state").toString
+    val stateBase = Scratch.dir("graft_corpus_state").toString
     val admDirs = scala.collection.mutable.SortedMap.empty[Long, String]
     val bandDirs = scala.collection.mutable.SortedMap.empty[Long, String]
     val q = streamFiles(ss, src, StructType(Seq(

@@ -15,7 +15,7 @@ import graft.sources.HtmlTable
 class HtmlTableSpec extends SparkSuite {
 
   private def write(name: String, html: String): String = {
-    val dir = Files.createTempDirectory("graft_html")
+    val dir = tempDir("graft_html")
     val f = dir.resolve(name)
     Files.write(f, html.getBytes("UTF-8"))
     f.toString
@@ -79,7 +79,7 @@ class HtmlTableSpec extends SparkSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.catalyst.optimizer.BuildRight
-    val dir = Files.createTempDirectory("graft_html_footer")
+    val dir = tempDir("graft_html_footer")
     (1 to 3).foreach { i =>
       Files.write(dir.resolve(s"page_$i.html"),
         wikiHtml.replace("21 August", s"$i August").getBytes("UTF-8"))
@@ -106,7 +106,7 @@ class HtmlTableSpec extends SparkSuite {
   }
 
   test("DataSource V2 form: format(\"graft-html\") scans a page directory in parallel") {
-    val dir = Files.createTempDirectory("graft_html_v2")
+    val dir = tempDir("graft_html_v2")
     Files.write(dir.resolve("page_a.html"), wikiHtml.getBytes("UTF-8"))
     Files.write(dir.resolve("page_b.html"),
       wikiHtml.replace("JPMorgan Chase", "Goldman Sachs").getBytes("UTF-8"))

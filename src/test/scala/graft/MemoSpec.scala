@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -84,7 +82,7 @@ class MemoSpec extends SparkSuite {
     val b = spark.newSession()
     val df = Memo.persisted(a, "spec.persisted:k")(a.range(10).toDF("id"))
     assert(df.storageLevel != StorageLevel.NONE)
-    val dir = Memo.owned(a, "spec.owned:k")(Files.createTempDirectory("graft_memo"))(
+    val dir = Memo.owned(a, "spec.owned:k")(tempDir("graft_memo"))(
       d => Files.delete(d))
     val other = Memo(b, "spec.other:k")(new Object)
     // bucket_join's tables: named per entry, so two sessions of one
@@ -104,9 +102,24 @@ class MemoSpec extends SparkSuite {
     Memo.invalidate(b)
   }
 
+  test("dedup memos build on first read: a pairs-only query runs no component iteration") {
+    val s = spark.newSession()
+    def builds(q: String): Set[String] = {
+      MemoLedger.drain()
+      SparkEntry.queries(q)(s, fixture)
+      MemoLedger.drain().keySet.map(_.takeWhile(_ != '@'))
+    }
+    try {
+      assert(builds("dedup_threshold_sweep") ==
+        Set("dedup.bands", "dedup.pairs", "dedup.sets"))
+      assert(builds("dedup_components") == Set("dedup.components"))
+      assert(builds("dedup_cluster_stats").isEmpty)
+    } finally Tables.invalidate(s)
+  }
+
   // One consumer per memo artifact family: sim.knn, the NSW chain
   // (sim.lsh2/l1sym/nswsym/nswentry/nswvis, sim.n), bucket.tables,
-  // dedup.artifacts/bands/pairs, dedup.sets, graph:* (pinned and
+  // dedup.bands/pairs/components, dedup.sets, graph:* (pinned and
   // persisted), text.winnow, text.bpe, training.shingles, corpus.clean,
   // sim.residuals + sim.res_book, sim.brute, sim.pca, sim.ivf_cents,
   // tables.events, stream.src.
@@ -123,12 +136,8 @@ class MemoSpec extends SparkSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  private def deleteTree(p: Path): Unit =
-    if (Files.exists(p)) Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(Files.delete)
-
   test("invalidate after a fixture rewrite: every memo serves the new files") {
-    val copy = Files.createTempDirectory("graft_memo_fixture")
+    val copy = tempDir("graft_memo_fixture")
     tables.foreach { t =>
       Files.copy(Path.of(s"$fixture/$t.parquet"), copy.resolve(s"$t.parquet"))
     }
@@ -141,7 +150,7 @@ class MemoSpec extends SparkSuite {
       tables.foreach { t =>
         val raw = spark.read.parquet(s"$fixture/$t.parquet")
         val key = col(raw.columns.head)
-        deleteTree(copy.resolve(s"$t.parquet"))
+        Scratch.deleteTree(copy.resolve(s"$t.parquet"))
         raw.filter(key < 16 || key % 5 =!= 2).coalesce(1)
           .write.parquet(copy.resolve(s"$t.parquet").toString)
       }
@@ -157,9 +166,6 @@ class MemoSpec extends SparkSuite {
         assert(unchanged.isEmpty,
           s"the rewrite left these results unchanged: ${unchanged.mkString(", ")}")
       } finally Tables.invalidate(fresh)
-    } finally {
-      Tables.invalidate(a)
-      deleteTree(copy)
-    }
+    } finally Tables.invalidate(a)
   }
 }

@@ -960,7 +960,7 @@ class PlanShapeSpec extends SparkSuite {
 
   test("dedup_edit: candidates come from the pair memo, not a fresh " +
       "signature tower") {
-    // the registry feeds editPairs the ClusterArtifacts pair pin; a
+    // the registry feeds editPairs the pinned pair memo; a
     // regression to the standalone route re-runs the whole md5 minhash
     // chain per call (opt round 1: 1.25 s -> 0.31 s isolated)
     val p = planTree("dedup_edit")

@@ -35,7 +35,7 @@ class QueriesSmokeSpec extends SparkSuite {
   // every result is written through Verify's dump into one fresh
   // directory; the last test compares them all with their DuckDB oracles
   private lazy val outDir =
-    java.nio.file.Files.createTempDirectory("graft_verify").toString
+    tempDir("graft_verify").toString
 
   for (name <- SparkEntry.queries.keys) {
     test(s"$name runs and returns rows on sf0.001") {

@@ -65,7 +65,7 @@ class ReliableCheckpointSpec extends SparkSuite {
     val baseline = try family.map { case (name, build) =>
       name -> snapshot(build(local))
     } finally Tables.invalidate(local)
-    val ckDir = Files.createTempDirectory("graft_ck_family").toString
+    val ckDir = tempDir("graft_ck_family").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     val durableSession = spark.newSession()
     try {

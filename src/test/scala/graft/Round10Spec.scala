@@ -126,10 +126,9 @@ class Round10Spec extends SparkSuite {
     import graft.operators.{CorpusClean, Dedup, TrainingData}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val d = Tables.documents(spark, dir)
-    val arts = Dedup.clusterArtifactsCached(d)
     val keep = TrainingData.corpusE2eKeep(
       CorpusClean.cleanCached(d),
-      Dedup.canonicalFrom(d, arts.components),
+      Dedup.canonicalFrom(d, Dedup.componentsCached(d)),
       Dedup.minhashDecon(d))
     val plan = keep.queryExecution.optimizedPlan
     // the family artifacts are Iterate.pin products — LogicalRDD scans.

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ScdMerge, Skew}
@@ -43,7 +41,7 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("batch-partitioned sink: dynamic overwrite touches only new batches") {
-    val base = Files.createTempDirectory("graft_sink").toString
+    val base = tempDir("graft_sink").toString
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val b1 = Seq((1L, "b1"), (2L, "b1")).toDF("k", "batch_id")
     val b2 = Seq((3L, "b2")).toDF("k", "batch_id")
@@ -175,12 +173,11 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("cluster artifacts memo returns the same computed frames per (session, key)") {
-    // two separately built frames over the same fixture: one entry
-    val a = Dedup.clusterArtifactsCached(Tables.documents(spark, dir))
-    val b = Dedup.clusterArtifactsCached(Tables.documents(spark, dir))
-    assert(a.pairs eq b.pairs)
-    assert(a.components eq b.components)
-    assert(a.bands eq b.bands)
+    // two separately built frames over the same fixture: one entry each
+    val (a, b) = (Tables.documents(spark, dir), Tables.documents(spark, dir))
+    assert(Dedup.minhashPairsCached(a) eq Dedup.minhashPairsCached(b))
+    assert(Dedup.componentsCached(a) eq Dedup.componentsCached(b))
+    assert(Dedup.minhashBandsCached(a) eq Dedup.minhashBandsCached(b))
   }
 
   test("star components agree with pointer jumping on multi-cluster graphs") {
@@ -205,7 +202,7 @@ class ScaleOpsSpec extends SparkSuite {
     // durable checkpoint files there (executor-loss-safe at cluster
     // scale) instead of executor-local blocks — and the iterative result
     // must be unchanged.
-    val ckDir = Files.createTempDirectory("graft_ck").toString
+    val ckDir = tempDir("graft_ck").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     try {
       val path = (0L until 16L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
@@ -243,7 +240,7 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("streaming SCD load: foreachBatch merges micro-batches into state") {
-    val stateDir = Files.createTempDirectory("graft_state").toString
+    val stateDir = tempDir("graft_state").toString
     val cfg = ScdMerge.Config(keys = Seq("k"), valueCol = "v", scd2 = false)
     val clockTs = lit("2026-02-02 00:00:00").cast("timestamp")
     val clockDate = lit("2026-02-02").cast("date")

@@ -1,11 +1,29 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable.ListBuffer
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession per test suite. */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
+
+  private val tempDirs = ListBuffer.empty[Path]
+
+  /** A new temp dir, deleted with everything under it after the suite. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(Scratch.deleteTree)
+    finally super.afterAll()
 }
 
 object SparkSuite {
@@ -38,8 +56,9 @@ object SparkSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      // one session per JVM: its warehouse lives as long as the JVM's
+      // scratch root
+      .config("spark.sql.warehouse.dir", Scratch.dir("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -32,7 +32,7 @@ class TablesSchemaSpec extends SparkSuite {
 
   test("width drift (int/float narrowing on disk) is adapted by cast") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val tmp = tempDir("graft_drift").toString
     Tables.customer(spark, dir)
       .select(col("c_custkey").cast("int").as("c_custkey"), col("c_name"),
         col("c_nationkey").cast("short").as("c_nationkey"),
@@ -49,7 +49,7 @@ class TablesSchemaSpec extends SparkSuite {
     // when a sibling column is being width-cast — the scale property the
     // adaptive reader must not cost
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_drift_pd").toString
+    val tmp = tempDir("graft_drift_pd").toString
     Tables.customer(spark, dir)
       .select(col("c_custkey").cast("int").as("c_custkey"), col("c_name"),
         col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
@@ -65,7 +65,7 @@ class TablesSchemaSpec extends SparkSuite {
 
   test("unadaptable drift fails fast, naming the table and column") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_drift2").toString
+    val tmp = tempDir("graft_drift2").toString
     Tables.region(spark, dir)
       .select(col("r_regionkey").cast("string").as("r_regionkey"), col("r_name"))
       .write.mode("overwrite").parquet(s"$tmp/region.parquet")
@@ -75,7 +75,7 @@ class TablesSchemaSpec extends SparkSuite {
 
   test("missing column fails fast, naming the table and column") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_drift3").toString
+    val tmp = tempDir("graft_drift3").toString
     Tables.region(spark, dir).select(col("r_name"))
       .write.mode("overwrite").parquet(s"$tmp/region.parquet")
     val e = intercept[IllegalStateException](Tables.region(spark, tmp))
