@@ -339,9 +339,10 @@ object MemoScaleAudit {
   *     total time must grow far slower than the batch count.
   *
   * Protocol matches [[ScaleAudit]]: fresh cloned session per
-  * measurement (cold memos), two measurements per point, min taken;
-  * micro-batch SOURCE splits stay amortized across passes (they key on
-  * (dir, batches)) — what is measured is the stream, not fixture prep.
+  * measurement (cold memos), two measurements per point, min taken.
+  * The micro-batch SOURCE split is a memo of the measured session (keyed
+  * on the oracle, its batch count and its input frame), so each fresh
+  * session's measurement includes writing its split.
   *
   * Usage: runMain graft.StreamScaleAudit [baseDir] [tenXDir] [outJson]
   * (defaults /root/testdata/sf0.1, target/scale10x,

@@ -9,8 +9,8 @@ object StreamQueries extends QueryFamily("stream") {
 
   val specs: Seq[QuerySpec] = Seq(
     // streaming twins driven to their FINAL state over real micro-batches
-    // (file source, AvailableNow/processAllAvailable) — the returned frame
-    // is the durable state, hash-checked against a batch oracle
+    // (file source, AvailableNow) — the returned frame is the durable
+    // state, hash-checked against a batch oracle
     QuerySpec("stream_scd_state", StreamOracles.scdState _, StreamOracles.sqlScdState),
     QuerySpec("stream_dedup_state", (s, d) => StreamOracles.dedupState(s, d),
       StreamOracles.sqlDedupState),

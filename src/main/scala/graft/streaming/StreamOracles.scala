@@ -3,13 +3,14 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 import graft.Scratch
 import graft.operators.{Dedup, ScdMerge, Sketch}
@@ -29,29 +30,44 @@ import graft.operators.{Dedup, ScdMerge, Sketch}
   * strictly increasing fixed modification times — FileStreamSource orders
   * by mtime, so batch order is reproducible and the oracle can mirror it
   * (`ORDER BY batch DESC` picks the same "last write" the stream applied).
+  *
+  * Every oracle is the same three steps: [[source]] (the split, written
+  * once per session), a sink — a memory table ([[toMemory]]) or a
+  * `foreachBatch` body over a [[StateBook]] of per-batch state dirs — and
+  * [[run]], which drains the source and hands back the readout.
   */
 object StreamOracles {
 
   private val seq = new java.util.concurrent.atomic.AtomicInteger()
   private val BaseMtime = 1700000000000L
 
-  /** Micro-batch SOURCE directories are a deterministic function of the
-    * fixture dir (fixed split function, fixed mtimes), so repeated runs in
-    * one JVM — the bench's 3 passes — reuse them instead of re-splitting
-    * the fixture each pass. What's measured stays the STREAM (source
-    * discovery, micro-batch execution, state swap); only the one-time
-    * fixture prep is amortized. State/output dirs are never cached — every
-    * run streams into a fresh state from scratch. The split directory is
-    * owned by its [[graft.Memo]] entry and deleted when the entry is
-    * invalidated.
+  /** The stream source of one oracle: `split(input)`'s frames, in order,
+    * as one micro-batch file each, read back as a file stream
+    * (`maxFilesPerTrigger=1`) in the [[streamSession]] of `width`.
+    *
+    * The split is a deterministic function of `input`, so repeated runs in
+    * one session — the bench's passes — reuse it: a [[graft.Memo]] entry
+    * keyed on `name` (the oracle and its batch count) and on `input` owns
+    * the split dir, deleted when the entry is invalidated, and the written
+    * frames' schema, which the stream declares (a streaming source cannot
+    * infer one). What's measured stays the STREAM (source discovery,
+    * micro-batch execution, state swap); only the one-time fixture prep
+    * is amortized. State and checkpoint dirs are never cached — every run
+    * streams into a fresh state from scratch.
     */
-  private def cachedSrc(spark: SparkSession, key: String)(
-      build: Path => Unit): Path =
-    graft.Memo.owned(spark, s"stream.src:$key") {
-      val d = Scratch.dir("graft_stream_src")
-      build(d)
-      d
-    }(Scratch.deleteTree)
+  private def source(spark: SparkSession, name: String, input: DataFrame,
+      width: Int)(split: DataFrame => Seq[DataFrame]): DataFrame = {
+    val (dir, schema) =
+      graft.Memo.owned(spark, s"stream.src:$name", input) {
+        val d = Scratch.dir("graft_stream_src")
+        val batches = split(input)
+        batches.zipWithIndex.foreach { case (b, i) => writeBatchFile(b, d, i) }
+        (d, batches.head.schema)
+      }(s => Scratch.deleteTree(s._1))
+    streamSession(spark, width).readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir.toString)
+  }
 
   /** Write `df` as ONE parquet file named for `idx` with a fixed,
     * idx-ordered mtime — the unit of streaming ingestion.
@@ -68,12 +84,6 @@ object StreamOracles {
     Scratch.deleteTree(staging)
   }
 
-  private def streamFiles(spark: SparkSession, src: Path,
-      schema: StructType): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src.toString)
-
   /** Isolated session for the streaming runs. The state store creates one
     * partition per shuffle partition at query start and COMMITS each of
     * them per micro-batch — at the bench's 32 partitions that is 32
@@ -83,20 +93,17 @@ object StreamOracles {
     * keep the session setting. Memoized per (parent session, width).
     *
     * WIDTH TRACKS STATE CARDINALITY, NOT CORE COUNT (guide §2: fewer,
-    * larger partitions; every store pays a per-batch commit). Oracles
-    * whose state is BOUNDED by a fixed group/cell count at ANY input
-    * scale (kmv: 3 groups, cms: depth×width cells, mg: 1 buffer,
-    * window/drop: |windows|×|types|) run at [[TinyStateWidth]] — one
-    * commit per batch instead of four, measured −0.1…−0.5 s each at
-    * sf0.1 with identical results. Oracles whose state grows with the
-    * KEY population (session/asof: per-user rows, join: buffered
-    * events) keep [[StreamWidth]] — the session oracle's 95k-row
-    * gap-merge measurably regresses when serialized onto one state task.
+    * larger partitions; every store pays a per-batch commit). The kmv
+    * (3 groups), cms (depth×width cells), mg (1 buffer), drop and session
+    * oracles run at [[TinyStateWidth]] — one commit per batch instead of
+    * four, measured −0.1…−0.5 s each at sf0.1 with identical results.
+    * The others keep [[StreamWidth]]: the per-user asof state, the join's
+    * buffered events, the window table, and the foreachBatch oracles,
+    * whose batch bodies are plain batch jobs.
     */
   val StreamWidth = 4
   val TinyStateWidth = 1
-  private def streamSession(spark: SparkSession,
-      width: Int = StreamWidth): SparkSession =
+  private def streamSession(spark: SparkSession, width: Int): SparkSession =
     graft.Memo.untimed(spark, s"stream.session:$width") {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", width.toString)
@@ -108,26 +115,85 @@ object StreamOracles {
       // inner interval join emits its matches eagerly, so the extra
       // batch's full plan-execute-commit cycle buys nothing here
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // offset/commit WALs + state store under RAM-backed scratch (every
-      // query gets its own subdir — query names here are seq-unique)
-      s.conf.set("spark.sql.streaming.checkpointLocation",
-        Scratch.dir("graft_ckpt").toString)
       s
     }
 
-  /** Await an AvailableNow query's natural termination, failing LOUDLY
-    * on timeout: a timed-out stream stopped mid-ingest would otherwise
-    * hand the readout a well-formed PARTIAL state (only the completed
-    * batches' deltas) — a wrong answer that surfaces as a confusing
-    * oracle data diff instead of the actual problem. */
-  private def awaitOrFail(q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long = 300000): Unit = {
-    val finished =
-      try { val f = q.awaitTermination(timeoutMs); Streams.dumpProgress(q); f }
-      finally if (q.isActive) q.stop()
-    require(finished,
-      s"streaming oracle did not finish within ${timeoutMs} ms — " +
-        "refusing to read a partial final state")
+  /** Per-batch state dirs of one oracle run, under one scratch dir and
+    * keyed by micro-batch id. Batch `id` writes `<root>/<kind><id>` and
+    * reads only dirs of ids STRICTLY before its own — never what it is
+    * overwriting. So a RETRIED micro-batch (same id) neither reads its own
+    * failed attempt's state (a bare `current` pointer would make the retry
+    * merge into, and lazily read, the very path it overwrites; a dedup
+    * retry would see its own bands and self-reject) nor registers a path
+    * twice (which would double-count that batch in the readout).
+    */
+  private final class StateBook(prefix: String) {
+    private val root = Scratch.dir(prefix)
+    private val written = scala.collection.mutable.SortedMap.empty[Long, Seq[String]]
+
+    /** The committed `kind` dirs of batches before `id`, in batch order. */
+    def before(kind: String, id: Long): Seq[String] = synchronized {
+      written.rangeUntil(id).collect {
+        case (i, kinds) if kinds.contains(kind) => dir(kind, i)
+      }.toSeq
+    }
+
+    /** Every committed `kind` dir, in batch order — the readout's input. */
+    def all(kind: String): Seq[String] = before(kind, Long.MaxValue)
+
+    /** Write batch `id`'s state, one dir per kind, and commit the dirs
+      * only once EVERY write finished: a retried batch must never see a
+      * half-written version. Two or more writes are independent actions,
+      * submitted from separate driver threads (guide §2.6) so one write's
+      * jobs back-fill the other's scheduling/commit gaps.
+      */
+    def write(id: Long)(frames: (String, DataFrame)*): Unit = {
+      def one(kind: String, df: DataFrame): Unit =
+        df.write.mode("overwrite").parquet(dir(kind, id))
+      if (frames.size == 1) one(frames.head._1, frames.head._2)
+      else {
+        import scala.concurrent.ExecutionContext.Implicits.global
+        frames.map { case (k, df) => Future(one(k, df)) }
+          .foreach(Await.result(_, Duration.Inf))
+      }
+      synchronized { written(id) = frames.map(_._1) }
+    }
+
+    private def dir(kind: String, id: Long): String = s"$root/$kind$id"
+  }
+
+  /** The one run step: drain the stream behind `w` under `AvailableNow`
+    * in a checkpoint dir of its own, then return `readout`.
+    *
+    * A run that does not finish within the timeout fails LOUDLY: a stream
+    * stopped mid-ingest would hand the readout a well-formed PARTIAL
+    * state (only the completed batches' deltas) — a wrong answer that
+    * surfaces as a confusing oracle data diff instead of the actual
+    * problem. The checkpoint (offset/commit logs, state store) is deleted
+    * when the run returns: nothing reads it after an AvailableNow query
+    * ends, and every readout reads the sink — a memory table or the
+    * [[StateBook]] dirs, which live on with the returned frame.
+    */
+  private def run(w: DataStreamWriter[Row])(readout: => DataFrame): DataFrame = {
+    val timeoutMs = 300000L
+    val ckpt = Scratch.dir("graft_ckpt")
+    try {
+      val q = w.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.toString).start()
+      val finished =
+        try q.awaitTermination(timeoutMs) finally if (q.isActive) q.stop()
+      require(finished,
+        s"streaming oracle did not finish within ${timeoutMs} ms — " +
+          "refusing to read a partial final state")
+    } finally Scratch.deleteTree(ckpt)
+    readout
+  }
+
+  /** [[run]] into a fresh memory table; the table is the readout. */
+  private def toMemory(in: DataFrame, mode: OutputMode): DataFrame = {
+    val name = s"graft_stream_${seq.incrementAndGet()}"
+    run(in.writeStream.outputMode(mode).format("memory").queryName(name))(
+      in.sparkSession.table(name))
   }
 
   // ------------------------------------------------------ stream_scd_state
@@ -144,9 +210,10 @@ object StreamOracles {
   /** Orders split into [[ScdBatches]] micro-batches of contiguous order
     * YEARS (ascending); each batch Type-1-merges (o_custkey → max
     * o_totalprice of the batch, the ScdMerge dedup policy) into versioned
-    * parquet state via the real [[Streams.scdLoadStream]] foreachBatch
-    * path. Final state per key = the value from the LAST year-bucket the
-    * key appears in — the batch oracle mirrors the bucketing with a
+    * parquet state in a `foreachBatch` body — the streaming form of the
+    * pipeline's SCD load, the micro-batch id standing in for its per-run
+    * batch uuid. Final state per key = the value from the LAST year-bucket
+    * the key appears in — the batch oracle mirrors the bucketing with a
     * rank-over-distinct-years expression and picks
     * `ROW_NUMBER() OVER (ORDER BY b DESC)`.
     */
@@ -154,55 +221,36 @@ object StreamOracles {
     val orders = graft.Tables.orders(spark, dir)
       .select(col("o_custkey").as("k"), col("o_totalprice").as("v"),
         year(col("o_orderdate")).as("y"))
-    val src = cachedSrc(spark, s"scd|$dir") { d =>
-      val years = orders.select(col("y")).distinct().orderBy(col("y"))
+    val in = source(spark, s"scd:$ScdBatches", orders, StreamWidth) { o =>
+      val years = o.select(col("y")).distinct().orderBy(col("y"))
         .collect().map(_.getInt(0)) // handful of years — driver control flow
       // contiguous rank-buckets, mirrored in sqlScdState: year at sorted
       // position i lands in bucket i*B/n
       val buckets = years.zipWithIndex
         .groupMap { case (_, i) => i * ScdBatches / years.length } { case (y, _) => y }
-      (0 until math.min(ScdBatches, years.length)).foreach { b =>
-        writeBatchFile(orders.filter(col("y").isin(buckets(b): _*))
-          .select(col("k"), col("v")), d, b)
+      (0 until math.min(ScdBatches, years.length)).map { b =>
+        o.filter(col("y").isin(buckets(b): _*)).select(col("k"), col("v"))
       }
     }
-    val ss = streamSession(spark)
-    val stateBase = Scratch.dir("graft_scd_state").toString
+    val ss = in.sparkSession
     val cfg = ScdMerge.Config(keys = Seq("k"), valueCol = "v", scd2 = false)
     val clockTs = lit("2026-01-01 00:00:00").cast("timestamp")
     val clockDate = lit("2026-01-01").cast("date")
-    val emptyState = ss.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType(Seq(StructField("k", LongType), StructField("v", DoubleType),
-        StructField("batch_id", StringType))))
-    // versioned state dirs: each batch reads v(n-1) and writes v(n) — never
-    // overwrites what it is lazily reading (the scaladoc'd swap discipline).
-    // Keyed by batch id so a RETRIED micro-batch re-reads the version
-    // strictly before its own id — a bare `current` pointer would make the
-    // retry merge into (and lazily read) the very v$id path it overwrites.
-    val versions = scala.collection.mutable.SortedMap.empty[Long, String]
-    val writer = Streams.scdLoadStream(
-      streamFiles(ss, src, StructType(Seq(
-        StructField("k", LongType), StructField("v", DoubleType)))),
-      cfg, clockTs, clockDate,
-      mergeAndSwap = (batch, id) => {
-        val prior = versions.synchronized {
-          versions.rangeUntil(id).lastOption.map(_._2)
-        }
-        val target = prior.map(ss.read.parquet(_)).getOrElse(emptyState)
-        val merged = ScdMerge.merge(
-          batch.withColumn("batch_id", lit(s"stream-$id")),
-          target, cfg, clockTs, clockDate, lit(s"stream-$id"))
-          .drop(ScdMerge.ChangeCol)
-        val next = s"$stateBase/v$id"
-        merged.write.mode("overwrite").parquet(next)
-        versions.synchronized { versions(id) = next }
-      })
-    val q = writer.start()
-    awaitOrFail(q)
-    val last = versions.synchronized { versions.lastOption }
-    ss.read.parquet(last.getOrElse(sys.error("no micro-batch ran"))._2)
-      .select(col("k"), col("v")).orderBy(col("k"))
+    // versioned state dirs: each batch reads v(n-1) and writes v(n); the
+    // first batch merges into an empty state of its own schema
+    val versions = new StateBook("graft_scd_state")
+    run(in.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      val incoming = batch.withColumn("batch_id", lit(s"stream-$id"))
+      val target = versions.before("v", id).lastOption
+        .map(ss.read.parquet(_)).getOrElse(ss.createDataFrame(
+          new java.util.ArrayList[Row](), incoming.schema))
+      versions.write(id)("v" -> ScdMerge.merge(incoming, target, cfg,
+        clockTs, clockDate, lit(s"stream-$id")).drop(ScdMerge.ChangeCol))
+    }) {
+      ss.read.parquet(versions.all("v").lastOption
+          .getOrElse(sys.error("no micro-batch ran")))
+        .select(col("k"), col("v")).orderBy(col("k"))
+    }
   }
 
   /** Batch oracle: per (key, year-bucket) the merge's dedup keeps the max
@@ -241,13 +289,10 @@ object StreamOracles {
   def dedupState(spark: SparkSession, dir: String,
       batches: Int = DedupBatches): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val src = cachedSrc(spark, s"dedup|$dir|$batches") { d =>
-      (0 until batches).foreach { i =>
-        writeBatchFile(docs.filter(col("doc_id") % batches === i), d, i)
-      }
+    val in = source(spark, s"dedup:$batches", docs, StreamWidth) { d =>
+      (0 until batches).map(i => d.filter(col("doc_id") % batches === i))
     }
-    val ss = streamSession(spark)
-    val stateBase = Scratch.dir("graft_dedup_state").toString
+    val ss = in.sparkSession
     // band state accumulates as per-batch DELTA dirs (append-only, like a
     // real durable band table): each batch writes only ITS admitted bands
     // and reads the union — no rewrite of the whole state per batch. The
@@ -256,42 +301,26 @@ object StreamOracles {
     // the per-batch actions for a derivable frame); signature-less docs
     // — fewer words than a shingle — have no bands, can never collide,
     // and are admitted vacuously at readout.
-    // keyed by batch id, and each batch's state read takes only dirs of
-    // STRICTLY EARLIER ids: a retried micro-batch (same id) must not see
-    // its own failed attempt's bands as prior state — its docs would
-    // self-collide and be rejected — nor double-register its path
-    val bandDirs = scala.collection.mutable.SortedMap.empty[Long, String]
-    val q = streamFiles(ss, src, StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val prior = bandDirs.synchronized {
-          bandDirs.rangeUntil(id).values.toSeq
-        }
-        val state =
-          if (prior.isEmpty) Dedup.minhashBands(batch).limit(0)
-          else ss.read.parquet(prior: _*)
-        // a micro-batch arrives as ONE source file = one partition; the
-        // md5 shingle/minhash chains are the batch's CPU, so spread the
-        // thin document rows across the session's width first
-        val (_, newBands) = Streams.dedupBatch(batch.repartition(4), state)
-        val nextBands = s"$stateBase/bands$id"
-        newBands.write.mode("overwrite").parquet(nextBands)
-        bandDirs.synchronized { bandDirs(id) = nextBands }
-        ()
-      }
-      .start()
-    awaitOrFail(q)
-    val signatureless = docs.filter(
-      size(graft.operators.TextOps.words(col("text"))) < Dedup.ShingleK)
-      .select(col("doc_id"))
-    ss.read.parquet(bandDirs.values.toSeq: _*)
-      .select(col("doc_id")).distinct()
-      .unionByName(signatureless)
-      .orderBy(col("doc_id"))
+    val bands = new StateBook("graft_dedup_state")
+    run(in.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      val prior = bands.before("bands", id)
+      val state =
+        if (prior.isEmpty) Dedup.minhashBands(batch).limit(0)
+        else ss.read.parquet(prior: _*)
+      // a micro-batch arrives as ONE source file = one partition; the
+      // md5 shingle/minhash chains are the batch's CPU, so spread the
+      // thin document rows across the session's width first
+      val (_, newBands) = Streams.dedupBatch(batch.repartition(4), state)
+      bands.write(id)("bands" -> newBands)
+    }) {
+      val signatureless = docs.filter(
+        size(graft.operators.TextOps.words(col("text"))) < Dedup.ShingleK)
+        .select(col("doc_id"))
+      ss.read.parquet(bands.all("bands"): _*)
+        .select(col("doc_id")).distinct()
+        .unionByName(signatureless)
+        .orderBy(col("doc_id"))
+    }
   }
 
   /** The band-share relation is [[Dedup.sqlMinhashPairs]]'s bands CTE made
@@ -384,54 +413,38 @@ object StreamOracles {
 
   def deconState(spark: SparkSession, dir: String,
       batches: Int = DeconBatches): DataFrame = {
-    import graft.operators.{Dedup, Iterate}
-    val evalMod = graft.operators.TrainingData.EvalMod
     val docs = graft.Tables.documents(spark, dir)
-    val src = cachedSrc(spark, s"decon|$dir|$batches") { d =>
-      val train = docs.filter(col("doc_id") % evalMod =!= 0)
-      (0 until batches).foreach { i =>
-        writeBatchFile(
-          train.filter(col("doc_id") % batches === i), d, i)
-      }
-    }
-    val idx = deconIndex(docs, dir)
-    val ss = streamSession(spark)
+    val in = source(spark, s"decon:$batches", docs, StreamWidth)(
+      trainResidues(_, batches))
+    val ss = in.sparkSession
+    val idx = deconIndex(docs)
     val evalBands = ss.read.parquet(idx.resolve("bands").toString)
     val evalSets = ss.read.parquet(idx.resolve("sets").toString)
-    val hitsBase = Scratch.dir("graft_decon_hits").toString
-    // keyed by batch id, NOT appended per invocation: a retried
-    // micro-batch re-enters foreachBatch with the same id — the
-    // overwrite write is idempotent, but a second append of the same
-    // path would double-count that batch's hits in the readout
-    val hitDirs =
-      scala.collection.mutable.SortedMap.empty[Long, String]
-    val q = streamFiles(ss, src, StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // one source file = one partition; the md5 shingle chain is the
-        // batch's CPU — spread the rows first (the dedup-stream shape)
-        val hits = graft.streaming.Streams.deconBatch(
-          batch.repartition(4), evalBands, evalSets)
-        val out = s"$hitsBase/hits$id"
-        hits.write.mode("overwrite").parquet(out)
-        hitDirs.synchronized { hitDirs(id) = out }
-        ()
-      }
-      .start()
-    awaitOrFail(q)
-    ss.read.parquet(hitDirs.values.toSeq: _*)
-      .groupBy(col("train_id"))
-      .agg(count(lit(1)).as("n_eval_hits"),
-        max(struct(col("jac").as("j"),
-          (lit(0L) - col("eval_id")).as("ni"))).as("b"))
-      .select(col("train_id"), col("n_eval_hits"),
-        (lit(0L) - col("b.ni")).as("best_eval"),
-        col("b.j").as("best_jaccard"))
-      .orderBy(col("train_id"))
+    val hits = new StateBook("graft_decon_hits")
+    run(in.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      // one source file = one partition; the md5 shingle chain is the
+      // batch's CPU — spread the rows first (the dedup-stream shape)
+      hits.write(id)("hits" -> Streams.deconBatch(
+        batch.repartition(4), evalBands, evalSets))
+    }) {
+      ss.read.parquet(hits.all("hits"): _*)
+        .groupBy(col("train_id"))
+        .agg(count(lit(1)).as("n_eval_hits"),
+          max(struct(col("jac").as("j"),
+            (lit(0L) - col("eval_id")).as("ni"))).as("b"))
+        .select(col("train_id"), col("n_eval_hits"),
+          (lit(0L) - col("b.ni")).as("best_eval"),
+          col("b.j").as("best_jaccard"))
+        .orderBy(col("train_id"))
+    }
+  }
+
+  /** The training docs (doc_id % EvalMod ≠ 0) split by doc_id residue —
+    * the micro-batches of [[deconState]] and [[corpusState]]. */
+  private def trainResidues(docs: DataFrame, batches: Int): Seq[DataFrame] = {
+    val train = docs.filter(
+      col("doc_id") % graft.operators.TrainingData.EvalMod =!= 0)
+    (0 until batches).map(i => train.filter(col("doc_id") % batches === i))
   }
 
   /** One-shot SQL (order-independence argued at [[deconState]]): the
@@ -476,16 +489,17 @@ object StreamOracles {
     * tables over the `doc_id % EvalMod = 0` split), built once per
     * fixture and shared by [[deconState]] and [[corpusState]] — exactly
     * how a deployment holds its eval suites as durable tables. */
-  private def deconIndex(docs: DataFrame, dir: String): Path =
-    cachedSrc(docs.sparkSession, s"deconidx|$dir") { d =>
-      import graft.operators.{Dedup, Iterate}
+  private def deconIndex(docs: DataFrame): Path =
+    graft.Memo.owned(docs.sparkSession, "stream.deconidx", docs) {
+      val d = Scratch.dir("graft_stream_src")
       val eval = docs.filter(
         col("doc_id") % graft.operators.TrainingData.EvalMod === 0)
-      Iterate.pin(Dedup.minhashBands(eval))
+      graft.operators.Iterate.pin(Dedup.minhashBands(eval))
         .write.mode("overwrite").parquet(d.resolve("bands").toString)
       Dedup.shingleSets(eval)
         .write.mode("overwrite").parquet(d.resolve("sets").toString)
-    }
+      d
+    }(Scratch.deleteTree)
 
   // ---------------------------------------------------- stream_corpus_state
   /** The streaming twin of the `corpus_e2e` capstone — the corpus
@@ -524,90 +538,53 @@ object StreamOracles {
 
   def corpusState(spark: SparkSession, dir: String,
       batches: Int = CorpusBatches): DataFrame = {
-    import graft.operators.{CorpusClean, Dedup, TextOps}
-    val evalMod = graft.operators.TrainingData.EvalMod
+    import graft.operators.{CorpusClean, Iterate, TextOps}
     val docs = graft.Tables.documents(spark, dir)
-    val src = cachedSrc(spark, s"corpus|$dir|$batches") { d =>
-      val train = docs.filter(col("doc_id") % evalMod =!= 0)
-      (0 until batches).foreach { i =>
-        writeBatchFile(
-          train.filter(col("doc_id") % batches === i), d, i)
-      }
-    }
-    val idx = deconIndex(docs, dir)
-    val ss = streamSession(spark)
+    val in = source(spark, s"corpus:$batches", docs, StreamWidth)(
+      trainResidues(_, batches))
+    val ss = in.sparkSession
+    val idx = deconIndex(docs)
     val evalBands = ss.read.parquet(idx.resolve("bands").toString)
     val evalSets = ss.read.parquet(idx.resolve("sets").toString)
-    val stateBase = Scratch.dir("graft_corpus_state").toString
-    val admDirs = scala.collection.mutable.SortedMap.empty[Long, String]
-    val bandDirs = scala.collection.mutable.SortedMap.empty[Long, String]
-    val q = streamFiles(ss, src, StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType))))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // spread the one-file batch first: the quality metrics and the
-        // signature chains are the batch's CPU. Pinned (eager, once per
-        // batch): every downstream consumer — the dedup band pin, the
-        // decon verify, BOTH state writes — re-evaluates its inputs per
-        // action, and without the pin each of them re-ran the scan +
-        // word split + quality score (measured: this batch body was
-        // 6.2 s of the bench, ~3× the other stream oracles' floor).
-        val clean = Streams.prof(s"corpus.b$id.clean")(
-          graft.operators.Iterate.pin(batch.repartition(4)
-            .withColumn("w", TextOps.words(col("text")))
-            .withColumn("n_tokens", size(col("w")).cast("long"))
-            .filter(TextOps.qualityScore(col("w"))
-              >= CorpusClean.QualityThreshold)
-            .drop("w")))
-        val prior = bandDirs.synchronized {
-          bandDirs.rangeUntil(id).values.toSeq
-        }
-        val state =
-          if (prior.isEmpty) Dedup.minhashBands(clean).limit(0)
-          else ss.read.parquet(prior: _*)
-        val (adm0, adm0Bands) = Streams.prof(s"corpus.b$id.dedup")(
-          Streams.dedupBatch(clean, state))
-        // bands are a per-doc map of the text, so the admitted docs'
-        // band rows ARE minhashBands(adm0) — feed them to the decon
-        // screen instead of paying the signature chain a second time
-        // per micro-batch. Pinned hits: consumed by both state writes.
-        val hits = Streams.prof(s"corpus.b$id.decon")(
-          graft.operators.Iterate.pin(
-            Streams.deconBatchFrom(adm0, adm0Bands, evalBands, evalSets)
-              .select(col("train_id").as("doc_id")).distinct()))
-        val admitted = adm0.join(hits, Seq("doc_id"), "left_anti")
-        val admittedBands = adm0Bands.join(hits, Seq("doc_id"), "left_anti")
-        val vDir = s"$stateBase/v$id"
-        val bDir = s"$stateBase/bands$id"
-        // the two state writes are INDEPENDENT actions over the same
-        // pinned inputs (clean / bands / hits) — submit them from two
-        // driver threads (guide §2.6) so the second write's jobs
-        // back-fill the first's scheduling/commit gaps; each recomputes
-        // only the thin post-pin victim joins. Await BOTH before
-        // registering the dirs: a retried batch must never see a
-        // half-written version.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val wAdm = Future(Streams.prof(s"corpus.b$id.writeAdm")(
-          admitted.select(col("doc_id"), col("source"), col("n_tokens"))
-            .write.mode("overwrite").parquet(vDir)))
-        val wBands = Future(Streams.prof(s"corpus.b$id.writeBands")(
-          admittedBands.write.mode("overwrite").parquet(bDir)))
-        Await.result(wAdm, scala.concurrent.duration.Duration.Inf)
-        Await.result(wBands, scala.concurrent.duration.Duration.Inf)
-        admDirs.synchronized { admDirs(id) = vDir }
-        bandDirs.synchronized { bandDirs(id) = bDir }
-        ()
-      }
-      .start()
-    awaitOrFail(q)
-    ss.read.parquet(admDirs.values.toSeq: _*)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-      .orderBy(col("source"))
+    val state = new StateBook("graft_corpus_state")
+    run(in.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      // spread the one-file batch first: the quality metrics and the
+      // signature chains are the batch's CPU. Pinned (eager, once per
+      // batch): every downstream consumer — the dedup band pin, the
+      // decon verify, BOTH state writes — re-evaluates its inputs per
+      // action, and without the pin each of them re-ran the scan +
+      // word split + quality score (measured: this batch body was
+      // 6.2 s of the bench, ~3× the other stream oracles' floor).
+      val clean = Iterate.pin(batch.repartition(4)
+        .withColumn("w", TextOps.words(col("text")))
+        .withColumn("n_tokens", size(col("w")).cast("long"))
+        .filter(TextOps.qualityScore(col("w"))
+          >= CorpusClean.QualityThreshold)
+        .drop("w"))
+      val prior = state.before("bands", id)
+      val bands =
+        if (prior.isEmpty) Dedup.minhashBands(clean).limit(0)
+        else ss.read.parquet(prior: _*)
+      val (adm0, adm0Bands) = Streams.dedupBatch(clean, bands)
+      // bands are a per-doc map of the text, so the admitted docs'
+      // band rows ARE minhashBands(adm0) — feed them to the decon
+      // screen instead of paying the signature chain a second time
+      // per micro-batch. Pinned hits: consumed by both state writes.
+      val hits = Iterate.pin(
+        Streams.deconBatchFrom(adm0, adm0Bands, evalBands, evalSets)
+          .select(col("train_id").as("doc_id")).distinct())
+      // two independent writes over the same pinned inputs (clean /
+      // bands / hits); each recomputes only the thin post-pin victim joins
+      state.write(id)(
+        "v" -> adm0.join(hits, Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("source"), col("n_tokens")),
+        "bands" -> adm0Bands.join(hits, Seq("doc_id"), "left_anti"))
+    }) {
+      ss.read.parquet(state.all("v"): _*)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
+        .orderBy(col("source"))
+    }
   }
 
   /** [[corpusState]]'s order-aware oracle: the clean gate, the two band
@@ -714,22 +691,16 @@ object StreamOracles {
   def kmvState(spark: SparkSession, dir: String): DataFrame = {
     val li = graft.Tables.lineitem(spark, dir)
       .select(col("l_returnflag").as("grp"), col("l_partkey").as("value"))
-    val src = cachedSrc(spark, s"kmv|$dir") { d =>
-      (0 until 2).foreach { i =>
-        writeBatchFile(li.filter(col("value") % 2 === i), d, i)
-      }
+    val in = source(spark, "kmv:2", li, TinyStateWidth) { l =>
+      (0 until 2).map(i => l.filter(col("value") % 2 === i))
     }
-    val ss = streamSession(spark, TinyStateWidth)
+    val ss = in.sparkSession
     import ss.implicits._
     // hash map-side (codegen'd md5 across all input partitions) — the
     // 3-group state stage then only merges bounded k-sets
-    val in = streamFiles(ss, src, StructType(Seq(
-      StructField("grp", StringType), StructField("value", LongType))))
-      .select(col("grp"), Streams.kmvHash(col("value")).as("h"))
+    val hashed = in.select(col("grp"), Streams.kmvHash(col("value")).as("h"))
       .as[Streams.KmvIn]
-    val name = s"graft_stream_kmv_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(
-      Streams.kmvStream(in).toDF(), name, OutputMode.Append())
+    val out = toMemory(Streams.kmvStream(hashed).toDF(), OutputMode.Append())
     val w = Window.partitionBy(col("grp")).orderBy(col("updates").desc)
     out.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("grp").as("l_returnflag"),
@@ -752,17 +723,11 @@ object StreamOracles {
     */
   def cmsState(spark: SparkSession, dir: String): DataFrame = {
     val ev = graft.Tables.events(spark, dir).select(col("user_id"))
-    val src = cachedSrc(spark, s"cms|$dir") { d =>
-      (0 until 2).foreach { i =>
-        writeBatchFile(ev.filter(col("user_id") % 2 === i), d, i)
-      }
+    val in = source(spark, "cms:2", ev, TinyStateWidth) { e =>
+      (0 until 2).map(i => e.filter(col("user_id") % 2 === i))
     }
-    val in = streamFiles(streamSession(spark, TinyStateWidth), src,
-      StructType(Seq(StructField("user_id", LongType))))
-    val name = s"graft_stream_cms_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(
-      Sketch.cells(in, "user_id"), name, OutputMode.Complete())
-    out.select(col("row_j"), col("bucket"), col("cnt"))
+    toMemory(Sketch.cells(in, "user_id"), OutputMode.Complete())
+      .select(col("row_j"), col("bucket"), col("cnt"))
       .orderBy(col("row_j"), col("bucket"))
   }
 
@@ -797,15 +762,9 @@ object StreamOracles {
     import graft.functions.Exact
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    val src = cachedSrc(spark, s"session|$dir|$batches") { d =>
-      (0 until batches).foreach { i =>
-        writeBatchFile(ev.filter(col("event_id") % batches === i), d, i)
-      }
+    val in = source(spark, s"session:$batches", ev, TinyStateWidth) { e =>
+      (0 until batches).map(i => e.filter(col("event_id") % batches === i))
     }
-    val ss = streamSession(spark, TinyStateWidth)
-    val in = streamFiles(ss, src, StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("value", DoubleType))))
     val sessions = in
       .groupBy(session_window(col("ts"), "30 minutes").as("w"),
         col("user_id"))
@@ -815,9 +774,8 @@ object StreamOracles {
         Exact.xsum(col("value")).as("total_value"))
       .select(col("user_id"), col("n_events"), col("session_start"),
         col("session_end"), col("total_value"))
-    val name = s"graft_stream_session_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(sessions, name, OutputMode.Complete())
-    out.orderBy(col("user_id"), col("session_start"))
+    toMemory(sessions, OutputMode.Complete())
+      .orderBy(col("user_id"), col("session_start"))
   }
 
   val sqlSessionState: String =
@@ -842,16 +800,9 @@ object StreamOracles {
     import graft.functions.Exact
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val src = cachedSrc(spark, s"window|$dir") { d =>
-      (0 until 2).foreach { i =>
-        writeBatchFile(ev.filter(col("event_id") % 2 === i), d, i)
-      }
+    val in = source(spark, "window:2", ev, StreamWidth) { e =>
+      (0 until 2).map(i => e.filter(col("event_id") % 2 === i))
     }
-    val ss = streamSession(spark)
-    val in = streamFiles(ss, src, StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType))))
     val agg = in
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -859,9 +810,8 @@ object StreamOracles {
       .select(col("w.start").cast("timestamp_ntz").as("window_start"),
         col("w.end").cast("timestamp_ntz").as("window_end"),
         col("event_type"), col("n_events"), col("total_value"))
-    val name = s"graft_stream_window_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(agg, name, OutputMode.Complete())
-    out.orderBy(col("window_start"), col("event_type"))
+    toMemory(agg, OutputMode.Complete())
+      .orderBy(col("window_start"), col("event_type"))
   }
 
   val sqlWindowState: String = graft.operators.Sessionize.sqlTumbling
@@ -883,23 +833,18 @@ object StreamOracles {
     val ev = graft.Tables.events(spark, dir)
       .filter(col("ts").isNotNull)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val src = cachedSrc(spark, s"join|$dir") { d =>
-      writeBatchFile(ev.filter(dayofmonth(col("ts")) < 16), d, 0)
-      writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 16), d, 1)
-    }
-    val ss = streamSession(spark)
-    val in = streamFiles(ss, src, StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType))))
-    val name = s"graft_stream_join_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(
-      Streams.viewClickJoin(in), name, OutputMode.Append())
-    out.select(col("user_id"), col("view_id"), col("click_id"),
+    val in = source(spark, "join:2", ev, StreamWidth)(halvesOfMonth)
+    toMemory(Streams.viewClickJoin(in), OutputMode.Append())
+      .select(col("user_id"), col("view_id"), col("click_id"),
         col("view_ts").cast("timestamp_ntz").as("view_ts"),
         col("click_ts").cast("timestamp_ntz").as("click_ts"))
       .orderBy(col("user_id"), col("view_id"), col("click_id"))
   }
+
+  /** The two time-ordered micro-batches split at mid-month. */
+  private def halvesOfMonth(ev: DataFrame): Seq[DataFrame] =
+    Seq(ev.filter(dayofmonth(col("ts")) < 16),
+      ev.filter(dayofmonth(col("ts")) >= 16))
 
   // ----------------------------------------------------- stream_asof_state
   /** Streaming AS-OF enrichment ([[Streams.asOfStream]]): purchases
@@ -919,21 +864,12 @@ object StreamOracles {
         col("event_type").isin("view", "purchase"))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    val src = cachedSrc(spark, s"asof|$dir") { d =>
-      writeBatchFile(ev.filter(dayofmonth(col("ts")) < 16), d, 0)
-      writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 16), d, 1)
-    }
-    val ss = streamSession(spark)
+    val in = source(spark, "asof:2", ev, StreamWidth)(halvesOfMonth)
+    val ss = in.sparkSession
     import ss.implicits._
-    val in = streamFiles(ss, src, StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))).as[Streams.AsOfEv]
-    val name = s"graft_stream_asof_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(
-      Streams.asOfStream(in).toDF(), name, OutputMode.Append())
-    out.select(col("user_id"), col("purchase_id"),
+    toMemory(Streams.asOfStream(in.as[Streams.AsOfEv]).toDF(),
+        OutputMode.Append())
+      .select(col("user_id"), col("purchase_id"),
         col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
         col("view_id"),
         col("view_ts").cast("timestamp_ntz").as("view_ts"),
@@ -987,23 +923,17 @@ object StreamOracles {
   def mgState(spark: SparkSession, dir: String): DataFrame = {
     val docsDf = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
-    val src = cachedSrc(spark, s"mg|$dir") { d =>
-      (0 until 2).foreach { i =>
-        writeBatchFile(docsDf.filter(col("doc_id") % 2 === i), d, i)
-      }
+    val in = source(spark, "mg:2", docsDf, TinyStateWidth) { d =>
+      (0 until 2).map(i => d.filter(col("doc_id") % 2 === i))
     }
-    val ss = streamSession(spark, TinyStateWidth)
-    graft.functions.VectorExprs.register(ss)
-    val in = streamFiles(ss, src, StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType))))
+    graft.functions.VectorExprs.register(in.sparkSession)
     val agg = in
       .select(explode_outer(
         graft.operators.TextOps.words(col("text"))).as("token"))
       .agg(call_function(graft.functions.VectorExprs.HeavyName,
         col("token"), lit(10), lit(256)).as("hh"))
-    val name = s"graft_stream_mg_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(agg, name, OutputMode.Complete())
-    out.select(explode(col("hh")).as("h"))
+    toMemory(agg, OutputMode.Complete())
+      .select(explode(col("hh")).as("h"))
       .select(col("h.token").as("token"),
         col("h.est_count").as("est_count"))
       .orderBy(col("est_count").desc, col("token"))
@@ -1034,19 +964,11 @@ object StreamOracles {
     val ev = graft.Tables.events(spark, dir)
       .filter(col("ts").isNotNull)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val src = cachedSrc(spark, s"drop3|$dir") { d =>
-      writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 4 &&
-        dayofmonth(col("ts")) < 20), d, 0)
-      writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 20 &&
-        dayofmonth(col("ts")) < 27), d, 1)
-      writeBatchFile(ev.filter(dayofmonth(col("ts")) >= 27 ||
-        dayofmonth(col("ts")) < 4), d, 2)
+    val in = source(spark, "drop:3", ev, TinyStateWidth) { e =>
+      val day = dayofmonth(col("ts"))
+      Seq(e.filter(day >= 4 && day < 20), e.filter(day >= 20 && day < 27),
+        e.filter(day >= 27 || day < 4))
     }
-    val ss = streamSession(spark, TinyStateWidth)
-    val in = streamFiles(ss, src, StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType))))
     val agg = in
       .withWatermark("ts", "72 hours")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -1055,9 +977,8 @@ object StreamOracles {
       .select(col("w.start").cast("timestamp_ntz").as("window_start"),
         col("w.end").cast("timestamp_ntz").as("window_end"),
         col("event_type"), col("n_events"), col("total_value"))
-    val name = s"graft_stream_drop_${seq.incrementAndGet()}"
-    val out = Streams.runToMemory(agg, name, OutputMode.Append())
-    out.orderBy(col("window_start"), col("event_type"))
+    toMemory(agg, OutputMode.Append())
+      .orderBy(col("window_start"), col("event_type"))
   }
 
   val sqlDropState: String = {

@@ -7,10 +7,10 @@ import org.apache.spark.sql.types._
 
 /** Structured Streaming run-mode: watermarked window aggregation, stateful
   * sessionization, stream-stream interval join, incremental near-dup
-  * admission, incremental KMV distinct estimation, and the `foreachBatch`
-  * SCD load — the streaming twins of the batch operators
+  * admission and decontamination, and incremental KMV distinct
+  * estimation — the streaming twins of the batch operators
   * ([[graft.operators.Sessionize]], [[graft.operators.Dedup]],
-  * [[graft.operators.Sketch]], [[graft.operators.ScdMerge]]).
+  * [[graft.operators.Sketch]]).
   *
   * Design for scale: state is keyed (hash-partitioned by the streaming
   * aggregation itself) and BOUNDED — watermarks bound window/join state,
@@ -197,40 +197,6 @@ object Streams {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(asOfFunc)
   }
-
-  /** Drive a streaming DataFrame to completion against a memory sink and
-    * return the collected table (local test harness path).
-    */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory")
-      .queryName(name).start()
-    try { q.processAllAvailable(); dumpProgress(q) } finally q.stop()
-    df.sparkSession.table(name)
-  }
-
-  /** Env-gated per-batch progress dump (SPARK_GRAFT_STREAM_PROF=1): the
-    * micro-batch cost breakdown (queryPlanning / getBatch / addBatch /
-    * walCommit / stateOperators) Structured Streaming already measures —
-    * guide §1 "measure first" for the stream oracles' per-batch floor.
-    * Stderr, never part of any output contract.
-    */
-  private[streaming] def dumpProgress(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.get("SPARK_GRAFT_STREAM_PROF").contains("1"))
-      q.recentProgress.foreach(p => System.err.println(s"[streamprof] ${p.json}"))
-
-  /** Env-gated section timer for foreachBatch bodies (same flag as
-    * [[dumpProgress]]): names the wall seconds of each driver-side step
-    * inside a micro-batch — the measure-first breakdown the progress
-    * JSON's single addBatch number hides. */
-  private[streaming] def prof[T](label: String)(body: => T): T =
-    if (sys.env.get("SPARK_GRAFT_STREAM_PROF").contains("1")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[batchprof] $label ${(System.nanoTime() - t0) / 1e9}%.3f")
-      r
-    } else body
 
   /** Stream-stream interval join: every "view" pairs with the same user's
     * "click" events landing within the following 30 minutes. Both sides are
@@ -458,24 +424,4 @@ object Streams {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(kmvFunc)
   }
-
-  /** Streaming SCD load (SURVEY §7.6): each micro-batch of incoming rows is
-    * merged into the durable target with the SAME set-based
-    * [[graft.operators.ScdMerge]] the batch pipeline uses, via
-    * `foreachBatch` + `Trigger.AvailableNow`. The batch id is the
-    * micro-batch id — the reference's per-run uuid maps onto it.
-    *
-    * `mergeAndSwap` owns the read-merge-write cycle of the durable state
-    * (at scale: an atomic table-format swap; here: versioned parquet dirs).
-    */
-  def scdLoadStream(incoming: DataFrame, cfg: graft.operators.ScdMerge.Config,
-      clockTs: org.apache.spark.sql.Column,
-      clockDate: org.apache.spark.sql.Column,
-      mergeAndSwap: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    incoming.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeAndSwap(batch, id)
-      }
 }

@@ -165,50 +165,6 @@ class Round10Spec extends SparkSuite {
       "a hash chain is recomputed outside its memo:\n" + s)
   }
 
-  // ------------------------------------- streaming corpus funnel
-  test("stream_corpus_state: one micro-batch reproduces the one-shot " +
-      "batch composition; the 3-batch funnel respects its bounds") {
-    import graft.streaming.{StreamOracles, Streams}
-    import graft.operators.{CorpusClean, Dedup, Iterate, TextOps}
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"),
-        r.getAs[Long]("n_tokens"))).toSeq
-    val d = Tables.documents(spark, dir)
-    val evalMod = graft.operators.TrainingData.EvalMod
-    val train = d.filter(col("doc_id") % evalMod =!= 0)
-    // the one-shot composition straight from the batch operators — the
-    // stream plumbing (foreachBatch, band-state discipline, readout)
-    // must be a no-op at batches = 1
-    val clean = train
-      .withColumn("w", TextOps.words(col("text")))
-      .withColumn("n_tokens", size(col("w")).cast("long"))
-      .filter(TextOps.qualityScore(col("w"))
-        >= CorpusClean.QualityThreshold)
-      .drop("w")
-    val (adm0, _) =
-      Streams.dedupBatch(clean, Dedup.minhashBands(clean).limit(0))
-    val eval = d.filter(col("doc_id") % evalMod === 0)
-    val hits = Streams.deconBatch(adm0,
-        Iterate.pin(Dedup.minhashBands(eval)), Dedup.shingleSets(eval))
-      .select(col("train_id").as("doc_id")).distinct()
-    assert(hits.count() > 0, "decon leg never fires on the fixture — " +
-      "the funnel's third stage is untested")
-    val oneShot = rows(adm0.join(hits, Seq("doc_id"), "left_anti")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-      .orderBy(col("source")))
-    assert(rows(StreamOracles.corpusState(spark, dir, batches = 1))
-      == oneShot)
-    // the registry config: 3 batches. Admission is order-AWARE (batches
-    // split by doc_id residue, so state collisions and within-batch
-    // victims differ from the one-shot pair set — the oracle unrolls the
-    // recursion), but the funnel bounds are invariant
-    val s3 = rows(StreamOracles.corpusState(spark, dir))
-    assert(s3.nonEmpty && s3.map(_._1) == s3.map(_._1).sorted)
-    assert(s3.map(_._2).sum > 0 && s3.map(_._2).sum <= clean.count())
-    assert(s3.forall(r => r._2 > 0 && r._3 >= r._2))
-  }
-
   // ------------------------------------------ Leiden-style refinement
   test("refineAssign: splits a disconnected community, keeps a " +
       "connected one, singles out edge-less nodes") {

@@ -3,12 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
-import graft.streaming.Streams
 
 /** Round-7 additions: interpolated Kneser–Ney smoothing (hand-computed
-  * probabilities on a toy corpus) and the streaming as-of enrichment
-  * (tie-breaking, cross-batch state handoff, max-guard against replayed
-  * old versions).
+  * probabilities on a toy corpus).
   */
 class Round7Spec extends SparkSuite {
 
@@ -64,44 +61,5 @@ class Round7Spec extends SparkSuite {
       && d1.getAs[Long]("n_backoff") == 1)
     assert(math.abs(d1.getAs[Double]("mean_p") -
       (2 * pAB + 0.5 * 0.4 + 0.2) / 4.0) < eps)
-  }
-
-  test("asOfStream: ties, cross-batch state, max-guard vs replayed views") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val b1 = Seq(
-      Streams.AsOfEv(1, ts("2024-01-01 10:00:00"), 1, "view", 5.0),
-      Streams.AsOfEv(2, ts("2024-01-01 10:05:00"), 1, "purchase", 1.0),
-      Streams.AsOfEv(3, ts("2024-01-01 10:10:00"), 1, "view", 7.0),
-      Streams.AsOfEv(4, ts("2024-01-01 10:00:00"), 2, "purchase", 1.0))
-    val b2 = Seq(
-      // replayed OLD view must not rewind the carried (10:10, id 3) state
-      Streams.AsOfEv(0, ts("2024-01-01 09:00:00"), 1, "view", 1.0),
-      Streams.AsOfEv(5, ts("2024-01-01 11:00:00"), 1, "purchase", 1.0),
-      Streams.AsOfEv(8, ts("2024-01-01 11:30:00"), 1, "purchase", 1.0),
-      // tie timestamps: view_id 6 < purchase_id 7 → counted as preceding
-      Streams.AsOfEv(6, ts("2024-01-01 11:00:00"), 2, "view", 9.0),
-      Streams.AsOfEv(7, ts("2024-01-01 11:00:00"), 2, "purchase", 1.0))
-    val mem =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Streams.AsOfEv]
-    val q = Streams.asOfStream(mem.toDS()).toDF().writeStream
-      .outputMode("append").format("memory").queryName("asof_out").start()
-    try {
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("asof_out")
-      .select(col("purchase_id"), col("view_id"), col("view_value"))
-      .collect()
-      .map(r => (r.getLong(0),
-        Option(r.get(1)).map(_.asInstanceOf[Long]),
-        Option(r.get(2)).map(_.asInstanceOf[Double]))).toSet
-    assert(got == Set(
-      (2L, Some(1L), Some(5.0)),
-      (4L, None, None),
-      (5L, Some(3L), Some(7.0)),
-      (8L, Some(3L), Some(7.0)),
-      (7L, Some(6L), Some(9.0))))
   }
 }

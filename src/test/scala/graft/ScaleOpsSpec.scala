@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, ScdMerge, Skew}
+import graft.operators.{Dedup, Skew}
 import graft.streaming.Streams
 
-/** Scale-machinery tests: salted join equivalence, partitioned sinks,
-  * streaming SCD load via foreachBatch.
+/** Scale-machinery tests: salted join equivalence, partitioned sinks.
   */
 class ScaleOpsSpec extends SparkSuite {
   import spark.implicits._
@@ -237,44 +236,6 @@ class ScaleOpsSpec extends SparkSuite {
     val (adm2, _) = Streams.dedupBatch(b2, bands1)
     assert(adm2.select("doc_id").collect().map(_.getLong(0)).toSet ==
       Set(11L)) // doc 10 collides with doc 1's bands in state
-  }
-
-  test("streaming SCD load: foreachBatch merges micro-batches into state") {
-    val stateDir = tempDir("graft_state").toString
-    val cfg = ScdMerge.Config(keys = Seq("k"), valueCol = "v", scd2 = false)
-    val clockTs = lit("2026-02-02 00:00:00").cast("timestamp")
-    val clockDate = lit("2026-02-02").cast("date")
-
-    // durable seed state
-    Sinks.writeState(
-      Seq(("a", 1.0, "b0"), ("b", 2.0, "b0")).toDF("k", "v", "batch_id"),
-      stateDir)
-
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(String, Double)]
-    mem.addData(Seq(("b", 5.0), ("c", 3.0)))
-
-    val writer = Streams.scdLoadStream(
-      mem.toDF().toDF("k", "v"), cfg, clockTs, clockDate,
-      mergeAndSwap = (batch, id) => {
-        val target = spark.read.parquet(stateDir)
-        val merged = ScdMerge.merge(
-          batch.withColumn("batch_id", lit(s"stream-$id")),
-          target, cfg, clockTs, clockDate, lit(s"stream-$id"))
-        val next = merged.drop(ScdMerge.ChangeCol).collect()
-        Sinks.writeState(spark.createDataFrame(
-          spark.sparkContext.parallelize(next.toSeq), target.schema), stateDir)
-      })
-    val q = writer.start()
-    try q.awaitTermination(60000) finally if (q.isActive) q.stop()
-
-    val state = spark.read.parquet(stateDir).orderBy("k").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getString(2)))
-    assert(state.toSeq == Seq(
-      ("a", 1.0, "b0"),            // carried
-      ("b", 5.0, "stream-0"),      // updated by the micro-batch
-      ("c", 3.0, "stream-0")))     // inserted
   }
 
   test("runtime bloom filter prunes the fact side of a selective shuffle join") {

@@ -1,20 +1,35 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.operators.Sessionize
-import graft.streaming.Streams
+import graft.operators.{ScdMerge, Sessionize}
+import graft.streaming.{StreamOracles, Streams}
 
-/** Streaming twins vs batch truth: the tumbling window aggregation must
-  * match the batch operator on the same data; stateful sessionization must
-  * close sessions across micro-batch boundaries.
+/** The stream family: streaming twins vs batch truth (the tumbling window
+  * aggregation must match the batch operator on the same data; stateful
+  * sessionization and as-of enrichment must carry state across micro-batch
+  * boundaries), the foreachBatch SCD load, and the stream oracles' runner
+  * (one source split per session, one checkpoint per run).
   */
 class StreamingSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
+  /** Drive a streaming DataFrame to completion against a memory sink and
+    * return the collected table. */
+  private def runToMemory(df: DataFrame, name: String,
+      mode: OutputMode): DataFrame = {
+    val q = df.writeStream.outputMode(mode).format("memory")
+      .queryName(name).start()
+    try q.processAllAvailable() finally q.stop()
+    df.sparkSession.table(name)
+  }
+
   test("streaming tumbling counts match batch tumbling on same data") {
-    val streamed = Streams.runToMemory(
+    val streamed = runToMemory(
       Streams.tumblingCounts(Streams.eventsStream(spark, dir)),
       "tumbling_out", OutputMode.Complete())
       .select("window_start", "event_type", "n_events")
@@ -26,7 +41,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stream-stream interval join matches the batch join on same data") {
-    val streamed = Streams.runToMemory(
+    val streamed = runToMemory(
       Streams.viewClickJoin(Streams.eventsStream(spark, dir)),
       "vc_join_out", OutputMode.Append())
     val batch = Streams.viewClickJoin(Tables.events(spark, dir))
@@ -41,7 +56,7 @@ class StreamingSpec extends SparkSuite {
     val events = Streams.eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    val out = Streams.runToMemory(events, "dedup_out", OutputMode.Append())
+    val out = runToMemory(events, "dedup_out", OutputMode.Append())
     val batchDistinct = Tables.events(spark, dir).select("event_id").distinct()
     assert(out.count() == batchDistinct.count())
   }
@@ -54,7 +69,7 @@ class StreamingSpec extends SparkSuite {
       .withColumn("n_key", col("user_id") % 25)
       .join(broadcast(dim), col("n_key") === col("n_nationkey"))
       .select(col("event_id"), col("n_name"))
-    val streamed = Streams.runToMemory(
+    val streamed = runToMemory(
       shape(Streams.eventsStream(spark, dir)), "ss_enrich_out",
       OutputMode.Append())
     val batch = shape(Tables.events(spark, dir))
@@ -129,10 +144,180 @@ class StreamingSpec extends SparkSuite {
     // nearly every session to be assembled from BOTH batches, so equality
     // with the one-shot batch answer proves the state store MERGED
     // partial sessions (not merely appended them)
-    val streamed = graft.streaming.StreamOracles.sessionState(spark, dir)
+    val streamed = StreamOracles.sessionState(spark, dir)
     val batch = Sessionize.sessionsBuiltin(Tables.events(spark, dir))
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
+  }
+
+  test("asOfStream: ties, cross-batch state, max-guard vs replayed views") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val b1 = Seq(
+      Streams.AsOfEv(1, ts("2024-01-01 10:00:00"), 1, "view", 5.0),
+      Streams.AsOfEv(2, ts("2024-01-01 10:05:00"), 1, "purchase", 1.0),
+      Streams.AsOfEv(3, ts("2024-01-01 10:10:00"), 1, "view", 7.0),
+      Streams.AsOfEv(4, ts("2024-01-01 10:00:00"), 2, "purchase", 1.0))
+    val b2 = Seq(
+      // replayed OLD view must not rewind the carried (10:10, id 3) state
+      Streams.AsOfEv(0, ts("2024-01-01 09:00:00"), 1, "view", 1.0),
+      Streams.AsOfEv(5, ts("2024-01-01 11:00:00"), 1, "purchase", 1.0),
+      Streams.AsOfEv(8, ts("2024-01-01 11:30:00"), 1, "purchase", 1.0),
+      // tie timestamps: view_id 6 < purchase_id 7 → counted as preceding
+      Streams.AsOfEv(6, ts("2024-01-01 11:00:00"), 2, "view", 9.0),
+      Streams.AsOfEv(7, ts("2024-01-01 11:00:00"), 2, "purchase", 1.0))
+    val mem =
+      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Streams.AsOfEv]
+    val q = Streams.asOfStream(mem.toDS()).toDF().writeStream
+      .outputMode("append").format("memory").queryName("asof_out").start()
+    try {
+      mem.addData(b1); q.processAllAvailable()
+      mem.addData(b2); q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("asof_out")
+      .select(col("purchase_id"), col("view_id"), col("view_value"))
+      .collect()
+      .map(r => (r.getLong(0),
+        Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Double]))).toSet
+    assert(got == Set(
+      (2L, Some(1L), Some(5.0)),
+      (4L, None, None),
+      (5L, Some(3L), Some(7.0)),
+      (8L, Some(3L), Some(7.0)),
+      (7L, Some(6L), Some(9.0))))
+  }
+
+  test("stream_corpus_state: one micro-batch reproduces the one-shot " +
+      "batch composition; the 3-batch funnel respects its bounds") {
+    import graft.operators.{CorpusClean, Dedup, Iterate, TextOps}
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"),
+        r.getAs[Long]("n_tokens"))).toSeq
+    val d = Tables.documents(spark, dir)
+    val evalMod = graft.operators.TrainingData.EvalMod
+    val train = d.filter(col("doc_id") % evalMod =!= 0)
+    // the one-shot composition straight from the batch operators — the
+    // stream plumbing (foreachBatch, band-state discipline, readout)
+    // must be a no-op at batches = 1
+    val clean = train
+      .withColumn("w", TextOps.words(col("text")))
+      .withColumn("n_tokens", size(col("w")).cast("long"))
+      .filter(TextOps.qualityScore(col("w"))
+        >= CorpusClean.QualityThreshold)
+      .drop("w")
+    val (adm0, _) =
+      Streams.dedupBatch(clean, Dedup.minhashBands(clean).limit(0))
+    val eval = d.filter(col("doc_id") % evalMod === 0)
+    val hits = Streams.deconBatch(adm0,
+        Iterate.pin(Dedup.minhashBands(eval)), Dedup.shingleSets(eval))
+      .select(col("train_id").as("doc_id")).distinct()
+    assert(hits.count() > 0, "decon leg never fires on the fixture — " +
+      "the funnel's third stage is untested")
+    val oneShot = rows(adm0.join(hits, Seq("doc_id"), "left_anti")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
+      .orderBy(col("source")))
+    assert(rows(StreamOracles.corpusState(spark, dir, batches = 1))
+      == oneShot)
+    // the registry config: 3 batches. Admission is order-AWARE (batches
+    // split by doc_id residue, so state collisions and within-batch
+    // victims differ from the one-shot pair set — the oracle unrolls the
+    // recursion), but the funnel bounds are invariant
+    val s3 = rows(StreamOracles.corpusState(spark, dir))
+    assert(s3.nonEmpty && s3.map(_._1) == s3.map(_._1).sorted)
+    assert(s3.map(_._2).sum > 0 && s3.map(_._2).sum <= clean.count())
+    assert(s3.forall(r => r._2 > 0 && r._3 >= r._2))
+  }
+
+  test("streaming SCD load: foreachBatch merges micro-batches into state") {
+    import spark.implicits._
+    val stateDir = tempDir("graft_state").toString
+    val cfg = ScdMerge.Config(keys = Seq("k"), valueCol = "v", scd2 = false)
+    val clockTs = lit("2026-02-02 00:00:00").cast("timestamp")
+    val clockDate = lit("2026-02-02").cast("date")
+
+    // durable seed state
+    Sinks.writeState(
+      Seq(("a", 1.0, "b0"), ("b", 2.0, "b0")).toDF("k", "v", "batch_id"),
+      stateDir)
+
+    implicit val sqlCtx = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(String, Double)]
+    mem.addData(Seq(("b", 5.0), ("c", 3.0)))
+
+    // each micro-batch is merged into the durable target with the SAME
+    // set-based ScdMerge the batch pipeline uses; the micro-batch id
+    // stands in for the pipeline's per-run batch uuid
+    val q = mem.toDF().toDF("k", "v").writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val target = spark.read.parquet(stateDir)
+        val merged = ScdMerge.merge(
+          batch.withColumn("batch_id", lit(s"stream-$id")),
+          target, cfg, clockTs, clockDate, lit(s"stream-$id"))
+        val next = merged.drop(ScdMerge.ChangeCol).collect()
+        Sinks.writeState(spark.createDataFrame(
+          spark.sparkContext.parallelize(next.toSeq), target.schema), stateDir)
+      }
+      .start()
+    try q.awaitTermination(60000) finally if (q.isActive) q.stop()
+
+    val state = spark.read.parquet(stateDir).orderBy("k").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getString(2)))
+    assert(state.toSeq == Seq(
+      ("a", 1.0, "b0"),            // carried
+      ("b", 5.0, "stream-0"),      // updated by the micro-batch
+      ("c", 3.0, "stream-0")))     // inserted
+  }
+
+  test("stream oracle runs: each checkpoint is deleted when its run " +
+      "returns, and earlier results still read") {
+    // a fresh session: its stream sessions are built here, so any
+    // checkpoint root they hold shows up in the scratch listing
+    val fresh = spark.newSession()
+    val probe = Scratch.dir("graft_probe")
+    val scratchRoot = probe.getParent
+    Scratch.deleteTree(probe)
+    def checkpoints(): Set[String] = {
+      val ls = java.nio.file.Files.list(scratchRoot)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_ckpt")).toSet
+      finally ls.close()
+    }
+    val before = checkpoints()
+    try {
+      val scd1 = StreamOracles.scdState(fresh, dir)
+      val kmv1 = StreamOracles.kmvState(fresh, dir)
+      val scd2 = StreamOracles.scdState(fresh, dir)
+      val kmv2 = StreamOracles.kmvState(fresh, dir)
+      assert(checkpoints() == before)
+      // the first runs' readouts are read only now, after the second runs
+      assert(scd1.count() > 0 && kmv1.count() > 0)
+      assert(scd1.collect().toSeq == scd2.collect().toSeq)
+      assert(kmv1.collect().toSeq == kmv2.collect().toSeq)
+    } finally Memo.invalidate(fresh)
+  }
+
+  test("stream sources: one split per oracle, batch count and input, " +
+      "written once per session") {
+    val fresh = spark.newSession()
+    def srcBuilds(): Set[String] =
+      MemoLedger.drain().keySet.filter(_.startsWith("stream.src:"))
+    try {
+      MemoLedger.drain()
+      StreamOracles.scdState(fresh, dir).collect()
+      val scd = srcBuilds()
+      assert(scd.size == 1)
+      StreamOracles.scdState(fresh, dir).collect()
+      assert(srcBuilds().isEmpty, "the second run re-split its source")
+      StreamOracles.sessionState(fresh, dir, batches = 1).collect()
+      StreamOracles.sessionState(fresh, dir).collect()
+      val sessions = srcBuilds()
+      assert(sessions.size == 2 && (sessions & scd).isEmpty)
+    } finally Memo.invalidate(fresh)
   }
 }
