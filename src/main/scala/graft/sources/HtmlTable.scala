@@ -30,10 +30,13 @@ object HtmlTable {
     regexp_extract_all(c, lit(s"(?s)<$tag[^>]*>(.*?)</$tag>"), lit(1))
 
   /** Strip nested tags and surrounding whitespace from a cell — the
-    * `get_text().strip()` equivalent (`ipynb:94-95,157-159`).
+    * `get_text().strip()` equivalent (`ipynb:94-95,157-159`). Whitespace
+    * is Unicode's (`(?U)\s`), as Python's `str.strip()` has it, not
+    * Spark `trim`'s U+0020 alone: MediaWiki ends every `<td>` with a
+    * newline, and bs4 turns `&nbsp;` into U+00A0.
     */
   private def cellText(c: Column): Column =
-    trim(regexp_replace(c, "<[^>]*>", ""))
+    regexp_replace(regexp_replace(c, "<[^>]*>", ""), "(?U)^\\s+|\\s+$", "")
 
   /** One row per `<tr>` of the `tbodyIndex`-th `<tbody>` (0-based, matching
     * `soup.find_all('tbody')[2]` at `ipynb:80`), with `cells` =
@@ -57,19 +60,18 @@ object HtmlTable {
 
   /** First-`thead`/first-`tbody` scan (`ipynb:127-150`): named columns from
     * the `<th>` texts of the first `<thead>` row, data rows from the first
-    * `<tbody>`. Header extraction is a 1-row collect — schema discovery,
-    * the same boundary as CSV header inference.
+    * `<tbody>` ([[scanPositional]] at index 0). Header extraction is a
+    * 1-row collect — schema discovery, the same boundary as CSV header
+    * inference.
     *
     * CONTRACT: `path` is ONE page (the reference parses a single page per
     * call, ipynb:127). Pointed at a directory, the header row would come
     * from an arbitrary file while data rows from all files merge with
     * colliding row_idx and no provenance — use [[scanPositional]] (which
-    * carries `src_file`) for multi-page directories, or the `graft-html`
-    * DSv2 source for per-file parallel scans.
+    * carries `src_file`) for multi-page directories.
     */
   def scanFirst(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("wholetext", "true").text(path)
-    val headers = Option(raw
+    val headers = Option(spark.read.option("wholetext", "true").text(path)
       .select(try_element_at(innerAll(col("value"), "thead"), lit(1))
         .as("thead"))
       .select(transform(innerAll(col("thead"), "th"), cellText(_)).as("hs"))
@@ -77,14 +79,8 @@ object HtmlTable {
     // fail with file context, not a bare NPE/empty schema: a page without
     // a <thead> (or with an empty one) has no named columns to discover
     require(headers.nonEmpty,
-      s"graft-html scanFirst: no <thead> with <th> cells found in $path")
-    val rows = raw
-      .select(try_element_at(innerAll(col("value"), "tbody"), lit(1))
-        .as("tbody"))
-      .select(posexplode(innerAll(col("tbody"), "tr")).as(Seq("row_idx", "tr")))
-      .select(col("row_idx"),
-        transform(innerAll(col("tr"), "td"), cellText(_)).as("cells"))
-      .filter(size(col("cells")) > 0)
+      s"HtmlTable.scanFirst: no <thead> with <th> cells found in $path")
+    val rows = scanPositional(spark, path, 0).drop("src_file")
     // Uniquify header names before the fold: withColumn REPLACES an
     // existing column, so a page with duplicate <th> texts (two empty
     // headers is common in layout tables) would silently drop a column —

@@ -171,7 +171,7 @@ object StreamOracles {
     * surfaces as a confusing oracle data diff instead of the actual
     * problem. The checkpoint (offset/commit logs, state store) is deleted
     * when the run returns: nothing reads it after an AvailableNow query
-    * ends, and every readout reads the sink — a memory table or the
+    * ends, and every readout reads the sink — a memory sink or the
     * [[StateBook]] dirs, which live on with the returned frame.
     */
   private def run(w: DataStreamWriter[Row])(readout: => DataFrame): DataFrame = {
@@ -189,11 +189,18 @@ object StreamOracles {
     readout
   }
 
-  /** [[run]] into a fresh memory table; the table is the readout. */
+  /** [[run]] into a fresh memory table; the table is the readout. Its
+    * name is dropped when the run returns: the returned frame is already
+    * analyzed and holds the sink itself, so the sink lives as long as the
+    * frame, where a registered name would keep every run's sink in driver
+    * heap until the session ends.
+    */
   private def toMemory(in: DataFrame, mode: OutputMode): DataFrame = {
+    val ss = in.sparkSession
     val name = s"graft_stream_${seq.incrementAndGet()}"
-    run(in.writeStream.outputMode(mode).format("memory").queryName(name))(
-      in.sparkSession.table(name))
+    try run(in.writeStream.outputMode(mode).format("memory").queryName(name))(
+      ss.table(name))
+    finally ss.catalog.dropTempView(name)
   }
 
   // ------------------------------------------------------ stream_scd_state

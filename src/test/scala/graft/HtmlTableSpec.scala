@@ -105,19 +105,51 @@ class HtmlTableSpec extends SparkSuite {
     assert(got == plain)
   }
 
-  test("DataSource V2 form: format(\"graft-html\") scans a page directory in parallel") {
-    val dir = tempDir("graft_html_v2")
-    Files.write(dir.resolve("page_a.html"), wikiHtml.getBytes("UTF-8"))
-    Files.write(dir.resolve("page_b.html"),
-      wikiHtml.replace("JPMorgan Chase", "Goldman Sachs").getBytes("UTF-8"))
-    val df = spark.read.format("graft-html").option("tbody", 2)
-      .load(dir.toString)
-    assert(df.schema == graft.sources.v2.HtmlTableProvider.Schema)
-    assert(df.count() == 6) // 3 data rows per page, header rows dropped
-    assert(df.rdd.getNumPartitions == 2) // one task per page file
-    val names = df.filter(col("row_idx") === 1)
-      .select(element_at(col("cells"), 2)).collect().map(_.getString(0)).toSet
-    assert(names == Set("JPMorgan Chase", "Goldman Sachs"))
+  test("cells, headers and footer text lose newline, tab and U+00A0 " +
+      "padding, like the reference's .strip() (F1)") {
+    val nb = "\u00a0"
+    val banksDir = tempDir("graft_html_ws")
+    Files.write(banksDir.resolve("banks.html"), Seq(
+      "<html><body>",
+      "<table><tbody><tr><td>nav1</td></tr></tbody></table>",
+      "<table><tbody><tr><td>nav2</td></tr></tbody></table>",
+      "<table><tbody>",
+      s"<tr><th>\nRank\n</th><th>\tBank name$nb</th><th> Market cap</th></tr>",
+      "<tr><td>\n1\n</td><td>\n  JPMorgan Chase\n</td><td>\t42 </td></tr>",
+      s"<tr><td>${nb}2</td><td>$nb" + "<a href=\"/x\">Bank of America</a>\t\n</td>" +
+        s"<td>$nb 7.5$nb</td></tr>",
+      "</tbody></table>",
+      "<div id=\"footer-info-lastmod\">\n\t" + nb +
+        s"This page was last edited on 21 August 2024, at 10:30 (UTC).$nb\n</div>",
+      "</body></html>").mkString("\n").getBytes("UTF-8"))
+    val raw = HtmlTable.scanPositional(spark, banksDir.toString, 2)
+      .join(HtmlTable.footerLastmod(spark, banksDir.toString), "src_file")
+    assert(raw.orderBy(col("row_idx")).select(col("cells")).collect()
+      .map(_.getSeq[String](0)).toSeq == Seq(
+        Seq("1", "JPMorgan Chase", "42"), Seq("2", "Bank of America", "7.5")))
+    assert(raw.select(col("lastmod_text")).distinct().collect()
+      .map(_.getString(0)).toSeq ==
+      Seq("This page was last edited on 21 August 2024, at 10:30 (UTC)."))
+    val clean = WorldBanksPipeline.cleanseBanks(
+      raw.select(element_at(col("cells"), 2).as("bank_name"),
+        element_at(col("cells"), 3).as("market_cap_usd"),
+        col("lastmod_text")), lit("b1"))
+      .orderBy(col("bank_name")).collect()
+    assert(clean.map(r => (r.getAs[String]("bank_name"),
+      r.getAs[Double]("market_cap_usd"),
+      String.valueOf(r.getAs[java.sql.Date]("last_modified_date")))).toSeq ==
+      Seq(("Bank of America", 7.5, "2024-08-21"),
+        ("JPMorgan Chase", 42.0, "2024-08-21")))
+
+    val ratesPath = write("rates_ws.html", Seq(
+      "<html><body><table>",
+      s"<thead><tr><th>\nCountry\n</th><th>${nb}Currency</th><th>\t2024 </th></tr></thead>",
+      s"<tbody><tr><td>\nEuro Zone\n</td><td>Euro$nb</td><td>\t0.924\n</td></tr></tbody>",
+      "</table></body></html>").mkString("\n"))
+    val rates = HtmlTable.scanFirst(spark, ratesPath)
+    assert(rates.columns.toSeq == Seq("row_idx", "Country", "Currency", "2024"))
+    assert(rates.collect().map(r => (1 to 3).map(r.getString)).toSeq ==
+      Seq(Seq("Euro Zone", "Euro", "0.924")))
   }
 
   test("scanFirst uniquifies duplicate and reserved header names") {

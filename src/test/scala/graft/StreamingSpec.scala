@@ -13,7 +13,8 @@ import graft.streaming.{StreamOracles, Streams}
   * aggregation must match the batch operator on the same data; stateful
   * sessionization and as-of enrichment must carry state across micro-batch
   * boundaries), the foreachBatch SCD load, and the stream oracles' runner
-  * (one source split per session, one checkpoint per run).
+  * (one source split per session, one checkpoint per run, no memory
+  * table left registered).
   */
 class StreamingSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -299,6 +300,22 @@ class StreamingSpec extends SparkSuite {
       assert(scd1.count() > 0 && kmv1.count() > 0)
       assert(scd1.collect().toSeq == scd2.collect().toSeq)
       assert(kmv1.collect().toSeq == kmv2.collect().toSeq)
+    } finally Memo.invalidate(fresh)
+  }
+
+  test("memory-sink oracle runs register no table that outlives the run, " +
+      "and their results still read") {
+    val fresh = spark.newSession()
+    try {
+      val runs = (1 to 3).map(_ => StreamOracles.kmvState(fresh, dir))
+      // the readout lives in the oracle's stream session, not in `fresh`
+      val streamSession = runs.head.sparkSession
+      assert(streamSession ne fresh)
+      val left = streamSession.catalog.listTables().collect()
+        .map(_.name).filter(_.startsWith("graft_stream_"))
+      assert(left.isEmpty, s"memory tables left registered: ${left.mkString(", ")}")
+      val rows = runs.map(_.collect().toSeq)
+      assert(rows.head.nonEmpty && rows.forall(_ == rows.head))
     } finally Memo.invalidate(fresh)
   }
 
