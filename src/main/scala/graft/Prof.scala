@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc planning-vs-execution profiler: times analysis+optimization
   * (executedPlan materialization) separately from the action, per query.
@@ -8,11 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.session()
     spark.sparkContext.setLogLevel("ERROR")
     args.tail.foreach { n =>
       (1 to 2).foreach { pass =>

@@ -28,22 +28,6 @@ object Sinks {
   def appendLog(df: DataFrame, path: String): Unit =
     df.write.mode("append").parquet(path)
 
-  /** K1/K2 against a real PostgreSQL target: the reference's row-at-a-time
-    * `CALL insert_or_update_…` loop (ipynb:224-235, one network round trip
-    * per row) becomes ONE merged frame (ScdMerge) written back with batched
-    * `INSERT … ON CONFLICT DO UPDATE` statements, `batchSize` rows per
-    * round trip, one connection per partition. SERIAL identity columns are
-    * simply omitted from the column list — the database assigns them
-    * (SURVEY §1.2).
-    *
-    * Executor-side JDBC (`foreachPartition`) rather than `df.write.jdbc`
-    * because plain mode("append") cannot express upsert; statements are
-    * built once per partition, reused across batches, and closed before
-    * the connection. Dependency-free (java.sql only); `SinksSpec` executes
-    * the path for real against embedded Derby (on Spark's own classpath)
-    * via the [[UpdateThenInsert]] dialect and checks it reproduces the
-    * ScdMerge Type-1 state.
-    */
   /** ANSI-quote an identifier — reserved words and mixed-case column names
     * must survive the round trip into generated SQL.
     */
@@ -112,7 +96,7 @@ object Sinks {
     * `etl.deactivate_bank_records` (SQL/etl_world_banks.sql:126-140)
     * verbatim, with the procedure's CURRENT_TIMESTAMP / CURRENT_DATE
     * replaced by bind parameters (the library's injected-clock
-    * discipline, same as [[graft.operators.ScdMerge.Config]]): rows of
+    * discipline, same as [[graft.operators.ScdMerge.merge]]): rows of
     * OTHER batches that are active, have a non-NULL `updated_at`, and
     * were last touched before today are flipped inactive and stamped.
     * The `updated_at IS NOT NULL AND updated_at < ?date` pair is the
@@ -120,17 +104,15 @@ object Sinks {
     * order) with binds (clock_ts, batch_id, clock_date); idempotent —
     * a replay finds the flipped rows inactive and matches nothing.
     */
-  def deactivateStatement(table: String, batchCol: String = "batch_id",
-      activeCol: String = "active", tsCol: String = "updated_at")
-      : (String, Seq[String]) = {
+  def deactivateStatement(table: String): (String, Seq[String]) = {
     val sql =
       s"""UPDATE ${q(table)}
-         |SET ${q(activeCol)} = FALSE,
-         |    ${q(tsCol)} = ?
-         |WHERE ${q(batchCol)} != ?
-         | AND ${q(activeCol)} = TRUE
-         | AND ${q(tsCol)} IS NOT NULL
-         | AND ${q(tsCol)} < ?""".stripMargin
+         |SET ${q("active")} = FALSE,
+         |    ${q("updated_at")} = ?
+         |WHERE ${q("batch_id")} != ?
+         | AND ${q("active")} = TRUE
+         | AND ${q("updated_at")} IS NOT NULL
+         | AND ${q("updated_at")} < ?""".stripMargin
     sql -> Seq("clock_ts", "batch_id", "clock_date")
   }
 
@@ -156,6 +138,22 @@ object Sinks {
        |WHERE ${q("batch_id")} = ? AND ${q("table_name")} = ?""".stripMargin
       -> Seq("batch_id", "table_name"))
 
+  /** K1/K2 against a real PostgreSQL target: the reference's row-at-a-time
+    * `CALL insert_or_update_…` loop (ipynb:224-235, one network round trip
+    * per row) becomes ONE merged frame (ScdMerge) written back with batched
+    * `INSERT … ON CONFLICT DO UPDATE` statements, `batchSize` rows per
+    * round trip, one connection per partition. SERIAL identity columns are
+    * simply omitted from the column list — the database assigns them
+    * (SURVEY §1.2).
+    *
+    * Executor-side JDBC (`foreachPartition`) rather than `df.write.jdbc`
+    * because plain mode("append") cannot express upsert; statements are
+    * built once per partition, reused across batches, and closed before
+    * the connection. Dependency-free (java.sql only); `SinksSpec` executes
+    * the path for real against embedded Derby (on Spark's own classpath)
+    * via the [[UpdateThenInsert]] dialect and checks it reproduces the
+    * ScdMerge Type-1 state.
+    */
   def jdbcUpsert(df: DataFrame, url: String, table: String,
       keyCols: Seq[String], props: java.util.Properties,
       batchSize: Int = 1000,

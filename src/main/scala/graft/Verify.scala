@@ -48,18 +48,26 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
-    // optional trailing query names: dump only that subset (local iteration;
-    // the driver passes none → full suite)
-    val only = args.drop(2).toSet
+  /** The local session the driver mains build: `SPARK_GRAFT_CPUS`
+    * (default 4) task slots and shuffle partitions, the UTC session zone
+    * that `Tables.adapt`'s NTZ → TIMESTAMP cast assumes, and no UI.
+    */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args.take(2)
+    // optional trailing query names: dump only that subset (local iteration;
+    // the driver passes none → full suite)
+    val only = args.drop(2).toSet
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = dump(spark, sfDir, outDir,

@@ -61,21 +61,24 @@ object ScdMerge {
       keys: Seq[String],
       valueCol: String,
       payloads: Seq[String] = Nil,
-      batchCol: String = "batch_id",
-      activeCol: String = "active",
-      updatedAtCol: String = "updated_at",
       scd2: Boolean = true)
 
   val ChangeCol = "change_type"
+
+  // Bookkeeping columns, named as the reference procedures name them
+  // (SQL:20-122).
+  private val batchCol = "batch_id"
+  private val activeCol = "active"
+  private val updatedAtCol = "updated_at"
 
   /** Run the merge; returns the complete new target state, one row per
     * surviving version, tagged with a `change_type` column in
     * insert | no_change | update | reactivate | version | version_history |
     * deactivate | carry | history.
     *
-    * @param incoming  batch frame: keys ++ valueCol ++ batchCol
-    * @param target    durable state: keys ++ valueCol ++ batchCol
-    *                  [++ activeCol ++ updatedAtCol when scd2]
+    * @param incoming  batch frame: keys ++ valueCol ++ batch_id
+    * @param target    durable state: keys ++ valueCol ++ batch_id
+    *                  [++ active ++ updated_at when scd2]
     * @param clockTs   injected logical CURRENT_TIMESTAMP
     * @param clockDate injected logical CURRENT_DATE (deactivation shield)
     * @param batchId   the incoming batch id (the procedure's `p_batch_id`

@@ -82,14 +82,13 @@ object WorldBanksPipeline {
     * Input columns: country, currency, exchange_rate (string); `year` comes
     * from header sniffing ([[sniffYear]]) as in ipynb:131-139.
     */
-  def cleanseRates(raw: DataFrame, year: String, batchId: Column,
-      keepRaw: Boolean = false): DataFrame =
-    raw.select(Seq(
+  def cleanseRates(raw: DataFrame, year: String, batchId: Column): DataFrame =
+    raw.select(
       trim(col("country")).as("country"),
       trim(col("currency")).as("currency"),
       expr("try_cast(trim(exchange_rate) AS DOUBLE)").as("exchange_rate"),
       to_date(concat(lit("31-12-"), lit(year)), "dd-MM-yyyy").as("year"),
-      batchId.as("batch_id")) ++ rawCarry(raw, keepRaw): _*)
+      batchId.as("batch_id"))
 
   /** Header year sniffing (F5, ipynb:131-139): first header that is a
     * 4-digit number. Header rows are table metadata, so this is a driver-side

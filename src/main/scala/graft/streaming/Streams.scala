@@ -35,7 +35,6 @@ object Streams {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-  val EventsSchema: StructType = eventsSchema(LongType)
 
   /** @param dir the fixture directory (a FileStreamSource path must be a
     *             directory; the glob narrows it to the events table)

@@ -18,11 +18,71 @@ class PlanShapeSpec extends SparkSuite {
     SparkSuite.stripMemoBuild(
       SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString)
 
-  /** The registry sweeps' input: every query outside the stream family
-    * (building those runs real micro-batch pipelines), by name. */
-  private def batchQueries =
-    SparkEntry.all.collect { case (f, q) if f != "stream" => q.name -> q.run }
-      .sortBy(_._1)
+  /** One registry query's verdicts under the three registry sweeps. */
+  private final case class Swept(name: String, logicalWindow: Boolean,
+      physicalWindow: Boolean, cartesian: Boolean)
+
+  /** The registry sweeps' one walk: every query outside the stream family
+    * (building those runs real micro-batch pipelines) is built once, in
+    * name order, and its one QueryExecution yields each sweep's verdict.
+    * Lazy: the first sweep test pays the builds, the other two read them.
+    */
+  private lazy val sweep: Seq[Swept] =
+    SparkEntry.all.collect { case (f, q) if f != "stream" => q }
+      .sortBy(_.name).map { q =>
+        val qe = q.run(spark, dir).queryExecution
+        Swept(q.name, unboundedLogicalWindow(qe.optimizedPlan),
+          unboundedPhysicalWindow(qe.sparkPlan),
+          qe.executedPlan.toString.contains("CartesianProduct"))
+      }
+
+  private def offenders(verdict: Swept => Boolean): Seq[String] =
+    sweep.filter(verdict).map(_.name)
+
+  /** A Window with no partitionBy whose input subtree holds no
+    * cardinality bound: an Aggregate, a GlobalLimit (rank-filtered top-k
+    * windows are rewritten by LimitPushDownThroughWindow into a
+    * distributed Sort+Limit BELOW the window — the TakeOrdered shape), or
+    * a WindowGroupLimit (the partial per-partition rank cut).
+    */
+  private def unboundedLogicalWindow(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Window => LWindow, WindowGroupLimit}
+    plan.collect {
+      case w: LWindow if w.partitionSpec.isEmpty &&
+          w.child.collectFirst {
+            case a: Aggregate => a
+            case l: GlobalLimit => l
+            case g: WindowGroupLimit => g
+          }.isEmpty => w
+    }.nonEmpty
+  }
+
+  /** A partition-less WindowExec whose child holds no physical
+    * cardinality bound — an aggregate, a limit, a TakeOrderedAndProject,
+    * or a WindowGroupLimit. Cached memo scans are looked THROUGH (the
+    * bound may live in the cached build plan).
+    */
+  private def unboundedPhysicalWindow(
+      plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def bounded(p: SparkPlan): Boolean = p.collectFirst {
+      case _: BaseAggregateExec => true
+      case _: GlobalLimitExec => true
+      case _: CollectLimitExec => true
+      case _: TakeOrderedAndProjectExec => true
+      case _: WindowGroupLimitExec => true
+      case s: InMemoryTableScanExec if bounded(s.relation.cachedPlan) =>
+        true
+    }.isDefined
+    plan.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty && !bounded(w.child) => w
+    }.nonEmpty
+  }
 
   test("q2: predicates push down to the parquet scan") {
     val p = plan("q2_filter_project")
@@ -845,37 +905,18 @@ class PlanShapeSpec extends SparkSuite {
     // a Window with NO partitionBy serializes its whole input through one
     // task, which is only acceptable when an upstream Aggregate has
     // already bounded the cardinality (daily rollups, per-group stats).
-    // Nothing used to ENFORCE that for new queries — this sweep walks
-    // every registry plan and flags any single-partition window whose
-    // input subtree contains no cardinality bound. A bound is an
-    // Aggregate, a GlobalLimit (rank-filtered top-k windows are
-    // rewritten by LimitPushDownThroughWindow into a distributed
-    // Sort+Limit BELOW the window — the TakeOrdered shape), or a
-    // WindowGroupLimit (the partial per-partition rank cut). Streaming
-    // oracles are skipped (building them runs real micro-batch
-    // pipelines, and their final state frames are tiny aggregations by
-    // construction); whitelisted names would be ones whose bounding
-    // aggregate hides UPSTREAM of an Iterate.pin lineage cut (the pin
-    // materializes as a LogicalRDD, so the optimizer — and this sweep —
-    // cannot see past it); currently none.
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Window => LWindow, WindowGroupLimit}
-    val whitelist = Set[String]()
-    val offenders = scala.collection.mutable.ListBuffer[String]()
-    for ((name, fn) <- batchQueries if !whitelist(name)) {
-      val plan = fn(spark, dir).queryExecution.optimizedPlan
-      val bad = plan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty &&
-            w.child.collectFirst {
-              case a: Aggregate => a
-              case l: GlobalLimit => l
-              case g: WindowGroupLimit => g
-            }.isEmpty => w
-      }
-      if (bad.nonEmpty) offenders += name
-    }
-    assert(offenders.isEmpty,
+    // Nothing used to ENFORCE that for new queries — this sweep flags any
+    // registry plan with a single-partition window whose input subtree
+    // contains no cardinality bound ([[unboundedLogicalWindow]]).
+    // Streaming oracles are skipped (their final state frames are tiny
+    // aggregations by construction). A query whose bounding aggregate
+    // hides UPSTREAM of an Iterate.pin lineage cut (the pin materializes
+    // as a LogicalRDD, so the optimizer — and this sweep — cannot see
+    // past it) would need exempting here by name; currently none does.
+    val bad = offenders(_.logicalWindow)
+    assert(bad.isEmpty,
       "unpartitioned window over an unbounded input in: " +
-        offenders.mkString(", "))
+        bad.mkString(", "))
   }
 
   test("registry sweep: no physical single-partition window over an " +
@@ -883,39 +924,16 @@ class PlanShapeSpec extends SparkSuite {
     // The PHYSICAL complement of the logical sweep above: the planner
     // turns a partition-less Window into a WindowExec over a SINGLE
     // partition (the log's "No Partition Defined" warning), so this
-    // walks every registry query's sparkPlan and requires each such
-    // WindowExec to sit above a physical cardinality bound — an
-    // aggregate, a limit, a TakeOrderedAndProject, or a
-    // WindowGroupLimit — catching both a logical shape the optimizer
-    // failed to rewrite (LimitPushDownThroughWindow off, a frame that
-    // defeats WindowGroupLimit) and a future physical-strategy change
-    // the logical sweep cannot see. Cached memo scans are looked
-    // THROUGH (the bound may live in the cached build plan).
-    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def bounded(p: SparkPlan): Boolean = p.collectFirst {
-      case _: BaseAggregateExec => true
-      case _: GlobalLimitExec => true
-      case _: CollectLimitExec => true
-      case _: TakeOrderedAndProjectExec => true
-      case _: WindowGroupLimitExec => true
-      case s: InMemoryTableScanExec if bounded(s.relation.cachedPlan) =>
-        true
-    }.isDefined
-    val offenders = scala.collection.mutable.ListBuffer[String]()
-    for ((name, fn) <- batchQueries) {
-      val plan = fn(spark, dir).queryExecution.sparkPlan
-      val bad = plan.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty &&
-            !bounded(w.child) => w
-      }
-      if (bad.nonEmpty) offenders += name
-    }
-    assert(offenders.isEmpty,
+    // requires each such WindowExec in every registry query's sparkPlan
+    // to sit above a physical cardinality bound
+    // ([[unboundedPhysicalWindow]]) — catching both a logical shape the
+    // optimizer failed to rewrite (LimitPushDownThroughWindow off, a
+    // frame that defeats WindowGroupLimit) and a future physical-strategy
+    // change the logical sweep cannot see.
+    val bad = offenders(_.physicalWindow)
+    assert(bad.isEmpty,
       "physical single-partition window over an unbounded child in: " +
-        offenders.mkString(", "))
+        bad.mkString(", "))
   }
 
   test("registry sweep: no CartesianProduct in any physical plan") {
@@ -925,13 +943,8 @@ class PlanShapeSpec extends SparkSuite {
     // too big to broadcast: the one physical shape that cannot survive a
     // 100× scale-up. Nothing currently plans one; this pins that for
     // every future query.
-    val offenders = scala.collection.mutable.ListBuffer[String]()
-    for ((name, fn) <- batchQueries) {
-      val p = fn(spark, dir).queryExecution.executedPlan.toString
-      if (p.contains("CartesianProduct")) offenders += name
-    }
-    assert(offenders.isEmpty,
-      "CartesianProduct planned in: " + offenders.mkString(", "))
+    val bad = offenders(_.cartesian)
+    assert(bad.isEmpty, "CartesianProduct planned in: " + bad.mkString(", "))
   }
 
   test("text_pii: pure map stage — no shuffle before the output order") {
